@@ -8,10 +8,7 @@ import statistics
 
 from . import stats
 
-QUERY_WORKLOADS = ("raster_vector", "graph_loops", "corpus_prep")
-WORKLOADS = QUERY_WORKLOADS + ("gold_serve",)
-# the workloads BENCHMARK.json lists; the others run only by hand
-BENCHMARKED = ("graph_loops", "gold_serve")
+WORKLOADS = ("graph_loops", "gold_serve")
 MB = 1048576.0
 
 
@@ -42,45 +39,40 @@ def _wall(op):
     return op["build_s"] + op["action_s"]
 
 
-def _passes(ops, traced=None):
-    """{pass: [ops]} for warm passes, optionally only (un)traced ones."""
+def _passes(record, traced=None):
+    """{pass: [ops]} for the measured warm passes (those after the ramp),
+    optionally only the (un)traced ones."""
     out = {}
-    for op in ops:
-        if op["pass"] > 0 and (traced is None or op["traced"] == traced):
+    for op in record["ops"]:
+        if op["pass"] > record["ramp_passes"] and (traced is None or op["traced"] == traced):
             out.setdefault(op["pass"], []).append(op)
     return out
 
 
 def end_to_end(record):
     ops = record["ops"]
-    setup = statistics.median(record["setup_s"])
-    detail = {"setup_samples_s": record["setup_s"]}
+    passes = _passes(record)
+    walls = [sum(_wall(op) for op in p) for p in passes.values()]
     if record["workload"] == "gold_serve":
         # a pass is one gold write and the lookups that follow it
-        cold = [_wall(op) for op in ops if op["pass"] == 0]
-        warm = [sum(_wall(op) for op in p) for p in _passes(ops).values()]
-        op_ms = [_wall(op) * 1e3 for op in ops if op["kind"] == "lookup" and op["pass"] > 0]
-        detail["gold_write_s"] = [_wall(op) for op in ops
-                                  if op["kind"] == "write" and op["pass"] > 0]
-        detail["warm_pass_walls_s"] = warm
+        op_ms = [_wall(op) * 1e3 for p in passes.values() for op in p if op["kind"] == "lookup"]
+        detail = {"gold_write_s": [_wall(op) for p in passes.values()
+                                   for op in p if op["kind"] == "write"]}
     else:
-        cold = [sum(_wall(op) for op in ops if op["pass"] == 0)]
-        # each query's best warm repetition: the first warm pass of a
-        # fresh JVM still runs partly interpreted, the best one much less
-        best = {}
-        for op in ops:
-            if op["pass"] > 0:
-                best[op["name"]] = min(best.get(op["name"], float("inf")), _wall(op))
-        warm = [sum(best.values())]
-        op_ms = [t * 1e3 for t in best.values()]
-        detail["warm_pass_walls_s"] = [sum(_wall(op) for op in p) for p in _passes(ops).values()]
-    # the highest percentile with ten samples beyond it, if any
-    detail["op_samples"] = len(op_ms)
-    detail["op_tail_ms"] = stats.tail(op_ms)
+        op_ms = [_wall(op) * 1e3 for p in passes.values() for op in p]
+        detail = {}
+    detail.update({
+        "setup_samples_s": record["setup_s"],
+        "warm_pass_walls_s": walls,
+        "warm_pass_quartiles_s": statistics.quantiles(walls, n=4, method="inclusive"),
+        "op_samples": len(op_ms),
+        # the highest percentile with ten samples beyond it, if any
+        "op_tail_ms": stats.tail(op_ms),
+    })
     metrics = {
-        "setup_s": (setup, "s"),
-        "cold_pass_s": (sum(cold), "s"),
-        "warm_pass_s": (min(warm), "s"),
+        "setup_s": (statistics.median(record["setup_s"]), "s"),
+        "cold_pass_s": (sum(_wall(op) for op in ops if op["pass"] == 0), "s"),
+        "warm_pass_s": (statistics.median(walls), "s"),
         "op_p50_ms": (statistics.median(op_ms), "ms"),
         "retained_heap_mb": (record["retained_heap_mb"], "MB"),
     }
@@ -93,8 +85,8 @@ def _sum(ops, key):
 
 def per_layer(record):
     ops = [op for op in record["ops"] if op["traced"]]
-    traced = _passes(ops, traced=True)
-    untraced = _passes(record["ops"], traced=False)
+    traced = _passes(record, traced=True)
+    untraced = _passes(record, traced=False)
     if not traced or not untraced:
         raise RuntimeError("a traced run needs traced and untraced warm passes")
     passes = list(traced.values())
@@ -109,8 +101,8 @@ def per_layer(record):
     cold_wall = sum(_wall(op) for op in ops if op["pass"] == 0)
     warm_walls = [sum(_wall(op) for op in p) for p in passes]
     untraced_walls = [sum(_wall(op) for op in p) for p in untraced.values()]
-    # untraced passes bracket the traced ones; their mean cancels the
-    # speed-up that JIT warm-up gives each later pass
+    # the measured passes run traced, untraced, traced: the speed-up that
+    # JIT warm-up gives each later pass falls on both sides alike
     overhead = statistics.median(warm_walls) / (sum(untraced_walls) / len(untraced_walls)) - 1
     tasks = sum(_sum(p, "tasks") for p in passes)
     empty = sum(_sum(p, "empty_tasks") for p in passes)

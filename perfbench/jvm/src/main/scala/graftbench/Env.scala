@@ -76,6 +76,31 @@ object Env {
     cur
   }
 
+  /** (collection time, JIT compile time) of this JVM so far, in ms. */
+  def gcAndJitMs(): (Long, Long) = {
+    import java.lang.management.ManagementFactory
+    var gc = 0L
+    ManagementFactory.getGarbageCollectorMXBeans.forEach(b => gc += math.max(0L, b.getCollectionTime))
+    (gc, ManagementFactory.getCompilationMXBean.getTotalCompilationTime)
+  }
+
+  /** (CPU time of the calling thread, CPU time of the whole JVM), in s. */
+  def cpuS(): (Double, Double) = {
+    import java.lang.management.ManagementFactory
+    val os = ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    (ManagementFactory.getThreadMXBean.getCurrentThreadCpuTime / 1e9, os.getProcessCpuTime / 1e9)
+  }
+
+  /** Methods the JIT is compiling or has queued (HotSpot's Compiler.queue
+    * diagnostic command; each task line names a `Class::method`). */
+  def jitBacklog(): Int = {
+    val out = java.lang.management.ManagementFactory.getPlatformMBeanServer.invoke(
+      new javax.management.ObjectName("com.sun.management:type=DiagnosticCommand"),
+      "compilerQueue", Array[AnyRef](null), Array(classOf[Array[String]].getName))
+    out.toString.linesIterator.count(_.contains("::"))
+  }
+
   /** Seconds since this JVM started. */
   def sinceJvmStart(): Double =
     (System.currentTimeMillis() -

@@ -53,11 +53,11 @@ object Main {
     }
 
     val ctx = Ctx(spark, data, work, seed, opt("seconds").toDouble, opt("trace") == "1")
-    // a traced run brackets its traced warm pass with untraced ones
-    val warm = math.max(Workloads.warmPasses(workload), if (ctx.trace) 3 else 0)
+    val warm = Workloads.rampPasses + Workloads.warmPasses
     val ops = workload match {
       case "gold_serve" => Workloads.runGoldServe(ctx, warm)
-      case w => Workloads.runQueries(ctx, Workloads.queriesOf(w), warm)
+      case "graph_loops" => Workloads.runQueries(ctx, Workloads.graphLoops, warm)
+      case other => sys.error(s"unknown workload: $other")
     }
     val measuredS = ctx.elapsedS
     val heapMb = Env.retainedHeapMb()
@@ -82,6 +82,7 @@ object Main {
       "calibration_ms" -> Seq(calibStart, calibEnd),
       "load_average" -> Seq(loadStart, Env.loadAverage()),
       "steal_pct" -> Env.stealPct(statStart, Env.cpuStat()),
+      "ramp_passes" -> Workloads.rampPasses, "passes" -> ctx.passLog,
       "ops" -> ops.map(o => ListMap(
         "kind" -> o.kind, "name" -> o.name, "pass" -> o.pass, "traced" -> o.traced,
         "build_s" -> o.buildS, "action_s" -> o.actionS, "rows" -> o.rows,

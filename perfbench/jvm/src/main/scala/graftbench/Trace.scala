@@ -14,8 +14,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** Spark work attributed to one operation (one query repetition, one gold
   * write or one lookup). Jobs, stages and tasks are matched by job group;
   * Catalyst phases and block updates by the operation's window, which is
-  * exact because the tracer drains the listener bus before the next
-  * operation starts. */
+  * exact because the tracer drains the listener bus when an operation
+  * opens and again before it closes. */
 final class LayerStats {
   var jobs, buildJobs, stages, tasks, emptyTasks = 0L
   var runMs, cpuNs, gcMs = 0L
@@ -136,8 +136,12 @@ final class Tracer(spark: SparkSession) {
     attached = false
   }
 
-  /** Opens operation `group`: jobs fired until [[action]] belong to its build. */
+  /** Opens operation `group`: jobs fired until [[action]] belong to its
+    * build. Drains the bus first, so that events of untraced work run
+    * since the last operation (Catalyst phases, block updates) reach the
+    * listeners while no operation is open, and are credited to none. */
   def begin(group: String): Unit = {
+    BenchBus.drain(sc)
     val st = new LayerStats
     byGroup.put(group, st)
     currentGroup = group

@@ -2,8 +2,11 @@ package graftbench
 
 import java.io.File
 
+import scala.collection.immutable.ListMap
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Random
 
+import org.apache.spark.BenchBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -33,45 +36,63 @@ final case class Ctx(spark: SparkSession, dataDir: String, workDir: String,
     * the run measures its own tracing overhead against the passes on
     * either side of each traced one. */
   def tracedPass(pass: Int): Boolean = trace && (pass == 0 || pass % 2 == 0)
-  def setTracing(on: Boolean): Unit =
-    tracer.foreach(t => if (on) t.attach() else t.detach())
+
+  /** JVM figures per pass, as drift evidence beside the pass walls. */
+  val passLog = ArrayBuffer[ListMap[String, Any]]()
+
+  /** Blocks until `idle` holds, polling, or until `limitS` have passed.
+    * Returns the seconds waited. */
+  private def await(limitS: Double)(idle: => Boolean): Double = {
+    val t0 = System.nanoTime()
+    while (!idle && System.nanoTime() - t0 < limitS * 1e9) Thread.sleep(5)
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Runs the cold pass (0), then `warm` warm passes, and more while the
+    * run's time is not up. Before each pass the JVM is brought to rest, so
+    * that no pass pays for work its predecessor left behind: garbage is
+    * collected, Spark's ContextCleaner frees what the collection released
+    * (checkpoint and persisted blocks, shuffle files, broadcasts), and the
+    * JIT finishes the compiles already queued. */
+  def passes(warm: Int)(body: (Int, Boolean) => Unit): Unit = {
+    val sc = spark.sparkContext
+    var pass = 0
+    while (pass <= warm || elapsedS < seconds) {
+      val traced = tracedPass(pass)
+      tracer.foreach(t => if (traced) t.attach() else t.detach())
+      System.gc()
+      val cleanS = await(30)(BenchBus.pendingCleanups(sc) == 0)
+      val jitS = await(10)(Env.jitBacklog() == 0)
+      val (gc0, jit0) = Env.gcAndJitMs()
+      val (cpu0, proc0) = Env.cpuS()
+      val w0 = System.nanoTime()
+      body(pass, traced)
+      val (cpu1, proc1) = Env.cpuS()
+      val (gc1, jit1) = Env.gcAndJitMs()
+      passLog += ListMap("pass" -> pass, "wall_s" -> (System.nanoTime() - w0) / 1e9,
+        "driver_cpu_s" -> (cpu1 - cpu0), "process_cpu_s" -> (proc1 - proc0),
+        "gc_ms" -> (gc1 - gc0), "jit_ms" -> (jit1 - jit0),
+        "cleaner_wait_s" -> cleanS, "jit_wait_s" -> jitS)
+      pass += 1
+    }
+    tracer.foreach(_.detach())
+  }
 }
 
 object Workloads {
-  /** Reference-tier queries, one per operator family: composite,
-    * colormap, reprojection with unpivot, clip, as-of join, window. Eight
-    * reference-tier queries read
-    * checked-in fixture files through absolute paths fixed in the query
-    * bodies (s4, s4b, s4c, s7, s12, s13, j1_spatial_overlay,
-    * a7_hull_dissolve); they cannot run from a fresh checkout and are not
-    * listed. */
-  val rasterVector: Seq[String] = Seq(
-    "a1_mean_composite", "f5_colormap", "f7_utm_reproject", "p6_clip_mask",
-    "j5_asof", "t_month_window")
-
-  /** The power-iteration kernels: eager localCheckpoint jobs while the
+  /** The power-iteration kernel: eager localCheckpoint jobs while the
     * query body is built, plus barriers. */
   val graphLoops: Seq[String] = Seq("x124_domain_pagerank")
 
-  /** Executor- and shuffle-heavy training-data prep. */
-  val corpusPrep: Seq[String] = Seq(
-    "x2_dedup_minhash", "x4_dedup_jaccard", "x27_dup_clusters", "x89_dedup_keep_best",
-    "x144_kn_score", "x214_ccnet_buckets", "x36_curation_pipeline", "x70_ivfpq_ann",
-    "x106_bpe_trained_tokens", "x205_kn_arpa_stored", "x178_media_corpus_build")
+  /** Warm passes run before the measured ones. A fresh JVM keeps compiling
+    * Spark's driver code for many passes; the first warm pass is still far
+    * from the rest and varies most from run to run. */
+  val rampPasses = 1
 
-  /** Warm passes every run makes, so that each run's warm figures come from
-    * passes at the same point of JIT warm-up. */
-  def warmPasses(workload: String): Int = workload match {
-    case "raster_vector" | "corpus_prep" => 2
-    case _ => 3
-  }
-
-  def queriesOf(workload: String): Seq[String] = workload match {
-    case "raster_vector" => rasterVector
-    case "graph_loops" => graphLoops
-    case "corpus_prep" => corpusPrep
-    case other => sys.error(s"not a query workload: $other")
-  }
+  /** Measured warm passes, the same number in every run so that each run's
+    * figures come from the same point of JIT warm-up. Three, so that a
+    * traced run's measured passes alternate traced, untraced, traced. */
+  val warmPasses = 3
 
   private def errText(e: Throwable): String =
     Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator
@@ -105,24 +126,16 @@ object Workloads {
       res.left.toOption, layers), built)
   }
 
-  /** Cold pass, then `warm` warm passes, more while the run's time is not
-    * up. Each pass runs every query once in a seeded order, and each
-    * query's action hashes every output column. */
+  /** Each pass runs every query once in a seeded order, and each query's
+    * action hashes every output column. */
   def runQueries(ctx: Ctx, names: Seq[String], warm: Int): Seq[Op] = {
     val ops = Seq.newBuilder[Op]
-    var pass = 0
-    while (pass <= warm || ctx.elapsedS < ctx.seconds) {
-      val traced = ctx.tracedPass(pass)
-      ctx.setTracing(traced)
-      // ContextCleaner frees shuffle files only once their refs are collected
-      System.gc()
+    ctx.passes(warm) { (pass, traced) =>
       ctx.rng.shuffle(names).foreach { q =>
         val fn = SparkEntry.queries(q)
         ops += timed(ctx, "query", q, pass, traced)(fn(ctx.spark, ctx.dataDir))(Digest.of)._1
       }
-      pass += 1
     }
-    ctx.setTracing(false)
     ops.result()
   }
 
@@ -131,9 +144,9 @@ object Workloads {
   val bands: Seq[(String, Double)] = Seq(
     "absorbing_aerosol_index" -> 0.5, "NO2_column_number_density" -> 0.04,
     "SO2_column_number_density" -> 0.02, "CO_column_number_density" -> 0.05)
-  val grid = 24
+  val grid = 16
   val goldYear = 2024
-  val lookupsPerPass = 20
+  val lookupsPerPass = 12
 
   /** Seeded long-format raster (FIXTURES A1): every band, one image a day
     * for a year, a `grid` x `grid` lattice over Delhi NCR, ~2% nodata. */
@@ -192,11 +205,7 @@ object Workloads {
     val box = Schemas.delhiNcr
     val months = (1 to 12).map(m => f"$goldYear-$m%02d-01")
     val ops = Seq.newBuilder[Op]
-    var pass = 0
-    while (pass <= warm || ctx.elapsedS < ctx.seconds) {
-      val traced = ctx.tracedPass(pass)
-      ctx.setTracing(traced)
-      System.gc()
+    ctx.passes(warm) { (pass, traced) =>
       val offset = new Random(ctx.seed * 1000 + pass).nextDouble()
       def gold(): DataFrame = {
         val pixels = spark.read.parquet(bronzeDir)
@@ -241,9 +250,7 @@ object Workloads {
           "needed_bytes" -> needed.toDouble,
           "scanned_bytes" -> q.map(scannedBytes).getOrElse(0L).toDouble))
       }
-      pass += 1
     }
-    ctx.setTracing(false)
     ops.result()
   }
 }

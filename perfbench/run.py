@@ -17,8 +17,8 @@ kernel at start and end, nproc, steal %, load average, seed) and the run's
 detail. `--workload all` runs every benchmarked workload in turn and prints
 both lines for each. Other modes, for maintaining the benchmark:
 
-    --record-digests   run each query workload once and rewrite
-                       reference_digests.json from the results
+    --record-digests   run graph_loops once and rewrite
+                       reference_digests.json from its results
     --dump-tables DIR  write the generated input tables to DIR (for the
                        DuckDB oracle cross-check, see README.md)
 """
@@ -44,6 +44,13 @@ HARNESS = HERE / "jvm"
 REFERENCE = HERE / "reference_digests.json"
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 165
+# A fixed heap keeps GC sizing the same from run to run. A run lasts a
+# minute, in which a fresh JVM at default thresholds is still compiling
+# Spark's driver code pass after pass; compiling at a tenth of the default
+# invocation counts brings each run closer to the state of a long-lived
+# driver and makes runs agree more closely.
+JVM_OPTS = ["-Xms2g", "-Xmx2g", "-XX:CompileThresholdScaling=0.1",
+            "-XX:ReservedCodeCacheSize=512m", "-XX:+UseCodeCacheFlushing"]
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
     "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
@@ -66,7 +73,7 @@ def source_stamp():
     """Hash of every input of the build: engine sources and the harness."""
     h = hashlib.sha256()
     files = sorted(p for base in (ENGINE_SOURCES, HARNESS) for p in base.rglob("*")
-                   if p.is_file() and "target" not in p.relative_to(base).parts)
+                   if p.is_file() and not {"target", ".bsp"} & set(p.relative_to(base).parts))
     for p in files:
         h.update(str(p.relative_to(ROOT)).encode())
         h.update(p.read_bytes())
@@ -111,7 +118,7 @@ def run_jvm(classpath, out, args):
     (work / "tmp").mkdir(parents=True)
     raw = work / "record.json"
     cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-           + ["-Xmx3g", "-XX:ReservedCodeCacheSize=512m", "-XX:+UseCodeCacheFlushing",
+           + JVM_OPTS + [
               f"-Djava.io.tmpdir={work / 'tmp'}", "-Dspark.ui.enabled=false",
               "-cp", classpath, "graftbench.Main",
               "--workload", args.workload, "--seed", str(args.seed),
@@ -139,15 +146,14 @@ def load_reference():
 
 def record_digests(classpath, out):
     digests = {}
-    for workload in metrics.QUERY_WORKLOADS:
-        args = argparse.Namespace(workload=workload, seed=1, seconds=0, trace=0)
-        rec = run_jvm(classpath, out, args)
-        for op in rec["ops"]:
-            got = [op["rows"], op["hash"]]
-            if op["error"]:
-                raise SystemExit(f"{op['name']} failed: {op['error']}")
-            if digests.setdefault(op["name"], got) != got:
-                raise SystemExit(f"{op['name']} is not deterministic: {digests[op['name']]} vs {got}")
+    args = argparse.Namespace(workload="graph_loops", seed=1, seconds=0, trace=0)
+    rec = run_jvm(classpath, out, args)
+    for op in rec["ops"]:
+        got = [op["rows"], op["hash"]]
+        if op["error"]:
+            raise SystemExit(f"{op['name']} failed: {op['error']}")
+        if digests.setdefault(op["name"], got) != got:
+            raise SystemExit(f"{op['name']} is not deterministic: {digests[op['name']]} vs {got}")
     REFERENCE.write_text(json.dumps(
         {"data_version": datagen.VERSION, "queries": dict(sorted(digests.items()))},
         indent=1) + "\n")
@@ -182,8 +188,7 @@ def main():
         ap.error("--workload is required")
 
     if args.workload == "all":
-        # one line per workload: the set BENCHMARK.json lists
-        for workload in metrics.BENCHMARKED:
+        for workload in metrics.WORKLOADS:
             args.workload = workload
             fingerprint, result = measure(classpath, out, args)
             print(json.dumps(fingerprint))
@@ -207,6 +212,7 @@ def measure(classpath, out, args):
     attempted = len(record["ops"])
     detail["ops_failed_frac"] = len(failures) / attempted
     detail["failures"] = failures[:20]
+    detail["passes"] = record["passes"]
     fingerprint = {
         "fingerprint": {
             "workload": args.workload, "seed": args.seed, "trace": args.trace,

@@ -58,17 +58,36 @@ class CheckTest(unittest.TestCase):
         self.assertEqual(len(failures), 3)
         self.assertIn("no reference digest", failures[2])
 
-    def test_end_to_end_uses_cold_pass_and_best_warm_repetitions(self):
+    def test_end_to_end_takes_medians_of_the_measured_warm_passes(self):
         ops = [_op("a", 0, 3.0), _op("b", 0, 2.0)]
-        for p, (a, b) in enumerate([(1.0, 1.0), (1.5, 1.0), (1.0, 0.5)], start=1):
+        walls = [(9.0, 9.0), (5.0, 5.0), (1.0, 1.0), (1.5, 1.0), (1.0, 0.5)]
+        for p, (a, b) in enumerate(walls, start=1):
             ops += [_op("a", p, a), _op("b", p, b)]
-        record = {"workload": "raster_vector", "ops": ops, "setup_s": [9.0, 2.0, 1.0],
-                  "retained_heap_mb": 100.0}
-        m, _ = metrics.end_to_end(record)
+        record = {"workload": "graph_loops", "ops": ops, "setup_s": [9.0, 2.0, 1.0],
+                  "retained_heap_mb": 100.0, "ramp_passes": 2}
+        m, detail = metrics.end_to_end(record)
         self.assertEqual(m["setup_s"][0], 2.0)
         self.assertEqual(m["cold_pass_s"][0], 5.0)
-        self.assertEqual(m["warm_pass_s"][0], 1.5)
-        self.assertEqual(m["op_p50_ms"][0], 750.0)
+        # ramp passes 1 and 2 are left out; passes 3..5 sum to 2.0, 2.5, 1.5
+        self.assertEqual(detail["warm_pass_walls_s"], [2.0, 2.5, 1.5])
+        self.assertEqual(m["warm_pass_s"][0], 2.0)
+        self.assertEqual(detail["warm_pass_quartiles_s"], [1.75, 2.0, 2.25])
+        # every measured repetition of every query
+        self.assertEqual(m["op_p50_ms"][0], 1000.0)
+        self.assertEqual(detail["op_samples"], 6)
+
+    def test_gold_serve_times_lookups_apart_from_writes(self):
+        ops = [_op("gold_write", 0, 5.0, kind="write"), _op("m:b", 0, 1.0, kind="lookup")]
+        for p in (1, 2, 3):
+            ops += [_op("gold_write", p, 2.0 + p, kind="write")]
+            ops += [_op("m:b", p, 0.1 * k, kind="lookup") for k in range(1, 4)]
+        record = {"workload": "gold_serve", "ops": ops, "setup_s": [3.0],
+                  "retained_heap_mb": 1.0, "ramp_passes": 1}
+        m, detail = metrics.end_to_end(record)
+        self.assertEqual(m["cold_pass_s"][0], 6.0)
+        self.assertEqual(detail["gold_write_s"], [4.0, 5.0])
+        self.assertAlmostEqual(m["warm_pass_s"][0], 5.1)
+        self.assertAlmostEqual(m["op_p50_ms"][0], 200.0)
 
 
 if __name__ == "__main__":
