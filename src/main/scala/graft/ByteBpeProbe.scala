@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev measurement main for the byte-BPE rules-vs-throughput question
@@ -18,12 +17,7 @@ object ByteBpeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nMerges = args.headOption.map(_.toInt).getOrElse(200)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // the raw synthetic corpus exhausts its pair pool at ~126 merges;
     // the ByteBpeSpec augmentation (messy x115 text + rotating phonetic
@@ -43,7 +37,7 @@ object ByteBpeProbe {
           ((col("doc_id") * 7 + 3) % 26).cast("int") + 1)).as("text"))
       .localCheckpoint()
     val t0 = System.nanoTime()
-    val learned = ext.TextOps.trainByteBpeMerges(docs, nMerges)
+    val learned = ext.TextOps.trainByteBpeMergesFast(docs, nMerges)
     val trainSec = (System.nanoTime() - t0) / 1e9
     println(f"[probe] trained ${learned.length} merges in $trainSec%.2f s")
     val table = learned.map(m => (m._1, m._2))

@@ -1,19 +1,46 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Dumps formatted physical plans of headline queries to PLANS.md —
-  * the plan-review artifact backing SURVEY §9's scale claims. */
+/** Formatted physical plans of registered queries, at sf0.001: plan
+  * SHAPE is sf-independent, and eagerly-materializing queries
+  * (checkpointed loops, stored-artifact builds) stay cheap there.
+  *
+  * Usage:
+  *  - `runMain graft.Plans` rewrites PLANS.md with the headline picks
+  *    below — the plan-review artifact backing SURVEY §9's scale claims;
+  *  - `runMain graft.Plans <outDir> <tag> <q1,q2,...>` writes each named
+  *    query's plan to `<outDir>/<query>_<tag>.txt` — the before/after
+  *    plan evidence for optimization rounds (`plans/r<N>/`).
+  *
+  * Queries that localCheckpoint internally show only the tail of their
+  * DAG (the loop body executes at plan time); loop-internal shapes are
+  * pinned by PlanSpec/GraphSpec assertions instead. */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    require(args.isEmpty || args.length == 3,
+      "usage: Plans [<outDir> <tag> <q1,q2,...>]")
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.001"
+    def plan(name: String): String =
+      SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))(
+        spark, sf).queryExecution.explainString(ExplainMode.fromString("formatted"))
+    args match {
+      case Array(outDir, tag, names) =>
+        Files.createDirectories(Paths.get(outDir))
+        for (name <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
+          Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), plan(name))
+          println(s"[plans] wrote $outDir/${name}_$tag.txt")
+        }
+      case _ => writePlansMd(plan)
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(plan: String => String): Unit = {
     val picks = Seq(
       "s1_scan_project" -> "Filter + projection pushed into the parquet scan (PushedFilters, 3-column ReadSchema).",
       "a1_mean_composite" -> "Mean composite: partial+final HashAggregate around one Exchange; decimal-routed sums stay in codegen.",
@@ -173,14 +200,11 @@ object Plans {
     sb.append("its final plan likewise reads checkpoints; the added stage is the\n")
     sb.append("zero-exchange native-expression encode already planned at x119.\n")
     picks.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sf)
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-      sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+      sb.append(plan(name))
       sb.append("```\n")
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("[plans] wrote PLANS.md")
-    spark.stop()
   }
 }

@@ -189,111 +189,9 @@ object TextOps {
       .withColumn("bytes_per_token",
         col("n_bytes").cast("double") / col("n_byte_tokens").cast("double"))
 
-  /** One left-to-right merge pass of the rule (p1, p2) over a symbol
-    * array — the Column image of [[graft.functions.BpeKernel]]'s inner
-    * loop and the exact twin of the oracle's list_reduce fold: the
-    * accumulator ends with p1 and the next element is p2 → replace the
-    * tail with the merged symbol (which can never itself be the left of
-    * the same rule, so one pass suffices). */
-  private def applyMergePass(syms: Column, p1: String, p2: String): Column =
-    aggregate(
-      transform(syms, s => array(s)),
-      array().cast("array<string>"),
-      (acc, x) => when(size(acc) > 0 &&
-          element_at(acc, -1) === p1 && element_at(x, 1) === p2,
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(p1 + p2))))
-        .otherwise(concat(acc, x)))
-
-  /** TRAIN a BPE merge table FROM the corpus, inside the engine — the
-    * tokenizer-training step itself distributed (the x85/x90 discipline
-    * promoted to subword vocabularies; Sennrich 2016's learning loop):
-    * start from the per-word character sequences, and per round pick
-    * the adjacent symbol pair with the highest occurrence-weighted
-    * count — ties broken on (pair) ascending, a total order — then
-    * merge it everywhere. Returns the rules in training order with
-    * their counts; the result is well-formed by construction, so
-    * [[bpeSubwords]] re-tokenizes with it directly.
-    *
-    * Every round is ONE bounded aggregate: pair counts collapse
-    * map-side (keyed by symbol pair — vocabulary-bounded, not corpus-
-    * bounded), a 1-row argmax reaches the driver, and the merge applies
-    * to the DISTINCT-word state (localCheckpoint per round, the x45
-    * lineage discipline). The corpus is scanned ONCE (the initial
-    * word census); all `nMerges` rounds run over the vocabulary table,
-    * whose size is Heaps-law sublinear in corpus size. Integer counts +
-    * total-order argmax ⇒ the learned table is bit-identical under any
-    * partitioning, replayable rule for rule by an independent engine. */
-  def trainBpeMerges(docs: DataFrame, nMerges: Int,
-                     textCol: String = "text")
-      : Seq[(String, String, Long)] = {
-    require(nMerges >= 1, s"need nMerges >= 1: $nMerges")
-    val vocab = docs
-      .select(explode(filter(tokens(col(textCol)), t => length(t) > 0))
-        .as("w"))
-      .groupBy("w").agg(count(lit(1)).as("m"))
-      .withColumn("syms",
-        expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"))
-      .localCheckpoint()
-    trainMergesFromVocab(vocab, nMerges)
-  }
-
-  /** BYTE-level sibling of [[trainBpeMerges]]: the vocabulary is the
-    * corpus' DISTINCT GPT-2 pre-tokens (occurrence-weighted), the
-    * initial state is each pre-token's UTF-8 byte sequence, and the
-    * SAME learning loop runs over byte symbols — this is literally how
-    * GPT-2-family vocabularies are trained (Sennrich's loop over
-    * Radford's byte alphabet). The learned table is well-formed by
-    * construction and feeds [[byteBpeReport]] directly. */
-  def trainByteBpeMerges(docs: DataFrame, nMerges: Int,
-                         textCol: String = "text")
-      : Seq[(String, String, Long)] = {
-    require(nMerges >= 1, s"need nMerges >= 1: $nMerges")
-    val vocab = docs
-      .select(explode(graft.functions.Gpt2Pretokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("m"))
-      .withColumn("syms", graft.functions.ByteSymsExpr(col("w")))
-      .localCheckpoint()
-    trainMergesFromVocab(vocab, nMerges)
-  }
-
-  /** The shared Sennrich learning loop over a (w, m, syms) vocabulary
-    * state: per round ONE vocabulary-bounded pair-count aggregate, a
-    * 1-row total-order argmax (cnt desc, then (p1, p2) ascending —
-    * for byte symbols the Latin-1 string order IS the byte-list
-    * lexicographic order, so the oracle's INT[]-list ORDER BY matches
-    * exactly), then one merge pass over the distinct state. */
-  private def trainMergesFromVocab(vocab0: DataFrame, nMerges: Int)
-      : Seq[(String, String, Long)] = {
-    var vocab = vocab0
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    var r = 0
-    var dry = false
-    while (r < nMerges && !dry) {
-      val n1 = greatest(size(col("syms")) - 1, lit(0))
-      val top = vocab
-        .select(col("m"), explode(arrays_zip(
-          slice(col("syms"), lit(1), n1),
-          slice(col("syms"), lit(2), n1))).as("pr"))
-        .select(col("pr.0").as("p1"), col("pr.1").as("p2"), col("m"))
-        .groupBy("p1", "p2").agg(sum("m").as("cnt"))
-        .orderBy(col("cnt").desc, col("p1"), col("p2")).limit(1)
-        .collect()
-      if (top.isEmpty) dry = true
-      else {
-        val (p1, p2, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += ((p1, p2, cnt))
-        vocab = vocab
-          .withColumn("syms", applyMergePass(col("syms"), p1, p2))
-          .localCheckpoint()
-        r += 1
-      }
-    }
-    out.toSeq
-  }
-
-  /** ONE-PASS BPE training — [[trainBpeMerges]] with the per-merge
-    * corpus jobs removed: the corpus is scanned ONCE (the same
+  /** ONE-PASS BPE training — Sennrich's learning loop (sequentially:
+    * one corpus job per merge) with the per-merge corpus jobs
+    * removed: the corpus is scanned ONCE (the same
     * occurrence-weighted distinct-word census), and ALL `nMerges`
     * rounds run on the driver over that census with pair-count DELTA
     * maintenance (only words containing the winning pair are touched
@@ -308,7 +206,7 @@ object TextOps {
     * EXACTNESS: identical tie-breaking ((cnt DESC, p1, p2) in UTF-8
     * binary = code-point order — the engine's string order) and the
     * identical left-to-right merge sweep, so the learned table is
-    * BIT-IDENTICAL to [[trainBpeMerges]]' at any merge count
+    * BIT-IDENTICAL to the sequential trainer's at any merge count
     * (ByteBpeSpec pins it on the 200-merge fixture). `minCount`
     * (default 1 = exact) prunes census words below the threshold — the
     * standard Zipf-tail cut that bounds driver memory on a 100 TB
@@ -338,7 +236,7 @@ object TextOps {
   }
 
   /** BYTE-level sibling of [[trainBpeMergesFast]] — the one-pass form
-    * of [[trainByteBpeMerges]]: GPT-2 pre-token census in ONE job,
+    * of the sequential byte trainer: GPT-2 pre-token census in ONE job,
     * byte symbols, the same exact driver loop. Bit-identical to the
     * sequential trainer (ByteBpeSpec, 200-merge fixture). */
   def trainByteBpeMergesFast(docs: DataFrame, nMerges: Int,
@@ -375,7 +273,7 @@ object TextOps {
   }
 
   /** The engine's left-to-right single-rule merge sweep
-    * ([[applyMergePass]]'s local image): merge every non-overlapping
+    * (the sequential trainer's Column merge pass, locally): merge every non-overlapping
     * (p1, p2) adjacency, left preferential. */
   private def mergeSweep(syms: Array[String], p1: String, p2: String)
       : Array[String] = {
@@ -399,7 +297,7 @@ object TextOps {
     * pair → word-index inverted list bounds each round's work to the
     * words actually containing the winning pair, and per affected word
     * only the CHANGED pair counts update. Same argmax total order and
-    * the same left-to-right sweep as [[trainMergesFromVocab]] ⇒ the
+    * the same left-to-right sweep as the sequential trainer ⇒ the
     * merge tables are bit-identical. */
   private[ext] def trainMergesLocal(census: Seq[(Long, Array[String])],
                                     nMerges: Int)
@@ -591,7 +489,8 @@ object TextOps {
   def fingerprint(text: Column): Column =
     graft.functions.HashExprs.rolling_fnv_fingerprint(tokens(text))
 
-  /** Standard corpus-profile report per grouping key. */
+  /** Standard corpus-profile report per grouping key; `n_distinct`
+    * counts distinct texts (by md5) exactly. */
   def corpusProfile(docs: DataFrame, keyCol: String,
                     textCol: String = "text"): DataFrame = {
     val t = col(textCol)
@@ -599,7 +498,7 @@ object TextOps {
       count(lit(1)).as("n_docs"),
       graft.ops.Stable.avgD(length(t)).as("avg_chars"),
       graft.ops.Stable.avgD(tokenCount(t)).as("avg_tokens"),
-      approx_count_distinct(md5(t)).as("approx_distinct"))
+      countDistinct(md5(t)).as("n_distinct"))
   }
 
   /** Per-document salient terms: the `topN` tokens of each document ranked
@@ -1711,20 +1610,11 @@ object TextOps {
     * model carries one), joined against the model's 2n−1 broadcast
     * level frames — gram lookups `lp1..lpn` on every suffix length,
     * context backoffs `cbow1..cbow(n−1)` on the windows ending at
-    * w_{n−1}. Returns the joined frame and the model order. */
-  /** One-slot cache for the broadcast-route level frames: building
-    * them costs a driver-side encode of every model row into a
-    * LocalRelation (`toDF` over up to 10⁶ tuples), which the bench
-    * paid on EVERY scoring invocation. Keyed like [[graft.sources
-    * .Arpa.read]]'s parse memo — (session, path, size, mtime) — so a
-    * retrained artifact or a fresh session rebuilds; one slot bounds
-    * retained heap to one model's frames. Model-ARTIFACT state, never
-    * query results. */
-  private val lvlFrameCache =
-    new java.util.concurrent.atomic.AtomicReference[
-      ((org.apache.spark.sql.SparkSession, String, Long, Long),
-        (Seq[DataFrame], Int, Option[DataFrame]))]()
-
+    * w_{n−1}. Returns the joined frame and the model order.
+    *
+    * The level frames are memoized per (artifact, session): building
+    * them costs a driver-side encode of every model row, which would
+    * otherwise be paid on EVERY scoring invocation. */
   private def arpaOccLookups(spark: org.apache.spark.sql.SparkSession,
                              docs: DataFrame, arpaPath: String,
                              textCol: String, idCol: String,
@@ -1732,13 +1622,8 @@ object TextOps {
                              passthrough: Seq[String] = Nil)
   : (DataFrame, Int) = {
     import spark.implicits._
-    val p = java.nio.file.Paths.get(arpaPath)
-    val key = (spark, arpaPath, java.nio.file.Files.size(p),
-      java.nio.file.Files.getLastModifiedTime(p).toMillis)
-    val hit = lvlFrameCache.get()
     val (lvl0, n, vocab0) =
-      if (hit != null && hit._1 == key) hit._2
-      else {
+      graft.ArtifactMemo("arpa_frames", Seq(arpaPath), scope = spark) {
         val m = graft.sources.Arpa.read(arpaPath)
         val ord = m.order
         require(ord >= 2, s"scoring needs order >= 2, model is order $ord")
@@ -1765,9 +1650,7 @@ object TextOps {
           if (!hasUnk) None
           else Some(m.grams(0).keys.map(_.head).toSeq.toDF("kw")
             .localCheckpoint(true))
-        val built = (frames: Seq[DataFrame], ord, voc)
-        lvlFrameCache.set((key, built))
-        built
+        (frames: Seq[DataFrame], ord, voc)
       }
     val lvl = lvl0.map(broadcast)
     val vocab = vocab0.map(broadcast)

@@ -326,7 +326,6 @@ object Conic {
     * same shape as Utm.utmToLatLonUdf; branch-heavy scalar math, one JVM
     * call per row, fully distributed. */
   def lccToLonLatUdf(p: Lcc) = udf((x: Double, y: Double) => p.inverse(x, y))
-  def albersToLonLatUdf(p: Albers) = udf((x: Double, y: Double) => p.inverse(x, y))
   def laeaToLonLatUdf(p: Laea) = udf((x: Double, y: Double) => p.inverse(x, y))
   def psToLonLatUdf(p: PolarStereo) = udf((x: Double, y: Double) => p.inverse(x, y))
   def sinuToLonLatUdf(p: Sinusoidal) = udf((x: Double, y: Double) => p.inverse(x, y))

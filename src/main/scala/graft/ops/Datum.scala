@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions.udf
-
 /** 7-parameter Helmert datum transformations (EPSG method 9606,
   * position-vector rotation convention) — the datum-shift step the
   * reference gets from `rasterio.warp.transform(src.crs, 'EPSG:4326',
@@ -112,10 +110,4 @@ object Datum {
     val (x2, y2, z2) = h.reversed(x, y, z)
     toGeodeticDeg(dst, x2, y2, z2)
   }
-
-  /** Column form of [[shiftToWgs84]]: (lat°, lon°) → struct(lat, lon).
-    * A scalar UDF by the engine's CRS convention (per-row trig + a
-    * bounded 10-step loop — no state, no shuffle, scan-bound). */
-  def shiftToWgs84Udf(src: Ellipsoid, h: Helmert7) =
-    udf((latDeg: Double, lonDeg: Double) => shiftToWgs84(src, h, latDeg, lonDeg))
 }

@@ -52,10 +52,6 @@ object Filters {
   def clipMask(df: DataFrame, inGeom: Column, valueCol: String = "value"): DataFrame =
     df.withColumn(valueCol, when(inGeom, col(valueCol)))
 
-  /** P6 crop variant — drop rows outside geometry
-    * (rasterio `mask(..., crop=True)`). */
-  def clipCrop(df: DataFrame, inGeom: Column): DataFrame = df.filter(inGeom)
-
   /** P9 — fire-pixel predicate (reference `img > 0`,
     * regenerate_viirs_pngs.py:27). */
   def positive(valueCol: String = "value"): Column = col(valueCol) > 0.0

@@ -103,12 +103,9 @@ object Utm {
   def oracleConstants: (Double, Array[Double], Double, Double) =
     (K0 * A1, beta, e, E0)
 
-  /** Column UDFs returning struct(lat, lon) / struct(easting, northing). */
+  /** Column UDF returning struct(lat, lon). */
   def utmToLatLonUdf(zone: Int, north: Boolean = true) =
     udf((e: Double, n: Double) => toLatLon(e, n, zone, north))
-
-  def latLonToUtmUdf(zone: Int, north: Boolean = true) =
-    udf((lat: Double, lon: Double) => toUtm(lat, lon, zone, north))
 
   /** Fully parameterized transverse Mercator — the Krüger core above
     * generalized over (ellipsoid, k₀, φ₀, λ₀, FE, FN), which is what

@@ -195,41 +195,26 @@ object Arpa {
     * [[graft.ext.TextOps.knScoreStoredArpaLevels]]) instead of
     * OOMing the driver mid-broadcast.
     *
-    * The PARSE is memoized per (path, size, mtime) — the KenLM
-    * posture: a scoring service maps the model once and serves every
-    * request from it; re-tokenizing megabytes of ARPA text per query
-    * is pure waste (r18 measurement: the parse, not the scoring,
-    * dominated x210's bench time). The key invalidates when the
-    * artifact is retrained in place (same readLevels discipline); the
-    * cached [[Model]] is immutable. This caches MODEL-ARTIFACT state,
-    * never query results — every scoring query still computes from
-    * its corpus input. */
-  def read(path: String): Model = {
-    val p = Paths.get(path)
-    val key = (path, Files.size(p),
-      Files.getLastModifiedTime(p).toMillis)
-    val hit = readCache.get()
-    if (hit != null && hit._1 == key) return hit._2
-    val sz = key._2
-    require(sz <= MaxReadBytes,
-      s"ARPA artifact $path is $sz bytes — past the $MaxReadBytes-byte " +
-        "driver-load ceiling for the broadcast scoring route. A model " +
-        "this size should be trained with vocabSize + prune bounds " +
-        "(knArpaLevels), or scored through the distributed level-table " +
-        "route (Arpa.readLevels / knScoreStoredArpaLevels)")
-    val m = parse(new String(Files.readAllBytes(p),
-      StandardCharsets.UTF_8))
-    readCache.set((key, m))
-    m
-  }
-
-  /** One-slot cache for [[read]] — (path, size, mtime) → parsed model.
-    * A single slot (not a map) bounds retained heap to one model while
-    * still absorbing the hot pattern: the same artifact scored by
-    * repeated bench passes / multiple queries back to back. */
-  private val readCache =
-    new java.util.concurrent.atomic.AtomicReference[
-      ((String, Long, Long), Model)]()
+    * The PARSE is memoized ([[graft.ArtifactMemo]], keyed by the
+    * file's path, size and mtime) — the KenLM posture: a scoring
+    * service maps the model once and serves every request from it;
+    * re-tokenizing megabytes of ARPA text per query is pure waste (the
+    * parse, not the scoring, dominated x210's bench time). The key
+    * invalidates when the artifact is retrained in place; one live
+    * model bounds retained heap, and the cached [[Model]] is
+    * immutable. */
+  def read(path: String): Model =
+    graft.ArtifactMemo("arpa_model", Seq(path)) {
+      val p = Paths.get(path)
+      val sz = Files.size(p)
+      require(sz <= MaxReadBytes,
+        s"ARPA artifact $path is $sz bytes — past the $MaxReadBytes-byte " +
+          "driver-load ceiling for the broadcast scoring route. A model " +
+          "this size should be trained with vocabSize + prune bounds " +
+          "(knArpaLevels), or scored through the distributed level-table " +
+          "route (Arpa.readLevels / knScoreStoredArpaLevels)")
+      parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+    }
 
   /** DISTRIBUTED reader — the big-model half of the stored-LM
     * lifecycle, closing the write/read asymmetry: [[writeLevels]]

@@ -98,10 +98,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("extensions install at session-build time") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val s2 = GraftSession.builder(SharedSpark.cpus)
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     // getOrCreate may return the shared session; registerAll covers that
     // case in the other test — here just assert the function resolves

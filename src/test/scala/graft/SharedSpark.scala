@@ -4,16 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** One session per JVM for all suites. */
 object SharedSpark {
+  /** Pinned rather than read from the environment, so plan shapes under
+    * test do not follow the host's core count. */
+  val cpus = 4
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // the bench/verify posture (see Bench.scala): AQE may
-      // re-partition cached plan output
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val s = GraftSession.builder(cpus)
       // bucketed-table tests write through saveAsTable — keep the
       // warehouse out of the repo working tree
       .config("spark.sql.warehouse.dir",

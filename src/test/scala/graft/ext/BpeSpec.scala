@@ -134,7 +134,7 @@ class BpeSpec extends AnyFunSuite {
     // words: aa ×2, ab ×1 → round 1 merges (a,a) at count 2;
     // round 2 merges (a,b) at count 1; round 3 finds nothing and stops
     val docs = Seq((1L, "aa ab"), (2L, "aa")).toDF("doc_id", "text")
-    val learned = TextOps.trainBpeMerges(docs, nMerges = 5)
+    val learned = SequentialBpe.trainBpeMerges(docs, nMerges = 5)
     assert(learned == Seq(("a", "a", 2L), ("a", "b", 1L)))
     // the learned table is well-formed: the kernel compiles and applies
     val rules2 = graft.functions.BpeKernel.compile(learned.map(m => (m._1, m._2)))
@@ -142,10 +142,10 @@ class BpeSpec extends AnyFunSuite {
       Seq("aa", "b"))
     // tie-break is (cnt DESC, pair ASC): "ba ca" both count 1 → (b,a)
     val tie = Seq((1L, "ba ca")).toDF("doc_id", "text")
-    assert(TextOps.trainBpeMerges(tie, nMerges = 1) == Seq(("b", "a", 1L)))
+    assert(SequentialBpe.trainBpeMerges(tie, nMerges = 1) == Seq(("b", "a", 1L)))
     // multi-round evolution: merged symbols join later pairs
     val deep = Seq((1L, "abc abc abc ab")).toDF("doc_id", "text")
-    val l2 = TextOps.trainBpeMerges(deep, nMerges = 2)
+    val l2 = SequentialBpe.trainBpeMerges(deep, nMerges = 2)
     // (a,b) ×4 first, then (ab,c) ×3
     assert(l2 == Seq(("a", "b", 4L), ("ab", "c", 3L)))
   }
@@ -235,7 +235,7 @@ class BpeSpec extends AnyFunSuite {
       Seq(("b", "a", 1L)))
     // real corpus, deep table: sequential vs one-pass, tuple-for-tuple
     val corpus = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-    val seq30 = TextOps.trainBpeMerges(corpus, nMerges = 30)
+    val seq30 = SequentialBpe.trainBpeMerges(corpus, nMerges = 30)
     val fast30 = TextOps.trainBpeMergesFast(corpus, nMerges = 30)
     assert(fast30 == seq30,
       "one-pass trainer diverged from the sequential trainer")

@@ -90,7 +90,7 @@ class ByteBpeSpec extends AnyFunSuite {
     val docs = Seq.tabulate(30)(i =>
       (i.toLong, s"the cat sat on the mat 水水 it's day $i"))
       .toDF("doc_id", "text")
-    val learned = TextOps.trainByteBpeMerges(docs, nMerges = 8)
+    val learned = SequentialBpe.trainByteBpeMerges(docs, nMerges = 8)
     assert(learned.length == 8)
     // compiles => well-formed by BpeKernel's invariants
     val rules = BpeKernel.compile(learned.map(m => (m._1, m._2)))
@@ -130,7 +130,7 @@ class ByteBpeSpec extends AnyFunSuite {
           (col("doc_id") % 26).cast("int") + 1),
         lit(" "), element_at(typedLit(phon),
           ((col("doc_id") * 7 + 3) % 26).cast("int") + 1)).as("text"))
-    val learned = TextOps.trainByteBpeMerges(docs, nMerges = 200)
+    val learned = SequentialBpe.trainByteBpeMerges(docs, nMerges = 200)
     assert(learned.length == 200,
       s"trainer went dry at ${learned.length} rules")
     // the one-pass trainer (ONE census job + driver delta maintenance,
@@ -322,7 +322,7 @@ class ByteBpeSpec extends AnyFunSuite {
         element_at(typedLit(Seq("it's  two  spaces ", "дd 😀! don't stop",
           "水水水 water 99'", "x=42; a[i]*99 !!'s 'quote")),
           (col("doc_id") % 4).cast("int") + 1)).as("text"))
-    val table = TextOps.trainByteBpeMerges(docs, nMerges = 60)
+    val table = SequentialBpe.trainByteBpeMerges(docs, nMerges = 60)
       .map(m => (m._1, m._2))
     val ranks = ByteBpe.ranksFromMerges(table)
     val back = ByteBpe.parseTiktokenRanks(

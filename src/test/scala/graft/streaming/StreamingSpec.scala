@@ -827,6 +827,36 @@ class StreamingSpec extends AnyFunSuite {
     assert(s.map(_.head) == Set(1L), s"survivors $s")
   }
 
+  test("streaming C4 gate equals the batch c4LineFilters — stateless, " +
+    "append mode") {
+    import spark.implicits._
+    val good = "the quick brown fox jumps over to the lazy dog."
+    val docs = Seq(
+      (1L, Seq(good, good, good, "a short line").mkString("\n")),
+      (2L, Seq.fill(4)(good.stripSuffix(".")).mkString("\n")),
+      (3L, Seq(good, good, good, "enable javascript to view it.")
+        .mkString("\n")),
+      (4L, Seq(good, good, good, "and lorem ipsum filler text here.")
+        .mkString("\n")),
+      (5L, Seq(good, good, good, "the brace token { appears here.")
+        .mkString("\n")))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("c4stream")
+    docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val stream = spark.readStream.schema(docs.schema)
+      .parquet(s"$dir/documents.parquet")
+    val s = StreamingOps.runBounded(spark,
+        StreamingOps.streamingC4Gate(stream), "c4_gate_test",
+        OutputMode.Append())
+      .collect().map(_.toSeq).toSet
+    val b = graft.ext.Curation.c4LineFilters(docs)
+      .collect().map(_.toSeq).toSet
+    assert(s == b, s"stream $s vs batch $b")
+    // docs 1 and 3 keep their three sentences; 2 has no terminal
+    // punctuation, 4 and 5 fail the page tells
+    assert(s.collect { case r if r(4) == true => r.head } == Set(1L, 3L))
+  }
+
   test("streaming perplexity gate: the uncollapsed stored-ARPA walk " +
     "equals the batch log-domain scorer bit for bit") {
     val dir = "/root/testdata/sf0.001"
