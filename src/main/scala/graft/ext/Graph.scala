@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.ops.Stable
 
 /** Link-graph operators for the crawl tier. A crawl frontier that only
@@ -28,9 +27,11 @@ object Graph {
     *
     * Scale design: the deduplicated edge table, out-degrees, and node
     * set (carrying the dangling no-out-edge flag as a column) are
-    * computed ONCE and cached (`MEMORY_AND_DISK`)
-    * for the k reuses, then released; each round is one equi-join of
-    * edges with the previous rank vector plus ONE partial+final hash
+    * computed ONCE as eager `localCheckpoint`s — lineage-free leaves
+    * (see [[dedupEdges]]), so every round plans over a few RDD scans
+    * instead of the caller's whole edge-deriving chain. Each round is
+    * one equi-join of edges with the previous rank vector plus ONE
+    * partial+final hash
     * aggregation on the destination key — shuffle size is the edge
     * count, skew bound is one node's in-degree. The dangling mass rides
     * as a ONE-ROW aggregate cross-joined back (no driver collect in the
@@ -130,11 +131,7 @@ object Graph {
       .select(col("node"),
         coalesce(col("pr"), lit(0.0)).as("pr"), col("dang"))
       .localCheckpoint(true)
-    val out = runPrepared(g, damping) { (step, _) =>
-      iterate(iters, p0)(step)
-    }
-    g.release()
-    out
+    runPrepared(g, damping) { (step, _) => iterate(iters, p0)(step) }
   }
 
   /** Top-k nodes by rank — the authority report a crawl scheduler or
@@ -153,7 +150,7 @@ object Graph {
     * AGGREGATE into a weight, and each round distributes `pr(u)`
     * proportionally to `w(u→v) / Σ_out w(u)` instead of uniformly.
     * Same plan shape as [[pageRank]] — edges/out-weights/nodes/dangling
-    * cached once, per round one edge equi-join + one dest-key
+    * checkpointed once, per round one edge equi-join + one dest-key
     * partial+final agg + the one-row dangling mass, eager
     * localCheckpoint (the Pregel lineage discipline), decimal-routed
     * sums ⇒ partitioning-invariant. Deliberately a SEPARATE runner
@@ -177,14 +174,14 @@ object Graph {
       // losing ALL its edges becomes dangling, the already-correct
       // branch.
       .filter(col("w") > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     val sw = e.groupBy("src").agg(Stable.sumD(col("w"), 18).as("sw"))
-    val ed = e.join(sw, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    val ed = e.join(sw, "src").localCheckpoint(true)
     val nodes = nodeSetD(e)
     val n = nodes.count()
     val base = (1.0 - damping) / n
     val pr = iterate(iters,
-      // projection of the cached node table — no init barrier needed
+      // projection of the checkpointed node table — no init barrier needed
       nodes.select(col("node"), lit(1.0 / n).as("pr"), col("dang"))) { p =>
       teleportRound(nodes,
         propagate(ed, p, "src", "dst", col("pr") * (col("w") / col("sw"))),
@@ -192,9 +189,6 @@ object Graph {
         lit(base) + lit(damping) * coalesce(col("v"), lit(0.0)) +
           lit(damping) * col("dmass") / lit(n.toDouble))
     }
-    e.unpersist(blocking = false)
-    ed.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
     pr.select("node", "pr")
   }
 
@@ -208,17 +202,14 @@ object Graph {
     * to exactly the damped remainder of 0. Seeds not present in the
     * graph are ignored; at least one seed must survive the
     * intersection. Same per-round plan shape as [[pageRank]]; the
-    * teleport column rides the cached node table — no extra join in
-    * the loop. */
+    * teleport column rides the checkpointed node table — no extra join
+    * in the loop. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = 5, damping: Double = 0.85,
                            srcCol: String = "src", dstCol: String = "dst")
       : DataFrame = {
     require(iters >= 1, s"need iters >= 1: $iters")
-    val g = prepare(edges, srcCol, dstCol)
-    val out = pprPrepared(g, seeds, iters, damping)
-    g.release()
-    out
+    pprPrepared(prepare(edges, srcCol, dstCol), seeds, iters, damping)
   }
 
   /** Persist a [[pageRank]] vector as the AUTHORITY STORE — the x77/
@@ -266,7 +257,7 @@ object Graph {
     * seeds hold a core component of exactly zero ⇒ `rel_mass` exactly
     * 1.0 — the isolated-spam-farm signature, closed-form testable.
     *
-    * Scale shape: ONE shared [[PreparedGraph]] (cached edge/node/
+    * Scale shape: ONE shared [[PreparedGraph]] (checkpointed edge/node/
     * dangling tables built once) and ONE FUSED power loop carrying
     * BOTH vectors as columns of a single node frame — per round ONE
     * edge equi-join + one dest-key partial+final agg computing both
@@ -297,9 +288,9 @@ object Graph {
       .select(col("node"),
         when(col("is_seed"), lit(1.0 / nSeed)).otherwise(lit(0.0)).as("t"),
         col("dang"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     val base = (1.0 - damping) / g.n
-    // projection of the persisted ndt — no init barrier needed
+    // projection of the checkpointed ndt — no init barrier needed
     var v = ndt
       .select(col("node"), lit(1.0 / g.n).as("pr_u"), col("t").as("pr_p"),
         col("dang"))
@@ -324,16 +315,12 @@ object Graph {
           ndt("dang"))
         .localCheckpoint(true)
     }
-    val out = v
-      .select(col("node"), col("pr_u").as("pr_all"),
+    v.select(col("node"), col("pr_u").as("pr_all"),
         (col("pr_p") *
           (lit(nSeed.toDouble) / lit(g.n.toDouble))).as("core_pr"))
       .select(col("node"), col("pr_all").as("pr"), col("core_pr"),
         (col("pr_all") - col("core_pr")).as("spam_mass"),
         ((col("pr_all") - col("core_pr")) / col("pr_all")).as("rel_mass"))
-    ndt.unpersist(blocking = false)
-    g.release()
-    out
   }
 
   /** CRAWL BUDGET apportionment — turn a rank vector into the integer
@@ -387,7 +374,7 @@ object Graph {
     * round: `auth(v) = Σ_{u→v} hub(u)`, then `hub(u) = Σ_{u→v}
     * auth(v)`, each L2-normalized (the power method on AᵀA / AAᵀ).
     *
-    * Same scale shape as [[pageRank]]: edges/nodes cached once, each
+    * Same scale shape as [[pageRank]]: edges/nodes checkpointed once, each
     * half-round is one edge equi-join + one partial+final agg on the
     * receiving key, the L2 norm rides as a ONE-ROW cross-joined
     * aggregate (no driver collect in the loop). ONE eager
@@ -427,7 +414,7 @@ object Graph {
             .otherwise(lit(0.0)).as(vCol))
         .localCheckpoint(true)
     }
-    // init vectors are projections of the cached node table, each
+    // init vectors are projections of the checkpointed node table, each
     // consumed once inside round 1's plan — no init barrier needed
     var hub = nodes.select(col("node"), lit(1.0).as("hub"))
     var auth = nodes.select(col("node"), lit(0.0).as("auth"))
@@ -435,10 +422,7 @@ object Graph {
       auth = halfRound(hub, "src", "dst", col("hub"), "auth")
       hub = halfRound(auth, "dst", "src", col("auth"), "hub")
     }
-    val out = hub.join(auth, "node")
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    hub.join(auth, "node")
   }
 
   /** SALSA (Lempel & Moran 2001, "SALSA: the stochastic approach for
@@ -460,7 +444,7 @@ object Graph {
     * density. Running both and comparing is the standard farm probe.
     *
     * Same 100 TB shape as [[hits]]: dedup'd edges + both degree tables
-    * cached once; each half-round is one edge equi-join + one
+    * checkpointed once; each half-round is one edge equi-join + one
     * partial+final agg on the receiving key; no driver collect, no
     * normalization aggregate at all (mass conservation replaces it);
     * ONE eager localCheckpoint per round (auth — the vector two
@@ -474,16 +458,17 @@ object Graph {
     require(iters >= 1, s"need iters >= 1: $iters")
     val e = dedupEdges(edges, srcCol, dstCol)
     val inDeg = e.groupBy("dst").agg(count(lit(1)).as("indeg"))
-    // BOTH degree columns ride the cached edge table (one join each,
-    // paid once) instead of re-joining a degree table every half-round
+    // BOTH degree columns ride the checkpointed edge table (one join
+    // each, paid once) instead of re-joining a degree table every
+    // half-round
     val ed = e
       .join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
       .join(inDeg, "dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
     val nodes = nodeSet(e)
     val nAuth = inDeg.count()
-    // init vector: one small agg over the cached edge table, consumed
-    // once inside round 1's plan — no init barrier needed
+    // init vector: one small agg over the checkpointed edge table,
+    // consumed once inside round 1's plan — no init barrier needed
     var auth = inDeg.select(col("dst").as("node"),
         (lit(1.0) / lit(nAuth.toDouble)).as("auth"))
     var hub: DataFrame = null
@@ -497,8 +482,7 @@ object Graph {
     // join) after the last auth half-round already ran it once — so
     // it alone checkpoints after the loop: the output join then reads
     // a materialized vector instead of re-executing the backward
-    // half-step (plus the edge dedup/degree joins) after `ed` below
-    // is already unpersisted.
+    // half-step.
     for (_ <- 1 to iters) {
       hub = propagate(ed, auth, "dst", "src",
           col("auth") / col("indeg").cast("double"))
@@ -509,16 +493,12 @@ object Graph {
         .localCheckpoint(true)
     }
     hub = hub.localCheckpoint(true)
-    val out = nodes
+    nodes
       .join(hub, Seq("node"), "left")
       .join(auth, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub"), lit(0.0)).as("hub"),
         coalesce(col("auth"), lit(0.0)).as("auth"))
-    e.unpersist(blocking = false)
-    ed.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
   }
 
   /** Crawl ISLANDS — weakly-connected components of the link graph
@@ -654,7 +634,7 @@ object Graph {
 
   /** ONE propagation half-round — the kernel image of every rank
     * recurrence: the current vector `(node, …)` equi-joined onto the
-    * (cached) edge table at `inKey`, then a per-`outKey` partial+final
+    * (checkpointed) edge table at `inKey`, then a per-`outKey` partial+final
     * aggregation of `term` through the fixed-scale decimal route
     * ([[Stable.sumD]]) — shuffle size the edge count, skew bound one
     * node's degree, result invariant under any partitioning. `term`
@@ -700,44 +680,42 @@ object Graph {
       .select(frame("node"), blend.as("pr"), frame("dang"))
       .localCheckpoint(true)
 
-  /** The cached graph artifacts every power loop needs: dedup'd edge
-    * table, degree-annotated edges, node set, dangling set, node
+  /** The checkpointed graph artifacts every power loop needs:
+    * degree-annotated edges, node set carrying the dangling flag, node
     * count. Built ONCE ([[prepare]]) and threaded through however many
     * loops run over the same graph — [[spamMass]] runs TWO (uniform +
     * personalized) plus its scale row, which before this factoring
     * rebuilt the whole set three times (three scans of whatever chain
-    * derives the edges). Caller releases. */
+    * derives the edges). Nothing to release: Spark's ContextCleaner
+    * frees the checkpoint blocks once the frames are unreachable. */
   private final class PreparedGraph(
-      val e: DataFrame, val ed: DataFrame, val nodes: DataFrame,
-      val n: Long) {
-    def release(): Unit = {
-      e.unpersist(blocking = false)
-      ed.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
-  }
+      val ed: DataFrame, val nodes: DataFrame, val n: Long)
 
-  /** The three cached graph artifacts EVERY recurrence in this file
-    * starts from, factored so no public operator re-inlines them:
-    * dedup'd string-keyed edges, the node set, the dangling (no
-    * out-edge) set. Expression trees are IDENTICAL to the historical
-    * inline copies — the oracle hashes guard this refactor. */
+  /** The three graph artifacts EVERY recurrence in this file starts
+    * from, factored so no public operator re-inlines them: dedup'd
+    * string-keyed edges, the node set, the dangling (no out-edge) set.
+    * Each is an eager `localCheckpoint` — a lineage-free leaf, so the
+    * rounds that read it never re-analyse, re-canonicalise or
+    * re-explain the caller's edge-deriving chain (a persisted frame
+    * keeps that chain in every plan that reads it). Expression trees
+    * are IDENTICAL to the historical inline copies — the oracle hashes
+    * guard this refactor. */
   private def dedupEdges(edges: DataFrame,
                          srcCol: String, dstCol: String): DataFrame =
     edges
       .select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
 
   private def nodeSet(e: DataFrame): DataFrame =
     e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
 
   /** The node set ANNOTATED with the dangling flag (`dang` = no
-    * out-edge) — ONE cached node-sized table replacing the historical
+    * out-edge) — ONE checkpointed node-sized table replacing the historical
     * separate nodes + dangling pair: the flag membership is exactly
     * the old left-anti set (left join on distinct sources, null test),
     * and carrying it as a column lets every loop's dangling mass be a
@@ -750,7 +728,7 @@ object Graph {
       .join(e.select("src").distinct(),
         nodes0("node") === col("src"), "left")
       .select(nodes0("node"), col("src").isNull.as("dang"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(true)
   }
 
   /** The fixed-count power loop every rank variant drives: iterate
@@ -767,26 +745,22 @@ object Graph {
                       srcCol: String, dstCol: String): PreparedGraph = {
     val e = dedupEdges(edges, srcCol, dstCol)
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ed = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    val ed = e.join(deg, "src").localCheckpoint(true)
     val nodes = nodeSetD(e)
-    new PreparedGraph(e, ed, nodes, nodes.count())
+    new PreparedGraph(ed, nodes, nodes.count())
   }
 
-  /** Shared setup + round step: dedup the edges, cache the degree-
-    * annotated edge table / node set / dangling set for the loop the
-    * caller drives, release them after. The step function is the ONE
-    * image of the recurrence — both public entry points iterate it, so
-    * their rounds are expression-identical (bit-identical results for
-    * equal round counts). */
+  /** Shared setup + round step: dedup the edges, checkpoint the
+    * degree-annotated edge table / node set / dangling set for the loop
+    * the caller drives. The step function is the ONE image of the
+    * recurrence — both public entry points iterate it, so their rounds
+    * are expression-identical (bit-identical results for equal round
+    * counts). */
   private def run(edges: DataFrame, damping: Double,
                   srcCol: String, dstCol: String)
                  (loop: (DataFrame => DataFrame, DataFrame) => DataFrame)
-      : DataFrame = {
-    val g = prepare(edges, srcCol, dstCol)
-    val out = runPrepared(g, damping)(loop)
-    g.release()
-    out
-  }
+      : DataFrame =
+    runPrepared(prepare(edges, srcCol, dstCol), damping)(loop)
 
   /** [[run]]'s loop half over an already-[[prepare]]d graph — the
     * per-round expressions are UNCHANGED (same step image, decimal-
@@ -796,9 +770,9 @@ object Graph {
                          (loop: (DataFrame => DataFrame, DataFrame)
                             => DataFrame): DataFrame = {
     val base = (1.0 - damping) / g.n
-    // pr0 is a plain projection of the CACHED node table — both of
-    // round 1's consumers (propagate join + dangling filter) re-read
-    // the cache, and round 1's output checkpoints, so lineage stays
+    // pr0 is a plain projection of the CHECKPOINTED node table — both
+    // of round 1's consumers (propagate join + dangling filter) re-read
+    // its blocks, and round 1's output checkpoints, so lineage stays
     // bounded without an init barrier (one eager action fewer per
     // query; the r18 planning-floor measurement)
     val pr0 = g.nodes
@@ -816,7 +790,8 @@ object Graph {
   /** [[personalizedPageRank]]'s loop half over a shared
     * [[PreparedGraph]] — same teleport algebra, same per-round
     * expressions, so a privately-prepared run and a shared-graph run
-    * agree bit for bit. */
+    * agree bit for bit. The teleport column rides a node table
+    * checkpointed once, like the graph's own artifacts. */
   private def pprPrepared(g: PreparedGraph, seeds: DataFrame,
                           iters: Int, damping: Double): DataFrame = {
     require(iters >= 1, s"need iters >= 1: $iters")
@@ -829,9 +804,9 @@ object Graph {
       .select(col("node"),
         when(col("is_seed"), lit(1.0 / nS)).otherwise(lit(0.0)).as("t"),
         col("dang"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val pr = iterate(iters,
-      // projection of the persisted ndt — no init barrier needed
+      .localCheckpoint(true)
+    iterate(iters,
+      // projection of the checkpointed ndt — no init barrier needed
       ndt.select(col("node"), col("t").as("pr"), col("dang"))) { p =>
       teleportRound(ndt,
         propagate(g.ed, p, "src", "dst",
@@ -840,8 +815,6 @@ object Graph {
         lit(1.0 - damping) * col("t") +
           lit(damping) * coalesce(col("v"), lit(0.0)) +
           lit(damping) * col("dmass") * col("t"))
-    }
-    ndt.unpersist(blocking = false)
-    pr.select("node", "pr")
+    }.select("node", "pr")
   }
 }

@@ -599,6 +599,8 @@ object Multimodal {
     * depends on it); textured frames round-trip within the usual ±few
     * gray levels. */
   object MjpegCodec {
+    javax.imageio.ImageIO.setUseCache(false) // see ImageCodec
+
     /** 'MJPG' as the little-endian biCompression dword. */
     val MJPG: Int = 0x47504A4D
 

@@ -434,6 +434,52 @@ class GraphSpec extends AnyFunSuite {
     assert(one.toSeq == many.toSeq) // bit-exact, not approximate
   }
 
+  test("pageRank rounds plan over checkpointed leaves: only the edge " +
+    "dedup reads the caller's chain, and no query reads the cache") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+      LogicalPlan}
+    import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // a fresh session's listener manager hears only that session's queries
+    val s = spark.newSession()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    // a derived chain in the style of x124's: link URLs -> lower-cased
+    // hosts, empty hosts dropped, two crawls unioned
+    def crawl(rows: (String, String)*) =
+      s.createDataFrame(rows).toDF("from_url", "to_url")
+    def host(c: String) =
+      lower(regexp_extract(col(c), "^https?://([^/:]+)", 1))
+    def hostEdges(links: org.apache.spark.sql.DataFrame) =
+      links.select(host("from_url").as("src"), host("to_url").as("dst"))
+        .where(col("src") =!= "" && col("dst") =!= "")
+    val edges = hostEdges(crawl(
+        "http://A.org/x" -> "https://b.org/y", "http://b.org/" -> "c.org",
+        "https://b.org/z" -> "http://c.org/w"))
+      .union(hostEdges(crawl(
+        "http://c.org/" -> "http://a.org/",
+        "https://d.org:8080/" -> "http://a.org/q")))
+    Graph.pageRank(edges, 3).collect()
+    org.apache.spark.ListenerBusDrain(s.sparkContext)
+    val seen = plans.asScala.toSeq
+    assert(seen.size > 3, s"queries not reported: ${seen.size}")
+    val readsChain = seen.filter(
+      _.collectLeaves().exists(!_.isInstanceOf[LogicalRDD]))
+    assert(readsChain.size == 1,
+      s"${readsChain.size} queries read past a checkpoint:\n" +
+        readsChain.mkString("\n---\n"))
+    assert(readsChain.head.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation]), readsChain.head)
+    seen.foreach(p => assert(
+      p.find(_.isInstanceOf[InMemoryRelation]).isEmpty, s"cache read:\n$p"))
+  }
+
   /** Driver-side reference SALSA — the degree-normalized half-round
     * recurrence (init 1/|authorities| on nodes with in-edges). */
   private def salsaRef(edges: Set[(String, String)], iters: Int)

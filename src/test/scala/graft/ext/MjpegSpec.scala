@@ -130,4 +130,22 @@ class MjpegSpec extends AnyFunSuite {
     got.zip(samples).foreach { case (g, w) => assert(g.sameElements(w)) }
   }
 
+  test("MjpegCodec alone turns off ImageIO's disk stream cache") {
+    // The switch is JVM-wide and any other codec object may already have
+    // flipped it, so load MjpegCodec fresh in its own class loader (JDK
+    // classes, ImageIO included, still come from the shared boot layer)
+    // and check that its initializer alone clears the flag.
+    def where(c: Class[_]) = c.getProtectionDomain.getCodeSource.getLocation
+    val loader = new java.net.URLClassLoader(
+      Array(where(MjpegCodec.getClass), where(classOf[scala.Option[_]])),
+      ClassLoader.getPlatformClassLoader)
+    javax.imageio.ImageIO.setUseCache(true)
+    try {
+      Class.forName(MjpegCodec.getClass.getName, true, loader)
+      assert(!javax.imageio.ImageIO.getUseCache)
+    } finally {
+      javax.imageio.ImageIO.setUseCache(false)
+      loader.close()
+    }
+  }
 }
