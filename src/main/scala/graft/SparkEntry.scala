@@ -1564,8 +1564,8 @@ object SparkEntry {
       val relined = t(s, d, "documents")
         .withColumn("text", twoTokenRelined)
       val dir = storedDir("boiler", d)(p =>
-        ext.Cleanse.boilerplateLineSet(relined, minDf = 20L)
-          .write.mode("overwrite").parquet(s"$p/lines"))
+        graft.io.LocalFs.write(ext.Cleanse.boilerplateLineSet(relined, minDf = 20L))
+          .mode("overwrite").parquet(s"$p/lines"))
       ext.Cleanse.censorLinesAgainst(relined, s.read.parquet(s"$dir/lines"))
     }),
 
@@ -2553,8 +2553,8 @@ object SparkEntry {
           .withColumn("text", expr(byteTextSqlExpr))
           .select(col("doc_id"),
             graft.functions.ByteBpeIds(col("text"), merges).as("ids"))
-        graft.sources.BinIdx.shardsFromIds(ids, nShards = 4)
-          .write.mode("overwrite").parquet(s"$p/shards")
+        graft.io.LocalFs.write(graft.sources.BinIdx.shardsFromIds(ids, nShards = 4))
+          .mode("overwrite").parquet(s"$p/shards")
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(p, "merges.txt"),
           graft.functions.ByteBpe.renderGpt2Merges(merges))

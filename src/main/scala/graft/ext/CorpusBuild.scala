@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs
 
 /** The END-TO-END corpus build — crawl to training binary as one
   * composed DAG, the product shape of the reference pipeline
@@ -145,13 +146,13 @@ object CorpusBuild {
   def tokenizedExport(s6: DataFrame, outDir: String, nShards: Int = 4,
                       nMerges: Int = 12): Unit = {
     val cols = s6.select("doc_id", "source", "text", "n_lines", "n_kept")
-    cols.write.mode("overwrite").parquet(s"$outDir/s6")
+    LocalFs.write(cols).mode("overwrite").parquet(s"$outDir/s6")
     val merges = TextOps.trainByteBpeMergesFast(cols, nMerges = nMerges)
       .map(m => (m._1, m._2))
     val ids = cols.select(col("doc_id"),
       graft.functions.ByteBpeIds(col("text"), merges).as("ids"))
-    graft.sources.BinIdx.shardsFromIds(ids, nShards = nShards)
-      .write.mode("overwrite").parquet(s"$outDir/shards")
+    LocalFs.write(graft.sources.BinIdx.shardsFromIds(ids, nShards = nShards))
+      .mode("overwrite").parquet(s"$outDir/shards")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outDir, "merges.txt"),
       graft.functions.ByteBpe.renderGpt2Merges(merges))

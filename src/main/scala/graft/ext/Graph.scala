@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs
 import graft.ops.Stable
 
 /** Link-graph operators for the crawl tier. A crawl frontier that only
@@ -222,8 +223,8 @@ object Graph {
   def pageRankStoredBuild(edges: DataFrame, dir: String, iters: Int = 5,
                           damping: Double = 0.85, srcCol: String = "src",
                           dstCol: String = "dst"): Unit =
-    pageRank(edges, iters, damping, srcCol, dstCol)
-      .write.mode("overwrite").parquet(s"$dir/ranks")
+    LocalFs.write(pageRank(edges, iters, damping, srcCol, dstCol))
+      .mode("overwrite").parquet(s"$dir/ranks")
 
   /** The query half of the stored-rank lifecycle: scan ONLY the
     * node-sized rank table — the corpus and edge list are never

@@ -66,18 +66,23 @@ object Multimodal {
       StructField("n_frames", IntegerType, nullable = true),
       StructField("mime", StringType, nullable = true))), nullable = true)))
 
-  /** Real image codec on the JDK's ImageIO. All operations are
-    * deterministic: 8-bit gray PNG round-trips samples losslessly.
-    *
-    * ImageIO's stream cache defaults to DISK: every read/write spills
+  /** ImageIO's stream cache defaults to DISK: every read/write spills
     * through a temp file plus synchronized registry work, which
     * serializes concurrent decode tasks on filesystem churn (r18
     * measurement: 32-wide decode stages burned ~20x the single-task
     * CPU in cache-file syscalls). Payloads here are in-memory byte
-    * arrays — force memory-backed streams once, JVM-wide (set in each
-    * ImageIO-using codec object so executor-side init also gets it). */
-  object ImageCodec {
+    * arrays — force memory-backed streams once, JVM-wide. Every
+    * ImageIO-using codec object calls [[init]] in its initializer, so
+    * whichever codec a driver or executor JVM loads first sets it. */
+  private[ext] object ImageIoStreams {
     javax.imageio.ImageIO.setUseCache(false)
+    def init(): Unit = ()
+  }
+
+  /** Real image codec on the JDK's ImageIO. All operations are
+    * deterministic: 8-bit gray PNG round-trips samples losslessly. */
+  object ImageCodec {
+    ImageIoStreams.init()
 
     def decode(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
       if (payload == null) None
@@ -297,7 +302,7 @@ object Multimodal {
     * Containers the JDK cannot read (mp4/webm/…) fall back to the
     * declared [[FakeCodec]] stub. */
   object VideoCodec {
-    javax.imageio.ImageIO.setUseCache(false) // see ImageCodec
+    ImageIoStreams.init()
 
     /** Encode gray frames (row-major, all w×h) as an animated GIF. */
     def encodeAnimatedGifGray(frames: Seq[Array[Byte]], width: Int,
@@ -599,7 +604,7 @@ object Multimodal {
     * depends on it); textured frames round-trip within the usual ±few
     * gray levels. */
   object MjpegCodec {
-    javax.imageio.ImageIO.setUseCache(false) // see ImageCodec
+    ImageIoStreams.init()
 
     /** 'MJPG' as the little-endian biCompression dword. */
     val MJPG: Int = 0x47504A4D

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs
 
 /** Similarity search and embedding compression over an embedding column
   * (`array<float>`) — the full index ladder a 100 TB vector corpus climbs:
@@ -112,11 +113,11 @@ object Similarity {
   def binaryAnnStoredBuild(embeddings: DataFrame, storageDir: String,
                            idCol: String = "vec_id",
                            vecCol: String = "embedding"): Unit =
-    embeddings
+    LocalFs.write(embeddings
       .select(col(idCol),
         signWord(col(vecCol), 0, 31).as("w0"),
-        signWord(col(vecCol), 32, 63).as("w1"))
-      .write.mode("overwrite").parquet(s"$storageDir/signwords")
+        signWord(col(vecCol), 32, 63).as("w1")))
+      .mode("overwrite").parquet(s"$storageDir/signwords")
 
   /** Query half: answer from the persisted words table alone. The
     * Hamming cut scans ONLY `(vec_id, w0, w1)` — PlanSpec asserts the
@@ -871,12 +872,12 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val books0 = pqCodebooks(embeddings, m, nCent, idCol, vecCol)
-    pqEncode(embeddings, books0, idCol, vecCol)
-      .write.mode("overwrite").parquet(s"$storageDir/codes")
-    books0.zipWithIndex.flatMap { case (book, s) =>
+    LocalFs.write(pqEncode(embeddings, books0, idCol, vecCol))
+      .mode("overwrite").parquet(s"$storageDir/codes")
+    LocalFs.write(books0.zipWithIndex.flatMap { case (book, s) =>
       book.zipWithIndex.map { case (c, cid) => (s, cid, c.toSeq) }
-    }.toSeq.toDF("sub", "cid", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$storageDir/books")
+    }.toSeq.toDF("sub", "cid", "centroid").coalesce(1))
+      .mode("overwrite").parquet(s"$storageDir/books")
   }
 
   /** Query half of [[annPqStored]] — answers from the persisted store

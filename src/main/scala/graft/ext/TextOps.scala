@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs
 
 /** Text analysis for training-data pipelines: language ID, quality scoring,
   * token counting, document fingerprinting. All pure Column expressions
@@ -645,12 +646,13 @@ object TextOps {
                      textCol: String = "text"): Unit = {
     val toks = filter(tokens(col(textCol)), t => length(t) > 0)
     val base = docs.select(col("doc_id"), toks.as("ts"))
-    base.select(col("doc_id"), explode(col("ts")).as("term"))
+    LocalFs.write(base.select(col("doc_id"), explode(col("ts")).as("term"))
       .groupBy("term", "doc_id")
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .write.mode("overwrite").parquet(s"$dir/postings")
-    base.select(col("doc_id"), size(col("ts")).cast("double").as("dl"))
-      .write.mode("overwrite").parquet(s"$dir/doclens")
+      .agg(count(lit(1)).cast("double").as("tf")))
+      .mode("overwrite").parquet(s"$dir/postings")
+    LocalFs.write(
+      base.select(col("doc_id"), size(col("ts")).cast("double").as("dl")))
+      .mode("overwrite").parquet(s"$dir/doclens")
   }
 
   /** BM25 retrieval FROM STORAGE — answers the query from the persisted
@@ -1921,10 +1923,10 @@ object TextOps {
     def buckets(d: DataFrame) = dsirBuckets(d, dim, textCol, Seq.empty)
     val p = buckets(target).groupBy("b").agg(count(lit(1)).as("cp"))
     val q = buckets(raw).groupBy("b").agg(count(lit(1)).as("cq"))
-    p.join(q, Seq("b"), "full_outer")
+    LocalFs.write(p.join(q, Seq("b"), "full_outer")
       .select(col("b"), coalesce(col("cp"), lit(0L)).as("cp"),
-        coalesce(col("cq"), lit(0L)).as("cq"))
-      .write.mode("overwrite").parquet(s"$dir/buckets")
+        coalesce(col("cq"), lit(0L)).as("cq")))
+      .mode("overwrite").parquet(s"$dir/buckets")
   }
 
   /** Score documents against the STORED DSIR model — the same

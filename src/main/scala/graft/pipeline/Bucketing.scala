@@ -11,7 +11,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * write time and amortized over every downstream run.
   *
   * Spark reads the bucket spec from the table catalog, which is why this
-  * goes through `saveAsTable` rather than a bare path write.
+  * goes through `saveAsTable` rather than a bare path write. It is also
+  * the one write that keeps the stock sink instead of
+  * [[graft.io.LocalFs.write]]: `saveAsTable` stores the writer's options
+  * in the catalog entry, where the file-system settings do not belong.
   */
 object Bucketing {
 

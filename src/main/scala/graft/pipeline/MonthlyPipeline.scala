@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs
 import graft.model.Schemas.BBox
 import graft.ops._
 
@@ -45,9 +46,11 @@ object MonthlyPipeline {
   }
 
   /** Gold sink S3-style: partitioned parquet layout
-    * (replaces the reference's exported_data/<date>/ directory scheme). */
+    * (replaces the reference's exported_data/<date>/ directory scheme).
+    * Written through [[graft.io.LocalFs]], so a local gold write sets its
+    * file and directory modes in process and forks no `chmod`. */
   def writePartitioned(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
+    LocalFs.write(df).mode(SaveMode.Overwrite)
       .partitionBy("month", "band")
       .parquet(path)
 
@@ -61,9 +64,8 @@ object MonthlyPipeline {
         .otherwise(lit("nan")).as("mean"))
 
   def writeCsv(composite: DataFrame, path: String): Unit =
-    csvPixelTable(composite)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).option("header", true).csv(path)
+    LocalFs.write(csvPixelTable(composite).coalesce(1))
+      .mode(SaveMode.Overwrite).option("header", true).csv(path)
 
   /** S5 read side — parse a (lat,lon,mean) CSV pixel table back into
     * typed rows (schema pinned, no inference pass; the reference writes

@@ -252,7 +252,7 @@ object Arpa {
         Files.getLastModifiedTime(Paths.get(path))
           .compareTo(Files.getLastModifiedTime(marker)) > 0
       if (stale || !Files.exists(marker)) {
-        spark.read.text(path)
+        graft.io.LocalFs.write(spark.read.text(path)
           .filter(col("value").contains("\t"))
           .select(split(col("value"), "\t").as("f"))
           .select(
@@ -260,8 +260,8 @@ object Arpa {
             get(col("f"), lit(0)).cast("double").as("lp"),
             coalesce(get(col("f"), lit(2)).cast("double"), lit(0.0))
               .as("bow"),
-            size(split(get(col("f"), lit(1)), " ")).as("k"))
-          .write.mode("overwrite").partitionBy("k").parquet(sidecar)
+            size(split(get(col("f"), lit(1)), " ")).as("k")))
+          .mode("overwrite").partitionBy("k").parquet(sidecar)
       }
     }
     spark.read.parquet(sidecar)

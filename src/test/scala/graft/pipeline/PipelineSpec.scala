@@ -82,6 +82,13 @@ class PipelineSpec extends AnyFunSuite {
     // partition directories exist → pruning layout in place
     val dirs = new java.io.File(s"$tmp/composite").listFiles().map(_.getName)
     assert(dirs.exists(_.startsWith("month=2025-08-01")))
+    // one parquet file per (month, band) directory
+    val leaves = new java.io.File(s"$tmp/composite").listFiles()
+      .filter(_.isDirectory).flatMap(_.listFiles().filter(_.isDirectory))
+    assert(leaves.nonEmpty)
+    leaves.foreach { d =>
+      assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d.toString)
+    }
     val back = spark.read.parquet(s"$tmp/composite")
     assert(back.count() == 16)
     val m = MonthlyPipeline.manifest(back).collect()
