@@ -237,15 +237,20 @@ object Bench {
         detail.replaceFirst("\"diag\":\"bench_detail\",",
           s""""sf":"$sfDir","total_min":${fmt(total, 3)},""") + "\n")
       catch { case _: Throwable => () } // read-only cwd: detail stays on stdout
-    def canonical(dp: Int, names: Set[String]): String =
-      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":${qLine(dp, names)},"n_queries":${results.size},"n_errors":${errors.size},"n_contended":$nContended,"run_contended":${if (runContended) 1 else 0},"sf":"$sfDir"}"""
+    def canonical(dp: Int, names: Set[String]): String = {
+      // how many suite queries the budget left off the "queries" map
+      val nCut = results.size - names.size
+      val belowCut = if (nCut > 0) s""","n_below_cut":$nCut""" else ""
+      s"""{"metric":"total","value":${fmt(total, 3)},"unit":"sec","queries":${qLine(dp, names)},"n_queries":${results.size}$belowCut,"n_errors":${errors.size},"n_contended":$nContended,"run_contended":${if (runContended) 1 else 0},"sf":"$sfDir"}"""
+    }
     // The canonical line must survive the driver's ~2000-char stdout tail
     // (minus sbt's trailing "[success] …" line): degrade per-query
     // precision 2dp → 1dp first; if the suite has outgrown even that,
     // keep the MOST EXPENSIVE queries at 2dp and drop cheap ones from the
     // line (never below 10 ms resolution — an all-"0" integer map carries
-    // no information). "value" stays the full-suite total either way;
-    // BENCH_DETAIL.json / the diag line carry every query regardless.
+    // no information) and say how many with "n_below_cut". "value" stays
+    // the full-suite total either way; BENCH_DETAIL.json / the diag line
+    // carry every query regardless.
     val all = results.map(_._1).toSet
     val byCost = results.sortBy { case (_, mn, _, _) => -mn }.map(_._1)
     val budget = 1800

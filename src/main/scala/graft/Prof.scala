@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Scratch profiler for optimization rounds: runs named queries twice
@@ -51,12 +52,14 @@ object Prof {
         sys.error(s"unknown query: $name"))
       for (run <- 1 to 2) {
         System.gc()
+        // listener events are async: drain the bus before resetting so
+        // no earlier job lands in this run, and again before reading
+        ListenerBusDrain(spark.sparkContext)
         jobs = 0; jobMs = 0; stages = 0; tasks = 0; taskMs = 0
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are async; give the bus a moment to drain
-        Thread.sleep(300)
+        ListenerBusDrain(spark.sparkContext)
         println(f"[prof] $name run$run wall=$wall%.3f jobs=$jobs " +
           f"jobWall=${jobMs / 1e3}%.3f stages=$stages tasks=$tasks " +
           f"taskTime=${taskMs / 1e3}%.3f planGap=${wall - jobMs / 1e3}%.3f")

@@ -101,6 +101,89 @@ object SparkEntry {
       Seq(avgD(col("value")).as("mean_value"), count(lit(1)).as("n")))
   }
 
+  /** The crawl tier's URL fixture: every document's synthetic URL
+    * (urlSqlExpr, shared with the oracles) and its registered domain.
+    * The coalesce makes the domain NON-NULLABLE: without it a join on
+    * it adds isnotnull(domain) and pushes a predicate inlining the
+    * whole url→host→domain chain (67 KB of expression) below the
+    * projections on BOTH sides — x107 measured 3 s of interpreted
+    * filtering for a 0.2 s query. The '' branch never fires (the
+    * fixture host is never null). */
+  private def docUrls(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents")
+      .withColumn("url", expr(urlSqlExpr))
+      .withColumn("domain", coalesce(
+        ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
+        lit("")))
+
+  /** x116/x120 crawl state `(doc_id, domain, norm, lastmod,
+    * crawled_at)`, materialized ONCE, deliberately: both queries fan
+    * the url→domain/norm chain into four or five consumers (even
+    * listing, phantom domains, shard grouping, crawl state, robots
+    * domains, schedule join); left inline, every branch carries its
+    * own copy of the ~67 KB expression tree and whole-stage codegen
+    * JIT-compiles each copy (measured: ~11 s of Janino per action at
+    * sf0.1 vs ~1.6 s of actual execution). At the 100 TB design point
+    * the same narrow projection would be recomputed statelessly (the
+    * x114b shape — per-row cost is trivial); at fixture scale the
+    * compile cost dominates, so one bounded checkpoint is the honest
+    * trade. */
+  private def recrawlUrls(s: SparkSession, d: String): DataFrame =
+    docUrls(s, d)
+      .withColumn("norm", coalesce(
+        ext.UrlOps.normalizeUrl(col("url")), lit("")))
+      .withColumn("lastmod", date_add(to_date(lit("2026-01-01")),
+        (col("doc_id") % 90).cast("int")))
+      .withColumn("crawled_at", date_add(to_date(lit("2026-01-15")),
+        (col("doc_id") % 30).cast("int")))
+      .select("doc_id", "domain", "norm", "lastmod", "crawled_at")
+      .localCheckpoint()
+
+  /** x116/x120 sitemap entries `(domain, u, lastmod)` over
+    * [[recrawlUrls]]: the even-id slice (max lastmod per URL) plus
+    * three phantom /extra pages per domain. */
+  private def sitemapEntries(urls: DataFrame): DataFrame =
+    urls.filter(col("doc_id") % 2 === 0)
+      .groupBy("domain", "norm").agg(max("lastmod").as("lastmod"))
+      .select(col("domain"), col("norm").as("u"), col("lastmod"))
+      .unionByName(urls.select("domain").distinct()
+        .select(col("domain"),
+          explode(sequence(lit(0), lit(2))).as("k"))
+        .select(col("domain"),
+          concat(lit("https://"), col("domain"), lit("/extra/"),
+            col("k").cast("string")).as("u"),
+          date_add(to_date(lit("2026-03-01")), col("k").cast("int"))
+            .as("lastmod")))
+
+  /** x116/x120 last crawl per URL `(domain, u, crawled_at)` over
+    * [[recrawlUrls]]. */
+  private def crawledAt(urls: DataFrame): DataFrame =
+    urls.groupBy("domain", "norm")
+      .agg(max("crawled_at").as("crawled_at"))
+      .select(col("domain"), col("norm").as("u"), col("crawled_at"))
+
+  /** x109's robots rules for path `/src{i}` on a domain of length
+    * `ld`, keyed on (i + ld) so domains publish different rules: a
+    * Disallow, an Allow that arrives in RFC 9309's tolerated messy
+    * forms on a deterministic subset (mixed-case directive,
+    * extra/trailing whitespace — same parsed rule table), and a legal
+    * ':'-bearing Disallow plus a trailing comment (the first-colon
+    * split target). Each is a one- or zero-line array. */
+  private def srcRobotsRules(i: Column, ld: Column): Seq[Column] = Seq(
+    when(((i + ld) % 3) === 0,
+      array(concat(lit("Disallow: /src"), i.cast("string"))))
+      .otherwise(array().cast("array<string>")),
+    when(((i + ld) % 2) === 0,
+      array(when(((i + ld) % 4) === 0,
+        concat(lit("aLLoW:   /src"), i.cast("string"), lit("/Page  ")))
+        .otherwise(concat(lit("Allow: /src"), i.cast("string"),
+          lit("/Page")))))
+      .otherwise(array().cast("array<string>")),
+    when(((i + ld) % 5) === 1,
+      array(concat(lit("disallow: /src"), i.cast("string"),
+        lit("/Page/c:0 # colon-bearing path"))))
+      .otherwise(array().cast("array<string>")))
+
   /** x114/x114b shared body — the CRAWL FRONTIER product composing the
     * whole crawl tier: sitemap-listed URLs (x111's listing) minus the
     * crawled set, gated by robots rules that also govern the /extra
@@ -122,11 +205,7 @@ object SparkEntry {
     * isnotnull(<67 KB expression>) below the projections. */
   private def crawlFrontier(s: SparkSession, d: String,
                             stateless: Boolean): DataFrame = {
-    val urls0 = t(s, d, "documents")
-      .withColumn("url", expr(urlSqlExpr))
-      .withColumn("domain", coalesce(
-        ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-        lit("")))
+    val urls0 = docUrls(s, d)
       .withColumn("norm", coalesce(
         ext.UrlOps.normalizeUrl(col("url")), lit("")))
       .select("doc_id", "domain", "norm")
@@ -158,21 +237,7 @@ object SparkEntry {
     val ld = length(col("domain"))
     val lines = concat(
       flatten(transform(sequence(lit(0), lit(9)), i =>
-        concat(
-          when(((i + ld) % 3) === 0,
-            array(concat(lit("Disallow: /src"), i.cast("string"))))
-            .otherwise(array().cast("array<string>")),
-          when(((i + ld) % 2) === 0,
-            array(when(((i + ld) % 4) === 0,
-              concat(lit("aLLoW:   /src"), i.cast("string"),
-                lit("/Page  ")))
-              .otherwise(concat(lit("Allow: /src"), i.cast("string"),
-                lit("/Page")))))
-            .otherwise(array().cast("array<string>")),
-          when(((i + ld) % 5) === 1,
-            array(concat(lit("disallow: /src"), i.cast("string"),
-              lit("/Page/c:0 # colon-bearing path"))))
-            .otherwise(array().cast("array<string>"))))),
+        concat(srcRobotsRules(i, ld): _*))),
       flatten(transform(phantoms, k =>
         when(((k + ld) % 2) === 0,
           array(concat(lit("Disallow: /extra/"), k.cast("string"))))
@@ -201,42 +266,9 @@ object SparkEntry {
     * (index -> shards -> entries -> reconcile -> rank). */
   private def recrawlQuery(s: SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
-      // materialized ONCE, deliberately: this query fans the
-      // url→domain/norm chain into FIVE consumers (even-listing,
-      // phantom domains, shard grouping, crawl state, schedule join);
-      // left inline, every branch carries its own copy of the ~67 KB
-      // expression tree and whole-stage codegen JIT-compiles each copy
-      // (measured: ~11 s of Janino per action at sf0.1 vs ~1.6 s of
-      // actual execution). At the 100 TB design point the same narrow
-      // projection would be recomputed statelessly (the x114b shape —
-      // per-row cost is trivial); at fixture scale the compile cost
-      // dominates, so one bounded checkpoint is the honest trade.
-      val urls = t(s, d, "documents")
-        .withColumn("url", expr(urlSqlExpr))
-        .withColumn("domain", coalesce(
-          ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-          lit("")))
-        .withColumn("norm", coalesce(
-          ext.UrlOps.normalizeUrl(col("url")), lit("")))
-        .withColumn("lastmod", date_add(to_date(lit("2026-01-01")),
-          (col("doc_id") % 90).cast("int")))
-        .withColumn("crawled_at", date_add(to_date(lit("2026-01-15")),
-          (col("doc_id") % 30).cast("int")))
-        .select("doc_id", "domain", "norm", "lastmod", "crawled_at")
-        .localCheckpoint()
-      // sitemap entries: the even-id slice (max lastmod per URL) plus
-      // three phantom /extra pages; shards assigned by length(u) % 2
-      val entries = urls.filter(col("doc_id") % 2 === 0)
-        .groupBy("domain", "norm").agg(max("lastmod").as("lastmod"))
-        .select(col("domain"), col("norm").as("u"), col("lastmod"))
-        .unionByName(urls.select("domain").distinct()
-          .select(col("domain"),
-            explode(sequence(lit(0), lit(2))).as("k"))
-          .select(col("domain"),
-            concat(lit("https://"), col("domain"), lit("/extra/"),
-              col("k").cast("string")).as("u"),
-            date_add(to_date(lit("2026-03-01")), col("k").cast("int"))
-              .as("lastmod")))
+      val urls = recrawlUrls(s, d)
+      // shards assigned by length(u) % 2
+      val entries = sitemapEntries(urls)
         .withColumn("shard", pmod(length(col("u")), lit(2)))
         .withColumn("shard_url", concat(lit("https://"), col("domain"),
           lit("/sitemap-"), col("shard").cast("string"), lit(".xml")))
@@ -280,93 +312,133 @@ object SparkEntry {
             .otherwise(lit("User-agent: *")))
       val gated = ext.UrlOps.robotsAllowedOnly(listed,
         ext.UrlOps.parseRobots(robots), urlCol = "u")
-      val crawled = urls.groupBy("domain", "norm")
-        .agg(max("crawled_at").as("crawled_at"))
-        .select(col("domain"), col("norm").as("u"), col("crawled_at"))
-      ext.UrlOps.recrawlSchedule(gated, crawled)
+      ext.UrlOps.recrawlSchedule(gated, crawledAt(urls))
   }
 
   // ---------------------------------------------------------------- queries
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One registered query: its name, its Spark body and its DuckDB
+    * oracle SQL. The oracle stays unevaluated until [[oracleSql]] is
+    * read, so building [[queries]] builds no oracle text. */
+  private[graft] final class QuerySpec(val name: String,
+      val body: (SparkSession, String) => DataFrame, val oracle: () => String)
+
+  private def query(name: String, body: (SparkSession, String) => DataFrame,
+                    oracle: => String): QuerySpec =
+    new QuerySpec(name, body, () => oracle)
+
+  /** Every query, registered once: the body with its oracle written
+    * directly under it. `lazy` because bodies and oracles read vals
+    * declared further down the object. */
+  private[graft] lazy val registry: Seq[QuerySpec] = Seq(
     // ---- §2.1 scans
-    "s1_scan_project" -> ((s, d) =>
+    query("s1_scan_project", ((s, d) =>
       t(s, d, "lineitem")
         .filter(col("l_orderkey") < 1000)
         .select("l_orderkey", "l_linenumber", "l_extendedprice")),
+      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
+         WHERE l_orderkey < 1000"""),
 
-    "s9_partition_index" -> ((s, d) =>
+    query("s9_partition_index", ((s, d) =>
       t(s, d, "orders")
         .select(Windows.monthOf(col("o_orderdate")).cast("date").as("month"))
         .distinct().orderBy("month")),
+      """SELECT DISTINCT CAST(date_trunc('month', o_orderdate) AS DATE) AS month
+         FROM orders ORDER BY month"""),
 
     // ---- §2.2 filters / predicates
-    "p1_band_select" -> ((s, d) =>
+    query("p1_band_select", ((s, d) =>
       Filters.bandSelect(
           Tables.events(s, d).withColumnRenamed("event_type", "band"),
           "signup")
         .select(col("event_id"), col("band"), col("value"))),
+      """SELECT event_id, event_type AS band, value FROM events
+         WHERE event_type = 'signup'"""),
 
-    "p2_eq_chain" -> ((s, d) =>
+    query("p2_eq_chain", ((s, d) =>
       Filters.eqAll(t(s, d, "customer"),
           "c_mktsegment" -> "BUILDING", "c_nationkey" -> 5)
         .select("c_custkey", "c_name", "c_acctbal")),
+      """SELECT c_custkey, c_name, c_acctbal FROM customer
+         WHERE c_mktsegment = 'BUILDING' AND c_nationkey = 5"""),
 
-    "p3_inlist" -> ((s, d) =>
+    query("p3_inlist", ((s, d) =>
       Filters.inList(t(s, d, "part"), "p_brand", Seq("Brand#1", "Brand#12"))
         .select("p_partkey", "p_brand", "p_retailprice")),
+      """SELECT p_partkey, p_brand, p_retailprice FROM part
+         WHERE p_brand IN ('Brand#1', 'Brand#12')"""),
 
-    "p4_daterange" -> ((s, d) =>
+    query("p4_daterange", ((s, d) =>
       Filters.dateRange(t(s, d, "orders"), "o_orderdate",
           "1996-01-01", "1997-01-01")
         .select("o_orderkey", "o_custkey", "o_totalprice")),
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+         WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'"""),
 
-    "p5_bbox" -> ((s, d) =>
+    query("p5_bbox", ((s, d) =>
       Filters.filterBounds(
           Tables.events(s, d).withColumnRenamed("value", "lon")
             .withColumn("lat", col("user_id").cast("double")),
           BBox(10.0, 100.0, 200.0, 500.0))
         .select(col("event_id"), col("lon").as("value"), col("lat").as("uid"))),
+      """SELECT event_id, value, CAST(user_id AS DOUBLE) AS uid FROM events
+         WHERE value BETWEEN 10.0 AND 200.0 AND user_id BETWEEN 100 AND 500"""),
 
-    "p6_clip_mask" -> ((s, d) =>
+    query("p6_clip_mask", ((s, d) =>
       Filters.clipMask(
           Tables.events(s, d).select(col("event_id"), col("event_type"), col("value")),
           col("event_type") === "click" && col("value") > 100.0)
         .select("event_id", "value")),
+      """SELECT event_id,
+                CASE WHEN event_type = 'click' AND value > 100.0 THEN value END AS value
+         FROM events"""),
 
-    "p8_date_lookup" -> ((s, d) =>
+    query("p8_date_lookup", ((s, d) =>
       Filters.dateLookup(
           t(s, d, "lineitem").withColumn("ship_day", to_date(col("l_shipdate"))),
           "ship_day", "1997-03-15")
         .select("l_orderkey", "l_linenumber", "l_quantity")),
+      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+         WHERE CAST(l_shipdate AS DATE) = DATE '1997-03-15'"""),
 
-    "p9_positive_count" -> ((s, d) =>
+    query("p9_positive_count", ((s, d) =>
       Tables.events(s, d).filter(Filters.positive("value") && col("value") > 50.0)
         .groupBy("event_type").agg(count(lit(1)).as("n"))),
+      """SELECT event_type, COUNT(*) AS n FROM events
+         WHERE value > 0.0 AND value > 50.0 GROUP BY event_type"""),
 
     // ---- §2.4 aggregations
-    "a1_mean_composite" -> ((s, d) =>
+    query("a1_mean_composite", ((s, d) =>
       t(s, d, "lineitem").groupBy("l_returnflag", "l_linestatus").agg(
         avgD(col("l_quantity")).as("avg_qty"),
         sumD(col("l_extendedprice"), 2).as("sum_price"),
         count(lit(1)).as("n"))),
+      s"""SELECT l_returnflag, l_linestatus,
+                 ${avgSql("l_quantity")} AS avg_qty,
+                 ${sumSql("l_extendedprice", 2)} AS sum_price,
+                 COUNT(*) AS n
+          FROM lineitem GROUP BY l_returnflag, l_linestatus"""),
 
-    "a2_max_composite" -> ((s, d) =>
+    query("a2_max_composite", ((s, d) =>
       Tables.events(s, d).groupBy("user_id").agg(
         max("value").as("max_value"), min("value").as("min_value"))),
+      """SELECT user_id, MAX(value) AS max_value, MIN(value) AS min_value
+         FROM events GROUP BY user_id"""),
 
-    "a3_count" -> ((s, d) =>
+    query("a3_count", ((s, d) =>
       Composites.collectionSize(t(s, d, "orders"), Seq("o_custkey"))),
+      """SELECT COUNT(*) AS n_rows, COUNT(DISTINCT o_custkey) AS n_images FROM orders"""),
 
-    "a5_minmax" -> ((s, d) =>
+    query("a5_minmax", ((s, d) =>
       Composites.globalMinMax(Tables.events(s, d))),
+      """SELECT MIN(value) AS min_value, MAX(value) AS max_value FROM events"""),
 
     // a9 — ROLLUP subtotal hierarchy (extension; §2.4 notes the reference
     // has no grouping sets): per-(priority, month) totals, per-priority
     // subtotals, and the grand total in one pass. grouping_id
     // disambiguates subtotal rows from genuine nulls; decimal-routed sums
     // keep every tier order-independent.
-    "a9_rollup" -> ((s, d) =>
+    query("a9_rollup", ((s, d) =>
       t(s, d, "orders")
         .withColumn("month",
           Windows.monthOf(col("o_orderdate")).cast("date"))
@@ -374,85 +446,141 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
              sumD(col("o_totalprice")).as("total"),
              grouping_id().as("gid"))),
+      // a9 — DuckDB ROLLUP with the same GROUPING bitmask convention
+      s"""WITH m AS (
+            SELECT o_orderpriority,
+                   CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+                   o_totalprice
+            FROM orders)
+          SELECT o_orderpriority, month, COUNT(*) AS n,
+                 ${sumSql("o_totalprice")} AS total,
+                 CAST(GROUPING(o_orderpriority, month) AS BIGINT) AS gid
+          FROM m GROUP BY ROLLUP(o_orderpriority, month)"""),
 
-    "a6_grid_resample" -> ((s, d) =>
+    query("a6_grid_resample", ((s, d) =>
       Tables.events(s, d).groupBy(floor(col("value") / 0.5).as("cell")).agg(
         avgD(col("value")).as("mean_value"),
         count(col("value")).as("n_px"))),
+      s"""SELECT CAST(FLOOR(value / 0.5) AS BIGINT) AS cell,
+                 ${avgSql("value")} AS mean_value,
+                 COUNT(value) AS n_px
+          FROM events GROUP BY 1"""),
 
-    "a7_bbox_union" -> ((s, d) =>
+    query("a7_bbox_union", ((s, d) =>
       Composites.bboxUnion(
         t(s, d, "lineitem").select(col("l_quantity").as("lon"),
                                    col("l_extendedprice").as("lat")))),
+      """SELECT MIN(l_quantity) AS min_lon, MIN(l_extendedprice) AS min_lat,
+                MAX(l_quantity) AS max_lon, MAX(l_extendedprice) AS max_lat
+         FROM lineitem"""),
 
     // ---- §2.5 windows
-    "w1_minmax_norm" -> ((s, d) =>
+    query("w1_minmax_norm", ((s, d) =>
       t(s, d, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"),
         Normalize.minMaxNorm("l_quantity", "l_returnflag").as("norm"))),
+      """SELECT l_orderkey, l_linenumber,
+                (l_quantity - MIN(l_quantity) OVER w)
+                / (MAX(l_quantity) OVER w - MIN(l_quantity) OVER w + 1e-6) AS norm
+         FROM lineitem WINDOW w AS (PARTITION BY l_returnflag)"""),
 
-    "w2_zero_preserving" -> ((s, d) =>
+    query("w2_zero_preserving", ((s, d) =>
       Tables.events(s, d).select(
         col("event_id"),
         Normalize.zeroPreservingNorm("value", "event_type").as("norm"))),
+      """SELECT event_id,
+                CASE WHEN value > 0 THEN
+                  (value - MIN(CASE WHEN value > 0 THEN value END) OVER w)
+                  / (MAX(CASE WHEN value > 0 THEN value END) OVER w
+                     - MIN(CASE WHEN value > 0 THEN value END) OVER w + 1e-6)
+                ELSE 0.0 END AS norm
+         FROM events WINDOW w AS (PARTITION BY event_type)"""),
 
     // ---- §2.8 scalars
-    "f1_nanfill" -> ((s, d) =>
+    query("f1_nanfill", ((s, d) =>
       Tables.events(s, d).select(
         col("event_id"), Normalize.nanFill(col("value")).as("v"))),
+      """SELECT event_id, COALESCE(value, 0.0) AS v FROM events"""),
 
-    "f3_severity" -> ((s, d) =>
+    query("f3_severity", ((s, d) =>
       Tables.events(s, d)
         .withColumn("severity", Buckets.severity(col("value"), lit(100.0)))
         .groupBy("severity").agg(count(lit(1)).as("n"))),
+      """SELECT CASE WHEN value < 100.0 THEN 'none'
+                     WHEN value < 150.0 THEN 'low'
+                     WHEN value < 200.0 THEN 'mid'
+                     ELSE 'high' END AS severity, COUNT(*) AS n
+         FROM events GROUP BY 1"""),
 
-    "f6_quantize" -> ((s, d) =>
+    query("f6_quantize", ((s, d) =>
       Tables.events(s, d).select(
         col("event_id"),
         Normalize.quantize255(
           Normalize.minMaxNorm("value", "event_type")).as("q"))),
+      """SELECT event_id,
+                LEAST(GREATEST(CAST(TRUNC(
+                  (value - MIN(value) OVER w)
+                  / (MAX(value) OVER w - MIN(value) OVER w + 1e-6) * 255.0
+                ) AS INTEGER), 0), 255) AS q
+         FROM events WINDOW w AS (PARTITION BY event_type)"""),
 
-    "f9_date_format" -> ((s, d) =>
+    query("f9_date_format", ((s, d) =>
       t(s, d, "orders").select(
         col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("ds"))),
+      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS ds FROM orders"""),
 
-    "f10_month_arith" -> ((s, d) =>
+    query("f10_month_arith", ((s, d) =>
       t(s, d, "orders").select(
           Windows.monthOf(col("o_orderdate")).cast("date").as("month_start"),
           Windows.monthEnd(col("o_orderdate")).as("month_end"))
         .distinct()),
+      """SELECT DISTINCT CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
+                last_day(CAST(o_orderdate AS DATE)) AS month_end
+         FROM orders"""),
 
-    "f11_concat" -> ((s, d) =>
+    query("f11_concat", ((s, d) =>
       t(s, d, "lineitem")
         .groupBy(concat_ws("_", col("l_returnflag"), col("l_linestatus")).as("key"))
         .agg(count(lit(1)).as("n"))),
+      """SELECT l_returnflag || '_' || l_linestatus AS key, COUNT(*) AS n
+         FROM lineitem GROUP BY 1"""),
 
-    "f12_upper" -> ((s, d) =>
+    query("f12_upper", ((s, d) =>
       t(s, d, "customer").select(upper(col("c_mktsegment")).as("seg")).distinct()),
+      """SELECT DISTINCT UPPER(c_mktsegment) AS seg FROM customer"""),
 
-    "f14_json" -> ((s, d) =>
+    query("f14_json", ((s, d) =>
       Tables.events(s, d).select(
         col("event_id"),
         get_json_object(col("props"), "$.k").cast("int").as("k"))),
+      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
+         FROM events"""),
 
-    "f15_eps_div" -> ((s, d) =>
+    query("f15_eps_div", ((s, d) =>
       t(s, d, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"),
         Normalize.guardedDiv(col("l_extendedprice"), col("l_quantity")).as("r"))),
+      """SELECT l_orderkey, l_linenumber,
+                l_extendedprice / (l_quantity + 1e-6) AS r FROM lineitem"""),
 
     // F4 — conditional recolor: fire pixels (value>0 after thresholding)
     // dark red w/ alpha, background transparent
-    "f4_recolor" -> ((s, d) =>
+    query("f4_recolor", ((s, d) =>
       Tables.events(s, d)
         .withColumn("fire", when(col("value") > 400.0, col("value") - 400.0)
                               .otherwise(lit(0.0)))
         .withColumn("rgba", Buckets.fireRgba(col("fire")))
         .select(col("event_id"), col("rgba.r").as("r"), col("rgba.g").as("g"),
                 col("rgba.b").as("b"), col("rgba.a").as("a"))),
+      """SELECT event_id,
+                CASE WHEN value > 400.0 THEN 139 ELSE 0 END AS r,
+                0 AS g, 0 AS b,
+                CASE WHEN value > 400.0 THEN 255 ELSE 0 END AS a
+         FROM events"""),
 
     // F5 — colormap LUT application via element_at over a literal array
-    "f5_colormap" -> ((s, d) => {
+    query("f5_colormap", ((s, d) => {
       val lutR = Render.jetLut.map(_._1)
       Tables.events(s, d).select(
         col("event_id"),
@@ -461,17 +589,31 @@ object SparkEntry {
           Render.cmapIndex(
             Normalize.minMaxNorm("value", "event_type")) + 1).as("red"))
     }),
+    {
+      val lutR = graft.ops.Render.jetLut.map(_._1).mkString("[", ", ", "]")
+      s"""SELECT event_id,
+                 ($lutR)[LEAST(GREATEST(CAST(TRUNC(
+                   (value - MIN(value) OVER w)
+                   / (MAX(value) OVER w - MIN(value) OVER w + 1e-6) * 256.0
+                 ) AS INTEGER), 0), 255) + 1] AS red
+          FROM events WINDOW w AS (PARTITION BY event_type)"""
+    }),
 
     // F7 — Web-Mercator → EPSG:4326 (closed-form; rounded for libm parity)
-    "f7_mercator" -> ((s, d) =>
+    query("f7_mercator", ((s, d) =>
       Tables.events(s, d).select(
         col("event_id"),
         round(GeoFns.mercatorToLon(col("value") * 10000.0), 9).as("lon"),
         round(GeoFns.mercatorToLat(col("value") * 10000.0), 9).as("lat"))),
+      """SELECT event_id,
+                round((value * 10000.0) / 6378137.0 * (180.0 / pi()), 9) AS lon,
+                round((atan(exp((value * 10000.0) / 6378137.0)) * 2.0 - pi() / 2.0)
+                      * (180.0 / pi()), 9) AS lat
+         FROM events"""),
 
     // F7 (UTM case) — full Krüger-series reprojection of a synthetic UTM
     // pixel grid to EPSG:4326 (oracle: the series mirrored in SQL)
-    "f7_utm_reproject" -> ((s, _) => {
+    query("f7_utm_reproject", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "utm43", 1000.0, 0.0, 400000.0, 0.0, -1000.0, 3500000.0,
         "EPSG:32643", width = 50, height = 50, nodata = None, scaleM = 1000))
@@ -480,13 +622,15 @@ object SparkEntry {
         .select(col("y"), col("x"), round(col("ll._1"), 9).as("lat"),
                 round(col("ll._2"), 9).as("lon"))
     }),
+      // F7 UTM — full inverse Krüger series mirrored in SQL (see utmOracleSql)
+      utmOracleSql),
 
     // F7 (parameterized TM case) — British National Grid (EPSG:27700,
     // Airy 1830, k0 = 0.9996012717, origin 49°N 2°W, FN −100000) pixel
     // grid → EPSG:4326 via the generalized Krüger inverse with the
     // rectified-origin offset ξ0 (oracle: the same series + Newton loop
     // with every constant pasted, the f7_utm technique)
-    "f7_tmerc_reproject" -> ((s, _) => {
+    query("f7_tmerc_reproject", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "osgb", 1000.0, 0.0, 300000.0, 0.0, -1000.0, 500000.0,
         "EPSG:27700", width = 50, height = 50, nodata = None, scaleM = 1000))
@@ -496,6 +640,9 @@ object SparkEntry {
         .select(col("y"), col("x"), round(col("ll._1"), 9).as("lat"),
                 round(col("ll._2"), 9).as("lon"))
     }),
+      // F7 parameterized TM — the same series for EPSG:27700 with the
+      // rectified-origin offset (see tmercOracleSql)
+      tmercOracleSql),
 
     // F7 (datum case) — the f7_tmerc grid carried all the way to
     // WGS84: Krüger inverse to native OSGB36, then the EPSG:1314
@@ -503,7 +650,7 @@ object SparkEntry {
     // datum skew a geotagged join against a BNG raster must apply
     // (oracle: the shared Krüger chain + the Helmert replayed term
     // for term, helmertOracleSql).
-    "f7_osgb_datum" -> ((s, _) => {
+    query("f7_osgb_datum", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "osgb", 1000.0, 0.0, 300000.0, 0.0, -1000.0, 500000.0,
         "EPSG:27700", width = 50, height = 50, nodata = None, scaleM = 1000))
@@ -513,11 +660,12 @@ object SparkEntry {
         .select(col("y"), col("x"), round(col("ll._2"), 9).as("lat"),
                 round(col("ll._1"), 9).as("lon"))
     }),
+      helmertOracleSql),
 
     // F7 (conic case) — Lambert-93 (EPSG:2154) pixel grid → EPSG:4326 via
     // the LCC closed-form inverse (oracle: the same closed form + the
     // fixed-point latitude iteration mirrored in SQL, lccOracleSql)
-    "f7_lcc_reproject" -> ((s, _) => {
+    query("f7_lcc_reproject", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "lcc93", 1000.0, 0.0, 600000.0, 0.0, -1000.0, 6700000.0,
         "EPSG:2154", width = 50, height = 50, nodata = None, scaleM = 1000))
@@ -530,11 +678,13 @@ object SparkEntry {
         .select(col("y"), col("x"), round(col("ll._2"), 9).as("lat"),
                 round(col("ll._1"), 9).as("lon"))
     }),
+      // F7 LCC — Lambert-93 closed-form inverse mirrored in SQL
+      lccOracleSql),
 
     // F7 (azimuthal case) — ETRS89-LAEA (EPSG:3035) pixel grid →
     // EPSG:4326 via the equal-area inverse (oracle: closed form + the
     // q fixed-point latitude iteration mirrored in SQL, laeaOracleSql)
-    "f7_laea_reproject" -> ((s, _) => {
+    query("f7_laea_reproject", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "laea35", 1000.0, 0.0, 4000000.0, 0.0, -1000.0, 3500000.0,
         "EPSG:3035", width = 50, height = 50, nodata = None, scaleM = 1000))
@@ -547,12 +697,14 @@ object SparkEntry {
         .select(col("y"), col("x"), round(col("ll._2"), 9).as("lat"),
                 round(col("ll._1"), 9).as("lon"))
     }),
+      // F7 LAEA — ETRS89-LAEA equal-area inverse mirrored in SQL
+      laeaOracleSql),
 
     // F7 (polar case) — NSIDC sea-ice north (EPSG:3413) pixel grid →
     // EPSG:4326 via the polar stereographic inverse; the grid sits
     // southwest of the pole so λ0 + θ crosses ±180° and exercises the
     // longitude wrap (oracle: psOracleSql)
-    "f7_ps_reproject" -> ((s, _) => {
+    query("f7_ps_reproject", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "ps3413", 1000.0, 0.0, -300000.0, 0.0, -1000.0, 300000.0,
         "EPSG:3413", width = 50, height = 50, nodata = None, scaleM = 1000))
@@ -565,11 +717,13 @@ object SparkEntry {
         .select(col("y"), col("x"), round(col("ll._2"), 9).as("lat"),
                 round(col("ll._1"), 9).as("lon"))
     }),
+      // F7 polar stereographic — EPSG:3413 inverse mirrored in SQL
+      psOracleSql),
 
     // F7 (pseudocylindrical case) — a MODIS-land-grid sinusoidal tile
     // (GCTP authalic sphere R = 6,371,007.181) → EPSG:4326 via the
     // two-multiply spherical inverse (oracle: sinuOracleSql)
-    "f7_sinu_reproject" -> ((s, _) => {
+    query("f7_sinu_reproject", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "sinu_modis", 1000.0, 0.0, 1000000.0, 0.0, -1000.0, 5000000.0,
         "GCTP:sinusoidal", width = 50, height = 50, nodata = None,
@@ -580,18 +734,38 @@ object SparkEntry {
         .select(col("y"), col("x"), round(col("ll._2"), 9).as("lat"),
                 round(col("ll._1"), 9).as("lon"))
     }),
+      // F7 sinusoidal — the MODIS-sphere inverse is two divisions and a
+      // cosine; same IEEE ops in both engines, no iteration needed
+      s"""WITH grid AS (
+           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                  1000000.0 + (CAST(x.range AS DOUBLE) + 0.5) * 1000.0 AS px,
+                  5000000.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-1000.0) AS py
+           FROM range(50) y, range(50) x),
+         inv AS (
+           SELECT y, x, py / 6371007.181 AS phi, px FROM grid)
+         SELECT y, x,
+                round(phi * 180.0 / pi(), 9) AS lat,
+                round((px / (6371007.181 * cos(phi))) * 180.0 / pi(), 9)
+                  AS lon
+         FROM inv"""),
 
     // F13 — query-string parse at the serving edge
-    "f13_qs_parse" -> ((s, d) =>
+    query("f13_qs_parse", ((s, d) =>
       Tables.events(s, d)
         .withColumn("qs", concat(lit("type="), col("event_type"),
                                  lit("&user="), col("user_id")))
         .select(col("event_id"),
           regexp_extract(col("qs"), "type=([^&]*)", 1).as("qs_type"),
           regexp_extract(col("qs"), "user=([^&]*)", 1).cast("long").as("qs_user"))),
+      """SELECT event_id,
+                regexp_extract('type=' || event_type || '&user=' || user_id,
+                               'type=([^&]*)', 1) AS qs_type,
+                CAST(regexp_extract('type=' || event_type || '&user=' || user_id,
+                                    'user=([^&]*)', 1) AS BIGINT) AS qs_user
+         FROM events"""),
 
     // ---- §2.3 joins
-    "j1_cell_join" -> ((s, d) => {
+    query("j1_cell_join", ((s, d) => {
       val ev = Tables.events(s, d)
       val cells = ev.groupBy(floor(col("value") / 50.0).as("cell"))
         .agg(count(lit(1)).as("cnt"))
@@ -599,42 +773,65 @@ object SparkEntry {
         .join(broadcast(cells), Seq("cell"))
         .select("event_id", "cell", "cnt")
     }),
+      """WITH cells AS (
+           SELECT CAST(FLOOR(value / 50.0) AS BIGINT) AS cell, COUNT(*) AS cnt
+           FROM events GROUP BY 1)
+         SELECT e.event_id, c.cell, c.cnt FROM events e
+         JOIN cells c ON CAST(FLOOR(e.value / 50.0) AS BIGINT) = c.cell"""),
 
-    "j2_semi" -> ((s, d) => {
+    query("j2_semi", ((s, d) => {
       val bld = Filters.eqAll(t(s, d, "customer"), "c_mktsegment" -> "BUILDING")
       t(s, d, "orders")
         .join(broadcast(bld), col("o_custkey") === col("c_custkey"), "left_semi")
         .select("o_orderkey", "o_totalprice")
     }),
+      """SELECT o_orderkey, o_totalprice FROM orders
+         WHERE o_custkey IN (SELECT c_custkey FROM customer
+                             WHERE c_mktsegment = 'BUILDING')"""),
 
-    "j3_broadcast_dim" -> ((s, d) =>
+    query("j3_broadcast_dim", ((s, d) =>
       t(s, d, "lineitem")
         .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
         .groupBy("p_brand")
         .agg(sumD(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4)
                .as("revenue"),
              count(lit(1)).as("n"))),
+      s"""SELECT p_brand,
+                 ${sumSql("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
+                 COUNT(*) AS n
+          FROM lineitem JOIN part ON l_partkey = p_partkey
+          GROUP BY p_brand"""),
 
-    "j4_pivot" -> ((s, d) =>
+    query("j4_pivot", ((s, d) =>
       t(s, d, "orders")
         .groupBy(Windows.monthOf(col("o_orderdate")).cast("date").as("month"))
         .pivot("o_orderpriority",
           Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
         .count().na.fill(0L)),
+      """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+                COUNT(*) FILTER (o_orderpriority = '1-URGENT') AS "1-URGENT",
+                COUNT(*) FILTER (o_orderpriority = '2-HIGH') AS "2-HIGH",
+                COUNT(*) FILTER (o_orderpriority = '3-MEDIUM') AS "3-MEDIUM",
+                COUNT(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS "4-NOT SPECIFIED",
+                COUNT(*) FILTER (o_orderpriority = '5-LOW') AS "5-LOW"
+         FROM orders GROUP BY 1"""),
 
     // ---- J6 anti join (completes the join family)
-    "j6_anti" -> ((s, d) => {
+    query("j6_anti", ((s, d) => {
       val bld = Filters.eqAll(t(s, d, "customer"), "c_mktsegment" -> "BUILDING")
       t(s, d, "orders")
         .join(broadcast(bld), col("o_custkey") === col("c_custkey"), "left_anti")
         .select("o_orderkey", "o_custkey")
     }),
+      """SELECT o_orderkey, o_custkey FROM orders
+         WHERE o_custkey NOT IN (SELECT c_custkey FROM customer
+                                 WHERE c_mktsegment = 'BUILDING')"""),
 
     // ---- J8 star join: fact table through a chain of three broadcast
     // dimensions (supplier → nation → region), partial+final decimal-
     // routed agg — the canonical warehouse shape; the 100 TB fact side
     // never shuffles until the final small group-by
-    "j8_star_join" -> ((s, d) => {
+    query("j8_star_join", ((s, d) => {
       val li = t(s, d, "lineitem").select(col("l_suppkey"), col("l_extendedprice"))
       val su = t(s, d, "supplier").select(col("s_suppkey"), col("s_nationkey"))
       val na = t(s, d, "nation")
@@ -647,11 +844,18 @@ object SparkEntry {
         .agg(Stable.sumD(col("l_extendedprice")).as("revenue"),
              count(lit(1)).as("n_items"))
     }),
+      s"""SELECT r_name, n_name, ${sumSql("l_extendedprice")} AS revenue,
+                 COUNT(*) AS n_items
+          FROM lineitem
+          JOIN supplier ON s_suppkey = l_suppkey
+          JOIN nation ON n_nationkey = s_nationkey
+          JOIN region ON r_regionkey = n_regionkey
+          GROUP BY 1, 2"""),
 
     // ---- J7 salted skew join (extension): result-identical to the plain
     // equi-join (the oracle IS the plain join) — only the partitioning
     // differs, so the oracle proves the rewrite loses/duplicates nothing
-    "j7_salted_join" -> ((s, d) => {
+    query("j7_salted_join", ((s, d) => {
       // salt on the full row identity (orderkey×8+linenumber): a
       // low-cardinality source like l_linenumber alone (7 values) could
       // not spread a hot key over all 8 subkeys
@@ -663,36 +867,49 @@ object SparkEntry {
       ops.Skew.saltedJoin(li, ord, "l_orderkey", "__rid", nSalt = 8)
         .select("l_orderkey", "l_linenumber", "l_quantity", "o_totalprice")
     }),
+      // J7 — the plain join: salting must be invisible in the result set
+      """SELECT l_orderkey, l_linenumber, l_quantity, o_totalprice
+         FROM lineitem JOIN orders ON o_orderkey = l_orderkey"""),
 
     // ---- §2.7 true set ops (beyond the reference's unions)
-    "u2_intersect" -> ((s, d) => {
+    query("u2_intersect", ((s, d) => {
       val ord = t(s, d, "orders")
       ord.filter(col("o_totalprice") > 100000.0).select("o_custkey")
         .intersect(ord.filter(col("o_orderpriority") === "1-URGENT")
           .select("o_custkey"))
     }),
+      """SELECT o_custkey FROM orders WHERE o_totalprice > 100000.0
+         INTERSECT
+         SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'"""),
 
-    "u3_except" -> ((s, d) => {
+    query("u3_except", ((s, d) => {
       val c = t(s, d, "customer")
       c.select("c_nationkey").distinct()
         .except(c.filter(col("c_custkey") % 100 === 7)
           .select("c_nationkey"))
     }),
+      """SELECT DISTINCT c_nationkey FROM customer
+         EXCEPT
+         SELECT c_nationkey FROM customer WHERE c_custkey % 100 = 7"""),
 
     // ---- §2.6 sorts / limits
-    "o1_sort_dates" -> ((s, d) =>
+    query("o1_sort_dates", ((s, d) =>
       t(s, d, "lineitem").select(to_date(col("l_shipdate")).as("day"))
         .distinct().orderBy("day")),
+      """SELECT DISTINCT CAST(l_shipdate AS DATE) AS day FROM lineitem ORDER BY day"""),
 
-    "o2_first" -> ((s, d) =>
+    query("o2_first", ((s, d) =>
       t(s, d, "orders").orderBy(col("o_orderdate"), col("o_orderkey"))
         .limit(1).select("o_orderkey", "o_orderdate")),
+      """SELECT o_orderkey, o_orderdate FROM orders
+         ORDER BY o_orderdate, o_orderkey LIMIT 1"""),
 
-    "o3_latest" -> ((s, d) =>
+    query("o3_latest", ((s, d) =>
       t(s, d, "orders").agg(max("o_orderdate").as("latest"))),
+      """SELECT MAX(o_orderdate) AS latest FROM orders"""),
 
     // ---- §2.7 set ops
-    "u1_union" -> ((s, d) => {
+    query("u1_union", ((s, d) => {
       val ev = Tables.events(s, d)
       val a = ev.filter(col("event_type") === "click")
         .select(lit("click").as("band"), col("event_id"), col("value"))
@@ -700,12 +917,18 @@ object SparkEntry {
         .select(lit("view").as("band"), col("event_id"), col("value"))
       a.unionByName(b)
     }),
+      """SELECT 'click' AS band, event_id, value FROM events WHERE event_type = 'click'
+         UNION ALL
+         SELECT 'view' AS band, event_id, value FROM events WHERE event_type = 'view'"""),
 
     // ---- §2.9 calendar-month tumbling window (streaming-shaped batch)
-    "t_month_window" -> ((s, d) =>
+    query("t_month_window", ((s, d) =>
       Windows.monthlyAgg(Tables.events(s, d), "ts", Seq("event_type"),
           Seq(count(lit(1)).as("n"), sumD(col("value")).as("sum_value")))
         .withColumn("month", col("month").cast("date"))),
+      s"""SELECT CAST(date_trunc('month', ts) AS DATE) AS month, event_type,
+                 COUNT(*) AS n, ${sumSql("value")} AS sum_value
+          FROM events GROUP BY 1, 2"""),
 
     // t2 — temporal gap-fill: the orders monthly series per priority with
     // every month ≡ 2 (mod 5) deterministically removed, then densified
@@ -713,7 +936,7 @@ object SparkEntry {
     // interpolation arithmetic is mirrored in the same parenthesization
     // (integer month diffs cast to double — every op correctly-rounded
     // IEEE, so filled values are bit-equal, no rounding tolerance).
-    "t2_gap_fill" -> ((s, d) => {
+    query("t2_gap_fill", ((s, d) => {
       val monthly = t(s, d, "orders")
         .groupBy(Windows.monthOf(col("o_orderdate")).cast("date")
             .as("month"), col("o_orderpriority"))
@@ -723,42 +946,126 @@ object SparkEntry {
           =!= 2)
       Windows.gapFillMonths(holed, "o_orderpriority", "month", "v")
     }),
+      // t2 — identical hole-punch, dense grid, IGNORE NULLS bracketing, and
+      // interpolation parenthesization
+      s"""WITH m AS (
+            SELECT o_orderpriority,
+                   CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+                   ${sumSql("o_totalprice")} AS v
+            FROM orders GROUP BY 1, 2),
+          mi0 AS (
+            SELECT o_orderpriority AS k,
+                   (year(month)*12 + month(month) - 1) AS mi, v FROM m
+            WHERE ((year(month)*12 + month(month) - 1) % 5) <> 2),
+          bounds AS (SELECT k, min(mi) AS lo, max(mi) AS hi
+                     FROM mi0 GROUP BY 1),
+          grid AS (SELECT k, CAST(u.m AS BIGINT) AS mi
+                   FROM bounds, unnest(range(lo, hi+1)) AS u(m)),
+          j AS (SELECT g.k, g.mi, b.v FROM grid g
+                LEFT JOIN mi0 b ON b.k = g.k AND b.mi = g.mi),
+          w AS (
+            SELECT k, mi, v,
+                   last_value(v IGNORE NULLS) OVER
+                     (PARTITION BY k ORDER BY mi ROWS BETWEEN UNBOUNDED
+                      PRECEDING AND CURRENT ROW) AS pv,
+                   last_value(CASE WHEN v IS NOT NULL THEN mi END
+                     IGNORE NULLS) OVER
+                     (PARTITION BY k ORDER BY mi ROWS BETWEEN UNBOUNDED
+                      PRECEDING AND CURRENT ROW) AS pm,
+                   first_value(v IGNORE NULLS) OVER
+                     (PARTITION BY k ORDER BY mi ROWS BETWEEN CURRENT ROW
+                      AND UNBOUNDED FOLLOWING) AS nv,
+                   first_value(CASE WHEN v IS NOT NULL THEN mi END
+                     IGNORE NULLS) OVER
+                     (PARTITION BY k ORDER BY mi ROWS BETWEEN CURRENT ROW
+                      AND UNBOUNDED FOLLOWING) AS nm
+            FROM j)
+          SELECT k AS o_orderpriority,
+                 make_date(CAST(mi // 12 AS INTEGER),
+                           CAST(mi % 12 AS INTEGER) + 1, 1) AS month,
+                 CASE WHEN v IS NOT NULL THEN v
+                      WHEN pv IS NOT NULL AND nv IS NOT NULL
+                        THEN pv + (nv - pv) *
+                             (CAST(mi - pm AS DOUBLE)
+                              / CAST(nm - pm AS DOUBLE))
+                      ELSE COALESCE(pv, nv) END AS value,
+                 v IS NOT NULL AS observed
+          FROM w"""),
 
     // ---- §2.1 S4 GeoTIFF source: checked-in fixture emitted by our own
     // writer (GeoTiffSpec pins the bytes; GenS4Fixture regenerates). The
     // raster is closed-form (value = k%97, nodata at k%13==0, exact binary
     // affine), so the oracle rebuilds the identical pixel table from range()
-    "s4_geotiff_scan" -> ((s, _) =>
+    query("s4_geotiff_scan", ((s, _) =>
       graft.sources.GeoTiff.read(s, "/root/repo/src/test/resources/s4demo.tif")),
+      // S4 — regenerate the fixture raster from its closed-form definition
+      // (GeoTiffFixture): 48x40 grid, a=0.25/e=-0.25/c=10/f=60 (all exact
+      // binary fractions), value = k%97 as float32 (exact), nodata k%13==0
+      """SELECT 's4demo.tif' AS dataset,
+                CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                10.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.25 AS lon,
+                60.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.25) AS lat,
+                CASE WHEN (y.range * 48 + x.range) % 13 = 0 THEN NULL
+                     ELSE CAST((y.range * 48 + x.range) % 97 AS DOUBLE) END AS value
+         FROM range(40) y, range(48) x"""),
 
     // S4 multi-band: the RGB fixture (tiled + deflate + fp-predictor —
     // the layout GDAL emits for real multi-band float exports) through
     // the chunky-interleave decode; per-sample closed form in the oracle
-    "s4b_geotiff_multiband" -> ((s, _) =>
+    query("s4b_geotiff_multiband", ((s, _) =>
       graft.sources.GeoTiff.readBands(s,
         "/root/repo/src/test/resources/s4rgb.tif")),
+      // S4 multi-band — the fixture raster is closed-form (sample s of
+      // pixel k is (k*(s+1))%89, per-pixel nodata at k%17==0, exact binary
+      // affine), so the oracle rebuilds the identical sample table
+      """SELECT 's4rgb.tif' AS dataset, CAST(b.range AS INTEGER) AS band,
+                CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                -4.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.5 AS lon,
+                52.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.5) AS lat,
+                CASE WHEN (y.range * 40 + x.range) % 17 = 0 THEN NULL
+                     ELSE CAST(((y.range * 40 + x.range) * (b.range + 1))
+                               % 89 AS DOUBLE) END AS value
+         FROM range(24) y, range(40) x, range(3) b"""),
 
     // S4 integer: the uint8 + predictor-2 + deflate fixture (the layout
     // GDAL emits for byte products) through the integer decode path;
     // nodata byte 255 → null, samples surface as exact doubles
-    "s4c_geotiff_int" -> ((s, _) =>
+    query("s4c_geotiff_int", ((s, _) =>
       graft.sources.GeoTiff.read(s,
         "/root/repo/src/test/resources/s4int.tif")),
+      // S4 integer — the uint8 fixture is closed-form: pixel k = (k*7)%251,
+      // nodata (255) at k%19==0, exact binary affine
+      """SELECT 's4int.tif' AS dataset,
+                CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                70.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.125 AS lon,
+                32.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.125) AS lat,
+                CASE WHEN (y.range * 40 + x.range) % 19 = 0 THEN NULL
+                     ELSE CAST(((y.range * 40 + x.range) * 7) % 251 AS DOUBLE)
+                END AS value
+         FROM range(32) y, range(40) x"""),
 
     // ---- §2.1 S7 GeoJSON source + P11 tooltip projection (oracle reads
     // the same fixture file via DuckDB read_json)
-    "s7_geojson_scan" -> ((s, _) =>
+    query("s7_geojson_scan", ((s, _) =>
       graft.sources.GeoJson.read(s,
         "/root/repo/src/test/resources/powerplants_mini.geojson", "powerplants")
         .select(col("layer"), col("id"), col("lon"), col("lat"),
                 element_at(col("properties"), "name").as("name"),
                 element_at(col("properties"), "plant:source").as("source"))),
+      // S7 — DuckDB's JSON reader over the same repo fixture; struct access
+      // mirrors the Spark explode+element_at projection
+      s"""SELECT 'powerplants' AS layer, f['id'] AS id,
+                 f['geometry']['coordinates'][1] AS lon,
+                 f['geometry']['coordinates'][2] AS lat,
+                 f['properties']['name'] AS name,
+                 f['properties']['plant:source'] AS source
+          FROM (SELECT unnest(features) AS f FROM read_json('$geojsonFixture'))"""),
 
     // t3 — centered 3-row moving mean per priority over the monthly
     // order totals (ROWS frame over the observed months; compose with t2
     // gap-fill first when month-exact smoothing matters). Decimal-routed
     // frame sums + one double division ⇒ bit-equal replay, no tolerance.
-    "t3_moving_avg" -> ((s, d) => {
+    query("t3_moving_avg", ((s, d) => {
       val monthly = t(s, d, "orders")
         .groupBy(Windows.monthOf(col("o_orderdate")).cast("date")
             .as("month"), col("o_orderpriority"))
@@ -766,25 +1073,54 @@ object SparkEntry {
       Windows.centeredMovingMean(monthly, "o_orderpriority", "month", "v")
         .select("o_orderpriority", "month", "v", "smoothed")
     }),
+      // t3 — identical decimal-routed frame sum and final double division
+      s"""WITH m AS (
+            SELECT o_orderpriority,
+                   CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
+                   ${sumSql("o_totalprice")} AS v
+            FROM orders GROUP BY 1, 2)
+          SELECT o_orderpriority, month, v,
+                 CAST(SUM(CAST(v AS DECIMAL(28,6))) OVER w AS DOUBLE)
+                   / COUNT(v) OVER w AS smoothed
+          FROM m
+          WINDOW w AS (PARTITION BY o_orderpriority ORDER BY month
+                       ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)"""),
 
     // s13 — S5's read side: the reference's (lat,lon,mean) CSV pixel
     // table parsed back (headerless golden fixture; lowercase nan → null)
-    "s13_csv_pixel_scan" -> ((s, _) =>
+    query("s13_csv_pixel_scan", ((s, _) =>
       pipeline.MonthlyPipeline.readCsvPixelTable(s,
         "/root/repo/src/test/resources/golden_pixels.csv", header = false)),
+      // s13 — DuckDB parses the same CSV under the same pinned schema;
+      // 'nan' reads as NaN and nulls out identically
+      s"""SELECT lat, lon,
+                CASE WHEN isnan(mean) THEN NULL ELSE mean END AS mean
+         FROM read_csv('$goldenPixelsCsv',
+                header = false,
+                columns = {lat: 'DOUBLE', lon: 'DOUBLE', mean: 'DOUBLE'})"""),
 
     // s12 — JSONL corpus ingest (the LLM-corpus interchange format):
     // schema-pinned line-delimited read, nested meta flattened, missing
     // fields null. Oracle reads the same fixture with DuckDB read_json
     // under the identical explicit column spec.
-    "s12_jsonl_scan" -> ((s, _) =>
+    query("s12_jsonl_scan", ((s, _) =>
       graft.sources.JsonLines.read(s, jsonlFixture)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
                 col("quality"), col("n_tags"))),
+      // s12 — DuckDB reads the same JSONL fixture with the same pinned
+      // column spec (no inference on either side)
+      s"""SELECT doc_id, text, lang, meta.source AS source,
+                 meta.quality AS quality,
+                 CAST(len(tags) AS INTEGER) AS n_tags
+          FROM read_json('$jsonlFixture', format='newline_delimited',
+                 columns = {doc_id: 'BIGINT', text: 'VARCHAR',
+                            lang: 'VARCHAR',
+                            meta: 'STRUCT(source VARCHAR, quality DOUBLE)',
+                            tags: 'VARCHAR[]'})"""),
 
     // ---- J1 spatial overlay, end-to-end: grid unpivot (F8) + GeoJSON
     // amenities (S7) + broadcast cell join
-    "j1_spatial_overlay" -> ((s, _) => {
+    query("j1_spatial_overlay", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "demo", 0.01, 0.0, 76.85, 0.0, -0.01, 29.0, "EPSG:4326",
         width = 80, height = 80, nodata = None, scaleM = 1000))
@@ -794,6 +1130,23 @@ object SparkEntry {
         .select(col("y"), col("x"), col("id"),
                 element_at(col("properties"), "name").as("name"))
     }),
+      // J1 overlay — regenerate the 80×80 affine grid with range() and join
+      // on the same floored cell keys (CAST ... AS BIGINT: DuckDB FLOOR is
+      // DOUBLE, Spark floor is LONG)
+      s"""WITH grid AS (
+            SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                   76.85 + (CAST(x.range AS DOUBLE) + 0.5) * 0.01 AS lon,
+                   29.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.01) AS lat
+            FROM range(80) y, range(80) x),
+          pts AS (
+            SELECT f['id'] AS id, f['properties']['name'] AS name,
+                   f['geometry']['coordinates'][1] AS plon,
+                   f['geometry']['coordinates'][2] AS plat
+            FROM (SELECT unnest(features) AS f FROM read_json('$geojsonFixture')))
+          SELECT g.y, g.x, p.id, p.name
+          FROM grid g JOIN pts p
+            ON CAST(FLOOR(g.lon / 0.01) AS BIGINT) = CAST(FLOOR(p.plon / 0.01) AS BIGINT)
+           AND CAST(FLOOR(g.lat / 0.01) AS BIGINT) = CAST(FLOOR(p.plat / 0.01) AS BIGINT)"""),
 
     // ---- A7/P6 exact polygon clip: Sutherland–Hodgman coverage area of
     // each grid cell inside a convex clip polygon. Cells are 0.25-sized
@@ -802,7 +1155,7 @@ object SparkEntry {
     // exact, and the oracle's closed-form axis-aligned overlap must match
     // bit-for-bit. The rectangle is the oracle-able case; triangles and
     // general convex clips are covered by ClipSpec property tests.
-    "a7_clip_area" -> ((s, _) => {
+    query("a7_clip_area", ((s, _) => {
       val polyX = Seq(73.0625, 85.8125, 85.8125, 73.0625)
       val polyY = Seq(24.1875, 24.1875, 36.3125, 36.3125) // CCW
       s.range(6400).select(
@@ -815,6 +1168,20 @@ object SparkEntry {
         .filter(col("area") > 0)
         .select("y", "x", "area")
     }),
+      // A7/P6 exact clip — closed-form axis-aligned overlap; all grid and
+      // rectangle coordinates are exact binary fractions, so no rounding
+      """SELECT y, x, w * h AS area FROM (
+           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25,
+                                    85.8125)
+                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25,
+                                       73.0625)) AS w,
+                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25,
+                                    36.3125)
+                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25,
+                                       24.1875)) AS h
+           FROM range(80) y, range(80) x)
+         WHERE w * h > 0"""),
 
     // ---- A7/P6 CONCAVE clip: same grid, but the clip polygon is an
     // L-shape — ear-clipped into triangles driver-side, per-cell SH area
@@ -829,7 +1196,7 @@ object SparkEntry {
     // and order-independent; the oracle recomputes the union area by
     // coordinate compression (slab grid), a completely different
     // algorithm — agreement is a strong independent check.
-    "a7_polygon_dissolve" -> ((s, d) => {
+    query("a7_polygon_dissolve", ((s, d) => {
       val x0 = (col("n_nationkey") % 5).cast("double") * 3.0
       val y0 = floor(col("n_nationkey") / 5).cast("double") * 3.0
       val w = element_at(array(lit(1.0), lit(2.0), lit(4.0)),
@@ -842,8 +1209,39 @@ object SparkEntry {
         .agg(ops.PolyUnion.dissolveArea(col("xs"), col("ys")).as("union_area"),
              count(lit(1)).as("n_polys"))
     }),
+      // A7 concave clip — the L-shape = two disjoint axis-aligned rectangles
+      // ([73.0625,80.3125]×[24.1875,30.6875] ∪ [73.0625,76.6875]×
+      // [30.6875,35.1875]), so cell coverage is the sum of two closed-form
+      // overlaps; 9dp round on both sides absorbs the SH diagonal arithmetic
+      // a7_polygon_dissolve — union area by coordinate compression: distinct
+      // x/y bounds slice the plane into slabs; a slab cell is covered iff
+      // some rectangle contains it; union area = Σ covered-cell areas. All
+      // coordinates are small integers, so the double sums are exact.
+      """WITH rects AS (
+           SELECT (n_nationkey % 5) * 3.0 AS x0,
+                  (n_nationkey // 5) * 3.0 AS y0,
+                  (n_nationkey % 5) * 3.0
+                    + [1.0, 2.0, 4.0][(n_nationkey % 3) + 1] AS x1,
+                  (n_nationkey // 5) * 3.0
+                    + [2.0, 4.0][(n_nationkey % 2) + 1] AS y1
+           FROM nation),
+         xs AS (SELECT DISTINCT x FROM (
+                  SELECT x0 AS x FROM rects UNION ALL SELECT x1 FROM rects)),
+         xsl AS (SELECT x AS xa, lead(x) OVER (ORDER BY x) AS xb FROM xs),
+         ys AS (SELECT DISTINCT y FROM (
+                  SELECT y0 AS y FROM rects UNION ALL SELECT y1 FROM rects)),
+         ysl AS (SELECT y AS ya, lead(y) OVER (ORDER BY y) AS yb FROM ys),
+         cells AS (SELECT xa, xb, ya, yb FROM xsl, ysl
+                   WHERE xb IS NOT NULL AND yb IS NOT NULL),
+         cov AS (SELECT DISTINCT xa, xb, ya, yb
+                 FROM cells c JOIN rects r
+                   ON c.xa >= r.x0 AND c.xb <= r.x1
+                  AND c.ya >= r.y0 AND c.yb <= r.y1)
+         SELECT SUM((xb - xa) * (yb - ya)) AS union_area,
+                (SELECT COUNT(*) FROM nation) AS n_polys
+         FROM cov"""),
 
-    "a7_concave_clip" -> ((s, _) => {
+    query("a7_concave_clip", ((s, _) => {
       val polyX = Seq(73.0625, 80.3125, 80.3125, 76.6875, 76.6875, 73.0625)
       val polyY = Seq(24.1875, 24.1875, 30.6875, 30.6875, 35.1875, 35.1875)
       s.range(6400).select(
@@ -856,6 +1254,26 @@ object SparkEntry {
         .filter(col("area") > 0)
         .select("y", "x", "area")
     }),
+      """SELECT y, x, round(wa * ha + wb * hb, 9) AS area FROM (
+           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25,
+                                    80.3125)
+                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25,
+                                       73.0625)) AS wa,
+                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25,
+                                    30.6875)
+                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25,
+                                       24.1875)) AS ha,
+                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25,
+                                    76.6875)
+                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25,
+                                       73.0625)) AS wb,
+                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25,
+                                    35.1875)
+                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25,
+                                       30.6875)) AS hb
+           FROM range(80) y, range(80) x)
+         WHERE wa * ha + wb * hb > 0"""),
 
     // ---- A7/P6 polygon WITH HOLES: the GAUL ADM ring shape. L-shaped
     // outer boundary with two rectangular interior rings; per-cell
@@ -863,7 +1281,7 @@ object SparkEntry {
     // (PolygonClip.cellCoverageWithHoles). The L and the holes are
     // axis-aligned with dyadic coordinates, so the oracle is pure
     // inclusion–exclusion over four closed-form rectangle overlaps.
-    "a7_holes_clip" -> ((s, _) => {
+    query("a7_holes_clip", ((s, _) => {
       val outerX = Seq(72.0, 86.0, 86.0, 79.0, 79.0, 72.0)
       val outerY = Seq(23.0, 23.0, 30.0, 30.0, 37.0, 37.0)
       val holes = Seq(
@@ -879,10 +1297,36 @@ object SparkEntry {
         .filter(col("area") > 0)
         .select("y", "x", "area")
     }),
+      // A7 holes — inclusion–exclusion over closed-form rectangle overlaps:
+      // the L outer = [72,86]×[23,30] ∪ [72,79]×[30,37] (disjoint), minus
+      // holes [74,78]×[25,29] and [73,76]×[31,35]; holes sit inside the
+      // outer region and are disjoint, so no higher-order terms exist.
+      // 9dp round on both sides absorbs the SH diagonal arithmetic.
+      """SELECT y, x, round(wa * ha + wb * hb - w1 * h1 - w2 * h2, 9) AS area
+         FROM (
+           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 86.0)
+                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 72.0)) AS wa,
+                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 30.0)
+                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 23.0)) AS ha,
+                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 79.0)
+                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 72.0)) AS wb,
+                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 37.0)
+                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 30.0)) AS hb,
+                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 78.0)
+                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 74.0)) AS w1,
+                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 29.0)
+                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 25.0)) AS h1,
+                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 76.0)
+                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 73.0)) AS w2,
+                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 35.0)
+                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 31.0)) AS h2
+           FROM range(80) y, range(80) x)
+         WHERE wa * ha + wb * hb - w1 * h1 - w2 * h2 > 0"""),
 
     // ---- A7 exact case: convex-hull dissolve of the amenity point layer
     // (oracle: hand-computed hull fixture)
-    "a7_hull_dissolve" -> ((s, _) => {
+    query("a7_hull_dissolve", ((s, _) => {
       import s.implicits._
       val pts = graft.sources.GeoJson.read(s,
         "/root/repo/src/test/resources/powerplants_mini.geojson", "powerplants")
@@ -892,10 +1336,18 @@ object SparkEntry {
         .select(posexplode(col("points")).as(Seq("i", "pt")))
         .select(col("i"), col("pt.lon"), col("pt.lat"))
     }),
+      // A7 hull — hand-checked fixture: the 5 fixture points minus the one
+      // interior point (77.30, 28.70), in the aggregator's CCW-from-anchor
+      // emit order
+      """SELECT * FROM (VALUES
+           (0, CAST(76.95 AS DOUBLE), CAST(28.30 AS DOUBLE)),
+           (1, CAST(78.20 AS DOUBLE), CAST(29.40 AS DOUBLE)),
+           (2, CAST(77.55 AS DOUBLE), CAST(28.90 AS DOUBLE)),
+           (3, CAST(77.10 AS DOUBLE), CAST(28.55 AS DOUBLE))) AS t(i, lon, lat)"""),
 
     // ---- P6 polygon case: ray-casting clip of a grid to a triangle
     // (oracle: the ray-cast expanded per edge in SQL)
-    "p6_polygon_clip" -> ((s, _) => {
+    query("p6_polygon_clip", ((s, _) => {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "demo", 0.1, 0.0, 76.0, 0.0, -0.1, 30.0, "EPSG:4326",
         width = 20, height = 20, nodata = None, scaleM = 1000))
@@ -903,6 +1355,22 @@ object SparkEntry {
       grid.filter(ops.GeoFns.pointInPolygonUdf(tri)(col("lon"), col("lat")))
         .select("y", "x", "lon", "lat")
     }),
+      // P6 polygon — the ray-cast written out per edge of the literal
+      // triangle, structurally identical arithmetic to GeoFns.pointInPolygon
+      // (edge 2 is horizontal: its crossing test is constant-false, kept for
+      // shape fidelity; DuckDB double division by zero yields inf, not error)
+      """WITH grid AS (
+           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                  76.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.1 AS lon,
+                  30.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.1) AS lat
+           FROM range(20) y, range(20) x)
+         SELECT y, x, lon, lat FROM grid
+         WHERE (CAST(((28.2 > lat) != (29.8 > lat)) AND
+                     (lon < (77.0 - 76.2) * (lat - 28.2) / (29.8 - 28.2) + 76.2) AS INTEGER)
+              + CAST(((28.2 > lat) != (28.2 > lat)) AND
+                     (lon < (76.2 - 77.8) * (lat - 28.2) / (28.2 - 28.2) + 77.8) AS INTEGER)
+              + CAST(((29.8 > lat) != (28.2 > lat)) AND
+                     (lon < (77.8 - 77.0) * (lat - 29.8) / (28.2 - 29.8) + 77.0) AS INTEGER)) % 2 = 1"""),
 
     // ---- profiling: HLL approximate distinct (rows-only: sketch-based)
     // HLL sketch as a custom typed Aggregator over the engine-portable
@@ -910,7 +1378,7 @@ object SparkEntry {
     // spec, so the estimate / zero-count / register-sum are oracle-checked
     // exactly; Spark's own approx_count_distinct (HLL++-internal layout)
     // is kept as a cross-check column in tests, not in the gate
-    "x16_hll_profile" -> ((s, d) => {
+    query("x16_hll_profile", ((s, d) => {
       val hll = udaf(new ext.HllAggregator(10), Encoders.scalaLong)
       // NULL text is excluded on BOTH sides: Spark would hash [null] to
       // mix64(0) while the oracle's per-char fold yields NULL and drops
@@ -929,24 +1397,104 @@ object SparkEntry {
                 col("h.n_zero").as("n_zero"),
                 col("h.reg_sum").as("reg_sum"))
     }),
+    {
+      // x16 — the HLL sketch recomputed register-by-register: same FNV hash
+      // (one byte per ASCII char), same top-10-bit bucketing, same
+      // rho = 55 - bitlength(54-bit tail), same EXACT integer harmonic sum
+      // (2^(55-r) terms in HUGEINT), same single-division raw estimate with
+      // the identical alpha·m²·2^55 double constant
+      val pows = (0 to 55).map(b => (BigInt(1) << b).toString).mkString(", ")
+      s"""WITH h0 AS (
+           SELECT lang,
+             list_reduce(
+               list_prepend(14695981039346656037::HUGEINT,
+                 list_transform(range(1, length(text) + 1), i ->
+                   unicode(substr(text, CAST(i AS INTEGER), 1))::HUGEINT)),
+               (hh, c) -> (xor(hh, c) * 1099511628211::HUGEINT)
+                          % 18446744073709551616::HUGEINT) AS u0
+           FROM documents WHERE text IS NOT NULL),
+         h1 AS (SELECT lang,
+                ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1
+                FROM h0),
+         h2 AS (SELECT lang,
+                ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2
+                FROM h1),
+         h AS (SELECT lang, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM h2),
+         rb AS (
+           SELECT lang, uh // 18014398509481984::HUGEINT AS bucket,
+                  CAST(uh % 18014398509481984::HUGEINT AS BIGINT) AS w
+           FROM h),
+         regs AS (
+           SELECT lang, bucket,
+                  MAX(CASE WHEN w = 0 THEN 55
+                           ELSE 55 - length(bin(w)) END) AS r
+           FROM rb GROUP BY 1, 2),
+         grid AS (
+           SELECT l.lang, g.range AS bucket
+           FROM (SELECT DISTINCT lang FROM documents
+                 WHERE text IS NOT NULL) l, range(1024) g),
+         full_regs AS (
+           SELECT grid.lang, COALESCE(regs.r, 0) AS r
+           FROM grid LEFT JOIN regs
+             ON regs.lang = grid.lang AND regs.bucket = grid.bucket),
+         agg AS (
+           SELECT lang,
+                  SUM([$pows][56 - r]::HUGEINT) AS num,
+                  CAST(SUM(CASE WHEN r = 0 THEN 1 ELSE 0 END) AS INTEGER) AS n_zero,
+                  SUM(r) AS reg_sum
+           FROM full_regs GROUP BY 1),
+         docs AS (SELECT lang, COUNT(*) AS n_docs FROM documents
+                  WHERE text IS NOT NULL GROUP BY 1)
+         SELECT d.lang, d.n_docs,
+                round(CASE WHEN ${ext.HllAggregator.alphaM2K(10)}
+                                / CAST(a.num AS DOUBLE) <= 2560.0
+                            AND a.n_zero > 0
+                           THEN 1024.0 * ln(1024.0 / a.n_zero)
+                           ELSE ${ext.HllAggregator.alphaM2K(10)}
+                                / CAST(a.num AS DOUBLE) END, 6)
+                  AS hll_estimate,
+                a.n_zero, CAST(a.reg_sum AS BIGINT) AS reg_sum
+         FROM docs d JOIN agg a ON a.lang = d.lang"""
+    }),
 
     // ---- extensions: deduplication
-    "x1_dedup_exact" -> ((s, d) =>
+    query("x1_dedup_exact", ((s, d) =>
       ext.Dedup.exact(t(s, d, "documents"))),
+      """SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id,
+                COUNT(*) AS n_copies
+         FROM documents GROUP BY 1"""),
 
     // LSH candidates + EXACT jaccard verification (the production shape),
     // so the output is exact similarities and the oracle is an exact
     // all-pairs jaccard — the estimate-only variant stays available as
     // Dedup.minhashNearDups and is property-tested in ExtSpec
-    "x2_dedup_minhash" -> ((s, d) =>
+    query("x2_dedup_minhash", ((s, d) =>
       ext.Dedup.minhashVerifiedDups(t(s, d, "documents"), minJaccard = 0.5)),
+      // x2 — exact all-pairs jaccard at threshold 0.5: LSH (128 hashes, 32
+      // bands) proposes candidates with miss probability ~5e-8 at j=0.8 and
+      // every true pair in the testdata has j >= 0.8, so candidate recall is
+      // exactly 1 here and the verified output equals the exact computation.
+      // No df cap: verification computes pair jaccard directly.
+      s"""WITH $pairCountCtes
+         SELECT doc_a, doc_b,
+                CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
+         FROM inter
+         JOIN sizes sa ON sa.doc_id = doc_a
+         JOIN sizes sb ON sb.doc_id = doc_b
+         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5"""),
 
-    "x3_dedup_simhash" -> ((s, d) =>
+    query("x3_dedup_simhash", ((s, d) =>
       ext.Dedup.simhashNearDups(t(s, d, "documents"), maxDist = 6)),
+      // x3 — full simhash pipeline recomputed in DuckDB (see simhashOracleSql)
+      simhashOracleSql(maxDist = 6)),
 
-    "x4_dedup_jaccard" -> ((s, d) =>
+    query("x4_dedup_jaccard", ((s, d) =>
       ext.Dedup.jaccardPairs(t(s, d, "documents"), shingleK = 3,
         minJaccard = 0.4)),
+      // tok filters empty tokens (leading/repeated whitespace) — the same
+      // tokenization ShingleHashes applies on the engine side
+      s"""WITH $jaccardEdgeCtes
+          SELECT doc_a, doc_b, jaccard FROM edges"""),
 
     // x150 — LSH PARAMETER tuning over the corpus's own verified
     // near-dup pairs: for each exact-Jaccard pair, the S-curve
@@ -958,7 +1506,7 @@ object SparkEntry {
     // are powers of two computed by explicit squaring chains — IEEE
     // multiplications in a fixed order, so both engines agree to the
     // bit with NO pow() (libm pow is not reproducible cross-engine).
-    "x150_lsh_tuning" -> ((s, d) => {
+    query("x150_lsh_tuning", ((s, d) => {
       val pairs = ext.Dedup.jaccardPairs(t(s, d, "documents"),
         shingleK = 3, minJaccard = 0.4)
       def pow2(c: Column, k: Int): Column =
@@ -971,6 +1519,22 @@ object SparkEntry {
         .withColumn("p_b2r8", pDet(3, 1))
         .withColumn("at_risk", pDet(2, 2) < 0.99)
     }),
+    {
+      // x150 — the same exact-jaccard edges, the S-curve replayed with
+      // the IDENTICAL squaring chains (bit-exact IEEE multiplication
+      // order; no pow())
+      def pow2(e: String, k: Int): String =
+        (1 to k).foldLeft(e)((x, _) => s"($x * $x)")
+      def pDet(rLog2: Int, bLog2: Int): String =
+        s"(1.0 - ${pow2(s"(1.0 - ${pow2("jaccard", rLog2)})", bLog2)})"
+      s"""WITH $jaccardEdgeCtes
+          SELECT doc_a, doc_b, jaccard,
+                 ${pDet(2, 2)} AS p_b4r4,
+                 ${pDet(1, 3)} AS p_b8r2,
+                 ${pDet(3, 1)} AS p_b2r8,
+                 (${pDet(2, 2)} < 0.99) AS at_risk
+          FROM edges"""
+    }),
 
     // x151 — ZIPF-law fit over the vocabulary head: least-squares
     // slope/intercept of ln(count) vs ln(rank) for the top-1000 terms
@@ -981,7 +1545,7 @@ object SparkEntry {
     // regression sums are decimal-routed (partitioning-invariant) and
     // the outputs round to 6dp (ln() differs across libms in the last
     // ulp — the x5 convention).
-    "x151_zipf_fit" -> ((s, d) => {
+    query("x151_zipf_fit", ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val counts = t(s, d, "documents")
         .select(explode(filter(split(lower(col("text")), "\\s+"),
@@ -1006,92 +1570,231 @@ object SparkEntry {
             (col("k") * col("sxx") - col("sx") * col("sx"))) *
             col("sx")) / col("k"), 6).as("intercept"))
     }),
+      // x151 — census → top-1000 head → the same least-squares algebra
+      // over ln(rank)/ln(count), decimal-routed sums, 6dp round
+      s"""WITH toks AS (
+            SELECT unnest(list_filter(
+              regexp_split_to_array(lower(text), '\\s+'),
+              t -> length(t) > 0)) AS term
+            FROM documents),
+          cnt AS (SELECT term, COUNT(*) AS n FROM toks GROUP BY term
+                  ORDER BY n DESC, term LIMIT 1000),
+          pts AS (SELECT ln(CAST(row_number() OVER
+                      (ORDER BY n DESC, term) AS DOUBLE)) AS x,
+                    ln(CAST(n AS DOUBLE)) AS y
+                  FROM cnt),
+          agg AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k,
+                    ${graft.ops.Stable.sumSql("x", 18)} AS sx,
+                    ${graft.ops.Stable.sumSql("y", 18)} AS sy,
+                    ${graft.ops.Stable.sumSql("x * x", 18)} AS sxx,
+                    ${graft.ops.Stable.sumSql("x * y", 18)} AS sxy
+                  FROM pts)
+          SELECT CAST(k AS BIGINT) AS n_terms,
+                 round((k * sxy - sx * sy) / (k * sxx - sx * sx), 6)
+                   AS slope,
+                 round((sy - ((k * sxy - sx * sy) / (k * sxx - sx * sx))
+                        * sx) / k, 6) AS intercept
+          FROM agg"""),
 
     // ---- extensions: similarity search
     // cos is rounded to 6dp for the oracle: engines' SIMD vs sequential
     // fp accumulation differ in the last ulp; ranking uses the exact value
     // (ulp gaps never reorder distinct vectors).
-    "x5_ann_cosine" -> ((s, d) => {
+    query("x5_ann_cosine", ((s, d) => {
       val q = queryVector
       ext.Similarity.topKCosine(t(s, d, "embeddings"), q, 10)
         .withColumn("cos", round(col("cos"), 6))
     }),
+      s"""SELECT vec_id, round($cosSql, 6) AS cos FROM embeddings
+          ORDER BY $cosSql DESC, vec_id LIMIT 10"""),
 
-    "x6_ann_lsh" -> ((s, d) => {
+    query("x6_ann_lsh", ((s, d) => {
       val q = queryVector
       ext.Similarity.annLsh(t(s, d, "embeddings"), q, 10, dim = 64,
         nPlanes = 6, probes = 2)
         .withColumn("cos", round(col("cos"), 6))
     }),
+      // x6 — the whole LSH index mirrored: the seeded hyperplanes are pasted
+      // as literals, bucket assignment recomputed per row, the probe set
+      // (query bucket + 2 hamming-1 neighbors) evaluated as an IN list, then
+      // exact top-k inside the probed buckets — closing the last no_oracle
+      // gap (the hash-defined path is deterministic, so it IS checkable).
+      s"""SELECT vec_id, round($cosSql, 6) AS cos FROM embeddings
+          WHERE $lshBucketSql IN (${lshProbeBuckets.mkString(", ")})
+          ORDER BY $cosSql DESC, vec_id LIMIT 10"""),
 
     // IVF with deterministic coarse centroids (first 16 ids): assignment,
     // probing, and re-rank are all exact computations, so the full
     // two-level index is oracle-checked (unlike the hash-defined LSH probe)
-    "x17_ann_ivf" -> ((s, d) => {
+    query("x17_ann_ivf", ((s, d) => {
       val q = queryVector
       ext.Similarity.annIvf(t(s, d, "embeddings"), q, 10,
           nCentroids = 16, nProbe = 2)
         .withColumn("cos", round(col("cos"), 6))
     }),
+      // x17 — IVF mirrored end-to-end: same centroid set (vec_id < 16),
+      // same argmax assignment with (cos, cid) lexicographic tiebreak, same
+      // 2-probe + exact re-rank. Cosines use list_dot_product, bit-identical
+      // to the Spark fold (see cosSql); the 6dp round absorbs nothing here
+      // but keeps the x5 output convention.
+      s"""WITH $ivfProbeCtes
+          SELECT e.vec_id, round($cosSql, 6) AS cos
+          FROM embeddings e
+          JOIN assign a ON a.vec_id = e.vec_id
+          JOIN probes p ON p.cid = a.cid
+          ORDER BY $cosSql DESC, e.vec_id LIMIT 10"""),
 
-    "x11_topk_per_label" -> ((s, d) =>
+    query("x11_topk_per_label", ((s, d) =>
       ext.Similarity.topKPerLabel(t(s, d, "embeddings"), queryVector, 3)
         .withColumn("cos", round(col("cos"), 6))),
+      s"""WITH scored AS (
+            SELECT label, vec_id, $cosSql AS cos FROM embeddings),
+          ranked AS (
+            SELECT label, vec_id, cos,
+                   CAST(row_number() OVER (PARTITION BY label
+                        ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+            FROM scored)
+          SELECT label, vec_id, round(cos, 6) AS cos, rank
+          FROM ranked WHERE rank <= 3"""),
 
     // embedding-space near-dup: LSH bucket (6 seeded hyperplanes, same
     // Random(42) draw as x6) self-join + exact pairwise cosine ≥ 0.3. The
     // synthetic embeddings top out at cos≈0.41, so the threshold sits in
     // the populated range (694 pairs at sf0.1) with ≥2e-5 clearance to the
     // nearest pair on either side of the cut.
-    "x20_embed_neardup" -> ((s, d) =>
+    query("x20_embed_neardup", ((s, d) =>
       ext.Similarity.cosineNearDups(t(s, d, "embeddings"), dim = 64,
           minCos = 0.3, nPlanes = 6)
         .withColumn("cos", round(col("cos"), 6))),
+      // x20 — embedding near-dup mirrored end-to-end: bucket assignment from
+      // the pasted hyperplane literals (the x6 technique), bucket-equality
+      // self-join with id_a < id_b, exact pairwise cosine (list_dot_product
+      // ≡ the Spark fold bit-for-bit, x5-verified), threshold on the exact
+      // value, 6dp round only for display.
+      s"""WITH b AS (
+            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+                   $lshBucketSql AS bucket
+            FROM embeddings),
+          p AS (
+            SELECT x.vec_id AS id_a, y.vec_id AS id_b,
+                   list_dot_product(x.v, y.v)
+                   / (sqrt(list_dot_product(x.v, x.v))
+                      * sqrt(list_dot_product(y.v, y.v))) AS cos
+            FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)
+          SELECT id_a, id_b, round(cos, 6) AS cos FROM p WHERE cos >= 0.3"""),
 
     // ---- extensions: corpus curation
     // benchmark-contamination audit: src0 plays the eval benchmark; every
     // doc reports what fraction of its 3-gram shingles the benchmark
     // contains (src0 docs score 1.0 by construction — the self-hit is the
     // positive control)
-    "x21_contamination" -> ((s, d) => {
+    query("x21_contamination", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.contamination(docs, docs.filter(col("source") === "src0"))
     }),
+      // x21 — contamination mirrored on STRING shingles (the engine compares
+      // 64-bit shingle hashes; counts coincide because collisions are
+      // immaterial — the same equivalence x4 relies on)
+      s"""WITH $contamCtes
+          SELECT doc_id, n_sh, n_hit, contamination FROM cont"""),
 
     // deterministic 10% sample: splitmix64 of doc_id, no RNG state —
     // the same rows come back on every run, engine, and partitioning
-    "x22_hash_sample" -> ((s, d) =>
+    query("x22_hash_sample", ((s, d) =>
       ext.Curation.hashSample(t(s, d, "documents"), 10, 100)
         .select("doc_id", "lang", "source", "n_chars")),
+      // x22 — splitmix64 finalizer replayed in HUGEINT (the x3/x16 mulmod
+      // technique), then Spark's signed pmod(·,100) mirrored on the
+      // two's-complement reinterpretation
+      s"""WITH m0 AS (SELECT *, doc_id::HUGEINT AS u0 FROM documents),
+          $mix64SignedCtes
+          SELECT doc_id, lang, source, n_chars FROM sgn
+          WHERE ((sh % 100) + 100) % 100 < 10"""),
 
-    "x23_repetition" -> ((s, d) =>
+    query("x23_repetition", ((s, d) =>
       ext.Curation.repetitionRatio(t(s, d, "documents"), k = 2,
         maxRatio = 0.5)),
+      // x23 — repetition ratio from unhashed 2-grams; exact rational both
+      // sides, so the keep cut at 0.5 is bit-stable
+      s"""WITH $repCtes
+          SELECT doc_id, n_grams, n_distinct, rep_ratio,
+                 rep_ratio <= 0.5 AS keep
+          FROM rep"""),
 
     // equal-count domain mixing: 20 docs per source, picked by splitmix64
     // rank — deterministic, grows append-only as a stratum grows
-    "x24_stratified_sample" -> ((s, d) =>
+    query("x24_stratified_sample", ((s, d) =>
       ext.Curation.stratifiedSample(t(s, d, "documents"), "source", 20)
         .select("doc_id", "lang", "source")),
+      // x24 — the same splitmix64 replay as x22, then the window rank with
+      // the identical (signed hash, doc_id) total order
+      s"""WITH m0 AS (SELECT *, doc_id::HUGEINT AS u0 FROM documents),
+          $mix64SignedCtes,
+          ranked AS (
+            SELECT doc_id, lang, source,
+                   row_number() OVER (PARTITION BY source
+                                      ORDER BY sh, doc_id) AS rk
+            FROM sgn)
+          SELECT doc_id, lang, source FROM ranked WHERE rk <= 20"""),
 
     // length-distribution report per language: DISCRETE quantiles by
     // explicit rank arithmetic (value at ceil(p·n)) — engine-portable,
     // no interpolation convention to disagree on
-    "x25_length_quantiles" -> ((s, d) =>
+    query("x25_length_quantiles", ((s, d) =>
       ext.TextOps.lengthQuantiles(t(s, d, "documents"), "lang", "n_chars")),
+      // x25 — identical rank arithmetic: row_number in the same (value, id)
+      // order, pick at ceil(p·n) (both engines compute the same double
+      // product, so the same rank), conditional-max to columns
+      """WITH ranked AS (
+           SELECT lang, n_chars,
+                  row_number() OVER (PARTITION BY lang
+                                     ORDER BY n_chars, doc_id) AS rn,
+                  COUNT(*) OVER (PARTITION BY lang) AS n
+           FROM documents),
+         picks AS (
+           SELECT lang, n_chars, p
+           FROM ranked CROSS JOIN (VALUES (0.25), (0.5), (0.75), (0.95)) AS ps(p)
+           WHERE rn = CEIL(p * n))
+         SELECT lang,
+           MAX(CASE WHEN p = 0.25 THEN n_chars END) AS q25,
+           MAX(CASE WHEN p = 0.5  THEN n_chars END) AS q50,
+           MAX(CASE WHEN p = 0.75 THEN n_chars END) AS q75,
+           MAX(CASE WHEN p = 0.95 THEN n_chars END) AS q95
+         FROM picks GROUP BY lang"""),
 
     // sequence packing to a 2048-token budget, sharded by source —
     // contiguous window packing, integer arithmetic only
-    "x26_pack_sequences" -> ((s, d) =>
+    query("x26_pack_sequences", ((s, d) =>
       ext.Curation.packSequences(t(s, d, "documents"), "source", 2048L)),
+      // x26 — identical window cumsum + integer division; token count is
+      // the x9 whitespace mirror
+      """WITH toks AS (
+           SELECT doc_id, source,
+                  CAST(len(regexp_split_to_array(lower(text), '\s+'))
+                       AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (
+           SELECT doc_id, source, n_tokens,
+                  SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                      ROWS UNBOUNDED PRECEDING) AS cum
+           FROM toks)
+         SELECT doc_id, source, n_tokens,
+                CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id
+         FROM c"""),
 
     // duplicate clusters: connected components (large-star/small-star)
     // over the exact-jaccard pair edges — the dedup completion step that
     // turns pairwise similarity into removable cluster structure
-    "x27_dup_clusters" -> ((s, d) =>
+    query("x27_dup_clusters", ((s, d) =>
       ext.Dedup.connectedComponents(
         ext.Dedup.jaccardPairs(t(s, d, "documents"), shingleK = 3,
           minJaccard = 0.4).select("doc_a", "doc_b"))),
+      // x27 — the oracle computes components by a DIFFERENT algorithm
+      // (recursive-CTE transitive closure + min-reachable) than the engine's
+      // large-star/small-star contraction, so agreement is evidence of the
+      // clustering itself, not of a shared implementation
+      s"""WITH RECURSIVE $componentCtes
+          SELECT id AS doc_id, rep AS rep_id FROM cc"""),
 
     // x156 — dup-cluster QUALITY audit: per x27 cluster, the member
     // quality span (min/max/spread) and the keep-best target — the
@@ -1100,7 +1803,7 @@ object SparkEntry {
     // whether near-dup copies differ in quality enough to matter.
     // Clusters are bounded by the component map; one join + one
     // cluster-keyed agg with the max(struct(quality, −id)) argmax.
-    "x156_cluster_quality" -> ((s, d) => {
+    query("x156_cluster_quality", ((s, d) => {
       val docs = t(s, d, "documents")
       val cc = ext.Dedup.connectedComponents(
         ext.Dedup.jaccardPairs(docs, shingleK = 3, minJaccard = 0.4)
@@ -1117,33 +1820,109 @@ object SparkEntry {
           (col("q_max") - col("q_min")).as("q_spread"),
           (-col("b.nid")).as("best_doc"))
     }),
+      // x156 — the recursive closure joined to the quality CTEs; the
+      // keep-best argmax replayed as a (quality DESC, doc_id) window rank
+      s"""WITH RECURSIVE $componentCtes,
+          $qualityCtes,
+          per AS (SELECT c.rep AS cluster, q.doc_id, q.quality
+                  FROM cc c JOIN qual q ON q.doc_id = c.id),
+          agg AS (SELECT cluster, COUNT(*) AS cluster_size,
+                         MIN(quality) AS q_min, MAX(quality) AS q_max
+                  FROM per GROUP BY cluster),
+          best AS (SELECT cluster, doc_id AS best_doc
+                   FROM (SELECT cluster, doc_id,
+                           row_number() OVER (PARTITION BY cluster
+                             ORDER BY quality DESC, doc_id) AS rn
+                         FROM per) WHERE rn = 1)
+          SELECT a.cluster, a.cluster_size, a.q_min, a.q_max,
+                 a.q_max - a.q_min AS q_spread, b.best_doc
+          FROM agg a JOIN best b ON b.cluster = a.cluster"""),
 
     // the dedup PRODUCT: the corpus minus non-representative cluster
     // members (cluster rep = component-min doc_id; unclustered docs pass)
-    "x28_dedup_corpus" -> ((s, d) =>
+    query("x28_dedup_corpus", ((s, d) =>
       ext.Dedup.dedupCorpus(t(s, d, "documents"),
           ext.Dedup.jaccardPairs(t(s, d, "documents"), shingleK = 3,
             minJaccard = 0.4).select("doc_a", "doc_b"))
         .select("doc_id", "lang", "source", "n_chars")),
+      // x28 — the dedup product: drop non-representative cluster members,
+      // pass everything else through
+      s"""WITH RECURSIVE $componentCtes
+          SELECT doc_id, lang, source, n_chars FROM documents
+          WHERE doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)"""),
 
     // the dedup products FUSED: one jaccardPairs + connectedComponents
     // pays for the component map, cluster census, and kept/removed split
     // together (x27/x28/x44 each recompute the same edges independently —
     // kept for the oracle surface; this is the shape a pipeline runs).
     // The bench line shows the shared-scan total vs the sum of the parts.
-    "x45_dedup_products" -> ((s, d) =>
+    query("x45_dedup_products", ((s, d) =>
       ext.Dedup.dedupProducts(t(s, d, "documents"), shingleK = 3,
         minJaccard = 0.4)),
+      // x45 — the fused per-source report: the same recursive closure, with
+      // cluster sizes keyed at the rep doc. Integer sums cast to BIGINT per
+      // the HUGEINT convention (Stable.sumSql scaladoc).
+      s"""WITH RECURSIVE $componentCtes,
+          csizes AS (SELECT rep, COUNT(*) AS cluster_size FROM cc GROUP BY 1),
+          j AS (
+            SELECT d.doc_id, d.source, c.rep, s2.cluster_size AS rep_size
+            FROM documents d
+            LEFT JOIN cc c ON c.id = d.doc_id
+            LEFT JOIN csizes s2 ON s2.rep = d.doc_id)
+          SELECT source, COUNT(*) AS n_docs,
+                 CAST(SUM(CASE WHEN rep IS NULL OR rep = doc_id
+                               THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+                 CAST(SUM(CASE WHEN rep IS NOT NULL AND rep <> doc_id
+                               THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
+                 CAST(SUM(CASE WHEN rep = doc_id THEN 1 ELSE 0 END)
+                      AS BIGINT) AS n_clusters,
+                 MAX(rep_size) AS max_cluster
+          FROM j GROUP BY source"""),
 
     // per-doc salient terms by tf/df (the exact-rational tf-idf core) —
     // rank deterministic via the (score DESC, term) total order
-    "x29_salient_terms" -> ((s, d) =>
+    query("x29_salient_terms", ((s, d) =>
       ext.TextOps.salientTerms(t(s, d, "documents"), topN = 3)),
+      // x29 — identical tokenization, integer tf/df counts, and one IEEE
+      // division (correctly rounded in both engines, so the score doubles
+      // are bit-identical and the (score DESC, term) rank order coincides)
+      """WITH toks AS (
+           SELECT doc_id, unnest(list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0)) AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
+         dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+         scored AS (
+           SELECT t.doc_id, t.term, t.tf, d.df,
+                  CAST(t.tf AS DOUBLE) / d.df AS score
+           FROM tf t JOIN dfreq d ON d.term = t.term),
+         ranked AS (
+           SELECT *, row_number() OVER (PARTITION BY doc_id
+                                        ORDER BY score DESC, term) AS rk
+           FROM scored)
+         SELECT doc_id, term, tf, df, score FROM ranked WHERE rk <= 3"""),
 
     // corpus boilerplate census: top-20 3-grams by document frequency via
     // the native StringShingles expression + TakeOrderedAndProject
-    "x30_boilerplate_ngrams" -> ((s, d) =>
+    query("x30_boilerplate_ngrams", ((s, d) =>
       ext.TextOps.boilerplateNgrams(t(s, d, "documents"), k = 3, topN = 20)),
+      // x30 — same gram construction as x4's shingle CTE but keeping the
+      // STRING; distinct per doc so COUNT(*) is document frequency; the
+      // (df DESC, gram) tiebreak pins the top-20 cut deterministically
+      """WITH tok AS (
+           SELECT doc_id,
+                  list_filter(regexp_split_to_array(lower(text), '\s+'),
+                              t -> length(t) > 0) AS l
+           FROM documents),
+         g AS (
+           SELECT DISTINCT doc_id, unnest(list_filter(
+             list_transform(range(1, greatest(len(l) - 1, 1)),
+               i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]),
+             x -> x IS NOT NULL)) AS gram
+           FROM tok)
+         SELECT gram, COUNT(*) AS df FROM g
+         GROUP BY 1 ORDER BY df DESC, gram LIMIT 20"""),
 
     // ---- extensions: cleansing
     // x31 — ingestion normalization: NFC + control/NBSP→space + whitespace
@@ -1151,16 +1930,27 @@ object SparkEntry {
     // synthetic corpus lacks (decomposed e+◌́, composed é, tab, NBSP,
     // vertical tab, double spaces) so every normalization step is
     // exercised; DuckDB replays it via nfc_normalize + the same regexes.
-    "x31_normalize" -> ((s, d) =>
+    query("x31_normalize", ((s, d) =>
       t(s, d, "documents").select(col("doc_id"),
         ext.Cleanse.normalizeText(concat(col("text"),
           lit("  caf\u00e9 cafe\u0301\tden\u00a0x\u000b."))).as("text"))),
+      // x31 — DuckDB ships nfc_normalize (UAX #15, same normalization the
+      // JDK Normalizer implements); the injected tail is rebuilt from chr()
+      // codepoints (233 = é composed, 769 = combining acute, 9/160/11 =
+      // tab/NBSP/VT), then the identical strip-and-collapse regex chain runs
+      """SELECT doc_id,
+           trim(regexp_replace(regexp_replace(
+             nfc_normalize(text || '  caf' || chr(233) || ' cafe' ||
+                           chr(769) || chr(9) || 'den' || chr(160) || 'x' ||
+                           chr(11) || '.'),
+             '[\x00-\x1f\x7f\xa0]', ' ', 'g'), ' +', ' ', 'g')) AS text
+         FROM documents"""),
 
     // x32 — PII redaction over deterministic doc_id-derived plants (the
     // synthetic text has no PII, so the query injects an email, an IPv4,
     // and an international phone per doc, then scrubs them; the oracle
     // builds the identical plants and replays the same regex chain)
-    "x32_pii_redact" -> ((s, d) =>
+    query("x32_pii_redact", ((s, d) =>
       t(s, d, "documents").select(col("doc_id"),
         ext.Cleanse.redactPii(concat_ws(" ", col("text"),
           concat(lit("user"), col("doc_id").cast("string"),
@@ -1170,6 +1960,19 @@ object SparkEntry {
           concat(lit("+1 (202) 555-0"),
             lpad(pmod(col("doc_id"), lit(1000L)).cast("string"), 3, "0"))))
           .as("text"))),
+      // x32 — identical plants from doc_id arithmetic, identical regex
+      // chain (the patterns sit in the Java/RE2-common subset), same order:
+      // emails, then IPv4, then +-prefixed phones
+      """SELECT doc_id,
+           regexp_replace(regexp_replace(regexp_replace(
+             text || ' ' || 'user' || doc_id || '@example.com' ||
+             ' ' || '10.0.' || (doc_id % 256) || '.' || (doc_id % 100) ||
+             ' ' || '+1 (202) 555-0' ||
+             lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0'),
+             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+             '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
+             '\+[0-9][0-9 ()./-]{5,18}[0-9]', '<PHONE>', 'g') AS text
+         FROM documents"""),
 
     // x176 — ftfy-style MOJIBAKE repair (the encoding-damage cleanse
     // step): three plants per doc_id branch — Latin-1 mojibake
@@ -1179,7 +1982,7 @@ object SparkEntry {
     // text is pure ASCII (verified at every SF), so the repair outcome
     // is closed-form per branch; the oracle writes the repaired
     // literals from chr() code points.
-    "x176_mojibake_repair" -> ((s, d) => {
+    query("x176_mojibake_repair", ((s, d) => {
       val plant = when(pmod(col("doc_id"), lit(3L)) === 0,
           lit(" cafÃ© mÃ¼nchen"))
         .when(pmod(col("doc_id"), lit(3L)) === 1,
@@ -1190,45 +1993,194 @@ object SparkEntry {
         fixed.getField("text").as("text"),
         fixed.getField("repaired").as("repaired"))
     }),
+      // x176 — the repair outcome closed-form per plant branch: the
+      // engine's real byte-map + strict-UTF-8 decode must land exactly
+      // on the chr()-built repaired literals (branches 0/1) or leave the
+      // truncated-tail plant untouched (branch 2)
+      """SELECT doc_id,
+           text || CASE CAST(doc_id % 3 AS INTEGER)
+             WHEN 0 THEN ' caf' || chr(233) || ' m' || chr(252) || 'nchen'
+             WHEN 1 THEN ' it' || chr(8217) || 's fine'
+             ELSE ' bad' || chr(195) END AS text,
+           doc_id % 3 <> 2 AS repaired
+         FROM documents"""),
 
     // x181 — fill-in-the-middle transform (Bavarian et al. 2022): a
     // deterministic 50% of docs re-emit as <pre>P<suf>S<mid>M with
     // character cuts from three independent splitmix64 streams off the
     // doc id; the oracle replays the chains in HUGEINT and the same
     // signed-pmod/substr algebra.
-    "x181_fim_transform" -> ((s, d) =>
+    query("x181_fim_transform", ((s, d) =>
       ext.Curation.fimTransform(t(s, d, "documents"), fimPct = 50)),
+      // x181 — three composed splitmix64 chains replayed in HUGEINT (the
+      // x22 technique), then the same signed-pmod cuts and 1-based substr
+      // algebra; the PSM sentinel order is pinned byte for byte
+      s"""WITH f0 AS (SELECT doc_id, text,
+                 CAST(length(text) AS BIGINT) AS n,
+                 doc_id::HUGEINT AS u0 FROM documents),
+          ${smixCtes("f0", "u0", "ua", "fa")},
+          ${smixCtes("fa3", "ua", "ub", "fb")},
+          ${smixCtes("fb3", "ub", "uc", "fc")},
+          sgn AS (SELECT doc_id, text, n,
+                    ${signedSql("ua")} AS sa,
+                    ${signedSql("ub")} AS sb,
+                    ${signedSql("uc")} AS sc
+                  FROM fc3),
+          cuts AS (SELECT doc_id, text, n,
+                     ((sa % (n + 1)) + (n + 1)) % (n + 1) AS ca,
+                     ((sb % (n + 1)) + (n + 1)) % (n + 1) AS cb,
+                     ((sc % 100) + 100) % 100 < 50 AS fim_applied
+                   FROM sgn),
+          lh AS (SELECT doc_id, text, n, fim_applied,
+                   least(ca, cb) AS lo, greatest(ca, cb) AS hi
+                 FROM cuts)
+          SELECT doc_id, fim_applied, lo AS cut_lo, hi AS cut_hi,
+                 CASE WHEN fim_applied THEN
+                   '<|fim_prefix|>' ||
+                   substr(text, 1, CAST(lo AS INTEGER)) ||
+                   '<|fim_suffix|>' ||
+                   substr(text, CAST(hi + 1 AS INTEGER),
+                          CAST(n - hi AS INTEGER)) ||
+                   '<|fim_middle|>' ||
+                   substr(text, CAST(lo + 1 AS INTEGER),
+                          CAST(hi - lo AS INTEGER))
+                 ELSE text END AS text
+          FROM lh"""),
 
     // x182 — C4-style word-blocklist census: per blocked term, distinct
     // docs containing it and total token occurrences — the corpus-cost
     // pricing run before committing to a list. "quantum" never occurs,
     // pinning the inner-count semantics (absent terms emit no row).
-    "x182_blocklist_census" -> ((s, d) =>
+    query("x182_blocklist_census", ((s, d) =>
       ext.Curation.blocklistCensus(t(s, d, "documents"),
         Seq("hash", "vector", "stream", "quantum"))),
+      // x182 — the same whitespace tokens, literal IN-list, distinct-doc
+      // and occurrence counts (absent terms emit no row — inner semantics)
+      """WITH tok AS (
+           SELECT doc_id, unnest(list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0)) AS term
+           FROM documents)
+         SELECT term, COUNT(DISTINCT doc_id) AS n_docs,
+                COUNT(*) AS n_occurrences
+         FROM tok WHERE term IN ('hash', 'vector', 'stream', 'quantum')
+         GROUP BY 1"""),
 
     // x183 — character-entropy (compressibility) gate: order-0 code-point
     // entropy per doc via the native CharEntropy kernel, 6-dp rounded
     // (the x151 ln() libm rule), with both quality tails cut. The
     // oracle recomputes the same ascending-code-point Σ c·ln c fold.
-    "x183_entropy_gate" -> ((s, d) =>
+    query("x183_entropy_gate", ((s, d) =>
       ext.Curation.entropyGate(t(s, d, "documents"),
         minBits = 3.5, maxBits = 5.0)),
+      // x183 — the entropy kernel replayed: per-code-point counts, the
+      // Σ c·ln c fold in the SAME ascending character order (so only
+      // per-term libm ulps differ — absorbed by the 6-dp round), the
+      // identical (ln n − S/n)/ln 2 parenthesization, inclusive tails
+      """WITH ch AS (
+           SELECT doc_id, unnest(list_transform(
+             range(1, length(text) + 1),
+             i -> substr(text, CAST(i AS INTEGER), 1))) AS c
+           FROM documents WHERE length(text) > 0),
+         cnt AS (SELECT doc_id, c, CAST(COUNT(*) AS DOUBLE) AS k
+                 FROM ch GROUP BY 1, 2),
+         agg AS (SELECT doc_id,
+                   CAST(SUM(k) AS BIGINT) AS n_chars,
+                   CAST(COUNT(*) AS BIGINT) AS n_distinct,
+                   SUM(k) AS nd,
+                   list_reduce(
+                     list_prepend(0.0::DOUBLE, list(k * ln(k) ORDER BY c)),
+                     (a, b) -> a + b) AS s
+                 FROM cnt GROUP BY 1)
+         SELECT doc_id, n_chars, n_distinct,
+                round((ln(nd) - s / nd) / ln(2), 6) AS ent_bits,
+                round((ln(nd) - s / nd) / ln(2), 6) >= 3.5 AND
+                round((ln(nd) - s / nd) / ln(2), 6) <= 5.0 AS keep
+         FROM agg"""),
 
     // x184 — SFT loss-mask spans over the x93 chat template: one row per
     // assistant turn with the 0-based [start,end) character span of its
     // content inside the rendered string, plus the extracted span text
     // (self-checking against the template fold).
-    "x184_chat_loss_mask" -> ((s, d) =>
+    query("x184_chat_loss_mask", ((s, d) =>
       ext.Curation.chatLossMask(t(s, d, "documents"))),
+      // x184 — the x93 template's offsets replayed closed-form: header +
+      // ⌊i/2⌋·21+8 role chars + 2i newlines + the char mass of the first
+      // 8i tokens + 7i separators + 14 for '<|assistant|>\n'
+      """WITH tok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0) AS ts
+           FROM documents),
+         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
+         r AS (SELECT doc_id, ts, n, (n + 7) // 8 AS k FROM nt),
+         ast AS (SELECT doc_id, ts, n, unnest(range(0, k)) AS i FROM r),
+         calc AS (
+           SELECT doc_id, CAST(i AS INTEGER) AS turn_idx,
+             length('<|system|>' || chr(10) ||
+                    'You are a helpful assistant.' || chr(10)) +
+             (i // 2) * 21 + 8 + i * 2 +
+             length(array_to_string(ts[1:CAST(i * 8 AS INTEGER)], '')) +
+             i * 7 + 14 AS s,
+             array_to_string(
+               ts[CAST(i * 8 + 1 AS INTEGER):CAST(LEAST(n, i * 8 + 8) AS INTEGER)],
+               ' ') AS span_text
+           FROM ast WHERE i % 2 = 1)
+         SELECT doc_id, turn_idx,
+                CAST(s AS BIGINT) AS span_start,
+                CAST(s + length(span_text) AS BIGINT) AS span_end,
+                CAST(length(span_text) AS BIGINT) AS span_chars,
+                span_text
+         FROM calc"""),
 
     // x185 — T5 span corruption (Raffel et al. 2020 §3.1.4): blocked
     // deterministic spans — every full 20-token block hides a 3-token
     // span (15% corruption) at a mix64(doc_id·2^20+block)-derived
     // offset; inputs/targets carry the sentinel numbering. The oracle
     // replays the per-block chains through staged list_transforms.
-    "x185_span_corrupt" -> ((s, d) =>
+    query("x185_span_corrupt", ((s, d) =>
       ext.Curation.spanCorrupt(t(s, d, "documents"))),
+      // x185 — the per-block splitmix64 chains replayed through staged
+      // list_transform lambdas (one stage per finalizer step — nesting
+      // the chain would duplicate the HUGEINT algebra 16x), then the
+      // same inclusive-slice reassembly and sentinel numbering
+      s"""WITH tok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS ts
+           FROM documents),
+         base AS (SELECT doc_id, ts, len(ts) AS n, len(ts) // 20 AS nb
+                  FROM tok),
+         h0 AS (SELECT *, list_transform(range(0, nb),
+                  b -> (doc_id * 1048576 + b)::HUGEINT) AS u0s FROM base),
+         h1 AS (SELECT *, list_transform(u0s, u -> ${mulmodSql(
+             "xor(u, u // 1073741824::HUGEINT)", Mix64C1)}) AS u1s FROM h0),
+         h2 AS (SELECT *, list_transform(u1s, u -> ${mulmodSql(
+             "xor(u, u // 134217728::HUGEINT)", Mix64C2)}) AS u2s FROM h1),
+         h3 AS (SELECT *, list_transform(u2s,
+                  u -> xor(u, u // 2147483648::HUGEINT)) AS uhs FROM h2),
+         offs AS (SELECT doc_id, ts, n, nb,
+                    list_transform(uhs,
+                      u -> ((${signedSql("u")} % 18) + 18) % 18) AS os
+                  FROM h3),
+         built AS (SELECT doc_id, n, nb,
+           array_to_string(
+             flatten(list_transform(range(0, nb), b ->
+               ts[CAST(b*20+1 AS INTEGER):CAST(b*20 + os[b+1] AS INTEGER)]
+               || ['<extra_id_' || b || '>']
+               || ts[CAST(b*20 + os[b+1] + 4 AS INTEGER):CAST((b+1)*20 AS INTEGER)]))
+             || ts[CAST(nb*20+1 AS INTEGER):CAST(n AS INTEGER)],
+             ' ') AS inputs,
+           array_to_string(
+             flatten(list_transform(range(0, nb), b ->
+               ['<extra_id_' || b || '>']
+               || ts[CAST(b*20 + os[b+1] + 1 AS INTEGER):CAST(b*20 + os[b+1] + 3 AS INTEGER)]))
+             || ['<extra_id_' || nb || '>'],
+             ' ') AS targets
+           FROM offs)
+         SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
+                CAST(nb AS BIGINT) AS n_spans, inputs, targets
+         FROM built"""),
 
     // x188 — UL2 mixture-of-denoisers (Tay et al. 2022): each doc is
     // hash-assigned R (3-of-20 spans), S (prefix-LM cut) or X (8-of-16
@@ -1236,35 +2188,237 @@ object SparkEntry {
     // independent of the span/cut streams. The oracle replays mode and
     // cut through composed smix chains and the block offsets through
     // the x185 staged lambdas with mode-CASEd block geometry.
-    "x188_ul2_denoisers" -> ((s, d) =>
+    query("x188_ul2_denoisers", ((s, d) =>
       ext.Curation.ul2Denoisers(t(s, d, "documents"))),
+      // x188 — mode and prefix cut through composed smix chains (per-row),
+      // block offsets through the x185 staged lambdas with mode-CASEd
+      // geometry (bb/bl/nb columns close over the lambdas); every branch
+      // is total so the vectorized CASE can evaluate either side safely
+      s"""WITH tok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS ts
+           FROM documents),
+         u0 AS (SELECT doc_id, ts, len(ts) AS n,
+                  (doc_id + 1000003)::HUGEINT AS um,
+                  (doc_id * 1048576)::HUGEINT AS uc
+                FROM tok),
+         ${smixCtes("u0", "um", "uhm", "ga")},
+         ${smixCtes("ga3", "uc", "uhc", "gb")},
+         modal0 AS (SELECT doc_id, ts, n,
+             CAST(((${signedSql("uhm")} % 3) + 3) % 3 AS INTEGER) AS mode,
+             CAST(((${signedSql("uhc")} % (n + 1)) + (n + 1)) % (n + 1)
+                  AS INTEGER) AS scut
+           FROM gb3),
+         modal AS (SELECT *,
+             CASE mode WHEN 0 THEN n // 20 WHEN 2 THEN n // 16
+                       ELSE 0 END AS nb,
+             CASE mode WHEN 0 THEN 20 WHEN 2 THEN 16 ELSE 1 END AS bb,
+             CASE mode WHEN 0 THEN 3 WHEN 2 THEN 8 ELSE 0 END AS bl
+           FROM modal0),
+         g0 AS (SELECT *, list_transform(range(0, nb),
+                  b -> (doc_id * 1048576 + b)::HUGEINT) AS l0 FROM modal),
+         g1 AS (SELECT *, list_transform(l0, u -> ${mulmodSql(
+             "xor(u, u // 1073741824::HUGEINT)", Mix64C1)}) AS l1 FROM g0),
+         g2 AS (SELECT *, list_transform(l1, u -> ${mulmodSql(
+             "xor(u, u // 134217728::HUGEINT)", Mix64C2)}) AS l2 FROM g1),
+         g3 AS (SELECT *, list_transform(l2,
+                  u -> xor(u, u // 2147483648::HUGEINT)) AS lh FROM g2),
+         goffs AS (SELECT doc_id, ts, n, mode, scut, nb, bb, bl,
+             list_transform(lh,
+               u -> ((${signedSql("u")} % (bb - bl + 1)) + (bb - bl + 1))
+                    % (bb - bl + 1)) AS os
+           FROM g3),
+         built AS (SELECT doc_id, mode, n, nb,
+             CASE WHEN mode = 1
+               THEN array_to_string(
+                 ts[1:CAST(scut AS INTEGER)] || ['<extra_id_0>'], ' ')
+               ELSE array_to_string(
+                 flatten(list_transform(range(0, nb), b ->
+                   ts[CAST(b*bb+1 AS INTEGER):CAST(b*bb + os[b+1] AS INTEGER)]
+                   || ['<extra_id_' || b || '>']
+                   || ts[CAST(b*bb + os[b+1] + bl + 1 AS INTEGER):CAST((b+1)*bb AS INTEGER)]))
+                 || ts[CAST(nb*bb+1 AS INTEGER):CAST(n AS INTEGER)], ' ')
+             END AS inputs,
+             CASE WHEN mode = 1
+               THEN array_to_string(
+                 ['<extra_id_0>'] ||
+                 ts[CAST(scut+1 AS INTEGER):CAST(n AS INTEGER)], ' ')
+               ELSE array_to_string(
+                 flatten(list_transform(range(0, nb), b ->
+                   ['<extra_id_' || b || '>']
+                   || ts[CAST(b*bb + os[b+1] + 1 AS INTEGER):CAST(b*bb + os[b+1] + bl AS INTEGER)]))
+                 || ['<extra_id_' || nb || '>'], ' ')
+             END AS targets
+           FROM goffs)
+         SELECT doc_id, mode, CAST(n AS BIGINT) AS n_tokens,
+                CAST(CASE WHEN mode = 1 THEN 1 ELSE nb END AS BIGINT)
+                  AS n_spans,
+                inputs, targets
+         FROM built"""),
 
     // x186 — n-gram novelty (the WIMBD memorization audit): per doc,
     // the fraction of its distinct 5-gram shingles occurring in no
     // other document. Hash-keyed, string-mirrored in the oracle (the
     // x21 collision-immaterial equivalence).
-    "x186_ngram_novelty" -> ((s, d) =>
+    query("x186_ngram_novelty", ((s, d) =>
       ext.Curation.ngramNovelty(t(s, d, "documents"), shingleK = 5)),
+      // x186 — the x21 equivalence at k=5: STRING shingles, distinct per
+      // doc, df = plain count over the distinct sets; novelty is one
+      // correctly-rounded integer division
+      """WITH vtok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0) AS l
+           FROM documents),
+         vsh AS (
+           SELECT DISTINCT doc_id, unnest(list_filter(
+             list_transform(range(1, greatest(len(l) - 3, 1)),
+               i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2] || ' ' ||
+                    l[i+3] || ' ' || l[i+4]),
+             x -> x IS NOT NULL)) AS shingle
+           FROM vtok),
+         vsizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM vsh GROUP BY 1),
+         vdf AS (SELECT shingle, COUNT(*) AS df FROM vsh GROUP BY 1),
+         vnov AS (SELECT s.doc_id,
+                    SUM(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS n_novel
+                  FROM vsh s JOIN vdf d ON d.shingle = s.shingle
+                  GROUP BY 1)
+         SELECT z.doc_id, CAST(z.n_sh AS BIGINT) AS n_sh,
+                CAST(v.n_novel AS BIGINT) AS n_novel,
+                CAST(v.n_novel AS DOUBLE) / z.n_sh AS novelty
+         FROM vsizes z JOIN vnov v ON v.doc_id = z.doc_id"""),
 
     // x189 — length-bucketed batching report: padding waste per
     // (source, 16-token length bucket) under 8-doc batches, with the
     // id-ordered per-source baseline waste on every row — the report
     // that prices dynamic batching.
-    "x189_length_batching" -> ((s, d) =>
+    query("x189_length_batching", ((s, d) =>
       ext.Curation.lengthBatching(t(s, d, "documents"))),
+      // x189 — the same bucket/batch windows replayed: unfiltered token
+      // count (the x9 convention), row_number batching in (source,
+      // bucket, doc_id) order, waste = cnt·max − sum per batch
+      """WITH lb AS (
+           SELECT source, doc_id,
+             CAST(len(regexp_split_to_array(lower(text), '\s+'))
+                  AS BIGINT) AS nt
+           FROM documents),
+         lbb AS (SELECT *, CAST(nt // 16 AS INTEGER) AS bucket FROM lb),
+         wb AS (SELECT source, bucket, nt,
+                  CAST((ROW_NUMBER() OVER (PARTITION BY source, bucket
+                        ORDER BY doc_id) - 1) // 8 AS INTEGER) AS batch
+                FROM lbb),
+         bb AS (SELECT source, bucket, batch, COUNT(*) AS cnt,
+                       MAX(nt) AS mx, CAST(SUM(nt) AS BIGINT) AS sm
+                FROM wb GROUP BY 1, 2, 3),
+         bro AS (SELECT source, CAST(bucket AS BIGINT) AS bucket,
+                        CAST(SUM(cnt) AS BIGINT) AS n_docs,
+                        COUNT(*) AS n_batches,
+                        CAST(SUM(cnt * mx - sm) AS BIGINT) AS waste_tokens
+                 FROM bb GROUP BY 1, 2),
+         sb AS (SELECT source, nt,
+                  CAST((ROW_NUMBER() OVER (PARTITION BY source
+                        ORDER BY doc_id) - 1) // 8 AS INTEGER) AS batch
+                FROM lb),
+         sbb AS (SELECT source, batch, COUNT(*) AS cnt, MAX(nt) AS mx,
+                        CAST(SUM(nt) AS BIGINT) AS sm
+                 FROM sb GROUP BY 1, 2),
+         bl AS (SELECT source,
+                  CAST(SUM(cnt * mx - sm) AS BIGINT) AS baseline_waste_tokens
+                FROM sbb GROUP BY 1)
+         SELECT b.source, b.bucket, b.n_docs, b.n_batches, b.waste_tokens,
+                l.baseline_waste_tokens
+         FROM bro b JOIN bl l ON l.source = b.source"""),
 
     // x190 — the per-source data card (Gebru et al. 2021 datasheet
     // rollup): doc/token/char mass, declared-language spread + entropy
     // (ascending-lang fold, 6dp), and the Gopher pass rate.
-    "x190_data_card" -> ((s, d) =>
+    query("x190_data_card", ((s, d) =>
       ext.Curation.dataCard(t(s, d, "documents"))),
+      // x190 — the datasheet rollup replayed on the x68 gopher CTEs: the
+      // same two-level (source, lang) → source aggregation, the entropy
+      // fold ascending by lang (the x183 replay-order rule), exact
+      // integer pass fraction
+      s"""WITH ${gopherCtesOver("documents", "text")},
+          db AS (SELECT d.source, d.lang, d.doc_id,
+                   CAST(len(list_filter(
+                     regexp_split_to_array(lower(d.text), '\\s+'),
+                     t -> length(t) > 0)) AS BIGINT) AS nt,
+                   CAST(length(d.text) AS BIGINT) AS nc,
+                   (g.r_word_count AND g.r_mean_word_len AND g.r_symbol_ratio
+                    AND g.r_alpha_words AND g.r_stopwords) AS keep
+                 FROM documents d JOIN g2 g ON g.doc_id = d.doc_id),
+          dl AS (SELECT source, lang, COUNT(*) AS c,
+                        CAST(SUM(nt) AS BIGINT) AS nt,
+                        CAST(SUM(nc) AS BIGINT) AS nc,
+                        CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END)
+                             AS BIGINT) AS nk
+                 FROM db GROUP BY 1, 2),
+          ds AS (SELECT source,
+                   CAST(SUM(c) AS BIGINT) AS n_docs,
+                   CAST(SUM(nt) AS BIGINT) AS n_tokens,
+                   CAST(SUM(nc) AS BIGINT) AS n_chars,
+                   COUNT(*) AS n_langs,
+                   CAST(SUM(nk) AS BIGINT) AS n_keep,
+                   list_reduce(list_prepend(0.0::DOUBLE,
+                     list(c::DOUBLE * ln(c::DOUBLE) ORDER BY lang)),
+                     (a, b) -> a + b) AS s
+                 FROM dl GROUP BY 1)
+          SELECT source, n_docs, n_tokens, n_chars, n_langs,
+                 round((ln(n_docs::DOUBLE) - s / n_docs::DOUBLE) / ln(2), 6)
+                   AS lang_entropy,
+                 n_keep::DOUBLE / n_docs::DOUBLE AS gopher_keep_frac
+          FROM ds"""),
 
     // x191 — best-fit-decreasing bin packing (Ding et al. 2024): the
     // never-split packing tier; per-source sequential BFD in
     // flatMapGroups, assignment replayed doc by doc in the oracle's
     // recursive CTE (list-state per shard, lockstep iterations).
-    "x191_bestfit_pack" -> ((s, d) =>
+    query("x191_bestfit_pack", ((s, d) =>
       ext.Curation.packBestFit(t(s, d, "documents"))),
+      // x191 — BFD replayed exactly: per-shard list state (bin
+      // remainders + assignments) advancing one doc per recursive
+      // iteration, all shards in lockstep; best fit = list_min of the
+      // fitting remainders, ties to the first (lowest) bin index;
+      // oversize docs open a negative-remainder bin that never fits
+      // again — the engine's single rule
+      """WITH RECURSIVE pbr AS (
+           SELECT source, doc_id,
+             CAST(len(regexp_split_to_array(lower(text), '\s+'))
+                  AS BIGINT) AS nt
+           FROM documents),
+         prk AS (SELECT source, doc_id, nt,
+                   ROW_NUMBER() OVER (PARTITION BY source
+                     ORDER BY nt DESC, doc_id) AS rk
+                 FROM pbr),
+         pst AS (
+           SELECT source, 0::BIGINT AS it, []::BIGINT[] AS rems,
+                  []::STRUCT(doc_id BIGINT, nt BIGINT, bin BIGINT)[]
+                    AS assigns
+           FROM (SELECT DISTINCT source FROM pbr)
+           UNION ALL
+           SELECT s.source, s.it + 1,
+             CASE WHEN l.best IS NULL
+                  THEN list_append(s.rems, 128 - r.nt)
+                  ELSE list_transform(s.rems, (x, i) ->
+                         CASE WHEN i = list_position(s.rems, l.best)
+                              THEN x - r.nt ELSE x END) END,
+             list_append(s.assigns, {'doc_id': r.doc_id, 'nt': r.nt,
+               'bin': CASE WHEN l.best IS NULL THEN len(s.rems)
+                           ELSE list_position(s.rems, l.best) - 1 END})
+           FROM pst s
+           JOIN prk r ON r.source = s.source AND r.rk = s.it + 1,
+           LATERAL (SELECT list_min(list_filter(s.rems,
+                      x -> x >= r.nt)) AS best) l
+         ),
+         pfin AS (SELECT source, assigns,
+                    ROW_NUMBER() OVER (PARTITION BY source
+                      ORDER BY it DESC) AS rr
+                  FROM pst)
+         SELECT f.source, u.a.doc_id AS doc_id, u.a.nt AS n_tokens,
+                u.a.bin AS bin_id
+         FROM pfin f, LATERAL (SELECT unnest(f.assigns) AS a) u
+         WHERE f.rr = 1"""),
 
     // x192 — tokenizer-selection audit: the trained WORD-level table
     // (x106) and the trained BYTE-level table (x119, on its fixture
@@ -1272,7 +2426,7 @@ object SparkEntry {
     // token-budget comparison a pipeline reads before pinning its
     // tokenizer. Both training chains are the memoized one-pass
     // trainers; the oracle composes both proven replay chains.
-    "x192_tokenizer_compare" -> ((s, d) => {
+    query("x192_tokenizer_compare", ((s, d) => {
       val w = ext.TextOps.bpeReport(t(s, d, "documents"),
           merges = bpeTrained(s, d).map(m => (m._1, m._2)))
         .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"))
@@ -1284,21 +2438,83 @@ object SparkEntry {
         col("n_byte_tokens").cast("double") /
           col("n_bpe_tokens").cast("double"))
     }),
+      // x192 — both proven training/apply chains composed in one WITH
+      // (the word chain's t* CTEs and the byte chain's b* CTEs are
+      // disjoint by prefix), joined per doc; one correctly-rounded ratio
+      s"""WITH ${bpeTrainCtes(12)},
+          ${byteTrainCtes(12)},
+          wagg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
+                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_bpe_tokens
+                   FROM twordocc o JOIN tw12 v USING (w)
+                   GROUP BY o.doc_id),
+          bagg AS (SELECT o.doc_id, CAST(SUM(v.nb) AS BIGINT) AS n_bytes,
+                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_byte_tokens
+                   FROM boc o JOIN btw12 v USING (w)
+                   GROUP BY o.doc_id)
+          SELECT w.doc_id, w.n_words, w.n_bpe_tokens, b.n_bytes,
+                 b.n_byte_tokens,
+                 CAST(b.n_byte_tokens AS DOUBLE) /
+                   CAST(w.n_bpe_tokens AS DOUBLE) AS byte_per_word_ratio
+          FROM wagg w JOIN bagg b USING (doc_id)"""),
 
     // x193 — rare-token scrub (vocabulary pruning / UNK-ing): any token
     // in fewer than 3 distinct documents is replaced by <unk> — the
     // classic closed-vocabulary step doubling as rare-identifier
     // suppression. The x33 census shape: term-keyed df, join back,
     // position-ordered reassembly.
-    "x193_rare_token_scrub" -> ((s, d) =>
+    query("x193_rare_token_scrub", ((s, d) =>
       ext.Cleanse.rareTokenScrub(t(s, d, "documents"), minDf = 3L)),
+      // x193 — the same df census and position-ordered reassembly: terms
+      // with fewer than 3 distinct docs become <unk>; string keys
+      // coincide with the engine's term keys verbatim
+      """WITH rt0 AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0) AS l
+           FROM documents),
+         rt AS (SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
+                       l[CAST(u.i + 1 AS INTEGER)] AS term
+                FROM rt0, unnest(range(0, len(l))) AS u(i)),
+         rdf AS (SELECT term, COUNT(DISTINCT doc_id) AS df
+                 FROM rt GROUP BY 1),
+         rj AS (SELECT r.doc_id, r.pos,
+                  CASE WHEN d.df < 3 THEN '<unk>' ELSE r.term END AS term2,
+                  CASE WHEN d.df < 3 THEN 1 ELSE 0 END AS sc
+                FROM rt r JOIN rdf d ON d.term = r.term)
+         SELECT doc_id, COUNT(*) AS n_tokens,
+                CAST(SUM(sc) AS BIGINT) AS n_scrubbed,
+                string_agg(term2, ' ' ORDER BY pos) AS text
+         FROM rj GROUP BY 1"""),
 
     // x194 — edit-distance (Levenshtein) nearest neighbor under
     // (first-token, length-bucket) blocking: the short-string near-dup
     // tier (instruction/title dedup). Oracle recomputes levenshtein()
     // itself — both engines implement the same classic DP.
-    "x194_edit_neardup" -> ((s, d) =>
+    query("x194_edit_neardup", ((s, d) =>
       ext.Dedup.editNearDups(t(s, d, "documents"))),
+      // x194 — blocked Levenshtein nearest neighbor: DuckDB recomputes
+      // edit distance with its own levenshtein(); blocking (first token,
+      // length div 16, group cap 256) replayed verbatim; argmin tiebreak
+      // = (distance, neighbor id) via row_number
+      """WITH ek AS (
+           SELECT doc_id, text AS txt,
+                  list_filter(regexp_split_to_array(lower(text), '\s+'),
+                              t -> length(t) > 0)[1] AS k1,
+                  length(text) // 16 AS k2
+           FROM documents),
+         eg AS (SELECT k1, k2 FROM ek GROUP BY 1, 2
+                HAVING COUNT(*) > 1 AND COUNT(*) <= 256),
+         en AS (SELECT a.doc_id, b.doc_id AS nb,
+                       CAST(levenshtein(a.txt, b.txt) AS BIGINT) AS d
+                FROM ek a
+                JOIN eg g ON g.k1 IS NOT DISTINCT FROM a.k1
+                         AND g.k2 = a.k2
+                JOIN ek b ON b.k1 IS NOT DISTINCT FROM a.k1
+                         AND b.k2 = a.k2 AND b.doc_id <> a.doc_id)
+         SELECT doc_id, d AS min_edit_dist, nb AS neighbor_id
+         FROM (SELECT doc_id, d, nb, ROW_NUMBER() OVER (
+                 PARTITION BY doc_id ORDER BY d, nb) AS rn FROM en)
+         WHERE rn = 1"""),
 
     // x199 — semantic cluster census (Tirumala et al. 2023 D4): Lloyd-
     // trained k-means over the embedding corpus (k=8, 2 iterations),
@@ -1307,42 +2523,233 @@ object SparkEntry {
     // trainer: seed = first-8 vectors, each iteration's argmax
     // assignment and decimal-sum means as CTEs, empty clusters carrying
     // their previous centroid.
-    "x199_kmeans_census" -> ((s, d) =>
+    query("x199_kmeans_census", ((s, d) =>
       ext.Similarity.kmeansCensusOf(t(s, d, "embeddings"),
         kmeansTrained(s, d))),
+      // x199 — the whole Lloyd trainer replayed (seed, two iterations,
+      // final assignment), then the census: member count, decimal-routed
+      // mean cohesion, exemplar = (cc DESC, vec_id) first
+      s"""WITH $kmeansFinalCtes,
+          kex AS (
+            SELECT cid, vec_id FROM (
+              SELECT cid, vec_id, ROW_NUMBER() OVER (
+                PARTITION BY cid ORDER BY cc DESC, vec_id) AS rn
+              FROM kfa) WHERE rn = 1),
+          kcen AS (
+            SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vecs,
+                   round(${graft.ops.Stable.avgSql("cc")}, 6) AS mean_cos
+            FROM kfa GROUP BY 1)
+          SELECT c.cid, c.n_vecs, c.mean_cos, e.vec_id AS exemplar_id
+          FROM kcen c JOIN kex e USING (cid)"""),
 
     // x200 — cluster-balanced sample: 10 members per trained cluster by
     // splitmix64 rank — the D4 diversification cut; composes the x199
     // assignment with the x24 stratified-sample rank rule.
-    "x200_cluster_sample" -> ((s, d) =>
+    query("x200_cluster_sample", ((s, d) =>
       ext.Similarity.kmeansBalancedSampleOf(t(s, d, "embeddings"),
         kmeansTrained(s, d))),
+      // x200 — the x24 splitmix64 rank rule stratified on the trained
+      // cluster id: 10 members per cluster
+      s"""WITH $kmeansFinalCtes,
+          km0 AS (SELECT vec_id, cid, vec_id::HUGEINT AS u0 FROM kfa),
+          km1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM km0),
+          km2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM km1),
+          km3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM km2),
+          ksgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
+                                       THEN uh - 18446744073709551616::HUGEINT
+                                       ELSE uh END AS BIGINT) AS sh FROM km3),
+          kranked AS (
+            SELECT vec_id, cid,
+                   row_number() OVER (PARTITION BY cid
+                                      ORDER BY sh, vec_id) AS rk
+            FROM ksgn)
+          SELECT vec_id, cid FROM kranked WHERE rk <= 10"""),
 
     // x201 — embedding isotropy diagnostics (Mu & Viswanath 2018): the
     // decimal-routed corpus mean vector, then mean norm, mean-vector
     // norm, and the anisotropy score (mean cosine to the mean
     // direction) in one scan-stage aggregate.
-    "x201_embedding_isotropy" -> ((s, d) =>
+    query("x201_embedding_isotropy", ((s, d) =>
       ext.Similarity.isotropyReport(t(s, d, "embeddings"))),
+      // x201 — the mean vector replayed as the same pos-keyed decimal
+      // aggregate; norms and cosines via list_dot_product (bit-identical
+      // to the Spark fold); the mean-vector norm is the same
+      // sqrt-of-self-dot both engines compute
+      s"""WITH im AS (
+            SELECT ii.i AS pos,
+                   CAST(SUM(CAST(CAST(e.embedding[CAST(ii.i + 1 AS INTEGER)]
+                             AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
+                     / COUNT(*) AS comp
+            FROM embeddings e,
+                 unnest(range(0, len(e.embedding))) ii(i)
+            GROUP BY 1),
+          imv AS (SELECT array_agg(comp ORDER BY pos) AS mvec FROM im)
+          SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
+                 round(${graft.ops.Stable.avgSql(
+                   "sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))")},
+                   6) AS mean_norm,
+                 round(sqrt(list_dot_product(v.mvec, v.mvec)), 6)
+                   AS mu_norm,
+                 CASE WHEN sqrt(list_dot_product(v.mvec, v.mvec)) = 0
+                      THEN NULL ELSE
+                 round(${graft.ops.Stable.avgSql(
+                   """(list_dot_product(CAST(e.embedding AS DOUBLE[]), v.mvec)
+                      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
+                                               CAST(e.embedding AS DOUBLE[])))
+                         * sqrt(list_dot_product(v.mvec, v.mvec))))""")},
+                   6) END AS mean_cos_to_mu
+          FROM embeddings e, imv v
+          GROUP BY v.mvec"""),
 
     // x209 — Heaps-law vocabulary growth: V(N) ∝ N^beta fitted at five
     // prefix checkpoints via the first-occurrence trick (no per-prefix
     // scans); the x208 scaled-integer OLS.
-    "x209_heaps_fit" -> ((s, d) =>
+    query("x209_heaps_fit", ((s, d) =>
       ext.TextOps.heapsFit(t(s, d, "documents"))),
+      // x209 — checkpoints from the row count (same ceil arithmetic),
+      // first-occurrence vocab counts, prefix token counts, the same
+      // scaled-ln coordinates and exact moments
+      """WITH hcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents),
+        |hk AS (SELECT CAST(ceil(0.05 * CAST(nd AS DOUBLE)) AS BIGINT) AS k1,
+        |              CAST(ceil(0.1 * CAST(nd AS DOUBLE)) AS BIGINT) AS k2,
+        |              CAST(ceil(0.2 * CAST(nd AS DOUBLE)) AS BIGINT) AS k3,
+        |              CAST(ceil(0.4 * CAST(nd AS DOUBLE)) AS BIGINT) AS k4,
+        |              CAST(ceil(0.8 * CAST(nd AS DOUBLE)) AS BIGINT) AS k5
+        |       FROM hcnt),
+        |htok AS (SELECT doc_id, unnest(list_filter(
+        |           regexp_split_to_array(lower(text), '\s+'),
+        |           x -> length(x) > 0)) AS term
+        |         FROM documents),
+        |hfir AS (SELECT term, MIN(doc_id) AS fid FROM htok GROUP BY 1),
+        |hv AS (SELECT
+        |         CAST(SUM(CASE WHEN fid < k.k1 THEN 1 ELSE 0 END) AS BIGINT) AS v1,
+        |         CAST(SUM(CASE WHEN fid < k.k2 THEN 1 ELSE 0 END) AS BIGINT) AS v2,
+        |         CAST(SUM(CASE WHEN fid < k.k3 THEN 1 ELSE 0 END) AS BIGINT) AS v3,
+        |         CAST(SUM(CASE WHEN fid < k.k4 THEN 1 ELSE 0 END) AS BIGINT) AS v4,
+        |         CAST(SUM(CASE WHEN fid < k.k5 THEN 1 ELSE 0 END) AS BIGINT) AS v5
+        |       FROM hfir, hk k),
+        |hn AS (SELECT
+        |         CAST(SUM(CASE WHEN doc_id < k.k1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+        |         CAST(SUM(CASE WHEN doc_id < k.k2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+        |         CAST(SUM(CASE WHEN doc_id < k.k3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
+        |         CAST(SUM(CASE WHEN doc_id < k.k4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
+        |         CAST(SUM(CASE WHEN doc_id < k.k5 THEN 1 ELSE 0 END) AS BIGINT) AS n5
+        |       FROM htok, hk k),
+        |hp AS (SELECT n1 AS nn, v1 AS vv FROM hv, hn
+        |       UNION ALL SELECT n2, v2 FROM hv, hn
+        |       UNION ALL SELECT n3, v3 FROM hv, hn
+        |       UNION ALL SELECT n4, v4 FROM hv, hn
+        |       UNION ALL SELECT n5, v5 FROM hv, hn),
+        |hx AS (SELECT
+        |         CAST(round(ln(CAST(nn AS DOUBLE)) * 1e9, 0) AS BIGINT) AS xi,
+        |         CAST(round(ln(CAST(vv AS DOUBLE)) * 1e9, 0) AS BIGINT) AS yi
+        |       FROM hp),
+        |hs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        |              CAST(SUM(xi) AS BIGINT) AS sx,
+        |              CAST(SUM(yi) AS BIGINT) AS sy,
+        |              SUM(xi::HUGEINT * yi::HUGEINT) AS sxy,
+        |              SUM(xi::HUGEINT * xi::HUGEINT) AS sxx
+        |       FROM hx)
+        |SELECT CAST(5 AS BIGINT) AS n_points, hv.v5 AS v_last,
+        |       hn.n5 AS n_last,
+        |       round(CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
+        |               AS DOUBLE)
+        |             / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
+        |               AS DOUBLE), 9) AS beta,
+        |       round(((CAST(sy AS DOUBLE)
+        |               - (CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
+        |                    AS DOUBLE)
+        |                  / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
+        |                    AS DOUBLE)) * CAST(sx AS DOUBLE))
+        |              / CAST(n AS DOUBLE)) / 1e9, 9) AS ln_c
+        |FROM hs, hv, hn""".stripMargin),
 
     // x208 — Zipf rank-frequency fit: OLS slope on (ln rank, ln freq)
     // over the top-200 terms, scaled-integer moments (the x204
     // discipline) — the one-row corpus-law sanity gate.
-    "x208_zipf_fit" -> ((s, d) =>
+    query("x208_zipf_fit", ((s, d) =>
       ext.TextOps.zipfFit(t(s, d, "documents"))),
+      // x208 — the same census, (freq DESC, term) cut, scaled-integer
+      // ln coordinates, exact HUGEINT moments, identical division and
+      // intercept parenthesization
+      """WITH zc AS (
+        |  SELECT t.term, CAST(COUNT(*) AS BIGINT) AS freq
+        |  FROM (SELECT unnest(list_filter(
+        |          regexp_split_to_array(lower(text), '\s+'),
+        |          x -> length(x) > 0)) AS term
+        |        FROM documents) t
+        |  GROUP BY 1),
+        |zt AS (SELECT term, freq, ROW_NUMBER() OVER (
+        |         ORDER BY freq DESC, term) AS rank
+        |       FROM zc QUALIFY rank <= 200),
+        |zp AS (SELECT
+        |         CAST(round(ln(CAST(rank AS DOUBLE)) * 1e9, 0) AS BIGINT)
+        |           AS xi,
+        |         CAST(round(ln(CAST(freq AS DOUBLE)) * 1e9, 0) AS BIGINT)
+        |           AS yi
+        |       FROM zt),
+        |zs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
+        |              CAST(SUM(xi) AS BIGINT) AS sx,
+        |              CAST(SUM(yi) AS BIGINT) AS sy,
+        |              SUM(xi::HUGEINT * yi::HUGEINT) AS sxy,
+        |              SUM(xi::HUGEINT * xi::HUGEINT) AS sxx
+        |       FROM zp)
+        |SELECT n AS n_ranks,
+        |       round(CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
+        |               AS DOUBLE)
+        |             / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
+        |               AS DOUBLE), 9) AS slope,
+        |       round(((CAST(sy AS DOUBLE)
+        |               - (CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
+        |                    AS DOUBLE)
+        |                  / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
+        |                    AS DOUBLE)) * CAST(sx AS DOUBLE))
+        |              / CAST(n AS DOUBLE)) / 1e9, 9) AS ln_intercept
+        |FROM zs""".stripMargin),
 
     // x207 — needle-in-a-haystack eval synthesis (the NIAH long-
     // context probe): 20 deterministic 256-token contexts from
     // splitmix64-assigned filler docs, needle depth sweeping
     // 0/25/50/75/100 % across evals, the expected answer riding along.
-    "x207_needle_evals" -> ((s, d) =>
+    query("x207_needle_evals", ((s, d) =>
       ext.Curation.needleEvals(t(s, d, "documents"))),
+      // x207 — the splitmix assignment (the x24 chain), the same
+      // (hash, id)-ordered filler concatenation, budget slice, and
+      // depth-swept splice; short evals dropped by the same len gate
+      s"""WITH nm0 AS (SELECT doc_id, text, doc_id::HUGEINT AS u0 FROM documents),
+          nm1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM nm0),
+          nm2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM nm1),
+          nm3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM nm2),
+          nsgn AS (SELECT doc_id, text,
+                     CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
+                               THEN uh - 18446744073709551616::HUGEINT
+                               ELSE uh END AS BIGINT) AS sh FROM nm3),
+          nas AS (SELECT doc_id, sh, ((sh % 20) + 20) % 20 AS ev,
+                    list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                t -> length(t) > 0) AS ts
+                  FROM nsgn),
+          ncum AS (SELECT *, SUM(len(ts)) OVER (
+                     PARTITION BY ev ORDER BY sh, doc_id
+                     ROWS UNBOUNDED PRECEDING) AS cum
+                   FROM nas),
+          nkept AS (SELECT * FROM ncum WHERE cum - len(ts) < 256),
+          nfil AS (SELECT ev,
+                     flatten(list(ts ORDER BY sh, doc_id))[1:256] AS filler
+                   FROM nkept GROUP BY ev),
+          ngood AS (SELECT * FROM nfil WHERE len(filler) = 256),
+          nout AS (SELECT ev,
+                     CAST(floor(CAST(ev % 5 AS DOUBLE) / 4.0 * 256)
+                       AS INTEGER) AS np,
+                     filler FROM ngood)
+          SELECT ev AS eval_id, np AS needle_pos,
+                 ev * 7 + 13 AS answer,
+                 array_to_string(list_concat(list_concat(
+                   filler[1:np],
+                   ['the', 'magic', 'number', 'is',
+                    CAST(ev * 7 + 13 AS VARCHAR)]),
+                   filler[np + 1:256]), ' ') AS text,
+                 CAST(261 AS BIGINT) AS n_tokens
+          FROM nout"""),
 
     // x206 — the safetensors weight-artifact lifecycle: train the x85
     // logistic model, write the weights as a .safetensors file (the
@@ -1350,7 +2757,7 @@ object SparkEntry {
     // buffers), reload, score from storage. Raw F64 bytes round-trip
     // bit-exactly, so this query IS x85 through the artifact boundary
     // and shares its oracle verbatim.
-    "x206_safetensors_stored" -> ((s, d) => {
+    query("x206_safetensors_stored", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("safetensors", d) { p =>
         val w = ext.TextOps.trainLogisticWeights(docs)
@@ -1365,6 +2772,11 @@ object SparkEntry {
         .asInstanceOf[graft.sources.Safetensors.F64].data
       ext.TextOps.scoreLogisticQuality(docs, w)
     }),
+      // x206 — safetensors is LOSSLESS (raw IEEE bytes), so the stored-
+      // weights scoring is BIT-IDENTICAL to the inline x85 run and the
+      // x85 oracle transfers verbatim; the hash match proves the header
+      // layout, offsets, and the F64 byte round trip end to end
+      logisticOracleSql),
 
     // x205 — the KN model's ARPA artifact lifecycle: train the x144
     // bigram model, WRITE the standard ARPA file (the KenLM/CCNet
@@ -1373,13 +2785,47 @@ object SparkEntry {
     // x95/x113 container discipline) — the oracle replays the KN chain
     // plus the exact quantization wrapper, so a hash match proves the
     // render/parse round trip end to end.
-    "x205_kn_arpa_stored" -> ((s, d) => {
+    query("x205_kn_arpa_stored", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("arpa", d)(p =>
         graft.sources.Arpa.writeLevels(s"$p/model.arpa",
           ext.TextOps.knArpaLevels(docs, order = 2)))
       ext.TextOps.knScoreStoredArpa(s, docs, s"$dir/model.arpa")
     }),
+      // x205 — the x144 chain with the ARPA quantization wrapper:
+      // pq = round(10^round(log10(p), 9), 9); on the training corpus
+      // every bigram is in the model, so only the present branch fires.
+      // A quantized probability that floors to exact 0 (possible below
+      // 5e-10 off-fixture) falls back to the unquantized 10^lp — the
+      // engine's guard, mirrored here
+      s"""WITH $knBigramStatCtes,
+        |q2 AS (
+        |  SELECT w1, w2,
+        |         CASE WHEN round(pow(10.0, lp), 9) > 0
+        |              THEN round(pow(10.0, lp), 9)
+        |              ELSE pow(10.0, lp) END AS pq
+        |  FROM (
+        |    SELECT c.w1, c.w2,
+        |           round(log10(
+        |             GREATEST(CAST(c.c2 AS DOUBLE) - 0.75, 0.0)
+        |               / CAST(h.c1 AS DOUBLE)
+        |             + ((0.75 * CAST(h.n1f AS DOUBLE))
+        |                / CAST(h.c1 AS DOUBLE))
+        |               * (CAST(p.n1p AS DOUBLE)
+        |                  / CAST(tt.n1tot AS DOUBLE))), 9) AS lp
+        |    FROM c2t c
+        |    JOIN h1 h ON h.w1 = c.w1
+        |    JOIN p2 p ON p.w2 = c.w2
+        |    CROSS JOIN tt)),
+        |valued AS (
+        |  SELECT o.doc_id, o.w1, o.w2, o.m,
+        |         CAST(o.m AS DOUBLE) / q.pq AS val
+        |  FROM occ o JOIN q2 q ON q.w1 = o.w1 AND q.w2 = o.w2)
+        |SELECT doc_id,
+        |       CAST(SUM(m) AS BIGINT) AS n_bigrams,
+        |       list_reduce(list(val ORDER BY w1, w2), (a, b) -> a + b)
+        |         / CAST(SUM(m) AS BIGINT) AS kn_score_q
+        |FROM valued GROUP BY doc_id""".stripMargin),
 
     // x210 — the ORDER-5 stored-LM lifecycle (KenLM's production
     // default): train the x166 order-5 KN model as DISTRIBUTED ARPA
@@ -1389,13 +2835,19 @@ object SparkEntry {
     // walk. On the training corpus every 5-gram is present, so the
     // oracle is the x166 chain plus the exact 9-dp quantization
     // wrapper — a hash match proves the whole artifact round trip.
-    "x210_kn5_arpa_stored" -> ((s, d) => {
+    query("x210_kn5_arpa_stored", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("arpa5", d)(p =>
         graft.sources.Arpa.writeLevels(s"$p/model.arpa",
           ext.TextOps.knArpaLevels(docs, order = 5)))
       ext.TextOps.knScoreStoredArpa(s, docs, s"$dir/model.arpa")
     }),
+      // x210 — the order-5 stored-ARPA lifecycle: the x166 chain plus
+      // the artifact's 9-dp quantization wrapper on the top-level
+      // probability (training corpus → only the present branch fires);
+      // the file layer cancels, so a hash match proves the distributed
+      // level build, the streamed section write, and the reload
+      knOracleSql(5, quantized = true)),
 
     // x220 — the PRODUCTION stored-LM shape: vocabulary-capped
     // (top-64 + <unk>) AND count-pruned (SRILM gtNmin-style cutoffs 2
@@ -1407,7 +2859,7 @@ object SparkEntry {
     // route through recomputed bows onto genuine mid-level entries
     // (including context-only grams — the -99-placeholder class the
     // round-16 advisory flagged, now carrying real probabilities).
-    "x220_kn_arpa_pruned" -> ((s, d) => {
+    query("x220_kn_arpa_pruned", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("arpa3p", d)(p =>
         graft.sources.Arpa.writeLevels(s"$p/model.arpa",
@@ -1415,6 +2867,12 @@ object SparkEntry {
             prune = Seq(1, 2, 2))))
       ext.TextOps.knScoreStoredArpa(s, docs, s"$dir/model.arpa")
     }),
+      // x220 — the capped + pruned order-3 lifecycle: cap, census,
+      // null-safe level probabilities, prune + closure, renormalized
+      // bows, and the quantized ARPA backoff walk, all replayed
+      // (knPrunedArpaOracleSql) — a hash match proves both bounds AND
+      // the backoff branch of the stored scorer end to end
+      knPrunedArpaOracleSql(64, 2, 2)),
 
     // x228 — the LITERAL production artifact: a capped AND count-
     // pruned ORDER-5 ARPA (KenLM's production order with SRILM gtNmin
@@ -1424,7 +2882,7 @@ object SparkEntry {
     // replay, proven cell-identical to the handwritten order-3 chain
     // on this corpus), so every closure/renorm/backoff branch replays
     // at order 5 too.
-    "x228_kn5_arpa_pruned" -> ((s, d) => {
+    query("x228_kn5_arpa_pruned", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("arpa5p", d)(p =>
         graft.sources.Arpa.writeLevels(s"$p/model.arpa",
@@ -1432,13 +2890,17 @@ object SparkEntry {
             prune = Seq(1, 1, 2, 2, 2))))
       ext.TextOps.knScoreStoredArpa(s, docs, s"$dir/model.arpa")
     }),
+      // x228 — the GENERATED order-5 capped+pruned replay: the x220
+      // chain's order-generic form at KenLM's production order
+      s"""WITH ${knPrunedOracleChainCtes(5, 64, Seq(1L, 1L, 2L, 2L, 2L))}
+         SELECT doc_id, n_ngrams, kn5_score_q FROM knp"""),
 
     // x229 — CCNet at FULL production fidelity: Wenzek et al. 2020
     // ship a PRUNED KenLM 5-gram; this is the x221 composition with
     // exactly that artifact (the memoized x228 model — one training
     // pays both queries). Bounded at any corpus scale AND the
     // production order — the end state of the r17-r18 stored-LM arc.
-    "x229_ccnet_kn5_pruned" -> ((s, d) => {
+    query("x229_ccnet_kn5_pruned", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("arpa5p", d)(p =>
         graft.sources.Arpa.writeLevels(s"$p/model.arpa",
@@ -1448,34 +2910,123 @@ object SparkEntry {
         ext.TextOps.knScoreStoredArpa(s, docs, s"$dir/model.arpa"),
         docs, scoreCol = "kn5_score_q", cntCol = "n_ngrams")
     }),
+      // x229 — the generated order-5 pruned chain feeding the x214
+      // tercile rule: CCNet replayed at full production fidelity
+      s"""WITH ${knPrunedOracleChainCtes(5, 64, Seq(1L, 1L, 2L, 2L, 2L))},
+         sl AS (SELECT k.doc_id, d.lang, k.n_ngrams,
+                       round(k.kn5_score_q, 9) AS ppl
+                FROM knp k JOIN documents d USING (doc_id)),
+         ${ccnetTercileSql("n_ngrams")}"""),
 
     // x204 — per-prompt reward z-normalization (Stiennon et al. 2020):
     // the standardization RM training data gets before pairwise loss;
     // same prompt/reward construction as x195, decimal-routed moments,
     // NULL z for degenerate prompts.
-    "x204_reward_standardize" -> ((s, d) =>
+    query("x204_reward_standardize", ((s, d) =>
       ext.Curation.rewardStandardize(
         t(s, d, "documents")
           .withColumn("prompt_id", pmod(col("doc_id"), lit(64L)))
           .withColumn("reward",
             ext.TextOps.qualityScore(col("text"))),
         promptCol = "prompt_id", rewardCol = "reward")),
+      // x204 — the x8 quality CTEs feed the SCALED-INTEGER moment route:
+      // ri = round(round(r,9)*1e9), exact HUGEINT S and Q, z =
+      // (n*ri - S)/sqrt(n*Q - S^2) — the cancellation-proof form
+      s"""WITH $qualityCtes,
+          zp AS (SELECT doc_id, doc_id % 64 AS prompt_id,
+                        quality AS reward,
+                        CAST(round(round(quality, 9) * 1e9, 0) AS BIGINT)
+                          AS ri
+                 FROM qual),
+          zs AS (SELECT prompt_id, CAST(COUNT(*) AS BIGINT) AS n,
+                        CAST(SUM(ri) AS BIGINT) AS s,
+                        SUM(ri::HUGEINT * ri::HUGEINT) AS q
+                 FROM zp GROUP BY 1),
+          zd AS (SELECT prompt_id, n, s,
+                        n::HUGEINT * q - s::HUGEINT * s::HUGEINT AS rad
+                 FROM zs)
+          SELECT p.doc_id, p.prompt_id, p.reward,
+                 CASE WHEN d.n > 1 AND d.rad > 0
+                      THEN round(CAST(d.n * p.ri - d.s AS DOUBLE)
+                                 / sqrt(CAST(d.rad AS DOUBLE)), 9)
+                      ELSE NULL END AS z
+          FROM zp p JOIN zd d USING (prompt_id)"""),
 
     // x203 — temperature-scaled mixture weights (XLM-R §3.1, alpha
     // 0.3): the multi-source up-sampling report; pow rounds at 9dp
     // before any arithmetic, the powered masses sum through
     // DECIMAL(28,9).
-    "x203_temperature_mix" -> ((s, d) =>
+    query("x203_temperature_mix", ((s, d) =>
       ext.Curation.temperatureMix(t(s, d, "documents"))),
+      // x203 — same 9dp-rounded pow, DECIMAL(28,9) powered-mass total,
+      // identical division parenthesization on every share
+      """WITH tm AS (
+           SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
+                  CAST(SUM(len(regexp_split_to_array(lower(text), '\s+')))
+                    AS BIGINT) AS n_tokens
+           FROM documents GROUP BY 1),
+         tp AS (SELECT *,
+                  round(pow(CAST(n_tokens AS DOUBLE), 0.3), 9) AS r
+                FROM tm),
+         tt AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS tt,
+                       CAST(SUM(CAST(r AS DECIMAL(28,9))) AS DOUBLE) AS tr
+                FROM tp)
+         SELECT p.source, p.n_docs, p.n_tokens,
+                round(CAST(p.n_tokens AS DOUBLE) / CAST(t.tt AS DOUBLE), 9)
+                  AS natural_share,
+                round(p.r / t.tr, 9) AS temp_share,
+                round((p.r / t.tr) /
+                  (CAST(p.n_tokens AS DOUBLE) / CAST(t.tt AS DOUBLE)), 9)
+                  AS boost
+         FROM tp p, tt t"""),
 
     // x202 — all-but-the-top corrected retrieval (Mu & Viswanath
     // 2018): mean-center, remove the trained top principal direction
     // (the x90 axis off the SAME memoized moment pass), then cosine
     // top-10 of the corrected query against the corrected corpus.
-    "x202_abtt_topk" -> ((s, d) =>
+    query("x202_abtt_topk", ((s, d) =>
       ext.Similarity.abttTopK(t(s, d, "embeddings"), queryVector,
         k = 10, moments = pcaMomentsFor(s, d))
         .withColumn("cos", round(col("cos"), 6))),
+      // x202 — ABTT replayed on the full x90 chain: μ and the trained
+      // axis re-derived from scratch, the query corrected in SQL with
+      // the same fold orders, per-vector corrected components as (vec, i)
+      // rows re-assembled for the list_dot_product cosine
+      s"""WITH $pcaOracleCtes,
+          abmuw AS (SELECT ${pcaFold("list(a.mu * v.w ORDER BY a.i)")} AS c0
+            FROM me a JOIN it20 v ON v.i = a.i),
+          abq AS (SELECT ii.i AS i,
+                         ($queryVectorSql)[CAST(ii.i + 1 AS INTEGER)] AS qv
+                  FROM range(0, 64) ii(i)),
+          abdpq AS (SELECT ${pcaFold("list(q.qv * v.w ORDER BY q.i)")} - m.c0
+                      AS dpq
+                    FROM abq q JOIN it20 v ON v.i = q.i
+                    CROSS JOIN abmuw m GROUP BY m.c0),
+          abqp AS (SELECT q.i, (q.qv - a.mu) - d.dpq * v.w AS comp
+                   FROM abq q JOIN me a ON a.i = q.i
+                   JOIN it20 v ON v.i = q.i CROSS JOIN abdpq d),
+          abqpl AS (SELECT array_agg(comp ORDER BY i) AS qpl FROM abqp),
+          abdp AS (SELECT e.vec_id,
+            ${pcaFold("list(CAST(e.embedding[CAST(v.i + 1 AS INTEGER)] AS DOUBLE) * v.w ORDER BY v.i)")}
+              - m.c0 AS dp
+            FROM embeddings e CROSS JOIN it20 v CROSS JOIN abmuw m
+            GROUP BY e.vec_id, m.c0),
+          abxp AS (SELECT d.vec_id, v.i,
+              (CAST(e.embedding[CAST(v.i + 1 AS INTEGER)] AS DOUBLE)
+                 - a.mu) - d.dp * v.w AS comp
+            FROM abdp d JOIN embeddings e USING (vec_id)
+            CROSS JOIN it20 v JOIN me a ON a.i = v.i),
+          abxpl AS (SELECT vec_id, array_agg(comp ORDER BY i) AS xpl
+                    FROM abxp GROUP BY vec_id)
+          SELECT vec_id,
+                 round(list_dot_product(x.xpl, q.qpl)
+                   / (sqrt(list_dot_product(x.xpl, x.xpl))
+                      * sqrt(list_dot_product(q.qpl, q.qpl))), 6) AS cos
+          FROM abxpl x CROSS JOIN abqpl q
+          ORDER BY list_dot_product(x.xpl, q.qpl)
+                   / (sqrt(list_dot_product(x.xpl, x.xpl))
+                      * sqrt(list_dot_product(q.qpl, q.qpl))) DESC, vec_id
+          LIMIT 10"""),
 
     // x198 — the three-family tokenizer BAKEOFF: trained word-BPE
     // (x106), trained byte-BPE (x119, on its fixture text) and the
@@ -1483,7 +3034,7 @@ object SparkEntry {
     // complete tokenizer-selection table (x192 widened by the third
     // family). All three training chains are memoized one-census
     // trainers; the oracle composes all three proven replays.
-    "x198_tokenizer_bakeoff" -> ((s, d) => {
+    query("x198_tokenizer_bakeoff", ((s, d) => {
       val w = ext.TextOps.bpeReport(t(s, d, "documents"),
           merges = bpeTrained(s, d).map(m => (m._1, m._2)))
         .select(col("doc_id"), col("n_words"), col("n_bpe_tokens"))
@@ -1502,26 +3053,72 @@ object SparkEntry {
           col("n_unigram_pieces").cast("double") /
             col("n_words").cast("double"))
     }),
+      // x198 — all THREE proven trainer replays composed in one WITH
+      // (prefix-disjoint: t*/tw* word chain, b* byte chain, u* unigram
+      // chain), joined per doc
+      s"""WITH RECURSIVE ${bpeTrainCtes(12)},
+          ${byteTrainCtes(12)},
+          $unigramTrainCtes,
+          ${unigramViterbiCtes("r3", "ur2v")},
+          uwp AS (SELECT w, np FROM ur3seg),
+          wagg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
+                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_bpe_tokens
+                   FROM twordocc o JOIN tw12 v USING (w)
+                   GROUP BY o.doc_id),
+          bagg AS (SELECT o.doc_id,
+                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_byte_tokens
+                   FROM boc o JOIN btw12 v USING (w)
+                   GROUP BY o.doc_id),
+          uagg AS (SELECT u0.doc_id,
+                          CAST(SUM(p.np) AS BIGINT) AS n_unigram_pieces
+                   FROM u0, unnest(u0.ws) t(w) JOIN uwp p USING (w)
+                   GROUP BY u0.doc_id)
+          SELECT w.doc_id, w.n_words, w.n_bpe_tokens, b.n_byte_tokens,
+                 u.n_unigram_pieces,
+                 CAST(w.n_bpe_tokens AS DOUBLE) /
+                   CAST(w.n_words AS DOUBLE) AS bpe_fertility,
+                 CAST(u.n_unigram_pieces AS DOUBLE) /
+                   CAST(w.n_words AS DOUBLE) AS unigram_fertility
+          FROM wagg w JOIN bagg b USING (doc_id)
+          JOIN uagg u USING (doc_id)"""),
 
     // x196 — unigram-LM (SentencePiece-family) tokenizer TRAINING: the
     // other subword family next to BPE, fit by hard-EM (Viterbi-EM)
     // with zero-count pruning; every score is a scaled-integer log-prob
     // so the oracle replays the whole trainer bit-for-bit — seed census,
     // top-K cut, and both EM rounds as recursive-CTE Viterbi chains.
-    "x196_unigram_train" -> ((s, d) =>
+    query("x196_unigram_train", ((s, d) =>
       ext.Unigram.trainReport(s, unigramTrained(s, d))),
+      // x196 — the WHOLE unigram trainer replayed: seed census, top-32
+      // cut, two hard-EM rounds (recursive-CTE Viterbi over the word
+      // census in lockstep, scaled-integer scores → exact BIGINT sums),
+      // zero-count pruning with the single-char floor
+      s"""WITH RECURSIVE $unigramTrainCtes
+          SELECT piece, cnt AS count, lp AS lp_scaled FROM ur2v"""),
 
     // x197 — the trained unigram tokenizer APPLIED: per-doc fertility
     // under the x196 vocabulary (the unigram twin of x106); the piece
     // table rides a broadcast into one scan-stage pass — zero exchange.
-    "x197_unigram_tokens" -> ((s, d) =>
+    query("x197_unigram_tokens", ((s, d) =>
       ext.Unigram.report(t(s, d, "documents"), unigramTrained(s, d))),
+      // x197 — one more Viterbi chain under the final ur2v vocabulary;
+      // per-word piece counts join back to the docs' word lists
+      s"""WITH RECURSIVE $unigramTrainCtes,
+          ${unigramViterbiCtes("r3", "ur2v")},
+          uwp AS (SELECT w, np FROM ur3seg)
+          SELECT u0.doc_id, CAST(len(u0.ws) AS BIGINT) AS n_words,
+                 CAST(SUM(p.np) AS BIGINT) AS n_pieces,
+                 CAST(SUM(p.np) AS DOUBLE) / CAST(len(u0.ws) AS DOUBLE)
+                   AS fertility
+          FROM u0, unnest(u0.ws) t(w) JOIN uwp p USING (w)
+          WHERE len(u0.ws) > 0
+          GROUP BY u0.doc_id, u0.ws"""),
 
     // x195 — DPO/RLHF preference-pair assembly: prompts = doc_id mod 64,
     // reward = the x8 quality score; per prompt the best-vs-worst pair
     // with a 0.05 margin gate. ONE prompt-keyed aggregate carrying both
     // extremes as min/max(struct) partials.
-    "x195_preference_pairs" -> ((s, d) =>
+    query("x195_preference_pairs", ((s, d) =>
       ext.Curation.preferencePairs(
         t(s, d, "documents")
           .withColumn("prompt_id", pmod(col("doc_id"), lit(64L)))
@@ -1529,26 +3126,92 @@ object SparkEntry {
             ext.TextOps.qualityScore(col("text"))),
         promptCol = "prompt_id", rewardCol = "reward",
         minMargin = 0.05)),
+      // x195 — preference pairs on the x8 quality CTEs: best/worst per
+      // prompt via row_number with the engine's exact tiebreaks
+      // (reward DESC, id) / (reward ASC, id); the 0.05 margin gate on the
+      // same one-op IEEE subtraction
+      s"""WITH $qualityCtes,
+          pp AS (SELECT doc_id, doc_id % 64 AS prompt_id, quality
+                 FROM qual),
+          pag AS (SELECT prompt_id, COUNT(*) AS n_candidates
+                  FROM pp GROUP BY 1),
+          pch AS (SELECT prompt_id, doc_id, quality, ROW_NUMBER() OVER (
+                    PARTITION BY prompt_id
+                    ORDER BY quality DESC, doc_id) AS rn FROM pp),
+          prj AS (SELECT prompt_id, doc_id, quality, ROW_NUMBER() OVER (
+                    PARTITION BY prompt_id
+                    ORDER BY quality ASC, doc_id) AS rn FROM pp)
+          SELECT c.prompt_id, a.n_candidates, c.doc_id AS chosen_id,
+                 r.doc_id AS rejected_id, c.quality AS chosen_reward,
+                 r.quality AS rejected_reward,
+                 c.quality - r.quality AS margin
+          FROM pch c
+          JOIN prj r USING (prompt_id) JOIN pag a USING (prompt_id)
+          WHERE c.rn = 1 AND r.rn = 1 AND a.n_candidates > 1
+            AND c.quality - r.quality >= 0.05"""),
 
     // x187 — token-distribution drift between snapshots (even doc_ids
     // = old crawl, odd = new): add-one KL(new||old) over the union
     // vocabulary; top-20 contributing terms with the decimal-routed
     // corpus total on every row.
-    "x187_token_drift" -> ((s, d) => {
+    query("x187_token_drift", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.tokenDrift(
         docs.filter(pmod(col("doc_id"), lit(2L)) === 0),
         docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
     }),
+      // x187 — identical add-one smoothing and p·ln(p/q) parenthesization
+      // (9-dp round per term — the ln() libm rule), the total through the
+      // DECIMAL(28,12) route, the same (contribution, term) cut order
+      """WITH wtok AS (
+           SELECT doc_id % 2 AS snap, unnest(list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0)) AS term
+           FROM documents),
+         wcen AS (SELECT term,
+             CAST(SUM(CASE WHEN snap = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_old,
+             CAST(SUM(CASE WHEN snap = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_new
+           FROM wtok GROUP BY 1),
+         wtot AS (SELECT CAST(SUM(c_old) AS BIGINT) AS n_old,
+                         CAST(SUM(c_new) AS BIGINT) AS n_new,
+                         COUNT(*) AS v
+                  FROM wcen),
+         wscore AS (SELECT term, c_old, c_new,
+             round(((c_new + 1)::DOUBLE / (n_new + v)::DOUBLE)
+               * ln(((c_new + 1)::DOUBLE / (n_new + v)::DOUBLE)
+                    / ((c_old + 1)::DOUBLE / (n_old + v)::DOUBLE)),
+               9) AS contribution
+           FROM wcen, wtot),
+         wkl AS (SELECT round(CAST(SUM(CAST(contribution
+                   AS DECIMAL(28,12))) AS DOUBLE), 6) AS kl_total
+                 FROM wscore)
+         SELECT term, c_old, c_new, contribution, kl_total
+         FROM wscore, wkl
+         ORDER BY contribution DESC, term
+         LIMIT 20"""),
 
     // x33 — corpus-wide line-level boilerplate removal (CCNet/RefinedWeb
     // step) on a re-lined corpus: the flat synthetic text is chunked into
     // 2-token lines (deterministically, mirrored in the oracle), then any
     // line occurring in >= 20 distinct docs is dropped from every doc
-    "x33_line_dedup" -> ((s, d) =>
+    query("x33_line_dedup", ((s, d) =>
       ext.Cleanse.removeBoilerplateLines(
         t(s, d, "documents").withColumn("text", twoTokenRelined),
         minDf = 20L)),
+      // x33 — same 2-token re-lining, line df over distinct docs, drop at
+      // df >= 20, reassemble in line order (the engine keys df on the
+      // line's xxhash64; string keys coincide absent 64-bit collisions)
+      s"""WITH $lineCensusCtes,
+         agg AS (SELECT doc_id,
+                        string_agg(line, chr(10) ORDER BY pos) AS clean_text,
+                        COUNT(*) AS n_kept
+                 FROM kept GROUP BY 1),
+         base AS (SELECT doc_id,
+                         CAST(greatest((len(l)+1)//2, 1) AS BIGINT) AS n_lines
+                  FROM tok)
+         SELECT b.doc_id, COALESCE(a.clean_text, '') AS text, b.n_lines,
+                CAST(COALESCE(a.n_kept, 0) AS BIGINT) AS n_kept
+         FROM base b LEFT JOIN agg a ON a.doc_id = b.doc_id"""),
 
     // x212 — the STORED boilerplate-censor lifecycle (the batch half
     // of the streaming corpus gate's line tier): census the corpus-df
@@ -1560,7 +3223,7 @@ object SparkEntry {
     // batch censor on every surviving row. (Contract difference from
     // x33, by design: a doc losing every line emits nothing here —
     // the stream twin cannot emit rows it never aggregates.)
-    "x212_stored_censor" -> ((s, d) => {
+    query("x212_stored_censor", ((s, d) => {
       val relined = t(s, d, "documents")
         .withColumn("text", twoTokenRelined)
       val dir = storedDir("boiler", d)(p =>
@@ -1568,6 +3231,21 @@ object SparkEntry {
           .mode("overwrite").parquet(s"$p/lines"))
       ext.Cleanse.censorLinesAgainst(relined, s.read.parquet(s"$dir/lines"))
     }),
+      // x212 — x33's inline df replay with an INNER join at the end
+      // (the stored-censor path emits only docs with >= 1 kept line);
+      // the artifact layer cancels, so the hash match proves the
+      // persist → reload → censor round trip
+      s"""WITH $lineCensusCtes,
+         agg AS (SELECT doc_id,
+                        string_agg(line, chr(10) ORDER BY pos) AS text,
+                        COUNT(*) AS n_kept
+                 FROM kept GROUP BY 1),
+         base AS (SELECT doc_id,
+                         CAST(greatest((len(l)+1)//2, 1) AS BIGINT) AS n_lines
+                  FROM tok)
+         SELECT b.doc_id, a.text, b.n_lines,
+                CAST(a.n_kept AS BIGINT) AS n_kept
+         FROM base b JOIN agg a ON a.doc_id = b.doc_id"""),
 
     // x213 — ExactSubstr with OWNER ELECTION (Lee et al. 2022): the
     // x37 window census extended with a deterministic owner per
@@ -1576,8 +3254,30 @@ object SparkEntry {
     // one copy of every repeated span — the suffix-array dedup's
     // actual product, where x37's strip removes all copies. Output is
     // the rebuilt text per doc plus the removal census.
-    "x213_exactsubstr_strip" -> ((s, d) =>
+    query("x213_exactsubstr_strip", ((s, d) =>
       ext.Dedup.exactSubstrStrip(t(s, d, "documents"), windowK = 8)),
+      // x213 — the x37 gram replay with owner election as a row_number
+      // over (doc_id, pos) per gram (rn = 1 is the keeper), islands on
+      // the non-owner positions, span list per doc, and the same
+      // index-filtered token rebuild the engine runs
+      s"""WITH tok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS l
+           FROM documents),
+         win AS (
+           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
+                  array_to_string(l[u.i+1 : u.i+8], ' ') AS gram
+           FROM tok, unnest(range(0, greatest(len(l)-8+1, 0))) AS u(i)),
+         ownr AS (
+           SELECT doc_id, pos,
+                  row_number() OVER (PARTITION BY gram
+                                     ORDER BY doc_id, pos) AS rn,
+                  COUNT(*) OVER (PARTITION BY gram) AS n_occ
+           FROM win),
+         rem AS (SELECT doc_id, pos FROM ownr
+                 WHERE n_occ >= 2 AND rn > 1),
+         ${spanStripSql(8, "tok")}"""),
 
     // x216 — Luhn-validated credit-card PII (ISO/IEC 7812): the
     // checksum tier the x32/x161 pattern scrub cannot express — a
@@ -1585,7 +3285,7 @@ object SparkEntry {
     // so the fixture plants two valid test numbers (Visa/MC shapes),
     // one Amex, and one check-digit-off INVALID run that must survive
     // unredacted (the false-positive guard real scrubbers need).
-    "x216_luhn_cc_scrub" -> ((s, d) => {
+    query("x216_luhn_cc_scrub", ((s, d) => {
       val planted = t(s, d, "documents").withColumn("text",
         concat(col("text"),
           when(pmod(col("doc_id"), lit(5L)) === 0L,
@@ -1598,13 +3298,74 @@ object SparkEntry {
             lit(" amex 378282246310005 ok")).otherwise(lit(""))))
       ext.Cleanse.ccReport(planted)
     }),
+    {
+      // x216 — plants replayed, candidates re-extracted with the same
+      // RE2-common pattern, the Luhn fold digit for digit (right-offset
+      // doubling, subtract-9 clamp, mod 10), and the redaction as the
+      // SAME positional segment/candidate interleave (split on the one
+      // candidate regex, valid matches slot back as <CC>, invalid ones
+      // verbatim — never a value-based global replace)
+      val nm = "regexp_replace(c, '[^0-9]', '', 'g')"
+      val dig = s"CAST(substr($nm, CAST(length($nm) - i AS INTEGER), 1) AS INTEGER)"
+      s"""WITH t0 AS (
+           SELECT doc_id, text ||
+             CASE WHEN doc_id % 5 = 0
+                  THEN ' card 4111 1111 1111 1111 billed' ELSE '' END ||
+             CASE WHEN doc_id % 7 = 0
+                  THEN ' via 5500-0055-5555-5559 thanks' ELSE '' END ||
+             CASE WHEN doc_id % 11 = 0
+                  THEN ' ref 4111 1111 1111 1112 invalid' ELSE '' END ||
+             CASE WHEN doc_id % 13 = 0
+                  THEN ' amex 378282246310005 ok' ELSE '' END AS text
+           FROM documents),
+         cnd AS (
+           SELECT doc_id, text,
+                  regexp_extract_all(text, '[0-9][0-9 -]{11,22}[0-9]')
+                    AS cands,
+                  regexp_split_to_array(text, '[0-9][0-9 -]{11,22}[0-9]')
+                    AS segs
+           FROM t0),
+         vv AS (
+           SELECT doc_id, text, cands, segs,
+                  list_filter(cands, c ->
+                    length($nm) BETWEEN 13 AND 19 AND
+                    list_sum(list_transform(range(0, length($nm)), i ->
+                      CASE WHEN i % 2 = 1 THEN
+                        CASE WHEN 2 * $dig > 9 THEN 2 * $dig - 9
+                             ELSE 2 * $dig END
+                      ELSE $dig END)) % 10 = 0) AS valids
+           FROM cnd)
+         SELECT doc_id,
+                CAST(len(cands) AS BIGINT) AS n_candidates,
+                CAST(len(valids) AS BIGINT) AS n_valid_cc,
+                COALESCE(array_to_string(
+                  list_transform(range(0, len(cands)), i ->
+                    segs[CAST(i + 1 AS INTEGER)] ||
+                    CASE WHEN list_contains(valids,
+                                 cands[CAST(i + 1 AS INTEGER)])
+                         THEN '<CC>'
+                         ELSE cands[CAST(i + 1 AS INTEGER)] END), ''), '')
+                  || segs[len(segs)] AS redacted
+         FROM vv"""
+    }),
 
     // x219 — cross-source duplication matrix: the data-card table
     // next to the per-source masses — how much of source A near-
     // copies source B; verified jaccard pairs pick up endpoint
     // sources and roll up per unordered source pair.
-    "x219_dup_matrix" -> ((s, d) =>
+    query("x219_dup_matrix", ((s, d) =>
       ext.Curation.crossSourceDupMatrix(t(s, d, "documents"))),
+      // x219 — the x4 edge CTEs with endpoint-source joins and the
+      // least/greatest unordered-pair rollup
+      s"""WITH $jaccardEdgeCtes
+         SELECT LEAST(da.source, db.source) AS source_1,
+                GREATEST(da.source, db.source) AS source_2,
+                CAST(COUNT(*) AS BIGINT) AS n_pairs,
+                MAX(e.jaccard) AS max_jaccard
+         FROM edges e
+         JOIN documents da ON da.doc_id = e.doc_a
+         JOIN documents db ON db.doc_id = e.doc_b
+         GROUP BY 1, 2"""),
 
     // x218 — span-level benchmark DECONTAMINATION: the x21 audit made
     // surgical — the training pool (non-src0) loses exactly the token
@@ -1612,30 +3373,56 @@ object SparkEntry {
     // keeping the surrounding document (x42's split would discard it
     // whole). 397 docs lose spans at sf0.01 — the gate bites wide
     // without eating the corpus.
-    "x218_decontam_strip" -> ((s, d) => {
+    query("x218_decontam_strip", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.decontaminateSpans(
         docs.filter(col("source") =!= "src0"),
         docs.filter(col("source") === "src0"), shingleK = 3)
     }),
+      // x218 — the x213 island/strip replay with the removable set
+      // coming from a benchmark gram semi-join instead of owner
+      // election; grams by string (hash distinctness = gram
+      // distinctness, the x37 convention)
+      s"""WITH tok AS (
+           SELECT doc_id, source, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS l
+           FROM documents),
+         win AS (
+           SELECT doc_id, source, CAST(u.i AS INTEGER) AS pos,
+                  array_to_string(l[u.i+1 : u.i+3], ' ') AS gram
+           FROM tok, unnest(range(0, greatest(len(l)-3+1, 0))) AS u(i)),
+         bench AS (SELECT DISTINCT gram FROM win WHERE source = 'src0'),
+         rem AS (SELECT w.doc_id, w.pos FROM win w
+                 WHERE w.source <> 'src0'
+                   AND w.gram IN (SELECT gram FROM bench)),
+         ttok AS (SELECT doc_id, l FROM tok WHERE source <> 'src0'),
+         ${spanStripSql(3, "ttok")}"""),
 
     // x34 — BM25 retrieval (rational-idf variant — exact IEEE replay, no
     // rounding tolerance in the oracle): top-10 docs for a 3-term query
-    "x34_bm25" -> ((s, d) =>
+    query("x34_bm25", ((s, d) =>
       ext.TextOps.bm25Search(t(s, d, "documents"),
         Seq("spark", "table", "query"), topN = 10)),
+      // x34 — identical rational-BM25 arithmetic, term by term in the same
+      // parenthesization (every op is correctly-rounded IEEE, so scores are
+      // bit-equal — no rounding in the compare)
+      bm25OracleSql),
 
     // x96 — the retrieval-index lifecycle (the x77 discipline for text):
     // build + persist postings/doclens as parquet, then answer the SAME
     // 3-term query from storage alone — stats and dfs ride as literals,
     // the corpus is never scanned at query time, and the result is
     // bit-equal to x34's inline scoring.
-    "x96_bm25_stored" -> ((s, d) => {
+    query("x96_bm25_stored", ((s, d) => {
       val dir = storedDir("bm25", d)(p =>
         ext.TextOps.bm25BuildIndex(t(s, d, "documents"), p))
       ext.TextOps.bm25SearchStored(s, dir,
         Seq("spark", "table", "query"), topN = 10)
     }),
+      // x96 — stored ≡ inline: the oracle is x34's verbatim; a hash match
+      // proves the persisted postings path end to end
+      bm25OracleSql),
 
     // x102 — REAL compressed-video decode: MJPEG-in-AVI ('MJPG' RIFF
     // stream, each 00dc chunk a baseline JPEG decoded by the JDK's own
@@ -1644,9 +3431,14 @@ object SparkEntry {
     // JPEG at quality 1.0 round-trips EXACTLY (DC-only; MjpegSpec
     // asserts it), so per-frame luminance is closed-form for the oracle
     // while the engine runs the full container walk + JPEG decode.
-    "x102_mjpeg_frames" -> ((s, d) =>
+    query("x102_mjpeg_frames", ((s, d) =>
       ext.Multimodal.sampleMjpegFrames(
         ext.Multimodal.mjpegFromDocs(t(s, d, "documents")), everyNth = 2)),
+      // x102 — the flat-frame formula directly: frames 0 and 2 of 4
+      // (everyNth = 2), mean luminance = the frame's single gray value
+      """SELECT doc_id AS media_id, CAST(k AS INTEGER) AS frame_idx,
+                CAST((doc_id * 13 + k * 29) % 256 AS DOUBLE) AS mean_lum
+         FROM documents CROSS JOIN (VALUES (0), (2)) AS ks(k)"""),
 
     // x174 — REAL compressed-video decode in the MP4 container: each
     // doc gets a true ISO-BMFF file whose 'jpeg' sample track sits
@@ -1658,9 +3450,15 @@ object SparkEntry {
     // H.264/VP9/AAC. Flat DC-only frames make the JPEG layer exact, so
     // the oracle is the same closed form as x102 — the whole container
     // + sample-table + entropy-decode stack cancels.
-    "x174_mp4_jpeg_frames" -> ((s, d) =>
+    query("x174_mp4_jpeg_frames", ((s, d) =>
       ext.Multimodal.sampleMp4JpegFrames(
         ext.Multimodal.mp4JpegFromDocs(t(s, d, "documents")), everyNth = 2)),
+      // x174 — the MP4 sample-table + JPEG layers cancel (flat frames
+      // are DC-exact): same closed form as x102, different container —
+      // a hash match proves the stsc/stsz/stco demux walk end to end
+      """SELECT doc_id AS media_id, CAST(k AS INTEGER) AS frame_idx,
+                CAST((doc_id * 13 + k * 29) % 256 AS DOUBLE) AS mean_lum
+         FROM documents CROSS JOIN (VALUES (0), (2)) AS ks(k)"""),
 
     // x100 — quantile SKETCH (HDR histogram — integer exponent+mantissa
     // buckets, the published hdrhistogram.org layout; DDSketch's
@@ -1670,7 +3468,7 @@ object SparkEntry {
     // any partitioning/merge order, so the oracle replays the census and
     // the same integer rank walk with no tolerance. x25's per-group
     // total sort becomes a bounded in-sketch walk at 100 TB.
-    "x100_quantile_sketch" -> ((s, d) => {
+    query("x100_quantile_sketch", ((s, d) => {
       val hdr = udaf(new ext.HdrQuantileAggregator(5), Encoders.scalaLong)
       t(s, d, "documents").groupBy("lang")
         .agg(hdr(col("n_chars").cast("long")).as("q"))
@@ -1678,6 +3476,46 @@ object SparkEntry {
           col("q.n_buckets").as("n_buckets"),
           col("q.q25").as("q25"), col("q.q50").as("q50"),
           col("q.q75").as("q75"), col("q.q95").as("q95"))
+    }),
+    {
+      // x100 — the HDR census rebuilt with the same integer algebra:
+      // bucket = exponent (via bin-string length) + top mantissa bits,
+      // cumulative walk per lang, integer-ceiled ranks, lower-bound
+      // recovery — every op integer, no tolerance anywhere
+      def lb(b: String): String =
+        s"""CASE WHEN $b < 32 THEN $b
+            ELSE (32 + ($b % 32)) *
+                 CAST(POWER(2, ($b // 32) - 1) AS BIGINT) END"""
+      s"""WITH b AS (
+           SELECT lang,
+             CASE WHEN n_chars < 32 THEN CAST(n_chars AS BIGINT)
+                  ELSE (CAST(length(bin(CAST(n_chars AS BIGINT))) - 1
+                             AS BIGINT) - 4) * 32
+                       + (CAST(n_chars AS BIGINT)
+                          // CAST(POWER(2, length(bin(CAST(n_chars AS BIGINT)))
+                                          - 6) AS BIGINT)) - 32
+             END AS bucket
+           FROM documents),
+         cnt AS (SELECT lang, bucket, COUNT(*) AS c FROM b GROUP BY 1, 2),
+         cum AS (SELECT lang, bucket, c,
+                        SUM(c) OVER (PARTITION BY lang ORDER BY bucket
+                                     ROWS UNBOUNDED PRECEDING) AS cum,
+                        SUM(c) OVER (PARTITION BY lang) AS n
+                 FROM cnt),
+         qs AS (SELECT lang,
+                  CAST(MAX(n) AS BIGINT) AS n,
+                  CAST(COUNT(*) AS INTEGER) AS n_buckets,
+                  MIN(CASE WHEN cum >= (n + 3) // 4 THEN bucket END) AS b25,
+                  MIN(CASE WHEN cum >= (n + 1) // 2 THEN bucket END) AS b50,
+                  MIN(CASE WHEN cum >= (3 * n + 3) // 4 THEN bucket END)
+                    AS b75,
+                  MIN(CASE WHEN cum >= (19 * n + 19) // 20 THEN bucket END)
+                    AS b95
+                FROM cum GROUP BY lang)
+         SELECT lang, n, n_buckets,
+                ${lb("b25")} AS q25, ${lb("b50")} AS q50,
+                ${lb("b75")} AS q75, ${lb("b95")} AS q95
+         FROM qs"""
     }),
 
     // x99 — RFC 3986 syntactic URL normalization + public-suffix
@@ -1687,7 +3525,7 @@ object SparkEntry {
     // exercising every rule: scheme/host case, default and non-default
     // ports, trailing slash, fragment drop, query preservation,
     // multi-label public suffixes (co.uk), and the implicit-* fallback.
-    "x99_url_domains" -> ((s, d) =>
+    query("x99_url_domains", ((s, d) =>
       t(s, d, "documents")
         .withColumn("url", expr(urlSqlExpr))
         .select(col("doc_id"), col("url"),
@@ -1695,6 +3533,12 @@ object SparkEntry {
           ext.UrlOps.hostOf(col("url")).as("host"),
           ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url")))
             .as("domain"))),
+      // x99 — the normalizer replayed step for step; the domain by the
+      // same precedence-ordered suffix CASE chain
+      s"""WITH $urlNormCtes
+           SELECT doc_id, url, norm_url, host,
+                  ${regDomainSql("host")} AS domain
+           FROM n"""),
 
     // x157 — per-DOMAIN quality prior: the FineWeb-style site signal —
     // registered domain × (doc mass, mean composite quality, Gopher
@@ -1702,14 +3546,10 @@ object SparkEntry {
     // whole sites before ever scoring their new pages. One scan (URL
     // chain + quality + gopher flags all narrow columns), one
     // domain-keyed partial+final agg; mean is decimal-routed.
-    "x157_domain_quality" -> ((s, d) => {
+    query("x157_domain_quality", ((s, d) => {
       val sig = ext.TextOps.gopherSignals(col("text"))
       val flags = sig.collect { case (n, c) if n.startsWith("r_") => c }
-      t(s, d, "documents")
-        .withColumn("url", expr(urlSqlExpr))
-        .withColumn("domain", coalesce(
-          ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-          lit("")))
+      docUrls(s, d)
         .select(col("domain"),
           ext.TextOps.qualityScore(col("text")).as("q"),
           flags.reduce(_ && _).cast("long").as("keep"))
@@ -1720,13 +3560,42 @@ object SparkEntry {
         .withColumn("keep_rate",
           col("n_keep").cast("double") / col("n_docs").cast("double"))
     }),
+      // x157 — closed-form domain (the urlRegDomainSql branch map) joined
+      // to the quality and gopher CTEs, one grouped rollup with the
+      // decimal-routed mean
+      s"""WITH ${gopherCtesOver("documents", "text")},
+          $qualityCtes,
+          dd AS (SELECT doc_id, $urlRegDomainSql AS domain
+                 FROM documents)
+          SELECT d.domain, COUNT(*) AS n_docs,
+                 ${avgSql("q.quality")} AS mean_quality,
+                 CAST(SUM(CASE WHEN g2.r_word_count AND g2.r_mean_word_len
+                                AND g2.r_symbol_ratio AND g2.r_alpha_words
+                                AND g2.r_stopwords
+                               THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+                 CAST(SUM(CASE WHEN g2.r_word_count AND g2.r_mean_word_len
+                                AND g2.r_symbol_ratio AND g2.r_alpha_words
+                                AND g2.r_stopwords
+                               THEN 1 ELSE 0 END) AS DOUBLE)
+                   / CAST(COUNT(*) AS DOUBLE) AS keep_rate
+          FROM dd d
+          JOIN qual q ON q.doc_id = d.doc_id
+          JOIN g2 ON g2.doc_id = d.doc_id
+          GROUP BY d.domain"""),
 
     // x104 — the registered-domain rollup those URLs feed: per domain,
     // URL mass, URL-dedup survivor count, deterministic sample. One
     // hash agg on the domain key.
-    "x104_domain_rollup" -> ((s, d) =>
+    query("x104_domain_rollup", ((s, d) =>
       ext.UrlOps.domainRollup(
         t(s, d, "documents").withColumn("url", expr(urlSqlExpr)))),
+      // x104 — rollup over the same normalized URLs and domains
+      s"""WITH $urlNormCtes,
+           dd AS (SELECT norm_url, ${regDomainSql("host")} AS domain FROM n)
+           SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_urls,
+                  CAST(COUNT(DISTINCT norm_url) AS BIGINT) AS n_norm_distinct,
+                  MIN(norm_url) AS sample_url
+           FROM dd GROUP BY domain"""),
 
     // x114 — the CRAWL FRONTIER product, composing the whole crawl
     // tier: sitemap-listed URLs (x111's listing) minus the crawled set,
@@ -1734,8 +3603,11 @@ object SparkEntry {
     // paths — the "fetch next" schedule a polite crawler actually
     // emits. Each fragment is the oracle-proven x99/x111/x109 logic;
     // the COMPOSITION is what this query checks.
-    "x114_crawl_frontier" -> ((s, d) => crawlFrontier(s, d,
+    query("x114_crawl_frontier", ((s, d) => crawlFrontier(s, d,
       stateless = false)),
+      // x114 — the three oracle fragments composed: the x111 listing
+      // minus crawled, paths, the extended rule table, the x109 rank
+      x114OracleSql),
 
     // x114b — the SAME frontier in the STATELESS shape the 100 TB
     // story tells: the narrow url→domain projection recomputes per
@@ -1744,8 +3616,12 @@ object SparkEntry {
     // localCheckpoint x114 pays to dodge per-branch Janino compiles at
     // fixture scale. Same rows, same oracle — BOTH shapes are recorded
     // in the bench so the trade stays measured, not asserted.
-    "x114b_frontier_stateless" -> ((s, d) => crawlFrontier(s, d,
+    query("x114b_frontier_stateless", ((s, d) => crawlFrontier(s, d,
       stateless = true)),
+      // x114b — the stateless shape is row-identical by construction
+      // (the localCheckpoint is a materialization boundary, not a
+      // semantic one), so the oracle is x114's verbatim
+      x114OracleSql),
 
     // x116 — the RECRAWL SCHEDULE over NESTED sitemaps: per-domain
     // <sitemapindex> documents point at per-shard <urlset> files whose
@@ -1760,7 +3636,11 @@ object SparkEntry {
     // listing, gate and state closed-form (the XML and robots layers
     // cancel, the x95 convention) and replays the classification +
     // rank window.
-    "x116_recrawl_schedule" -> ((s, d) => recrawlQuery(s, d)),
+    query("x116_recrawl_schedule", ((s, d) => recrawlQuery(s, d)),
+      // x116 — listing and crawl state regenerated closed-form (the XML
+      // index/shard layer cancels), same classification + rank window
+      s"""WITH $recrawlOracleCtes
+           SELECT domain, url, lastmod, status, rnk FROM sched"""),
 
     // x137 — the AUTHORITY-RANKED frontier, the crawl tier's capstone
     // composition: x116's per-domain recrawl schedule priced by x124's
@@ -1770,7 +3650,7 @@ object SparkEntry {
     // merge) rather than the global sort a total ordering would cost.
     // Real schedulers feed per-executor priority queues exactly this
     // way: a bounded top-k per tick, never a full-corpus sort.
-    "x137_ranked_frontier" -> ((s, d) => {
+    query("x137_ranked_frontier", ((s, d) => {
       // schedule chain and rank loop are independent until the final
       // join: construct them on two driver threads so the recrawl
       // materialization and the power rounds backfill each other
@@ -1790,6 +3670,10 @@ object SparkEntry {
         .select(col("domain"), col("url"), col("status"), col("rnk"),
           round(col("priority"), 10).as("priority"))
     }),
+      // x137 — the two oracle chains composed: the recrawl schedule CTEs
+      // joined to the replayed 5-round rank vector, the cut on RAW
+      // priority (round after — the x127 convention)
+      rankedFrontierOracleSql),
 
     // x159 — the QUALITY-first frontier: x137's composition with the
     // pricing signal swapped from link authority to the x157 domain
@@ -1799,13 +3683,9 @@ object SparkEntry {
     // point at; both signals feed the same bounded top-k tick. Prior
     // table is domain-sized (broadcast at any corpus scale), the cut
     // is TakeOrderedAndProject.
-    "x159_quality_frontier" -> ((s, d) => {
+    query("x159_quality_frontier", ((s, d) => {
       val sched = recrawlQuery(s, d)
-      val prior = t(s, d, "documents")
-        .withColumn("url", expr(urlSqlExpr))
-        .withColumn("domain", coalesce(
-          ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-          lit("")))
+      val prior = docUrls(s, d)
         .select(col("domain"),
           ext.TextOps.qualityScore(col("text")).as("q"))
         .groupBy("domain").agg(avgD(col("q")).as("mean_quality"))
@@ -1816,6 +3696,8 @@ object SparkEntry {
         .select(col("domain"), col("url"), col("status"), col("rnk"),
           round(col("priority"), 10).as("priority"))
     }),
+      // x159 — the same schedule priced by the x157 quality prior
+      qualityFrontierOracleSql),
 
     // x143 — x137 off the AUTHORITY STORE (the x77/x96/x126 stored-
     // index lifecycle applied to the rank tier): the power method runs
@@ -1824,7 +3706,7 @@ object SparkEntry {
     // schedule, and cuts the same top-25. Doubles round-trip parquet
     // exactly, so this shares x137's oracle VERBATIM; the bench times
     // what a scheduler tick actually costs once ranks are stored.
-    "x143_stored_rank_frontier" -> ((s, d) => {
+    query("x143_stored_rank_frontier", ((s, d) => {
       val dir = storedDir("pagerank", d)(p =>
         ext.Graph.pageRankStoredBuild(linkGraph(s, d)
           .select(col("src_domain").as("src"),
@@ -1837,6 +3719,10 @@ object SparkEntry {
         .select(col("domain"), col("url"), col("status"), col("rnk"),
           round(col("priority"), 10).as("priority"))
     }),
+      // x143 — the stored-rank twin shares x137's oracle VERBATIM: the
+      // rank parquet round-trips doubles exactly, so the scheduler read
+      // off the authority store must hash-match the inline power run
+      rankedFrontierOracleSql),
 
     // x120 — the POLITENESS schedule: the x116 recrawl ranking priced
     // by each domain's robots.txt metadata — sitemap DISCOVERY gates
@@ -1846,40 +3732,8 @@ object SparkEntry {
     // robots layer is engine-parsed (first-colon split keeps the
     // full Sitemap URL intact; fractional delays parse); the oracle
     // regenerates listing, state and metadata closed-form.
-    "x120_politeness_schedule" -> ((s, d) => {
-      val urls = t(s, d, "documents")
-        .withColumn("url", expr(urlSqlExpr))
-        .withColumn("domain", coalesce(
-          ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-          lit("")))
-        .withColumn("norm", coalesce(
-          ext.UrlOps.normalizeUrl(col("url")), lit("")))
-        .withColumn("lastmod", date_add(to_date(lit("2026-01-01")),
-          (col("doc_id") % 90).cast("int")))
-        .withColumn("crawled_at", date_add(to_date(lit("2026-01-15")),
-          (col("doc_id") % 30).cast("int")))
-        .select("doc_id", "domain", "norm", "lastmod", "crawled_at")
-        // materialized ONCE, the x116 trade: four consumers below
-        // (listing slice, phantom domains, crawl state, robots
-        // domains) would each re-derive — and whole-stage codegen
-        // re-JIT — the ~67 KB url→domain chain; at fixture scale the
-        // Janino time dwarfs execution (x114b keeps the stateless
-        // 100 TB shape benched)
-        .localCheckpoint()
-      val listed = urls.filter(col("doc_id") % 2 === 0)
-        .groupBy("domain", "norm").agg(max("lastmod").as("lastmod"))
-        .select(col("domain"), col("norm").as("u"), col("lastmod"))
-        .unionByName(urls.select("domain").distinct()
-          .select(col("domain"),
-            explode(sequence(lit(0), lit(2))).as("k"))
-          .select(col("domain"),
-            concat(lit("https://"), col("domain"), lit("/extra/"),
-              col("k").cast("string")).as("u"),
-            date_add(to_date(lit("2026-03-01")), col("k").cast("int"))
-              .as("lastmod")))
-      val crawled = urls.groupBy("domain", "norm")
-        .agg(max("crawled_at").as("crawled_at"))
-        .select(col("domain"), col("norm").as("u"), col("crawled_at"))
+    query("x120_politeness_schedule", ((s, d) => {
+      val urls = recrawlUrls(s, d)
       // per-domain robots with Crawl-delay (fractional for even-length
       // domains, lowercase directive on the %3 branch), a Sitemap
       // advertised only when len(domain) % 4 != 1, and on EVEN-length
@@ -1902,8 +3756,8 @@ object SparkEntry {
           when(ld % 2 === 0, lit("\nDisallow: /extra/*1$"))
             .otherwise(lit(""))))
       val sched = ext.UrlOps.recrawlSchedule(
-        ext.UrlOps.robotsAllowedOnly(listed,
-          ext.UrlOps.parseRobots(robots), urlCol = "u"), crawled)
+        ext.UrlOps.robotsAllowedOnly(sitemapEntries(urls),
+          ext.UrlOps.parseRobots(robots), urlCol = "u"), crawledAt(urls))
       // the fixture files carry ONE group, so the group-blind parser
       // (conservative max-delay since round 11) and the group-aware
       // parseRobotsMetaGrouped agree — UrlSpec carries the multi-group
@@ -1917,6 +3771,23 @@ object SparkEntry {
         .select("domain", "url", "lastmod", "status", "rnk",
           "crawl_delay", "fetch_at_sec")
     }),
+      // x120 — the x116 chain joined to the closed-form robots metadata;
+      // the sitemap-discovery gate and the delay pricing replay exactly
+      s"""WITH $recrawlOracleCtes,
+           meta AS (SELECT DISTINCT domain,
+                      CAST(1 + length(domain) % 5 AS DOUBLE) +
+                        CASE WHEN length(domain) % 2 = 0
+                             THEN 0.5 ELSE 0.0 END AS crawl_delay,
+                      CASE WHEN length(domain) % 4 <> 1
+                           THEN 'https://' || domain || '/sitemap.xml'
+                      END AS sitemap_url
+                    FROM st)
+           SELECT r.domain, r.url, r.lastmod, r.status, r.rnk,
+                  m.crawl_delay,
+                  CAST(r.rnk - 1 AS DOUBLE) * m.crawl_delay
+                    AS fetch_at_sec
+           FROM sched r JOIN meta m ON m.domain = r.domain
+           WHERE m.sitemap_url IS NOT NULL"""),
 
     // x112 — content-defined chunk dedup (Manber anchors, the LBFS/CDC
     // shape on token streams): anchors at hash-mod-16 tokens, chunk
@@ -1924,8 +3795,61 @@ object SparkEntry {
     // duplicated-chunk fraction — the PARTIAL-overlap dedup signal
     // whole-doc dedup can't see. Every hash step is the repo's
     // published family, replayed in HUGEINT end to end.
-    "x112_cdc_chunks" -> ((s, d) =>
+    query("x112_cdc_chunks", ((s, d) =>
       ext.Dedup.cdcChunkDedup(t(s, d, "documents"))),
+    {
+      // x112 — per-token FNV+mix64 (the hashEmbed chain) with positions,
+      // anchor flags, the chunk-id running count, the x10 rotl fold per
+      // chunk, and the census — all in HUGEINT mod-2^64
+      val M = "18446744073709551616::HUGEINT"
+      s"""WITH ctok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS ts
+           FROM documents),
+         cpt AS MATERIALIZED (
+           SELECT doc_id, unnest(list_transform(range(1, len(ts) + 1), i ->
+             {'pos': i, 'tok': ts[CAST(i AS INTEGER)]})) AS pt
+           FROM ctok),
+         cth AS MATERIALIZED (
+           SELECT doc_id, pt.pos AS pos,
+             list_reduce(
+               list_prepend(14695981039346656037::HUGEINT,
+                 list_transform(range(1, length(pt.tok) + 1), i ->
+                   unicode(substr(pt.tok, CAST(i AS INTEGER), 1))::HUGEINT)),
+               (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
+                          * 1099511628211::HUGEINT) % $M) AS f
+           FROM cpt),
+         cz1 AS (SELECT doc_id, pos, ${mulmodSql("xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM cth),
+         cz2 AS (SELECT doc_id, pos, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM cz1),
+         czf AS MATERIALIZED (SELECT doc_id, pos,
+                  xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM cz2),
+         cch AS MATERIALIZED (
+           SELECT doc_id, pos, uh,
+                  COALESCE(SUM(CASE WHEN uh % 16 = 0 THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY doc_id ORDER BY pos
+                          ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND 1 PRECEDING), 0) AS chunk_id
+           FROM czf),
+         cfp AS MATERIALIZED (
+           SELECT doc_id, chunk_id,
+             list_reduce(
+               list_prepend(0::HUGEINT, list(uh ORDER BY pos)),
+               (a, x) -> xor((a * 32::HUGEINT) % $M
+                             + a // 576460752303423488::HUGEINT, x)) AS fp
+           FROM cch GROUP BY doc_id, chunk_id),
+         cdup AS (SELECT fp FROM (
+             SELECT fp, COUNT(DISTINCT doc_id) AS nd FROM cfp GROUP BY fp)
+           WHERE nd >= 2)
+         SELECT c.doc_id,
+                CAST(COUNT(*) AS BIGINT) AS n_chunks,
+                CAST(SUM(CASE WHEN d.fp IS NOT NULL THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_dup_chunks,
+                CAST(SUM(CASE WHEN d.fp IS NOT NULL THEN 1 ELSE 0 END)
+                     AS DOUBLE) / COUNT(*) AS dup_frac
+         FROM cfp c LEFT JOIN cdup d ON d.fp = c.fp
+         GROUP BY c.doc_id"""
+    }),
 
     // x111 — sitemap coverage audit: per-domain sitemap.xml documents
     // are SYNTHESIZED closed-form (the even-doc_id slice of the
@@ -1935,16 +3859,12 @@ object SparkEntry {
     // crawler schedules next), crawled-but-unlisted. The oracle
     // regenerates the listing directly (the text layer cancels) and
     // replays the same distinct-set full-outer classification.
-    "x111_sitemap_audit" -> ((s, d) => {
+    query("x111_sitemap_audit", ((s, d) => {
       // materialized once — four consumers of the url→domain chain
       // (even listing, all-domain phantoms, crawled set); see the
       // x114/x116 JIT measurement for why, and x114b for the stateless
       // 100 TB shape
-      val urls = t(s, d, "documents")
-        .withColumn("url", expr(urlSqlExpr))
-        .withColumn("domain", coalesce(
-          ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-          lit("")))
+      val urls = docUrls(s, d)
         .withColumn("norm", ext.UrlOps.normalizeUrl(col("url")))
         .select("doc_id", "domain", "norm")
         .localCheckpoint()
@@ -1984,6 +3904,22 @@ object SparkEntry {
           sum(when(col("c").isNull, 1L).otherwise(0L)).as("n_listed_only"),
           sum(when(col("l").isNull, 1L).otherwise(0L)).as("n_crawled_only"))
     }),
+      // x111 — the listing regenerated as the even-id distinct-norm set
+      // plus phantoms; same full-outer set classification
+      s"""WITH $sitemapListingCtes,
+           fo AS (
+             SELECT COALESCE(l.domain, c.domain) AS domain,
+                    (l.u IS NOT NULL) AS in_l, (c.u IS NOT NULL) AS in_c
+             FROM listed l FULL OUTER JOIN crawled c
+               ON c.domain = l.domain AND c.u = l.u)
+           SELECT domain,
+                  CAST(SUM(CASE WHEN in_l AND in_c THEN 1 ELSE 0 END)
+                       AS BIGINT) AS n_both,
+                  CAST(SUM(CASE WHEN in_l AND NOT in_c THEN 1 ELSE 0 END)
+                       AS BIGINT) AS n_listed_only,
+                  CAST(SUM(CASE WHEN in_c AND NOT in_l THEN 1 ELSE 0 END)
+                       AS BIGINT) AS n_crawled_only
+           FROM fo GROUP BY domain"""),
 
     // x110 — Unicode-script profile over a MIXED-SCRIPT corpus: the
     // ASCII fixture text gains closed-form Han/Cyrillic runs (so the
@@ -1991,12 +3927,39 @@ object SparkEntry {
     // and the dominant script — the pre-language-ID signal multilingual
     // crawls compute. Script properties are stable across engines for
     // the major scripts; counts are code-point algebra, no tolerance.
-    "x110_script_profile" -> ((s, d) =>
+    query("x110_script_profile", ((s, d) =>
       ext.TextOps.scriptProfile(
         t(s, d, "documents").withColumn("text",
           concat(col("text"),
             expr("repeat('水', CAST(doc_id % 4 AS INT))"),
             expr("repeat('д', CAST(doc_id % 3 AS INT))"))))),
+      // x110 — the same code-point census in RE2 script classes; the
+      // dominant pick replays greatest-of-structs as row comparisons
+      s"""WITH t0 AS (
+           SELECT doc_id,
+                  text || repeat('水', CAST(doc_id % 4 AS INTEGER))
+                       || repeat('д', CAST(doc_id % 3 AS INTEGER)) AS t
+           FROM documents),
+         c AS (
+           SELECT doc_id, CAST(length(t) AS BIGINT) AS n_total,
+             CAST(length(t) - length(regexp_replace(t, '\\p{Latin}', '', 'g'))
+                  AS BIGINT) AS n_latin,
+             CAST(length(t) - length(regexp_replace(t, '\\p{Han}', '', 'g'))
+                  AS BIGINT) AS n_han,
+             CAST(length(t) - length(regexp_replace(t, '\\p{Cyrillic}', '', 'g'))
+                  AS BIGINT) AS n_cyr
+           FROM t0)
+         SELECT doc_id, n_total, n_latin, n_han, n_cyr,
+                CAST(n_latin AS DOUBLE) / GREATEST(n_total, 1) AS latin_frac,
+                CAST(n_han AS DOUBLE) / GREATEST(n_total, 1) AS han_frac,
+                CAST(n_cyr AS DOUBLE) / GREATEST(n_total, 1) AS cyr_frac,
+                CASE WHEN n_latin + n_han + n_cyr = 0 THEN 'und'
+                     WHEN (n_latin, 'latin') >= (n_han, 'han')
+                      AND (n_latin, 'latin') >= (n_cyr, 'cyrillic')
+                       THEN 'latin'
+                     WHEN (n_han, 'han') >= (n_cyr, 'cyrillic') THEN 'han'
+                     ELSE 'cyrillic' END AS dominant
+         FROM c"""),
 
     // x109 — robots.txt compliance gate (RFC 9309): per-domain robots
     // documents are SYNTHESIZED closed-form (rule set keyed on
@@ -2015,36 +3978,13 @@ object SparkEntry {
     // match form closed-form (prefix+suffix+length for the anchored
     // star; plain prefix for the trailing star) and replays the
     // precedence with a window rank.
-    "x109_robots_gate" -> ((s, d) => {
-      val urls = t(s, d, "documents")
-        .withColumn("url", expr(urlSqlExpr))
-        .withColumn("domain", coalesce(
-          ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-          lit("")))
+    query("x109_robots_gate", ((s, d) => {
+      val urls = docUrls(s, d)
         .withColumn("path", ext.UrlOps.pathOf(col("url")))
         .select("doc_id", "domain", "path")
       val ld = length(col("domain"))
-      // the Allow rules arrive in RFC 9309's tolerated messy forms on a
-      // deterministic subset (mixed-case directive, extra/trailing
-      // whitespace) — same parsed rule table; the %5 branch adds a
-      // legal ':'-bearing path prefix plus a trailing comment (the
-      // first-colon split target)
       val lines = flatten(transform(sequence(lit(0), lit(9)), i =>
-        concat(
-          when(((i + ld) % 3) === 0,
-            array(concat(lit("Disallow: /src"), i.cast("string"))))
-            .otherwise(array().cast("array<string>")),
-          when(((i + ld) % 2) === 0,
-            array(when(((i + ld) % 4) === 0,
-              concat(lit("aLLoW:   /src"), i.cast("string"),
-                lit("/Page  ")))
-              .otherwise(concat(lit("Allow: /src"), i.cast("string"),
-                lit("/Page")))))
-            .otherwise(array().cast("array<string>")),
-          when(((i + ld) % 5) === 1,
-            array(concat(lit("disallow: /src"), i.cast("string"),
-              lit("/Page/c:0 # colon-bearing path"))))
-            .otherwise(array().cast("array<string>")),
+        concat(srcRobotsRules(i, ld) ++ Seq(
           when(((i + ld) % 4) === 1,
             array(concat(lit("Disallow: /src"), i.cast("string"),
               lit("*/c:0$"))))
@@ -2052,12 +3992,56 @@ object SparkEntry {
           when(((i + ld) % 7) === 3,
             array(concat(lit("Allow: /src"), i.cast("string"),
               lit("/Page/*"))))
-            .otherwise(array().cast("array<string>")))))
+            .otherwise(array().cast("array<string>"))): _*)))
       val robots = urls.select("domain").distinct()
         .withColumn("robots_txt",
           concat_ws("\n", concat(array(lit("User-agent: *")), lines)))
       ext.UrlOps.robotsGate(urls, ext.UrlOps.parseRobots(robots))
     }),
+      // x109 — the rule table regenerated from the same closed form, the
+      // same longest-prefix / allow-wins precedence as a window rank
+      s"""WITH $robotsPathCtes,
+           rl AS (
+             SELECT domain, '/src' || CAST(t.i AS STRING) AS prefix,
+                    0 AS aw, 0 AS kind,
+                    '/src' || CAST(t.i AS STRING) AS pre, '' AS suf
+             FROM doms, range(0, 10) t(i)
+             WHERE (t.i + length(domain)) % 3 = 0
+             UNION ALL
+             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page',
+                    1 AS aw, 0 AS kind,
+                    '/src' || CAST(t.i AS STRING) || '/Page', ''
+             FROM doms, range(0, 10) t(i)
+             WHERE (t.i + length(domain)) % 2 = 0
+             UNION ALL
+             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page/c:0',
+                    0 AS aw, 0 AS kind,
+                    '/src' || CAST(t.i AS STRING) || '/Page/c:0', ''
+             FROM doms, range(0, 10) t(i)
+             WHERE (t.i + length(domain)) % 5 = 1
+             UNION ALL
+             SELECT domain, '/src' || CAST(t.i AS STRING) || '*/c:0$$',
+                    0 AS aw, 1 AS kind,
+                    '/src' || CAST(t.i AS STRING), '/c:0'
+             FROM doms, range(0, 10) t(i)
+             WHERE (t.i + length(domain)) % 4 = 1
+             UNION ALL
+             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page/*',
+                    1 AS aw, 0 AS kind,
+                    '/src' || CAST(t.i AS STRING) || '/Page/', ''
+             FROM doms, range(0, 10) t(i)
+             WHERE (t.i + length(domain)) % 7 = 3),
+           mt AS (SELECT p.doc_id, p.domain, p.path, r.prefix, r.aw,
+                         length(r.prefix) AS plen
+                  FROM p0 p LEFT JOIN rl r
+                    ON r.domain = p.domain
+                   AND (CASE WHEN r.kind = 1
+                        THEN starts_with(p.path, r.pre)
+                             AND ends_with(p.path, r.suf)
+                             AND length(p.path) >=
+                                 length(r.pre) + length(r.suf)
+                        ELSE starts_with(p.path, r.pre) END)),
+           $robotsVerdictSql"""),
 
     // x122 — robots GROUPS (RFC 9309 §2.2.1 proper): per-domain robots
     // documents carry a stray pre-group rule (must drop), a GraftBot
@@ -2068,12 +4052,8 @@ object SparkEntry {
     // selected-and-merged rule table. The oracle regenerates the
     // SELECTED rules closed-form per domain branch — group assembly,
     // specificity, stray-drop and the UA text layer all cancel.
-    "x122_robots_groups" -> ((s, d) => {
-      val urls = t(s, d, "documents")
-        .withColumn("url", expr(urlSqlExpr))
-        .withColumn("domain", coalesce(
-          ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-          lit("")))
+    query("x122_robots_groups", ((s, d) => {
+      val urls = docUrls(s, d)
         .withColumn("path", ext.UrlOps.pathOf(col("url")))
         .select("doc_id", "domain", "path")
       val ld = length(col("domain"))
@@ -2104,6 +4084,43 @@ object SparkEntry {
       ext.UrlOps.robotsGate(urls,
         ext.UrlOps.parseRobotsGrouped(robots, agent = "graftbot"))
     }),
+      // x122 — the SELECTED rule table regenerated per domain branch
+      // (graftbot group on len%3==0 domains, the merged */OtherBot group
+      // otherwise; stray and EvilBot rules never appear), the same
+      // precedence rank as x109
+      s"""WITH $robotsPathCtes,
+           rl AS (
+             SELECT domain, '/src' || CAST(t.i AS STRING) AS prefix,
+                    0 AS aw
+             FROM doms, range(0, 10) t(i)
+             WHERE length(domain) % 3 = 0
+               AND (t.i + length(domain)) % 3 = 0
+             UNION ALL
+             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page',
+                    1 AS aw
+             FROM doms, range(0, 10) t(i)
+             WHERE length(domain) % 3 = 0
+               AND (t.i + length(domain)) % 2 = 0
+             UNION ALL
+             SELECT domain,
+                    '/src' || CAST(length(domain) % 7 AS STRING), 0 AS aw
+             FROM doms WHERE length(domain) % 3 <> 0
+             UNION ALL
+             SELECT domain,
+                    '/src' || CAST(length(domain) % 7 AS STRING)
+                      || '/Page', 1 AS aw
+             FROM doms WHERE length(domain) % 3 <> 0
+             UNION ALL
+             SELECT domain,
+                    '/src' || CAST((length(domain) + 1) % 7 AS STRING)
+                      || '/Page', 0 AS aw
+             FROM doms WHERE length(domain) % 3 <> 0),
+           mt AS (SELECT p.doc_id, p.domain, p.path, r.prefix, r.aw,
+                         length(r.prefix) AS plen
+                  FROM p0 p LEFT JOIN rl r
+                    ON r.domain = p.domain
+                   AND starts_with(p.path, r.prefix)),
+           $robotsVerdictSql"""),
 
     // x123 — RFC 3986 §5 reference resolution, the layer between
     // "extract hrefs" and "enqueue" in every crawler: each doc's page
@@ -2115,10 +4132,56 @@ object SparkEntry {
     // domain — the corpus link graph. The oracle regenerates resolution
     // closed-form per variant branch (root/directory algebra over the
     // shared closed-form base parts — the resolver layer cancels).
-    "x123_link_graph" -> ((s, d) =>
+    query("x123_link_graph", ((s, d) =>
       linkGraph(s, d).select(col("doc_id"), col("link_i"), col("href"),
         col("abs_url"), col("dst_host"), col("src_domain"),
         col("dst_domain"))),
+      // x123 — resolution regenerated closed-form per variant branch:
+      // root/base-directory string algebra over the shared closed-form
+      // base parts; the engine's fold-based remove_dot_segments cancels
+      // against the KNOWN dot patterns of each href variant
+      s"""WITH l0 AS (SELECT doc_id, source,
+                  $urlSchemeSql AS sch, $urlHostSql AS hst,
+                  $urlPortSql AS pp, $urlPathSql AS pth,
+                  $urlRegDomainSql AS sdom
+                FROM documents),
+           l1 AS (SELECT l0.*, CAST(t.i AS INTEGER) AS link_i,
+                  CAST((doc_id + t.i) % 8 AS INTEGER) AS v,
+                  sch || '://' || hst || pp AS root,
+                  regexp_replace(pth, '[^/]*$$', '') AS bdir
+                FROM l0, range(0, 4) t(i)),
+           l2 AS (SELECT doc_id, link_i, $hrefSqlExpr AS href,
+                  CASE v
+                    WHEN 0 THEN 'https://Hub' || CAST(doc_id % 5 AS STRING)
+                                || '.Example.COM/h/'
+                                || CAST(link_i AS STRING)
+                    WHEN 1 THEN sch || '://cdn.Example.net/lib.js'
+                    WHEN 2 THEN root || '/a/c%7ed'
+                    WHEN 3 THEN root || bdir || 'sub/page'
+                                || CAST(link_i AS STRING)
+                    WHEN 4 THEN root
+                                || regexp_replace(bdir, '[^/]*/$$', '')
+                                || 'up?x=' || CAST(doc_id % 3 AS STRING)
+                    WHEN 5 THEN root || pth || '?q='
+                                || CAST(link_i AS STRING)
+                    WHEN 6 THEN root || bdir || 'x#frag'
+                    ELSE 'https://Sink.Example.EDU/void' END AS abs_url,
+                  CASE v
+                    WHEN 0 THEN 'hub' || CAST(doc_id % 5 AS STRING)
+                                || '.example.com'
+                    WHEN 1 THEN 'cdn.example.net'
+                    WHEN 7 THEN 'sink.example.edu'
+                    ELSE lower(hst) END AS dst_host,
+                  sdom AS src_domain,
+                  CASE v
+                    WHEN 0 THEN 'example.com'
+                    WHEN 1 THEN 'example.net'
+                    WHEN 7 THEN 'example.edu'
+                    ELSE sdom END AS dst_domain
+                FROM l1)
+           SELECT doc_id, link_i, href, abs_url, dst_host, src_domain,
+                  dst_domain
+           FROM l2"""),
 
     // x124 — domain-level PageRank over the x123 link graph: 5 power
     // rounds, damping 0.85, dangling mass redistributed (the sink
@@ -2127,10 +4190,18 @@ object SparkEntry {
     // is one decimal-routed contribution sum per node plus the
     // dangling scalar; the 10 dp round absorbs the cross-engine
     // decimal-cast last-ulp drift (the x5 cosine convention).
-    "x124_domain_pagerank" -> ((s, d) =>
+    query("x124_domain_pagerank", ((s, d) =>
       ext.Graph.pageRank(linkGraph(s, d)
         .select(col("src_domain").as("src"), col("dst_domain").as("dst")))
         .withColumn("pr", round(col("pr"), 10))),
+      // x124 — the rank vector re-learned round by round: edges
+      // regenerate closed-form (the x123 layer cancels), then 5 unrolled
+      // power rounds, each one decimal-routed contribution sum per node
+      // plus the dangling-mass scalar — the engine's expression order
+      // term for term, so the doubles match bit for bit
+      s"""WITH $linkRankCtes,
+           ${pageRankCtes(5)}
+           SELECT node, round(pr, 10) AS pr FROM pr5"""),
 
     // x158 — WARM-START rank refresh: the stored x143 authority table
     // (5 cold rounds at rest) iterates 2 MORE rounds on the rebuilt
@@ -2141,7 +4212,7 @@ object SparkEntry {
     // round-trips doubles exactly) — the oracle replays the 7-round
     // chain, so a warm-start that drifted by one ulp would
     // hash-mismatch.
-    "x158_warm_rank" -> ((s, d) => {
+    query("x158_warm_rank", ((s, d) => {
       val edges = linkGraph(s, d)
         .select(col("src_domain").as("src"), col("dst_domain").as("dst"))
       val dir = storedDir("pagerank", d)(p =>
@@ -2152,6 +4223,11 @@ object SparkEntry {
           ext.Graph.pageRankStoredRead(s, dir), iters = 2)
         .withColumn("pr", round(col("pr"), 10))
     }),
+      // x158 — warm(stored pr5) + 2 rounds ≡ cold pr7 on the unchanged
+      // graph: the oracle replays the full 7-round chain
+      s"""WITH $linkRankCtes,
+           ${pageRankCtes(7)}
+           SELECT node, round(pr, 10) AS pr FROM pr7"""),
 
     // x127 — the AUTHORITY report off the x124 rank vector: top-3
     // domains by rank, TakeOrderedAndProject (per-partition top-k, a
@@ -2159,31 +4235,65 @@ object SparkEntry {
     // asserts the plan). Fixed 5 rounds keeps the oracle replay the
     // x124 one; the tolerance-stopped pageRankConverged is proven
     // equal to the long fixed run in GraphSpec.
-    "x127_top_authorities" -> ((s, d) =>
+    query("x127_top_authorities", ((s, d) =>
       ext.Graph.topAuthorities(
         ext.Graph.pageRank(linkGraph(s, d)
           .select(col("src_domain").as("src"),
             col("dst_domain").as("dst"))), 3)
         .withColumn("pr", round(col("pr"), 10))),
+      // x127 — the same 5-round replay, cut to the top 3 by RAW rank
+      // (the engine orders before rounding — ordering by the rounded
+      // value could flip near-ties), node-ascending tiebreak
+      s"""WITH $linkRankCtes,
+           ${pageRankCtes(5)},
+           cut AS (SELECT node, pr FROM pr5
+                   ORDER BY pr DESC, node LIMIT 3)
+           SELECT node, round(pr, 10) AS pr FROM cut"""),
 
     // x130 — WEIGHTED domain PageRank: the x123 link graph keeps edge
     // MULTIPLICITY (a domain linking another 40 times endorses harder
     // than once) and each round distributes rank by w/Σw instead of
     // 1/deg. The oracle replays the weighted rounds term for term.
-    "x130_weighted_pagerank" -> ((s, d) =>
+    query("x130_weighted_pagerank", ((s, d) =>
       ext.Graph.pageRankWeighted(
         linkGraph(s, d)
           .groupBy(col("src_domain").as("src"),
             col("dst_domain").as("dst"))
           .agg(count(lit(1)).cast("double").as("w")))
         .withColumn("pr", round(col("pr"), 10))),
+      // x130 — weighted rounds re-learned: edges keep COUNT(*)
+      // multiplicity, out-weight sums route through decimals, each round
+      // replays pr·(w/Σw) in the engine's expression order
+      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
+                FROM documents),
+           ed0 AS (SELECT sdom AS src,
+                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
+                    WHEN 0 THEN 'example.com'
+                    WHEN 1 THEN 'example.net'
+                    WHEN 7 THEN 'example.edu'
+                    ELSE sdom END AS dst,
+                  CAST(COUNT(*) AS DOUBLE) AS w
+                FROM l0, range(0, 4) t(i)
+                GROUP BY 1, 2),
+           sw AS (SELECT src, ${graft.ops.Stable.sumSql("w", 18)} AS sw
+                FROM ed0 GROUP BY src),
+           nds AS (SELECT DISTINCT node FROM
+                   (SELECT src AS node FROM ed0
+                    UNION ALL SELECT dst AS node FROM ed0) q),
+           nn AS (SELECT COUNT(*) AS n FROM nds),
+           dg AS (SELECT DISTINCT src FROM ed0),
+           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
+                 FROM nds CROSS JOIN nn),
+           ${pageRankCtes(5, "p.pr * (e.w / s.sw)",
+                           "sw s ON s.src = e.src")}
+           SELECT node, round(pr, 10) AS pr FROM pr5"""),
 
     // x131 — PERSONALIZED PageRank from seed domains (Page et al. §6:
     // teleportation restricted to a trusted set — authority RELATIVE
     // to seeds, the seed-and-expand curation move): both the base term
     // and the dangling mass return to the seeds, one of which is the
     // graph's dangling sink, so the redistribution path is exercised.
-    "x131_personalized_pagerank" -> ((s, d) => {
+    query("x131_personalized_pagerank", ((s, d) => {
       import s.implicits._
       ext.Graph.personalizedPageRank(
         linkGraph(s, d)
@@ -2192,6 +4302,14 @@ object SparkEntry {
         Seq("example.com", "example.edu").toDF("node"))
         .withColumn("pr", round(col("pr"), 10))
     }),
+      // x131 — personalized rounds: the teleport vector (1/|S| on the
+      // two seed domains, one of which is the dangling sink) regenerates
+      // closed-form and replaces 1/N in base + dangling terms
+      s"""WITH $linkNodeCtes,
+           $seedTeleportCtes,
+           pr0 AS (SELECT node, t AS pr FROM ndt),
+           ${pprCtes(5)}
+           SELECT node, round(pr, 10) AS pr FROM pr5"""),
 
     // x139 — SPAM MASS (Gyöngyi et al. 2005): how much of each
     // domain's rank arrives from OUTSIDE the trusted core — ordinary
@@ -2201,7 +4319,7 @@ object SparkEntry {
     // two out-of-core CASE destinations are not — both relative-mass
     // regimes appear. The oracle replays BOTH power loops and the
     // scaled subtraction term for term.
-    "x139_spam_mass" -> ((s, d) => {
+    query("x139_spam_mass", ((s, d) => {
       import s.implicits._
       ext.Graph.spamMass(
         linkGraph(s, d)
@@ -2213,6 +4331,28 @@ object SparkEntry {
         .withColumn("spam_mass", round(col("spam_mass"), 10))
         .withColumn("rel_mass", round(col("rel_mass"), 10))
     }),
+      // x139 — both power loops replayed in one WITH chain (the uniform
+      // x124 rounds and the q-prefixed personalized x131 rounds share
+      // ed0/dg/nds), then the engine's exact subtraction order: core =
+      // seed-run rank × (|S|/N), mass = pr − core, rel = mass / pr
+      s"""WITH $linkNodeCtes,
+           nn AS (SELECT COUNT(*) AS n FROM nds),
+           $seedTeleportCtes,
+           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
+                 FROM nds CROSS JOIN nn),
+           ${pageRankCtes(5)},
+           qpr0 AS (SELECT node, t AS pr FROM ndt),
+           ${pprCtes(5, "q")},
+           sm AS (SELECT a.node, a.pr,
+                    b.pr * (CAST(ns.k AS DOUBLE) / CAST(nn.n AS DOUBLE))
+                      AS core_pr
+                  FROM pr5 a JOIN qpr5 b USING (node)
+                  CROSS JOIN nn CROSS JOIN ns)
+           SELECT node, round(pr, 10) AS pr,
+                  round(core_pr, 10) AS core_pr,
+                  round(pr - core_pr, 10) AS spam_mass,
+                  round((pr - core_pr) / pr, 10) AS rel_mass
+           FROM sm"""),
 
     // x140 — DSIR importance weights (Xie et al. 2023): every doc
     // scored by how target-like its hashed unigram+bigram profile is
@@ -2221,29 +4361,139 @@ object SparkEntry {
     // Rational core (mean per-gram probability ratio, bucket-ordered
     // fold) — bit-exact, no rounding; the oracle rebuilds the shingle
     // hashes, both smoothed bucket models, and the fold from scratch.
-    "x140_dsir_weights" -> ((s, d) =>
+    query("x140_dsir_weights", ((s, d) =>
       ext.Curation.dsirWeights(t(s, d, "documents"),
         col("lang") === "en")),
+    {
+      // x140 — the ShingleHashesAll hash family rebuilt from scratch
+      // (FNV-1a per token in the two-multiply ASCII form, polynomial
+      // 1000003 combine for bigrams, the x22 three-step mix64 replay),
+      // signed-pmod bucketing, add-one smoothed target/raw models, and
+      // the bucket-ordered DotFold mean — no rounding anywhere
+      val M = "18446744073709551616::HUGEINT"
+      s"""WITH tok AS (
+         |  SELECT doc_id, lang,
+         |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
+         |                t -> length(t) > 0) AS ts
+         |  FROM documents),
+         |th AS (
+         |  SELECT doc_id, lang, list_transform(ts, t ->
+         |    list_reduce(
+         |      list_prepend(14695981039346656037::HUGEINT,
+         |        list_transform(range(1, length(t) + 1), i ->
+         |          unicode(substr(t, CAST(i AS INTEGER), 1))::HUGEINT)),
+         |      (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
+         |                 * 1099511628211::HUGEINT) % $M)) AS hs
+         |  FROM tok),
+         |sh0 AS (
+         |  SELECT doc_id, lang, unnest(hs) AS f FROM th
+         |  UNION ALL
+         |  SELECT doc_id, lang,
+         |         unnest(list_transform(range(1, len(hs)), i ->
+         |           (hs[CAST(i AS INTEGER)] * 1000003::HUGEINT
+         |            + hs[CAST(i + 1 AS INTEGER)]) % $M)) AS f
+         |  FROM th),
+         |z1 AS (SELECT doc_id, lang, ${mulmodSql(
+                   "xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1
+         |       FROM sh0),
+         |z2 AS (SELECT doc_id, lang, ${mulmodSql(
+                   "xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2
+         |       FROM z1),
+         |zf AS (SELECT doc_id, lang,
+         |              xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM z2),
+         |sgn AS (SELECT doc_id, lang,
+         |          CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
+         |                    THEN uh - 18446744073709551616::HUGEINT
+         |                    ELSE uh END AS BIGINT) AS sh FROM zf),
+         |occ AS (SELECT doc_id, lang,
+         |               ((sh % 1024) + 1024) % 1024 AS b FROM sgn),
+         |mr AS (SELECT b, COUNT(*) AS cr FROM occ GROUP BY b),
+         |mt AS (SELECT b, COUNT(*) AS ct FROM occ
+         |       WHERE lang = 'en' GROUP BY b),
+         |tot AS (SELECT COUNT(*) AS nr,
+         |               COUNT(*) FILTER (WHERE lang = 'en') AS nt
+         |        FROM occ),
+         |pd AS (SELECT doc_id, b, COUNT(*) AS m FROM occ
+         |       GROUP BY doc_id, b),
+         |valued AS (
+         |  SELECT pd.doc_id, pd.b, pd.m,
+         |    CAST(pd.m AS DOUBLE) *
+         |      ((CAST(COALESCE(mt.ct, 0) + 1 AS DOUBLE)
+         |          / CAST(tot.nt + 1024 AS DOUBLE))
+         |       / (CAST(mr.cr + 1 AS DOUBLE)
+         |          / CAST(tot.nr + 1024 AS DOUBLE))) AS val
+         |  FROM pd JOIN mr USING (b) LEFT JOIN mt USING (b)
+         |  CROSS JOIN tot)
+         |SELECT doc_id, CAST(SUM(m) AS BIGINT) AS n_grams,
+         |       list_reduce(list(val ORDER BY b), (a, b) -> a + b)
+         |         / CAST(SUM(m) AS BIGINT) AS dsir_score
+         |FROM valued GROUP BY doc_id""".stripMargin
+    }),
 
     // x141 — hard-negative mining (DPR §4.2): per anchor vector, the
     // top-5 most-similar candidates BELOW the near-dup line (x20's 0.3
     // sits in the populated cosine range with clearance on both sides)
     // — the contrastive-training batch builder. Exact scan + x11
     // window cut; cos rounded 6dp for display only.
-    "x141_hard_negatives" -> ((s, d) =>
+    query("x141_hard_negatives", ((s, d) =>
       ext.Similarity.hardNegatives(t(s, d, "embeddings"),
           queryIds = Seq(0L, 1L, 2L), k = 5, posThreshold = 0.3)
         .withColumn("cos", round(col("cos"), 6))),
+      // x141 — anchors joined back against the full scan, the exact
+      // pairwise cosine (list_dot_product ≡ the Spark fold, x5/x20-
+      // verified), the two-sided cut (self out by id, positives out by
+      // threshold on the EXACT value), and the x11 rank window
+      s"""WITH q AS (
+            SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
+            FROM embeddings WHERE vec_id IN (0, 1, 2)),
+          c AS (
+            SELECT q.q_id, e.vec_id AS neg_id,
+                   list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
+                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
+                                            CAST(e.embedding AS DOUBLE[])))
+                      * sqrt(list_dot_product(q.qv, q.qv))) AS cos
+            FROM embeddings e CROSS JOIN q
+            WHERE e.vec_id <> q.q_id),
+          f AS (
+            SELECT q_id, neg_id, cos,
+                   CAST(row_number() OVER (PARTITION BY q_id
+                        ORDER BY cos DESC, neg_id) AS INTEGER) AS rank
+            FROM c WHERE cos < 0.3)
+          SELECT q_id, neg_id, rank, round(cos, 6) AS cos
+          FROM f WHERE rank <= 5"""),
 
     // x142 — tokenizer-parity census (Petrov et al. 2023): the x115
     // byte-BPE budget rolled up per language — which corpus slices pay
     // more tokens per byte under the merge table (the multilingual
     // fairness/pricing report). Same fixture text and token chain as
     // x115; the rollup is one partials-collapsing hash agg on lang.
-    "x142_lang_fertility" -> ((s, d) =>
+    query("x142_lang_fertility", ((s, d) =>
       ext.TextOps.fertilityByKey(
         t(s, d, "documents").withColumn("text", expr(byteTextSqlExpr)),
         "lang")),
+      // x142 — the x115 per-doc byte-token stats re-aggregated per lang:
+      // same pre-tokenizer/merge-fold replay, integer sums (HUGEINT cast
+      // back to BIGINT), one IEEE division for the ratio
+      s"""WITH $byteBpeOracleCtes,
+           bstat AS (SELECT o.doc_id,
+                       CAST(COUNT(*) AS BIGINT) AS np,
+                       CAST(SUM(b.nb) AS BIGINT) AS nb,
+                       CAST(SUM(len(b.syms)) AS BIGINT) AS nt
+                     FROM boc o
+                     JOIN bb${ext.TextOps.byteBpeFixtureMerges.length} b
+                       USING (w)
+                     GROUP BY o.doc_id),
+           ag AS (SELECT d.lang,
+                         CAST(COUNT(*) AS BIGINT) AS n_docs,
+                         CAST(SUM(s.np) AS BIGINT) AS n_pretokens,
+                         CAST(SUM(s.nb) AS BIGINT) AS n_bytes,
+                         CAST(SUM(s.nt) AS BIGINT) AS n_byte_tokens
+                  FROM bstat s JOIN documents d USING (doc_id)
+                  GROUP BY d.lang)
+           SELECT lang, n_docs, n_pretokens, n_bytes, n_byte_tokens,
+                  CAST(n_bytes AS DOUBLE) / CAST(n_byte_tokens AS DOUBLE)
+                    AS bytes_per_token
+           FROM ag"""),
 
     // x144 — interpolated Kneser-Ney bigram score (Chen & Goodman's
     // empirical winner; the KenLM default): absolute discounting plus
@@ -2251,8 +4501,14 @@ object SparkEntry {
     // add-one model lacks. Mean inverse probability, (w1,w2)-ordered
     // fold, rational core: every model component is an integer count,
     // d = 0.75 is exact in binary, no ln(), no rounding.
-    "x144_kn_score" -> ((s, d) =>
+    query("x144_kn_score", ((s, d) =>
       ext.TextOps.knBigramScore(t(s, d, "documents"))),
+      // x144 — the KN model rebuilt from scratch: bigram types once
+      // (c2t), history counts + distinct continuations off the type
+      // table (h1), distinct histories per word (p2), the one-row type
+      // total, then the engine's exact expression tree per occurrence
+      // and the (w1,w2)-ordered fold — the x51 chain with KN algebra
+      s"WITH $knBigramOracleCtes SELECT doc_id, n_bigrams, kn_score FROM knsc"),
 
     // x149 — TRIGRAM interpolated Kneser-Ney (the full one-level
     // recursion x144 truncates): trigram absolute discounting backs
@@ -2261,8 +4517,63 @@ object SparkEntry {
     // insight applied recursively (Chen & Goodman 1999 §3). Same
     // rational core and ordered-fold determinism; the oracle replays
     // all three count tables off the one trigram-type table.
-    "x149_kn3_score" -> ((s, d) =>
+    query("x149_kn3_score", ((s, d) =>
       ext.TextOps.knTrigramScore(t(s, d, "documents"))),
+      // x149 — the trigram recursion replayed: every count table derives
+      // from the one trigram-type table (t3), continuation type counts
+      // below the top level, the same parenthesization per level
+      """WITH tok AS MATERIALIZED (
+        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |                             t -> length(t) > 0) AS ts
+        |  FROM documents),
+        |occ AS MATERIALIZED (
+        |  SELECT doc_id, w1, w2, w3, COUNT(*) AS m
+        |  FROM (SELECT doc_id, tg[1] AS w1, tg[2] AS w2, tg[3] AS w3
+        |        FROM (SELECT doc_id,
+        |                     unnest(list_transform(range(1, len(ts) - 1), i ->
+        |                       [ts[CAST(i AS INTEGER)],
+        |                        ts[CAST(i + 1 AS INTEGER)],
+        |                        ts[CAST(i + 2 AS INTEGER)]])) AS tg
+        |              FROM tok))
+        |  GROUP BY doc_id, w1, w2, w3),
+        |t3 AS MATERIALIZED (SELECT w1, w2, w3, CAST(SUM(m) AS BIGINT) AS c3
+        |       FROM occ GROUP BY w1, w2, w3),
+        |h12 AS MATERIALIZED (SELECT w1, w2, CAST(SUM(c3) AS BIGINT) AS c12,
+        |               CAST(COUNT(*) AS BIGINT) AS n3f
+        |        FROM t3 GROUP BY w1, w2),
+        |cont2 AS MATERIALIZED (SELECT w2, w3, CAST(COUNT(*) AS BIGINT) AS ck
+        |          FROM t3 GROUP BY w2, w3),
+        |h2 AS MATERIALIZED (SELECT w2, CAST(SUM(ck) AS BIGINT) AS ctot2,
+        |              CAST(COUNT(*) AS BIGINT) AS n2f
+        |       FROM cont2 GROUP BY w2),
+        |p1 AS MATERIALIZED (SELECT w3, CAST(COUNT(*) AS BIGINT) AS n1p
+        |       FROM cont2 GROUP BY w3),
+        |tt AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS cktot FROM cont2),
+        |valued AS MATERIALIZED (
+        |  SELECT o.doc_id, o.w1, o.w2, o.w3, o.m,
+        |         CAST(o.m AS DOUBLE) /
+        |           (GREATEST(CAST(t.c3 AS DOUBLE) - 0.75, 0.0)
+        |              / CAST(h.c12 AS DOUBLE)
+        |            + ((0.75 * CAST(h.n3f AS DOUBLE))
+        |               / CAST(h.c12 AS DOUBLE))
+        |              * (GREATEST(CAST(c.ck AS DOUBLE) - 0.75, 0.0)
+        |                   / CAST(g.ctot2 AS DOUBLE)
+        |                 + ((0.75 * CAST(g.n2f AS DOUBLE))
+        |                    / CAST(g.ctot2 AS DOUBLE))
+        |                   * (CAST(p.n1p AS DOUBLE)
+        |                      / CAST(tt.cktot AS DOUBLE)))) AS val
+        |  FROM occ o
+        |  JOIN t3 t ON o.w1 = t.w1 AND o.w2 = t.w2 AND o.w3 = t.w3
+        |  JOIN h12 h ON o.w1 = h.w1 AND o.w2 = h.w2
+        |  JOIN cont2 c ON o.w2 = c.w2 AND o.w3 = c.w3
+        |  JOIN h2 g ON o.w2 = g.w2
+        |  JOIN p1 p ON o.w3 = p.w3
+        |  CROSS JOIN tt)
+        |SELECT doc_id,
+        |       CAST(SUM(m) AS BIGINT) AS n_trigrams,
+        |       list_reduce(list(val ORDER BY w1, w2, w3), (a, b) -> a + b)
+        |         / CAST(SUM(m) AS BIGINT) AS kn3_score
+        |FROM valued GROUP BY doc_id""".stripMargin),
 
     // x166 — ORDER-5 interpolated Kneser-Ney, KenLM's production
     // default order, via the general order-n recursion (x144/x149 are
@@ -2271,8 +4582,11 @@ object SparkEntry {
     // table, the KN insight applied at every backoff. The oracle is
     // GENERATED for the order (knOracleSql) — same per-level
     // parenthesization, same ordered-fold determinism.
-    "x166_kn5_score" -> ((s, d) =>
+    query("x166_kn5_score", ((s, d) =>
       ext.TextOps.knScore(t(s, d, "documents"), order = 5)),
+      // x166 — the order-5 KN recursion, oracle GENERATED from the order
+      // (knOracleSql): the x149 structure with four continuation levels
+      knOracleSql(5)),
 
     // x214 — CCNet perplexity buckets (Wenzek et al. 2020 §4.3): the
     // x144 KN score splits each LANGUAGE into head/middle/tail
@@ -2280,8 +4594,16 @@ object SparkEntry {
     // thresholds by score value for the same reason); the tercile
     // window runs over the (lang, 9-dp score) group table, never a
     // per-document sort.
-    "x214_ccnet_buckets" -> ((s, d) =>
+    query("x214_ccnet_buckets", ((s, d) =>
       ext.Curation.ccnetBuckets(t(s, d, "documents"))),
+      // x214 — the x144 score chain feeding the per-language tercile
+      // window over the SCORE-GROUP table; the integer 3·cum ≤ n rule
+      // replays exactly and ties never split a boundary
+      s"""WITH $knBigramOracleCtes,
+         sl AS (SELECT k.doc_id, d.lang, k.n_bigrams,
+                       round(k.kn_score, 9) AS ppl
+                FROM knsc k JOIN documents d USING (doc_id)),
+         ${ccnetTercileSql("n_bigrams")}"""),
 
     // x217 — replayable HyperLogLog: the vocabulary-cardinality
     // sketch over the published hash family (Spark's own
@@ -2289,8 +4611,58 @@ object SparkEntry {
     // registers, the exact-decimal harmonic sum, and the estimate all
     // replay bit-for-bit, and the exact distinct count rides the same
     // register shuffle so the report prices its own error.
-    "x217_hll_vocab" -> ((s, d) =>
+    query("x217_hll_vocab", ((s, d) =>
       ext.TextOps.hllVocabEstimate(t(s, d, "documents"), p = 10)),
+    {
+      // x217 — HLL replayed end to end on the x82 hash chain: unsigned
+      // bucket/suffix split at 2^54, the integer comparison-fold rho,
+      // max-register group, EXACT HUGEINT harmonic sum, and the same
+      // alpha/branch/round arithmetic with identical double literals
+      val alpha = 0.7213 / (1.0 + 1.079 / 1024.0)
+      val two64d = math.pow(2.0, 64)
+      s"""WITH ${hashedTokenCtesOver("documents")},
+         hb AS (
+           SELECT uh,
+                  CAST(uh // 18014398509481984::HUGEINT AS BIGINT) AS b,
+                  CAST(uh % 18014398509481984::HUGEINT AS BIGINT) AS z
+           FROM zf),
+         hr AS (
+           SELECT uh, b,
+                  55 - list_sum(list_transform(range(0, 54), i ->
+                    CASE WHEN z >= CAST(power(2.0, i) AS BIGINT)
+                         THEN 1 ELSE 0 END)) AS rho
+           FROM hb),
+         regs AS (
+           SELECT b, MAX(rho) AS mr, COUNT(DISTINCT uh) AS nd
+           FROM hr GROUP BY b),
+         ag AS (
+           SELECT CAST(COUNT(*) AS BIGINT) AS n_hit,
+                  SUM(CAST(power(2.0, 64 - mr) AS HUGEINT)) AS zs_hit,
+                  CAST(SUM(nd) AS BIGINT) AS exact_distinct
+           FROM regs),
+         fin AS (
+           SELECT 1024 - n_hit AS n_zero, exact_distinct,
+                  zs_hit + (1024 - n_hit)::HUGEINT
+                    * 18446744073709551616::HUGEINT AS zsum
+           FROM ag),
+         es AS (
+           SELECT n_zero, exact_distinct,
+                  (${alpha}::DOUBLE * 1048576.0::DOUBLE) *
+                    ($two64d / CAST(zsum AS DOUBLE)) AS est_raw
+           FROM fin),
+         ev AS (
+           SELECT n_zero, exact_distinct,
+                  CASE WHEN est_raw <= 2560.0 AND n_zero > 0
+                       THEN round(1024.0 *
+                              ln(1024.0 / CAST(n_zero AS DOUBLE)), 6)
+                       ELSE round(est_raw, 6) END AS estimate
+           FROM es)
+         SELECT CAST(1024 AS BIGINT) AS m, CAST(n_zero AS BIGINT) AS n_zero,
+                estimate, exact_distinct,
+                round((estimate - CAST(exact_distinct AS DOUBLE))
+                      / CAST(exact_distinct AS DOUBLE), 6) AS rel_err
+         FROM ev"""
+    }),
 
     // x226 — relational BLOOM-FILTER decontamination (Bloom 1970; the
     // x217 design rule: sketch state as inspectable rows): the
@@ -2302,7 +4674,7 @@ object SparkEntry {
     // filter's own false positives — n_bloom_hits ≥ n_exact_hits per
     // doc BY CONSTRUCTION (no false negatives), with the gap = the FP
     // load at this m/k/n operating point.
-    "x226_bloom_decontam" -> ((s, d) => {
+    query("x226_bloom_decontam", ((s, d) => {
       val docs = t(s, d, "documents")
       val keyOf = graft.functions.ShingleHashesAll(col("text"), 3)
       val benchKeys = docs.filter(pmod(col("doc_id"), lit(13L)) === 0L)
@@ -2320,6 +4692,82 @@ object SparkEntry {
           sum(when(col("ex").isNotNull, 1L).otherwise(0L))
             .as("n_exact_hits"))
     }),
+    {
+      // x226 — the Bloom filter replayed end to end: 3-gram window
+      // hashes (per-token FNV, ×1000003 polynomial combine, mix64 — the
+      // x168 chain at k = 3), the benchmark slice's distinct keys, the
+      // three seed positions per key (splitmix64(key + GOLDEN·i), the
+      // seedPosCtes chain), the bit_or'd word table, the probe verdict
+      // (all three bits set), and the exact membership join — words,
+      // verdicts, and counts all rebuilt from scratch
+      val M = "18446744073709551616::HUGEINT"
+      val m = 1 << 15
+      s"""WITH tok0 AS MATERIALIZED (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS ts
+           FROM documents),
+         thl AS MATERIALIZED (
+           SELECT doc_id, list_transform(ts, t ->
+             list_reduce(
+               list_prepend(14695981039346656037::HUGEINT,
+                 list_transform(range(1, length(t) + 1), i ->
+                   unicode(substr(t, CAST(i AS INTEGER), 1))::HUGEINT)),
+               (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
+                          * 1099511628211::HUGEINT) % $M)) AS hs
+           FROM tok0),
+         w3 AS MATERIALIZED (
+           SELECT doc_id, unnest(list_transform(range(1, len(hs) - 1),
+             i -> ((((hs[CAST(i AS INTEGER)] * 1000003::HUGEINT) % $M
+                     + hs[CAST(i + 1 AS INTEGER)]) % $M
+                    * 1000003::HUGEINT) % $M
+                   + hs[CAST(i + 2 AS INTEGER)]) % $M)) AS f
+           FROM thl),
+         z1 AS (SELECT doc_id, ${mulmodSql(
+            "xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM w3),
+         z2 AS (SELECT doc_id, ${mulmodSql(
+            "xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM z1),
+         keys AS MATERIALIZED (
+           SELECT DISTINCT doc_id,
+                  xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM z2),
+         bkeys AS MATERIALIZED (
+           SELECT DISTINCT uh FROM keys WHERE doc_id % 13 = 0),
+         ${seedPosCtes("bkeys", 1, m, "bb", "uh")},
+         ${seedPosCtes("bkeys", 2, m, "bb", "uh")},
+         ${seedPosCtes("bkeys", 3, m, "bb", "uh")},
+         words AS MATERIALIZED (
+           SELECT pos // 32 AS wi,
+                  bit_or(1::BIGINT << CAST(pos % 32 AS INTEGER)) AS w
+           FROM (SELECT pos FROM bbp1 UNION ALL
+                 SELECT pos FROM bbp2 UNION ALL
+                 SELECT pos FROM bbp3)
+           GROUP BY 1),
+         ${seedPosCtes("keys", 1, m, "pp", "doc_id, uh")},
+         ${seedPosCtes("keys", 2, m, "pp", "doc_id, uh")},
+         ${seedPosCtes("keys", 3, m, "pp", "doc_id, uh")},
+         pbit AS (
+           SELECT p.doc_id, p.uh,
+                  (w.w IS NOT NULL AND
+                   (w.w & (1::BIGINT << CAST(p.pos % 32 AS INTEGER)))
+                     = (1::BIGINT << CAST(p.pos % 32 AS INTEGER))) AS bit
+           FROM (SELECT doc_id, uh, pos FROM ppp1 UNION ALL
+                 SELECT doc_id, uh, pos FROM ppp2 UNION ALL
+                 SELECT doc_id, uh, pos FROM ppp3) p
+           LEFT JOIN words w ON w.wi = p.pos // 32),
+         pv AS (SELECT doc_id, uh, bool_and(bit) AS maybe
+                FROM pbit GROUP BY 1, 2),
+         ex AS (SELECT k.doc_id, k.uh,
+                       (b.uh IS NOT NULL) AS ex
+                FROM keys k LEFT JOIN bkeys b ON b.uh = k.uh)
+         SELECT v.doc_id,
+                CAST(COUNT(*) AS BIGINT) AS n_windows,
+                CAST(SUM(CASE WHEN v.maybe THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_bloom_hits,
+                CAST(SUM(CASE WHEN e.ex THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_exact_hits
+         FROM pv v JOIN ex e ON e.doc_id = v.doc_id AND e.uh = v.uh
+         GROUP BY 1"""
+    }),
 
     // x227 — COUNT-MIN heavy hitters (Cormode & Muthukrishnan 2005):
     // every token occurrence increments d = 3 rows of a w = 16
@@ -2332,7 +4780,7 @@ object SparkEntry {
     // CMS guarantee), the overestimate column pricing the colliding
     // mass at this d/w operating point. Registers and estimates replay
     // bit-for-bit in the oracle through the x82 token-hash chain.
-    "x227_countmin_heavy" -> ((s, d) => {
+    query("x227_countmin_heavy", ((s, d) => {
       val docs = t(s, d, "documents")
       val occ = docs.select(
         explode(graft.functions.ShingleHashesAll(col("text"), 1))
@@ -2352,6 +4800,62 @@ object SparkEntry {
         .select(col("term"), col("c_exact"), col("c_est"),
           (col("c_est") - col("c_exact")).as("overestimate"))
     }),
+    {
+      // x227 — Count-Min replayed end to end: the x82 token-hash chain
+      // per occurrence, three seed buckets per occurrence into the
+      // (j, b) register census, the exact term census with the
+      // deterministic top-20 rank, each top term re-hashed from its own
+      // string, and the min-of-rows estimate — registers and estimates
+      // bit for bit
+      val M = "18446744073709551616::HUGEINT"
+      s"""WITH ${hashedTokenCtesOver("documents")},
+         occ AS MATERIALIZED (SELECT uh FROM zf),
+         ${seedPosCtes("occ", 1, 16, "rr", "uh")},
+         ${seedPosCtes("occ", 2, 16, "rr", "uh")},
+         ${seedPosCtes("occ", 3, 16, "rr", "uh")},
+         reg AS MATERIALIZED (
+           SELECT j, b, CAST(COUNT(*) AS BIGINT) AS c
+           FROM (SELECT 0 AS j, pos AS b FROM rrp1 UNION ALL
+                 SELECT 1, pos FROM rrp2 UNION ALL
+                 SELECT 2, pos FROM rrp3)
+           GROUP BY 1, 2),
+         census AS (
+           SELECT u.t AS term, CAST(COUNT(*) AS BIGINT) AS c_exact
+           FROM tok, unnest(ts) AS u(t) GROUP BY 1),
+         top AS (
+           SELECT term, c_exact FROM (
+             SELECT *, row_number()
+                         OVER (ORDER BY c_exact DESC, term) AS rn
+             FROM census) WHERE rn <= 20),
+         tf AS (
+           SELECT term, c_exact,
+             list_reduce(
+               list_prepend(14695981039346656037::HUGEINT,
+                 list_transform(range(1, length(term) + 1), i ->
+                   unicode(substr(term, CAST(i AS INTEGER), 1))::HUGEINT)),
+               (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
+                          * 1099511628211::HUGEINT) % $M) AS f
+           FROM top),
+         tz1 AS (SELECT term, c_exact, ${mulmodSql(
+            "xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM tf),
+         tz2 AS (SELECT term, c_exact, ${mulmodSql(
+            "xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM tz1),
+         tq AS (SELECT term, c_exact,
+                       xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM tz2),
+         ${seedPosCtes("tq", 1, 16, "qq", "term, c_exact, uh")},
+         ${seedPosCtes("tq", 2, 16, "qq", "term, c_exact, uh")},
+         ${seedPosCtes("tq", 3, 16, "qq", "term, c_exact, uh")},
+         est AS (
+           SELECT p.term, p.c_exact,
+                  MIN(COALESCE(r.c, 0)) AS c_est
+           FROM (SELECT term, c_exact, 0 AS j, pos FROM qqp1 UNION ALL
+                 SELECT term, c_exact, 1, pos FROM qqp2 UNION ALL
+                 SELECT term, c_exact, 2, pos FROM qqp3) p
+           LEFT JOIN reg r ON r.j = p.j AND r.b = p.pos
+           GROUP BY 1, 2)
+         SELECT term, c_exact, c_est, c_est - c_exact AS overestimate
+         FROM est"""
+    }),
 
     // x221 — CCNet buckets in the PRODUCTION shape (Wenzek et al.
     // 2020): the x214 tercile operator fed by a STORED, BOUNDED ARPA
@@ -2366,7 +4870,7 @@ object SparkEntry {
     // same group-table window buckets per language. Swapping the LM
     // swaps one input, not the plan; x225 proves the
     // bigger-than-driver model route for the same scorer.
-    "x221_ccnet_stored_pruned" -> ((s, d) => {
+    query("x221_ccnet_stored_pruned", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("arpa3p", d)(p =>
         graft.sources.Arpa.writeLevels(s"$p/model.arpa",
@@ -2376,6 +4880,15 @@ object SparkEntry {
         ext.TextOps.knScoreStoredArpa(s, docs, s"$dir/model.arpa"),
         docs, scoreCol = "kn3_score_q", cntCol = "n_ngrams")
     }),
+      // x221 — the x220 capped+pruned stored-score replay (the shared
+      // chain CTEs) feeding the x214 tercile rule verbatim: the CCNet
+      // production composition over a BOUNDED model, both halves
+      // already proven alone
+      s"""WITH ${knPrunedArpaChainCtes(64, 2, 2)},
+         sl AS (SELECT k.doc_id, d.lang, k.n_ngrams,
+                       round(k.kn3_score_q, 9) AS ppl
+                FROM knp k JOIN documents d USING (doc_id)),
+         ${ccnetTercileSql("n_ngrams")}"""),
 
     // x222 — Moore-Lewis cross-entropy difference selection (Moore &
     // Lewis 2010): the classical domain-selection tier — an in-domain
@@ -2384,12 +4897,30 @@ object SparkEntry {
     // through the LOG-domain walk (pure rational arithmetic — no
     // pow/log in the scoring path), ml = H_general − H_target, and
     // the deterministic top-100 marks `selected`.
-    "x222_moore_lewis" -> ((s, d) => {
+    query("x222_moore_lewis", ((s, d) => {
       val docs = t(s, d, "documents")
       val (arpaT, arpaG) = mooreLewisArpa(s, d, docs)
       ext.TextOps.mooreLewisSelect(s, docs, arpaT, arpaG,
         selectK = 100)
     }),
+      // x222 — two capped bigram-ARPA log chains (target trained on
+      // src0, general on the corpus — bigramArpaLogCtes twice under
+      // distinct prefixes), the cross-entropy difference, and the
+      // deterministic top-100 rank; the log-domain walk has no pow()
+      // so the whole replay is rational over 9-dp decimals
+      s"""WITH $mooreLewisTokCtes,
+         ${bigramArpaLogCtes("t_", "tokt", 128)},
+         ${bigramArpaLogCtes("g_", "tok0", 128)},
+         ml AS (SELECT t.doc_id, t.n AS n_grams,
+                       t.h10 AS h_target, g.h10 AS h_general,
+                       g.h10 - t.h10 AS ml_score
+                FROM t_h t JOIN g_h g USING (doc_id)),
+         rk AS (SELECT *, row_number()
+                            OVER (ORDER BY ml_score DESC, doc_id) AS rn
+                FROM ml)
+         SELECT doc_id, n_grams, h_target, h_general, ml_score,
+                rn <= 100 AS selected
+         FROM rk"""),
 
     // x223 — static LM interpolation (Jelinek & Mercer 1980; SRILM
     // ngram -mix-lm): per gram p = λ·p_indomain + (1−λ)·p_general,
@@ -2399,11 +4930,59 @@ object SparkEntry {
     // both queries). The models carry different vocabularies, so
     // occurrences map into each separately and the walks join by
     // POSITION.
-    "x223_lm_mixture" -> ((s, d) => {
+    query("x223_lm_mixture", ((s, d) => {
       val docs = t(s, d, "documents")
       val (arpaT, arpaG) = mooreLewisArpa(s, d, docs)
       ext.TextOps.knMixtureScoreStoredArpa(s, docs, arpaT, arpaG,
         lambda = 0.5)
+    }),
+    {
+      // x223 — the two model halves of x222 (bigramArpaModelCtes under
+      // the same prefixes), each occurrence mapped into EACH vocabulary,
+      // both walks joined by position, the λ-blend quantized at 9 dp
+      // (the x220 discipline), and the position-ordered inverse-
+      // probability fold
+      def lgSql(l2: String, l1a: String, l1b: String) =
+        s"""(CASE WHEN $l2.lp IS NOT NULL THEN $l2.lp
+                  ELSE COALESCE($l1b.bow, 0.0) +
+                       COALESCE($l1a.lp, -99.0) END)"""
+      val mixExpr = s"""(0.5 * pow(10.0, ${lgSql("a2l", "a1l", "a1b")})
+               + 0.5 * pow(10.0, ${lgSql("b2l", "b1l", "b1b")}))"""
+      s"""WITH $mooreLewisTokCtes,
+         ${bigramArpaModelCtes("t_", "tokt", 128)},
+         ${bigramArpaModelCtes("g_", "tok0", 128)},
+         mocc AS MATERIALIZED (
+           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
+                  ts[CAST(u.i + 1 AS INTEGER)] AS w1,
+                  ts[CAST(u.i + 2 AS INTEGER)] AS w2
+           FROM tok0, unnest(range(0, len(ts) - 1)) AS u(i)),
+         mmap AS (
+           SELECT doc_id, pos,
+                  CASE WHEN list_contains(t_vl.vws, w1)
+                       THEN w1 ELSE '<unk>' END AS a1,
+                  CASE WHEN list_contains(t_vl.vws, w2)
+                       THEN w2 ELSE '<unk>' END AS a2,
+                  CASE WHEN list_contains(g_vl.vws, w1)
+                       THEN w1 ELSE '<unk>' END AS b1,
+                  CASE WHEN list_contains(g_vl.vws, w2)
+                       THEN w2 ELSE '<unk>' END AS b2
+           FROM mocc CROSS JOIN t_vl CROSS JOIN g_vl),
+         mwalk AS (
+           SELECT j.doc_id, j.pos,
+                  CASE WHEN round($mixExpr, 9) > 0
+                       THEN round($mixExpr, 9)
+                       ELSE $mixExpr END AS pq
+           FROM mmap j
+           LEFT JOIN t_l2 a2l ON a2l.w1 = j.a1 AND a2l.w2 = j.a2
+           LEFT JOIN t_l1 a1l ON a1l.w = j.a2
+           LEFT JOIN t_l1 a1b ON a1b.w = j.a1
+           LEFT JOIN g_l2 b2l ON b2l.w1 = j.b1 AND b2l.w2 = j.b2
+           LEFT JOIN g_l1 b1l ON b1l.w = j.b2
+           LEFT JOIN g_l1 b1b ON b1b.w = j.b1)
+         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+                list_reduce(list(1.0 / pq ORDER BY pos), (a, b) -> a + b)
+                  / CAST(COUNT(*) AS BIGINT) AS mix_score_q
+         FROM mwalk GROUP BY doc_id"""
     }),
 
     // x224 — CCNet SAMPLED thresholds (Wenzek et al. 2020's two-phase
@@ -2415,13 +4994,48 @@ object SparkEntry {
     // Scoring is the x144/x214 inline KN bigram chain; the oracle
     // replays the splitmix sample membership, the sample-side group
     // rule, and the ≤-threshold verdict.
-    "x224_ccnet_sampled" -> ((s, d) => {
+    query("x224_ccnet_sampled", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.ccnetBucketsSampledScored(
         ext.TextOps.knBigramScore(docs), docs,
         scoreCol = "kn_score", cntCol = "n_bigrams",
         num = 10, den = 100)
     }),
+      // x224 — CCNet sampled thresholds: the x144 score chain, the x22
+      // splitmix64 sample membership replayed in HUGEINT, per-language
+      // cutoffs from the SAMPLE's score-group rule (max score whose
+      // cumulative group count fits each third), and the ≤-threshold
+      // verdict over every document (NULL cutoffs fall through 'tail')
+      s"""WITH $knBigramOracleCtes,
+         sl AS (SELECT k.doc_id, d.lang, k.n_bigrams,
+                       round(k.kn_score, 9) AS ppl
+                FROM knsc k JOIN documents d USING (doc_id)),
+         m0 AS (SELECT doc_id, doc_id::HUGEINT AS u0 FROM sl),
+         m1 AS (SELECT doc_id, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
+         m2 AS (SELECT doc_id, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
+         m3 AS (SELECT doc_id, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
+         sgn AS (SELECT doc_id,
+                        CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
+                                  THEN uh - 18446744073709551616::HUGEINT
+                                  ELSE uh END AS BIGINT) AS sh FROM m3),
+         smp AS (SELECT s.* FROM sl s JOIN sgn g USING (doc_id)
+                 WHERE ((g.sh % 100) + 100) % 100 < 10),
+         sgrp AS (SELECT lang, ppl, CAST(COUNT(*) AS BIGINT) AS c
+                  FROM smp GROUP BY 1, 2),
+         scum AS (SELECT lang, ppl,
+                         SUM(c) OVER (PARTITION BY lang ORDER BY ppl
+                                      ROWS UNBOUNDED PRECEDING) AS cum,
+                         SUM(c) OVER (PARTITION BY lang) AS n
+                  FROM sgrp),
+         thr AS (SELECT lang,
+                        MAX(CASE WHEN cum * 3 <= n THEN ppl END) AS t_head,
+                        MAX(CASE WHEN cum * 3 <= 2 * n THEN ppl END) AS t_mid
+                 FROM scum GROUP BY lang)
+         SELECT s.doc_id, s.lang, s.n_bigrams, s.ppl,
+                CASE WHEN s.ppl <= t.t_head THEN 'head'
+                     WHEN s.ppl <= t.t_mid THEN 'middle'
+                     ELSE 'tail' END AS bucket
+         FROM sl s LEFT JOIN thr t ON t.lang = s.lang"""),
 
     // x225 — the order-5 stored-ARPA lifecycle scored through the
     // DISTRIBUTED model route: the same x210 artifact reads back as
@@ -2430,13 +5044,16 @@ object SparkEntry {
     // joins against scans, sort-merge-able when the model outgrows
     // the broadcast threshold (PlanSpec pins the strategy flip). Same
     // oracle as x210 — a hash match proves route equivalence.
-    "x225_kn5_arpa_dist" -> ((s, d) => {
+    query("x225_kn5_arpa_dist", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("arpa5", d)(p =>
         graft.sources.Arpa.writeLevels(s"$p/model.arpa",
           ext.TextOps.knArpaLevels(docs, order = 5)))
       ext.TextOps.knScoreStoredArpaLevels(s, docs, s"$dir/model.arpa")
     }),
+      // x225 — the distributed-read scoring route over the same order-5
+      // artifact: route equivalence means the x210 oracle verbatim
+      knOracleSql(5, quantized = true)),
 
     // x215 — C4 cleaning rules (Raffel et al. 2020 §2.2) over a
     // planted line structure: terminal-punctuation lines (doc+line
@@ -2445,7 +5062,7 @@ object SparkEntry {
     // bites, every plant is closed-form for the oracle. minWords = 2
     // because the fixture relines at two tokens (odd-token docs leave
     // a one-word tail line the rule drops).
-    "x215_c4_filters" -> ((s, d) => {
+    query("x215_c4_filters", ((s, d) => {
       val planted = t(s, d, "documents").withColumn("text",
         concat(col("text"),
           when(pmod(col("doc_id"), lit(31L)) === 0L,
@@ -2465,6 +5082,53 @@ object SparkEntry {
       ext.Curation.c4LineFilters(planted.withColumn("text", relined),
         minWordsPerLine = 2)
     }),
+      // x215 — the plants and the two-token reline rebuilt closed-form,
+      // then every C4 rule replayed on the same joined string: terminal
+      // punctuation via ends_with, word count on the empty-filtered
+      // split, the javascript/lorem-ipsum/brace contains checks
+      // verbatim (the phrase check runs on the RELINED text, so a
+      // plant split across a line break correctly does not fire —
+      // engine and oracle agree by construction)
+      """WITH t0 AS (
+           SELECT doc_id, text ||
+             CASE WHEN doc_id % 31 = 0
+                  THEN ' lorem ipsum dolor sit amet' ELSE '' END ||
+             CASE WHEN doc_id % 37 = 0
+                  THEN ' function x { return }' ELSE '' END AS text
+           FROM documents),
+         tok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0) AS l
+           FROM t0),
+         rel AS (
+           SELECT doc_id,
+             list_transform(range(0, greatest((len(l)+1)//2, 1)), i ->
+               array_to_string(l[i*2+1 : i*2+2], ' ') ||
+               CASE WHEN (doc_id + i) % 11 = 0
+                    THEN ' javascript snippet' ELSE '' END ||
+               CASE WHEN (doc_id + i) % 3 <> 0
+                    THEN '.' ELSE '' END) AS lines
+           FROM tok),
+         flt AS (
+           SELECT doc_id, lines,
+             list_filter(lines, ln ->
+               (ends_with(ln, '.') OR ends_with(ln, '!') OR
+                ends_with(ln, '?') OR ends_with(ln, '"')) AND
+               len(list_filter(regexp_split_to_array(lower(ln), '\s+'),
+                               t -> length(t) > 0)) >= 2 AND
+               NOT contains(lower(ln), 'javascript')) AS kept
+           FROM rel)
+         SELECT doc_id,
+                CAST(len(lines) AS BIGINT) AS n_lines,
+                CAST(len(kept) AS BIGINT) AS n_kept,
+                COALESCE(array_to_string(kept, chr(10)), '') AS clean_text,
+                (len(kept) >= 3 AND
+                 NOT contains(lower(array_to_string(lines, chr(10))),
+                              'lorem ipsum') AND
+                 NOT contains(lower(array_to_string(lines, chr(10))),
+                              '{')) AS keep
+         FROM flt"""),
 
     // x168 — DSIR domain selection (Xie et al. 2023): hashed-bigram
     // log-likelihood ratio of every document under the src0 target
@@ -2480,7 +5144,7 @@ object SparkEntry {
     // 2-gram polynomial combine, the mix64 finalizer, the pmod
     // bucketing and the add-one LLR in HUGEINT/IEEE; llr rounds at
     // 9 dp (the x85 ln convention).
-    "x168_dsir_select" -> ((s, d) => {
+    query("x168_dsir_select", ((s, d) => {
       val docs = t(s, d, "documents").withColumn("text",
         concat(col("text"),
           when(col("source") === "src0" ||
@@ -2501,6 +5165,27 @@ object SparkEntry {
           round(col("llr"), 9).as("llr"),
           coalesce(col("sel"), lit(false)).as("selected"))
     }),
+      // x168 — the full DSIR replay: per-token FNV fold (the x82 ASCII
+      // two-byte trick), 2-gram polynomial combine (×1000003 mod 2⁶⁴),
+      // the mix64 finalizer in HUGEINT, signed pmod bucketing, add-one
+      // smoothed LLR with the engine's parenthesization, bucket-ordered
+      // fold
+      s"""WITH doc0 AS (
+           SELECT doc_id, source,
+                  text || CASE WHEN source = 'src0'
+                               OR (source = 'src1' AND doc_id % 3 = 0)
+                          THEN repeat(' quantum flux lattice decoherence' ||
+                                      ' protocol engaged', 30)
+                          ELSE '' END AS text
+           FROM documents),
+         ${dsirCtes("doc0")},
+         rk AS (SELECT *, row_number()
+                            OVER (ORDER BY round(llr / n_grams, 9) DESC,
+                                  doc_id) AS rn
+                FROM agg)
+         SELECT doc_id, n_grams, round(llr, 9) AS llr,
+                rn <= 33 AS selected
+         FROM rk"""),
 
     // x169 — the DSIR STORED-MODEL lifecycle (the x77/x96 discipline
     // for data selection): the bucket model persists as parquet once,
@@ -2509,7 +5194,7 @@ object SparkEntry {
     // proves build → store → load → score end to end. This is the
     // production shape: train the selector once, price every later
     // batch (or stream — streamingDsirGate) against it.
-    "x169_dsir_stored" -> ((s, d) => {
+    query("x169_dsir_stored", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("dsir", d)(p =>
         ext.TextOps.dsirBuildModel(docs,
@@ -2517,6 +5202,14 @@ object SparkEntry {
       ext.TextOps.dsirScoreStored(s, docs, dir)
         .withColumn("llr", round(col("llr"), 9))
     }),
+      // x169 — the stored-model DSIR lifecycle (the x96 proof shape):
+      // the engine builds the bucket model to parquet and scores FROM
+      // storage; the oracle replays the INLINE computation — a hash
+      // match proves the persisted path end to end. No plant: the raw
+      // corpus, weights only.
+      s"""WITH ${dsirCtes("documents")}
+         SELECT doc_id, n_grams, round(llr, 9) AS llr
+         FROM agg"""),
 
     // x170 — the training-ready EXPORT round trip: documents → hashed
     // token ids → MMIDIDX .bin/.idx shard blobs → parse → per-sequence
@@ -2525,13 +5218,26 @@ object SparkEntry {
     // chain) and the shard/rank layout — a hash match proves the
     // header, the byte pointers, the uint16 encoding and the doc ramp
     // end to end.
-    "x170_binidx_scan" -> ((s, d) =>
+    query("x170_binidx_scan", ((s, d) =>
       graft.sources.BinIdx.read(
         graft.sources.BinIdx.shardsFromDocs(t(s, d, "documents"),
           nShards = 8))
         .select(col("shard"), col("pos"),
           col("n_tokens").cast("long").as("n_tokens"),
           aggregate(col("ids"), lit(0L), (a, x) => a + x).as("id_sum"))),
+      // x170 — the container cancels: per-doc token-id census from the
+      // x82 hashed-vocab chain, shard = doc_id % 8, pos = the doc's rank
+      // within its shard (the writer's sort order)
+      s"""WITH $binIdxTokenCtes,
+         rk AS (SELECT doc_id, doc_id % 8 AS shard,
+                       CAST(row_number() OVER (PARTITION BY doc_id % 8
+                                               ORDER BY doc_id) - 1
+                            AS INTEGER) AS pos
+                FROM documents)
+         SELECT r.shard, r.pos,
+                COALESCE(a.n_tokens, 0) AS n_tokens,
+                COALESCE(a.id_sum, 0) AS id_sum
+         FROM rk r LEFT JOIN agg a USING (doc_id)"""),
 
     // x172 — the PRODUCTION export artifact: train byte-BPE (x118's
     // cached table) → encode the fixture corpus to trained token ids →
@@ -2545,7 +5251,7 @@ object SparkEntry {
     // the x119 training chain (byteTrainCtes) into the binidx shard/
     // rank layout: n_tokens per sequence must equal the replayed
     // trained-tokenizer counts.
-    "x172_trained_binidx" -> ((s, d) => {
+    query("x172_trained_binidx", ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val merges = byteBpeTrained(s, d).map(m => (m._1, m._2))
       val dir = storedDir("binidx_trained", d) { p =>
@@ -2584,6 +5290,24 @@ object SparkEntry {
           col("n_tokens").cast("long").as("n_tokens"),
           (col("decoded") === col("text")).as("roundtrip"))
     }),
+      // x172 — the x119 TRAINING chain replayed into the binidx layout:
+      // per-doc trained-tokenizer counts from the 12-round byteTrainCtes
+      // final state, shard = doc_id % 4, pos = rank within shard; the
+      // export/parse/sidecar/decode layers cancel (roundtrip TRUE) —
+      // the engine earns that constant only if decode(sidecar, .bin)
+      // reproduced the text
+      s"""WITH ${byteTrainCtes(12)},
+         agg AS (SELECT o.doc_id,
+                        CAST(SUM(len(v.syms)) AS BIGINT) AS n_tokens
+                 FROM boc o JOIN btw12 v USING (w)
+                 GROUP BY o.doc_id),
+         rk AS (SELECT doc_id, doc_id % 4 AS shard,
+                       CAST(row_number() OVER (PARTITION BY doc_id % 4
+                                               ORDER BY doc_id) - 1
+                            AS INTEGER) AS pos
+                FROM documents)
+         SELECT r.shard, r.pos, a.n_tokens, TRUE AS roundtrip
+         FROM rk r JOIN agg a USING (doc_id)"""),
 
     // x171 — the END-TO-END CORPUS BUILD: crawl → training binary as
     // ONE registered DAG, composing eight oracle-proven stages the way
@@ -2619,7 +5343,7 @@ object SparkEntry {
     // after gating, so each boundary eagerly localCheckpoints (the
     // Pregel discipline): s4-s6 feed 2-3 consumers each and would
     // otherwise replay the full upstream chain per consumer.
-    "x171_corpus_build" -> ((s, d) =>
+    query("x171_corpus_build", ((s, d) =>
       ext.CorpusBuild.run(x171Docs(t(s, d, "documents")),
         x171Urls(t(s, d, "documents")),
         ext.UrlOps.parseRobots(x171Robots(t(s, d, "documents"))),
@@ -2627,6 +5351,44 @@ object SparkEntry {
         minWords = 20L, minDfLine = 20L, minJaccard = 0.35,
         selectK = 180, packBudget = 256L, nShards = 4,
         reline = _ => twoTokenRelined).report),
+      // x171 — the WHOLE corpus-build chain replayed in one WITH: the
+      // robots rule table closed-form (the x109 shape, plain prefixes),
+      // the x32 scrub chain over the planted text, the x33 reline/censor,
+      // the x68 gopher signals at the tuned cuts, the x2/x27 all-pairs
+      // jaccard + recursive component closure, the x168 DSIR chain + the
+      // rounded-ratio top-180, the x26 pack window at 256, and the x82
+      // hashed-token census in the x170 shard/rank layout — every stage
+      // feeding the next, exactly as the engine composes them
+      s"""WITH RECURSIVE
+         $corpusBuildChainCtes,
+         pk0 AS (SELECT doc_id, source,
+                        CAST(len(regexp_split_to_array(lower(text), '\\s+'))
+                             AS BIGINT) AS n_tokens
+                 FROM s6),
+         pk AS (SELECT doc_id, n_tokens,
+                       CAST((SUM(n_tokens) OVER (PARTITION BY source
+                               ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
+                             - n_tokens) // 256 AS BIGINT) AS pack_id
+                FROM pk0),
+         ${hashedTokenCtesOver("s6", "h8")},
+         h8tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
+                   FROM h8sgn),
+         h8agg AS (SELECT doc_id,
+                          CAST(COUNT(*) AS BIGINT) AS n_tokens_idx,
+                          CAST(SUM(tid) AS BIGINT) AS id_sum
+                   FROM h8tid GROUP BY doc_id),
+         rk8 AS (SELECT doc_id, doc_id % 4 AS shard,
+                        CAST(row_number() OVER (PARTITION BY doc_id % 4
+                                                ORDER BY doc_id) - 1
+                             AS INTEGER) AS pos
+                 FROM s6)
+         SELECT s6.doc_id, s6.source, s6.n_lines, s6.n_kept,
+                pk.n_tokens, pk.pack_id, r.shard, r.pos,
+                a.n_tokens_idx, a.id_sum
+         FROM s6
+         JOIN pk USING (doc_id)
+         JOIN rk8 r USING (doc_id)
+         JOIN h8agg a USING (doc_id)"""),
 
     // x211 — the ONE-DAG trained-tokenizer corpus build: the x171
     // chain through s6, then stage 8 swaps the hashed-vocab kernel for
@@ -2636,7 +5398,7 @@ object SparkEntry {
     // loads), reloaded, and every sequence DECODED back through the
     // sidecar. `roundtrip` is earned, not declared: it compares
     // decode(sidecar, .bin) against the curated text per row.
-    "x211_corpus_build_tokenized" -> ((s, d) => {
+    query("x211_corpus_build_tokenized", ((s, d) => {
       val dir = storedDir("corpus_tok", d) { p =>
         val st = ext.CorpusBuild.run(x171Docs(t(s, d, "documents")),
           x171Urls(t(s, d, "documents")),
@@ -2650,6 +5412,33 @@ object SparkEntry {
       }
       ext.CorpusBuild.tokenizedReport(s, dir, nShards = 4)
     }),
+      // x211 — the ONE-DAG trained-tokenizer corpus build: the x171
+      // chain through s6, then the tokenizer is TRAINED ON THE SURVIVORS
+      // (the production order: curate, then fit the vocabulary to the
+      // curated corpus), the survivors encode to trained byte-BPE ids,
+      // and the export is MMIDIDX shards + merges.txt/vocab.json
+      // sidecars — the artifact pair a training job actually loads. The
+      // oracle replays the corpus chain into the x172 byte-train CTEs
+      // over s6: per-doc token counts from the trained segmentation, the
+      // shard/rank layout, and roundtrip TRUE — earned in the engine
+      // only when decode(sidecar, .bin) reproduces every surviving doc.
+      s"""WITH RECURSIVE
+         $corpusBuildChainCtes,
+         ${byteTrainCtesOver(12, "s6", "text")},
+         tkagg AS (SELECT o.doc_id,
+                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_tokens
+                   FROM boc o JOIN btw12 v USING (w)
+                   GROUP BY o.doc_id),
+         rk11 AS (SELECT doc_id, doc_id % 4 AS shard,
+                         CAST(row_number() OVER (PARTITION BY doc_id % 4
+                                                 ORDER BY doc_id) - 1
+                              AS INTEGER) AS pos
+                  FROM s6)
+         SELECT s6.doc_id, s6.source, s6.n_lines, s6.n_kept,
+                r.shard, r.pos, a.n_tokens, TRUE AS roundtrip
+         FROM s6
+         JOIN rk11 r USING (doc_id)
+         JOIN tkagg a USING (doc_id)"""),
 
     // x175 — training SEQUENCES are PACKED GROUPS, not documents: the
     // x26 pack window composed INTO the MMIDIDX export — each exported
@@ -2664,7 +5453,7 @@ object SparkEntry {
     // group sums (+EOD terms) into the shard/rank layout without ever
     // simulating the concatenation; the PARSED n_tokens/id_sum prove
     // the bytes.
-    "x175_packed_binidx" -> ((s, d) => {
+    query("x175_packed_binidx", ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = t(s, d, "documents")
       val ids = transform(
@@ -2699,6 +5488,43 @@ object SparkEntry {
         .select(col("source"), col("pack_id"), col("shard"), col("pos"),
           col("n_docs"), col("n_tokens_idx"), col("id_sum"))
     }),
+      // x175 — the x26 pack window + the x82 per-doc census summed
+      // order-free per pack (+ the EOD term per member), the closed-form
+      // puid, and the x170 shard/rank layout — the concatenation itself
+      // cancels because counts and sums are order-invariant
+      s"""WITH ${hashedTokenCtesOver("documents")},
+         tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
+                 FROM sgn),
+         aggd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok,
+                         CAST(SUM(tid) AS BIGINT) AS id_s
+                  FROM tid GROUP BY doc_id),
+         pk0 AS (SELECT doc_id, source,
+                   CAST(len(regexp_split_to_array(lower(text), '\\s+'))
+                        AS BIGINT) AS n_tokens
+                 FROM documents),
+         pk AS (SELECT doc_id, source,
+                  CAST((SUM(n_tokens) OVER (PARTITION BY source
+                          ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
+                        - n_tokens) // 256 AS BIGINT) AS pack_id
+                FROM pk0),
+         grp AS (SELECT p.source, p.pack_id,
+                   CAST(substr(p.source, 4) AS BIGINT) * 65536
+                     + p.pack_id AS puid,
+                   CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(SUM(COALESCE(a.n_tok, 0)) + COUNT(*)
+                        AS BIGINT) AS n_tokens_idx,
+                   CAST(SUM(COALESCE(a.id_s, 0)) + 65535 * COUNT(*)
+                        AS BIGINT) AS id_sum
+                 FROM pk p LEFT JOIN aggd a USING (doc_id)
+                 GROUP BY p.source, p.pack_id),
+         rk AS (SELECT puid, puid % 4 AS shard,
+                       CAST(row_number() OVER (PARTITION BY puid % 4
+                                               ORDER BY puid) - 1
+                            AS INTEGER) AS pos
+                FROM grp)
+         SELECT g.source, g.pack_id, r.shard, r.pos, g.n_docs,
+                g.n_tokens_idx, g.id_sum
+         FROM grp g JOIN rk r USING (puid)"""),
 
     // x173 — DETOKENIZATION PARITY: decode(encode(text)) == text per
     // document under the trained table, WITHOUT the container layers —
@@ -2708,7 +5534,7 @@ object SparkEntry {
     // table ORDER bugs forward-only oracles can't: a re-ranked table
     // tokenizes differently but still counts the same bytes — only the
     // decode direction pins the id↔token bijection.
-    "x173_bpe_roundtrip" -> ((s, d) => {
+    query("x173_bpe_roundtrip", ((s, d) => {
       val merges = byteBpeTrained(s, d).map(m => (m._1, m._2))
       t(s, d, "documents")
         .withColumn("text", expr(byteTextSqlExpr))
@@ -2718,6 +5544,14 @@ object SparkEntry {
             graft.functions.ByteBpeIds(col("text"), merges), merges)
             === col("text")).as("lossless"))
     }),
+      // x173 — losslessness: the byte length replays closed-form from
+      // the fixture text (strlen = UTF-8 bytes, Spark's octet_length);
+      // `lossless` TRUE is earned only when decode(encode(text)) == text
+      // in the engine — the id↔token bijection audit
+      s"""SELECT doc_id,
+                 CAST(strlen($byteTextSqlExpr) AS BIGINT) AS n_bytes,
+                 TRUE AS lossless
+          FROM documents"""),
 
     // x180 — LONG-DOCUMENT handling composed into the export: docs
     // split into context-length windows (the x56 chunker: 32 tokens,
@@ -2729,7 +5563,7 @@ object SparkEntry {
     // census over the REBUILT chunk text, and the x170 layout — and
     // chunk_tokens (the chunker's arithmetic) must equal n_tokens_idx
     // (the parsed artifact) row for row, the boundary reconciliation.
-    "x180_chunked_binidx" -> ((s, d) => {
+    query("x180_chunked_binidx", ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val chunks = ext.Curation
         .chunkDocs(t(s, d, "documents"), chunkTokens = 32, overlap = 8)
@@ -2752,6 +5586,42 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("shard"), col("pos"),
           col("chunk_tokens"), col("n_tokens_idx"), col("id_sum"))
     }),
+      // x180 — the x56 window replay rebuilt as (uid, text) so the x82
+      // census chain runs verbatim over chunks; layout by uid; the
+      // chunker's token arithmetic and the parsed artifact must agree
+      s"""WITH c0 AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS ts
+           FROM documents),
+         c1 AS (SELECT doc_id, ts, len(ts) AS n FROM c0 WHERE len(ts) > 0),
+         c2 AS (SELECT doc_id, ts, n,
+                       unnest(range(0, greatest(n - 8, 1), 24)) AS start
+                FROM c1),
+         ch AS (SELECT doc_id * 256 + (start // 24) AS doc_id,
+                       doc_id AS orig_id,
+                       CAST(start // 24 AS INTEGER) AS chunk_idx,
+                       CAST(LEAST(32, n - start) AS BIGINT) AS chunk_tokens,
+                       array_to_string(ts[CAST(start + 1 AS INTEGER):
+                                          CAST(start + 32 AS INTEGER)], ' ')
+                         AS text
+                FROM c2),
+         ${hashedTokenCtesOver("ch", "h9")},
+         h9tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
+                   FROM h9sgn),
+         h9agg AS (SELECT doc_id,
+                          CAST(COUNT(*) AS BIGINT) AS n_tokens_idx,
+                          CAST(SUM(tid) AS BIGINT) AS id_sum
+                   FROM h9tid GROUP BY doc_id),
+         rk AS (SELECT doc_id AS uid, orig_id, chunk_idx, chunk_tokens,
+                       doc_id % 4 AS shard,
+                       CAST(row_number() OVER (PARTITION BY doc_id % 4
+                                               ORDER BY doc_id) - 1
+                            AS INTEGER) AS pos
+                FROM ch)
+         SELECT r.orig_id AS doc_id, r.chunk_idx, r.shard, r.pos,
+                r.chunk_tokens, a.n_tokens_idx, a.id_sum
+         FROM rk r JOIN h9agg a ON a.doc_id = r.uid"""),
 
     // x179 — dataset VERSIONING of the training binary: the x152
     // manifest discipline applied to the binidx export — per shard,
@@ -2761,7 +5631,7 @@ object SparkEntry {
     // job pins in its run config; two exports disagree => the digest
     // names the shard. Computed FROM the parsed artifact, so the hash
     // also re-proves the export round trip.
-    "x179_binidx_manifest" -> ((s, d) =>
+    query("x179_binidx_manifest", ((s, d) =>
       graft.sources.BinIdx.read(
           graft.sources.BinIdx.shardsFromDocs(t(s, d, "documents"),
             nShards = 8))
@@ -2772,6 +5642,23 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_seqs"),
           sum("n_tokens").as("token_sum"),
           expr("bit_xor(id_sum ^ pos)").as("id_digest"))),
+      // x179 — the x170 census + layout rolled to the per-shard
+      // manifest: counts/sums/the pos-mixed XOR digest are all
+      // order-independent, so the replay needs no sequence order
+      s"""WITH $binIdxTokenCtes,
+         rk AS (SELECT doc_id, doc_id % 8 AS shard,
+                       CAST(row_number() OVER (PARTITION BY doc_id % 8
+                                               ORDER BY doc_id) - 1
+                            AS BIGINT) AS pos
+                FROM documents),
+         seqs AS (SELECT r.shard, r.pos,
+                         COALESCE(a.n_tokens, 0) AS n_tokens,
+                         COALESCE(a.id_sum, 0) AS id_sum
+                  FROM rk r LEFT JOIN agg a USING (doc_id))
+         SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_seqs,
+                CAST(SUM(n_tokens) AS BIGINT) AS token_sum,
+                CAST(bit_xor(xor(id_sum, pos)) AS BIGINT) AS id_digest
+         FROM seqs GROUP BY shard"""),
 
     // x145 — crawl-budget apportionment: the stored rank vector (the
     // x143 authority store) turned into integer per-domain fetch
@@ -2779,7 +5666,7 @@ object SparkEntry {
     // the invariant a fixed-capacity tick needs and naive rounding
     // breaks. The oracle replays the rank rounds, the quota algebra,
     // and the remainder window term for term.
-    "x145_crawl_budget" -> ((s, d) => {
+    query("x145_crawl_budget", ((s, d) => {
       val dir = storedDir("pagerank", d)(p =>
         ext.Graph.pageRankStoredBuild(linkGraph(s, d)
           .select(col("src_domain").as("src"),
@@ -2787,6 +5674,30 @@ object SparkEntry {
       ext.Graph.crawlBudget(ext.Graph.pageRankStoredRead(s, dir), 300L)
         .withColumn("quota", round(col("quota"), 10))
     }),
+      // x145 — the x124 rank replay feeding the Hamilton apportionment:
+      // decimal-routed rank sum, the exact quota/floor/frac algebra, the
+      // one-row used-budget aggregate, and the remainder window with the
+      // engine's (frac DESC, node) order
+      s"""WITH $linkRankCtes,
+           ${pageRankCtes(5)},
+           sq AS (SELECT ${graft.ops.Stable.sumSql("pr", 18)} AS spr
+                  FROM pr5),
+           qt AS (SELECT node, CAST(300 AS DOUBLE) * (pr / sq.spr)
+                           AS quota
+                  FROM pr5 CROSS JOIN sq),
+           qb AS (SELECT node, quota,
+                         CAST(floor(quota) AS BIGINT) AS base,
+                         quota - floor(quota) AS frac
+                  FROM qt),
+           us AS (SELECT CAST(SUM(base) AS BIGINT) AS used FROM qb),
+           rk AS (SELECT qb.*, us.used,
+                         row_number() OVER (ORDER BY frac DESC, node)
+                           AS rn
+                  FROM qb CROSS JOIN us)
+           SELECT node, round(quota, 10) AS quota,
+                  base + CASE WHEN rn <= 300 - used
+                              THEN 1 ELSE 0 END AS n_fetch
+           FROM rk"""),
 
     // x146 — rendezvous (highest-random-weight) sharding: each doc's
     // shard under 8 and under 9 shards plus the moved flag — growing
@@ -2794,16 +5705,57 @@ object SparkEntry {
     // mod-N would; pure per-row splitmix64 arithmetic, no coordination
     // state. The oracle rebuilds all nine weights and both argmax
     // chains from scratch.
-    "x146_rendezvous_shards" -> ((s, d) =>
+    query("x146_rendezvous_shards", ((s, d) =>
       ext.Curation.rendezvousResize(t(s, d, "documents"), 8, 9)),
+    {
+      // x146 — all nine signed splitmix64 weights rebuilt, then both
+      // first-match argmax chains (ties to the smaller index, the
+      // engine's CASE order) and the moved flag
+      def caseChain(n: Int, m: String): String =
+        (0 until n - 1).map(s => s"WHEN sh$s = $m THEN $s")
+          .mkString("CASE ", " ", s" ELSE ${n - 1} END")
+      val g8 = (0 until 8).map(s => s"sh$s").mkString("GREATEST(", ", ", ")")
+      val g9 = (0 until 9).map(s => s"sh$s").mkString("GREATEST(", ", ", ")")
+      s"""WITH ${rdvCtes(9)},
+           mm AS (SELECT doc_id,
+                         ${(0 until 9).map(s => s"sh$s").mkString(", ")},
+                         $g8 AS m8, $g9 AS m9
+                  FROM rd8),
+           sel AS (SELECT doc_id,
+                          ${caseChain(8, "m8")} AS shard_before,
+                          ${caseChain(9, "m9")} AS shard_after
+                   FROM mm)
+           SELECT doc_id, shard_before, shard_after,
+                  shard_before <> shard_after AS moved
+           FROM sel"""
+    }),
 
     // x147 — Matryoshka truncation gate (Kusupati et al. 2022):
     // recall@10 of the top-k under the FIRST-32-DIM prefix cosine vs
     // the full 64-dim exact cut — the acceptance test before swapping
     // retrieval to half-width vectors. Both cuts TakeOrderedAndProject.
-    "x147_matryoshka_recall" -> ((s, d) =>
+    query("x147_matryoshka_recall", ((s, d) =>
       ext.Similarity.matryoshkaRecall(t(s, d, "embeddings"),
         queryVector, k = 10, prefixDim = 32)),
+      // x147 — prefix and full-width cuts replayed (list slice + the
+      // same dot-product folds), overlap counted — the x135 shape with
+      // truncation instead of quantization
+      s"""WITH ap AS (
+            SELECT vec_id FROM embeddings
+            ORDER BY list_dot_product(CAST(embedding[1:32] AS DOUBLE[]),
+                                      $queryVectorPrefix32Sql)
+                     / (sqrt(list_dot_product(
+                          CAST(embedding[1:32] AS DOUBLE[]),
+                          CAST(embedding[1:32] AS DOUBLE[])))
+                        * sqrt(list_dot_product($queryVectorPrefix32Sql,
+                                                $queryVectorPrefix32Sql)))
+                     DESC, vec_id
+            LIMIT 10),
+          ex AS (SELECT vec_id FROM embeddings
+                 ORDER BY $cosSql DESC, vec_id LIMIT 10)
+          SELECT COUNT(*) AS n_overlap,
+                 CAST(COUNT(*) AS DOUBLE) / 10 AS recall_at_10
+          FROM ap JOIN ex USING (vec_id)"""),
 
     // x132 — BM25 over ANCHOR text (what OTHER pages call a domain —
     // the classic retrieval signal anchor indexing exists for,
@@ -2812,7 +5764,7 @@ object SparkEntry {
     // its concatenated inbound anchors; tf/dl are order-free counts,
     // so the concat order is immaterial and the oracle aggregates the
     // per-link term census directly.
-    "x132_anchor_bm25" -> ((s, d) => {
+    query("x132_anchor_bm25", ((s, d) => {
       val docs = linkGraph(s, d)
         .withColumn("anchor", expr(anchorSqlExpr))
         .select(col("dst_domain"),
@@ -2822,20 +5774,71 @@ object SparkEntry {
       ext.TextOps.bm25Search(docs, Seq("jerry", "archive", "home"),
         topN = 5)
     }),
+      // x132 — BM25 over ANCHOR text: per-domain tf/dl/df aggregate from
+      // the same decoded term layer (tf and dl are order-free sums, so
+      // the engine's concat-then-tokenize equals the per-link census);
+      // the scoring expression replays x34's IEEE order with the same
+      // written-out constants
+      s"""WITH $anchorCtes,
+           per AS (SELECT ddom AS doc_id,
+                  CAST(COUNT(*) AS DOUBLE) AS dl,
+                  CAST(SUM(CASE WHEN term = 'jerry' THEN 1 ELSE 0 END)
+                       AS DOUBLE) AS tf_jerry,
+                  CAST(SUM(CASE WHEN term = 'archive' THEN 1 ELSE 0 END)
+                       AS DOUBLE) AS tf_archive,
+                  CAST(SUM(CASE WHEN term = 'home' THEN 1 ELSE 0 END)
+                       AS DOUBLE) AS tf_home
+                FROM tm WHERE length(term) > 0
+                GROUP BY ddom),
+           stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
+                  SUM(dl) AS sum_dl,
+                  SUM(CASE WHEN tf_jerry > 0 THEN 1.0 ELSE 0.0 END)
+                    AS df_jerry,
+                  SUM(CASE WHEN tf_archive > 0 THEN 1.0 ELSE 0.0 END)
+                    AS df_archive,
+                  SUM(CASE WHEN tf_home > 0 THEN 1.0 ELSE 0.0 END)
+                    AS df_home
+                FROM per),
+           scored AS (SELECT p.doc_id, p.dl,
+                  ((s.n_docs - s.df_jerry + 0.5) / (s.df_jerry + 0.5))
+                    * (p.tf_jerry * (1.2 + 1.0))
+                    / (p.tf_jerry + 1.2 * (1.0 - 0.75 + 0.75 * p.dl
+                                           / (s.sum_dl / s.n_docs)))
+                  + ((s.n_docs - s.df_archive + 0.5) / (s.df_archive + 0.5))
+                    * (p.tf_archive * (1.2 + 1.0))
+                    / (p.tf_archive + 1.2 * (1.0 - 0.75 + 0.75 * p.dl
+                                             / (s.sum_dl / s.n_docs)))
+                  + ((s.n_docs - s.df_home + 0.5) / (s.df_home + 0.5))
+                    * (p.tf_home * (1.2 + 1.0))
+                    / (p.tf_home + 1.2 * (1.0 - 0.75 + 0.75 * p.dl
+                                          / (s.sum_dl / s.n_docs)))
+                  AS score
+                FROM per p CROSS JOIN stats s)
+           SELECT doc_id, dl, score FROM scored WHERE score > 0
+           ORDER BY score DESC, doc_id LIMIT 5"""),
 
     // x135 — the 1-bit acceptance gate (the x69 contract for the
     // sign-word tier): recall@10 of the Hamming-then-rerank cut
     // against the exact cosine scan — the number a corpus owner reads
     // before trusting the 16x-cheaper index.
-    "x135_binary_recall" -> ((s, d) =>
+    query("x135_binary_recall", ((s, d) =>
       ext.Similarity.binaryAnnRecall(t(s, d, "embeddings"),
         queryVector, 10)),
+      // x135 — approx and exact top-10 replayed, overlap counted
+      s"""WITH $binaryAnnCandCtes,
+           approx AS (SELECT vec_id FROM cand
+                      ORDER BY $cosSql DESC, vec_id LIMIT 10),
+           exact AS (SELECT vec_id FROM embeddings
+                     ORDER BY $cosSql DESC, vec_id LIMIT 10)
+           SELECT COUNT(*) AS n_overlap,
+                  CAST(COUNT(*) AS DOUBLE) / 10 AS recall_at_10
+           FROM approx JOIN exact USING (vec_id)"""),
 
     // x136 — the per-node DEGREE/reciprocity census over a closed-form
     // two-family site graph (a stride-3 ring: never reciprocal; a
     // stride-6 chord on even sites: always reciprocal) — the
     // link-exchange tell read next to the rank vector.
-    "x136_degree_report" -> ((s, d) => {
+    query("x136_degree_report", ((s, d) => {
       def site(c: org.apache.spark.sql.Column) =
         concat(lit("site"), c.cast("string"), lit(".example.com"))
       val base = t(s, d, "documents")
@@ -2847,6 +5850,36 @@ object SparkEntry {
             .select(site(col("i")).as("src"),
               site((col("i") + 6) % 12).as("dst"))))
     }),
+      // x136 — the edge families regenerate closed-form; reciprocity via
+      // the reversed-edge equi-join, degrees as grouped counts
+      """WITH b AS (SELECT DISTINCT CAST(doc_id % 12 AS INTEGER) AS i
+                  FROM documents),
+           ed AS (SELECT 'site' || CAST(i AS STRING) || '.example.com'
+                           AS src,
+                         'site' || CAST((i + 3) % 12 AS STRING) ||
+                           '.example.com' AS dst
+                  FROM b
+                  UNION
+                  SELECT 'site' || CAST(i AS STRING) || '.example.com',
+                         'site' || CAST((i + 6) % 12 AS STRING) ||
+                           '.example.com'
+                  FROM b WHERE i % 2 = 0),
+           nds AS (SELECT DISTINCT src AS node FROM ed
+                   UNION SELECT DISTINCT dst FROM ed),
+           od AS (SELECT src AS node, COUNT(*) AS o FROM ed GROUP BY 1),
+           idg AS (SELECT dst AS node, COUNT(*) AS ii FROM ed GROUP BY 1),
+           rc AS (SELECT e.src AS node, COUNT(*) AS r
+                  FROM ed e JOIN ed f
+                    ON f.src = e.dst AND f.dst = e.src
+                  GROUP BY 1)
+           SELECT n.node,
+                  CAST(COALESCE(od.o, 0) AS BIGINT) AS out_deg,
+                  CAST(COALESCE(idg.ii, 0) AS BIGINT) AS in_deg,
+                  CAST(COALESCE(rc.r, 0) AS BIGINT) AS n_reciprocal
+           FROM nds n
+           LEFT JOIN od ON od.node = n.node
+           LEFT JOIN idg ON idg.node = n.node
+           LEFT JOIN rc ON rc.node = n.node"""),
 
     // x138 — CO-CITATION pairs over the x123 domain graph (Small
     // 1973): domains the same sources link are related — the
@@ -2856,22 +5889,36 @@ object SparkEntry {
     // degree (the domain graph has ≤ 8 distinct out-domains per src),
     // so the capped code path is what the oracle hashes; GraphSpec
     // carries the case where a hub actually drops.
-    "x138_cocitation" -> ((s, d) =>
+    query("x138_cocitation", ((s, d) =>
       ext.Graph.coCitation(linkGraph(s, d)
         .select(col("src_domain").as("src"),
           col("dst_domain").as("dst")), maxOutDeg = 64L)),
+      // x138 — the ordered-pair self-join on the source key replayed
+      s"""WITH $linkEdgeCtes
+           SELECT x.dst AS d1, y.dst AS d2, COUNT(*) AS n_common
+           FROM ed0 x JOIN ed0 y
+             ON y.src = x.src AND x.dst < y.dst
+           GROUP BY 1, 2"""),
 
     // x134 — HITS hubs/authorities over the x123 domain graph: the
     // recurrence that separates the directory role (hub) from the
     // endorsed role (authority) — the sink families collect authority,
     // the crawl domains (all outlinks) score as hubs. 5 rounds, L2
     // normalization per half-round, replayed term for term.
-    "x134_hits" -> ((s, d) =>
+    query("x134_hits", ((s, d) =>
       ext.Graph.hits(linkGraph(s, d)
           .select(col("src_domain").as("src"),
             col("dst_domain").as("dst")))
         .withColumn("hub", round(col("hub"), 10))
         .withColumn("auth", round(col("auth"), 10))),
+      // x134 — the two mutually-recursive vectors re-learned: unrolled
+      // auth/hub half-rounds with decimal sums and IEEE sqrt/divide
+      s"""WITH $linkNodeCtes,
+           hb0 AS (SELECT node, CAST(1 AS DOUBLE) AS hub FROM nds),
+           ${hitsCtes(5)}
+           SELECT h.node, round(h.hub, 10) AS hub,
+                  round(t.auth, 10) AS auth
+           FROM hb5 h JOIN at5 t ON t.node = h.node"""),
 
     // x133 — crawl ISLANDS: weakly-connected components over a
     // closed-form three-island site graph (site k → site (k+3) mod 12,
@@ -2879,13 +5926,35 @@ object SparkEntry {
     // each component's min site string. The star-contraction runs on
     // xxhash64 ids internally; the label layer is what the oracle
     // checks, via a recursive min-label closure.
-    "x133_crawl_islands" -> ((s, d) =>
+    query("x133_crawl_islands", ((s, d) =>
       ext.Graph.crawlIslands(
         t(s, d, "documents").select(
           concat(lit("site"), (col("doc_id") % 12).cast("string"),
             lit(".example.com")).as("src"),
           concat(lit("site"), ((col("doc_id") % 12 + 3) % 12).cast("string"),
             lit(".example.com")).as("dst")))),
+      // x133 — the island labels via a RECURSIVE min-label closure over
+      // the undirected edge set (the hash layer is engine-internal and
+      // cancels; 12 nodes make the closure trivial for the oracle while
+      // the engine runs the real log-round contraction)
+      """WITH RECURSIVE
+           ed AS (SELECT DISTINCT
+                    'site' || CAST(doc_id % 12 AS STRING) ||
+                      '.example.com' AS a,
+                    'site' || CAST((doc_id % 12 + 3) % 12 AS STRING) ||
+                      '.example.com' AS b
+                  FROM documents),
+           ue AS (SELECT a, b FROM ed UNION SELECT b, a FROM ed),
+           nds AS (SELECT DISTINCT a AS node FROM ue),
+           r(n, x) AS (
+             SELECT node, node FROM nds
+             UNION
+             SELECT r.n, ue.b FROM r JOIN ue ON ue.a = r.x),
+           isl AS (SELECT n AS node, MIN(x) AS island FROM r GROUP BY n),
+           sz AS (SELECT island, COUNT(*) AS island_size FROM isl
+                  GROUP BY island)
+           SELECT i.node, i.island, s.island_size
+           FROM isl i JOIN sz s ON s.island = i.island"""),
 
     // x129 — the crawl-TRAP detector over a closed-form four-host
     // fixture: a pagination trap (/p/<id> — one digit-normalized
@@ -2893,9 +5962,54 @@ object SparkEntry {
     // segments), a session-id trap (one path, a query per doc), and a
     // clean static site that must NOT flag. Per-host shape census —
     // one hash agg, distinct counts expand map-side.
-    "x129_crawl_traps" -> ((s, d) =>
+    query("x129_crawl_traps", ((s, d) =>
       ext.UrlOps.crawlTraps(
         t(s, d, "documents").select(expr(trapUrlSqlExpr).as("url")))),
+      // x129 — host/path/query regenerate closed-form per variant (the
+      // URL-parse layer is oracle-proven in x99/x109); depth as the '/'
+      // count, skeletons via the same digit-collapse regex, the tuple
+      // distinct as a '?'-joined string (injective here: '' queries,
+      // '?'-free paths)
+      """WITH u0 AS (SELECT doc_id,
+             CASE CAST(doc_id % 4 AS INTEGER)
+               WHEN 0 THEN 'pages.example.com'
+               WHEN 1 THEN 'deep.example.com'
+               WHEN 2 THEN 'app.example.com'
+               ELSE 'static.example.org' END AS host,
+             CASE CAST(doc_id % 4 AS INTEGER)
+               WHEN 0 THEN '/p/' || CAST(doc_id AS STRING)
+               WHEN 1 THEN '/a/b/c/d/e/f/g/h/i/x' ||
+                           CAST(doc_id % 3 AS STRING)
+               WHEN 2 THEN '/list'
+               ELSE '/' || CASE CAST(doc_id % 3 AS INTEGER)
+                             WHEN 0 THEN 'about' WHEN 1 THEN 'contact'
+                             ELSE 'pricing' END END AS path,
+             CASE WHEN doc_id % 4 = 2
+                  THEN 'session=' || CAST(doc_id AS STRING) ||
+                       '&page=' || CAST(doc_id % 7 AS STRING)
+                  ELSE '' END AS q
+           FROM documents),
+           agg AS (SELECT host,
+             COUNT(*) AS n_urls,
+             MAX(CAST(length(path) - length(replace(path, '/', ''))
+                 AS INTEGER)) AS max_depth,
+             COUNT(DISTINCT path) AS n_paths,
+             COUNT(DISTINCT regexp_replace(path, '[0-9]+', 'N', 'g'))
+               AS n_skeletons,
+             COUNT(DISTINCT path || '?' || q) AS n_path_queries
+           FROM u0 GROUP BY host)
+           SELECT host, n_urls, max_depth, n_paths, n_skeletons,
+                  n_path_queries,
+                  CAST(n_paths AS DOUBLE) / CAST(n_skeletons AS DOUBLE)
+                    AS path_fanout,
+                  CAST(n_path_queries AS DOUBLE) / CAST(n_paths AS DOUBLE)
+                    AS query_fanout,
+                  (max_depth > 8
+                   OR CAST(n_paths AS DOUBLE) /
+                      CAST(n_skeletons AS DOUBLE) > 4.0
+                   OR CAST(n_path_queries AS DOUBLE) /
+                      CAST(n_paths AS DOUBLE) > 4.0) AS is_trap
+           FROM agg"""),
 
     // x128 — the per-destination ANCHOR-TERM census over the x123
     // link graph: the terms other pages use when linking AT a domain
@@ -2906,19 +6020,34 @@ object SparkEntry {
     // never two); the oracle carries the DECODED text per fixture
     // variant, so a wrong decode (double-unescape, missed &nbsp;,
     // eaten unknown entity) hash-mismatches.
-    "x128_anchor_census" -> ((s, d) =>
+    query("x128_anchor_census", ((s, d) =>
       ext.Html.anchorTermCensus(
         linkGraph(s, d).withColumn("anchor",
           ext.Html.decodeEntitiesCol(expr(anchorSqlExpr))))),
+      // x128 — edges regenerate closed-form (the x124 convention) and
+      // the anchor text appears DECODED per variant: the expected output
+      // of the engine's entity decoder, not a replay of it — a decoder
+      // bug cannot cancel
+      s"""WITH $anchorCtes
+           SELECT ddom AS dst_domain, term,
+                  COUNT(*) AS n_links,
+                  CAST(SUM(CASE WHEN ii THEN 1 ELSE 0 END) AS BIGINT)
+                    AS n_internal,
+                  COUNT(DISTINCT doc_id) AS n_src_docs
+           FROM tm WHERE length(term) > 0
+           GROUP BY 1, 2"""),
 
     // x125 — binary sign-bit ANN (the 1-bit end of the x67/x65
     // quantization ladder): 64-dim vectors pack into two 32-bit words,
     // Hamming distance is two XOR+popcounts, top-20 Hamming candidates
     // re-rank by exact cosine. The oracle rebuilds the words from
     // scratch and replays both cuts.
-    "x125_binary_ann" -> ((s, d) =>
+    query("x125_binary_ann", ((s, d) =>
       ext.Similarity.binaryAnnTopK(t(s, d, "embeddings"), queryVector, 10)
         .withColumn("cos", round(col("cos"), 6))),
+      // x125 — the sign words rebuilt from scratch (31-bit-safe shifts),
+      // both ordering cuts replayed with the engine's tiebreaks
+      binaryAnnOracleSql),
 
     // x126 — the STORED sign-word index (the x77 lifecycle for the
     // 1-bit tier): words persist once per data dir, the query's
@@ -2927,25 +6056,39 @@ object SparkEntry {
     // 20-row rerank join. Value-identical to x125's inline packing
     // (parquet stores int64 exactly), so the oracle is the same
     // replay; the bench times the query half only.
-    "x126_binary_stored_ann" -> ((s, d) => {
+    query("x126_binary_stored_ann", ((s, d) => {
       val dir = storedDir("signwords", d)(p =>
         ext.Similarity.binaryAnnStoredBuild(t(s, d, "embeddings"), p))
       ext.Similarity.binaryAnnStoredQuery(t(s, d, "embeddings"), dir,
           queryVector, 10)
         .withColumn("cos", round(col("cos"), 6))
     }),
+      // x126 — the stored-words lifecycle is value-identical to the
+      // inline packing (parquet stores int64 exactly), so the oracle is
+      // the same replay (the x77/x66 convention)
+      binaryAnnOracleSql),
 
     // x108 — corpus SUBWORD census through the custom GENERATOR
     // (bpe_explode — the §2.10 UDTF surface): one row per subword
     // straight out of the Generate, one partial+final hash agg, a
     // TakeOrderedAndProject top-20 on the (count DESC, subword) total
     // order — the vocabulary-frequency report a tokenizer owner reads.
-    "x108_subword_census" -> ((s, d) =>
+    query("x108_subword_census", ((s, d) =>
       t(s, d, "documents")
         .select(graft.functions.BpeExplode(col("text"),
           ext.TextOps.bpeFixtureMerges).as(Seq("word_idx", "subword")))
         .groupBy("subword").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("subword")).limit(20)),
+      // x108 — the merge-loop CTEs' final vocabulary state carries the
+      // subword STRINGS; unnest weighted by word occurrence, same cut
+      s"""WITH $bpeOracleCtes,
+           sub AS (SELECT unnest(v.syms) AS subword
+                   FROM wordocc o
+                   JOIN b${ext.TextOps.bpeFixtureMerges.length} v
+                     ON v.w = o.w)
+           SELECT subword, CAST(COUNT(*) AS BIGINT) AS n
+           FROM sub GROUP BY subword
+           ORDER BY n DESC, subword LIMIT 20"""),
 
     // x107 — domain-aware crawl rebalancing: the x99 registered domain
     // becomes the stratum key of the x35 inverse-sqrt resampler — the
@@ -2953,21 +6096,28 @@ object SparkEntry {
     // domains, not raw hosts, so www./cdn./blog. subdomains pool into
     // one budget). Composes two proven fragments; the splitmix coin and
     // thresholds replay exactly.
-    "x107_domain_mix" -> ((s, d) =>
+    query("x107_domain_mix", ((s, d) =>
       ext.Curation.inverseSqrtSample(
-        t(s, d, "documents")
-          .withColumn("url", expr(urlSqlExpr))
-          // coalesce makes the join key NON-NULLABLE: without it the
-          // sampler's inner join adds isnotnull(domain) and pushes a
-          // predicate inlining the whole url→host→domain chain (67 KB
-          // of expression) below the projections on BOTH sides — 3 s
-          // of interpreted filtering for a 0.2 s query. The '' branch
-          // never fires (the fixture host is never null).
-          .withColumn("domain", coalesce(
-            ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))),
-            lit(""))),
+        docUrls(s, d),
         "domain", target = 8.0)
         .select("doc_id", "domain", "source", "n_chars")),
+      // x107 — the x99 domain chain feeding the x35 threshold + splitmix
+      // coin, replayed end to end
+      s"""WITH $urlNormCtes,
+          dom AS MATERIALIZED (
+            SELECT doc_id, ${regDomainSql("host")} AS domain FROM n),
+          cnt AS (SELECT domain, COUNT(*) AS n_d FROM dom GROUP BY 1),
+          thr AS (SELECT domain,
+                    CAST(floor(least(1.0, 8.0 / sqrt(CAST(n_d AS DOUBLE)))
+                               * 1048576) AS BIGINT) AS keep_below
+                  FROM cnt),
+          m0 AS (SELECT d.doc_id, g.domain, d.source, d.n_chars,
+                        t.keep_below, d.doc_id::HUGEINT AS u0
+                 FROM documents d JOIN dom g USING (doc_id)
+                 JOIN thr t ON t.domain = g.domain),
+          $mix64SignedCtes
+          SELECT doc_id, domain, source, n_chars FROM sgn
+          WHERE ((sh % 1048576) + 1048576) % 1048576 < keep_below"""),
 
     // x105 — BPE TRAINING inside the engine (the x85/x90 discipline
     // promoted to subword vocabularies): 12 rounds of occurrence-
@@ -2976,11 +6126,20 @@ object SparkEntry {
     // learned merge table itself; the oracle re-learns it round by
     // round — count CTE, 1-row argmax CTE, merge-apply CTE per rank —
     // and must reproduce every rule AND its count exactly.
-    "x105_bpe_train" -> ((s, d) => {
+    query("x105_bpe_train", ((s, d) => {
       import s.implicits._
       bpeTrained(s, d).zipWithIndex
         .map { case ((p1, p2, c), i) => (i + 1, p1, p2, c) }
         .toDF("rank", "l_sym", "r_sym", "pair_count")
+    }),
+    {
+      // x105 — training re-learned round by round; every rule and count
+      // must match the engine's argmax sequence exactly
+      val union = (1 to 12).map(k =>
+        s"""SELECT CAST($k AS INTEGER) AS rank, p1 AS l_sym,
+                   p2 AS r_sym, cnt AS pair_count FROM tt$k""")
+        .mkString("\n UNION ALL ")
+      s"WITH ${bpeTrainCtes(12)} $union"
     }),
 
     // x106 — the trained tokenizer APPLIED: per-doc fertility report
@@ -2988,9 +6147,20 @@ object SparkEntry {
     // lifecycle; the oracle tokenizes from its own re-learned table's
     // final vocabulary state, so a single diverging rule anywhere in
     // training would cascade into a hash mismatch here).
-    "x106_bpe_trained_tokens" -> ((s, d) =>
+    query("x106_bpe_trained_tokens", ((s, d) =>
       ext.TextOps.bpeReport(t(s, d, "documents"),
         merges = bpeTrained(s, d).map(m => (m._1, m._2)))),
+      // x106 — tokenize with the re-learned table: per-word subword
+      // counts come straight from the final training state tw12
+      s"""WITH ${bpeTrainCtes(12)},
+           agg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
+                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_bpe_tokens
+                   FROM twordocc o JOIN tw12 v USING (w)
+                   GROUP BY o.doc_id)
+           SELECT doc_id, n_words, n_bpe_tokens,
+                  CAST(n_bpe_tokens AS DOUBLE) / CAST(n_words AS DOUBLE)
+                    AS fertility
+           FROM agg"""),
 
     // x98 — EXACT tokenization: greedy byte-pair encoding (the published
     // subword algorithm) over the in-repo rank-ordered merge table, as
@@ -2998,8 +6168,20 @@ object SparkEntry {
     // cache. Per doc: word count, exact BPE token count, fertility. The
     // oracle replays the merge loop rule by rule over the corpus'
     // distinct-word vocabulary and joins the counts back by word.
-    "x98_bpe_tokens" -> ((s, d) =>
+    query("x98_bpe_tokens", ((s, d) =>
       ext.TextOps.bpeReport(t(s, d, "documents"))),
+      // x98 — the BPE merge loop replayed rule by rule over the distinct
+      // vocabulary; counts join back per word occurrence; fertility is one
+      // IEEE division, bit-equal in both engines
+      s"""WITH $bpeOracleCtes,
+           agg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
+                          CAST(SUM(v.k) AS BIGINT) AS n_bpe_tokens
+                   FROM wordocc o JOIN wbpe v USING (w)
+                   GROUP BY o.doc_id)
+           SELECT doc_id, n_words, n_bpe_tokens,
+                  CAST(n_bpe_tokens AS DOUBLE) / CAST(n_words AS DOUBLE)
+                    AS fertility
+           FROM agg"""),
 
     // x118 — byte-level BPE TRAINING inside the engine (the x105
     // discipline one level down the stack): 12 Sennrich rounds over
@@ -3009,7 +6191,7 @@ object SparkEntry {
     // merge table itself (symbols rendered as hyphen-joined byte
     // values); the oracle re-learns it round by round over INT[]-list
     // symbols, whose ORDER BY is exactly the engine's Latin-1 order.
-    "x118_bytebpe_train" -> ((s, d) => {
+    query("x118_bytebpe_train", ((s, d) => {
       import s.implicits._
       byteBpeTrained(s, d).zipWithIndex
         .map { case ((p1, p2, c), i) =>
@@ -3017,15 +6199,39 @@ object SparkEntry {
             p2.map(_.toInt).mkString("-"), c) }
         .toDF("rank", "l_bytes", "r_bytes", "pair_count")
     }),
+    {
+      // x118 — the byte training chain re-learned round by round; each
+      // round's argmax row carries the winning pair as data
+      val union = (1 to 12).map(k =>
+        s"""SELECT CAST($k AS INTEGER) AS rank,
+                   array_to_string(p1, '-') AS l_bytes,
+                   array_to_string(p2, '-') AS r_bytes,
+                   cnt AS pair_count FROM btt$k""")
+        .mkString("\n UNION ALL ")
+      s"WITH ${byteTrainCtes(12)} $union"
+    }),
 
     // x119 — the trained byte tokenizer APPLIED: the x115 report under
     // the x118-learned merges (train → tokenize, the full byte-level
     // lifecycle; one diverging training round anywhere would cascade
     // into a hash mismatch here).
-    "x119_bytebpe_trained_tokens" -> ((s, d) =>
+    query("x119_bytebpe_trained_tokens", ((s, d) =>
       ext.TextOps.byteBpeReport(
         t(s, d, "documents").withColumn("text", expr(byteTextSqlExpr)),
         merges = byteBpeTrained(s, d).map(m => (m._1, m._2)))),
+      // x119 — tokenize with the re-learned byte table: counts come
+      // straight from the final training state btw12
+      s"""WITH ${byteTrainCtes(12)},
+           agg AS (SELECT o.doc_id,
+                     CAST(COUNT(*) AS BIGINT) AS n_pretokens,
+                     CAST(SUM(v.nb) AS BIGINT) AS n_bytes,
+                     CAST(SUM(len(v.syms)) AS BIGINT) AS n_byte_tokens
+                   FROM boc o JOIN btw12 v USING (w)
+                   GROUP BY o.doc_id)
+           SELECT doc_id, n_pretokens, n_bytes, n_byte_tokens,
+                  CAST(n_byte_tokens AS DOUBLE) /
+                    CAST(n_pretokens AS DOUBLE) AS byte_fertility
+           FROM agg"""),
 
     // x115 — BYTE-level BPE under the GPT-2 regex pre-split (the real
     // token denomination of training budgets): the fixture text gains
@@ -3037,17 +6243,51 @@ object SparkEntry {
     // UTF-8 bytes from code points, and folds the byte merge loop rule
     // by rule over the DISTINCT pre-token vocabulary — the x98
     // convention one level down the stack.
-    "x115_bytebpe_tokens" -> ((s, d) =>
+    query("x115_bytebpe_tokens", ((s, d) =>
       ext.TextOps.byteBpeReport(
         t(s, d, "documents").withColumn("text", expr(byteTextSqlExpr)))),
+      // x115 — the GPT-2 pre-split recombined closed-form from class
+      // runs, UTF-8 bytes from code points, and the byte merge loop
+      // folded rank by rank over the distinct pre-token vocabulary
+      s"""WITH $byteBpeOracleCtes,
+           bstat AS (SELECT o.doc_id,
+                       CAST(COUNT(*) AS BIGINT) AS n_pretokens,
+                       CAST(SUM(b.nb) AS BIGINT) AS n_bytes,
+                       CAST(SUM(len(b.syms)) AS BIGINT) AS n_byte_tokens
+                     FROM boc o
+                     JOIN bb${ext.TextOps.byteBpeFixtureMerges.length} b
+                       USING (w)
+                     GROUP BY o.doc_id)
+           SELECT doc_id, n_pretokens, n_bytes, n_byte_tokens,
+                  CAST(n_byte_tokens AS DOUBLE) /
+                    CAST(n_pretokens AS DOUBLE) AS byte_fertility
+           FROM bstat"""),
 
     // x103 — the x26 packing operator re-denominated in EXACT BPE tokens
     // (the token counter is a parameter of packSequences): same
     // contiguous-window pack algebra, but the 2048 budget now counts real
     // subword tokens, not the whitespace proxy.
-    "x103_bpe_pack" -> ((s, d) =>
+    query("x103_bpe_pack", ((s, d) =>
       ext.Curation.packSequences(t(s, d, "documents"), "source", 2048L,
         tokenCount = c => ext.TextOps.bpeTokenCount(c))),
+      // x103 — the x26 pack window denominated by the replayed BPE counts;
+      // docs with no words pack at zero tokens (LEFT JOIN + COALESCE)
+      s"""WITH $bpeOracleCtes,
+           toks AS (
+             SELECT d.doc_id, d.source,
+                    CAST(COALESCE(a.n, 0) AS BIGINT) AS n_tokens
+             FROM documents d
+             LEFT JOIN (SELECT o.doc_id, SUM(v.k) AS n
+                        FROM wordocc o JOIN wbpe v USING (w)
+                        GROUP BY o.doc_id) a USING (doc_id)),
+           c AS (
+             SELECT doc_id, source, n_tokens,
+                    SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                        ROWS UNBOUNDED PRECEDING) AS cum
+             FROM toks)
+           SELECT doc_id, source, n_tokens,
+                  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id
+           FROM c"""),
 
     // x121 — the SAME pack operator re-denominated in BYTE-level
     // tokens (the token counter stays a parameter): the 2048 budget
@@ -3055,31 +6295,87 @@ object SparkEntry {
     // fixture text — the denomination a real training run bills in.
     // Proof that the whole budget tier inherits the byte tokenizer
     // without a plan change.
-    "x121_bytebpe_pack" -> ((s, d) =>
+    query("x121_bytebpe_pack", ((s, d) =>
       ext.Curation.packSequences(
         t(s, d, "documents").withColumn("text", expr(byteTextSqlExpr)),
         "source", 2048L,
         tokenCount = c => graft.functions.ByteBpeStats(c,
           ext.TextOps.byteBpeFixtureMerges).getField("n_byte_tokens"))),
+      // x121 — the x103 pack window denominated by the replayed BYTE
+      // token counts; docs with no pre-tokens pack at zero
+      s"""WITH $byteBpeOracleCtes,
+           btoks AS (
+             SELECT d.doc_id, d.source,
+                    CAST(COALESCE(a.n, 0) AS BIGINT) AS n_tokens
+             FROM documents d
+             LEFT JOIN (SELECT o.doc_id, SUM(len(v.syms)) AS n
+                        FROM boc o
+                        JOIN bb${ext.TextOps.byteBpeFixtureMerges.length} v
+                          USING (w)
+                        GROUP BY o.doc_id) a USING (doc_id)),
+           bc AS (
+             SELECT doc_id, source, n_tokens,
+                    SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                        ROWS UNBOUNDED PRECEDING) AS cum
+             FROM btoks)
+           SELECT doc_id, source, n_tokens,
+                  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id
+           FROM bc"""),
 
     // x35 — temperature-flavored domain rebalancing: per-source keep rate
     // min(1, 3/sqrt(n_d)) decided by the splitmix64 coin mod 2^20 (sqrt
     // is IEEE-correctly-rounded, so DuckDB reproduces the exact cut)
-    "x35_temp_resample" -> ((s, d) =>
+    query("x35_temp_resample", ((s, d) =>
       ext.Curation.inverseSqrtSample(t(s, d, "documents"), "source",
           target = 3.0)
         .select("doc_id", "lang", "source", "n_chars")),
+          // x35 — per-source keep threshold floor(min(1, 3/sqrt(n))·2^20)
+      // (sqrt/division/product all correctly-rounded, so the thresholds are
+      // bit-equal), then the x22 splitmix64 HUGEINT replay and the signed
+      // pmod against 2^20
+      s"""WITH cnt AS (SELECT source, COUNT(*) AS n_d FROM documents GROUP BY 1),
+          thr AS (SELECT source,
+                    CAST(floor(least(1.0, 3.0 / sqrt(CAST(n_d AS DOUBLE)))
+                               * 1048576) AS BIGINT) AS keep_below
+                  FROM cnt),
+          m0 AS (SELECT d.doc_id, d.lang, d.source, d.n_chars, t.keep_below,
+                        d.doc_id::HUGEINT AS u0
+                 FROM documents d JOIN thr t ON t.source = d.source),
+          $mix64SignedCtes
+          SELECT doc_id, lang, source, n_chars FROM sgn
+          WHERE ((sh % 1048576) + 1048576) % 1048576 < keep_below"""),
 
     // x36 — the END-TO-END curation product: language, quality,
     // repetition, and decontamination gates plus near-dup cluster removal
     // composed into the kept corpus. Every gate is the oracle-proven
     // x7/x8/x23/x21/x27 logic; the COMPOSITION itself is oracle-checked
     // (src0 plays the eval benchmark, as in x21).
-    "x36_curation_pipeline" -> ((s, d) => {
+    query("x36_curation_pipeline", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.curationPipeline(docs,
         docs.filter(col("source") === "src0"))
     }),
+      // x36 — the full curation chain composed from the shared fragments
+      // each single-gate oracle already proves (lang/qual/rep/cont CTEs and
+      // the jaccard-edge + recursive-component closure), so the only new
+      // assertion here is the composition semantics: inner joins on the
+      // per-doc gates (contamination's inner join drops shingle-less docs,
+      // the x21 convention), conjunctive cuts, and the cluster anti-join
+      s"""WITH RECURSIVE $componentCtes,
+          $langCtes,
+          $qualityCtes,
+          $repCtes,
+          $contamCtes
+          SELECT d.doc_id, d.lang, d.source, d.n_chars, q.quality,
+                 c.contamination
+          FROM documents d
+          JOIN lang l ON l.doc_id = d.doc_id
+          JOIN qual q ON q.doc_id = d.doc_id
+          JOIN rep r ON r.doc_id = d.doc_id
+          JOIN cont c ON c.doc_id = d.doc_id
+          WHERE l.pred_lang = 'en' AND q.quality >= 0.5
+            AND r.rep_ratio <= 0.5 AND c.contamination < 0.5
+            AND d.doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)"""),
 
     // x37 — exact repeated-substring spans (suffix-array-style dedup, the
     // Lee-et-al span census): maximal token spans whose 8-token windows
@@ -3087,15 +6383,44 @@ object SparkEntry {
     // pipeline string-keyed (window hashes are engine-internal; 64-bit
     // collisions are impossible at fixture scale), including the identical
     // gaps-and-islands merge.
-    "x37_repeated_spans" -> ((s, d) =>
+    query("x37_repeated_spans", ((s, d) =>
       ext.Dedup.repeatedSpans(t(s, d, "documents"), windowK = 8,
         minCount = 2)),
+      // x37 — string-keyed replay of the window census: same tokenizer
+      // (lowercase, whitespace split, empties dropped), every 8-token
+      // window in position, corpus-wide occurrence count, and the identical
+      // gaps-and-islands span merge (windows chain while pos gap <= k)
+      """WITH tok AS (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0) AS l
+           FROM documents),
+         win AS (
+           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
+                  array_to_string(l[u.i+1 : u.i+8], ' ') AS gram
+           FROM tok, unnest(range(0, greatest(len(l)-8+1, 0))) AS u(i)),
+         dup AS (SELECT gram FROM win GROUP BY 1 HAVING COUNT(*) >= 2),
+         hits AS (SELECT w.doc_id, w.pos FROM win w
+                  WHERE w.gram IN (SELECT gram FROM dup)),
+         isl AS (
+           SELECT doc_id, pos,
+                  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
+                       ORDER BY pos) <= 8 THEN 0 ELSE 1 END AS brk
+           FROM hits),
+         grp AS (
+           SELECT doc_id, pos,
+                  SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
+           FROM isl)
+         SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
+                CAST(MAX(pos)+7 AS BIGINT) AS span_end,
+                CAST(COUNT(*) AS BIGINT) AS n_windows
+         FROM grp GROUP BY doc_id, g"""),
 
     // x44 — dup-cluster size report: the summary every dedup run prints
     // (how many clusters of what size, docs removable). Composes the
     // proven x27 components; the oracle reuses the independent
     // recursive-closure algorithm and aggregates identically.
-    "x44_cluster_sizes" -> ((s, d) => {
+    query("x44_cluster_sizes", ((s, d) => {
       val docs = t(s, d, "documents")
       val edges = ext.Dedup.jaccardPairs(docs, shingleK = 3,
         minJaccard = 0.4).select("doc_a", "doc_b")
@@ -3105,34 +6430,64 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_clusters"),
              sum(col("cluster_size") - 1).as("docs_removable"))
     }),
+      // x44 — the x27 recursive closure, aggregated to the size histogram
+      s"""WITH RECURSIVE $componentCtes,
+          per AS (SELECT rep, COUNT(*) AS cluster_size FROM cc GROUP BY 1)
+          SELECT cluster_size, COUNT(*) AS n_clusters,
+                 CAST(SUM(cluster_size - 1) AS BIGINT) AS docs_removable
+          FROM per GROUP BY 1"""),
 
     // x43 — contamination-safe split: doc_id ≡ 7 (mod 10) plays the eval
     // partition; train loses every near-dup (jaccard ≥ 0.5) of any eval
     // doc. Oracle = the exact all-pairs census, mixed pairs only, train
     // member dropped whichever side of the (a<b) order it landed on.
-    "x43_decontaminated_split" -> ((s, d) =>
+    query("x43_decontaminated_split", ((s, d) =>
       ext.Curation.decontaminatedTrainSplit(t(s, d, "documents"),
           isEval = pmod(col("doc_id"), lit(10)) === 7, minJaccard = 0.5)
         .select("doc_id", "lang", "source", "n_chars")),
+      // x43 — exact all-pairs census; a mixed (eval, train) pair drops its
+      // train member regardless of which side of doc_a < doc_b it is on
+      s"""WITH $pairCountCtes,
+         sim AS (
+           SELECT doc_a, doc_b FROM inter
+           JOIN sizes sa ON sa.doc_id = doc_a
+           JOIN sizes sb ON sb.doc_id = doc_b
+           WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5),
+         drops AS (
+           SELECT CASE WHEN doc_a % 10 = 7 THEN doc_b ELSE doc_a END AS did
+           FROM sim WHERE (doc_a % 10 = 7) <> (doc_b % 10 = 7))
+         SELECT doc_id, lang, source, n_chars FROM documents
+         WHERE doc_id % 10 <> 7
+           AND doc_id NOT IN (SELECT did FROM drops)"""),
 
     // x42 — incremental dedup: docs 0..399 play the stored corpus index,
     // 400..499 the daily increment; new docs near-dup-check against the
     // index AND each other in one banding pass. Oracle = exact all-pairs
     // jaccard restricted to pairs whose larger member is new (the x2
     // all-pairs CTE + the increment filter).
-    "x42_incremental_dedup" -> ((s, d) => {
+    query("x42_incremental_dedup", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Dedup.incrementalVerifiedDups(
         ext.Dedup.minhashIndex(docs.filter(col("doc_id") < 400)),
         docs.filter(col("doc_id") >= 400), minJaccard = 0.5)
     }),
+      // x42 — exact 3-gram all-pairs (the x2 CTEs) cut to pairs whose
+      // larger member belongs to the increment
+      s"""WITH $pairCountCtes
+         SELECT doc_a, doc_b,
+                CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
+         FROM inter
+         JOIN sizes sa ON sa.doc_id = doc_a
+         JOIN sizes sb ON sb.doc_id = doc_b
+         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
+           AND doc_b >= 400"""),
 
     // j9 — interval containment join: the 20 highest-value error events
     // open 2-hour incident windows; every event inside a window joins to
     // it — via hourly bucketing (equi-join + refine), never a nested
     // loop. All times are integer micros (Spark DIV 1000 truncation ≡
     // DuckDB epoch_us), so the oracle's plain BETWEEN join is exact.
-    "j9_interval_join" -> ((s, d) => {
+    query("j9_interval_join", ((s, d) => {
       val ev = Tables.events(s, d)
         .withColumn("ts_us", unix_micros(col("ts")))
         .select("event_id", "event_type", "value", "ts_us")
@@ -3146,18 +6501,71 @@ object SparkEntry {
           incidents, "start_us", "end_us")
         .select("incident_id", "event_id", "event_type", "ts_us")
     }),
+      // j9 — the oracle is the PLAIN containment join (the bucketing is a
+      // semantics-transparent rewrite, like j7's salt)
+      """WITH ev AS (
+           SELECT event_id, event_type, value, epoch_us(ts) AS ts_us
+           FROM events),
+         inc AS (
+           SELECT event_id AS incident_id, ts_us AS start_us,
+                  ts_us + 7200000000 AS end_us
+           FROM ev WHERE event_type = 'error'
+           ORDER BY value DESC, event_id LIMIT 20)
+         SELECT i.incident_id, e.event_id, e.event_type, e.ts_us
+         FROM ev e JOIN inc i
+           ON e.ts_us BETWEEN i.start_us AND i.end_us"""),
 
     // x41 — deterministic training-order shuffle: shard by mix64(id),
     // order within shard by the composed mix64∘mix64 stream — the global
     // reorder before sequence packing, reproducible with no RNG state
-    "x41_shuffle_shards" -> ((s, d) =>
+    query("x41_shuffle_shards", ((s, d) =>
       ext.Curation.shuffleShards(t(s, d, "documents"), nShards = 8)),
+      // x41 — the x22 splitmix64 HUGEINT replay applied twice (the second
+      // round starts from the first round's unsigned result), Spark's
+      // signed pmod for the shard, identical (ord, id) window order
+      s"""WITH m0 AS (SELECT doc_id, doc_id::HUGEINT AS u0 FROM documents),
+          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
+          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
+          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
+          n1 AS (SELECT *, ${mulmodSql("xor(uh, uh // 1073741824::HUGEINT)", Mix64C1)} AS v1 FROM m3),
+          n2 AS (SELECT *, ${mulmodSql("xor(v1, v1 // 134217728::HUGEINT)", Mix64C2)} AS v2 FROM n1),
+          n3 AS (SELECT *, xor(v2, v2 // 2147483648::HUGEINT) AS vh FROM n2),
+          sgn AS (SELECT doc_id,
+                    CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
+                              THEN uh - 18446744073709551616::HUGEINT
+                              ELSE uh END AS BIGINT) AS sh,
+                    CAST(CASE WHEN vh >= 9223372036854775808::HUGEINT
+                              THEN vh - 18446744073709551616::HUGEINT
+                              ELSE vh END AS BIGINT) AS ord
+                  FROM n3)
+          SELECT doc_id, ((sh % 8) + 8) % 8 AS shard,
+                 CAST(row_number() OVER (PARTITION BY ((sh % 8) + 8) % 8
+                      ORDER BY ord, doc_id) AS BIGINT) AS pos
+          FROM sgn"""),
 
     // x40 — vocabulary-coverage audit: top-200 corpus tokens as the
     // vocabulary (count DESC, token ASC — a total order, so the cut
     // replays exactly), per-doc OOV fraction
-    "x40_vocab_coverage" -> ((s, d) =>
+    query("x40_vocab_coverage", ((s, d) =>
       ext.TextOps.vocabCoverage(t(s, d, "documents"), vocabSize = 200)),
+      // x40 — same census, same deterministic vocabulary cut, same
+      // per-doc re-aggregation
+      """WITH toks AS (
+           SELECT doc_id, u.tok FROM (
+             SELECT doc_id, list_filter(
+               regexp_split_to_array(lower(text), '\s+'),
+               t -> length(t) > 0) AS l
+             FROM documents), unnest(l) AS u(tok)),
+         vocab AS (
+           SELECT tok FROM toks GROUP BY tok
+           ORDER BY COUNT(*) DESC, tok LIMIT 200)
+         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
+                CAST(SUM(CASE WHEN tok IN (SELECT tok FROM vocab)
+                         THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
+                CAST(SUM(CASE WHEN tok IN (SELECT tok FROM vocab)
+                         THEN 0 ELSE 1 END) AS DOUBLE) / COUNT(*)
+                  AS oov_rate
+         FROM toks GROUP BY doc_id"""),
 
     // x39 — Bloom-pre-filtered drop-list subtraction: the near-dup
     // cluster members (the x27/x28 drop-list) are sketched into a typed
@@ -3165,7 +6573,7 @@ object SparkEntry {
     // and only Bloom-positive rows reach the exact anti-join. No false
     // negatives ⇒ result ≡ the plain anti-join, which IS the oracle (the
     // j7 convention: the rewrite must lose and leak nothing).
-    "x39_bloom_anti" -> ((s, d) => {
+    query("x39_bloom_anti", ((s, d) => {
       val docs = t(s, d, "documents")
       val edges = ext.Dedup.jaccardPairs(docs, shingleK = 3,
         minJaccard = 0.4).select("doc_a", "doc_b")
@@ -3174,33 +6582,87 @@ object SparkEntry {
       ext.Bloom.antiJoinWithBloom(docs, drop)
         .select("doc_id", "lang", "source", "n_chars")
     }),
+      // x39 — the Bloom pre-filter is semantics-transparent, so the oracle
+      // is the PLAIN drop-list subtraction (same kept corpus as x28)
+      s"""WITH RECURSIVE $componentCtes
+          SELECT doc_id, lang, source, n_chars FROM documents
+          WHERE doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)"""),
 
     // x38 — SemDeDup: semantic dedup through the embedding space. The
     // full product is oracled: deterministic first-16 centroids, argmax
     // assignment (the x17 fragment), within-cluster exact-cosine edges,
     // recursive-CTE component closure (the x27 fragment), min-id
     // representatives, anti-join to the kept corpus.
-    "x38_semdedup" -> ((s, d) =>
+    query("x38_semdedup", ((s, d) =>
       ext.Similarity.semDeDup(t(s, d, "embeddings"), nClusters = 16,
         minCos = 0.3)),
+      // x38 — SemDeDup end-to-end: assignment argmax mirrored with the
+      // x17 row_number technique (ties to the higher cid), within-cluster
+      // pairwise cosine via list_dot_product (bit-equal to the Spark fold,
+      // x5/x20-verified), and the x27 recursive-walk component closure
+      """WITH RECURSIVE cent AS (
+           SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
+           FROM embeddings WHERE vec_id < 16),
+         p0 AS (
+           SELECT e.vec_id, c.cid,
+                  list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
+                  / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
+                                           CAST(e.embedding AS DOUBLE[])))
+                     * sqrt(list_dot_product(c.cvec, c.cvec))) AS cc
+           FROM embeddings e, cent c),
+         assign AS (
+           SELECT vec_id, cid FROM (
+             SELECT vec_id, cid,
+                    row_number() OVER (PARTITION BY vec_id
+                                       ORDER BY cc DESC, cid DESC) AS rn
+             FROM p0) WHERE rn = 1),
+         av AS (
+           SELECT a.vec_id, a.cid, CAST(e.embedding AS DOUBLE[]) AS v
+           FROM assign a JOIN embeddings e USING (vec_id)),
+         sedges AS (
+           SELECT x.vec_id AS s, y.vec_id AS t
+           FROM av x JOIN av y ON x.cid = y.cid AND x.vec_id < y.vec_id
+           WHERE list_dot_product(x.v, y.v)
+                 / (sqrt(list_dot_product(x.v, x.v))
+                    * sqrt(list_dot_product(y.v, y.v))) >= 0.3),
+         sund AS (SELECT s, t FROM sedges
+                  UNION ALL SELECT t, s FROM sedges),
+         snodes AS (SELECT DISTINCT s AS id FROM sund),
+         swalk(id, cur) AS (
+           SELECT id, id FROM snodes
+           UNION
+           SELECT w.id, u.t FROM swalk w JOIN sund u ON u.s = w.cur),
+         scc AS (SELECT id, MIN(cur) AS rep FROM swalk GROUP BY id)
+         SELECT a.vec_id, a.cid FROM assign a
+         WHERE a.vec_id NOT IN (SELECT id FROM scc WHERE rep <> id)"""),
 
     // ---- extensions: text analysis
-    "x7_lang_id" -> ((s, d) =>
+    query("x7_lang_id", ((s, d) =>
       t(s, d, "documents")
         .select(col("doc_id"), ext.TextOps.langId(col("text")).as("pred_lang"))),
+      s"""WITH $langCtes
+          SELECT doc_id, pred_lang FROM lang"""),
 
-    "x8_quality" -> ((s, d) => {
+    query("x8_quality", ((s, d) => {
       val sig = ext.TextOps.qualitySignals(col("text"))
       t(s, d, "documents").select(
         (col("doc_id") +: sig.map { case (n, c) => c.as(n) }) :+
           ext.TextOps.qualityScore(col("text")).as("quality"): _*)
     }),
+      s"""WITH $qualityCtes
+          SELECT doc_id, n_chars, n_tokens, punct_ratio, digit_ratio,
+                 stopword_ratio, mean_word_len, quality
+          FROM qual"""),
 
-    "x9_token_count" -> ((s, d) =>
+    query("x9_token_count", ((s, d) =>
       t(s, d, "documents").select(
         col("doc_id"),
         ext.TextOps.tokenCount(col("text")).as("n_tokens"),
         ext.TextOps.subwordCount(col("text")).as("n_subwords"))),
+      """SELECT doc_id,
+                len(regexp_split_to_array(lower(text), '\s+')) AS n_tokens,
+                len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_subwords
+         FROM documents"""),
 
     // x152 — SHARD MANIFEST: the dataset-versioning artifact a
     // reproducible training run ships — per deterministic shard
@@ -3213,7 +6675,7 @@ object SparkEntry {
     // the row fingerprint, the shard digest, and the root. Pure
     // partial+final aggregation — partials collapse map-side at any
     // corpus size, XOR is partitioning-invariant by construction.
-    "x152_shard_manifest" -> ((s, d) => {
+    query("x152_shard_manifest", ((s, d) => {
       val docs = t(s, d, "documents")
       val root = ext.Curation.manifestRows(docs)
         .agg(count(lit(1)).as("n_docs"), sum("nc").as("n_chars"),
@@ -3222,6 +6684,19 @@ object SparkEntry {
           col("digest"))
       ext.Curation.shardManifest(docs).unionByName(root)
     }),
+      // x152 — the x10 fingerprint chain feeding mix64 (the x107 HUGEINT
+      // replay) and bit_xor digests, per shard and at the root
+      s"""WITH so AS (SELECT doc_id, text FROM documents),
+         ${manifestOracleCtes("so", "")}
+         SELECT shard, COUNT(*) AS n_docs,
+                CAST(SUM(nc) AS BIGINT) AS n_chars,
+                bit_xor(rd) AS digest
+         FROM m3 GROUP BY shard
+         UNION ALL
+         SELECT -1 AS shard, COUNT(*) AS n_docs,
+                CAST(SUM(nc) AS BIGINT) AS n_chars,
+                bit_xor(rd) AS digest
+         FROM m3"""),
 
     // x153 — MANIFEST DIFF between two corpus snapshots (the x86
     // mutation fixture: %7 deletions, %5 edits, %3 additions): the
@@ -3230,7 +6705,7 @@ object SparkEntry {
     // re-train" read straight off two bounded manifests, never a
     // corpus-sized comparison. The digest algebra makes the verdict
     // exact: one flipped byte anywhere flips its shard's row.
-    "x153_manifest_diff" -> ((s, d) => {
+    query("x153_manifest_diff", ((s, d) => {
       val docs = t(s, d, "documents")
       // mutations scoped to shards 0-11 (additions keep their shard:
       // 1000000 ≡ 0 mod 16), so shards 12-15 must report UNCHANGED —
@@ -3245,21 +6720,66 @@ object SparkEntry {
         ext.Curation.shardManifest(docs),
         ext.Curation.shardManifest(newDocs))
     }),
+      // x153 — both snapshots' manifests regenerated (the x86 mutation
+      // branches closed-form) and the same full-outer shard compare
+      s"""WITH so AS (SELECT doc_id, text FROM documents),
+         sn AS (
+           SELECT doc_id,
+                  CASE WHEN doc_id % 16 < 12 AND doc_id % 5 = 0
+                       THEN text || ' updated' ELSE text END AS text
+           FROM documents
+           WHERE NOT (doc_id % 16 < 12 AND doc_id % 7 = 0)
+           UNION ALL
+           SELECT doc_id + 1000000 AS doc_id, text
+           FROM documents WHERE doc_id % 16 < 12 AND doc_id % 3 = 0),
+         ${manifestOracleCtes("so", "o")},
+         ${manifestOracleCtes("sn", "n")},
+         mo AS (SELECT shard, COUNT(*) AS n_old, bit_xor(rd) AS d_old
+                FROM om3 GROUP BY shard),
+         mn AS (SELECT shard, COUNT(*) AS n_new, bit_xor(rd) AS d_new
+                FROM nm3 GROUP BY shard)
+         SELECT COALESCE(mo.shard, mn.shard) AS shard,
+                COALESCE(n_old, 0) AS n_old, COALESCE(n_new, 0) AS n_new,
+                COALESCE(d_old, 0) AS d_old, COALESCE(d_new, 0) AS d_new,
+                (COALESCE(n_old, 0) != COALESCE(n_new, 0)
+                 OR COALESCE(d_old, 0) != COALESCE(d_new, 0)) AS changed
+         FROM mo FULL OUTER JOIN mn ON mo.shard = mn.shard"""),
 
-    "x10_fingerprint" -> ((s, d) =>
+    query("x10_fingerprint", ((s, d) =>
       t(s, d, "documents").select(
         col("doc_id"), ext.TextOps.fingerprint(col("text")).as("fp"))),
+      // x10 — the rolling FNV-1a fingerprint is a published spec, so DuckDB
+      // recomputes it exactly: unsigned 64-bit arithmetic emulated in
+      // HUGEINT mod 2^64 (rotl5 = <<5 + >>59, disjoint bits), then mapped
+      // back to the signed BIGINT Spark produces. ASCII testdata keeps
+      // codepoints == UTF-8 bytes.
+      s"""SELECT doc_id,
+                CAST(CASE WHEN ufp >= 9223372036854775808
+                          THEN ufp - 18446744073709551616
+                          ELSE ufp END AS BIGINT) AS fp
+         FROM (
+           SELECT doc_id,
+             $fnvFoldSql
+             AS ufp
+           FROM documents)"""),
 
-    "x12_corpus_profile" -> ((s, d) =>
+    query("x12_corpus_profile", ((s, d) =>
       ext.TextOps.corpusProfile(t(s, d, "documents"), "lang")),
+      s"""SELECT lang, COUNT(*) AS n_docs,
+                 ${avgSql("length(text)")} AS avg_chars,
+                 ${avgSql("len(regexp_split_to_array(lower(text), '\\s+'))")} AS avg_tokens,
+                 COUNT(DISTINCT md5(text)) AS n_distinct
+          FROM documents GROUP BY lang"""),
 
-    "x13_topk_events" -> ((s, d) =>
+    query("x13_topk_events", ((s, d) =>
       Tables.events(s, d).select(col("event_id"), col("value"))
         .orderBy(desc("value"), col("event_id")).limit(10)),
+      """SELECT event_id, value FROM events
+         ORDER BY value DESC, event_id LIMIT 10"""),
 
     // ---- J5 (extension): as-of join — align each purchase with the
     // latest prior signup of the same user (union+window, no range join)
-    "j5_asof" -> ((s, d) => {
+    query("j5_asof", ((s, d) => {
       val ev = Tables.events(s, d)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "ts", "value")
@@ -3269,18 +6789,47 @@ object SparkEntry {
           Seq("sig_value"))
         .select("event_id", "value", "asof_sig_value")
     }),
+      """WITH p AS (SELECT event_id, user_id,
+                           CAST(ts AS TIMESTAMP) AS ts, value
+                    FROM events WHERE event_type = 'purchase'),
+              s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
+                           value AS sig_value
+                    FROM events WHERE event_type = 'signup')
+         SELECT p.event_id, p.value, s.sig_value AS asof_sig_value
+         FROM p ASOF LEFT JOIN s
+           ON p.user_id = s.user_id AND p.ts >= s.ts"""),
 
     // ---- extensions: multimodal plumbing (rows-only: stub codec)
     // end-to-end REAL image path: docs → 8×8 gray PNG payloads → ImageIO
     // decode → 16-bucket pixel histogram. Counts are n/64 (exact in float
     // and double), and the pixel definition is closed-form over the text
     // bytes, so DuckDB reproduces every bucket from the characters alone.
-    "x14_media_features" -> ((s, d) =>
+    query("x14_media_features", ((s, d) =>
       ext.Multimodal.extractFeatures(
         ext.Multimodal.mediaFromDocs(t(s, d, "documents")))
         .select(col("media_id") +:
           (0 until 16).map(b =>
             element_at(col("features"), b + 1).cast("double").as(s"f$b")): _*)),
+    {
+      // x14 — the media payload is an 8×8 gray PNG whose 64 samples are the
+      // doc's first 64 ASCII bytes zero-padded (Multimodal.mediaFromDocs),
+      // and PNG gray-8 round-trips losslessly, so each decoded histogram
+      // bucket b is |{i < 64 : pixel_i div 16 = b}| / 64 computed from the
+      // text characters directly (testdata documents are pure ASCII: byte i
+      // = codepoint of char i)
+      // x14 — ASSUMES AN ASCII CORPUS (see the x15 note): codepoints stand
+      // in for the UTF-8 bytes the engine encodes into the PNG.
+      val buckets = (0 until 16).map(b =>
+        s"""CAST(len(list_filter(pix, p -> p // 16 = $b)) AS DOUBLE) / 64.0
+            AS f$b""").mkString(",\n                ")
+      s"""SELECT doc_id AS media_id,
+                $buckets
+         FROM (SELECT doc_id, list_transform(range(0, 64), i ->
+                 CASE WHEN i < length(text)
+                      THEN unicode(substr(text, CAST(i + 1 AS INTEGER), 1))
+                      ELSE 0 END) AS pix
+               FROM documents)"""
+    }),
 
     // content-derived profile: dimensions and mean luminance come from
     // DECODING every payload (ImageIO), not from the metadata sidecar —
@@ -3288,18 +6837,48 @@ object SparkEntry {
     // row count (round-3 verdict flagged the metadata-only version as the
     // suite's weakest oracle). metaProfile stays as the cheap
     // metadata-only variant (ServingSpec).
-    "x15_media_profile" -> ((s, d) =>
+    query("x15_media_profile", ((s, d) =>
       ext.Multimodal.contentProfile(
         ext.Multimodal.mediaFromDocs(t(s, d, "documents")))),
+      // x15 — content profile recomputed from the pixel definition: each
+      // doc's image is its first 64 UTF-8 bytes (zero-padded), so the
+      // decoded mean luminance is list_sum(pix)/64 and the corpus average
+      // routes through the same decimal path as the Spark side. Dimensions
+      // are read from the decoded images (8×8 by construction).
+      // ASSUMES AN ASCII CORPUS (verified for the generated testdata, same
+      // assumption as x14): unicode(substr(...)) reads CODEPOINTS and
+      // length() counts CHARS, which equal the UTF-8 bytes the engine
+      // actually encodes only when every char is single-byte.
+      s"""SELECT 'image' AS kind, COUNT(*) AS n, COUNT(*) AS n_decoded,
+                 8.0 AS avg_width, 8.0 AS avg_height,
+                 ${avgSql("luma")} AS avg_luma
+          FROM (SELECT list_sum(list_transform(range(0, 64), i ->
+                  CASE WHEN i < length(text)
+                       THEN unicode(substr(text, CAST(i + 1 AS INTEGER), 1))
+                       ELSE 0 END)) / 64.0 AS luma
+                FROM documents)"""),
 
     // end-to-end REAL audio path: docs → WAV payloads (closed-form 16-bit
     // PCM) → javax.sound.sampled decode → scalar features. Every feature
     // is an integer or an exactly-computed double (sqrt of an exact
     // integer ratio), so DuckDB reproduces them bit-for-bit from the
     // sample formula alone — the audio twin of x14.
-    "x18_audio_features" -> ((s, d) =>
+    query("x18_audio_features", ((s, d) =>
       ext.Multimodal.extractAudioFeatures(
         ext.Multimodal.audioFromDocs(t(s, d, "documents")))),
+      // x18 — the WAV sample formula replayed: n = 400 + (doc_id%32)*8
+      // samples of ((doc_id*31 + i*7) % 2048) - 1024 at 8 kHz. sum-of-squares
+      // and counts are exact integers; rms/duration are single exact-integer
+      // divisions + one correctly-rounded sqrt, so no rounding tolerance is
+      // needed anywhere.
+      s"""WITH base AS (
+           SELECT doc_id, 400 + (doc_id % 32) * 8 AS n FROM documents),
+         samp AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM base),
+         vals AS (
+           SELECT doc_id, n, i,
+                  ((doc_id * 31 + i * 7) % 2048) - 1024 AS s
+           FROM samp),
+         ${audioFeatureSql("vals")}"""),
 
     // x155 — VOICED-segment structure over the text-derived WAVs (each
     // doc's first 200 UTF-8 bytes as 16-bit samples, zero-padded): the
@@ -3311,7 +6890,7 @@ object SparkEntry {
     // pass; the oracle rebuilds frames from the text codepoints (ASCII
     // corpus, the x14/x15 convention) and replays the run algebra with
     // a gaps-and-islands window.
-    "x155_voiced_segments" -> ((s, d) =>
+    query("x155_voiced_segments", ((s, d) =>
       ext.Multimodal.voicedSegments(
         ext.Multimodal.audioFromTextDocs(
           t(s, d, "documents").withColumn("text",
@@ -3321,22 +6900,80 @@ object SparkEntry {
             concat(substring(col("text"), 1, 80),
               repeat(lit(" "), ((col("doc_id") % 3) * 20 + 20).cast("int")),
               substring(col("text"), 81, 60)))))),
+      // x155 — frames rebuilt from text codepoints (sample i = the byte
+      // value for i < len, 0 after), the same exact integer energies,
+      // segments via the f − row_number gaps-and-islands grouping
+      """WITH fr AS (
+           SELECT doc_id, f.range AS f,
+                  list_sum(list_transform(range(0, 20), j ->
+                    CASE WHEN CAST(f.range * 20 + j AS INTEGER)
+                              < length(atext)
+                         THEN CAST(unicode(substr(atext,
+                                CAST(f.range * 20 + j + 1 AS INTEGER), 1))
+                              AS BIGINT)
+                              * unicode(substr(atext,
+                                CAST(f.range * 20 + j + 1 AS INTEGER), 1))
+                         ELSE 0 END)) AS e
+           FROM (SELECT doc_id,
+                   substr(text, 1, 80)
+                   || repeat(' ', CAST((doc_id % 3) * 20 + 20 AS INTEGER))
+                   || substr(text, 81, 60) AS atext
+                 FROM documents), range(0, 10) f),
+         v AS (SELECT doc_id, f, (e > 81920) AS voiced FROM fr),
+         g AS (SELECT doc_id, f, voiced,
+                 f - row_number() OVER (PARTITION BY doc_id, voiced
+                                        ORDER BY f) AS grp
+               FROM v),
+         runs AS (SELECT doc_id, COUNT(*) AS run_len
+                  FROM g WHERE voiced GROUP BY doc_id, grp)
+         SELECT v.doc_id AS media_id,
+                CAST(10 AS BIGINT) AS n_frames,
+                CAST(SUM(CASE WHEN voiced THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_voiced,
+                COALESCE((SELECT CAST(COUNT(*) AS BIGINT) FROM runs r
+                          WHERE r.doc_id = v.doc_id), 0) AS n_segments,
+                COALESCE((SELECT CAST(MAX(run_len) AS BIGINT) FROM runs r
+                          WHERE r.doc_id = v.doc_id), 0) AS longest_run
+         FROM v GROUP BY v.doc_id"""),
 
     // end-to-end REAL video path: docs → 4-frame animated GIF (8×8 gray,
     // closed-form pixels) → ImageIO multi-frame decode → every-2nd-frame
     // sampling → per-frame mean luminance. Integer pixel sums / 64 are
     // exact doubles, so the oracle replays the formula with no rounding.
-    "x19_video_frames" -> ((s, d) =>
+    query("x19_video_frames", ((s, d) =>
       ext.Multimodal.sampleVideoFrames(
         ext.Multimodal.videoFromDocs(t(s, d, "documents")), everyNth = 2)),
+      // x19 — the GIF frame formula replayed: frames 0 and 2 (everyNth=2 of
+      // 4), mean luminance = Σᵢ ((doc_id·7 + k·13 + i·3) mod 251) / 64
+      """WITH frames AS (
+           SELECT doc_id, unnest([0, 2]) AS frame_idx FROM documents),
+         px AS (
+           SELECT doc_id, frame_idx, unnest(range(0, 64)) AS i FROM frames)
+         SELECT doc_id AS media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
+                CAST(SUM((doc_id * 7 + frame_idx * 13 + i * 3) % 251)
+                     AS DOUBLE) / 64.0 AS mean_lum
+         FROM px GROUP BY doc_id, frame_idx"""),
 
     // end-to-end REAL ISO-BMFF metadata path: docs → mp4 skeletons with
     // closed-form box structure → pure-JVM box walk (ftyp/mvhd/tkhd/hdlr/
     // stsd/stsz) → per-file media metadata. The corpus-profiling half of
     // mp4 support; frame decode stays a declared stub.
-    "x47_mp4_probe" -> ((s, d) =>
+    query("x47_mp4_probe", ((s, d) =>
       ext.Multimodal.probeMp4(
         ext.Multimodal.mp4FromDocs(t(s, d, "documents")))),
+      // x47 — the mp4 skeleton formulas replayed: duration_ms = 1000 +
+      // (doc_id%50)*40 at timescale 1000 (identical IEEE division both
+      // sides), dims/codec/frames straight from the doc_id formulas
+      """SELECT doc_id AS media_id, 'isom' AS brand,
+                CAST(1000 + (doc_id % 50) * 40 AS DOUBLE) / 1000.0
+                  AS duration_sec,
+                CAST(320 + (doc_id % 4) * 160 AS INTEGER) AS width,
+                CAST(240 + (doc_id % 3) * 120 AS INTEGER) AS height,
+                CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'hev1' END
+                  AS video_codec,
+                'mp4a' AS audio_codec,
+                CAST(24 + (doc_id % 10) * 6 AS BIGINT) AS n_frames
+         FROM documents"""),
 
     // x117 — end-to-end REAL JPEG metadata path: docs → JFIF+EXIF files
     // with closed-form fields (BOTH TIFF byte orders, value-offset
@@ -3345,9 +6982,25 @@ object SparkEntry {
     // camera make, density, segment census. The profiling half of the
     // most common real image format; entropy decode already exists
     // (MJPEG, x102).
-    "x117_exif_probe" -> ((s, d) =>
+    query("x117_exif_probe", ((s, d) =>
       ext.Multimodal.probeJpegExif(
         ext.Multimodal.jpegFromDocs(t(s, d, "documents")))),
+      // x117 — the JPEG writer formulas replayed: every probed field is
+      // closed-form in doc_id (the byte/IFD layer cancels); n_segments is
+      // the constant pre-SOS walk (APP0, APP1, DQT, SOF, SOS)
+      """SELECT doc_id AS media_id, TRUE AS has_jfif,
+                CAST(72 + (doc_id % 4) * 24 AS INTEGER) AS x_density,
+                CAST(72 + (doc_id % 3) * 24 AS INTEGER) AS y_density,
+                'cam' || CAST(doc_id % 5 AS STRING) AS make,
+                CAST(1 + doc_id % 8 AS INTEGER) AS orientation,
+                '2026:01:' || lpad(CAST(1 + doc_id % 28 AS STRING), 2, '0')
+                  || ' 12:' || lpad(CAST(doc_id % 60 AS STRING), 2, '0')
+                  || ':00' AS exif_datetime,
+                CAST(8 + (doc_id % 7) * 8 AS INTEGER) AS width,
+                CAST(8 + (doc_id % 5) * 8 AS INTEGER) AS height,
+                (doc_id % 3 = 0) AS progressive,
+                CAST(5 AS INTEGER) AS n_segments
+         FROM documents"""),
 
     // x154 — image-corpus CENSUS per camera make, EXIF-aware the way a
     // training pipeline must be: display dimensions swap width/height
@@ -3357,7 +7010,7 @@ object SparkEntry {
     // per make. One probe pass + one hash agg keyed by make (bounded
     // by the camera vocabulary); the GPS flag arrives by a media_id
     // equi-join of the two probe tables.
-    "x154_exif_census" -> ((s, d) => {
+    query("x154_exif_census", ((s, d) => {
       val media = ext.Multimodal.jpegFromDocs(t(s, d, "documents"))
       val meta = ext.Multimodal.probeJpegExif(media)
       val gps = ext.Multimodal.probeJpegGps(media)
@@ -3377,6 +7030,24 @@ object SparkEntry {
           max("disp_w").as("max_disp_w"),
           max("disp_h").as("max_disp_h"))
     }),
+      // x154 — the x117 field formulas aggregated per make: rotation iff
+      // orientation (1 + id%8) lands in 5..8 ⇔ id%8 in 4..7; geotag iff
+      // id%3 != 2; display dims swap under rotation
+      """WITH per AS (
+           SELECT 'cam' || CAST(doc_id % 5 AS STRING) AS make,
+                  (doc_id % 8) BETWEEN 4 AND 7 AS rotated,
+                  (doc_id % 3 != 2) AS has_gps,
+                  CAST(8 + (doc_id % 7) * 8 AS INTEGER) AS w,
+                  CAST(8 + (doc_id % 5) * 8 AS INTEGER) AS h
+           FROM documents)
+         SELECT make, COUNT(*) AS n_images,
+                CAST(SUM(CASE WHEN rotated THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_rotated,
+                CAST(SUM(CASE WHEN has_gps THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_geotagged,
+                MAX(CASE WHEN rotated THEN h ELSE w END) AS max_disp_w,
+                MAX(CASE WHEN rotated THEN w ELSE h END) AS max_disp_h
+         FROM per GROUP BY make"""),
 
     // x148 — GEOTAGGED images ⋈ pixel grid: the first multimodal×geo
     // cross-tier product. Each %3!=2 doc's JPEG carries a real EXIF
@@ -3388,7 +7059,7 @@ object SparkEntry {
     // at the join (no matching cell); the oracle regenerates the DMS
     // algebra closed-form per doc_id (the byte layer cancels, the x117
     // discipline) and replays the same floored cell keys.
-    "x148_geotagged_join" -> ((s, d) => {
+    query("x148_geotagged_join", ((s, d) => {
       val gps = ext.Multimodal.probeJpegGps(
         ext.Multimodal.jpegFromDocs(t(s, d, "documents")))
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
@@ -3399,6 +7070,33 @@ object SparkEntry {
           round(col("pt_lon"), 9).as("pt_lon"),
           round(col("pt_lat"), 9).as("pt_lat"))
     }),
+      // x148 — the DMS→decimal algebra regenerated per doc_id (sign off
+      // the hemisphere branch, deg + min/60 + (secNum/100)/3600 in the
+      // engine's IEEE order), the grid's affine pixel centers, and the
+      // same floored 0.01° cell keys
+      """WITH grid AS (
+           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
+                  76.85 + (CAST(x.range AS DOUBLE) + 0.5) * 0.01 AS lon,
+                  29.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.01) AS lat
+           FROM range(80) y, range(80) x),
+         gps AS (
+           SELECT doc_id AS media_id,
+                  (CASE WHEN doc_id % 8 = 5 THEN -1.0 ELSE 1.0 END) *
+                    (77.0 + CAST((doc_id * 3) % 60 AS DOUBLE) / 60.0
+                          + (CAST((doc_id * 91) % 6000 AS DOUBLE) / 100.0)
+                            / 3600.0) AS plon,
+                  (CASE WHEN doc_id % 4 = 1 THEN -1.0 ELSE 1.0 END) *
+                    (28.0 + CAST(doc_id % 60 AS DOUBLE) / 60.0
+                          + (CAST((doc_id * 37) % 6000 AS DOUBLE) / 100.0)
+                            / 3600.0) AS plat
+           FROM documents WHERE doc_id % 3 != 2)
+         SELECT g.y, g.x, p.media_id,
+                round(p.plon, 9) AS pt_lon, round(p.plat, 9) AS pt_lat
+         FROM grid g JOIN gps p
+           ON CAST(FLOOR(g.lon / 0.01) AS BIGINT)
+              = CAST(FLOOR(p.plon / 0.01) AS BIGINT)
+          AND CAST(FLOOR(g.lat / 0.01) AS BIGINT)
+              = CAST(FLOOR(p.plat / 0.01) AS BIGINT)"""),
 
     // x167 — the datum-skew CELL AUDIT (the exact misplacement the
     // Helmert shift exists to prevent): EXIF GPS fixes (WGS84, shifted
@@ -3409,7 +7107,7 @@ object SparkEntry {
     // assignment whenever a fix sits within the skew of a km boundary;
     // the audit reports both cells, the metric skew, and the flip flag.
     // Scalar UDF math fused into the scan — no shuffle at any scale.
-    "x167_datum_cell_audit" -> ((s, d) => {
+    query("x167_datum_cell_audit", ((s, d) => {
       val bng = ops.Utm.Tmerc.BritishNationalGrid
       val hel = ops.Datum.Osgb36ToWgs84
       val naiveU = udf((la: Double, lo: Double) => bng.forward(la, lo))
@@ -3440,13 +7138,26 @@ object SparkEntry {
            floor(col("a._2") / 1000).cast("long") =!=
              floor(col("b._2") / 1000).cast("long")).as("misplaced"))
     }),
+      datumCellAuditOracleSql),
 
     // end-to-end REAL EBML metadata path: docs → WebM skeletons with
     // closed-form element structure → pure-JVM EBML walk (Segment/Info/
     // Tracks/TrackEntry/Video) — the webm twin of x47
-    "x48_webm_probe" -> ((s, d) =>
+    query("x48_webm_probe", ((s, d) =>
       ext.Multimodal.probeWebm(
         ext.Multimodal.webmFromDocs(t(s, d, "documents")))),
+      // x48 — the webm skeleton formulas replayed: Duration float64 of
+      // 2000 + (doc_id%40)*125 units at the default 1 ms TimestampScale →
+      // seconds via the same * 1e6 / 1e9 IEEE products
+      """SELECT doc_id AS media_id,
+                CAST(2000 + (doc_id % 40) * 125 AS DOUBLE)
+                  * 1000000.0 / 1000000000.0 AS duration_sec,
+                CAST(256 + (doc_id % 5) * 128 AS INTEGER) AS width,
+                CAST(144 + (doc_id % 4) * 96 AS INTEGER) AS height,
+                CASE WHEN doc_id % 2 = 0 THEN 'V_VP9' ELSE 'V_VP8' END
+                  AS video_codec,
+                'A_OPUS' AS audio_codec
+         FROM documents"""),
 
     // end-to-end REAL compressed-audio metadata path: docs → ADTS/AAC
     // (even ids) or MPEG-1 Layer III (odd ids) streams with closed-form
@@ -3454,153 +7165,398 @@ object SparkEntry {
     // spec frame-size arithmetic) → sample rate, frame census, duration,
     // measured bitrate. The profiling half of AAC/MP3; payload decode
     // stays out of scope (the x47/x48 convention).
-    "x76_frame_audio_probe" -> ((s, d) =>
+    query("x76_frame_audio_probe", ((s, d) =>
       ext.Multimodal.probeFrameAudio(
         ext.Multimodal.frameAudioFromDocs(t(s, d, "documents")))),
+      // x76 — the frame-header formulas replayed: per format, the header
+      // field formulas (rate/channel tables indexed by doc_id), the spec
+      // frame sizes (ADTS: 7 + payload; Layer III: 144·bitrate/fs integer
+      // division), samples-per-frame constants (1024 / 1152), and the same
+      // exact-integer-product + IEEE-division duration and bitrate trees
+      s"""WITH $frameAudioCtes
+         SELECT media_id, format, sample_rate, n_channels, n_frames,
+                duration_sec, bitrate_bps
+         FROM fap"""),
 
     // end-to-end REAL telephone-band audio path: docs → G.711 WAVs
     // (closed-form code bytes; A-law odd doc_id, μ-law even) → JDK codec
     // expansion to 16-bit linear → the same scalar features as x18. The
     // G.711 expansion is a published piecewise-integer table, so the
     // oracle replays it in SQL and every feature is exact.
-    "x46_g711_features" -> ((s, d) =>
+    query("x46_g711_features", ((s, d) =>
       ext.Multimodal.extractAudioFeatures(
         ext.Multimodal.g711FromDocs(t(s, d, "documents")))),
+      // x46 — the G.711 WAV replayed end-to-end: code byte (doc_id*31 +
+      // i*17) % 256, then the published expansion tables — μ-law (even
+      // doc_id): u = NOT code, s = ±((man*8+132)·2^exp − 132); A-law (odd):
+      // a = code XOR 0x55 with sign bit set = POSITIVE, segment 0 linear.
+      // Integer throughout; same exact aggregates as x18.
+      s"""WITH base AS (
+           SELECT doc_id, 240 + (doc_id % 16) * 8 AS n FROM documents),
+         samp AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM base),
+         pre AS (
+           SELECT doc_id, n, i,
+                  255 - ((doc_id * 31 + i * 17) % 256) AS u,
+                  xor((doc_id * 31 + i * 17) % 256, 85) AS a
+           FROM samp),
+         dec AS (
+           SELECT doc_id, n, i,
+                  CASE WHEN doc_id % 2 = 0 THEN
+                    (CASE WHEN u >= 128 THEN -1 ELSE 1 END) *
+                      (((u % 16) * 8 + 132) * (1 << CAST((u // 16) % 8 AS INTEGER)) - 132)
+                  ELSE
+                    (CASE WHEN a >= 128 THEN 1 ELSE -1 END) *
+                      (CASE WHEN (a % 128) // 16 = 0 THEN (a % 16) * 16 + 8
+                            ELSE ((a % 16) * 16 + 264) *
+                                 (1 << CAST((a % 128) // 16 - 1 AS INTEGER)) END)
+                  END AS s
+           FROM pre),
+         ${audioFeatureSql("dec")}"""),
 
     // end-to-end REAL perceptual-hash path: docs → 8×8 gray PNGs →
     // ImageIO decode → aHash (two unsigned 32-bit halves) + dHash (56
     // gradient bits). The pixel definition is closed-form over the text
     // bytes, so the oracle rebuilds both hashes bit-by-bit from the
     // characters alone.
-    "x49_image_hash" -> ((s, d) =>
+    query("x49_image_hash", ((s, d) =>
       ext.Multimodal.imageHashes(
         ext.Multimodal.mediaFromDocs(t(s, d, "documents")))),
+      // x49 — both perceptual hashes rebuilt bit-by-bit from the text
+      // characters (pixel i = byte i of the doc, zero-padded; PNG gray-8
+      // round-trips losslessly; the 8×8 → 8×8 resample is the identity):
+      // aHash bit i set iff pixel_i·64 > Σ pixels, dHash bit y·7+x set iff
+      // pixel(y,x+1) > pixel(y,x)
+      s"WITH $imageHashCtes SELECT doc_id AS media_id, ahash_hi, ahash_lo, dhash FROM h"),
 
     // image near-dup: banded Hamming search over the aHash (4×16-bit
     // pigeonhole blocks, exact popcount verify — the simhash machinery
     // pointed at decoded pixels). The oracle searches ALL pairs, so the
     // blocked and exhaustive results must coincide.
-    "x50_image_neardup" -> ((s, d) =>
+    query("x50_image_neardup", ((s, d) =>
       ext.Multimodal.imageNearDups(
         ext.Multimodal.imageHashes(
           ext.Multimodal.mediaFromDocs(t(s, d, "documents"))), maxDist = 3)),
+      // x50 — exhaustive all-pairs Hamming search over the same rebuilt
+      // aHash: the engine's 4×16-bit banding has an exact pigeonhole
+      // guarantee at maxDist ≤ 3, so blocked and exhaustive coincide
+      s"""WITH $imageHashCtes
+         SELECT a.doc_id AS media_a, b.doc_id AS media_b,
+                CAST(bit_count(xor(a.ahash_hi, b.ahash_hi)) +
+                     bit_count(xor(a.ahash_lo, b.ahash_lo)) AS INTEGER) AS dist
+         FROM h a JOIN h b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.ahash_hi, b.ahash_hi)) +
+               bit_count(xor(a.ahash_lo, b.ahash_lo)) <= 3"""),
 
     // bigram-LM fluency score (CCNet-style perplexity bucketing signal,
     // rational core): mean inverse smoothed conditional probability over
     // each doc's bigrams, folded in sorted order for bit-exact parity
-    "x51_lm_score" -> ((s, d) =>
+    query("x51_lm_score", ((s, d) =>
       ext.TextOps.bigramLmScore(t(s, d, "documents"))),
+      // x51 — the bigram model rebuilt from scratch: same tokenization as
+      // x3/x9, add-one smoothing over the corpus vocabulary, and the same
+      // (w1, w2)-sorted sequential fold so the double sum is bit-exact
+      s"WITH $lmScoreCtes SELECT doc_id, n_bigrams, lm_score FROM scored"),
 
     // deterministic PPS sample: inclusion probability proportional to
     // n_chars (expected size 25), drawn by integer splitmix arithmetic
-    "x52_pps_sample" -> ((s, d) =>
+    query("x52_pps_sample", ((s, d) =>
       ext.Curation.ppsSample(t(s, d, "documents"), "n_chars", 25)
         .select("doc_id", "lang", "source", "n_chars")),
+      // x52 — the x22 splitmix64 HUGEINT replay, the corpus weight as one
+      // aggregate, and Spark's signed pmod against expected·w
+      s"""WITH m0 AS (SELECT doc_id, lang, source, n_chars,
+                             doc_id::HUGEINT AS u0 FROM documents),
+          $mix64SignedCtes,
+          wt AS (SELECT GREATEST(1, CAST(SUM(n_chars) AS BIGINT)) AS w_total
+                 FROM documents)
+          SELECT doc_id, lang, source, n_chars
+          FROM sgn, wt
+          WHERE ((sh % w_total) + w_total) % w_total
+                  < CAST(n_chars AS BIGINT) * 25"""),
 
     // batch sessionization of the event log: 30-minute gap rule, exact
     // epoch-microsecond arithmetic, one exchange (window + rollup share
     // the user partitioning)
-    "x53_sessionize" -> ((s, d) =>
+    query("x53_sessionize", ((s, d) =>
       ops.Sessions.sessionize(Tables.events(s, d), gapSec = 1800)),
+      // x53 — the same gap rule over exact epoch microseconds; windowed
+      // SUM routes through CAST AS BIGINT (DuckDB widens to HUGEINT)
+      """WITH e AS (SELECT user_id, event_id,
+                           epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value
+                    FROM events),
+         g AS (SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
+                                OR ts_us - lag(ts_us) OVER w > 1800000000
+                              THEN 1 ELSE 0 END AS new_sess
+               FROM e WINDOW w AS (PARTITION BY user_id
+                                   ORDER BY ts_us, event_id)),
+         s AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id
+                              ORDER BY ts_us, event_id
+                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
+               FROM g)
+         SELECT user_id, session_id,
+                COUNT(*) AS n_events,
+                MIN(ts_us) AS start_us,
+                MAX(ts_us) AS end_us,
+                MAX(ts_us) - MIN(ts_us) AS duration_us,
+                MAX(value) AS peak_value
+         FROM s GROUP BY user_id, session_id"""),
 
     // end-to-end REAL AVI frame path: docs → uncompressed-DIB RIFF
     // containers with closed-form 8×8 frames → pure-JVM chunk walk +
     // frame de-pad/flip → temporally sampled per-frame features (the
     // AVI twin of the x19 GIF path — full decode, not a probe)
-    "x54_avi_frames" -> ((s, d) =>
+    query("x54_avi_frames", ((s, d) =>
       ext.Multimodal.sampleAviFrames(
         ext.Multimodal.aviFromDocs(t(s, d, "documents")), everyNth = 2)),
+      // x54 — the AVI frame formula replayed: frames 0 and 2 (everyNth=2
+      // of 4), mean luminance = Σᵢ ((doc_id·11 + k·17 + i·5) mod 241) / 64
+      """WITH frames AS (
+           SELECT doc_id, unnest([0, 2]) AS frame_idx FROM documents),
+         px AS (
+           SELECT doc_id, frame_idx, unnest(range(0, 64)) AS i FROM frames)
+         SELECT doc_id AS media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
+                CAST(SUM((doc_id * 11 + frame_idx * 17 + i * 5) % 241)
+                     AS DOUBLE) / 64.0 AS mean_lum
+         FROM px GROUP BY doc_id, frame_idx"""),
 
     // token-budget domain mixing: every language capped at 8000 tokens
     // (under-budget languages pass through whole), integer splitmix draw
-    "x55_token_mix" -> ((s, d) =>
+    query("x55_token_mix", ((s, d) =>
       ext.Curation.tokenBudgetMix(t(s, d, "documents"), "lang", 8000L)
         .select("doc_id", "lang", "source", "n_chars")),
+      // x55 — the x22 splitmix replay joined to per-language token totals
+      // (x9's tokenization), Spark's signed pmod against min(total, budget)
+      s"""WITH m0 AS (SELECT doc_id, lang, source, n_chars,
+                             doc_id::HUGEINT AS u0 FROM documents),
+          $mix64SignedCtes,
+          tot AS (SELECT lang,
+                         CAST(SUM(len(regexp_split_to_array(lower(text), '\\s+')))
+                              AS BIGINT) AS t_total
+                  FROM documents GROUP BY lang)
+          SELECT doc_id, lang, source, n_chars
+          FROM sgn JOIN tot USING (lang)
+          WHERE ((sh % t_total) + t_total) % t_total
+                  < LEAST(t_total, 8000)"""),
 
     // context-length chunking: 32-token windows with 8-token overlap,
     // pure narrow algebra (split → window starts → posexplode)
-    "x56_chunk_docs" -> ((s, d) =>
+    query("x56_chunk_docs", ((s, d) =>
       ext.Curation.chunkDocs(t(s, d, "documents"), chunkTokens = 32,
         overlap = 8)),
+      // x56 — identical tokenization (x3's non-empty filter), identical
+      // window-start rule (start < n − overlap, at least one window), and
+      // list-slice + single-space re-join
+      """WITH tok AS (
+           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+                                      t -> length(t) > 0) AS ts
+           FROM documents),
+         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
+         st AS (SELECT doc_id, ts, n,
+                       unnest(range(0, greatest(n - 8, 1), 24)) AS start
+                FROM nt)
+         SELECT doc_id,
+                CAST(start // 24 AS INTEGER) AS chunk_idx,
+                CAST(LEAST(32, n - start) AS INTEGER) AS chunk_tokens,
+                array_to_string(ts[CAST(start + 1 AS INTEGER):
+                                   CAST(start + 32 AS INTEGER)], ' ')
+                  AS chunk_text
+         FROM st"""),
 
     // signup→purchase conversion funnel, 7-day window, exact epoch
     // microseconds; window + rollup share the user-key exchange
-    "x57_funnel" -> ((s, d) =>
+    query("x57_funnel", ((s, d) =>
       ops.Sessions.conversionFunnel(Tables.events(s, d), "signup",
         "purchase", windowSec = 7L * 86400)),
+      // x57 — first signup per user, first purchase at-or-after it, 7-day
+      // conversion flag; LEFT-JOIN null → converted = false
+      """WITH e AS (SELECT user_id, event_type,
+                           epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
+                    FROM events),
+         s AS (SELECT user_id,
+                      MIN(CASE WHEN event_type = 'signup' THEN ts_us END)
+                        AS from_us
+               FROM e GROUP BY user_id),
+         p AS (SELECT e.user_id, MIN(e.ts_us) AS to_us
+               FROM e JOIN s USING (user_id)
+               WHERE e.event_type = 'purchase' AND e.ts_us >= s.from_us
+               GROUP BY e.user_id)
+         SELECT s.user_id, s.from_us, p.to_us,
+                COALESCE(p.to_us - s.from_us <= 604800000000, FALSE)
+                  AS converted
+         FROM s LEFT JOIN p USING (user_id)
+         WHERE s.from_us IS NOT NULL"""),
 
     // END-TO-END image-corpus dedup: perceptual-hash pairs → duplicate
     // clusters (connected components) → anti-join, keep min-id reps
-    "x58_dedup_images" -> ((s, d) =>
+    query("x58_dedup_images", ((s, d) =>
       ext.Multimodal.dedupImages(
         ext.Multimodal.mediaFromDocs(t(s, d, "documents")), maxDist = 3)
         .select("media_id", "kind")),
+      // x58 — the image dedup product replayed end-to-end: the rebuilt
+      // aHash table, exhaustive pair search (≡ the engine's banding by the
+      // pigeonhole guarantee), the x27-style recursive-closure components,
+      // and the same min-id representative rule
+      s"""WITH RECURSIVE $imageDedupCtes
+         SELECT doc_id AS media_id, 'image' AS kind
+         FROM documents
+         WHERE doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)"""),
 
     // feature-hashed 64-dim document embeddings (sparse rows), the
     // engine's own text→vector path: mix64∘fnv dims, exact L2 norm
-    "x59_hash_embed" -> ((s, d) =>
+    query("x59_hash_embed", ((s, d) =>
       ext.Similarity.hashEmbed(t(s, d, "documents"), dim = 64)),
+      // x59 — the hashing-trick embedding replayed: per-token FNV-1a (the
+      // x3 char fold), the x22 mix64 chain, signed floor-mod dims, exact
+      // integer Σc², one correctly-rounded sqrt per doc
+      s"WITH $hashEmbedCtes SELECT doc_id, dim, w FROM emb"),
 
     // free-text retrieval over the hashed vectors: query weights ride
     // as a literal map, sparse dot folds in dim order, top-10 on the
     // (score DESC, doc_id) total order
-    "x60_hash_ann" -> ((s, d) =>
+    query("x60_hash_ann", ((s, d) =>
       ext.Similarity.hashAnnTopK(t(s, d, "documents"), HashAnnQuery,
         k = 10, dim = 64)),
+    {
+      // x60 — retrieval over the same rebuilt vectors: the query's weights
+      // are pasted as literals (the x6 hyperplane convention; the kernel is
+      // replayed driver-side by Similarity.queryWeights), the sparse dot
+      // folds in dim order, the cut is the (score DESC, doc_id) total order
+      val qw = ext.Similarity.queryWeights(HashAnnQuery, 64).toSeq.sortBy(_._1)
+      val whens = qw.map { case (d, w) => s"WHEN $d THEN $w" }.mkString(" ")
+      val dims = qw.map(_._1).mkString(", ")
+      s"""WITH $hashEmbedCtes,
+         prod AS (SELECT doc_id, dim,
+                         w * (CASE dim $whens ELSE 0 END) AS p
+                  FROM emb WHERE dim IN ($dims))
+         SELECT doc_id,
+                list_reduce(list(p ORDER BY dim), (a, b) -> a + b) AS score
+         FROM prod GROUP BY doc_id
+         ORDER BY score DESC, doc_id LIMIT 10"""
+    }),
 
     // end-to-end REAL acoustic-fingerprint path: docs → 16-bit PCM WAVs
     // with closed-form samples → JDK decode → 64 energy-gradient sign
     // bits over 65 frames (the audio dHash)
-    "x61_audio_fingerprint" -> ((s, d) =>
+    query("x61_audio_fingerprint", ((s, d) =>
       ext.Multimodal.audioFingerprints(
         ext.Multimodal.audioFromTextDocs(t(s, d, "documents")))),
+      // x61 — the acoustic fingerprint rebuilt from the text bytes through
+      // exact integer frame energies
+      s"WITH $audioFpCtes SELECT doc_id AS media_id, afp_hi, afp_lo FROM af"),
 
     // audio near-dup: the same pigeonhole banding as images, exhaustive
     // all-pairs oracle — the third member of the dedup triad
-    "x62_audio_neardup" -> ((s, d) =>
+    query("x62_audio_neardup", ((s, d) =>
       ext.Multimodal.audioNearDups(
         ext.Multimodal.audioFingerprints(
           ext.Multimodal.audioFromTextDocs(t(s, d, "documents"))),
         maxDist = 3)),
+      // x62 — exhaustive all-pairs Hamming search over the same rebuilt
+      // fingerprints (blocked ≡ exhaustive by the pigeonhole guarantee)
+      s"""WITH $audioFpCtes
+         SELECT a.doc_id AS media_a, b.doc_id AS media_b,
+                CAST(bit_count(xor(a.afp_hi, b.afp_hi)) +
+                     bit_count(xor(a.afp_lo, b.afp_lo)) AS INTEGER) AS dist
+         FROM af a JOIN af b ON a.doc_id < b.doc_id
+         WHERE bit_count(xor(a.afp_hi, b.afp_hi)) +
+               bit_count(xor(a.afp_lo, b.afp_lo)) <= 3"""),
 
     // cross-modal duplicate-consistency audit: text-dup vs image-dup
     // pair sets merged with per-modality flags — mismatches are
     // association-error candidates
-    "x63_crossmodal_audit" -> ((s, d) =>
+    query("x63_crossmodal_audit", ((s, d) =>
       ext.Multimodal.crossModalAudit(t(s, d, "documents"),
         minJaccard = 0.4, maxDist = 3)),
+      // x63 — both independently rebuilt pair sets (the x4 jaccard edges
+      // at 0.4, the x50 exhaustive aHash pairs) merged with the same
+      // full-outer flags
+      s"""WITH $jaccardEdgeCtes, $imageHashCtes,
+         ipairs AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM h a JOIN h b ON a.doc_id < b.doc_id
+           WHERE bit_count(xor(a.ahash_hi, b.ahash_hi)) +
+                 bit_count(xor(a.ahash_lo, b.ahash_lo)) <= 3),
+         tpairs AS (SELECT doc_a, doc_b FROM edges)
+         SELECT COALESCE(t.doc_a, i.doc_a) AS doc_a,
+                COALESCE(t.doc_b, i.doc_b) AS doc_b,
+                t.doc_a IS NOT NULL AS text_dup,
+                i.doc_a IS NOT NULL AS image_dup
+         FROM tpairs t FULL OUTER JOIN ipairs i
+           ON t.doc_a = i.doc_a AND t.doc_b = i.doc_b"""),
 
     // count-min heavy hitters: ONE 32 KiB mergeable sketch pass (map-side
     // partial arrays) + an exact census for validation; the estimate
     // probes the LITERAL counter array — no join (the Bloom discipline)
-    "x64_cms_heavyhitters" -> ((s, d) => {
+    query("x64_cms_heavyhitters", ((s, d) => {
       val keyed = t(s, d, "documents").filter(col("text").isNotNull)
         .select(explode(graft.functions.TokenSplit(col("text"))).as("token"))
         .withColumn("h",
           element_at(graft.functions.ShingleHashesAll(col("token"), 1), 1))
       ext.Cms.heavyHitters(keyed, "token", "h", k = 20)
     }),
+      // x64 — the count-min sketch rebuilt counter-exact: per-occurrence
+      // cells from the replayed probe stream, GROUP BY cell sums ≡ the
+      // engine's counter array, estimate = LEAST over the four rows, and
+      // the same (count DESC, token) top-20 total order. CASTs route
+      // DuckDB's HUGEINT counts back to BIGINT (the sumSql discipline).
+      s"""WITH $cmsCtes,
+         cnt1 AS (SELECT cell1 AS cell, CAST(COUNT(*) AS BIGINT) AS c
+                  FROM cells GROUP BY cell1),
+         cnt2 AS (SELECT cell2 AS cell, CAST(COUNT(*) AS BIGINT) AS c
+                  FROM cells GROUP BY cell2),
+         cnt3 AS (SELECT cell3 AS cell, CAST(COUNT(*) AS BIGINT) AS c
+                  FROM cells GROUP BY cell3),
+         cnt4 AS (SELECT cell4 AS cell, CAST(COUNT(*) AS BIGINT) AS c
+                  FROM cells GROUP BY cell4),
+         exact AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS exact_count
+                   FROM cells GROUP BY t
+                   ORDER BY exact_count DESC, t LIMIT 20),
+         tc AS (SELECT DISTINCT t, cell1, cell2, cell3, cell4 FROM cells)
+         SELECT e.t AS token, e.exact_count,
+                LEAST(c1.c, c2.c, c3.c, c4.c) AS cms_estimate
+         FROM exact e
+         JOIN tc ON tc.t = e.t
+         JOIN cnt1 c1 ON c1.cell = tc.cell1
+         JOIN cnt2 c2 ON c2.cell = tc.cell2
+         JOIN cnt3 c3 ON c3.cell = tc.cell3
+         JOIN cnt4 c4 ON c4.cell = tc.cell4"""),
 
     // x65 — the PQ quantizer table: every vector's 8 subspace codes
     // against the deterministic first-16 codebooks (Jégou et al. 2011).
     // ONE narrow codegen'd map, zero shuffle — the stored form that
     // compresses a 100 TB vector corpus 32× before ANN ever runs.
-    "x65_pq_codes" -> ((s, d) => {
+    query("x65_pq_codes", ((s, d) => {
       val emb = t(s, d, "embeddings")
       ext.Similarity.pqEncode(emb,
         ext.Similarity.pqCodebooks(emb, m = 8, k = 16))
     }),
+      // x65 — the PQ quantizer replayed row-exact: per (vector, subspace)
+      // the argmin code over the 16 sliced centroids, pivoted wide. The
+      // squared distances compose the same three sequential dot folds on
+      // both engines, so assignment agrees bitwise, not just to tolerance.
+      s"""WITH $pqCtes
+          SELECT vec_id,
+                 ${(0 until 8).map(s =>
+                   s"MAX(CASE WHEN sub = $s THEN code END) AS code_$s")
+                   .mkString(", ")}
+          FROM pcodes GROUP BY vec_id"""),
 
     // x66 — PQ ADC retrieval: the query's 8×16 distance table rides as
     // literals, approx distance is 8 lookups + a fixed-order sum,
     // rerank=50 TakeOrdered carries vectors into an exact cosine top-10
-    "x66_pq_ann" -> ((s, d) => {
+    query("x66_pq_ann", ((s, d) => {
       val emb = t(s, d, "embeddings")
       ext.Similarity.annPq(emb, queryVector, 10, m = 8, nCent = 16,
           rerank = 50)
         .withColumn("adist", round(col("adist"), 6))
         .withColumn("cos", round(col("cos"), 6))
     }),
+      // x66 — ADC retrieval replayed: the query-to-centroid table is
+      // recomputed in SQL from the same slices (bit-equal to the literal
+      // table the engine ships), the 8-term approximate distance sums in
+      // the same left-to-right order, the rerank-50 cut is the (adist,
+      // vec_id) total order, and the final 10 re-rank by exact cosine.
+      pqAdcAnnOracleSql),
 
     // x77 — the stored-index lifecycle: train → persist codes+books as
     // parquet → answer the query FROM STORAGE (books reload into the
@@ -3608,7 +7564,7 @@ object SparkEntry {
     // until the 50-row re-rank join). Bit-equal to x66's inline encode
     // — parquet stores binary64/int32 exactly — so the oracle is the
     // same replay.
-    "x77_pq_stored_ann" -> ((s, d) => {
+    query("x77_pq_stored_ann", ((s, d) => {
       val dir = storedDir("pq", d)(p =>
         ext.Similarity.annPqStoredBuild(t(s, d, "embeddings"), p,
           m = 8, nCent = 16))
@@ -3617,82 +7573,280 @@ object SparkEntry {
         .withColumn("adist", round(col("adist"), 6))
         .withColumn("cos", round(col("cos"), 6))
     }),
+      // x77 — the stored-codes lifecycle is value-identical to the inline
+      // encode (parquet round-trips binary64/int32 exactly), so the
+      // oracle IS the x66 replay — a hash match here proves the stored
+      // path bit-equal end to end
+      pqAdcAnnOracleSql),
 
     // x67 — int8 scalar-quantization audit: per-vector scale, saturated
     // lanes, exact reconstruction MSE (element-order residual fold);
     // zero shuffle
-    "x67_int8_quant" -> ((s, d) =>
+    query("x67_int8_quant", ((s, d) =>
       ext.Similarity.int8QuantAudit(t(s, d, "embeddings"))
         .withColumn("q_scale", round(col("q_scale"), 9))
         .withColumn("mse", round(col("mse"), 9))),
+      // x67 — the int8 quantizer replayed: scale = list_max(|x|)/127,
+      // codes via TRUNC (Spark INT cast truncates, so TRUNC matches), the
+      // residual fold as one sequential list_dot_product. All-zero
+      // vectors short-circuit to (0, 0, 0) on both sides.
+      """WITH qv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+                     FROM embeddings),
+          qs AS (SELECT vec_id, v,
+                        list_max(list_transform(v, x -> abs(x))) / 127.0 AS s
+                 FROM qv)
+          SELECT vec_id, round(s, 9) AS q_scale,
+                 CASE WHEN s = 0 THEN 0
+                      ELSE len(list_filter(v, x -> abs(trunc(x/s)) = 127.0))
+                 END AS n_sat,
+                 CASE WHEN s = 0 THEN 0.0
+                      ELSE round(list_dot_product(
+                             list_transform(v, x -> x - trunc(x/s)*s),
+                             list_transform(v, x -> x - trunc(x/s)*s))
+                           / len(v), 9)
+                 END AS mse
+          FROM qs"""),
 
     // x68 — the Gopher/MassiveText rule filter: five word-shape rules +
     // conjunctive keep, all exact integer/boolean algebra; zero shuffle
-    "x68_gopher_rules" -> ((s, d) =>
+    query("x68_gopher_rules", ((s, d) =>
       ext.TextOps.gopherRules(t(s, d, "documents"))),
+      // x68 — the Gopher rule flags replayed: the same filtered lowercase
+      // tokenization as x9, integer char sums (CAST routes DuckDB's
+      // widened list_sum back to BIGINT), one IEEE division per ratio,
+      // per-stopword list_contains terms summed — every flag bit-equal,
+      // no rounding tolerance anywhere.
+      s"""WITH ${gopherCtesOver("documents", "text")}
+          SELECT doc_id, n_words, mean_word_len, hash_ratio, ellipsis_ratio,
+                 alpha_frac, sw_hits, r_word_count, r_mean_word_len,
+                 r_symbol_ratio, r_alpha_words, r_stopwords,
+                 (r_word_count AND r_mean_word_len AND r_symbol_ratio
+                  AND r_alpha_words AND r_stopwords) AS keep
+          FROM g2"""),
 
     // x69 — ANN index acceptance gate: recall@10 of the PQ ADC index
     // against the exact scan; both cuts TakeOrdered, overlap join on 2k
     // rows
-    "x69_pq_recall" -> ((s, d) =>
+    query("x69_pq_recall", ((s, d) =>
       ext.Similarity.annRecall(t(s, d, "embeddings"), queryVector, 10,
         m = 8, nCent = 16, rerank = 50)),
+    {
+      // x69 — the recall gate replayed: the x66 candidate pipeline cut to
+      // its exact-cosine top-10, intersected with the x5 brute-force
+      // top-10, one count row
+      s"""WITH $pqCtes,
+          ${pqAdcCandCtes("pcodes")},
+          pq10 AS (SELECT p.vec_id
+                   FROM pcand p JOIN embeddings ON embeddings.vec_id = p.vec_id
+                   ORDER BY $cosSql DESC, p.vec_id LIMIT 10),
+          brute10 AS (SELECT vec_id FROM embeddings
+                      ORDER BY $cosSql DESC, vec_id LIMIT 10)
+          SELECT COUNT(*) AS n_overlap, COUNT(*) / 10.0 AS recall_at_10
+          FROM pq10 JOIN brute10 USING (vec_id)"""
+    }),
 
     // x70 — IVF-PQ composed (faiss-style): coarse 2-probe prune, ADC
     // scoring only on the surviving sliver, exact re-rank
-    "x70_ivfpq_ann" -> ((s, d) =>
+    query("x70_ivfpq_ann", ((s, d) =>
       ext.Similarity.annIvfPq(t(s, d, "embeddings"), queryVector, 10,
           nCoarse = 16, nProbe = 2, m = 8, nCent = 16, rerank = 50)
         .withColumn("adist", round(col("adist"), 6))
         .withColumn("cos", round(col("cos"), 6))),
+    {
+      // x70 — IVF-PQ replayed: the x17 assignment/probe fragment prunes
+      // the corpus, the x66 ADC pipeline scores only the pruned ids, same
+      // rerank cut and exact re-rank. Every tiebreak and fold matches the
+      // engine bitwise.
+      s"""WITH $ivfProbeCtes,
+          $pqCtes,
+          pruned AS (
+            SELECT c.* FROM pcodes c
+            JOIN assign a ON a.vec_id = c.vec_id
+            JOIN probes p ON p.cid = a.cid),
+          ${pqAdcCandCtes("pruned")}
+          SELECT p.vec_id, round(p.adist, 6) AS adist, round($cosSql, 6) AS cos
+          FROM pcand p JOIN embeddings ON embeddings.vec_id = p.vec_id
+          ORDER BY $cosSql DESC, p.vec_id LIMIT 10"""
+    }),
 
     // x71 — inverted-list balance audit: per-cell member counts +
     // corpus fraction (the partition-sizing health report for IVF/
     // IVF-PQ at scale)
-    "x71_ivf_balance" -> ((s, d) =>
+    query("x71_ivf_balance", ((s, d) =>
       ext.Similarity.ivfListBalance(t(s, d, "embeddings"), nCentroids = 16)),
+      // x71 — the balance report replayed on the x17 assignment fragment:
+      // per-cell counts, single-row total, one exact division
+      s"""WITH ${ivfAssignCtes("cvec")},
+          counts AS (
+            SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vectors
+            FROM assign GROUP BY cid)
+          SELECT cid, n_vectors,
+                 CAST(n_vectors AS DOUBLE)
+                   / CAST((SELECT SUM(n_vectors) FROM counts) AS DOUBLE) AS frac
+          FROM counts"""),
 
     // x72 — residual-encoded IVF-PQ (exact faiss IVFADC): codes
     // quantize x − c(x), the query carries one ADC table per probed
     // list; same zero-exchange zero-join plan as x70
-    "x72_ivfadc_ann" -> ((s, d) =>
+    query("x72_ivfadc_ann", ((s, d) =>
       ext.Similarity.annIvfPqResidual(t(s, d, "embeddings"), queryVector,
           10, nCoarse = 16, nProbe = 2, m = 8, kCent = 16, rerank = 50)
         .withColumn("adist", round(col("adist"), 6))
         .withColumn("cos", round(col("cos"), 6))),
+    {
+      // x72 — residual IVFADC replayed end to end: the x17 assignment
+      // fragment yields every vector's residual (list_zip subtraction),
+      // residual codebooks are the seeds' own residuals (ids 16..31),
+      // codes are the argmin of the three-fold distance on residual
+      // slices, the per-probed-list tables rebuild from the query's
+      // residuals, and the rerank/re-rank cuts are the x70 total orders.
+      val dsub = 8
+      def sl(e: String) = s"list_slice($e, sub*$dsub + 1, sub*$dsub + $dsub)"
+      s"""WITH ${ivfAssignCtes("cv")},
+          pe AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+                 FROM embeddings),
+          rsub AS (SELECT range AS sub FROM range(8)),
+          rv AS (SELECT pe.vec_id, a.cid,
+                        list_transform(list_zip(pe.v, c.cv),
+                                       p2 -> p2[1] - p2[2]) AS r
+                 FROM pe
+                 JOIN assign a ON a.vec_id = pe.vec_id
+                 JOIN cent c ON c.cid = a.cid),
+          rbook AS (SELECT vec_id - 16 AS bid, r FROM rv
+                    WHERE vec_id >= 16 AND vec_id < 32),
+          rsd AS (SELECT rv.vec_id, s.sub, b.bid,
+                         list_dot_product(${sl("rv.r")}, ${sl("rv.r")})
+                         - 2*list_dot_product(${sl("rv.r")}, ${sl("b.r")})
+                         + list_dot_product(${sl("b.r")}, ${sl("b.r")}) AS d
+                  FROM rv, rsub s, rbook b),
+          rcodes AS (SELECT vec_id, sub, bid AS code FROM (
+                     SELECT vec_id, sub, bid,
+                            row_number() OVER (PARTITION BY vec_id, sub
+                                               ORDER BY d, bid) AS rn
+                     FROM rsd) WHERE rn = 1),
+          probes AS (
+            SELECT cid FROM cent
+            ORDER BY list_dot_product(cv, $queryVectorSql)
+                     / (sqrt(list_dot_product(cv, cv))
+                        * sqrt(list_dot_product($queryVectorSql,
+                                                $queryVectorSql))) DESC,
+                     cid
+            LIMIT 2),
+          qr AS (SELECT c.cid,
+                        list_transform(list_zip($queryVectorSql, c.cv),
+                                       p2 -> p2[1] - p2[2]) AS qr
+                 FROM probes p JOIN cent c ON c.cid = p.cid),
+          rtab AS (SELECT q0.cid AS pcid, s.sub, b.bid,
+                          list_dot_product(${sl("q0.qr")}, ${sl("q0.qr")})
+                          - 2*list_dot_product(${sl("q0.qr")}, ${sl("b.r")})
+                          + list_dot_product(${sl("b.r")}, ${sl("b.r")}) AS dq
+                   FROM qr q0, rsub s, rbook b),
+          radist AS (SELECT c.vec_id,
+                     ${(0 until 8).map(s =>
+                       s"MAX(CASE WHEN c.sub = $s THEN t.dq END) AS d_$s")
+                       .mkString(", ")}
+                     FROM rcodes c
+                     JOIN rv ON rv.vec_id = c.vec_id
+                     JOIN rtab t ON t.pcid = rv.cid AND t.sub = c.sub
+                                AND t.bid = c.code
+                     GROUP BY c.vec_id),
+          rcand AS (SELECT vec_id,
+                           ${(0 until 8).map(s => s"d_$s").mkString(" + ")} AS adist
+                    FROM radist ORDER BY adist, vec_id LIMIT 50)
+          SELECT r.vec_id, round(r.adist, 6) AS adist, round($cosSql, 6) AS cos
+          FROM rcand r JOIN embeddings ON embeddings.vec_id = r.vec_id
+          ORDER BY $cosSql DESC, r.vec_id LIMIT 10"""
+    }),
 
     // x73 — the curation AUDIT: x36's gates as per-doc verdict flags
     // ("why was this document dropped"), kept ≡ the pipeline's output
-    "x73_curation_audit" -> ((s, d) => {
+    query("x73_curation_audit", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.curationAudit(docs,
         docs.filter(col("source") === "src0"))
     }),
+      // x73 — the audit replayed from the same five proven fragments as
+      // x36, flags instead of filters; kept is the identical conjunction
+      auditBodySql),
 
     // x74 — per-source gate pass-rate rollup of the same audit: exact
     // integer counts, one hash agg on the source key
-    "x74_gate_rates" -> ((s, d) => {
+    query("x74_gate_rates", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.gateRates(ext.Curation.curationAudit(docs,
         docs.filter(col("source") === "src0")))
     }),
+      // x74 — the per-source rollup of the same audit: exact integer
+      // pass counts per gate (CASTs route DuckDB's HUGEINT sums back)
+      s"""SELECT source,
+                 CAST(COUNT(*) AS BIGINT) AS n_docs,
+                 CAST(SUM(CASE WHEN pass_lang THEN 1 ELSE 0 END) AS BIGINT) AS n_lang,
+                 CAST(SUM(CASE WHEN pass_quality THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
+                 CAST(SUM(CASE WHEN pass_rep THEN 1 ELSE 0 END) AS BIGINT) AS n_rep,
+                 CAST(SUM(CASE WHEN pass_contam THEN 1 ELSE 0 END) AS BIGINT) AS n_contam,
+                 CAST(SUM(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
+                 CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
+          FROM ($auditBodySql) audit GROUP BY source"""),
 
     // x75 — PQ codes as a dedup BLOCKING key: band-collision candidate
     // pairs (equi-join, never all-pairs) + exact cosine verify — the
     // banded-MinHash shape over the quantized corpus. 2 bands × 4 codes
     // = 65,536 keys per band; ids only through the banding exchange
-    "x75_pq_neardup" -> ((s, d) =>
+    query("x75_pq_neardup", ((s, d) =>
       ext.Similarity.pqNearDups(t(s, d, "embeddings"), minCos = 0.3,
           m = 8, k = 16, bands = 2)
         .withColumn("cos", round(col("cos"), 6))),
+    {
+      // x75 — the PQ blocking replayed: wide codes from the x65 fragment,
+      // base-16 positional band keys (2 bands × 4 codes), DISTINCT
+      // collision pairs, exact cosine verify at the x20 threshold
+      val cosAb =
+        """(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
+                             CAST(eb.embedding AS DOUBLE[]))
+            / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
+                                     CAST(ea.embedding AS DOUBLE[])))
+               * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]),
+                                       CAST(eb.embedding AS DOUBLE[])))))"""
+      s"""WITH $pqCtes,
+          pw AS (SELECT vec_id,
+                 ${(0 until 8).map(s =>
+                   s"MAX(CASE WHEN sub = $s THEN code END) AS c$s")
+                   .mkString(", ")}
+                 FROM pcodes GROUP BY vec_id),
+          pbk AS ($pqBandKeySql),
+          ppairs AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
+                     FROM pbk x JOIN pbk y
+                       ON y.band = x.band AND y.key = x.key
+                     WHERE x.vec_id < y.vec_id)
+          SELECT p.id_a, p.id_b, round($cosAb, 6) AS cos
+          FROM ppairs p
+          JOIN embeddings ea ON ea.vec_id = p.id_a
+          JOIN embeddings eb ON eb.vec_id = p.id_b
+          WHERE $cosAb >= 0.3"""
+    }),
 
     // x78 — the blocking pre-flight: per band, occupied keys, largest
     // bucket, and the candidate-pair mass Σ n(n−1)/2 the verify stage
     // will pay — a collapsed code space is a one-line number here
     // before it is a straggler executor in the dedup job
-    "x78_pq_band_balance" -> ((s, d) =>
+    query("x78_pq_band_balance", ((s, d) =>
       ext.Similarity.pqBandBalance(t(s, d, "embeddings"),
         m = 8, k = 16, bands = 2)),
+      // x78 — the occupancy report replayed: same band keys, per-(band,
+      // key) counts, per-band rollup with exact integer pair mass
+      s"""WITH $pqCtes,
+          pw AS (SELECT vec_id,
+                 ${(0 until 8).map(s =>
+                   s"MAX(CASE WHEN sub = $s THEN code END) AS c$s")
+                   .mkString(", ")}
+                 FROM pcodes GROUP BY vec_id),
+          pbk AS ($pqBandKeySql),
+          bc AS (SELECT band, key, COUNT(*) AS n
+                 FROM pbk GROUP BY band, key)
+          SELECT band, CAST(COUNT(*) AS BIGINT) AS n_keys,
+                 CAST(MAX(n) AS BIGINT) AS max_bucket,
+                 CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS n_candidate_pairs
+          FROM bc GROUP BY band"""),
 
     // x79 — the crawl-ingest path end to end: docs → REAL `.warc.gz`
     // archives (per-record gzip members, HTTP/1.1 response blocks, the
@@ -3700,12 +7854,20 @@ object SparkEntry {
     // walk. Every header field is closed-form over the documents table,
     // and Content-Length is the byte length of the HTTP block the
     // oracle reassembles character by character.
-    "x79_warc_scan" -> ((s, d) =>
+    query("x79_warc_scan", ((s, d) =>
       ext.Html.parseDocArchives(
         ext.Html.warcFromDocs(t(s, d, "documents")))
         .select(col("media_id"), col("record_type"), col("record_id"),
           col("warc_date"), col("target_uri"), col("http_status"),
           col("http_content_type").as("mime"), col("content_length"))),
+      // x79 — the archive reassembled character-for-character: the page
+      // wrapper is closed form over (doc_id, source, text), the HTTP head
+      // is the writer's literal, Content-Length is byte length (strlen)
+      // of head + entity body, and the WARC date is integer clock
+      // arithmetic. The engine parses real gzip members; the oracle
+      // never sees a byte of gzip — agreement proves the whole
+      // write→compress→inflate→parse loop.
+      warcScanOracleSql),
 
     // x80 — HTML → training text: the parsed WARC records' entity
     // bodies through comment/script/style removal, body isolation, tag
@@ -3713,31 +7875,95 @@ object SparkEntry {
     // is deterministic, so the oracle rebuilds the EXTRACTION (not just
     // the page) from the documents table: title, link count, and the
     // visible text with the escape→decode round trip cancelled out.
-    "x80_html_extract" -> ((s, d) =>
+    query("x80_html_extract", ((s, d) =>
       ext.Html.extractFromRecords(
         ext.Html.parseDocArchives(
           ext.Html.warcFromDocs(t(s, d, "documents"))))),
+      // x80 — the extraction rebuilt WITHOUT the page: escape→decode
+      // cancels, tags become separators, so visible text is h1 + the
+      // original text + the decoded footer + the anchor labels, collapsed
+      // under the same explicit [ \t\n\r\f] class (RE2's \s — pinned on
+      // the Scala side too, where java \s would differ on \x0B). Chars
+      // count as UTF-16 units vs codepoints agree on this corpus (ASCII);
+      // the engine itself is unicode-clean either way.
+      s"""WITH $crawlTextCtes
+         SELECT doc_id AS media_id,
+           'Doc ' || doc_id::VARCHAR || ' - ' || source AS title,
+           CAST(1 + doc_id % 5 AS INTEGER) AS n_links,
+           CAST(length(txt) AS INTEGER) AS n_chars_text,
+           txt AS text
+         FROM etxt"""),
 
     // x81 — CCNet perplexity terciles: the x51 bigram-LM score bucketed
     // per LANGUAGE (CCNet's rule — perplexity scales aren't comparable
     // across languages) by exact rank arithmetic, head = most fluent
     // third. One per-lang window over doc-count rows.
-    "x81_ppl_buckets" -> ((s, d) =>
+    query("x81_ppl_buckets", ((s, d) =>
       ext.TextOps.perplexityBuckets(t(s, d, "documents"))),
+      // x81 — the x51 scores joined back to lang, then the same exact
+      // rank arithmetic both engines share (rn·3 vs n, ties broken by
+      // doc_id on a bit-identical double score)
+      s"""WITH $lmScoreCtes,
+         wl AS (
+           SELECT s.doc_id, d.lang, s.lm_score,
+                  row_number() OVER (PARTITION BY d.lang
+                                     ORDER BY s.lm_score, s.doc_id) AS rn,
+                  COUNT(*) OVER (PARTITION BY d.lang) AS n
+           FROM scored s JOIN documents d USING (doc_id))
+         SELECT doc_id, lang, lm_score,
+                CASE WHEN rn * 3 <= n THEN 'head'
+                     WHEN rn * 3 <= 2 * n THEN 'middle'
+                     ELSE 'tail' END AS ppl_bucket
+         FROM wl"""),
 
     // x82 — the fastText-shaped hashed linear quality classifier: bag
     // of hashed unigrams · deterministic weight table → mean score →
     // keep/drop sign. The hash is the x59 kernel; the weights are the
     // Bloom probe stream as a stand-in for trained parameters.
-    "x82_quality_classifier" -> ((s, d) =>
+    query("x82_quality_classifier", ((s, d) =>
       ext.TextOps.hashedLinearScore(t(s, d, "documents"))),
+    {
+      // x82 — the classifier replayed from scratch: per-token FNV-1a +
+      // mix64 (the x59 chain) into 65,536 buckets, the weight table as a
+      // SECOND mix64 replay on (bucket + GOLDEN) mod 2^64, terms folded
+      // in bucket order so the double mean is bit-exact
+      val M = "18446744073709551616::HUGEINT"
+      s"""WITH $hashedTokenCtes,
+         cnt AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS b,
+                        COUNT(*) AS c
+                 FROM sgn GROUP BY doc_id, ((sh % 65536) + 65536) % 65536),
+         w0 AS (SELECT doc_id, b, c,
+                       (b::HUGEINT + 11400714819323198485::HUGEINT) % $M AS v0
+                FROM cnt),
+         w1 AS (SELECT *, ${mulmodSql("xor(v0, v0 // 1073741824::HUGEINT)", Mix64C1)} AS v1 FROM w0),
+         w2 AS (SELECT *, ${mulmodSql("xor(v1, v1 // 134217728::HUGEINT)", Mix64C2)} AS v2 FROM w1),
+         wf AS (SELECT doc_id, b, c, xor(v2, v2 // 2147483648::HUGEINT) AS vh FROM w2),
+         wsgn AS (SELECT doc_id, b, c,
+                    CAST(CASE WHEN vh >= 9223372036854775808::HUGEINT
+                              THEN vh - 18446744073709551616::HUGEINT
+                              ELSE vh END AS BIGINT) AS sw FROM wf),
+         terms AS (SELECT doc_id, b,  c,
+                          c::DOUBLE * (sw::DOUBLE / 9223372036854775808.0) AS term
+                   FROM wsgn),
+         agg AS (SELECT doc_id,
+                        CAST(SUM(c) AS BIGINT) AS n_tokens,
+                        list_reduce(list(term ORDER BY b), (a, x) -> a + x)
+                          AS tsum
+                 FROM terms GROUP BY doc_id),
+         sc AS (SELECT doc_id, n_tokens,
+                       tsum / CAST(n_tokens AS DOUBLE) AS q_score
+                FROM agg)
+         SELECT doc_id, n_tokens, q_score,
+                CASE WHEN q_score >= 0.0 THEN 'keep' ELSE 'drop' END AS label
+         FROM sc"""
+    }),
 
     // x84 — the crawl tiers COMPOSED: WARC archives → member inflation
     // → HTML extraction → language ID + Gopher rules on the EXTRACTED
     // text, all in the same task that inflated the archive (the whole
     // pipeline is one narrow pass — zero exchanges before the output).
     // What a Common Crawl ingest job actually runs.
-    "x84_crawl_curation" -> ((s, d) => {
+    query("x84_crawl_curation", ((s, d) => {
       val ex = ext.Html.extractFromRecords(
         ext.Html.parseDocArchives(
           ext.Html.warcFromDocs(t(s, d, "documents"))))
@@ -3749,6 +7975,19 @@ object SparkEntry {
         sig.toMap.apply("n_words").as("n_words"),
         flags.reduce(_ && _).as("keep"))
     }),
+      // x84 — the crawl-curation composition replayed: the x80 extraction
+      // CTE feeds the x7 langid and x68 Gopher CTE families retargeted at
+      // the extracted text, all joined back on doc_id
+      s"""WITH $crawlTextCtes,
+         ${langCtesOver("etxt", "txt")},
+         ${gopherCtesOver("etxt", "txt")}
+         SELECT e.doc_id AS media_id, lang.pred_lang, g2.n_words,
+                (g2.r_word_count AND g2.r_mean_word_len AND
+                 g2.r_symbol_ratio AND g2.r_alpha_words AND
+                 g2.r_stopwords) AS keep
+         FROM etxt e
+         JOIN lang ON e.doc_id = lang.doc_id
+         JOIN g2 ON e.doc_id = g2.doc_id"""),
 
     // x85 — a model TRAINED in the engine: 8 full-batch logistic-
     // regression rounds over portable text signals, gradients as
@@ -3756,14 +7995,20 @@ object SparkEntry {
     // final weights folded back as literals for zero-shuffle scoring.
     // The label is a deterministic supervision stand-in; a labeled
     // column drops in with nothing else changing.
-    "x85_trained_quality" -> ((s, d) =>
+    query("x85_trained_quality", ((s, d) =>
       ext.TextOps.trainLogisticQuality(t(s, d, "documents"))),
+      // x85 — the training loop REPLAYED: the oracle runs the same 8
+      // gradient-descent rounds as unrolled CTEs (decimal-routed gradient
+      // sums ⇒ the weights agree bit-for-bit at every round), then scores
+      // with the identical expression tree; round-to-9dp absorbs the
+      // ≤1-ulp cross-engine exp() difference (the F7 convention)
+      logisticOracleSql),
 
     // x86 — monthly-recrawl bookkeeping: two REAL WARC snapshots (the
     // second with deterministic deletions %7, edits %5, additions %3)
     // hash their pages IN the archive scan and full-outer-join on URL →
     // added/removed/changed/unchanged. Payloads never cross the wire.
-    "x86_crawl_diff" -> ((s, d) => {
+    query("x86_crawl_diff", ((s, d) => {
       val docs = t(s, d, "documents")
       def snap(df: DataFrame) =
         ext.Html.parseDocArchives(ext.Html.warcFromDocs(df))
@@ -3797,12 +8042,38 @@ object SparkEntry {
         tagged.filter(!col("is_new")).drop("is_new"),
         tagged.filter(col("is_new")).drop("is_new"))
     }),
+      // x86 — both snapshots' pages rebuilt closed-form, md5'd as the
+      // engine md5s the real parsed bytes, and the same full-outer
+      // URL-join classification
+      s"""WITH oldd AS (SELECT doc_id, source, text FROM documents),
+         newd AS (
+           SELECT doc_id, source,
+                  CASE WHEN doc_id % 5 = 0 THEN text || ' updated'
+                       ELSE text END AS text
+           FROM documents WHERE doc_id % 7 <> 0
+           UNION ALL
+           SELECT doc_id + 1000000, source, text
+           FROM documents WHERE doc_id % 3 = 0),
+         oh AS (SELECT 'https://crawl.example/' || source || '/' ||
+                         doc_id::VARCHAR AS target_uri,
+                       md5($pageSqlExpr) AS h
+                FROM oldd),
+         nh AS (SELECT 'https://crawl.example/' || source || '/' ||
+                         doc_id::VARCHAR AS target_uri,
+                       md5($pageSqlExpr) AS h
+                FROM newd)
+         SELECT COALESCE(o.target_uri, n.target_uri) AS target_uri,
+                CASE WHEN o.target_uri IS NULL THEN 'added'
+                     WHEN n.target_uri IS NULL THEN 'removed'
+                     WHEN o.h <> n.h THEN 'changed'
+                     ELSE 'unchanged' END AS status
+         FROM oh o FULL OUTER JOIN nh n ON o.target_uri = n.target_uri"""),
 
     // x87 — the Common Crawl segment layout proper: 16 multi-record
     // `.warc.gz` archives (concatenated gzip members, records in doc_id
     // order), read back through the same member-iterating parser. The
     // per-record truth must equal x79's single-record case exactly.
-    "x87_warc_segments" -> ((s, d) =>
+    query("x87_warc_segments", ((s, d) =>
       graft.sources.Warc.parseArchives(
         ext.Html.warcSegmentsFromDocs(t(s, d, "documents"))
           .select(col("segment").cast("string").as("archive"), col("content")))
@@ -3811,23 +8082,66 @@ object SparkEntry {
             .as("media_id"),
           col("record_type"), col("record_id"), col("warc_date"),
           col("target_uri"), col("http_status"),
-          col("http_content_type").as("mime"), col("content_length")))
-,
+          col("http_content_type").as("mime"), col("content_length"))),
+      // x87 — identical per-record truth: re-packing the same records
+      // into multi-member segment archives must change NOTHING about
+      // what the reader reports, so the oracle is x79's verbatim
+      warcScanOracleSql),
 
     // x88 — the pack audit a pipeline owner reads before resizing the
     // context budget: per shard, pack count, token mass, largest pack,
     // boundary-straddle overflows, fill ratio vs n_packs × 2048.
-    "x88_pack_efficiency" -> ((s, d) =>
+    query("x88_pack_efficiency", ((s, d) =>
       ext.Curation.packEfficiency(t(s, d, "documents"), "source", 2048L)),
+      // x88 — the x26 cumulative-window pack assignment, rolled up twice
+      // with exact integer arithmetic and one IEEE division
+      """WITH toks AS (
+           SELECT doc_id, source,
+                  CAST(len(regexp_split_to_array(lower(text), '\s+'))
+                       AS BIGINT) AS n_tokens
+           FROM documents),
+         c AS (
+           SELECT doc_id, source, n_tokens,
+                  SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                      ROWS UNBOUNDED PRECEDING) AS cum
+           FROM toks),
+         packs AS (
+           SELECT source, CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
+                  n_tokens
+           FROM c),
+         per AS (
+           SELECT source, pack_id, CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens
+           FROM packs GROUP BY source, pack_id)
+         SELECT source,
+                CAST(COUNT(*) AS BIGINT) AS n_packs,
+                CAST(SUM(pack_tokens) AS BIGINT) AS total_tokens,
+                CAST(MAX(pack_tokens) AS BIGINT) AS max_pack_tokens,
+                CAST(SUM(CASE WHEN pack_tokens > 2048 THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_overflow,
+                CAST(SUM(pack_tokens) AS DOUBLE)
+                  / CAST(COUNT(*) * 2048 AS DOUBLE) AS fill_ratio
+         FROM per GROUP BY source"""),
 
     // x89 — keep-BEST dedup: same clusters as x28, but the survivor is
     // the longest member (ties to the smallest id) — the policy real
     // pipelines run, as one per-cluster argmax on the bounded map.
-    "x89_dedup_keep_best" -> ((s, d) =>
+    query("x89_dedup_keep_best", ((s, d) =>
       ext.Dedup.dedupCorpusByScore(t(s, d, "documents"),
           ext.Dedup.jaccardPairs(t(s, d, "documents"), shingleK = 3,
             minJaccard = 0.4).select("doc_a", "doc_b"), "n_chars")
         .select("doc_id", "lang", "source", "n_chars")),
+      // x89 — the x28 recursive closure with the keep-longest argmax: the
+      // survivor ranks first in the (n_chars DESC, id ASC) order, exactly
+      // the engine's max(struct(score, −id)) pick
+      s"""WITH RECURSIVE $componentCtes,
+          members AS (SELECT c.id, c.rep, d.n_chars
+                      FROM cc c JOIN documents d ON d.doc_id = c.id),
+          win AS (SELECT id, rep,
+                         row_number() OVER (PARTITION BY rep
+                                            ORDER BY n_chars DESC, id) AS rk
+                  FROM members)
+          SELECT doc_id, lang, source, n_chars FROM documents
+          WHERE doc_id NOT IN (SELECT id FROM win WHERE rk > 1)"""),
 
     // x90 — spectral machinery trained in the engine: decimal-routed
     // corpus moments (ONE pass, map-side-collapsing 2,080 keys), 20
@@ -3842,22 +8156,52 @@ object SparkEntry {
     // half of an OPQ rotation; PcaSpec shows the recall gain of the
     // rotated subspace over raw coordinate slices on a correlated
     // fixture.
-    "x101_pca_topk" -> ((s, d) =>
+    query("x101_pca_topk", ((s, d) =>
       ext.Similarity.pcaProjectTopK(t(s, d, "embeddings"), nComp = 3,
         moments = pcaMomentsFor(s, d))),
+      // x101 — the x90 chain, then per deflation component: Rayleigh λ,
+      // rank-one subtraction, and a fresh unrolled 20-round chain; the
+      // three projections join back per vector
+      pcaTopKOracleSql),
 
-    "x90_pca_projection" -> ((s, d) =>
+    query("x90_pca_projection", ((s, d) =>
       ext.Similarity.pcaTopComponent(t(s, d, "embeddings"),
         moments = pcaMomentsFor(s, d))),
+      // x90 — the whole spectral path replayed: decimal-routed moment
+      // sums (bit-equal to the engine's), the same covariance algebra,
+      // all 20 power iterations as unrolled CTEs with 0.0-init ascending
+      // folds (the DotFold discipline), and the same literal projection
+      s"""WITH $pcaOracleCtes,
+           muw AS (SELECT ${pcaFold("list(a.mu * v.w ORDER BY a.i)")} AS c0
+                   FROM me a JOIN it20 v ON v.i = a.i),
+           proj AS (SELECT e.vec_id,
+                      ${pcaFold("list(CAST(e.embedding[CAST(v.i + 1 AS INTEGER)] AS DOUBLE) * v.w ORDER BY v.i)")} AS dp
+                    FROM embeddings e CROSS JOIN it20 v GROUP BY e.vec_id)
+           SELECT p.vec_id, round(p.dp - w.c0, 6) AS pc1
+           FROM proj p CROSS JOIN muw w"""),
 
     // x97 — the one-row spectral report a practitioner actually reads:
     // Rayleigh quotient λ = wᵀCw of the trained axis, total variance
     // tr(C), and the variance-explained ratio — all from the same
     // exact decimal moments, so the oracle's full re-derivation (the
     // x90 chain + two more folds) matches before the final rounding.
-    "x97_pca_variance" -> ((s, d) =>
+    query("x97_pca_variance", ((s, d) =>
       ext.Similarity.pcaVarianceReport(t(s, d, "embeddings"),
         moments = pcaMomentsFor(s, d))),
+      // x97 — the variance report re-derived: the same materialized
+      // moment/iteration CTEs, then Rayleigh quotient and trace as
+      // 0.0-init ascending folds, identical to the driver's arithmetic
+      s"""WITH $pcaOracleCtes,
+           cw AS MATERIALIZED (
+             SELECT m.i AS i, ${pcaFold("list(m.c * v.w ORDER BY m.j)")} AS u
+             FROM m JOIN it20 v ON v.i = m.j GROUP BY m.i),
+           lam AS (SELECT ${pcaFold("list(v.w * c.u ORDER BY v.i)")} AS lambda
+                   FROM it20 v JOIN cw c ON c.i = v.i),
+           tra AS (SELECT ${pcaFold("list(c ORDER BY i)")} AS trace
+                   FROM m WHERE i = j)
+           SELECT round(lambda, 6) AS lambda, round(trace, 6) AS trace,
+                  round(lambda / trace, 9) AS var_ratio
+           FROM lam, tra"""),
 
     // x95 — the WebDataset shard layout (LAION/img2dataset): docs →
     // REAL ustar `.tar` shards of (caption, json-sidecar) samples →
@@ -3871,7 +8215,7 @@ object SparkEntry {
     // cancel, so per-sample truth is the table row (x95's oracle
     // verbatim) — agreement proves local headers, DEFLATE, the pinned
     // timestamps, pairing and the JSON hop at once.
-    "x113_zip_scan" -> ((s, d) => {
+    query("x113_zip_scan", ((s, d) => {
       val shards = graft.sources.Zip.zipFromDocs(t(s, d, "documents"))
         .select(col("shard").cast("string").as("archive"), col("content"))
       val metaSchema = StructType(Seq(
@@ -3892,8 +8236,12 @@ object SparkEntry {
           col("meta.source").as("source"), col("meta.lang").as("lang"),
           length(col("caption")).as("caption_chars"))
     }),
+      // x113 — zip/json layers cancel exactly like x95's tar/json
+      """SELECT doc_id, text AS caption, source, lang,
+                CAST(length(text) AS INTEGER) AS caption_chars
+         FROM documents"""),
 
-    "x95_webdataset_scan" -> ((s, d) => {
+    query("x95_webdataset_scan", ((s, d) => {
       val shards = graft.sources.Tar
         .webdatasetFromDocs(t(s, d, "documents"))
         .select(col("shard").cast("string").as("archive"), col("content"))
@@ -3909,6 +8257,9 @@ object SparkEntry {
           col("meta.source").as("source"), col("meta.lang").as("lang"),
           length(col("caption")).as("caption_chars"))
     }),
+      """SELECT doc_id, text AS caption, source, lang,
+                CAST(length(text) AS INTEGER) AS caption_chars
+         FROM documents"""),
 
     // x94 — cross-modal alignment audit: the x92 transcript clock
     // joined to the x76 container clock per media id; a transcript that
@@ -3923,11 +8274,22 @@ object SparkEntry {
     // plumbing; the new claim is the binary member round trip through
     // the same tar layer. Oracle: container + JPEG layers cancel
     // (flat frames are DC-only) — closed form per doc.
-    "x177_webdataset_images" -> ((s, d) =>
+    query("x177_webdataset_images", ((s, d) =>
       ext.Multimodal.webdatasetImageStats(
         graft.sources.Tar.webdatasetSamples(
           ext.Multimodal.webdatasetImagesFromDocs(
             t(s, d, "documents"))))),
+          // x95 — the tar/json layers cancel: caption bytes round-trip and
+      // the sidecar was built from the table, so per-sample truth is the
+      // table row itself — agreement proves headers, octal fields,
+      // checksums, padding, pairing and the JSON hop all at once
+      // x177 — flat DC-exact frames: mean = the frame's single value;
+      // caption length replays from the doc text (code-point count,
+      // Spark length() ≡ DuckDB length() on VARCHAR)
+      """SELECT doc_id AS media_id, 8 AS width, 8 AS height,
+                CAST((doc_id * 7 + 13) % 256 AS DOUBLE) AS mean_lum,
+                CAST(length(text) AS INTEGER) AS caption_chars
+         FROM documents"""),
 
     // x178 — the MULTIMODAL corpus build (the x171 shape for media):
     // media table → perceptual-hash near-dup dedup (the x58
@@ -3937,7 +8299,7 @@ object SparkEntry {
     // never re-encodes) → scan back, decode pixels, pair captions.
     // The oracle replays the x49 pixel/hash algebra, the x58 closure,
     // and the closed-form stats — membership AND content hash at once.
-    "x178_media_corpus_build" -> ((s, d) => {
+    query("x178_media_corpus_build", ((s, d) => {
       val docs = t(s, d, "documents")
       val kept = ext.Multimodal.dedupImages(
         ext.Multimodal.mediaFromDocs(docs), maxDist = 3)
@@ -3950,8 +8312,19 @@ object SparkEntry {
             nShards = 4)),
         imgExt = "png")
     }),
+      // x178 — the x58 dedup closure (pixel/aHash replay + recursive
+      // components) gating the closed-form per-survivor stats: the
+      // export/scan/decode layers cancel because the payload moves
+      // verbatim and the pixels are the text bytes (ASCII corpus:
+      // code point = UTF-8 byte, verified at every SF)
+      s"""WITH RECURSIVE $imageDedupCtes
+         SELECT d.doc_id AS media_id, 8 AS width, 8 AS height,
+                CAST(p.tot AS DOUBLE) / 64.0 AS mean_lum,
+                CAST(length(d.text) AS INTEGER) AS caption_chars
+         FROM documents d JOIN ps p ON p.doc_id = d.doc_id
+         WHERE d.doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)"""),
 
-    "x94_av_alignment" -> ((s, d) => {
+    query("x94_av_alignment", ((s, d) => {
       val docs = t(s, d, "documents")
       val cues = graft.sources.Vtt
         .parseDocVtts(graft.sources.Vtt.vttFromDocs(docs))
@@ -3966,46 +8339,130 @@ object SparkEntry {
           (col("transcript_ms").cast("double") >
             col("duration_sec") * 1000.0).as("overrun"))
     }),
+      // x94 — cross-modal alignment audit: the x92 transcript clock
+      // against the x76 container clock; cue census is closed form
+      // ((n+4)//5 cues, last ends at (k−1)·1500+1400 ms), overrun is one
+      // double comparison on proven quantities
+      s"""WITH $frameAudioCtes,
+         tok AS (
+           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                                      t -> length(t) > 0) AS ts
+           FROM documents),
+         nt AS (SELECT doc_id, len(ts) AS n FROM tok WHERE len(ts) > 0),
+         tr AS (SELECT doc_id AS media_id,
+                       CAST((n + 4) // 5 AS BIGINT) AS n_cues,
+                       CAST(((n + 4) // 5 - 1) * 1500 + 1400 AS BIGINT)
+                         AS transcript_ms
+                FROM nt)
+         SELECT t.media_id, t.n_cues, t.transcript_ms, p.duration_sec,
+                (CAST(t.transcript_ms AS DOUBLE) > p.duration_sec * 1000.0)
+                  AS overrun
+         FROM tr t JOIN fap p ON p.media_id = t.media_id"""),
 
     // x93 — SFT data prep: conversations built as REAL JSON turn
     // arrays, parsed back through from_json with a pinned schema, and
     // folded into the template-rendered training string with role
     // sentinels — all fused into the scan, zero shuffle.
-    "x93_chat_render" -> ((s, d) =>
+    query("x93_chat_render", ((s, d) =>
       ext.Curation.chatRender(t(s, d, "documents"))),
+      // x93 — the JSON round trip cancels (build → parse is the
+      // identity on these payloads), so the oracle renders straight from
+      // the token groups with the same template fold
+      """WITH tok AS (
+           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+                                      t -> length(t) > 0) AS ts
+           FROM documents),
+         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
+         r AS (SELECT doc_id, ts, n, (n + 7) // 8 AS k FROM nt),
+         rend AS (
+           SELECT doc_id, k,
+             '<|system|>' || chr(10) || 'You are a helpful assistant.' || chr(10) ||
+             array_to_string(list_transform(range(0, k), i ->
+               '<|' || CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END ||
+               '|>' || chr(10) ||
+               array_to_string(
+                 ts[CAST(i * 8 + 1 AS INTEGER):CAST(LEAST(n, i * 8 + 8) AS INTEGER)],
+                 ' ') || chr(10)), '') ||
+             '<|end|>' AS rendered
+           FROM r)
+         SELECT doc_id,
+                CAST(k AS INTEGER) AS n_turns,
+                CAST((k + 1) // 2 AS INTEGER) AS n_user_turns,
+                CAST(length(rendered) AS INTEGER) AS rendered_chars,
+                rendered
+         FROM rend"""),
 
     // x92 — the transcript half of audio-visual corpora: docs → REAL
     // WebVTT documents (timestamped 5-word cues) → the W3C-essentials
     // parser (short/long timings, cue ids, NOTE/STYLE skip, CRLF). Cue
     // clocks and payloads are closed-form over the text.
-    "x92_vtt_cues" -> ((s, d) =>
+    query("x92_vtt_cues", ((s, d) =>
       graft.sources.Vtt.parseDocVtts(
         graft.sources.Vtt.vttFromDocs(t(s, d, "documents")))),
+      // x92 — the cue algebra replayed: token groups of 5, cue i clocked
+      // at [i·1500, i·1500+1400] ms, inclusive 1-based list slices
+      """WITH tok AS (
+           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
+                                      t -> length(t) > 0) AS ts
+           FROM documents),
+         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
+         cues AS (SELECT doc_id, ts, n,
+                         unnest(range(0, (n + 4) // 5)) AS i
+                  FROM nt)
+         SELECT doc_id AS media_id,
+                CAST(i AS INTEGER) AS cue_idx,
+                CAST(i * 1500 AS BIGINT) AS start_ms,
+                CAST(i * 1500 + 1400 AS BIGINT) AS end_ms,
+                CAST(LEAST(5, n - i * 5) AS INTEGER) AS n_words,
+                array_to_string(
+                  ts[CAST(i * 5 + 1 AS INTEGER):CAST(LEAST(n, i * 5 + 5) AS INTEGER)],
+                  ' ') AS cue_text
+         FROM cues"""),
 
     // x91 — the corrupt-rate audit an ingest job alerts on: every 9th
     // archive is truncated to 30% of its gzip bytes (a torn transfer),
     // and the health scan must report exactly which archives tore and
     // that intact ones carry their one record. Tears cost records,
     // never tasks.
-    "x91_warc_health" -> ((s, d) =>
+    query("x91_warc_health", ((s, d) =>
       graft.sources.Warc.archiveHealth(
         ext.Html.warcFromDocs(t(s, d, "documents"))
           .select(col("media_id").cast("string").as("archive"),
             when(col("media_id") % 9 === 0,
               expr("substring(content, 1, cast(length(content)*3/10 as int))"))
               .otherwise(col("content")).as("content")))),
+      // x91 — deterministic truth: a 30%-truncated single-record gzip can
+      // never yield its record (plaintext tears mid-block), an intact one
+      // always does
+      """SELECT doc_id::VARCHAR AS archive,
+                CAST(CASE WHEN doc_id % 9 = 0 THEN 0 ELSE 1 END AS INTEGER)
+                  AS n_records,
+                (doc_id % 9 = 0) AS torn
+         FROM documents"""),
 
     // x160 — SALSA hub/authority over the x123 domain graph: HITS'
     // bipartite-random-walk cousin — degree-normalized half-rounds
     // with NO normalization aggregate (mass conservation replaces it),
     // the TKC-resistant probe run AGAINST x134 (composed in x163).
     // 5 rounds, the oracle unrolls them term for term.
-    "x160_salsa" -> ((s, d) =>
+    query("x160_salsa", ((s, d) =>
       ext.Graph.salsa(linkGraph(s, d)
           .select(col("src_domain").as("src"),
             col("dst_domain").as("dst")))
         .withColumn("hub", round(col("hub"), 10))
         .withColumn("auth", round(col("auth"), 10))),
+      // x160 — SALSA over the x134 edge set: init 1/|authorities| on the
+      // in-degree side, then 5 degree-normalized half-rounds (no
+      // normalization aggregate — mass conservation), decimal-routed
+      // per-edge-divided sums, missing sides coalesced to 0.
+      s"""WITH $linkNodeCtes,
+           ${salsaCtes(5)}
+           SELECT n.node,
+                  round(COALESCE(h.hub, CAST(0 AS DOUBLE)), 10) AS hub,
+                  round(COALESCE(a.auth, CAST(0 AS DOUBLE)), 10) AS auth
+           FROM nds n
+           LEFT JOIN hb5 h ON h.node = n.node
+           LEFT JOIN at5 a ON a.node = n.node"""),
 
     // x163 — SALSA vs HITS divergence (the x160 probe COMPOSED against
     // x134's iteration): HITS' L2 eigenvector re-expressed as an L1
@@ -4018,7 +8475,7 @@ object SparkEntry {
     // eigenvalue, so HITS demonstrably drains mass into it while SALSA
     // holds the indeg proportions — the flag trips exactly there).
     // Per-row algebra over ONE broadcast sum row — no rank window.
-    "x163_rank_divergence" -> ((s, d) => {
+    query("x163_rank_divergence", ((s, d) => {
       import s.implicits._
       val farm = (for {
         a <- 1 to 6; b <- 1 to 6 if a != b
@@ -4059,13 +8516,54 @@ object SparkEntry {
           round(col("dlt"), 10).as("delta"),
           (col("dlt") > 0.02).as("tkc_suspect"))
     }),
+      // x163 — both iterations on one edge set (the corpus graph + the
+      // planted K6 farm + the coupling edge): the prefixed SALSA chain
+      // (s-names) beside the HITS chain, hits L1-renormalized by the
+      // decimal-routed auth sum, per-node share delta and the 2% flag
+      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
+                FROM documents),
+           ed0 AS (SELECT DISTINCT src, dst FROM (
+                  SELECT sdom AS src,
+                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
+                    WHEN 0 THEN 'example.com'
+                    WHEN 1 THEN 'example.net'
+                    WHEN 7 THEN 'example.edu'
+                    ELSE sdom END AS dst
+                  FROM l0, range(0, 4) t(i)
+                  UNION ALL
+                  SELECT 'farm' || CAST(a.range + 1 AS VARCHAR)
+                           || '.example',
+                         'farm' || CAST(b.range + 1 AS VARCHAR)
+                           || '.example'
+                  FROM range(6) a, range(6) b WHERE a.range <> b.range
+                  UNION ALL
+                  SELECT 'example.org', 'farm1.example') u),
+           nds AS (SELECT DISTINCT node FROM
+                   (SELECT src AS node FROM ed0
+                    UNION ALL SELECT dst AS node FROM ed0) q),
+           ${salsaCtes(5, "s")},
+           hb0 AS (SELECT node, CAST(1 AS DOUBLE) AS hub FROM nds),
+           ${hitsCtes(5)},
+           sal AS (SELECT n.node,
+                          COALESCE(a.auth, CAST(0 AS DOUBLE)) AS salsa_auth
+                   FROM nds n LEFT JOIN sat5 a ON a.node = n.node),
+           hitj AS (SELECT h.node, t.auth
+                    FROM hb5 h JOIN at5 t ON t.node = h.node),
+           hsm AS (SELECT ${graft.ops.Stable.sumSql("t.auth", 18)} AS hsum
+                   FROM hitj t)
+           SELECT s.node,
+                  round(s.salsa_auth, 10) AS salsa_share,
+                  round(h.auth / q.hsum, 10) AS hits_share,
+                  round(h.auth / q.hsum - s.salsa_auth, 10) AS delta,
+                  (h.auth / q.hsum - s.salsa_auth) > 0.02 AS tkc_suspect
+           FROM sal s JOIN hitj h ON h.node = s.node CROSS JOIN hsm q"""),
 
     // x161 — PII census + scrub audit over the x32 plants (one email,
     // one IPv4, one international phone per doc): per-pattern counts
     // on the RAW text plus the redacted rewrite — ONE pattern set
     // engine-wide (Cleanse's), so the census counts exactly what the
     // x32 scrub removes.
-    "x161_pii_report" -> ((s, d) =>
+    query("x161_pii_report", ((s, d) =>
       ext.TextOps.piiReport(t(s, d, "documents").withColumn("text",
         concat_ws(" ", col("text"),
           concat(lit("user"), col("doc_id").cast("string"),
@@ -4074,6 +8572,35 @@ object SparkEntry {
             lit("."), pmod(col("doc_id"), lit(100L)).cast("string")),
           concat(lit("+1 (202) 555-0"),
             lpad(pmod(col("doc_id"), lit(1000L)).cast("string"), 3, "0")))))),
+      // x161 — the x32 plants rebuilt from doc_id arithmetic; counts via
+      // regexp_extract_all on the RAW planted text (Cleanse's ONE pattern
+      // set), the redacted column the same email→IP→phone replace chain
+      // x32 proves
+      """WITH p AS (
+           SELECT doc_id,
+                  text || ' ' || 'user' || doc_id || '@example.com' ||
+                  ' ' || '10.0.' || (doc_id % 256) || '.' || (doc_id % 100) ||
+                  ' ' || '+1 (202) 555-0' ||
+                  lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') AS t
+           FROM documents),
+         c AS (
+           SELECT doc_id,
+             CAST(len(regexp_extract_all(t,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
+               AS n_email,
+             CAST(len(regexp_extract_all(t,
+               '([0-9]{1,3}\.){3}[0-9]{1,3}')) AS BIGINT) AS n_ipv4,
+             CAST(len(regexp_extract_all(t,
+               '\+[0-9][0-9 ()./-]{5,18}[0-9]')) AS BIGINT) AS n_phone,
+             regexp_replace(regexp_replace(regexp_replace(t,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+               '<EMAIL>', 'g'),
+               '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
+               '\+[0-9][0-9 ()./-]{5,18}[0-9]', '<PHONE>', 'g') AS redacted
+           FROM p)
+         SELECT doc_id, n_email, n_ipv4, n_phone, redacted,
+                n_email + n_ipv4 + n_phone AS n_pii
+         FROM c"""),
 
     // x164 — corpus-level boilerplate line CENSUS (the report twin of
     // x33's rewrite, on the SAME line kernel and FNV line hash): the
@@ -4081,12 +8608,57 @@ object SparkEntry {
     // corpus-wide "SUBSCRIBE NOW" line (boilerplate by df), an empty
     // line (dropped by the census policy), and a corpus-wide closing
     // line. kept_digest = bit_xor(h XOR pos) over kept lines.
-    "x164_line_census" -> ((s, d) =>
+    query("x164_line_census", ((s, d) =>
       ext.TextOps.lineBoilerplate(
         t(s, d, "documents").withColumn("text",
           concat(twoTokenRelined,
             lit("\nSUBSCRIBE NOW\n\nall rights reserved"))),
         minDf = 20L)),
+      // x164 — the x33 re-lining plus the footer block, the per-line
+      // FNV-1a (the x10 HUGEINT replay, over the WHOLE line including
+      // spaces), df over distinct docs on the hash, and the census
+      // aggregate with the pos-mixed XOR digest. ASSUMES AN ASCII CORPUS
+      // (the x10 note): codepoints stand in for UTF-8 bytes.
+      s"""WITH ${relinedCtes("""
+             || chr(10) || 'SUBSCRIBE NOW' || chr(10) || chr(10)
+             || 'all rights reserved'""")},
+         sp AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM rel),
+         lines AS (
+           SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos,
+                  ls[CAST(u.i AS INTEGER)] AS line
+           FROM sp, unnest(range(1, len(ls) + 1)) AS u(i)
+           WHERE length(trim(ls[CAST(u.i AS INTEGER)])) > 0),
+         fh AS (
+           SELECT doc_id, pos, CAST(length(line) AS BIGINT) AS len,
+             list_reduce(
+               list_prepend(14695981039346656037::HUGEINT,
+                 list_transform(range(1, length(line) + 1), i ->
+                   unicode(substr(line, CAST(i AS INTEGER), 1))::HUGEINT)),
+               (h, c) -> (xor(h, c) * 1099511628211::HUGEINT)
+                         % 18446744073709551616::HUGEINT) AS uh
+           FROM lines),
+         hs AS (
+           SELECT doc_id, pos, len,
+                  CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
+                            THEN uh - 18446744073709551616::HUGEINT
+                            ELSE uh END AS BIGINT) AS h
+           FROM fh),
+         freq AS (SELECT h, COUNT(DISTINCT doc_id) AS line_df
+                  FROM hs GROUP BY h),
+         j AS (SELECT a.doc_id, a.pos, a.len, a.h, f.line_df
+               FROM hs a JOIN freq f ON f.h = a.h)
+         SELECT doc_id,
+                COUNT(*) AS n_lines,
+                CAST(SUM(CASE WHEN line_df < 20 THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_kept,
+                CAST(SUM(CASE WHEN line_df < 20 THEN len ELSE 0 END)
+                     AS BIGINT) AS kept_chars,
+                CAST(SUM(CASE WHEN line_df < 20 THEN 0 ELSE len END)
+                     AS BIGINT) AS boiler_chars,
+                COALESCE(bit_xor(CASE WHEN line_df < 20
+                                      THEN xor(h, pos) END),
+                         CAST(0 AS BIGINT)) AS kept_digest
+         FROM j GROUP BY doc_id"""),
 
     // x165 — Gopher within-doc repetition census (Rae A1.1 dup-line +
     // top-2-gram gates) over the x164 re-lining plus two deterministic
@@ -4094,7 +8666,7 @@ object SparkEntry {
     // (dup_line_frac > 0), every doc_id%5==0 doc a looping "click
     // here"x3 tail (a dominant gram). Doubles rounded at 10 on both
     // sides; gram-less docs surface with null gram columns (LEFT join).
-    "x165_repetition" -> ((s, d) =>
+    query("x165_repetition", ((s, d) =>
       ext.TextOps.repetitionSignals(
         t(s, d, "documents").withColumn("text",
           concat(twoTokenRelined,
@@ -4106,8 +8678,82 @@ object SparkEntry {
         .withColumn("dup_line_frac", round(col("dup_line_frac"), 10))
         .withColumn("dup_line_char_frac",
           round(col("dup_line_char_frac"), 10))
-        .withColumn("top2_frac", round(col("top2_frac"), 10)))
+        .withColumn("top2_frac", round(col("top2_frac"), 10))),
+      // x165 — the Gopher within-doc repetition recurrence replayed: the
+      // x164 re-lining plus the %3 duplicated-line and %5 looping-gram
+      // plants, dup-line fractions from a per-(doc, line) census, the
+      // dominant 2-gram by count then lexicographically-largest, and the
+      // LEFT join that keeps gram-less docs with null gram columns.
+      s"""WITH ${relinedCtes("""
+             || CASE WHEN doc_id % 3 = 0
+                     THEN chr(10) || 'la la' || chr(10) || 'la la'
+                     ELSE '' END
+             || CASE WHEN doc_id % 5 = 0
+                     THEN chr(10) || 'click here click here click here'
+                     ELSE '' END""")},
+         sp AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM rel),
+         lines AS (
+           SELECT doc_id, ls[CAST(u.i AS INTEGER)] AS line
+           FROM sp, unnest(range(1, len(ls) + 1)) AS u(i)
+           WHERE length(trim(ls[CAST(u.i AS INTEGER)])) > 0),
+         perline AS (
+           SELECT doc_id, line, COUNT(*) AS cnt,
+                  CAST(length(line) AS BIGINT) AS len
+           FROM lines GROUP BY doc_id, line),
+         linesig AS (
+           SELECT doc_id,
+                  CAST(SUM(cnt) AS BIGINT) AS n_lines,
+                  CAST(COUNT(*) AS BIGINT) AS nd,
+                  CAST(SUM(cnt * len) AS BIGINT) AS line_chars,
+                  CAST(SUM((cnt - 1) * len) AS BIGINT) AS dup_chars
+           FROM perline GROUP BY doc_id),
+         tok2 AS (
+           SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
+                  list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                    t -> length(t) > 0) AS l
+           FROM rel),
+         grams AS (
+           SELECT doc_id, n_chars,
+                  l[CAST(t.i AS INTEGER)] || ' ' ||
+                  l[CAST(t.i + 1 AS INTEGER)] AS gram
+           FROM tok2, unnest(range(1, len(l))) AS t(i)),
+         gcnt AS (SELECT doc_id, n_chars, gram, COUNT(*) AS cnt
+                  FROM grams GROUP BY doc_id, n_chars, gram),
+         mxx AS (SELECT doc_id, MAX(cnt) AS mx FROM gcnt GROUP BY doc_id),
+         top AS (
+           SELECT g.doc_id, g.n_chars, m.mx, MAX(g.gram) AS top2_gram
+           FROM gcnt g JOIN mxx m ON m.doc_id = g.doc_id AND g.cnt = m.mx
+           GROUP BY g.doc_id, g.n_chars, m.mx)
+         SELECT s.doc_id,
+                s.n_lines,
+                round(1.0 - CAST(s.nd AS DOUBLE) / CAST(s.n_lines AS DOUBLE),
+                      10) AS dup_line_frac,
+                round(CAST(s.dup_chars AS DOUBLE) /
+                      CAST(s.line_chars AS DOUBLE), 10) AS dup_line_char_frac,
+                t.top2_gram,
+                round(CAST(t.mx AS DOUBLE) *
+                      CAST(length(t.top2_gram) AS DOUBLE) /
+                      CAST(t.n_chars AS DOUBLE), 10) AS top2_frac,
+                (1.0 - CAST(s.nd AS DOUBLE) / CAST(s.n_lines AS DOUBLE))
+                  <= 0.30 AS r_dup_line,
+                COALESCE(CAST(t.mx AS DOUBLE) *
+                         CAST(length(t.top2_gram) AS DOUBLE) /
+                         CAST(t.n_chars AS DOUBLE) <= 0.20,
+                         TRUE) AS r_top2,
+                ((1.0 - CAST(s.nd AS DOUBLE) / CAST(s.n_lines AS DOUBLE))
+                  <= 0.30) AND
+                COALESCE(CAST(t.mx AS DOUBLE) *
+                         CAST(length(t.top2_gram) AS DOUBLE) /
+                         CAST(t.n_chars AS DOUBLE) <= 0.20,
+                         TRUE) AS keep
+         FROM linesig s LEFT JOIN top t ON t.doc_id = s.doc_id""")
   )
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.body).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle()).toMap
 
   /** x171's fixture corpus: the documents table with a VARIED stopword
     * plant (tokens rotate mod 37/41/43 so no two adjacent plant tokens
@@ -4238,16 +8884,14 @@ object SparkEntry {
          FROM ${pfx}d$i)"""
   }
 
-  /** x152/x153's manifest row chain over a (doc_id, text) source CTE:
-    * the x10 rolling-FNV fingerprint fold + the x107 mix64 HUGEINT
-    * replay, XORed with doc_id, ending at `<pfx>m3(shard, nc, rd)`. */
-  private def manifestOracleCtes(src: String, pfx: String): String =
-    s"""${pfx}fp AS (
-           SELECT doc_id, CAST(doc_id % 16 AS INTEGER) AS shard,
-             CAST(length(text) AS BIGINT) AS nc,
-             list_reduce(
+  /** x10's rolling fingerprint of a doc's `text` as an unsigned
+    * HUGEINT: per-token FNV-1a over the code points, folded by
+    * rotate-by-5-and-XOR across the whitespace tokens. Shared by x10
+    * and the x152/x153 manifests. */
+  private lazy val fnvFoldSql: String =
+    """list_reduce(
                list_prepend(0::HUGEINT,
-                 list_transform(regexp_split_to_array(lower(text), '\\s+'), t ->
+                 list_transform(regexp_split_to_array(lower(text), '\s+'), t ->
                    list_reduce(
                      list_prepend(14695981039346656037::HUGEINT,
                        list_transform(range(1, length(t) + 1), i ->
@@ -4256,7 +8900,16 @@ object SparkEntry {
                                % 18446744073709551616::HUGEINT))),
                (acc, h) -> xor((acc * 32::HUGEINT)
                                % 18446744073709551616::HUGEINT
-                               + acc // 576460752303423488::HUGEINT, h))
+                               + acc // 576460752303423488::HUGEINT, h))"""
+
+  /** x152/x153's manifest row chain over a (doc_id, text) source CTE:
+    * the x10 rolling-FNV fingerprint fold + the x107 mix64 HUGEINT
+    * replay, XORed with doc_id, ending at `<pfx>m3(shard, nc, rd)`. */
+  private def manifestOracleCtes(src: String, pfx: String): String =
+    s"""${pfx}fp AS (
+           SELECT doc_id, CAST(doc_id % 16 AS INTEGER) AS shard,
+             CAST(length(text) AS BIGINT) AS nc,
+             $fnvFoldSql
              AS ufp
            FROM $src),
          ${pfx}m0 AS (SELECT shard, nc, xor(ufp, doc_id::HUGEINT) AS u0
@@ -4296,6 +8949,17 @@ object SparkEntry {
        |          xor(${p}u2, ${p}u2 // 2147483648::HUGEINT) AS $out
        |          FROM ${p}2)""".stripMargin
 
+  /** x22's splitmix64 finalizer over `m0(…, u0)`: the three mix steps
+    * replayed in HUGEINT (the mulmod technique), ending at `sgn(…, sh)`
+    * — the two's-complement signed BIGINT Spark's mix64 carries. */
+  private lazy val mix64SignedCtes: String =
+    s"""m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
+          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
+          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
+          sgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
+                                      THEN uh - 18446744073709551616::HUGEINT
+                                      ELSE uh END AS BIGINT) AS sh FROM m3)"""
+
   /** Two's-complement reinterpretation of an unsigned HUGEINT as the
     * signed BIGINT Spark's mix64 column carries. */
   private def signedSql(u: String): String =
@@ -4307,11 +8971,6 @@ object SparkEntry {
     * oracle's literal-weight construction). */
   private val HashAnnQuery = "spark query table join fast"
 
-  /** Shared CTE chain for the x59/x60 oracles — the hashing-trick
-    * embedding rebuilt from scratch: per-token FNV-1a (the x3 char
-    * fold), the x22 mix64 chain, signed floor-mod dims, exact integer
-    * Σc², one correctly-rounded sqrt per doc →
-    * `emb(doc_id, dim BIGINT, w DOUBLE)`. */
   /** 0.0-init ascending fold — the SQL image of the DotFold discipline,
     * shared by every PCA-oracle reduction. */
   private def pcaFold(l: String): String =
@@ -4630,6 +9289,52 @@ object SparkEntry {
                       ELSE '%' || p END), ''), '') AS norm_url
              FROM npr)"""
 
+  /** [[urlNormCtes]] plus each doc's registered domain and normalized
+    * URL, `nd(doc_id, domain, norm)`. */
+  private lazy val urlDomainCtes: String =
+    s"""$urlNormCtes,
+           nd AS (SELECT doc_id, ${regDomainSql("host")} AS domain,
+                         norm_url AS norm
+                  FROM n)"""
+
+  /** [[urlDomainCtes]] plus x111's sitemap listing `listed(domain, u)`
+    * (the even-id distinct norms and three /extra phantoms per domain)
+    * and the crawled set `crawled(domain, u)`. */
+  private lazy val sitemapListingCtes: String =
+    s"""$urlDomainCtes,
+           listed AS (
+             SELECT DISTINCT domain, norm AS u FROM nd WHERE doc_id % 2 = 0
+             UNION
+             SELECT DISTINCT domain,
+                    'https://' || domain || '/extra/' || CAST(t.i AS STRING)
+             FROM nd, range(0, 3) t(i)),
+           crawled AS (SELECT DISTINCT domain, norm AS u FROM nd)"""
+
+  /** x109/x122's robots input: [[urlNormCtes]] plus each doc's domain
+    * and path without its trailing slash, `p0(doc_id, domain, path)`,
+    * and the distinct domains `doms`. */
+  private lazy val robotsPathCtes: String =
+    s"""$urlNormCtes,
+           p0 AS (SELECT u.doc_id, ${regDomainSql("u.host")} AS domain,
+                         CASE WHEN u.praw LIKE '%/'
+                              THEN substr(u.praw, 1,
+                                     CAST(length(u.praw) - 1 AS INTEGER))
+                              ELSE u.praw END AS path
+                  FROM u7 u),
+           doms AS (SELECT DISTINCT domain FROM p0)"""
+
+  /** x109/x122's verdict over the matched rules `mt(doc_id, domain,
+    * path, prefix, aw, plen)`: the longest match wins, Allow beats
+    * Disallow on a tie, no match allows. */
+  private lazy val robotsVerdictSql: String =
+    """rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+                    ORDER BY plen DESC NULLS LAST, aw DESC NULLS LAST,
+                             prefix DESC NULLS LAST) AS rn
+                  FROM mt)
+           SELECT doc_id, domain, path, prefix AS matched_prefix,
+                  (prefix IS NULL OR aw = 1) AS allowed
+           FROM rk WHERE rn = 1"""
+
   /** [[ext.UrlOps.registeredDomain]] as a DuckDB CASE chain generated
     * from the SAME precedence-ordered suffix fixture — most-labels-first,
     * whole-label matches via the literal `%.suffix` LIKE, implicit-*
@@ -4649,20 +9354,68 @@ object SparkEntry {
                     ELSE $h END END"""
   }
 
+  /** The x124 link graph regenerated closed-form (the x123 layer
+    * cancels): `ed0(src, dst)`, the distinct domain edges. */
+  private lazy val linkEdgeCtes: String =
+    s"""l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
+                FROM documents),
+           ed0 AS (SELECT DISTINCT sdom AS src,
+                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
+                    WHEN 0 THEN 'example.com'
+                    WHEN 1 THEN 'example.net'
+                    WHEN 7 THEN 'example.edu'
+                    ELSE sdom END AS dst
+                FROM l0, range(0, 4) t(i))"""
+
+  /** [[linkEdgeCtes]] plus its node set `nds(node)`. */
+  private lazy val linkNodeCtes: String =
+    s"""$linkEdgeCtes,
+           nds AS (SELECT DISTINCT node FROM
+                   (SELECT src AS node FROM ed0
+                    UNION ALL SELECT dst AS node FROM ed0) q)"""
+
+  /** [[linkNodeCtes]] plus the uniform start [[pageRankCtes]] reads:
+    * `nn(n)`, `dg(src, deg)` and `pr0(node, pr)`. */
+  private lazy val linkRankCtes: String =
+    s"""$linkNodeCtes,
+           nn AS (SELECT COUNT(*) AS n FROM nds),
+           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
+           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
+                 FROM nds CROSS JOIN nn)"""
+
+  /** x131/x139's seed teleport over [[linkNodeCtes]]: the seed count
+    * `ns(k)` of the two seed domains, the teleport vector `ndt(node,
+    * t)` (1/|S| on seeds, 0 elsewhere) and the out-degrees `dg(src,
+    * deg)`. */
+  private lazy val seedTeleportCtes: String =
+    s"""ns AS (SELECT COUNT(*) AS k FROM nds
+                  WHERE node IN ('example.com', 'example.edu')),
+           ndt AS (SELECT node,
+                  CASE WHEN node IN ('example.com', 'example.edu')
+                       THEN CAST(1 AS DOUBLE) / ns.k
+                       ELSE CAST(0 AS DOUBLE) END AS t
+                FROM nds CROSS JOIN ns),
+           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src)"""
+
   /** x124's PageRank replay: k power rounds as unrolled CTE blocks —
     * `c_k` (per-node contribution sums), `m_k` (the dangling-mass
     * scalar), `pr_k` (the next vector) — reproducing
     * [[ext.Graph.pageRank]]'s expression order term for term: the
     * per-edge division is IEEE double, the two sums route through
-    * DECIMAL(28,18), and the damped combination adds left to right. */
-  private def pageRankCtes(iters: Int): String =
+    * DECIMAL(28,18), and the damped combination adds left to right.
+    * x130's WEIGHTED rounds pass `share = pr · (w / Σ_out w)` (the IEEE
+    * double product of the decimal-routed weight ratio) over the
+    * `sw(src, sw)` out-weight sums instead of `pr / deg` over `dg`. */
+  private def pageRankCtes(iters: Int,
+                           share: String = "p.pr / CAST(d.deg AS DOUBLE)",
+                           outJoin: String = "dg d ON d.src = e.src")
+      : String =
     (1 to iters).map { k =>
       val p = s"pr${k - 1}"
       s"""c$k AS (SELECT e.dst AS node,
-                  ${graft.ops.Stable.sumSql("p.pr / CAST(d.deg AS DOUBLE)",
-                    18)} AS s
+                  ${graft.ops.Stable.sumSql(share, 18)} AS s
                 FROM ed0 e JOIN $p p ON p.node = e.src
-                JOIN dg d ON d.src = e.src
+                JOIN $outJoin
                 GROUP BY e.dst),
            m$k AS (SELECT COALESCE(${graft.ops.Stable.sumSql("p.pr", 18)},
                                    CAST(0 AS DOUBLE)) AS m
@@ -4702,15 +9455,12 @@ object SparkEntry {
                          unnest(string_split(lower(a), ' ')) AS term
                   FROM lg)"""
 
-  /** x116/x137 shared oracle chain: listing and crawl state
+  /** x116/x120/x137 shared oracle chain: listing and crawl state
     * regenerated closed-form (the XML index/shard layer cancels),
     * classification + per-domain rank window, ending at
     * `sched(domain, url, lastmod, status, rnk)`. */
   private lazy val recrawlOracleCtes: String =
-    s"""$urlNormCtes,
-           nd AS (SELECT doc_id, ${regDomainSql("host")} AS domain,
-                         norm_url AS norm
-                  FROM n),
+    s"""$urlDomainCtes,
            st AS (SELECT doc_id, domain, norm,
                     DATE '2026-01-01' + CAST(doc_id % 90 AS INTEGER)
                       AS lastmod,
@@ -4749,22 +9499,7 @@ object SparkEntry {
     * engine shapes (parquet round-trips the doubles exactly). */
   private lazy val rankedFrontierOracleSql: String =
     s"""WITH $recrawlOracleCtes,
-           l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           nn AS (SELECT COUNT(*) AS n FROM nds),
-           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
-           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
-                 FROM nds CROSS JOIN nn),
+           $linkRankCtes,
            ${pageRankCtes(5)},
            pri AS (SELECT s.domain, s.url, s.status, s.rnk,
                   p.pr / CAST(s.rnk AS DOUBLE) AS priority
@@ -4821,30 +9556,6 @@ object SparkEntry {
     s"rv0 AS (SELECT doc_id, doc_id::HUGEINT AS h FROM documents),\n" +
       steps.mkString(",\n")
   }
-
-  /** x130's WEIGHTED PageRank rounds: like [[pageRankCtes]] but the
-    * per-edge share is `pr · (w / Σ_out w)` — the engine's expression
-    * order term for term (IEEE double product of the decimal-routed
-    * weight ratio), sums through DECIMAL(28,18). */
-  private def pageRankWCtes(iters: Int): String =
-    (1 to iters).map { k =>
-      val p = s"pr${k - 1}"
-      s"""c$k AS (SELECT e.dst AS node,
-                  ${graft.ops.Stable.sumSql("p.pr * (e.w / s.sw)", 18)} AS s
-                FROM ed0 e JOIN $p p ON p.node = e.src
-                JOIN sw s ON s.src = e.src
-                GROUP BY e.dst),
-           m$k AS (SELECT COALESCE(${graft.ops.Stable.sumSql("p.pr", 18)},
-                                   CAST(0 AS DOUBLE)) AS m
-                FROM $p p LEFT JOIN dg d ON d.src = p.node
-                WHERE d.src IS NULL),
-           pr$k AS (SELECT nd.node,
-                  (1 - CAST(0.85 AS DOUBLE)) / nn.n
-                  + CAST(0.85 AS DOUBLE) * COALESCE(c.s, CAST(0 AS DOUBLE))
-                  + CAST(0.85 AS DOUBLE) * m$k.m / nn.n AS pr
-                FROM nds nd CROSS JOIN nn CROSS JOIN m$k
-                LEFT JOIN c$k c ON c.node = nd.node)"""
-    }.mkString(",\n           ")
 
   /** x131's PERSONALIZED rounds: teleport `t(v)` (1/|S| on seeds, 0
     * elsewhere) replaces the uniform 1/N in the base term AND the
@@ -4955,8 +9666,6 @@ object SparkEntry {
     val ell = graft.ops.Ellipsoid.Airy1830
     val w = graft.ops.Ellipsoid.WGS84
     val hr = graft.ops.Datum.Osgb36ToWgs84.reversed
-    def sinhS(x: String) = s"((exp($x) - exp(-($x))) / 2)"
-    def coshS(x: String) = s"((exp($x) + exp(-($x))) / 2)"
     def atanhS(x: String) = s"(0.5 * ln((1 + $x) / (1 - $x)))"
     def fwdCtes(px: String, src: String, latE: String, lonE: String)
     : String = {
@@ -4982,12 +9691,6 @@ object SparkEntry {
     def g(ph: String) =
       s"""atan2(gz2 + ${ell.e2} * (${ell.a} /
             sqrt(1 - ${ell.e2} * sin($ph) * sin($ph))) * sin($ph), gp)"""
-    val iters = (1 to 10).map { k =>
-      s""", ht$k AS (SELECT *,
-         CASE WHEN c${k - 1} THEN ph${k - 1} ELSE ${g(s"ph${k - 1}")} END AS ph$k,
-         c${k - 1} OR abs(${g(s"ph${k - 1}")} - ph${k - 1}) < 1e-14 AS c$k
-         FROM ht${k - 1})"""
-    }.mkString
     s"""WITH gps AS (
            SELECT doc_id AS media_id,
                   (CASE WHEN doc_id % 8 = 5 THEN -1.0 ELSE 1.0 END) *
@@ -5026,7 +9729,7 @@ object SparkEntry {
                     AS ph0,
                   FALSE AS c0
                  FROM hh)
-         $iters,
+         ${fixedPointCtes(10, g, "ht", "ph", "c")},
          hd AS (SELECT media_id,
                   ph10 * 180.0 / pi() AS lat_o,
                   atan2(gy2, gx2) * 180.0 / pi() AS lon_o
@@ -5078,6 +9781,18 @@ object SparkEntry {
   }
 
   private lazy val hashedTokenCtes: String = hashedTokenCtesOver("documents")
+
+  /** x170/x179's per-doc token-id census off the x82 hashed-vocab
+    * chain ([[hashedTokenCtes]]): ids mod 65536 `tid` and per-doc
+    * `agg(doc_id, n_tokens, id_sum)`. */
+  private lazy val binIdxTokenCtes: String =
+    s"""$hashedTokenCtes,
+         tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
+                 FROM sgn),
+         agg AS (SELECT doc_id,
+                        CAST(COUNT(*) AS BIGINT) AS n_tokens,
+                        CAST(SUM(tid) AS BIGINT) AS id_sum
+                 FROM tid GROUP BY doc_id)"""
 
   /** x168/x169's DSIR chain over the `docSrc` relation (doc_id,
     * source, text): token FNV / 2-gram combine / mix64 / pmod buckets,
@@ -5143,6 +9858,25 @@ object SparkEntry {
            FROM terms GROUP BY doc_id)"""
   }
 
+  /** The pruned KN chains' capped training stream: filtered lowercase
+    * tokens `tok0(doc_id, ts)`, word counts `wc`, the top-v vocabulary
+    * `kl(kws)` (count DESC, word ASC) and the stream with every other
+    * word mapped to `<unk>`, `tokm(doc_id, ts)`. */
+  private def unkTokCtes(v: Int): String =
+    s"""tok0 AS MATERIALIZED (
+         SELECT doc_id, list_filter(
+           regexp_split_to_array(lower(text), '\\s+'),
+           t -> length(t) > 0) AS ts
+         FROM documents),
+       wc AS (SELECT u.t AS w, CAST(COUNT(*) AS BIGINT) AS c
+              FROM tok0, unnest(ts) AS u(t) GROUP BY 1),
+       kl AS (SELECT list(w) AS kws FROM
+                (SELECT w FROM wc ORDER BY c DESC, w ASC LIMIT $v)),
+       tokm AS MATERIALIZED (
+         SELECT doc_id, list_transform(ts, t ->
+           CASE WHEN list_contains(kl.kws, t) THEN t ELSE '<unk>' END) AS ts
+         FROM tok0 CROSS JOIN kl)"""
+
   /** x166's ORDER-N Kneser-Ney oracle — the x149 trigram structure
     * GENERATED for any order: one n-gram type table, continuation type
     * tables chained below it, history normalizers per level, and the
@@ -5185,19 +9919,7 @@ object SparkEntry {
                 else s"ts[CAST(i + $j AS INTEGER)]").mkString(", ")
     val gramSel = ws.zipWithIndex
       .map { case (w, i) => s"tg[${i + 1}] AS $w" }.mkString(", ")
-    sb ++= s"""tok0 AS MATERIALIZED (
-         SELECT doc_id, list_filter(
-           regexp_split_to_array(lower(text), '\\s+'),
-           t -> length(t) > 0) AS ts
-         FROM documents),
-       wc AS (SELECT u.t AS w, CAST(COUNT(*) AS BIGINT) AS c
-              FROM tok0, unnest(ts) AS u(t) GROUP BY 1),
-       kl AS (SELECT list(w) AS kws FROM
-                (SELECT w FROM wc ORDER BY c DESC, w ASC LIMIT $v)),
-       tokm AS MATERIALIZED (
-         SELECT doc_id, list_transform(ts, t ->
-           CASE WHEN list_contains(kl.kws, t) THEN t ELSE '<unk>' END) AS ts
-         FROM tok0 CROSS JOIN kl),
+    sb ++= s"""${unkTokCtes(v)},
        tn AS MATERIALIZED (
          SELECT ${ws.mkString(", ")}, CAST(COUNT(*) AS BIGINT) AS cN
          FROM (SELECT $gramSel
@@ -5482,6 +10204,20 @@ $ctxJoins),
        |FROM valued GROUP BY doc_id""".stripMargin
   }
 
+  /** x222/x223's two training streams, materialized: filtered
+    * lowercase tokens of the whole corpus `tok0(doc_id, ts)` (the
+    * general model) and of its src0 slice `tokt` (the target). */
+  private lazy val mooreLewisTokCtes: String =
+    s"""tok0 AS MATERIALIZED (
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\\s+'),
+             t -> length(t) > 0) AS ts
+           FROM documents),
+         tokt AS MATERIALIZED (
+           SELECT t0.* FROM tok0 t0
+           JOIN documents d USING (doc_id)
+           WHERE d.source = 'src0')"""
+
   /** ONE capped-bigram-ARPA LOG-scoring chain for x222's oracle,
     * CTE-name-prefixed so the target and general models coexist in a
     * single WITH: top-V keep over the TRAIN table, <unk>-mapped
@@ -5631,19 +10367,7 @@ $ctxJoins),
                / CAST(h.chist AS DOUBLE)) * $p2full)"""
     def decSum(x: String) =
       s"CAST(SUM(CAST($x AS DECIMAL(28,18))) AS DOUBLE)"
-    s"""tok0 AS MATERIALIZED (
-         SELECT doc_id, list_filter(
-           regexp_split_to_array(lower(text), '\\s+'),
-           t -> length(t) > 0) AS ts
-         FROM documents),
-       wc AS (SELECT u.t AS w, CAST(COUNT(*) AS BIGINT) AS c
-              FROM tok0, unnest(ts) AS u(t) GROUP BY 1),
-       kl AS (SELECT list(w) AS kws FROM
-                (SELECT w FROM wc ORDER BY c DESC, w ASC LIMIT $v)),
-       tokm AS MATERIALIZED (
-         SELECT doc_id, list_transform(ts, t ->
-           CASE WHEN list_contains(kl.kws, t) THEN t ELSE '<unk>' END) AS ts
-         FROM tok0 CROSS JOIN kl),
+    s"""${unkTokCtes(v)},
        tn AS MATERIALIZED (
          SELECT w1, w2, w3, CAST(COUNT(*) AS BIGINT) AS cN
          FROM (SELECT tg[1] AS w1, tg[2] AS w2, tg[3] AS w3
@@ -5905,9 +10629,12 @@ $ctxJoins),
 s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
                 WHERE rk6.rn <= 180)"""
 
-  /** x144's KN bigram score chain, shared with x214 (which buckets on
-    * the same scores): ends at `knsc(doc_id, n_bigrams, kn_score)`. */
-  private lazy val knBigramOracleCtes: String =
+  /** The bigram LM oracles' count chain (the x3/x9 filtered lowercase
+    * whitespace tokens `tok(doc_id, ts)`), per-doc bigram occurrences
+    * `occ(doc_id, w1, w2, m)` and corpus bigram counts `c2t(w1, w2,
+    * c2)`. Shared by the x51/x81 add-one LM and the x144/x205 KN
+    * chains. */
+  private lazy val bigramCountCtes: String =
     """tok AS (
       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
       |                             t -> length(t) > 0) AS ts
@@ -5922,13 +10649,24 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
       |              FROM tok))
       |  GROUP BY doc_id, w1, w2),
       |c2t AS (SELECT w1, w2, CAST(SUM(m) AS BIGINT) AS c2
-      |        FROM occ GROUP BY w1, w2),
+      |        FROM occ GROUP BY w1, w2)""".stripMargin
+
+  /** [[bigramCountCtes]] plus the interpolated-KN statistics:
+    * `h1(w1, c1, n1f)` (history count and fan-out), `p2(w2, n1p)`
+    * (continuation count) and `tt(n1tot)` (distinct bigrams). */
+  private lazy val knBigramStatCtes: String =
+    s"""$bigramCountCtes,
       |h1 AS (SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1,
       |              CAST(COUNT(*) AS BIGINT) AS n1f
       |       FROM c2t GROUP BY w1),
       |p2 AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1p
       |       FROM c2t GROUP BY w2),
-      |tt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n1tot FROM c2t),
+      |tt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n1tot FROM c2t)""".stripMargin
+
+  /** x144's KN bigram score chain, shared with x214 (which buckets on
+    * the same scores): ends at `knsc(doc_id, n_bigrams, kn_score)`. */
+  private lazy val knBigramOracleCtes: String =
+    s"""$knBigramStatCtes,
       |valued AS (
       |  SELECT o.doc_id, o.w1, o.w2, o.m,
       |         CAST(o.m AS DOUBLE) /
@@ -6003,17 +10741,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
     * x111 listing minus crawled, paths, the extended rule table,
     * the x109 rank. Both engine shapes replay to this verbatim. */
   private lazy val x114OracleSql: String =
-    s"""WITH $urlNormCtes,
-           nd AS (SELECT doc_id, ${regDomainSql("host")} AS domain,
-                         norm_url AS norm
-                  FROM n),
-           listed AS (
-             SELECT DISTINCT domain, norm AS u FROM nd WHERE doc_id % 2 = 0
-             UNION
-             SELECT DISTINCT domain,
-                    'https://' || domain || '/extra/' || CAST(t.i AS STRING)
-             FROM nd, range(0, 3) t(i)),
-           crawled AS (SELECT DISTINCT domain, norm AS u FROM nd),
+    s"""WITH $sitemapListingCtes,
            frontier AS (
              SELECT l.domain, l.u,
                     '/extra/' || split_part(l.u, '/extra/', 2) AS path
@@ -6414,21 +11142,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
     * the per-doc double sum is bit-exact → `scored(doc_id, n_bigrams,
     * lm_score)`. */
   private val lmScoreCtes: String =
-    """tok AS (
-      |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-      |                             t -> length(t) > 0) AS ts
-      |  FROM documents),
-      |occ AS (
-      |  SELECT doc_id, w1, w2, COUNT(*) AS m
-      |  FROM (SELECT doc_id, bg[1] AS w1, bg[2] AS w2
-      |        FROM (SELECT doc_id,
-      |                     unnest(list_transform(range(1, len(ts)), i ->
-      |                       [ts[CAST(i AS INTEGER)],
-      |                        ts[CAST(i + 1 AS INTEGER)]])) AS bg
-      |              FROM tok))
-      |  GROUP BY doc_id, w1, w2),
-      |c2t AS (SELECT w1, w2, CAST(SUM(m) AS BIGINT) AS c2
-      |        FROM occ GROUP BY w1, w2),
+    s"""$bigramCountCtes,
       |c1t AS (SELECT w1, CAST(SUM(m) AS BIGINT) AS c1
       |        FROM occ GROUP BY w1),
       |vt AS (SELECT COUNT(DISTINCT t) AS v
@@ -6447,6 +11161,11 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
       |           / CAST(SUM(m) AS BIGINT) AS lm_score
       |  FROM valued GROUP BY doc_id)""".stripMargin
 
+  /** Shared CTE chain for the x59/x60 oracles — the hashing-trick
+    * embedding rebuilt from scratch: per-token FNV-1a (the x3 char
+    * fold), the x22 mix64 chain, signed floor-mod dims, exact integer
+    * Σc², one correctly-rounded sqrt per doc →
+    * `emb(doc_id, dim BIGINT, w DOUBLE)`. */
   private val hashEmbedCtes: String = {
     val M = "18446744073709551616::HUGEINT"
     s"""tok AS (
@@ -6551,6 +11270,26 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
       |           ELSE 0::BIGINT END)) AS BIGINT) AS afp_lo
       |  FROM en)""".stripMargin
 
+  /** x58's image dedup closure over [[imageHashCtes]]: aHash pairs
+    * within Hamming distance 3 (`iedges`) and their recursive-closure
+    * components `cc(id, rep)`, rep = the component's min id — read
+    * under WITH RECURSIVE. Shared by x58 and x178. */
+  private lazy val imageDedupCtes: String =
+    s"""$imageHashCtes,
+         iedges AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM h a JOIN h b ON a.doc_id < b.doc_id
+           WHERE bit_count(xor(a.ahash_hi, b.ahash_hi)) +
+                 bit_count(xor(a.ahash_lo, b.ahash_lo)) <= 3),
+         und AS (SELECT doc_a AS s, doc_b AS t FROM iedges
+                 UNION ALL SELECT doc_b, doc_a FROM iedges),
+         cnodes AS (SELECT DISTINCT s AS id FROM und),
+         walk(id, cur) AS (
+           SELECT id, id FROM cnodes
+           UNION
+           SELECT w.id, u.t FROM walk w JOIN und u ON u.s = w.cur),
+         cc AS (SELECT id, MIN(cur) AS rep FROM walk GROUP BY id)"""
+
   /** Shared CTE prefix for the x49/x50 oracles: the media payload is an
     * 8×8 gray PNG whose 64 samples are the doc's first 64 ASCII bytes
     * zero-padded (Multimodal.mediaFromDocs; PNG gray-8 round-trips
@@ -6635,10 +11374,27 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
        |WHERE bit_count(xor(a.fp, b.fp)) <= $maxDist""".stripMargin
   }
 
-  private def utmOracleSql: String = {
-    val (k0a1, beta, e, e0) = ops.Utm.oracleConstants
-    def sinhS(x: String) = s"((exp($x) - exp(-($x))) / 2)"
-    def coshS(x: String) = s"((exp($x) + exp(-($x))) / 2)"
+  private def sinhS(x: String) = s"((exp($x) - exp(-($x))) / 2)"
+  private def coshS(x: String) = s"((exp($x) + exp(-($x))) / 2)"
+
+  /** The projection oracles' latitude fixed point as unrolled CTEs
+    * `, <it>1` … `, <it>n` over `<it>0`: step k replaces `<v>(k-1)` by
+    * `g(<v>(k-1))` until a step moves it by less than 1e-14, then
+    * freezes (`<done>k`) — the engine's loop, iteration for iteration. */
+  private def fixedPointCtes(n: Int, g: String => String, it: String = "it",
+                             v: String = "phi", done: String = "d"): String =
+    (1 to n).map { k =>
+      s""", $it$k AS (SELECT *,
+         CASE WHEN $done${k - 1} THEN $v${k - 1} ELSE ${g(s"$v${k - 1}")} END AS $v$k,
+         $done${k - 1} OR abs(${g(s"$v${k - 1}")} - $v${k - 1}) < 1e-14 AS $done$k
+         FROM $it${k - 1})"""
+    }.mkString
+
+  /** The Krüger transverse-Mercator inverse shared by the UTM and BNG
+    * oracles, over a `base(y, x, xi, eta)` CTE: the six-term β series
+    * to ξ′/η′ (`conf`), the conformal latitude χ as the start and eight
+    * fixed-point steps ending at `it8(y, x, xip, etap, chi, phi8, …)`. */
+  private def krugerInverseCtes(beta: Array[Double], e: Double): String = {
     def atanhS(x: String) = s"(0.5 * ln((1 + $x) / (1 - $x)))"
     def g(phi: String) = {
       val s = sinhS(s"$e * ${atanhS(s"($e * sin($phi))")}")
@@ -6648,12 +11404,18 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
       s" - (${beta(j - 1)} * sin(${2 * j} * xi) * ${coshS(s"${2 * j} * eta")})").mkString
     val etap = "eta" + (1 to 6).map(j =>
       s" - (${beta(j - 1)} * cos(${2 * j} * xi) * ${sinhS(s"${2 * j} * eta")})").mkString
-    val newton = (1 to 8).map { k =>
-      s""", it$k AS (SELECT *,
-         CASE WHEN d${k - 1} THEN phi${k - 1} ELSE ${g(s"phi${k - 1}")} END AS phi$k,
-         d${k - 1} OR abs(${g(s"phi${k - 1}")} - phi${k - 1}) < 1e-14 AS d$k
-         FROM it${k - 1})"""
-    }.mkString
+    s"""conf AS (SELECT y, x, $xip AS xip, $etap AS etap FROM base),
+       it0 AS (
+         SELECT y, x, xip, etap,
+                asin(sin(xip) / ${coshS("etap")}) AS chi,
+                asin(sin(xip) / ${coshS("etap")}) AS phi0,
+                FALSE AS d0
+         FROM conf)
+       ${fixedPointCtes(8, g)}"""
+  }
+
+  private def utmOracleSql: String = {
+    val (k0a1, beta, e, e0) = ops.Utm.oracleConstants
     s"""WITH grid AS (
          SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
                 400000.0 + (CAST(x.range AS DOUBLE) + 0.5) * 1000.0 AS easting,
@@ -6663,14 +11425,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
          SELECT y, x, (northing - 0.0) / $k0a1 AS xi,
                       (easting - $e0) / $k0a1 AS eta
          FROM grid),
-       conf AS (SELECT y, x, $xip AS xip, $etap AS etap FROM base),
-       it0 AS (
-         SELECT y, x, xip, etap,
-                asin(sin(xip) / ${coshS("etap")}) AS chi,
-                asin(sin(xip) / ${coshS("etap")}) AS phi0,
-                FALSE AS d0
-         FROM conf)
-       $newton
+       ${krugerInverseCtes(beta, e)}
        SELECT y, x,
               round(phi8 * 180.0 / pi(), 9) AS lat,
               round(75.0 + atan2(${sinhS("etap")}, cos(xip)) * 180.0 / pi(), 9) AS lon
@@ -6697,23 +11452,6 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
   private def bngInverseParts: (String, String, String) = {
     val (k0a1, beta, e, fe, fn, xi0, lon0) =
       ops.Utm.Tmerc.BritishNationalGrid.oracleConstants
-    def sinhS(x: String) = s"((exp($x) - exp(-($x))) / 2)"
-    def coshS(x: String) = s"((exp($x) + exp(-($x))) / 2)"
-    def atanhS(x: String) = s"(0.5 * ln((1 + $x) / (1 - $x)))"
-    def g(phi: String) = {
-      val s = sinhS(s"$e * ${atanhS(s"($e * sin($phi))")}")
-      s"atan(tan(chi) * sqrt(1 + $s * $s) + $s * sqrt(1 + tan(chi) * tan(chi)))"
-    }
-    val xip = "xi" + (1 to 6).map(j =>
-      s" - (${beta(j - 1)} * sin(${2 * j} * xi) * ${coshS(s"${2 * j} * eta")})").mkString
-    val etap = "eta" + (1 to 6).map(j =>
-      s" - (${beta(j - 1)} * cos(${2 * j} * xi) * ${sinhS(s"${2 * j} * eta")})").mkString
-    val newton = (1 to 8).map { k =>
-      s""", it$k AS (SELECT *,
-         CASE WHEN d${k - 1} THEN phi${k - 1} ELSE ${g(s"phi${k - 1}")} END AS phi$k,
-         d${k - 1} OR abs(${g(s"phi${k - 1}")} - phi${k - 1}) < 1e-14 AS d$k
-         FROM it${k - 1})"""
-    }.mkString
     val ctes = s"""grid AS (
          SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
                 300000.0 + (CAST(x.range AS DOUBLE) + 0.5) * 1000.0 AS easting,
@@ -6723,14 +11461,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
          SELECT y, x, (northing - $fn) / $k0a1 + $xi0 AS xi,
                       (easting - $fe) / $k0a1 AS eta
          FROM grid),
-       conf AS (SELECT y, x, $xip AS xip, $etap AS etap FROM base),
-       it0 AS (
-         SELECT y, x, xip, etap,
-                asin(sin(xip) / ${coshS("etap")}) AS chi,
-                asin(sin(xip) / ${coshS("etap")}) AS phi0,
-                FALSE AS d0
-         FROM conf)
-       $newton"""
+       ${krugerInverseCtes(beta, e)}"""
     (ctes, "phi8 * 180.0 / pi()",
       s"$lon0 + atan2(${sinhS("etap")}, cos(xip)) * 180.0 / pi()")
   }
@@ -6750,12 +11481,6 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
     def g(ph: String) =
       s"""atan2(gz2 + ${w.e2} * (${w.a} /
             sqrt(1 - ${w.e2} * sin($ph) * sin($ph))) * sin($ph), gp)"""
-    val iters = (1 to 10).map { k =>
-      s""", jt$k AS (SELECT *,
-         CASE WHEN c${k - 1} THEN ph${k - 1} ELSE ${g(s"ph${k - 1}")} END AS ph$k,
-         c${k - 1} OR abs(${g(s"ph${k - 1}")} - ph${k - 1}) < 1e-14 AS c$k
-         FROM jt${k - 1})"""
-    }.mkString
     s"""WITH $ctes,
        geo AS (SELECT y, x, $latE AS lat_deg, $lonE AS lon_deg FROM it8),
        rad AS (SELECT y, x, lat_deg / 180.0 * pi() AS phi,
@@ -6780,7 +11505,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
                         AS ph0,
                       FALSE AS c0
                FROM hel)
-       $iters
+       ${fixedPointCtes(10, g, "jt", "ph", "c")}
        SELECT y, x,
               round(ph10 * 180.0 / pi(), 9) AS lat,
               round(atan2(gy2, gx2) * 180.0 / pi(), 9) AS lon
@@ -6803,12 +11528,6 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
     val invN = 1.0 / p.n
     def g(phi: String) =
       s"(pi() / 2 - 2 * atan(tp * exp($halfE * ln((1 - $e * sin($phi)) / (1 + $e * sin($phi))))))"
-    val iters = (1 to 10).map { k =>
-      s""", it$k AS (SELECT *,
-         CASE WHEN d${k - 1} THEN phi${k - 1} ELSE ${g(s"phi${k - 1}")} END AS phi$k,
-         d${k - 1} OR abs(${g(s"phi${k - 1}")} - phi${k - 1}) < 1e-14 AS d$k
-         FROM it${k - 1})"""
-    }.mkString
     s"""WITH grid AS (
          SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
                 600000.0 + (CAST(x.range AS DOUBLE) + 0.5) * 1000.0 AS px,
@@ -6827,7 +11546,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
                 pi() / 2 - 2 * atan(exp($invN * ln(rho / ${p.aFk0}))) AS phi0,
                 FALSE AS d0
          FROM pol)
-       $iters
+       ${fixedPointCtes(10, g)}
        SELECT y, x,
               round(phi10 * 180.0 / pi(), 9) AS lat,
               round((${p.lam0} + theta / ${p.n}) * 180.0 / pi(), 9) AS lon
@@ -6852,12 +11571,6 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
            (1 - $e2 * sin($phi) * sin($phi)) / (2 * cos($phi)) *
            (qd / ${1 - e2} - sin($phi) / (1 - $e2 * sin($phi) * sin($phi)) +
             ${1 / (2 * e)} * ln((1 - $e * sin($phi)) / (1 + $e * sin($phi)))))"""
-    val iters = (1 to 15).map { k =>
-      s""", it$k AS (SELECT *,
-         CASE WHEN d${k - 1} THEN phi${k - 1} ELSE ${g(s"phi${k - 1}")} END AS phi$k,
-         d${k - 1} OR abs(${g(s"phi${k - 1}")} - phi${k - 1}) < 1e-14 AS d$k
-         FROM it${k - 1})"""
-    }.mkString
     s"""WITH grid AS (
          SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
                 4000000.0 + (CAST(x.range AS DOUBLE) + 0.5) * 1000.0 AS px,
@@ -6884,7 +11597,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
                                  yp * sin(ce) * ${p.cosB0} / rho)) / 2) AS phi0,
                 FALSE AS d0
          FROM ang)
-       $iters
+       ${fixedPointCtes(15, g)}
        SELECT y, x,
               round(phi15 * 180.0 / pi(), 9) AS lat,
               round((${p.lam0} + theta) * 180.0 / pi(), 9) AS lon
@@ -6906,12 +11619,6 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
     val halfE = e / 2
     def g(phi: String) =
       s"(pi() / 2 - 2 * atan(tp * exp($halfE * ln((1 - $e * sin($phi)) / (1 + $e * sin($phi))))))"
-    val iters = (1 to 10).map { k =>
-      s""", it$k AS (SELECT *,
-         CASE WHEN d${k - 1} THEN phi${k - 1} ELSE ${g(s"phi${k - 1}")} END AS phi$k,
-         d${k - 1} OR abs(${g(s"phi${k - 1}")} - phi${k - 1}) < 1e-14 AS d$k
-         FROM it${k - 1})"""
-    }.mkString
     s"""WITH grid AS (
          SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
                 -300000.0 + (CAST(x.range AS DOUBLE) + 0.5) * 1000.0 AS xp,
@@ -6926,7 +11633,7 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
                 pi() / 2 - 2 * atan(rho / ${p.aMcOverTc}) AS phi0,
                 FALSE AS d0
          FROM pol)
-       $iters
+       ${fixedPointCtes(10, g)}
        SELECT y, x,
               round(phi10 * 180.0 / pi(), 9) AS lat,
               round(lon_raw - 360.0 * floor((lon_raw + 180.0) / 360.0), 9)
@@ -6939,6 +11646,11 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
 
   private val jsonlFixture =
     "/root/repo/src/test/resources/corpus_mini.jsonl"
+
+  /** The s13 golden CSV, checked in next to the GeoJSON fixture. */
+  private def goldenPixelsCsv: String =
+    java.nio.file.Paths.get(geojsonFixture)
+      .resolveSibling("golden_pixels.csv").toString
 
   /** Deterministic 64-dim query vector for the ANN queries (shared by Spark
     * and oracle sides). */
@@ -7020,6 +11732,41 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
         JOIN rep r ON r.doc_id = d.doc_id
         JOIN cont c ON c.doc_id = d.doc_id"""
 
+  /** The x17 IVF assignment: `cent(cid, <cv>)` (the first 16 vectors
+    * as centroids, their vector column named `cv`), the vector-centroid
+    * cosines `pairs` and `assign(vec_id, cid)`, the argmax with a
+    * (cos, cid) lexicographic tiebreak. */
+  private def ivfAssignCtes(cv: String): String =
+    s"""cent AS (
+            SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS $cv
+            FROM embeddings WHERE vec_id < 16),
+          pairs AS (
+            SELECT e.vec_id, c.cid,
+                   list_dot_product(CAST(e.embedding AS DOUBLE[]), c.$cv)
+                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
+                                            CAST(e.embedding AS DOUBLE[])))
+                      * sqrt(list_dot_product(c.$cv, c.$cv))) AS cc
+            FROM embeddings e, cent c),
+          assign AS (
+            SELECT vec_id, cid FROM (
+              SELECT vec_id, cid,
+                     row_number() OVER (PARTITION BY vec_id
+                                        ORDER BY cc DESC, cid DESC) AS rn
+              FROM pairs) WHERE rn = 1)"""
+
+  /** [[ivfAssignCtes]] plus `probes(cid)`: the 2 centroids nearest the
+    * query vector, (cos DESC, cid). */
+  private def ivfProbeCtes: String =
+    s"""${ivfAssignCtes("cvec")},
+          probes AS (
+            SELECT cid FROM cent
+            ORDER BY list_dot_product(cvec, $queryVectorSql)
+                     / (sqrt(list_dot_product(cvec, cvec))
+                        * sqrt(list_dot_product($queryVectorSql,
+                                                $queryVectorSql))) DESC,
+                     cid
+            LIMIT 2)"""
+
   /** DuckDB mirror of the PQ quantizer (x65/x66): codebooks are the
     * subspace slices of the first-16 vectors, assignment is the argmin of
     * the identical three-dot squared distance d = <x,x> − 2<x,c> + <c,c>
@@ -7047,12 +11794,22 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
     * are value-identical, parquet round-trips binary64/int32 exactly):
     * per-subspace query tables from the x65 code fragment, 8-lookup
     * approximate distance, rerank-50 cut, exact cosine top-10. */
-  private def pqAdcAnnOracleSql: String = {
+  private def pqAdcAnnOracleSql: String =
+    s"""WITH $pqCtes,
+        ${pqAdcCandCtes("pcodes")}
+        SELECT p.vec_id, round(p.adist, 6) AS adist, round($cosSql, 6) AS cos
+        FROM pcand p JOIN embeddings ON embeddings.vec_id = p.vec_id
+        ORDER BY $cosSql DESC, p.vec_id LIMIT 10"""
+
+  /** The x66 ADC candidate chain over [[pqCtes]]: per-subspace query
+    * tables `ptab`, the 8-lookup approximate distance `padist` of every
+    * vector in the `codes` table (pcodes' columns) and the rerank-50
+    * cut `pcand(vec_id, adist)`. */
+  private def pqAdcCandCtes(codes: String): String = {
     val dsub = 8
     val qsl = s"list_slice($queryVectorSql, sub*$dsub + 1, sub*$dsub + $dsub)"
     val csl = s"list_slice(pcent.cv, sub*$dsub + 1, sub*$dsub + $dsub)"
-    s"""WITH $pqCtes,
-        ptab AS (SELECT psub.sub, pcent.cid,
+    s"""ptab AS (SELECT psub.sub, pcent.cid,
                         list_dot_product($qsl, $qsl)
                         - 2*list_dot_product($qsl, $csl)
                         + list_dot_product($csl, $csl) AS dq
@@ -7061,15 +11818,12 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
                    ${(0 until 8).map(s =>
                      s"MAX(CASE WHEN c.sub = $s THEN t.dq END) AS d_$s")
                      .mkString(", ")}
-                   FROM pcodes c
+                   FROM $codes c
                    JOIN ptab t ON t.sub = c.sub AND t.cid = c.code
                    GROUP BY c.vec_id),
         pcand AS (SELECT vec_id,
                          ${(0 until 8).map(s => s"d_$s").mkString(" + ")} AS adist
-                  FROM padist ORDER BY adist, vec_id LIMIT 50)
-        SELECT p.vec_id, round(p.adist, 6) AS adist, round($cosSql, 6) AS cos
-        FROM pcand p JOIN embeddings ON embeddings.vec_id = p.vec_id
-        ORDER BY $cosSql DESC, p.vec_id LIMIT 10"""
+                  FROM padist ORDER BY adist, vec_id LIMIT 50)"""
   }
 
   /** The PQ blocking key replayed (x75/x78): per band, codes packed
@@ -7086,21 +11840,142 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
 
   // ----------------------------------------------------------------- oracle
 
-  /** Exact n-gram Jaccard edge CTEs at threshold 0.4 — shared by x4 (the
-    * pair query), x27 (connected components over the pairs), and x28 (the
-    * deduplicated corpus). Tokenization/df-cap commentary at the x4 entry. */
-  private val jaccardEdgeCtes =
+  /** x33's line census over the 2-token re-lining: filtered tokens
+    * `tok(doc_id, l)`, two-token `lines(doc_id, pos, line)`, the
+    * per-line document frequency `dfq(line, df)` and the lines `kept`
+    * under the df >= 20 rule. Shared by x33 and x212. */
+  private lazy val lineCensusCtes =
     """tok AS (
-           SELECT doc_id,
-                  list_filter(regexp_split_to_array(lower(text), '\s+'),
-                              t -> length(t) > 0) AS l
+           SELECT doc_id, list_filter(
+             regexp_split_to_array(lower(text), '\s+'),
+             t -> length(t) > 0) AS l
            FROM documents),
-         sh AS (
+         lines AS (
+           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
+                  array_to_string(l[u.i*2+1 : u.i*2+2], ' ') AS line
+           FROM tok, unnest(range(0, greatest((len(l)+1)//2, 1))) AS u(i)),
+         dfq AS (SELECT line, COUNT(DISTINCT doc_id) AS df
+                 FROM lines GROUP BY 1),
+         kept AS (SELECT * FROM lines
+                  WHERE line NOT IN (SELECT line FROM dfq WHERE df >= 20))"""
+
+  /** x18's audio features over the decoded samples `<src>(doc_id, n,
+    * i, s)`: zero crossings from the lagged sign, exact sum of squares
+    * and peak, rms and duration as single exact divisions. Shared by
+    * x18 (PCM) and x46 (G.711). */
+  private def audioFeatureSql(src: String): String =
+    s"""lagd AS (
+           SELECT doc_id, n, s,
+                  lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
+           FROM $src),
+         agg AS (
+           SELECT doc_id, MAX(n) AS n, SUM(s * s) AS sumsq,
+                  MAX(ABS(s)) AS peak,
+                  SUM(CASE WHEN prev IS NOT NULL AND ((prev >= 0) <> (s >= 0))
+                           THEN 1 ELSE 0 END) AS zc
+           FROM lagd GROUP BY doc_id)
+         SELECT doc_id AS media_id, 8000 AS sample_rate,
+                CAST(n AS BIGINT) AS n_samples,
+                CAST(n AS DOUBLE) / 8000.0 AS duration_sec,
+                sqrt(CAST(sumsq AS DOUBLE) / n) AS rms,
+                CAST(peak AS BIGINT) AS peak,
+                CAST(zc AS BIGINT) AS zero_crossings
+         FROM agg"""
+
+  /** x213's span strip over the removable k-token window starts
+    * `rem(doc_id, pos)`: islands of starts at most k apart, their token
+    * spans and the index-filtered token rebuild of every `<src>(doc_id,
+    * l)` row — the engine's rebuild. DuckDB's array_to_string of an
+    * EMPTY list is NULL where the engine's array_join gives '', so the
+    * text is coalesced. Shared by x213 (owner election) and x218
+    * (benchmark semi-join). */
+  private def spanStripSql(k: Int, src: String): String =
+    s"""isl AS (
+           SELECT doc_id, pos,
+                  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
+                       ORDER BY pos) <= $k THEN 0 ELSE 1 END AS brk
+           FROM rem),
+         grp AS (
+           SELECT doc_id, pos,
+                  SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
+           FROM isl),
+         sp AS (SELECT doc_id, MIN(pos) AS s, MAX(pos)+${k - 1} AS e
+                FROM grp GROUP BY doc_id, g),
+         spl AS (SELECT doc_id, list({'s': s, 'e': e}) AS spans
+                 FROM sp GROUP BY doc_id),
+         outp AS (
+           SELECT t.doc_id, len(t.l) AS n_tokens,
+                  CASE WHEN p.spans IS NULL THEN t.l
+                       ELSE list_transform(
+                         list_filter(
+                           list_transform(range(0, len(t.l)), i ->
+                             {'i': i, 'tk': t.l[CAST(i+1 AS INTEGER)]}),
+                           s -> len(list_filter(p.spans,
+                             x -> x.s <= s.i AND s.i <= x.e)) = 0),
+                         s -> s.tk) END AS keptl
+           FROM $src t LEFT JOIN spl p USING (doc_id))
+         SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+                CAST(n_tokens - len(keptl) AS BIGINT) AS n_removed,
+                COALESCE(array_to_string(keptl, ' '), '') AS text
+         FROM outp"""
+
+  /** The distinct per-doc word 3-gram shingles `sh(doc_id, shingle)`
+    * over `tok(doc_id, l)` (a doc shorter than 3 tokens contributes
+    * none). Shared by x2/x42/x43 and the x4 Jaccard edges. */
+  private lazy val shingleCte =
+    """sh AS (
            SELECT DISTINCT doc_id, unnest(list_filter(
              list_transform(range(1, greatest(len(l) - 1, 1)),
                i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]),
              x -> x IS NOT NULL)) AS shingle
-           FROM tok),
+           FROM tok)"""
+
+  /** x2's exact all-pairs 3-gram census: whitespace tokens
+    * `tok(doc_id, l)` of the lowercased text, the distinct per-doc
+    * shingles `sh`, per-doc shingle counts `sizes(doc_id, n)` and the
+    * shared-shingle counts `inter(doc_a, doc_b, c)` over doc_a < doc_b.
+    * Shared by x2, x42 and x43. */
+  private lazy val pairCountCtes =
+    s"""tok AS (
+           SELECT doc_id, regexp_split_to_array(lower(text), '\\s+') AS l
+           FROM documents),
+         $shingleCte,
+         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
+         inter AS (
+           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
+           FROM sh x JOIN sh y ON x.shingle = y.shingle
+           WHERE x.doc_id < y.doc_id GROUP BY 1, 2)"""
+
+  /** The x214 CCNet tercile rule over `sl(doc_id, lang, <nCol>, ppl)`:
+    * the per-language SCORE-GROUP table, the integer 3·cum ≤ n bucket
+    * rule (ties never split a boundary) and the per-doc select. Shared
+    * by x214, x221 and x229. */
+  private def ccnetTercileSql(nCol: String): String =
+    s"""grp AS (SELECT lang, ppl, CAST(COUNT(*) AS BIGINT) AS c
+                 FROM sl GROUP BY 1, 2),
+         cum AS (SELECT lang, ppl,
+                        SUM(c) OVER (PARTITION BY lang ORDER BY ppl
+                                     ROWS UNBOUNDED PRECEDING) AS cum,
+                        SUM(c) OVER (PARTITION BY lang) AS n
+                 FROM grp),
+         bk AS (SELECT lang, ppl,
+                       CASE WHEN cum * 3 <= n THEN 'head'
+                            WHEN cum * 3 <= 2 * n THEN 'middle'
+                            ELSE 'tail' END AS bucket
+                FROM cum)
+         SELECT s.doc_id, s.lang, s.$nCol, s.ppl, b.bucket
+         FROM sl s JOIN bk b ON b.lang = s.lang AND b.ppl = s.ppl"""
+
+  /** Exact n-gram Jaccard edge CTEs at threshold 0.4 — shared by x4 (the
+    * pair query), x27 (connected components over the pairs), and x28 (the
+    * deduplicated corpus). Tokenization/df-cap commentary at the x4 entry. */
+  private val jaccardEdgeCtes =
+    s"""tok AS (
+           SELECT doc_id,
+                  list_filter(regexp_split_to_array(lower(text), '\\s+'),
+                              t -> length(t) > 0) AS l
+           FROM documents),
+         $shingleCte,
          sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
          -- mirror jaccardPairs' document-frequency cap (maxDf=4096): the
          -- Spark side drops ubiquitous shingles before pair generation, so
@@ -7569,5840 +12444,4 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
            SELECT z.doc_id, z.n_sh, COALESCE(h.n_hit, 0) AS n_hit,
                   CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / z.n_sh AS contamination
            FROM csizes z LEFT JOIN chits h ON h.doc_id = z.doc_id)"""
-
-  def oracleSql: Map[String, String] = Map(
-    "s1_scan_project" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
-         WHERE l_orderkey < 1000""",
-
-    "s9_partition_index" ->
-      """SELECT DISTINCT CAST(date_trunc('month', o_orderdate) AS DATE) AS month
-         FROM orders ORDER BY month""",
-
-    "p1_band_select" ->
-      """SELECT event_id, event_type AS band, value FROM events
-         WHERE event_type = 'signup'""",
-
-    "p2_eq_chain" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-         WHERE c_mktsegment = 'BUILDING' AND c_nationkey = 5""",
-
-    "p3_inlist" ->
-      """SELECT p_partkey, p_brand, p_retailprice FROM part
-         WHERE p_brand IN ('Brand#1', 'Brand#12')""",
-
-    "p4_daterange" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         WHERE o_orderdate >= DATE '1996-01-01' AND o_orderdate < DATE '1997-01-01'""",
-
-    "p5_bbox" ->
-      """SELECT event_id, value, CAST(user_id AS DOUBLE) AS uid FROM events
-         WHERE value BETWEEN 10.0 AND 200.0 AND user_id BETWEEN 100 AND 500""",
-
-    "p6_clip_mask" ->
-      """SELECT event_id,
-                CASE WHEN event_type = 'click' AND value > 100.0 THEN value END AS value
-         FROM events""",
-
-    "p8_date_lookup" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-         WHERE CAST(l_shipdate AS DATE) = DATE '1997-03-15'""",
-
-    "p9_positive_count" ->
-      """SELECT event_type, COUNT(*) AS n FROM events
-         WHERE value > 0.0 AND value > 50.0 GROUP BY event_type""",
-
-    "a1_mean_composite" ->
-      s"""SELECT l_returnflag, l_linestatus,
-                 ${avgSql("l_quantity")} AS avg_qty,
-                 ${sumSql("l_extendedprice", 2)} AS sum_price,
-                 COUNT(*) AS n
-          FROM lineitem GROUP BY l_returnflag, l_linestatus""",
-
-    "a2_max_composite" ->
-      """SELECT user_id, MAX(value) AS max_value, MIN(value) AS min_value
-         FROM events GROUP BY user_id""",
-
-    "a3_count" ->
-      """SELECT COUNT(*) AS n_rows, COUNT(DISTINCT o_custkey) AS n_images FROM orders""",
-
-    "a5_minmax" ->
-      """SELECT MIN(value) AS min_value, MAX(value) AS max_value FROM events""",
-
-    "a6_grid_resample" ->
-      s"""SELECT CAST(FLOOR(value / 0.5) AS BIGINT) AS cell,
-                 ${avgSql("value")} AS mean_value,
-                 COUNT(value) AS n_px
-          FROM events GROUP BY 1""",
-
-    "a7_bbox_union" ->
-      """SELECT MIN(l_quantity) AS min_lon, MIN(l_extendedprice) AS min_lat,
-                MAX(l_quantity) AS max_lon, MAX(l_extendedprice) AS max_lat
-         FROM lineitem""",
-
-    "w1_minmax_norm" ->
-      """SELECT l_orderkey, l_linenumber,
-                (l_quantity - MIN(l_quantity) OVER w)
-                / (MAX(l_quantity) OVER w - MIN(l_quantity) OVER w + 1e-6) AS norm
-         FROM lineitem WINDOW w AS (PARTITION BY l_returnflag)""",
-
-    "w2_zero_preserving" ->
-      """SELECT event_id,
-                CASE WHEN value > 0 THEN
-                  (value - MIN(CASE WHEN value > 0 THEN value END) OVER w)
-                  / (MAX(CASE WHEN value > 0 THEN value END) OVER w
-                     - MIN(CASE WHEN value > 0 THEN value END) OVER w + 1e-6)
-                ELSE 0.0 END AS norm
-         FROM events WINDOW w AS (PARTITION BY event_type)""",
-
-    "f1_nanfill" ->
-      """SELECT event_id, COALESCE(value, 0.0) AS v FROM events""",
-
-    "f3_severity" ->
-      """SELECT CASE WHEN value < 100.0 THEN 'none'
-                     WHEN value < 150.0 THEN 'low'
-                     WHEN value < 200.0 THEN 'mid'
-                     ELSE 'high' END AS severity, COUNT(*) AS n
-         FROM events GROUP BY 1""",
-
-    "f6_quantize" ->
-      """SELECT event_id,
-                LEAST(GREATEST(CAST(TRUNC(
-                  (value - MIN(value) OVER w)
-                  / (MAX(value) OVER w - MIN(value) OVER w + 1e-6) * 255.0
-                ) AS INTEGER), 0), 255) AS q
-         FROM events WINDOW w AS (PARTITION BY event_type)""",
-
-    "f9_date_format" ->
-      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS ds FROM orders""",
-
-    "f10_month_arith" ->
-      """SELECT DISTINCT CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
-                last_day(CAST(o_orderdate AS DATE)) AS month_end
-         FROM orders""",
-
-    "f11_concat" ->
-      """SELECT l_returnflag || '_' || l_linestatus AS key, COUNT(*) AS n
-         FROM lineitem GROUP BY 1""",
-
-    "f12_upper" ->
-      """SELECT DISTINCT UPPER(c_mktsegment) AS seg FROM customer""",
-
-    "f14_json" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k
-         FROM events""",
-
-    "f15_eps_div" ->
-      """SELECT l_orderkey, l_linenumber,
-                l_extendedprice / (l_quantity + 1e-6) AS r FROM lineitem""",
-
-    "j1_cell_join" ->
-      """WITH cells AS (
-           SELECT CAST(FLOOR(value / 50.0) AS BIGINT) AS cell, COUNT(*) AS cnt
-           FROM events GROUP BY 1)
-         SELECT e.event_id, c.cell, c.cnt FROM events e
-         JOIN cells c ON CAST(FLOOR(e.value / 50.0) AS BIGINT) = c.cell""",
-
-    "j2_semi" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-         WHERE o_custkey IN (SELECT c_custkey FROM customer
-                             WHERE c_mktsegment = 'BUILDING')""",
-
-    "j3_broadcast_dim" ->
-      s"""SELECT p_brand,
-                 ${sumSql("l_extendedprice * (1.0 - l_discount)", 4)} AS revenue,
-                 COUNT(*) AS n
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY p_brand""",
-
-    "j4_pivot" ->
-      """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-                COUNT(*) FILTER (o_orderpriority = '1-URGENT') AS "1-URGENT",
-                COUNT(*) FILTER (o_orderpriority = '2-HIGH') AS "2-HIGH",
-                COUNT(*) FILTER (o_orderpriority = '3-MEDIUM') AS "3-MEDIUM",
-                COUNT(*) FILTER (o_orderpriority = '4-NOT SPECIFIED') AS "4-NOT SPECIFIED",
-                COUNT(*) FILTER (o_orderpriority = '5-LOW') AS "5-LOW"
-         FROM orders GROUP BY 1""",
-
-    "j6_anti" ->
-      """SELECT o_orderkey, o_custkey FROM orders
-         WHERE o_custkey NOT IN (SELECT c_custkey FROM customer
-                                 WHERE c_mktsegment = 'BUILDING')""",
-
-    "j8_star_join" ->
-      s"""SELECT r_name, n_name, ${sumSql("l_extendedprice")} AS revenue,
-                 COUNT(*) AS n_items
-          FROM lineitem
-          JOIN supplier ON s_suppkey = l_suppkey
-          JOIN nation ON n_nationkey = s_nationkey
-          JOIN region ON r_regionkey = n_regionkey
-          GROUP BY 1, 2""",
-
-    // J7 — the plain join: salting must be invisible in the result set
-    "j7_salted_join" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, o_totalprice
-         FROM lineitem JOIN orders ON o_orderkey = l_orderkey""",
-
-    "u2_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_totalprice > 100000.0
-         INTERSECT
-         SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'""",
-
-    "u3_except" ->
-      """SELECT DISTINCT c_nationkey FROM customer
-         EXCEPT
-         SELECT c_nationkey FROM customer WHERE c_custkey % 100 = 7""",
-
-    "o1_sort_dates" ->
-      """SELECT DISTINCT CAST(l_shipdate AS DATE) AS day FROM lineitem ORDER BY day""",
-
-    "o2_first" ->
-      """SELECT o_orderkey, o_orderdate FROM orders
-         ORDER BY o_orderdate, o_orderkey LIMIT 1""",
-
-    "o3_latest" ->
-      """SELECT MAX(o_orderdate) AS latest FROM orders""",
-
-    "f4_recolor" ->
-      """SELECT event_id,
-                CASE WHEN value > 400.0 THEN 139 ELSE 0 END AS r,
-                0 AS g, 0 AS b,
-                CASE WHEN value > 400.0 THEN 255 ELSE 0 END AS a
-         FROM events""",
-
-    "f5_colormap" -> {
-      val lutR = graft.ops.Render.jetLut.map(_._1).mkString("[", ", ", "]")
-      s"""SELECT event_id,
-                 ($lutR)[LEAST(GREATEST(CAST(TRUNC(
-                   (value - MIN(value) OVER w)
-                   / (MAX(value) OVER w - MIN(value) OVER w + 1e-6) * 256.0
-                 ) AS INTEGER), 0), 255) + 1] AS red
-          FROM events WINDOW w AS (PARTITION BY event_type)"""
-    },
-
-    "f7_mercator" ->
-      """SELECT event_id,
-                round((value * 10000.0) / 6378137.0 * (180.0 / pi()), 9) AS lon,
-                round((atan(exp((value * 10000.0) / 6378137.0)) * 2.0 - pi() / 2.0)
-                      * (180.0 / pi()), 9) AS lat
-         FROM events""",
-
-    "f13_qs_parse" ->
-      """SELECT event_id,
-                regexp_extract('type=' || event_type || '&user=' || user_id,
-                               'type=([^&]*)', 1) AS qs_type,
-                CAST(regexp_extract('type=' || event_type || '&user=' || user_id,
-                                    'user=([^&]*)', 1) AS BIGINT) AS qs_user
-         FROM events""",
-
-    "u1_union" ->
-      """SELECT 'click' AS band, event_id, value FROM events WHERE event_type = 'click'
-         UNION ALL
-         SELECT 'view' AS band, event_id, value FROM events WHERE event_type = 'view'""",
-
-    "t_month_window" ->
-      s"""SELECT CAST(date_trunc('month', ts) AS DATE) AS month, event_type,
-                 COUNT(*) AS n, ${sumSql("value")} AS sum_value
-          FROM events GROUP BY 1, 2""",
-
-    // a9 — DuckDB ROLLUP with the same GROUPING bitmask convention
-    "a9_rollup" ->
-      s"""WITH m AS (
-            SELECT o_orderpriority,
-                   CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-                   o_totalprice
-            FROM orders)
-          SELECT o_orderpriority, month, COUNT(*) AS n,
-                 ${sumSql("o_totalprice")} AS total,
-                 CAST(GROUPING(o_orderpriority, month) AS BIGINT) AS gid
-          FROM m GROUP BY ROLLUP(o_orderpriority, month)""",
-
-    // t3 — identical decimal-routed frame sum and final double division
-    "t3_moving_avg" ->
-      s"""WITH m AS (
-            SELECT o_orderpriority,
-                   CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-                   ${sumSql("o_totalprice")} AS v
-            FROM orders GROUP BY 1, 2)
-          SELECT o_orderpriority, month, v,
-                 CAST(SUM(CAST(v AS DECIMAL(28,6))) OVER w AS DOUBLE)
-                   / COUNT(v) OVER w AS smoothed
-          FROM m
-          WINDOW w AS (PARTITION BY o_orderpriority ORDER BY month
-                       ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING)""",
-
-    // s13 — DuckDB parses the same CSV under the same pinned schema;
-    // 'nan' reads as NaN and nulls out identically
-    "s13_csv_pixel_scan" ->
-      """SELECT lat, lon,
-                CASE WHEN isnan(mean) THEN NULL ELSE mean END AS mean
-         FROM read_csv('/root/repo/src/test/resources/golden_pixels.csv',
-                header = false,
-                columns = {lat: 'DOUBLE', lon: 'DOUBLE', mean: 'DOUBLE'})""",
-
-    // s12 — DuckDB reads the same JSONL fixture with the same pinned
-    // column spec (no inference on either side)
-    "s12_jsonl_scan" ->
-      s"""SELECT doc_id, text, lang, meta.source AS source,
-                 meta.quality AS quality,
-                 CAST(len(tags) AS INTEGER) AS n_tags
-          FROM read_json('$jsonlFixture', format='newline_delimited',
-                 columns = {doc_id: 'BIGINT', text: 'VARCHAR',
-                            lang: 'VARCHAR',
-                            meta: 'STRUCT(source VARCHAR, quality DOUBLE)',
-                            tags: 'VARCHAR[]'})""",
-
-    // t2 — identical hole-punch, dense grid, IGNORE NULLS bracketing, and
-    // interpolation parenthesization
-    "t2_gap_fill" ->
-      s"""WITH m AS (
-            SELECT o_orderpriority,
-                   CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-                   ${sumSql("o_totalprice")} AS v
-            FROM orders GROUP BY 1, 2),
-          mi0 AS (
-            SELECT o_orderpriority AS k,
-                   (year(month)*12 + month(month) - 1) AS mi, v FROM m
-            WHERE ((year(month)*12 + month(month) - 1) % 5) <> 2),
-          bounds AS (SELECT k, min(mi) AS lo, max(mi) AS hi
-                     FROM mi0 GROUP BY 1),
-          grid AS (SELECT k, CAST(u.m AS BIGINT) AS mi
-                   FROM bounds, unnest(range(lo, hi+1)) AS u(m)),
-          j AS (SELECT g.k, g.mi, b.v FROM grid g
-                LEFT JOIN mi0 b ON b.k = g.k AND b.mi = g.mi),
-          w AS (
-            SELECT k, mi, v,
-                   last_value(v IGNORE NULLS) OVER
-                     (PARTITION BY k ORDER BY mi ROWS BETWEEN UNBOUNDED
-                      PRECEDING AND CURRENT ROW) AS pv,
-                   last_value(CASE WHEN v IS NOT NULL THEN mi END
-                     IGNORE NULLS) OVER
-                     (PARTITION BY k ORDER BY mi ROWS BETWEEN UNBOUNDED
-                      PRECEDING AND CURRENT ROW) AS pm,
-                   first_value(v IGNORE NULLS) OVER
-                     (PARTITION BY k ORDER BY mi ROWS BETWEEN CURRENT ROW
-                      AND UNBOUNDED FOLLOWING) AS nv,
-                   first_value(CASE WHEN v IS NOT NULL THEN mi END
-                     IGNORE NULLS) OVER
-                     (PARTITION BY k ORDER BY mi ROWS BETWEEN CURRENT ROW
-                      AND UNBOUNDED FOLLOWING) AS nm
-            FROM j)
-          SELECT k AS o_orderpriority,
-                 make_date(CAST(mi // 12 AS INTEGER),
-                           CAST(mi % 12 AS INTEGER) + 1, 1) AS month,
-                 CASE WHEN v IS NOT NULL THEN v
-                      WHEN pv IS NOT NULL AND nv IS NOT NULL
-                        THEN pv + (nv - pv) *
-                             (CAST(mi - pm AS DOUBLE)
-                              / CAST(nm - pm AS DOUBLE))
-                      ELSE COALESCE(pv, nv) END AS value,
-                 v IS NOT NULL AS observed
-          FROM w""",
-
-    "x1_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_id,
-                COUNT(*) AS n_copies
-         FROM documents GROUP BY 1""",
-
-    // tok filters empty tokens (leading/repeated whitespace) — the same
-    // tokenization ShingleHashes applies on the engine side
-    "x4_dedup_jaccard" ->
-      s"""WITH $jaccardEdgeCtes
-          SELECT doc_a, doc_b, jaccard FROM edges""",
-
-    // x150 — the same exact-jaccard edges, the S-curve replayed with
-    // the IDENTICAL squaring chains (bit-exact IEEE multiplication
-    // order; no pow())
-    "x150_lsh_tuning" -> {
-      def pow2(e: String, k: Int): String =
-        (1 to k).foldLeft(e)((x, _) => s"($x * $x)")
-      def pDet(rLog2: Int, bLog2: Int): String =
-        s"(1.0 - ${pow2(s"(1.0 - ${pow2("jaccard", rLog2)})", bLog2)})"
-      s"""WITH $jaccardEdgeCtes
-          SELECT doc_a, doc_b, jaccard,
-                 ${pDet(2, 2)} AS p_b4r4,
-                 ${pDet(1, 3)} AS p_b8r2,
-                 ${pDet(3, 1)} AS p_b2r8,
-                 (${pDet(2, 2)} < 0.99) AS at_risk
-          FROM edges"""
-    },
-
-    // x151 — census → top-1000 head → the same least-squares algebra
-    // over ln(rank)/ln(count), decimal-routed sums, 6dp round
-    "x151_zipf_fit" ->
-      s"""WITH toks AS (
-            SELECT unnest(list_filter(
-              regexp_split_to_array(lower(text), '\\s+'),
-              t -> length(t) > 0)) AS term
-            FROM documents),
-          cnt AS (SELECT term, COUNT(*) AS n FROM toks GROUP BY term
-                  ORDER BY n DESC, term LIMIT 1000),
-          pts AS (SELECT ln(CAST(row_number() OVER
-                      (ORDER BY n DESC, term) AS DOUBLE)) AS x,
-                    ln(CAST(n AS DOUBLE)) AS y
-                  FROM cnt),
-          agg AS (SELECT CAST(COUNT(*) AS DOUBLE) AS k,
-                    ${graft.ops.Stable.sumSql("x", 18)} AS sx,
-                    ${graft.ops.Stable.sumSql("y", 18)} AS sy,
-                    ${graft.ops.Stable.sumSql("x * x", 18)} AS sxx,
-                    ${graft.ops.Stable.sumSql("x * y", 18)} AS sxy
-                  FROM pts)
-          SELECT CAST(k AS BIGINT) AS n_terms,
-                 round((k * sxy - sx * sy) / (k * sxx - sx * sx), 6)
-                   AS slope,
-                 round((sy - ((k * sxy - sx * sy) / (k * sxx - sx * sx))
-                        * sx) / k, 6) AS intercept
-          FROM agg""",
-
-    // x27 — the oracle computes components by a DIFFERENT algorithm
-    // (recursive-CTE transitive closure + min-reachable) than the engine's
-    // large-star/small-star contraction, so agreement is evidence of the
-    // clustering itself, not of a shared implementation
-    "x27_dup_clusters" ->
-      s"""WITH RECURSIVE $componentCtes
-          SELECT id AS doc_id, rep AS rep_id FROM cc""",
-
-    // x156 — the recursive closure joined to the quality CTEs; the
-    // keep-best argmax replayed as a (quality DESC, doc_id) window rank
-    "x156_cluster_quality" ->
-      s"""WITH RECURSIVE $componentCtes,
-          $qualityCtes,
-          per AS (SELECT c.rep AS cluster, q.doc_id, q.quality
-                  FROM cc c JOIN qual q ON q.doc_id = c.id),
-          agg AS (SELECT cluster, COUNT(*) AS cluster_size,
-                         MIN(quality) AS q_min, MAX(quality) AS q_max
-                  FROM per GROUP BY cluster),
-          best AS (SELECT cluster, doc_id AS best_doc
-                   FROM (SELECT cluster, doc_id,
-                           row_number() OVER (PARTITION BY cluster
-                             ORDER BY quality DESC, doc_id) AS rn
-                         FROM per) WHERE rn = 1)
-          SELECT a.cluster, a.cluster_size, a.q_min, a.q_max,
-                 a.q_max - a.q_min AS q_spread, b.best_doc
-          FROM agg a JOIN best b ON b.cluster = a.cluster""",
-
-    // x28 — the dedup product: drop non-representative cluster members,
-    // pass everything else through
-    "x28_dedup_corpus" ->
-      s"""WITH RECURSIVE $componentCtes
-          SELECT doc_id, lang, source, n_chars FROM documents
-          WHERE doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)""",
-
-    // x44 — the x27 recursive closure, aggregated to the size histogram
-    "x44_cluster_sizes" ->
-      s"""WITH RECURSIVE $componentCtes,
-          per AS (SELECT rep, COUNT(*) AS cluster_size FROM cc GROUP BY 1)
-          SELECT cluster_size, COUNT(*) AS n_clusters,
-                 CAST(SUM(cluster_size - 1) AS BIGINT) AS docs_removable
-          FROM per GROUP BY 1""",
-
-    // x45 — the fused per-source report: the same recursive closure, with
-    // cluster sizes keyed at the rep doc. Integer sums cast to BIGINT per
-    // the HUGEINT convention (Stable.sumSql scaladoc).
-    "x45_dedup_products" ->
-      s"""WITH RECURSIVE $componentCtes,
-          csizes AS (SELECT rep, COUNT(*) AS cluster_size FROM cc GROUP BY 1),
-          j AS (
-            SELECT d.doc_id, d.source, c.rep, s2.cluster_size AS rep_size
-            FROM documents d
-            LEFT JOIN cc c ON c.id = d.doc_id
-            LEFT JOIN csizes s2 ON s2.rep = d.doc_id)
-          SELECT source, COUNT(*) AS n_docs,
-                 CAST(SUM(CASE WHEN rep IS NULL OR rep = doc_id
-                               THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-                 CAST(SUM(CASE WHEN rep IS NOT NULL AND rep <> doc_id
-                               THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-                 CAST(SUM(CASE WHEN rep = doc_id THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_clusters,
-                 MAX(rep_size) AS max_cluster
-          FROM j GROUP BY source""",
-
-    // x43 — exact all-pairs census; a mixed (eval, train) pair drops its
-    // train member regardless of which side of doc_a < doc_b it is on
-    "x43_decontaminated_split" ->
-      """WITH tok AS (
-           SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS l
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, unnest(list_filter(
-             list_transform(range(1, greatest(len(l) - 1, 1)),
-               i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]),
-             x -> x IS NOT NULL)) AS shingle
-           FROM tok),
-         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-         inter AS (
-           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-           FROM sh x JOIN sh y ON x.shingle = y.shingle
-           WHERE x.doc_id < y.doc_id GROUP BY 1, 2),
-         sim AS (
-           SELECT doc_a, doc_b FROM inter
-           JOIN sizes sa ON sa.doc_id = doc_a
-           JOIN sizes sb ON sb.doc_id = doc_b
-           WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5),
-         drops AS (
-           SELECT CASE WHEN doc_a % 10 = 7 THEN doc_b ELSE doc_a END AS did
-           FROM sim WHERE (doc_a % 10 = 7) <> (doc_b % 10 = 7))
-         SELECT doc_id, lang, source, n_chars FROM documents
-         WHERE doc_id % 10 <> 7
-           AND doc_id NOT IN (SELECT did FROM drops)""",
-
-    // x42 — exact 3-gram all-pairs (the x2 CTEs) cut to pairs whose
-    // larger member belongs to the increment
-    "x42_incremental_dedup" ->
-      """WITH tok AS (
-           SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS l
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, unnest(list_filter(
-             list_transform(range(1, greatest(len(l) - 1, 1)),
-               i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]),
-             x -> x IS NOT NULL)) AS shingle
-           FROM tok),
-         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-         inter AS (
-           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-           FROM sh x JOIN sh y ON x.shingle = y.shingle
-           WHERE x.doc_id < y.doc_id GROUP BY 1, 2)
-         SELECT doc_a, doc_b,
-                CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-         FROM inter
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
-         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5
-           AND doc_b >= 400""",
-
-    // j9 — the oracle is the PLAIN containment join (the bucketing is a
-    // semantics-transparent rewrite, like j7's salt)
-    "j9_interval_join" ->
-      """WITH ev AS (
-           SELECT event_id, event_type, value, epoch_us(ts) AS ts_us
-           FROM events),
-         inc AS (
-           SELECT event_id AS incident_id, ts_us AS start_us,
-                  ts_us + 7200000000 AS end_us
-           FROM ev WHERE event_type = 'error'
-           ORDER BY value DESC, event_id LIMIT 20)
-         SELECT i.incident_id, e.event_id, e.event_type, e.ts_us
-         FROM ev e JOIN inc i
-           ON e.ts_us BETWEEN i.start_us AND i.end_us""",
-
-    // x41 — the x22 splitmix64 HUGEINT replay applied twice (the second
-    // round starts from the first round's unsigned result), Spark's
-    // signed pmod for the shard, identical (ord, id) window order
-    "x41_shuffle_shards" ->
-      s"""WITH m0 AS (SELECT doc_id, doc_id::HUGEINT AS u0 FROM documents),
-          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-          n1 AS (SELECT *, ${mulmodSql("xor(uh, uh // 1073741824::HUGEINT)", Mix64C1)} AS v1 FROM m3),
-          n2 AS (SELECT *, ${mulmodSql("xor(v1, v1 // 134217728::HUGEINT)", Mix64C2)} AS v2 FROM n1),
-          n3 AS (SELECT *, xor(v2, v2 // 2147483648::HUGEINT) AS vh FROM n2),
-          sgn AS (SELECT doc_id,
-                    CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                              THEN uh - 18446744073709551616::HUGEINT
-                              ELSE uh END AS BIGINT) AS sh,
-                    CAST(CASE WHEN vh >= 9223372036854775808::HUGEINT
-                              THEN vh - 18446744073709551616::HUGEINT
-                              ELSE vh END AS BIGINT) AS ord
-                  FROM n3)
-          SELECT doc_id, ((sh % 8) + 8) % 8 AS shard,
-                 CAST(row_number() OVER (PARTITION BY ((sh % 8) + 8) % 8
-                      ORDER BY ord, doc_id) AS BIGINT) AS pos
-          FROM sgn""",
-
-    // x40 — same census, same deterministic vocabulary cut, same
-    // per-doc re-aggregation
-    "x40_vocab_coverage" ->
-      """WITH toks AS (
-           SELECT doc_id, u.tok FROM (
-             SELECT doc_id, list_filter(
-               regexp_split_to_array(lower(text), '\s+'),
-               t -> length(t) > 0) AS l
-             FROM documents), unnest(l) AS u(tok)),
-         vocab AS (
-           SELECT tok FROM toks GROUP BY tok
-           ORDER BY COUNT(*) DESC, tok LIMIT 200)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                CAST(SUM(CASE WHEN tok IN (SELECT tok FROM vocab)
-                         THEN 0 ELSE 1 END) AS BIGINT) AS n_oov,
-                CAST(SUM(CASE WHEN tok IN (SELECT tok FROM vocab)
-                         THEN 0 ELSE 1 END) AS DOUBLE) / COUNT(*)
-                  AS oov_rate
-         FROM toks GROUP BY doc_id""",
-
-    // x39 — the Bloom pre-filter is semantics-transparent, so the oracle
-    // is the PLAIN drop-list subtraction (same kept corpus as x28)
-    "x39_bloom_anti" ->
-      s"""WITH RECURSIVE $componentCtes
-          SELECT doc_id, lang, source, n_chars FROM documents
-          WHERE doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)""",
-
-    "x5_ann_cosine" ->
-      s"""SELECT vec_id, round($cosSql, 6) AS cos FROM embeddings
-          ORDER BY $cosSql DESC, vec_id LIMIT 10""",
-
-    // x6 — the whole LSH index mirrored: the seeded hyperplanes are pasted
-    // as literals, bucket assignment recomputed per row, the probe set
-    // (query bucket + 2 hamming-1 neighbors) evaluated as an IN list, then
-    // exact top-k inside the probed buckets — closing the last no_oracle
-    // gap (the hash-defined path is deterministic, so it IS checkable).
-    "x6_ann_lsh" ->
-      s"""SELECT vec_id, round($cosSql, 6) AS cos FROM embeddings
-          WHERE $lshBucketSql IN (${lshProbeBuckets.mkString(", ")})
-          ORDER BY $cosSql DESC, vec_id LIMIT 10""",
-
-    // x17 — IVF mirrored end-to-end: same centroid set (vec_id < 16),
-    // same argmax assignment with (cos, cid) lexicographic tiebreak, same
-    // 2-probe + exact re-rank. Cosines use list_dot_product, bit-identical
-    // to the Spark fold (see cosSql); the 6dp round absorbs nothing here
-    // but keeps the x5 output convention.
-    "x17_ann_ivf" ->
-      s"""WITH cent AS (
-            SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
-            FROM embeddings WHERE vec_id < 16),
-          pairs AS (
-            SELECT e.vec_id, c.cid,
-                   list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(c.cvec, c.cvec))) AS cc
-            FROM embeddings e, cent c),
-          assign AS (
-            SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     row_number() OVER (PARTITION BY vec_id
-                                        ORDER BY cc DESC, cid DESC) AS rn
-              FROM pairs) WHERE rn = 1),
-          probes AS (
-            SELECT cid FROM cent
-            ORDER BY list_dot_product(cvec, $queryVectorSql)
-                     / (sqrt(list_dot_product(cvec, cvec))
-                        * sqrt(list_dot_product($queryVectorSql,
-                                                $queryVectorSql))) DESC,
-                     cid
-            LIMIT 2)
-          SELECT e.vec_id, round($cosSql, 6) AS cos
-          FROM embeddings e
-          JOIN assign a ON a.vec_id = e.vec_id
-          JOIN probes p ON p.cid = a.cid
-          ORDER BY $cosSql DESC, e.vec_id LIMIT 10""",
-
-    // x20 — embedding near-dup mirrored end-to-end: bucket assignment from
-    // the pasted hyperplane literals (the x6 technique), bucket-equality
-    // self-join with id_a < id_b, exact pairwise cosine (list_dot_product
-    // ≡ the Spark fold bit-for-bit, x5-verified), threshold on the exact
-    // value, 6dp round only for display.
-    "x20_embed_neardup" ->
-      s"""WITH b AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-                   $lshBucketSql AS bucket
-            FROM embeddings),
-          p AS (
-            SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-                   list_dot_product(x.v, y.v)
-                   / (sqrt(list_dot_product(x.v, x.v))
-                      * sqrt(list_dot_product(y.v, y.v))) AS cos
-            FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)
-          SELECT id_a, id_b, round(cos, 6) AS cos FROM p WHERE cos >= 0.3""",
-
-    // x21 — contamination mirrored on STRING shingles (the engine compares
-    // 64-bit shingle hashes; counts coincide because collisions are
-    // immaterial — the same equivalence x4 relies on)
-    "x21_contamination" ->
-      s"""WITH $contamCtes
-          SELECT doc_id, n_sh, n_hit, contamination FROM cont""",
-
-    // x22 — splitmix64 finalizer replayed in HUGEINT (the x3/x16 mulmod
-    // technique), then Spark's signed pmod(·,100) mirrored on the
-    // two's-complement reinterpretation
-    "x22_hash_sample" ->
-      s"""WITH m0 AS (SELECT *, doc_id::HUGEINT AS u0 FROM documents),
-          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-          sgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                      THEN uh - 18446744073709551616::HUGEINT
-                                      ELSE uh END AS BIGINT) AS sh FROM m3)
-          SELECT doc_id, lang, source, n_chars FROM sgn
-          WHERE ((sh % 100) + 100) % 100 < 10""",
-
-    // x24 — the same splitmix64 replay as x22, then the window rank with
-    // the identical (signed hash, doc_id) total order
-    "x24_stratified_sample" ->
-      s"""WITH m0 AS (SELECT *, doc_id::HUGEINT AS u0 FROM documents),
-          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-          sgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                      THEN uh - 18446744073709551616::HUGEINT
-                                      ELSE uh END AS BIGINT) AS sh FROM m3),
-          ranked AS (
-            SELECT doc_id, lang, source,
-                   row_number() OVER (PARTITION BY source
-                                      ORDER BY sh, doc_id) AS rk
-            FROM sgn)
-          SELECT doc_id, lang, source FROM ranked WHERE rk <= 20""",
-
-    // x25 — identical rank arithmetic: row_number in the same (value, id)
-    // order, pick at ceil(p·n) (both engines compute the same double
-    // product, so the same rank), conditional-max to columns
-    "x25_length_quantiles" ->
-      """WITH ranked AS (
-           SELECT lang, n_chars,
-                  row_number() OVER (PARTITION BY lang
-                                     ORDER BY n_chars, doc_id) AS rn,
-                  COUNT(*) OVER (PARTITION BY lang) AS n
-           FROM documents),
-         picks AS (
-           SELECT lang, n_chars, p
-           FROM ranked CROSS JOIN (VALUES (0.25), (0.5), (0.75), (0.95)) AS ps(p)
-           WHERE rn = CEIL(p * n))
-         SELECT lang,
-           MAX(CASE WHEN p = 0.25 THEN n_chars END) AS q25,
-           MAX(CASE WHEN p = 0.5  THEN n_chars END) AS q50,
-           MAX(CASE WHEN p = 0.75 THEN n_chars END) AS q75,
-           MAX(CASE WHEN p = 0.95 THEN n_chars END) AS q95
-         FROM picks GROUP BY lang""",
-
-    // x26 — identical window cumsum + integer division; token count is
-    // the x9 whitespace mirror
-    "x26_pack_sequences" ->
-      """WITH toks AS (
-           SELECT doc_id, source,
-                  CAST(len(regexp_split_to_array(lower(text), '\s+'))
-                       AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, source, n_tokens,
-                  SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                      ROWS UNBOUNDED PRECEDING) AS cum
-           FROM toks)
-         SELECT doc_id, source, n_tokens,
-                CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id
-         FROM c""",
-
-    // x29 — identical tokenization, integer tf/df counts, and one IEEE
-    // division (correctly rounded in both engines, so the score doubles
-    // are bit-identical and the (score DESC, term) rank order coincides)
-    "x29_salient_terms" ->
-      """WITH toks AS (
-           SELECT doc_id, unnest(list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0)) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-         dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-         scored AS (
-           SELECT t.doc_id, t.term, t.tf, d.df,
-                  CAST(t.tf AS DOUBLE) / d.df AS score
-           FROM tf t JOIN dfreq d ON d.term = t.term),
-         ranked AS (
-           SELECT *, row_number() OVER (PARTITION BY doc_id
-                                        ORDER BY score DESC, term) AS rk
-           FROM scored)
-         SELECT doc_id, term, tf, df, score FROM ranked WHERE rk <= 3""",
-
-    // x30 — same gram construction as x4's shingle CTE but keeping the
-    // STRING; distinct per doc so COUNT(*) is document frequency; the
-    // (df DESC, gram) tiebreak pins the top-20 cut deterministically
-    "x30_boilerplate_ngrams" ->
-      """WITH tok AS (
-           SELECT doc_id,
-                  list_filter(regexp_split_to_array(lower(text), '\s+'),
-                              t -> length(t) > 0) AS l
-           FROM documents),
-         g AS (
-           SELECT DISTINCT doc_id, unnest(list_filter(
-             list_transform(range(1, greatest(len(l) - 1, 1)),
-               i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]),
-             x -> x IS NOT NULL)) AS gram
-           FROM tok)
-         SELECT gram, COUNT(*) AS df FROM g
-         GROUP BY 1 ORDER BY df DESC, gram LIMIT 20""",
-
-    // x23 — repetition ratio from unhashed 2-grams; exact rational both
-    // sides, so the keep cut at 0.5 is bit-stable
-    "x23_repetition" ->
-      s"""WITH $repCtes
-          SELECT doc_id, n_grams, n_distinct, rep_ratio,
-                 rep_ratio <= 0.5 AS keep
-          FROM rep""",
-
-    // x31 — DuckDB ships nfc_normalize (UAX #15, same normalization the
-    // JDK Normalizer implements); the injected tail is rebuilt from chr()
-    // codepoints (233 = é composed, 769 = combining acute, 9/160/11 =
-    // tab/NBSP/VT), then the identical strip-and-collapse regex chain runs
-    "x31_normalize" ->
-      """SELECT doc_id,
-           trim(regexp_replace(regexp_replace(
-             nfc_normalize(text || '  caf' || chr(233) || ' cafe' ||
-                           chr(769) || chr(9) || 'den' || chr(160) || 'x' ||
-                           chr(11) || '.'),
-             '[\x00-\x1f\x7f\xa0]', ' ', 'g'), ' +', ' ', 'g')) AS text
-         FROM documents""",
-
-    // x32 — identical plants from doc_id arithmetic, identical regex
-    // chain (the patterns sit in the Java/RE2-common subset), same order:
-    // emails, then IPv4, then +-prefixed phones
-    "x32_pii_redact" ->
-      """SELECT doc_id,
-           regexp_replace(regexp_replace(regexp_replace(
-             text || ' ' || 'user' || doc_id || '@example.com' ||
-             ' ' || '10.0.' || (doc_id % 256) || '.' || (doc_id % 100) ||
-             ' ' || '+1 (202) 555-0' ||
-             lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0'),
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
-             '\+[0-9][0-9 ()./-]{5,18}[0-9]', '<PHONE>', 'g') AS text
-         FROM documents""",
-
-    // x176 — the repair outcome closed-form per plant branch: the
-    // engine's real byte-map + strict-UTF-8 decode must land exactly
-    // on the chr()-built repaired literals (branches 0/1) or leave the
-    // truncated-tail plant untouched (branch 2)
-    "x176_mojibake_repair" ->
-      """SELECT doc_id,
-           text || CASE CAST(doc_id % 3 AS INTEGER)
-             WHEN 0 THEN ' caf' || chr(233) || ' m' || chr(252) || 'nchen'
-             WHEN 1 THEN ' it' || chr(8217) || 's fine'
-             ELSE ' bad' || chr(195) END AS text,
-           doc_id % 3 <> 2 AS repaired
-         FROM documents""",
-
-    // x181 — three composed splitmix64 chains replayed in HUGEINT (the
-    // x22 technique), then the same signed-pmod cuts and 1-based substr
-    // algebra; the PSM sentinel order is pinned byte for byte
-    "x181_fim_transform" ->
-      s"""WITH f0 AS (SELECT doc_id, text,
-                 CAST(length(text) AS BIGINT) AS n,
-                 doc_id::HUGEINT AS u0 FROM documents),
-          ${smixCtes("f0", "u0", "ua", "fa")},
-          ${smixCtes("fa3", "ua", "ub", "fb")},
-          ${smixCtes("fb3", "ub", "uc", "fc")},
-          sgn AS (SELECT doc_id, text, n,
-                    ${signedSql("ua")} AS sa,
-                    ${signedSql("ub")} AS sb,
-                    ${signedSql("uc")} AS sc
-                  FROM fc3),
-          cuts AS (SELECT doc_id, text, n,
-                     ((sa % (n + 1)) + (n + 1)) % (n + 1) AS ca,
-                     ((sb % (n + 1)) + (n + 1)) % (n + 1) AS cb,
-                     ((sc % 100) + 100) % 100 < 50 AS fim_applied
-                   FROM sgn),
-          lh AS (SELECT doc_id, text, n, fim_applied,
-                   least(ca, cb) AS lo, greatest(ca, cb) AS hi
-                 FROM cuts)
-          SELECT doc_id, fim_applied, lo AS cut_lo, hi AS cut_hi,
-                 CASE WHEN fim_applied THEN
-                   '<|fim_prefix|>' ||
-                   substr(text, 1, CAST(lo AS INTEGER)) ||
-                   '<|fim_suffix|>' ||
-                   substr(text, CAST(hi + 1 AS INTEGER),
-                          CAST(n - hi AS INTEGER)) ||
-                   '<|fim_middle|>' ||
-                   substr(text, CAST(lo + 1 AS INTEGER),
-                          CAST(hi - lo AS INTEGER))
-                 ELSE text END AS text
-          FROM lh""",
-
-    // x182 — the same whitespace tokens, literal IN-list, distinct-doc
-    // and occurrence counts (absent terms emit no row — inner semantics)
-    "x182_blocklist_census" ->
-      """WITH tok AS (
-           SELECT doc_id, unnest(list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0)) AS term
-           FROM documents)
-         SELECT term, COUNT(DISTINCT doc_id) AS n_docs,
-                COUNT(*) AS n_occurrences
-         FROM tok WHERE term IN ('hash', 'vector', 'stream', 'quantum')
-         GROUP BY 1""",
-
-    // x183 — the entropy kernel replayed: per-code-point counts, the
-    // Σ c·ln c fold in the SAME ascending character order (so only
-    // per-term libm ulps differ — absorbed by the 6-dp round), the
-    // identical (ln n − S/n)/ln 2 parenthesization, inclusive tails
-    "x183_entropy_gate" ->
-      """WITH ch AS (
-           SELECT doc_id, unnest(list_transform(
-             range(1, length(text) + 1),
-             i -> substr(text, CAST(i AS INTEGER), 1))) AS c
-           FROM documents WHERE length(text) > 0),
-         cnt AS (SELECT doc_id, c, CAST(COUNT(*) AS DOUBLE) AS k
-                 FROM ch GROUP BY 1, 2),
-         agg AS (SELECT doc_id,
-                   CAST(SUM(k) AS BIGINT) AS n_chars,
-                   CAST(COUNT(*) AS BIGINT) AS n_distinct,
-                   SUM(k) AS nd,
-                   list_reduce(
-                     list_prepend(0.0::DOUBLE, list(k * ln(k) ORDER BY c)),
-                     (a, b) -> a + b) AS s
-                 FROM cnt GROUP BY 1)
-         SELECT doc_id, n_chars, n_distinct,
-                round((ln(nd) - s / nd) / ln(2), 6) AS ent_bits,
-                round((ln(nd) - s / nd) / ln(2), 6) >= 3.5 AND
-                round((ln(nd) - s / nd) / ln(2), 6) <= 5.0 AS keep
-         FROM agg""",
-
-    // x185 — the per-block splitmix64 chains replayed through staged
-    // list_transform lambdas (one stage per finalizer step — nesting
-    // the chain would duplicate the HUGEINT algebra 16x), then the
-    // same inclusive-slice reassembly and sentinel numbering
-    "x185_span_corrupt" ->
-      s"""WITH tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         base AS (SELECT doc_id, ts, len(ts) AS n, len(ts) // 20 AS nb
-                  FROM tok),
-         h0 AS (SELECT *, list_transform(range(0, nb),
-                  b -> (doc_id * 1048576 + b)::HUGEINT) AS u0s FROM base),
-         h1 AS (SELECT *, list_transform(u0s, u -> ${mulmodSql(
-             "xor(u, u // 1073741824::HUGEINT)", Mix64C1)}) AS u1s FROM h0),
-         h2 AS (SELECT *, list_transform(u1s, u -> ${mulmodSql(
-             "xor(u, u // 134217728::HUGEINT)", Mix64C2)}) AS u2s FROM h1),
-         h3 AS (SELECT *, list_transform(u2s,
-                  u -> xor(u, u // 2147483648::HUGEINT)) AS uhs FROM h2),
-         offs AS (SELECT doc_id, ts, n, nb,
-                    list_transform(uhs,
-                      u -> ((${signedSql("u")} % 18) + 18) % 18) AS os
-                  FROM h3),
-         built AS (SELECT doc_id, n, nb,
-           array_to_string(
-             flatten(list_transform(range(0, nb), b ->
-               ts[CAST(b*20+1 AS INTEGER):CAST(b*20 + os[b+1] AS INTEGER)]
-               || ['<extra_id_' || b || '>']
-               || ts[CAST(b*20 + os[b+1] + 4 AS INTEGER):CAST((b+1)*20 AS INTEGER)]))
-             || ts[CAST(nb*20+1 AS INTEGER):CAST(n AS INTEGER)],
-             ' ') AS inputs,
-           array_to_string(
-             flatten(list_transform(range(0, nb), b ->
-               ['<extra_id_' || b || '>']
-               || ts[CAST(b*20 + os[b+1] + 1 AS INTEGER):CAST(b*20 + os[b+1] + 3 AS INTEGER)]))
-             || ['<extra_id_' || nb || '>'],
-             ' ') AS targets
-           FROM offs)
-         SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-                CAST(nb AS BIGINT) AS n_spans, inputs, targets
-         FROM built""",
-
-    // x188 — mode and prefix cut through composed smix chains (per-row),
-    // block offsets through the x185 staged lambdas with mode-CASEd
-    // geometry (bb/bl/nb columns close over the lambdas); every branch
-    // is total so the vectorized CASE can evaluate either side safely
-    "x188_ul2_denoisers" ->
-      s"""WITH tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         u0 AS (SELECT doc_id, ts, len(ts) AS n,
-                  (doc_id + 1000003)::HUGEINT AS um,
-                  (doc_id * 1048576)::HUGEINT AS uc
-                FROM tok),
-         ${smixCtes("u0", "um", "uhm", "ga")},
-         ${smixCtes("ga3", "uc", "uhc", "gb")},
-         modal0 AS (SELECT doc_id, ts, n,
-             CAST(((${signedSql("uhm")} % 3) + 3) % 3 AS INTEGER) AS mode,
-             CAST(((${signedSql("uhc")} % (n + 1)) + (n + 1)) % (n + 1)
-                  AS INTEGER) AS scut
-           FROM gb3),
-         modal AS (SELECT *,
-             CASE mode WHEN 0 THEN n // 20 WHEN 2 THEN n // 16
-                       ELSE 0 END AS nb,
-             CASE mode WHEN 0 THEN 20 WHEN 2 THEN 16 ELSE 1 END AS bb,
-             CASE mode WHEN 0 THEN 3 WHEN 2 THEN 8 ELSE 0 END AS bl
-           FROM modal0),
-         g0 AS (SELECT *, list_transform(range(0, nb),
-                  b -> (doc_id * 1048576 + b)::HUGEINT) AS l0 FROM modal),
-         g1 AS (SELECT *, list_transform(l0, u -> ${mulmodSql(
-             "xor(u, u // 1073741824::HUGEINT)", Mix64C1)}) AS l1 FROM g0),
-         g2 AS (SELECT *, list_transform(l1, u -> ${mulmodSql(
-             "xor(u, u // 134217728::HUGEINT)", Mix64C2)}) AS l2 FROM g1),
-         g3 AS (SELECT *, list_transform(l2,
-                  u -> xor(u, u // 2147483648::HUGEINT)) AS lh FROM g2),
-         goffs AS (SELECT doc_id, ts, n, mode, scut, nb, bb, bl,
-             list_transform(lh,
-               u -> ((${signedSql("u")} % (bb - bl + 1)) + (bb - bl + 1))
-                    % (bb - bl + 1)) AS os
-           FROM g3),
-         built AS (SELECT doc_id, mode, n, nb,
-             CASE WHEN mode = 1
-               THEN array_to_string(
-                 ts[1:CAST(scut AS INTEGER)] || ['<extra_id_0>'], ' ')
-               ELSE array_to_string(
-                 flatten(list_transform(range(0, nb), b ->
-                   ts[CAST(b*bb+1 AS INTEGER):CAST(b*bb + os[b+1] AS INTEGER)]
-                   || ['<extra_id_' || b || '>']
-                   || ts[CAST(b*bb + os[b+1] + bl + 1 AS INTEGER):CAST((b+1)*bb AS INTEGER)]))
-                 || ts[CAST(nb*bb+1 AS INTEGER):CAST(n AS INTEGER)], ' ')
-             END AS inputs,
-             CASE WHEN mode = 1
-               THEN array_to_string(
-                 ['<extra_id_0>'] ||
-                 ts[CAST(scut+1 AS INTEGER):CAST(n AS INTEGER)], ' ')
-               ELSE array_to_string(
-                 flatten(list_transform(range(0, nb), b ->
-                   ['<extra_id_' || b || '>']
-                   || ts[CAST(b*bb + os[b+1] + 1 AS INTEGER):CAST(b*bb + os[b+1] + bl AS INTEGER)]))
-                 || ['<extra_id_' || nb || '>'], ' ')
-             END AS targets
-           FROM goffs)
-         SELECT doc_id, mode, CAST(n AS BIGINT) AS n_tokens,
-                CAST(CASE WHEN mode = 1 THEN 1 ELSE nb END AS BIGINT)
-                  AS n_spans,
-                inputs, targets
-         FROM built""",
-
-    // x189 — the same bucket/batch windows replayed: unfiltered token
-    // count (the x9 convention), row_number batching in (source,
-    // bucket, doc_id) order, waste = cnt·max − sum per batch
-    "x189_length_batching" ->
-      """WITH lb AS (
-           SELECT source, doc_id,
-             CAST(len(regexp_split_to_array(lower(text), '\s+'))
-                  AS BIGINT) AS nt
-           FROM documents),
-         lbb AS (SELECT *, CAST(nt // 16 AS INTEGER) AS bucket FROM lb),
-         wb AS (SELECT source, bucket, nt,
-                  CAST((ROW_NUMBER() OVER (PARTITION BY source, bucket
-                        ORDER BY doc_id) - 1) // 8 AS INTEGER) AS batch
-                FROM lbb),
-         bb AS (SELECT source, bucket, batch, COUNT(*) AS cnt,
-                       MAX(nt) AS mx, CAST(SUM(nt) AS BIGINT) AS sm
-                FROM wb GROUP BY 1, 2, 3),
-         bro AS (SELECT source, CAST(bucket AS BIGINT) AS bucket,
-                        CAST(SUM(cnt) AS BIGINT) AS n_docs,
-                        COUNT(*) AS n_batches,
-                        CAST(SUM(cnt * mx - sm) AS BIGINT) AS waste_tokens
-                 FROM bb GROUP BY 1, 2),
-         sb AS (SELECT source, nt,
-                  CAST((ROW_NUMBER() OVER (PARTITION BY source
-                        ORDER BY doc_id) - 1) // 8 AS INTEGER) AS batch
-                FROM lb),
-         sbb AS (SELECT source, batch, COUNT(*) AS cnt, MAX(nt) AS mx,
-                        CAST(SUM(nt) AS BIGINT) AS sm
-                 FROM sb GROUP BY 1, 2),
-         bl AS (SELECT source,
-                  CAST(SUM(cnt * mx - sm) AS BIGINT) AS baseline_waste_tokens
-                FROM sbb GROUP BY 1)
-         SELECT b.source, b.bucket, b.n_docs, b.n_batches, b.waste_tokens,
-                l.baseline_waste_tokens
-         FROM bro b JOIN bl l ON l.source = b.source""",
-
-    // x190 — the datasheet rollup replayed on the x68 gopher CTEs: the
-    // same two-level (source, lang) → source aggregation, the entropy
-    // fold ascending by lang (the x183 replay-order rule), exact
-    // integer pass fraction
-    "x190_data_card" ->
-      s"""WITH ${gopherCtesOver("documents", "text")},
-          db AS (SELECT d.source, d.lang, d.doc_id,
-                   CAST(len(list_filter(
-                     regexp_split_to_array(lower(d.text), '\\s+'),
-                     t -> length(t) > 0)) AS BIGINT) AS nt,
-                   CAST(length(d.text) AS BIGINT) AS nc,
-                   (g.r_word_count AND g.r_mean_word_len AND g.r_symbol_ratio
-                    AND g.r_alpha_words AND g.r_stopwords) AS keep
-                 FROM documents d JOIN g2 g ON g.doc_id = d.doc_id),
-          dl AS (SELECT source, lang, COUNT(*) AS c,
-                        CAST(SUM(nt) AS BIGINT) AS nt,
-                        CAST(SUM(nc) AS BIGINT) AS nc,
-                        CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END)
-                             AS BIGINT) AS nk
-                 FROM db GROUP BY 1, 2),
-          ds AS (SELECT source,
-                   CAST(SUM(c) AS BIGINT) AS n_docs,
-                   CAST(SUM(nt) AS BIGINT) AS n_tokens,
-                   CAST(SUM(nc) AS BIGINT) AS n_chars,
-                   COUNT(*) AS n_langs,
-                   CAST(SUM(nk) AS BIGINT) AS n_keep,
-                   list_reduce(list_prepend(0.0::DOUBLE,
-                     list(c::DOUBLE * ln(c::DOUBLE) ORDER BY lang)),
-                     (a, b) -> a + b) AS s
-                 FROM dl GROUP BY 1)
-          SELECT source, n_docs, n_tokens, n_chars, n_langs,
-                 round((ln(n_docs::DOUBLE) - s / n_docs::DOUBLE) / ln(2), 6)
-                   AS lang_entropy,
-                 n_keep::DOUBLE / n_docs::DOUBLE AS gopher_keep_frac
-          FROM ds""",
-
-    // x192 — both proven training/apply chains composed in one WITH
-    // (the word chain's t* CTEs and the byte chain's b* CTEs are
-    // disjoint by prefix), joined per doc; one correctly-rounded ratio
-    "x192_tokenizer_compare" ->
-      s"""WITH ${bpeTrainCtes(12)},
-          ${byteTrainCtes(12)},
-          wagg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_bpe_tokens
-                   FROM twordocc o JOIN tw12 v USING (w)
-                   GROUP BY o.doc_id),
-          bagg AS (SELECT o.doc_id, CAST(SUM(v.nb) AS BIGINT) AS n_bytes,
-                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_byte_tokens
-                   FROM boc o JOIN btw12 v USING (w)
-                   GROUP BY o.doc_id)
-          SELECT w.doc_id, w.n_words, w.n_bpe_tokens, b.n_bytes,
-                 b.n_byte_tokens,
-                 CAST(b.n_byte_tokens AS DOUBLE) /
-                   CAST(w.n_bpe_tokens AS DOUBLE) AS byte_per_word_ratio
-          FROM wagg w JOIN bagg b USING (doc_id)""",
-
-    // x193 — the same df census and position-ordered reassembly: terms
-    // with fewer than 3 distinct docs become <unk>; string keys
-    // coincide with the engine's term keys verbatim
-    "x193_rare_token_scrub" ->
-      """WITH rt0 AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM documents),
-         rt AS (SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
-                       l[CAST(u.i + 1 AS INTEGER)] AS term
-                FROM rt0, unnest(range(0, len(l))) AS u(i)),
-         rdf AS (SELECT term, COUNT(DISTINCT doc_id) AS df
-                 FROM rt GROUP BY 1),
-         rj AS (SELECT r.doc_id, r.pos,
-                  CASE WHEN d.df < 3 THEN '<unk>' ELSE r.term END AS term2,
-                  CASE WHEN d.df < 3 THEN 1 ELSE 0 END AS sc
-                FROM rt r JOIN rdf d ON d.term = r.term)
-         SELECT doc_id, COUNT(*) AS n_tokens,
-                CAST(SUM(sc) AS BIGINT) AS n_scrubbed,
-                string_agg(term2, ' ' ORDER BY pos) AS text
-         FROM rj GROUP BY 1""",
-
-    // x194 — blocked Levenshtein nearest neighbor: DuckDB recomputes
-    // edit distance with its own levenshtein(); blocking (first token,
-    // length div 16, group cap 256) replayed verbatim; argmin tiebreak
-    // = (distance, neighbor id) via row_number
-    "x194_edit_neardup" ->
-      """WITH ek AS (
-           SELECT doc_id, text AS txt,
-                  list_filter(regexp_split_to_array(lower(text), '\s+'),
-                              t -> length(t) > 0)[1] AS k1,
-                  length(text) // 16 AS k2
-           FROM documents),
-         eg AS (SELECT k1, k2 FROM ek GROUP BY 1, 2
-                HAVING COUNT(*) > 1 AND COUNT(*) <= 256),
-         en AS (SELECT a.doc_id, b.doc_id AS nb,
-                       CAST(levenshtein(a.txt, b.txt) AS BIGINT) AS d
-                FROM ek a
-                JOIN eg g ON g.k1 IS NOT DISTINCT FROM a.k1
-                         AND g.k2 = a.k2
-                JOIN ek b ON b.k1 IS NOT DISTINCT FROM a.k1
-                         AND b.k2 = a.k2 AND b.doc_id <> a.doc_id)
-         SELECT doc_id, d AS min_edit_dist, nb AS neighbor_id
-         FROM (SELECT doc_id, d, nb, ROW_NUMBER() OVER (
-                 PARTITION BY doc_id ORDER BY d, nb) AS rn FROM en)
-         WHERE rn = 1""",
-
-    // x209 — checkpoints from the row count (same ceil arithmetic),
-    // first-occurrence vocab counts, prefix token counts, the same
-    // scaled-ln coordinates and exact moments
-    "x209_heaps_fit" ->
-      """WITH hcnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS nd FROM documents),
-        |hk AS (SELECT CAST(ceil(0.05 * CAST(nd AS DOUBLE)) AS BIGINT) AS k1,
-        |              CAST(ceil(0.1 * CAST(nd AS DOUBLE)) AS BIGINT) AS k2,
-        |              CAST(ceil(0.2 * CAST(nd AS DOUBLE)) AS BIGINT) AS k3,
-        |              CAST(ceil(0.4 * CAST(nd AS DOUBLE)) AS BIGINT) AS k4,
-        |              CAST(ceil(0.8 * CAST(nd AS DOUBLE)) AS BIGINT) AS k5
-        |       FROM hcnt),
-        |htok AS (SELECT doc_id, unnest(list_filter(
-        |           regexp_split_to_array(lower(text), '\s+'),
-        |           x -> length(x) > 0)) AS term
-        |         FROM documents),
-        |hfir AS (SELECT term, MIN(doc_id) AS fid FROM htok GROUP BY 1),
-        |hv AS (SELECT
-        |         CAST(SUM(CASE WHEN fid < k.k1 THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |         CAST(SUM(CASE WHEN fid < k.k2 THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |         CAST(SUM(CASE WHEN fid < k.k3 THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-        |         CAST(SUM(CASE WHEN fid < k.k4 THEN 1 ELSE 0 END) AS BIGINT) AS v4,
-        |         CAST(SUM(CASE WHEN fid < k.k5 THEN 1 ELSE 0 END) AS BIGINT) AS v5
-        |       FROM hfir, hk k),
-        |hn AS (SELECT
-        |         CAST(SUM(CASE WHEN doc_id < k.k1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |         CAST(SUM(CASE WHEN doc_id < k.k2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-        |         CAST(SUM(CASE WHEN doc_id < k.k3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-        |         CAST(SUM(CASE WHEN doc_id < k.k4 THEN 1 ELSE 0 END) AS BIGINT) AS n4,
-        |         CAST(SUM(CASE WHEN doc_id < k.k5 THEN 1 ELSE 0 END) AS BIGINT) AS n5
-        |       FROM htok, hk k),
-        |hp AS (SELECT n1 AS nn, v1 AS vv FROM hv, hn
-        |       UNION ALL SELECT n2, v2 FROM hv, hn
-        |       UNION ALL SELECT n3, v3 FROM hv, hn
-        |       UNION ALL SELECT n4, v4 FROM hv, hn
-        |       UNION ALL SELECT n5, v5 FROM hv, hn),
-        |hx AS (SELECT
-        |         CAST(round(ln(CAST(nn AS DOUBLE)) * 1e9, 0) AS BIGINT) AS xi,
-        |         CAST(round(ln(CAST(vv AS DOUBLE)) * 1e9, 0) AS BIGINT) AS yi
-        |       FROM hp),
-        |hs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |              CAST(SUM(xi) AS BIGINT) AS sx,
-        |              CAST(SUM(yi) AS BIGINT) AS sy,
-        |              SUM(xi::HUGEINT * yi::HUGEINT) AS sxy,
-        |              SUM(xi::HUGEINT * xi::HUGEINT) AS sxx
-        |       FROM hx)
-        |SELECT CAST(5 AS BIGINT) AS n_points, hv.v5 AS v_last,
-        |       hn.n5 AS n_last,
-        |       round(CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
-        |               AS DOUBLE)
-        |             / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
-        |               AS DOUBLE), 9) AS beta,
-        |       round(((CAST(sy AS DOUBLE)
-        |               - (CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
-        |                    AS DOUBLE)
-        |                  / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
-        |                    AS DOUBLE)) * CAST(sx AS DOUBLE))
-        |              / CAST(n AS DOUBLE)) / 1e9, 9) AS ln_c
-        |FROM hs, hv, hn""".stripMargin,
-
-    // x208 — the same census, (freq DESC, term) cut, scaled-integer
-    // ln coordinates, exact HUGEINT moments, identical division and
-    // intercept parenthesization
-    "x208_zipf_fit" ->
-      """WITH zc AS (
-        |  SELECT t.term, CAST(COUNT(*) AS BIGINT) AS freq
-        |  FROM (SELECT unnest(list_filter(
-        |          regexp_split_to_array(lower(text), '\s+'),
-        |          x -> length(x) > 0)) AS term
-        |        FROM documents) t
-        |  GROUP BY 1),
-        |zt AS (SELECT term, freq, ROW_NUMBER() OVER (
-        |         ORDER BY freq DESC, term) AS rank
-        |       FROM zc QUALIFY rank <= 200),
-        |zp AS (SELECT
-        |         CAST(round(ln(CAST(rank AS DOUBLE)) * 1e9, 0) AS BIGINT)
-        |           AS xi,
-        |         CAST(round(ln(CAST(freq AS DOUBLE)) * 1e9, 0) AS BIGINT)
-        |           AS yi
-        |       FROM zt),
-        |zs AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |              CAST(SUM(xi) AS BIGINT) AS sx,
-        |              CAST(SUM(yi) AS BIGINT) AS sy,
-        |              SUM(xi::HUGEINT * yi::HUGEINT) AS sxy,
-        |              SUM(xi::HUGEINT * xi::HUGEINT) AS sxx
-        |       FROM zp)
-        |SELECT n AS n_ranks,
-        |       round(CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
-        |               AS DOUBLE)
-        |             / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
-        |               AS DOUBLE), 9) AS slope,
-        |       round(((CAST(sy AS DOUBLE)
-        |               - (CAST(n::HUGEINT * sxy - sx::HUGEINT * sy::HUGEINT
-        |                    AS DOUBLE)
-        |                  / CAST(n::HUGEINT * sxx - sx::HUGEINT * sx::HUGEINT
-        |                    AS DOUBLE)) * CAST(sx AS DOUBLE))
-        |              / CAST(n AS DOUBLE)) / 1e9, 9) AS ln_intercept
-        |FROM zs""".stripMargin,
-
-    // x207 — the splitmix assignment (the x24 chain), the same
-    // (hash, id)-ordered filler concatenation, budget slice, and
-    // depth-swept splice; short evals dropped by the same len gate
-    "x207_needle_evals" ->
-      s"""WITH nm0 AS (SELECT doc_id, text, doc_id::HUGEINT AS u0 FROM documents),
-          nm1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM nm0),
-          nm2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM nm1),
-          nm3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM nm2),
-          nsgn AS (SELECT doc_id, text,
-                     CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                               THEN uh - 18446744073709551616::HUGEINT
-                               ELSE uh END AS BIGINT) AS sh FROM nm3),
-          nas AS (SELECT doc_id, sh, ((sh % 20) + 20) % 20 AS ev,
-                    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                t -> length(t) > 0) AS ts
-                  FROM nsgn),
-          ncum AS (SELECT *, SUM(len(ts)) OVER (
-                     PARTITION BY ev ORDER BY sh, doc_id
-                     ROWS UNBOUNDED PRECEDING) AS cum
-                   FROM nas),
-          nkept AS (SELECT * FROM ncum WHERE cum - len(ts) < 256),
-          nfil AS (SELECT ev,
-                     flatten(list(ts ORDER BY sh, doc_id))[1:256] AS filler
-                   FROM nkept GROUP BY ev),
-          ngood AS (SELECT * FROM nfil WHERE len(filler) = 256),
-          nout AS (SELECT ev,
-                     CAST(floor(CAST(ev % 5 AS DOUBLE) / 4.0 * 256)
-                       AS INTEGER) AS np,
-                     filler FROM ngood)
-          SELECT ev AS eval_id, np AS needle_pos,
-                 ev * 7 + 13 AS answer,
-                 array_to_string(list_concat(list_concat(
-                   filler[1:np],
-                   ['the', 'magic', 'number', 'is',
-                    CAST(ev * 7 + 13 AS VARCHAR)]),
-                   filler[np + 1:256]), ' ') AS text,
-                 CAST(261 AS BIGINT) AS n_tokens
-          FROM nout""",
-
-    // x205 — the x144 chain with the ARPA quantization wrapper:
-    // pq = round(10^round(log10(p), 9), 9); on the training corpus
-    // every bigram is in the model, so only the present branch fires.
-    // A quantized probability that floors to exact 0 (possible below
-    // 5e-10 off-fixture) falls back to the unquantized 10^lp — the
-    // engine's guard, mirrored here
-    "x205_kn_arpa_stored" ->
-      """WITH tok AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                             t -> length(t) > 0) AS ts
-        |  FROM documents),
-        |occ AS (
-        |  SELECT doc_id, w1, w2, COUNT(*) AS m
-        |  FROM (SELECT doc_id, bg[1] AS w1, bg[2] AS w2
-        |        FROM (SELECT doc_id,
-        |                     unnest(list_transform(range(1, len(ts)), i ->
-        |                       [ts[CAST(i AS INTEGER)],
-        |                        ts[CAST(i + 1 AS INTEGER)]])) AS bg
-        |              FROM tok))
-        |  GROUP BY doc_id, w1, w2),
-        |c2t AS (SELECT w1, w2, CAST(SUM(m) AS BIGINT) AS c2
-        |        FROM occ GROUP BY w1, w2),
-        |h1 AS (SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1,
-        |              CAST(COUNT(*) AS BIGINT) AS n1f
-        |       FROM c2t GROUP BY w1),
-        |p2 AS (SELECT w2, CAST(COUNT(*) AS BIGINT) AS n1p
-        |       FROM c2t GROUP BY w2),
-        |tt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n1tot FROM c2t),
-        |q2 AS (
-        |  SELECT w1, w2,
-        |         CASE WHEN round(pow(10.0, lp), 9) > 0
-        |              THEN round(pow(10.0, lp), 9)
-        |              ELSE pow(10.0, lp) END AS pq
-        |  FROM (
-        |    SELECT c.w1, c.w2,
-        |           round(log10(
-        |             GREATEST(CAST(c.c2 AS DOUBLE) - 0.75, 0.0)
-        |               / CAST(h.c1 AS DOUBLE)
-        |             + ((0.75 * CAST(h.n1f AS DOUBLE))
-        |                / CAST(h.c1 AS DOUBLE))
-        |               * (CAST(p.n1p AS DOUBLE)
-        |                  / CAST(tt.n1tot AS DOUBLE))), 9) AS lp
-        |    FROM c2t c
-        |    JOIN h1 h ON h.w1 = c.w1
-        |    JOIN p2 p ON p.w2 = c.w2
-        |    CROSS JOIN tt)),
-        |valued AS (
-        |  SELECT o.doc_id, o.w1, o.w2, o.m,
-        |         CAST(o.m AS DOUBLE) / q.pq AS val
-        |  FROM occ o JOIN q2 q ON q.w1 = o.w1 AND q.w2 = o.w2)
-        |SELECT doc_id,
-        |       CAST(SUM(m) AS BIGINT) AS n_bigrams,
-        |       list_reduce(list(val ORDER BY w1, w2), (a, b) -> a + b)
-        |         / CAST(SUM(m) AS BIGINT) AS kn_score_q
-        |FROM valued GROUP BY doc_id""".stripMargin,
-
-    // x204 — the x8 quality CTEs feed the SCALED-INTEGER moment route:
-    // ri = round(round(r,9)*1e9), exact HUGEINT S and Q, z =
-    // (n*ri - S)/sqrt(n*Q - S^2) — the cancellation-proof form
-    "x204_reward_standardize" ->
-      s"""WITH $qualityCtes,
-          zp AS (SELECT doc_id, doc_id % 64 AS prompt_id,
-                        quality AS reward,
-                        CAST(round(round(quality, 9) * 1e9, 0) AS BIGINT)
-                          AS ri
-                 FROM qual),
-          zs AS (SELECT prompt_id, CAST(COUNT(*) AS BIGINT) AS n,
-                        CAST(SUM(ri) AS BIGINT) AS s,
-                        SUM(ri::HUGEINT * ri::HUGEINT) AS q
-                 FROM zp GROUP BY 1),
-          zd AS (SELECT prompt_id, n, s,
-                        n::HUGEINT * q - s::HUGEINT * s::HUGEINT AS rad
-                 FROM zs)
-          SELECT p.doc_id, p.prompt_id, p.reward,
-                 CASE WHEN d.n > 1 AND d.rad > 0
-                      THEN round(CAST(d.n * p.ri - d.s AS DOUBLE)
-                                 / sqrt(CAST(d.rad AS DOUBLE)), 9)
-                      ELSE NULL END AS z
-          FROM zp p JOIN zd d USING (prompt_id)""",
-
-    // x203 — same 9dp-rounded pow, DECIMAL(28,9) powered-mass total,
-    // identical division parenthesization on every share
-    "x203_temperature_mix" ->
-      """WITH tm AS (
-           SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-                  CAST(SUM(len(regexp_split_to_array(lower(text), '\s+')))
-                    AS BIGINT) AS n_tokens
-           FROM documents GROUP BY 1),
-         tp AS (SELECT *,
-                  round(pow(CAST(n_tokens AS DOUBLE), 0.3), 9) AS r
-                FROM tm),
-         tt AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS tt,
-                       CAST(SUM(CAST(r AS DECIMAL(28,9))) AS DOUBLE) AS tr
-                FROM tp)
-         SELECT p.source, p.n_docs, p.n_tokens,
-                round(CAST(p.n_tokens AS DOUBLE) / CAST(t.tt AS DOUBLE), 9)
-                  AS natural_share,
-                round(p.r / t.tr, 9) AS temp_share,
-                round((p.r / t.tr) /
-                  (CAST(p.n_tokens AS DOUBLE) / CAST(t.tt AS DOUBLE)), 9)
-                  AS boost
-         FROM tp p, tt t""",
-
-    // x202 — ABTT replayed on the full x90 chain: μ and the trained
-    // axis re-derived from scratch, the query corrected in SQL with
-    // the same fold orders, per-vector corrected components as (vec, i)
-    // rows re-assembled for the list_dot_product cosine
-    "x202_abtt_topk" ->
-      s"""WITH $pcaOracleCtes,
-          abmuw AS (SELECT ${pcaFold("list(a.mu * v.w ORDER BY a.i)")} AS c0
-            FROM me a JOIN it20 v ON v.i = a.i),
-          abq AS (SELECT ii.i AS i,
-                         ($queryVectorSql)[CAST(ii.i + 1 AS INTEGER)] AS qv
-                  FROM range(0, 64) ii(i)),
-          abdpq AS (SELECT ${pcaFold("list(q.qv * v.w ORDER BY q.i)")} - m.c0
-                      AS dpq
-                    FROM abq q JOIN it20 v ON v.i = q.i
-                    CROSS JOIN abmuw m GROUP BY m.c0),
-          abqp AS (SELECT q.i, (q.qv - a.mu) - d.dpq * v.w AS comp
-                   FROM abq q JOIN me a ON a.i = q.i
-                   JOIN it20 v ON v.i = q.i CROSS JOIN abdpq d),
-          abqpl AS (SELECT array_agg(comp ORDER BY i) AS qpl FROM abqp),
-          abdp AS (SELECT e.vec_id,
-            ${pcaFold("list(CAST(e.embedding[CAST(v.i + 1 AS INTEGER)] AS DOUBLE) * v.w ORDER BY v.i)")}
-              - m.c0 AS dp
-            FROM embeddings e CROSS JOIN it20 v CROSS JOIN abmuw m
-            GROUP BY e.vec_id, m.c0),
-          abxp AS (SELECT d.vec_id, v.i,
-              (CAST(e.embedding[CAST(v.i + 1 AS INTEGER)] AS DOUBLE)
-                 - a.mu) - d.dp * v.w AS comp
-            FROM abdp d JOIN embeddings e USING (vec_id)
-            CROSS JOIN it20 v JOIN me a ON a.i = v.i),
-          abxpl AS (SELECT vec_id, array_agg(comp ORDER BY i) AS xpl
-                    FROM abxp GROUP BY vec_id)
-          SELECT vec_id,
-                 round(list_dot_product(x.xpl, q.qpl)
-                   / (sqrt(list_dot_product(x.xpl, x.xpl))
-                      * sqrt(list_dot_product(q.qpl, q.qpl))), 6) AS cos
-          FROM abxpl x CROSS JOIN abqpl q
-          ORDER BY list_dot_product(x.xpl, q.qpl)
-                   / (sqrt(list_dot_product(x.xpl, x.xpl))
-                      * sqrt(list_dot_product(q.qpl, q.qpl))) DESC, vec_id
-          LIMIT 10""",
-
-    // x201 — the mean vector replayed as the same pos-keyed decimal
-    // aggregate; norms and cosines via list_dot_product (bit-identical
-    // to the Spark fold); the mean-vector norm is the same
-    // sqrt-of-self-dot both engines compute
-    "x201_embedding_isotropy" ->
-      s"""WITH im AS (
-            SELECT ii.i AS pos,
-                   CAST(SUM(CAST(CAST(e.embedding[CAST(ii.i + 1 AS INTEGER)]
-                             AS DOUBLE) AS DECIMAL(28,6))) AS DOUBLE)
-                     / COUNT(*) AS comp
-            FROM embeddings e,
-                 unnest(range(0, len(e.embedding))) ii(i)
-            GROUP BY 1),
-          imv AS (SELECT array_agg(comp ORDER BY pos) AS mvec FROM im)
-          SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
-                 round(${graft.ops.Stable.avgSql(
-                   "sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))")},
-                   6) AS mean_norm,
-                 round(sqrt(list_dot_product(v.mvec, v.mvec)), 6)
-                   AS mu_norm,
-                 CASE WHEN sqrt(list_dot_product(v.mvec, v.mvec)) = 0
-                      THEN NULL ELSE
-                 round(${graft.ops.Stable.avgSql(
-                   """(list_dot_product(CAST(e.embedding AS DOUBLE[]), v.mvec)
-                      / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                               CAST(e.embedding AS DOUBLE[])))
-                         * sqrt(list_dot_product(v.mvec, v.mvec))))""")},
-                   6) END AS mean_cos_to_mu
-          FROM embeddings e, imv v
-          GROUP BY v.mvec""",
-
-    // x199 — the whole Lloyd trainer replayed (seed, two iterations,
-    // final assignment), then the census: member count, decimal-routed
-    // mean cohesion, exemplar = (cc DESC, vec_id) first
-    "x199_kmeans_census" ->
-      s"""WITH $kmeansFinalCtes,
-          kex AS (
-            SELECT cid, vec_id FROM (
-              SELECT cid, vec_id, ROW_NUMBER() OVER (
-                PARTITION BY cid ORDER BY cc DESC, vec_id) AS rn
-              FROM kfa) WHERE rn = 1),
-          kcen AS (
-            SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-                   round(${graft.ops.Stable.avgSql("cc")}, 6) AS mean_cos
-            FROM kfa GROUP BY 1)
-          SELECT c.cid, c.n_vecs, c.mean_cos, e.vec_id AS exemplar_id
-          FROM kcen c JOIN kex e USING (cid)""",
-
-    // x200 — the x24 splitmix64 rank rule stratified on the trained
-    // cluster id: 10 members per cluster
-    "x200_cluster_sample" ->
-      s"""WITH $kmeansFinalCtes,
-          km0 AS (SELECT vec_id, cid, vec_id::HUGEINT AS u0 FROM kfa),
-          km1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM km0),
-          km2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM km1),
-          km3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM km2),
-          ksgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                       THEN uh - 18446744073709551616::HUGEINT
-                                       ELSE uh END AS BIGINT) AS sh FROM km3),
-          kranked AS (
-            SELECT vec_id, cid,
-                   row_number() OVER (PARTITION BY cid
-                                      ORDER BY sh, vec_id) AS rk
-            FROM ksgn)
-          SELECT vec_id, cid FROM kranked WHERE rk <= 10""",
-
-    // x198 — all THREE proven trainer replays composed in one WITH
-    // (prefix-disjoint: t*/tw* word chain, b* byte chain, u* unigram
-    // chain), joined per doc
-    "x198_tokenizer_bakeoff" ->
-      s"""WITH RECURSIVE ${bpeTrainCtes(12)},
-          ${byteTrainCtes(12)},
-          $unigramTrainCtes,
-          ${unigramViterbiCtes("r3", "ur2v")},
-          uwp AS (SELECT w, np FROM ur3seg),
-          wagg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_bpe_tokens
-                   FROM twordocc o JOIN tw12 v USING (w)
-                   GROUP BY o.doc_id),
-          bagg AS (SELECT o.doc_id,
-                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_byte_tokens
-                   FROM boc o JOIN btw12 v USING (w)
-                   GROUP BY o.doc_id),
-          uagg AS (SELECT u0.doc_id,
-                          CAST(SUM(p.np) AS BIGINT) AS n_unigram_pieces
-                   FROM u0, unnest(u0.ws) t(w) JOIN uwp p USING (w)
-                   GROUP BY u0.doc_id)
-          SELECT w.doc_id, w.n_words, w.n_bpe_tokens, b.n_byte_tokens,
-                 u.n_unigram_pieces,
-                 CAST(w.n_bpe_tokens AS DOUBLE) /
-                   CAST(w.n_words AS DOUBLE) AS bpe_fertility,
-                 CAST(u.n_unigram_pieces AS DOUBLE) /
-                   CAST(w.n_words AS DOUBLE) AS unigram_fertility
-          FROM wagg w JOIN bagg b USING (doc_id)
-          JOIN uagg u USING (doc_id)""",
-
-    // x196 — the WHOLE unigram trainer replayed: seed census, top-32
-    // cut, two hard-EM rounds (recursive-CTE Viterbi over the word
-    // census in lockstep, scaled-integer scores → exact BIGINT sums),
-    // zero-count pruning with the single-char floor
-    "x196_unigram_train" ->
-      s"""WITH RECURSIVE $unigramTrainCtes
-          SELECT piece, cnt AS count, lp AS lp_scaled FROM ur2v""",
-
-    // x197 — one more Viterbi chain under the final ur2v vocabulary;
-    // per-word piece counts join back to the docs' word lists
-    "x197_unigram_tokens" ->
-      s"""WITH RECURSIVE $unigramTrainCtes,
-          ${unigramViterbiCtes("r3", "ur2v")},
-          uwp AS (SELECT w, np FROM ur3seg)
-          SELECT u0.doc_id, CAST(len(u0.ws) AS BIGINT) AS n_words,
-                 CAST(SUM(p.np) AS BIGINT) AS n_pieces,
-                 CAST(SUM(p.np) AS DOUBLE) / CAST(len(u0.ws) AS DOUBLE)
-                   AS fertility
-          FROM u0, unnest(u0.ws) t(w) JOIN uwp p USING (w)
-          WHERE len(u0.ws) > 0
-          GROUP BY u0.doc_id, u0.ws""",
-
-    // x195 — preference pairs on the x8 quality CTEs: best/worst per
-    // prompt via row_number with the engine's exact tiebreaks
-    // (reward DESC, id) / (reward ASC, id); the 0.05 margin gate on the
-    // same one-op IEEE subtraction
-    "x195_preference_pairs" ->
-      s"""WITH $qualityCtes,
-          pp AS (SELECT doc_id, doc_id % 64 AS prompt_id, quality
-                 FROM qual),
-          pag AS (SELECT prompt_id, COUNT(*) AS n_candidates
-                  FROM pp GROUP BY 1),
-          pch AS (SELECT prompt_id, doc_id, quality, ROW_NUMBER() OVER (
-                    PARTITION BY prompt_id
-                    ORDER BY quality DESC, doc_id) AS rn FROM pp),
-          prj AS (SELECT prompt_id, doc_id, quality, ROW_NUMBER() OVER (
-                    PARTITION BY prompt_id
-                    ORDER BY quality ASC, doc_id) AS rn FROM pp)
-          SELECT c.prompt_id, a.n_candidates, c.doc_id AS chosen_id,
-                 r.doc_id AS rejected_id, c.quality AS chosen_reward,
-                 r.quality AS rejected_reward,
-                 c.quality - r.quality AS margin
-          FROM pch c
-          JOIN prj r USING (prompt_id) JOIN pag a USING (prompt_id)
-          WHERE c.rn = 1 AND r.rn = 1 AND a.n_candidates > 1
-            AND c.quality - r.quality >= 0.05""",
-
-    // x191 — BFD replayed exactly: per-shard list state (bin
-    // remainders + assignments) advancing one doc per recursive
-    // iteration, all shards in lockstep; best fit = list_min of the
-    // fitting remainders, ties to the first (lowest) bin index;
-    // oversize docs open a negative-remainder bin that never fits
-    // again — the engine's single rule
-    "x191_bestfit_pack" ->
-      """WITH RECURSIVE pbr AS (
-           SELECT source, doc_id,
-             CAST(len(regexp_split_to_array(lower(text), '\s+'))
-                  AS BIGINT) AS nt
-           FROM documents),
-         prk AS (SELECT source, doc_id, nt,
-                   ROW_NUMBER() OVER (PARTITION BY source
-                     ORDER BY nt DESC, doc_id) AS rk
-                 FROM pbr),
-         pst AS (
-           SELECT source, 0::BIGINT AS it, []::BIGINT[] AS rems,
-                  []::STRUCT(doc_id BIGINT, nt BIGINT, bin BIGINT)[]
-                    AS assigns
-           FROM (SELECT DISTINCT source FROM pbr)
-           UNION ALL
-           SELECT s.source, s.it + 1,
-             CASE WHEN l.best IS NULL
-                  THEN list_append(s.rems, 128 - r.nt)
-                  ELSE list_transform(s.rems, (x, i) ->
-                         CASE WHEN i = list_position(s.rems, l.best)
-                              THEN x - r.nt ELSE x END) END,
-             list_append(s.assigns, {'doc_id': r.doc_id, 'nt': r.nt,
-               'bin': CASE WHEN l.best IS NULL THEN len(s.rems)
-                           ELSE list_position(s.rems, l.best) - 1 END})
-           FROM pst s
-           JOIN prk r ON r.source = s.source AND r.rk = s.it + 1,
-           LATERAL (SELECT list_min(list_filter(s.rems,
-                      x -> x >= r.nt)) AS best) l
-         ),
-         pfin AS (SELECT source, assigns,
-                    ROW_NUMBER() OVER (PARTITION BY source
-                      ORDER BY it DESC) AS rr
-                  FROM pst)
-         SELECT f.source, u.a.doc_id AS doc_id, u.a.nt AS n_tokens,
-                u.a.bin AS bin_id
-         FROM pfin f, LATERAL (SELECT unnest(f.assigns) AS a) u
-         WHERE f.rr = 1""",
-
-    // x186 — the x21 equivalence at k=5: STRING shingles, distinct per
-    // doc, df = plain count over the distinct sets; novelty is one
-    // correctly-rounded integer division
-    "x186_ngram_novelty" ->
-      """WITH vtok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM documents),
-         vsh AS (
-           SELECT DISTINCT doc_id, unnest(list_filter(
-             list_transform(range(1, greatest(len(l) - 3, 1)),
-               i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2] || ' ' ||
-                    l[i+3] || ' ' || l[i+4]),
-             x -> x IS NOT NULL)) AS shingle
-           FROM vtok),
-         vsizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM vsh GROUP BY 1),
-         vdf AS (SELECT shingle, COUNT(*) AS df FROM vsh GROUP BY 1),
-         vnov AS (SELECT s.doc_id,
-                    SUM(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS n_novel
-                  FROM vsh s JOIN vdf d ON d.shingle = s.shingle
-                  GROUP BY 1)
-         SELECT z.doc_id, CAST(z.n_sh AS BIGINT) AS n_sh,
-                CAST(v.n_novel AS BIGINT) AS n_novel,
-                CAST(v.n_novel AS DOUBLE) / z.n_sh AS novelty
-         FROM vsizes z JOIN vnov v ON v.doc_id = z.doc_id""",
-
-    // x187 — identical add-one smoothing and p·ln(p/q) parenthesization
-    // (9-dp round per term — the ln() libm rule), the total through the
-    // DECIMAL(28,12) route, the same (contribution, term) cut order
-    "x187_token_drift" ->
-      """WITH wtok AS (
-           SELECT doc_id % 2 AS snap, unnest(list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0)) AS term
-           FROM documents),
-         wcen AS (SELECT term,
-             CAST(SUM(CASE WHEN snap = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_old,
-             CAST(SUM(CASE WHEN snap = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_new
-           FROM wtok GROUP BY 1),
-         wtot AS (SELECT CAST(SUM(c_old) AS BIGINT) AS n_old,
-                         CAST(SUM(c_new) AS BIGINT) AS n_new,
-                         COUNT(*) AS v
-                  FROM wcen),
-         wscore AS (SELECT term, c_old, c_new,
-             round(((c_new + 1)::DOUBLE / (n_new + v)::DOUBLE)
-               * ln(((c_new + 1)::DOUBLE / (n_new + v)::DOUBLE)
-                    / ((c_old + 1)::DOUBLE / (n_old + v)::DOUBLE)),
-               9) AS contribution
-           FROM wcen, wtot),
-         wkl AS (SELECT round(CAST(SUM(CAST(contribution
-                   AS DECIMAL(28,12))) AS DOUBLE), 6) AS kl_total
-                 FROM wscore)
-         SELECT term, c_old, c_new, contribution, kl_total
-         FROM wscore, wkl
-         ORDER BY contribution DESC, term
-         LIMIT 20""",
-
-    // x184 — the x93 template's offsets replayed closed-form: header +
-    // ⌊i/2⌋·21+8 role chars + 2i newlines + the char mass of the first
-    // 8i tokens + 7i separators + 14 for '<|assistant|>\n'
-    "x184_chat_loss_mask" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
-         r AS (SELECT doc_id, ts, n, (n + 7) // 8 AS k FROM nt),
-         ast AS (SELECT doc_id, ts, n, unnest(range(0, k)) AS i FROM r),
-         calc AS (
-           SELECT doc_id, CAST(i AS INTEGER) AS turn_idx,
-             length('<|system|>' || chr(10) ||
-                    'You are a helpful assistant.' || chr(10)) +
-             (i // 2) * 21 + 8 + i * 2 +
-             length(array_to_string(ts[1:CAST(i * 8 AS INTEGER)], '')) +
-             i * 7 + 14 AS s,
-             array_to_string(
-               ts[CAST(i * 8 + 1 AS INTEGER):CAST(LEAST(n, i * 8 + 8) AS INTEGER)],
-               ' ') AS span_text
-           FROM ast WHERE i % 2 = 1)
-         SELECT doc_id, turn_idx,
-                CAST(s AS BIGINT) AS span_start,
-                CAST(s + length(span_text) AS BIGINT) AS span_end,
-                CAST(length(span_text) AS BIGINT) AS span_chars,
-                span_text
-         FROM calc""",
-
-    // x33 — same 2-token re-lining, line df over distinct docs, drop at
-    // df >= 20, reassemble in line order (the engine keys df on the
-    // line's xxhash64; string keys coincide absent 64-bit collisions)
-    "x33_line_dedup" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM documents),
-         lines AS (
-           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
-                  array_to_string(l[u.i*2+1 : u.i*2+2], ' ') AS line
-           FROM tok, unnest(range(0, greatest((len(l)+1)//2, 1))) AS u(i)),
-         dfq AS (SELECT line, COUNT(DISTINCT doc_id) AS df
-                 FROM lines GROUP BY 1),
-         kept AS (SELECT * FROM lines
-                  WHERE line NOT IN (SELECT line FROM dfq WHERE df >= 20)),
-         agg AS (SELECT doc_id,
-                        string_agg(line, chr(10) ORDER BY pos) AS clean_text,
-                        COUNT(*) AS n_kept
-                 FROM kept GROUP BY 1),
-         base AS (SELECT doc_id,
-                         CAST(greatest((len(l)+1)//2, 1) AS BIGINT) AS n_lines
-                  FROM tok)
-         SELECT b.doc_id, COALESCE(a.clean_text, '') AS text, b.n_lines,
-                CAST(COALESCE(a.n_kept, 0) AS BIGINT) AS n_kept
-         FROM base b LEFT JOIN agg a ON a.doc_id = b.doc_id""",
-
-    // x212 — x33's inline df replay with an INNER join at the end
-    // (the stored-censor path emits only docs with >= 1 kept line);
-    // the artifact layer cancels, so the hash match proves the
-    // persist → reload → censor round trip
-    "x212_stored_censor" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM documents),
-         lines AS (
-           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
-                  array_to_string(l[u.i*2+1 : u.i*2+2], ' ') AS line
-           FROM tok, unnest(range(0, greatest((len(l)+1)//2, 1))) AS u(i)),
-         dfq AS (SELECT line, COUNT(DISTINCT doc_id) AS df
-                 FROM lines GROUP BY 1),
-         kept AS (SELECT * FROM lines
-                  WHERE line NOT IN (SELECT line FROM dfq WHERE df >= 20)),
-         agg AS (SELECT doc_id,
-                        string_agg(line, chr(10) ORDER BY pos) AS text,
-                        COUNT(*) AS n_kept
-                 FROM kept GROUP BY 1),
-         base AS (SELECT doc_id,
-                         CAST(greatest((len(l)+1)//2, 1) AS BIGINT) AS n_lines
-                  FROM tok)
-         SELECT b.doc_id, a.text, b.n_lines,
-                CAST(a.n_kept AS BIGINT) AS n_kept
-         FROM base b JOIN agg a ON a.doc_id = b.doc_id""",
-
-    // x213 — the x37 gram replay with owner election as a row_number
-    // over (doc_id, pos) per gram (rn = 1 is the keeper), islands on
-    // the non-owner positions, span list per doc, and the same
-    // index-filtered token rebuild the engine runs
-    "x213_exactsubstr_strip" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM documents),
-         win AS (
-           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
-                  array_to_string(l[u.i+1 : u.i+8], ' ') AS gram
-           FROM tok, unnest(range(0, greatest(len(l)-8+1, 0))) AS u(i)),
-         ownr AS (
-           SELECT doc_id, pos,
-                  row_number() OVER (PARTITION BY gram
-                                     ORDER BY doc_id, pos) AS rn,
-                  COUNT(*) OVER (PARTITION BY gram) AS n_occ
-           FROM win),
-         rem AS (SELECT doc_id, pos FROM ownr
-                 WHERE n_occ >= 2 AND rn > 1),
-         isl AS (
-           SELECT doc_id, pos,
-                  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                       ORDER BY pos) <= 8 THEN 0 ELSE 1 END AS brk
-           FROM rem),
-         grp AS (
-           SELECT doc_id, pos,
-                  SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-           FROM isl),
-         sp AS (SELECT doc_id, MIN(pos) AS s, MAX(pos)+7 AS e
-                FROM grp GROUP BY doc_id, g),
-         spl AS (SELECT doc_id, list({'s': s, 'e': e}) AS spans
-                 FROM sp GROUP BY doc_id),
-         outp AS (
-           SELECT t.doc_id, len(t.l) AS n_tokens,
-                  CASE WHEN p.spans IS NULL THEN t.l
-                       ELSE list_transform(
-                         list_filter(
-                           list_transform(range(0, len(t.l)), i ->
-                             {'i': i, 'tk': t.l[CAST(i+1 AS INTEGER)]}),
-                           s -> len(list_filter(p.spans,
-                             x -> x.s <= s.i AND s.i <= x.e)) = 0),
-                         s -> s.tk) END AS keptl
-           FROM tok t LEFT JOIN spl p USING (doc_id))
-         SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-                CAST(n_tokens - len(keptl) AS BIGINT) AS n_removed,
-                -- array_to_string of an EMPTY list is NULL in DuckDB;
-                -- the engine's array_join gives '' — align them
-                COALESCE(array_to_string(keptl, ' '), '') AS text
-         FROM outp""",
-
-    // x216 — plants replayed, candidates re-extracted with the same
-    // RE2-common pattern, the Luhn fold digit for digit (right-offset
-    // doubling, subtract-9 clamp, mod 10), and the redaction as the
-    // SAME positional segment/candidate interleave (split on the one
-    // candidate regex, valid matches slot back as <CC>, invalid ones
-    // verbatim — never a value-based global replace)
-    "x216_luhn_cc_scrub" -> {
-      val nm = "regexp_replace(c, '[^0-9]', '', 'g')"
-      val dig = s"CAST(substr($nm, CAST(length($nm) - i AS INTEGER), 1) AS INTEGER)"
-      s"""WITH t0 AS (
-           SELECT doc_id, text ||
-             CASE WHEN doc_id % 5 = 0
-                  THEN ' card 4111 1111 1111 1111 billed' ELSE '' END ||
-             CASE WHEN doc_id % 7 = 0
-                  THEN ' via 5500-0055-5555-5559 thanks' ELSE '' END ||
-             CASE WHEN doc_id % 11 = 0
-                  THEN ' ref 4111 1111 1111 1112 invalid' ELSE '' END ||
-             CASE WHEN doc_id % 13 = 0
-                  THEN ' amex 378282246310005 ok' ELSE '' END AS text
-           FROM documents),
-         cnd AS (
-           SELECT doc_id, text,
-                  regexp_extract_all(text, '[0-9][0-9 -]{11,22}[0-9]')
-                    AS cands,
-                  regexp_split_to_array(text, '[0-9][0-9 -]{11,22}[0-9]')
-                    AS segs
-           FROM t0),
-         vv AS (
-           SELECT doc_id, text, cands, segs,
-                  list_filter(cands, c ->
-                    length($nm) BETWEEN 13 AND 19 AND
-                    list_sum(list_transform(range(0, length($nm)), i ->
-                      CASE WHEN i % 2 = 1 THEN
-                        CASE WHEN 2 * $dig > 9 THEN 2 * $dig - 9
-                             ELSE 2 * $dig END
-                      ELSE $dig END)) % 10 = 0) AS valids
-           FROM cnd)
-         SELECT doc_id,
-                CAST(len(cands) AS BIGINT) AS n_candidates,
-                CAST(len(valids) AS BIGINT) AS n_valid_cc,
-                COALESCE(array_to_string(
-                  list_transform(range(0, len(cands)), i ->
-                    segs[CAST(i + 1 AS INTEGER)] ||
-                    CASE WHEN list_contains(valids,
-                                 cands[CAST(i + 1 AS INTEGER)])
-                         THEN '<CC>'
-                         ELSE cands[CAST(i + 1 AS INTEGER)] END), ''), '')
-                  || segs[len(segs)] AS redacted
-         FROM vv"""
-    },
-
-    // x219 — the x4 edge CTEs with endpoint-source joins and the
-    // least/greatest unordered-pair rollup
-    "x219_dup_matrix" ->
-      s"""WITH $jaccardEdgeCtes
-         SELECT LEAST(da.source, db.source) AS source_1,
-                GREATEST(da.source, db.source) AS source_2,
-                CAST(COUNT(*) AS BIGINT) AS n_pairs,
-                MAX(e.jaccard) AS max_jaccard
-         FROM edges e
-         JOIN documents da ON da.doc_id = e.doc_a
-         JOIN documents db ON db.doc_id = e.doc_b
-         GROUP BY 1, 2""",
-
-    // x218 — the x213 island/strip replay with the removable set
-    // coming from a benchmark gram semi-join instead of owner
-    // election; grams by string (hash distinctness = gram
-    // distinctness, the x37 convention)
-    "x218_decontam_strip" ->
-      """WITH tok AS (
-           SELECT doc_id, source, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM documents),
-         win AS (
-           SELECT doc_id, source, CAST(u.i AS INTEGER) AS pos,
-                  array_to_string(l[u.i+1 : u.i+3], ' ') AS gram
-           FROM tok, unnest(range(0, greatest(len(l)-3+1, 0))) AS u(i)),
-         bench AS (SELECT DISTINCT gram FROM win WHERE source = 'src0'),
-         rem AS (SELECT w.doc_id, w.pos FROM win w
-                 WHERE w.source <> 'src0'
-                   AND w.gram IN (SELECT gram FROM bench)),
-         isl AS (
-           SELECT doc_id, pos,
-                  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                       ORDER BY pos) <= 3 THEN 0 ELSE 1 END AS brk
-           FROM rem),
-         grp AS (
-           SELECT doc_id, pos,
-                  SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-           FROM isl),
-         sp AS (SELECT doc_id, MIN(pos) AS s, MAX(pos)+2 AS e
-                FROM grp GROUP BY doc_id, g),
-         spl AS (SELECT doc_id, list({'s': s, 'e': e}) AS spans
-                 FROM sp GROUP BY doc_id),
-         outp AS (
-           SELECT t.doc_id, len(t.l) AS n_tokens,
-                  CASE WHEN p.spans IS NULL THEN t.l
-                       ELSE list_transform(
-                         list_filter(
-                           list_transform(range(0, len(t.l)), i ->
-                             {'i': i, 'tk': t.l[CAST(i+1 AS INTEGER)]}),
-                           s -> len(list_filter(p.spans,
-                             x -> x.s <= s.i AND s.i <= x.e)) = 0),
-                         s -> s.tk) END AS keptl
-           FROM tok t LEFT JOIN spl p USING (doc_id)
-           WHERE t.source <> 'src0')
-         SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-                CAST(n_tokens - len(keptl) AS BIGINT) AS n_removed,
-                COALESCE(array_to_string(keptl, ' '), '') AS text
-         FROM outp""",
-
-    // x34 — identical rational-BM25 arithmetic, term by term in the same
-    // parenthesization (every op is correctly-rounded IEEE, so scores are
-    // bit-equal — no rounding in the compare)
-    "x34_bm25" -> bm25OracleSql,
-
-    // x96 — stored ≡ inline: the oracle is x34's verbatim; a hash match
-    // proves the persisted postings path end to end
-    "x96_bm25_stored" -> bm25OracleSql,
-
-        // x35 — per-source keep threshold floor(min(1, 3/sqrt(n))·2^20)
-    // (sqrt/division/product all correctly-rounded, so the thresholds are
-    // bit-equal), then the x22 splitmix64 HUGEINT replay and the signed
-    // pmod against 2^20
-    "x35_temp_resample" ->
-      s"""WITH cnt AS (SELECT source, COUNT(*) AS n_d FROM documents GROUP BY 1),
-          thr AS (SELECT source,
-                    CAST(floor(least(1.0, 3.0 / sqrt(CAST(n_d AS DOUBLE)))
-                               * 1048576) AS BIGINT) AS keep_below
-                  FROM cnt),
-          m0 AS (SELECT d.doc_id, d.lang, d.source, d.n_chars, t.keep_below,
-                        d.doc_id::HUGEINT AS u0
-                 FROM documents d JOIN thr t ON t.source = d.source),
-          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-          sgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                      THEN uh - 18446744073709551616::HUGEINT
-                                      ELSE uh END AS BIGINT) AS sh FROM m3)
-          SELECT doc_id, lang, source, n_chars FROM sgn
-          WHERE ((sh % 1048576) + 1048576) % 1048576 < keep_below""",
-
-    // x36 — the full curation chain composed from the shared fragments
-    // each single-gate oracle already proves (lang/qual/rep/cont CTEs and
-    // the jaccard-edge + recursive-component closure), so the only new
-    // assertion here is the composition semantics: inner joins on the
-    // per-doc gates (contamination's inner join drops shingle-less docs,
-    // the x21 convention), conjunctive cuts, and the cluster anti-join
-    "x36_curation_pipeline" ->
-      s"""WITH RECURSIVE $componentCtes,
-          $langCtes,
-          $qualityCtes,
-          $repCtes,
-          $contamCtes
-          SELECT d.doc_id, d.lang, d.source, d.n_chars, q.quality,
-                 c.contamination
-          FROM documents d
-          JOIN lang l ON l.doc_id = d.doc_id
-          JOIN qual q ON q.doc_id = d.doc_id
-          JOIN rep r ON r.doc_id = d.doc_id
-          JOIN cont c ON c.doc_id = d.doc_id
-          WHERE l.pred_lang = 'en' AND q.quality >= 0.5
-            AND r.rep_ratio <= 0.5 AND c.contamination < 0.5
-            AND d.doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)""",
-
-    // x37 — string-keyed replay of the window census: same tokenizer
-    // (lowercase, whitespace split, empties dropped), every 8-token
-    // window in position, corpus-wide occurrence count, and the identical
-    // gaps-and-islands span merge (windows chain while pos gap <= k)
-    "x37_repeated_spans" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM documents),
-         win AS (
-           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
-                  array_to_string(l[u.i+1 : u.i+8], ' ') AS gram
-           FROM tok, unnest(range(0, greatest(len(l)-8+1, 0))) AS u(i)),
-         dup AS (SELECT gram FROM win GROUP BY 1 HAVING COUNT(*) >= 2),
-         hits AS (SELECT w.doc_id, w.pos FROM win w
-                  WHERE w.gram IN (SELECT gram FROM dup)),
-         isl AS (
-           SELECT doc_id, pos,
-                  CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                       ORDER BY pos) <= 8 THEN 0 ELSE 1 END AS brk
-           FROM hits),
-         grp AS (
-           SELECT doc_id, pos,
-                  SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS g
-           FROM isl)
-         SELECT doc_id, CAST(MIN(pos) AS BIGINT) AS span_start,
-                CAST(MAX(pos)+7 AS BIGINT) AS span_end,
-                CAST(COUNT(*) AS BIGINT) AS n_windows
-         FROM grp GROUP BY doc_id, g""",
-
-    // x38 — SemDeDup end-to-end: assignment argmax mirrored with the
-    // x17 row_number technique (ties to the higher cid), within-cluster
-    // pairwise cosine via list_dot_product (bit-equal to the Spark fold,
-    // x5/x20-verified), and the x27 recursive-walk component closure
-    "x38_semdedup" ->
-      """WITH RECURSIVE cent AS (
-           SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
-           FROM embeddings WHERE vec_id < 16),
-         p0 AS (
-           SELECT e.vec_id, c.cid,
-                  list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-                  / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                           CAST(e.embedding AS DOUBLE[])))
-                     * sqrt(list_dot_product(c.cvec, c.cvec))) AS cc
-           FROM embeddings e, cent c),
-         assign AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-                    row_number() OVER (PARTITION BY vec_id
-                                       ORDER BY cc DESC, cid DESC) AS rn
-             FROM p0) WHERE rn = 1),
-         av AS (
-           SELECT a.vec_id, a.cid, CAST(e.embedding AS DOUBLE[]) AS v
-           FROM assign a JOIN embeddings e USING (vec_id)),
-         sedges AS (
-           SELECT x.vec_id AS s, y.vec_id AS t
-           FROM av x JOIN av y ON x.cid = y.cid AND x.vec_id < y.vec_id
-           WHERE list_dot_product(x.v, y.v)
-                 / (sqrt(list_dot_product(x.v, x.v))
-                    * sqrt(list_dot_product(y.v, y.v))) >= 0.3),
-         sund AS (SELECT s, t FROM sedges
-                  UNION ALL SELECT t, s FROM sedges),
-         snodes AS (SELECT DISTINCT s AS id FROM sund),
-         swalk(id, cur) AS (
-           SELECT id, id FROM snodes
-           UNION
-           SELECT w.id, u.t FROM swalk w JOIN sund u ON u.s = w.cur),
-         scc AS (SELECT id, MIN(cur) AS rep FROM swalk GROUP BY id)
-         SELECT a.vec_id, a.cid FROM assign a
-         WHERE a.vec_id NOT IN (SELECT id FROM scc WHERE rep <> id)""",
-
-    "x11_topk_per_label" ->
-      s"""WITH scored AS (
-            SELECT label, vec_id, $cosSql AS cos FROM embeddings),
-          ranked AS (
-            SELECT label, vec_id, cos,
-                   CAST(row_number() OVER (PARTITION BY label
-                        ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-            FROM scored)
-          SELECT label, vec_id, round(cos, 6) AS cos, rank
-          FROM ranked WHERE rank <= 3""",
-
-    "x7_lang_id" ->
-      s"""WITH $langCtes
-          SELECT doc_id, pred_lang FROM lang""",
-
-    "x8_quality" ->
-      s"""WITH $qualityCtes
-          SELECT doc_id, n_chars, n_tokens, punct_ratio, digit_ratio,
-                 stopword_ratio, mean_word_len, quality
-          FROM qual""",
-
-    "x9_token_count" ->
-      """SELECT doc_id,
-                len(regexp_split_to_array(lower(text), '\s+')) AS n_tokens,
-                len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_subwords
-         FROM documents""",
-
-    "x12_corpus_profile" ->
-      s"""SELECT lang, COUNT(*) AS n_docs,
-                 ${avgSql("length(text)")} AS avg_chars,
-                 ${avgSql("len(regexp_split_to_array(lower(text), '\\s+'))")} AS avg_tokens,
-                 COUNT(DISTINCT md5(text)) AS n_distinct
-          FROM documents GROUP BY lang""",
-
-    "x13_topk_events" ->
-      """SELECT event_id, value FROM events
-         ORDER BY value DESC, event_id LIMIT 10""",
-
-    // x14 — the media payload is an 8×8 gray PNG whose 64 samples are the
-    // doc's first 64 ASCII bytes zero-padded (Multimodal.mediaFromDocs),
-    // and PNG gray-8 round-trips losslessly, so each decoded histogram
-    // bucket b is |{i < 64 : pixel_i div 16 = b}| / 64 computed from the
-    // text characters directly (testdata documents are pure ASCII: byte i
-    // = codepoint of char i)
-    // x2 — exact all-pairs jaccard at threshold 0.5: LSH (128 hashes, 32
-    // bands) proposes candidates with miss probability ~5e-8 at j=0.8 and
-    // every true pair in the testdata has j >= 0.8, so candidate recall is
-    // exactly 1 here and the verified output equals the exact computation.
-    // No df cap: verification computes pair jaccard directly.
-    "x2_dedup_minhash" ->
-      """WITH tok AS (
-           SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS l
-           FROM documents),
-         sh AS (
-           SELECT DISTINCT doc_id, unnest(list_filter(
-             list_transform(range(1, greatest(len(l) - 1, 1)),
-               i -> l[i] || ' ' || l[i+1] || ' ' || l[i+2]),
-             x -> x IS NOT NULL)) AS shingle
-           FROM tok),
-         sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1),
-         inter AS (
-           SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS c
-           FROM sh x JOIN sh y ON x.shingle = y.shingle
-           WHERE x.doc_id < y.doc_id GROUP BY 1, 2)
-         SELECT doc_a, doc_b,
-                CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS jaccard
-         FROM inter
-         JOIN sizes sa ON sa.doc_id = doc_a
-         JOIN sizes sb ON sb.doc_id = doc_b
-         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""",
-
-    // x3 — full simhash pipeline recomputed in DuckDB (see simhashOracleSql)
-    "x3_dedup_simhash" -> simhashOracleSql(maxDist = 6),
-
-    // x16 — the HLL sketch recomputed register-by-register: same FNV hash
-    // (one byte per ASCII char), same top-10-bit bucketing, same
-    // rho = 55 - bitlength(54-bit tail), same EXACT integer harmonic sum
-    // (2^(55-r) terms in HUGEINT), same single-division raw estimate with
-    // the identical alpha·m²·2^55 double constant
-    "x16_hll_profile" -> {
-      val pows = (0 to 55).map(b => (BigInt(1) << b).toString).mkString(", ")
-      s"""WITH h0 AS (
-           SELECT lang,
-             list_reduce(
-               list_prepend(14695981039346656037::HUGEINT,
-                 list_transform(range(1, length(text) + 1), i ->
-                   unicode(substr(text, CAST(i AS INTEGER), 1))::HUGEINT)),
-               (hh, c) -> (xor(hh, c) * 1099511628211::HUGEINT)
-                          % 18446744073709551616::HUGEINT) AS u0
-           FROM documents WHERE text IS NOT NULL),
-         h1 AS (SELECT lang,
-                ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1
-                FROM h0),
-         h2 AS (SELECT lang,
-                ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2
-                FROM h1),
-         h AS (SELECT lang, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM h2),
-         rb AS (
-           SELECT lang, uh // 18014398509481984::HUGEINT AS bucket,
-                  CAST(uh % 18014398509481984::HUGEINT AS BIGINT) AS w
-           FROM h),
-         regs AS (
-           SELECT lang, bucket,
-                  MAX(CASE WHEN w = 0 THEN 55
-                           ELSE 55 - length(bin(w)) END) AS r
-           FROM rb GROUP BY 1, 2),
-         grid AS (
-           SELECT l.lang, g.range AS bucket
-           FROM (SELECT DISTINCT lang FROM documents
-                 WHERE text IS NOT NULL) l, range(1024) g),
-         full_regs AS (
-           SELECT grid.lang, COALESCE(regs.r, 0) AS r
-           FROM grid LEFT JOIN regs
-             ON regs.lang = grid.lang AND regs.bucket = grid.bucket),
-         agg AS (
-           SELECT lang,
-                  SUM([$pows][56 - r]::HUGEINT) AS num,
-                  CAST(SUM(CASE WHEN r = 0 THEN 1 ELSE 0 END) AS INTEGER) AS n_zero,
-                  SUM(r) AS reg_sum
-           FROM full_regs GROUP BY 1),
-         docs AS (SELECT lang, COUNT(*) AS n_docs FROM documents
-                  WHERE text IS NOT NULL GROUP BY 1)
-         SELECT d.lang, d.n_docs,
-                round(CASE WHEN ${ext.HllAggregator.alphaM2K(10)}
-                                / CAST(a.num AS DOUBLE) <= 2560.0
-                            AND a.n_zero > 0
-                           THEN 1024.0 * ln(1024.0 / a.n_zero)
-                           ELSE ${ext.HllAggregator.alphaM2K(10)}
-                                / CAST(a.num AS DOUBLE) END, 6)
-                  AS hll_estimate,
-                a.n_zero, CAST(a.reg_sum AS BIGINT) AS reg_sum
-         FROM docs d JOIN agg a ON a.lang = d.lang"""
-    },
-
-    // x10 — the rolling FNV-1a fingerprint is a published spec, so DuckDB
-    // recomputes it exactly: unsigned 64-bit arithmetic emulated in
-    // HUGEINT mod 2^64 (rotl5 = <<5 + >>59, disjoint bits), then mapped
-    // back to the signed BIGINT Spark produces. ASCII testdata keeps
-    // codepoints == UTF-8 bytes.
-    "x10_fingerprint" ->
-      """SELECT doc_id,
-                CAST(CASE WHEN ufp >= 9223372036854775808
-                          THEN ufp - 18446744073709551616
-                          ELSE ufp END AS BIGINT) AS fp
-         FROM (
-           SELECT doc_id,
-             list_reduce(
-               list_prepend(0::HUGEINT,
-                 list_transform(regexp_split_to_array(lower(text), '\s+'), t ->
-                   list_reduce(
-                     list_prepend(14695981039346656037::HUGEINT,
-                       list_transform(range(1, length(t) + 1), i ->
-                         unicode(substr(t, CAST(i AS INTEGER), 1))::HUGEINT)),
-                     (h, c) -> (xor(h, c) * 1099511628211::HUGEINT)
-                               % 18446744073709551616::HUGEINT))),
-               (acc, h) -> xor((acc * 32::HUGEINT)
-                               % 18446744073709551616::HUGEINT
-                               + acc // 576460752303423488::HUGEINT, h))
-             AS ufp
-           FROM documents)""",
-
-    // x152 — the x10 fingerprint chain feeding mix64 (the x107 HUGEINT
-    // replay) and bit_xor digests, per shard and at the root
-    "x152_shard_manifest" ->
-      s"""WITH so AS (SELECT doc_id, text FROM documents),
-         ${manifestOracleCtes("so", "")}
-         SELECT shard, COUNT(*) AS n_docs,
-                CAST(SUM(nc) AS BIGINT) AS n_chars,
-                bit_xor(rd) AS digest
-         FROM m3 GROUP BY shard
-         UNION ALL
-         SELECT -1 AS shard, COUNT(*) AS n_docs,
-                CAST(SUM(nc) AS BIGINT) AS n_chars,
-                bit_xor(rd) AS digest
-         FROM m3""",
-
-    // x153 — both snapshots' manifests regenerated (the x86 mutation
-    // branches closed-form) and the same full-outer shard compare
-    "x153_manifest_diff" ->
-      s"""WITH so AS (SELECT doc_id, text FROM documents),
-         sn AS (
-           SELECT doc_id,
-                  CASE WHEN doc_id % 16 < 12 AND doc_id % 5 = 0
-                       THEN text || ' updated' ELSE text END AS text
-           FROM documents
-           WHERE NOT (doc_id % 16 < 12 AND doc_id % 7 = 0)
-           UNION ALL
-           SELECT doc_id + 1000000 AS doc_id, text
-           FROM documents WHERE doc_id % 16 < 12 AND doc_id % 3 = 0),
-         ${manifestOracleCtes("so", "o")},
-         ${manifestOracleCtes("sn", "n")},
-         mo AS (SELECT shard, COUNT(*) AS n_old, bit_xor(rd) AS d_old
-                FROM om3 GROUP BY shard),
-         mn AS (SELECT shard, COUNT(*) AS n_new, bit_xor(rd) AS d_new
-                FROM nm3 GROUP BY shard)
-         SELECT COALESCE(mo.shard, mn.shard) AS shard,
-                COALESCE(n_old, 0) AS n_old, COALESCE(n_new, 0) AS n_new,
-                COALESCE(d_old, 0) AS d_old, COALESCE(d_new, 0) AS d_new,
-                (COALESCE(n_old, 0) != COALESCE(n_new, 0)
-                 OR COALESCE(d_old, 0) != COALESCE(d_new, 0)) AS changed
-         FROM mo FULL OUTER JOIN mn ON mo.shard = mn.shard""",
-
-    // x14 — ASSUMES AN ASCII CORPUS (see the x15 note): codepoints stand
-    // in for the UTF-8 bytes the engine encodes into the PNG.
-    "x14_media_features" -> {
-      val buckets = (0 until 16).map(b =>
-        s"""CAST(len(list_filter(pix, p -> p // 16 = $b)) AS DOUBLE) / 64.0
-            AS f$b""").mkString(",\n                ")
-      s"""SELECT doc_id AS media_id,
-                $buckets
-         FROM (SELECT doc_id, list_transform(range(0, 64), i ->
-                 CASE WHEN i < length(text)
-                      THEN unicode(substr(text, CAST(i + 1 AS INTEGER), 1))
-                      ELSE 0 END) AS pix
-               FROM documents)"""
-    },
-
-    // x15 — content profile recomputed from the pixel definition: each
-    // doc's image is its first 64 UTF-8 bytes (zero-padded), so the
-    // decoded mean luminance is list_sum(pix)/64 and the corpus average
-    // routes through the same decimal path as the Spark side. Dimensions
-    // are read from the decoded images (8×8 by construction).
-    // ASSUMES AN ASCII CORPUS (verified for the generated testdata, same
-    // assumption as x14): unicode(substr(...)) reads CODEPOINTS and
-    // length() counts CHARS, which equal the UTF-8 bytes the engine
-    // actually encodes only when every char is single-byte.
-    "x15_media_profile" ->
-      s"""SELECT 'image' AS kind, COUNT(*) AS n, COUNT(*) AS n_decoded,
-                 8.0 AS avg_width, 8.0 AS avg_height,
-                 ${avgSql("luma")} AS avg_luma
-          FROM (SELECT list_sum(list_transform(range(0, 64), i ->
-                  CASE WHEN i < length(text)
-                       THEN unicode(substr(text, CAST(i + 1 AS INTEGER), 1))
-                       ELSE 0 END)) / 64.0 AS luma
-                FROM documents)""",
-
-    // x18 — the WAV sample formula replayed: n = 400 + (doc_id%32)*8
-    // samples of ((doc_id*31 + i*7) % 2048) - 1024 at 8 kHz. sum-of-squares
-    // and counts are exact integers; rms/duration are single exact-integer
-    // divisions + one correctly-rounded sqrt, so no rounding tolerance is
-    // needed anywhere.
-    "x18_audio_features" ->
-      """WITH base AS (
-           SELECT doc_id, 400 + (doc_id % 32) * 8 AS n FROM documents),
-         samp AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM base),
-         vals AS (
-           SELECT doc_id, n, i,
-                  ((doc_id * 31 + i * 7) % 2048) - 1024 AS s
-           FROM samp),
-         lagd AS (
-           SELECT doc_id, n, s,
-                  lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-           FROM vals),
-         agg AS (
-           SELECT doc_id, MAX(n) AS n, SUM(s * s) AS sumsq,
-                  MAX(ABS(s)) AS peak,
-                  SUM(CASE WHEN prev IS NOT NULL AND ((prev >= 0) <> (s >= 0))
-                           THEN 1 ELSE 0 END) AS zc
-           FROM lagd GROUP BY doc_id)
-         SELECT doc_id AS media_id, 8000 AS sample_rate,
-                CAST(n AS BIGINT) AS n_samples,
-                CAST(n AS DOUBLE) / 8000.0 AS duration_sec,
-                sqrt(CAST(sumsq AS DOUBLE) / n) AS rms,
-                CAST(peak AS BIGINT) AS peak,
-                CAST(zc AS BIGINT) AS zero_crossings
-         FROM agg""",
-
-    // x155 — frames rebuilt from text codepoints (sample i = the byte
-    // value for i < len, 0 after), the same exact integer energies,
-    // segments via the f − row_number gaps-and-islands grouping
-    "x155_voiced_segments" ->
-      """WITH fr AS (
-           SELECT doc_id, f.range AS f,
-                  list_sum(list_transform(range(0, 20), j ->
-                    CASE WHEN CAST(f.range * 20 + j AS INTEGER)
-                              < length(atext)
-                         THEN CAST(unicode(substr(atext,
-                                CAST(f.range * 20 + j + 1 AS INTEGER), 1))
-                              AS BIGINT)
-                              * unicode(substr(atext,
-                                CAST(f.range * 20 + j + 1 AS INTEGER), 1))
-                         ELSE 0 END)) AS e
-           FROM (SELECT doc_id,
-                   substr(text, 1, 80)
-                   || repeat(' ', CAST((doc_id % 3) * 20 + 20 AS INTEGER))
-                   || substr(text, 81, 60) AS atext
-                 FROM documents), range(0, 10) f),
-         v AS (SELECT doc_id, f, (e > 81920) AS voiced FROM fr),
-         g AS (SELECT doc_id, f, voiced,
-                 f - row_number() OVER (PARTITION BY doc_id, voiced
-                                        ORDER BY f) AS grp
-               FROM v),
-         runs AS (SELECT doc_id, COUNT(*) AS run_len
-                  FROM g WHERE voiced GROUP BY doc_id, grp)
-         SELECT v.doc_id AS media_id,
-                CAST(10 AS BIGINT) AS n_frames,
-                CAST(SUM(CASE WHEN voiced THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_voiced,
-                COALESCE((SELECT CAST(COUNT(*) AS BIGINT) FROM runs r
-                          WHERE r.doc_id = v.doc_id), 0) AS n_segments,
-                COALESCE((SELECT CAST(MAX(run_len) AS BIGINT) FROM runs r
-                          WHERE r.doc_id = v.doc_id), 0) AS longest_run
-         FROM v GROUP BY v.doc_id""",
-
-    // x47 — the mp4 skeleton formulas replayed: duration_ms = 1000 +
-    // (doc_id%50)*40 at timescale 1000 (identical IEEE division both
-    // sides), dims/codec/frames straight from the doc_id formulas
-    "x47_mp4_probe" ->
-      """SELECT doc_id AS media_id, 'isom' AS brand,
-                CAST(1000 + (doc_id % 50) * 40 AS DOUBLE) / 1000.0
-                  AS duration_sec,
-                CAST(320 + (doc_id % 4) * 160 AS INTEGER) AS width,
-                CAST(240 + (doc_id % 3) * 120 AS INTEGER) AS height,
-                CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'hev1' END
-                  AS video_codec,
-                'mp4a' AS audio_codec,
-                CAST(24 + (doc_id % 10) * 6 AS BIGINT) AS n_frames
-         FROM documents""",
-
-    // x117 — the JPEG writer formulas replayed: every probed field is
-    // closed-form in doc_id (the byte/IFD layer cancels); n_segments is
-    // the constant pre-SOS walk (APP0, APP1, DQT, SOF, SOS)
-    "x117_exif_probe" ->
-      """SELECT doc_id AS media_id, TRUE AS has_jfif,
-                CAST(72 + (doc_id % 4) * 24 AS INTEGER) AS x_density,
-                CAST(72 + (doc_id % 3) * 24 AS INTEGER) AS y_density,
-                'cam' || CAST(doc_id % 5 AS STRING) AS make,
-                CAST(1 + doc_id % 8 AS INTEGER) AS orientation,
-                '2026:01:' || lpad(CAST(1 + doc_id % 28 AS STRING), 2, '0')
-                  || ' 12:' || lpad(CAST(doc_id % 60 AS STRING), 2, '0')
-                  || ':00' AS exif_datetime,
-                CAST(8 + (doc_id % 7) * 8 AS INTEGER) AS width,
-                CAST(8 + (doc_id % 5) * 8 AS INTEGER) AS height,
-                (doc_id % 3 = 0) AS progressive,
-                CAST(5 AS INTEGER) AS n_segments
-         FROM documents""",
-
-    // x154 — the x117 field formulas aggregated per make: rotation iff
-    // orientation (1 + id%8) lands in 5..8 ⇔ id%8 in 4..7; geotag iff
-    // id%3 != 2; display dims swap under rotation
-    "x154_exif_census" ->
-      """WITH per AS (
-           SELECT 'cam' || CAST(doc_id % 5 AS STRING) AS make,
-                  (doc_id % 8) BETWEEN 4 AND 7 AS rotated,
-                  (doc_id % 3 != 2) AS has_gps,
-                  CAST(8 + (doc_id % 7) * 8 AS INTEGER) AS w,
-                  CAST(8 + (doc_id % 5) * 8 AS INTEGER) AS h
-           FROM documents)
-         SELECT make, COUNT(*) AS n_images,
-                CAST(SUM(CASE WHEN rotated THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_rotated,
-                CAST(SUM(CASE WHEN has_gps THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_geotagged,
-                MAX(CASE WHEN rotated THEN h ELSE w END) AS max_disp_w,
-                MAX(CASE WHEN rotated THEN w ELSE h END) AS max_disp_h
-         FROM per GROUP BY make""",
-
-    // x148 — the DMS→decimal algebra regenerated per doc_id (sign off
-    // the hemisphere branch, deg + min/60 + (secNum/100)/3600 in the
-    // engine's IEEE order), the grid's affine pixel centers, and the
-    // same floored 0.01° cell keys
-    "x148_geotagged_join" ->
-      """WITH grid AS (
-           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                  76.85 + (CAST(x.range AS DOUBLE) + 0.5) * 0.01 AS lon,
-                  29.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.01) AS lat
-           FROM range(80) y, range(80) x),
-         gps AS (
-           SELECT doc_id AS media_id,
-                  (CASE WHEN doc_id % 8 = 5 THEN -1.0 ELSE 1.0 END) *
-                    (77.0 + CAST((doc_id * 3) % 60 AS DOUBLE) / 60.0
-                          + (CAST((doc_id * 91) % 6000 AS DOUBLE) / 100.0)
-                            / 3600.0) AS plon,
-                  (CASE WHEN doc_id % 4 = 1 THEN -1.0 ELSE 1.0 END) *
-                    (28.0 + CAST(doc_id % 60 AS DOUBLE) / 60.0
-                          + (CAST((doc_id * 37) % 6000 AS DOUBLE) / 100.0)
-                            / 3600.0) AS plat
-           FROM documents WHERE doc_id % 3 != 2)
-         SELECT g.y, g.x, p.media_id,
-                round(p.plon, 9) AS pt_lon, round(p.plat, 9) AS pt_lat
-         FROM grid g JOIN gps p
-           ON CAST(FLOOR(g.lon / 0.01) AS BIGINT)
-              = CAST(FLOOR(p.plon / 0.01) AS BIGINT)
-          AND CAST(FLOOR(g.lat / 0.01) AS BIGINT)
-              = CAST(FLOOR(p.plat / 0.01) AS BIGINT)""",
-
-    // x48 — the webm skeleton formulas replayed: Duration float64 of
-    // 2000 + (doc_id%40)*125 units at the default 1 ms TimestampScale →
-    // seconds via the same * 1e6 / 1e9 IEEE products
-    "x48_webm_probe" ->
-      """SELECT doc_id AS media_id,
-                CAST(2000 + (doc_id % 40) * 125 AS DOUBLE)
-                  * 1000000.0 / 1000000000.0 AS duration_sec,
-                CAST(256 + (doc_id % 5) * 128 AS INTEGER) AS width,
-                CAST(144 + (doc_id % 4) * 96 AS INTEGER) AS height,
-                CASE WHEN doc_id % 2 = 0 THEN 'V_VP9' ELSE 'V_VP8' END
-                  AS video_codec,
-                'A_OPUS' AS audio_codec
-         FROM documents""",
-
-    // x76 — the frame-header formulas replayed: per format, the header
-    // field formulas (rate/channel tables indexed by doc_id), the spec
-    // frame sizes (ADTS: 7 + payload; Layer III: 144·bitrate/fs integer
-    // division), samples-per-frame constants (1024 / 1152), and the same
-    // exact-integer-product + IEEE-division duration and bitrate trees
-    "x76_frame_audio_probe" ->
-      s"""WITH $frameAudioCtes
-         SELECT media_id, format, sample_rate, n_channels, n_frames,
-                duration_sec, bitrate_bps
-         FROM fap""",
-
-    // x94 — cross-modal alignment audit: the x92 transcript clock
-    // against the x76 container clock; cue census is closed form
-    // ((n+4)//5 cues, last ends at (k−1)·1500+1400 ms), overrun is one
-    // double comparison on proven quantities
-    "x94_av_alignment" ->
-      s"""WITH $frameAudioCtes,
-         tok AS (
-           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                                      t -> length(t) > 0) AS ts
-           FROM documents),
-         nt AS (SELECT doc_id, len(ts) AS n FROM tok WHERE len(ts) > 0),
-         tr AS (SELECT doc_id AS media_id,
-                       CAST((n + 4) // 5 AS BIGINT) AS n_cues,
-                       CAST(((n + 4) // 5 - 1) * 1500 + 1400 AS BIGINT)
-                         AS transcript_ms
-                FROM nt)
-         SELECT t.media_id, t.n_cues, t.transcript_ms, p.duration_sec,
-                (CAST(t.transcript_ms AS DOUBLE) > p.duration_sec * 1000.0)
-                  AS overrun
-         FROM tr t JOIN fap p ON p.media_id = t.media_id""",
-
-    // x46 — the G.711 WAV replayed end-to-end: code byte (doc_id*31 +
-    // i*17) % 256, then the published expansion tables — μ-law (even
-    // doc_id): u = NOT code, s = ±((man*8+132)·2^exp − 132); A-law (odd):
-    // a = code XOR 0x55 with sign bit set = POSITIVE, segment 0 linear.
-    // Integer throughout; same exact aggregates as x18.
-    "x46_g711_features" ->
-      """WITH base AS (
-           SELECT doc_id, 240 + (doc_id % 16) * 8 AS n FROM documents),
-         samp AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM base),
-         pre AS (
-           SELECT doc_id, n, i,
-                  255 - ((doc_id * 31 + i * 17) % 256) AS u,
-                  xor((doc_id * 31 + i * 17) % 256, 85) AS a
-           FROM samp),
-         dec AS (
-           SELECT doc_id, n, i,
-                  CASE WHEN doc_id % 2 = 0 THEN
-                    (CASE WHEN u >= 128 THEN -1 ELSE 1 END) *
-                      (((u % 16) * 8 + 132) * (1 << CAST((u // 16) % 8 AS INTEGER)) - 132)
-                  ELSE
-                    (CASE WHEN a >= 128 THEN 1 ELSE -1 END) *
-                      (CASE WHEN (a % 128) // 16 = 0 THEN (a % 16) * 16 + 8
-                            ELSE ((a % 16) * 16 + 264) *
-                                 (1 << CAST((a % 128) // 16 - 1 AS INTEGER)) END)
-                  END AS s
-           FROM pre),
-         lagd AS (
-           SELECT doc_id, n, s,
-                  lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-           FROM dec),
-         agg AS (
-           SELECT doc_id, MAX(n) AS n, SUM(s * s) AS sumsq,
-                  MAX(ABS(s)) AS peak,
-                  SUM(CASE WHEN prev IS NOT NULL AND ((prev >= 0) <> (s >= 0))
-                           THEN 1 ELSE 0 END) AS zc
-           FROM lagd GROUP BY doc_id)
-         SELECT doc_id AS media_id, 8000 AS sample_rate,
-                CAST(n AS BIGINT) AS n_samples,
-                CAST(n AS DOUBLE) / 8000.0 AS duration_sec,
-                sqrt(CAST(sumsq AS DOUBLE) / n) AS rms,
-                CAST(peak AS BIGINT) AS peak,
-                CAST(zc AS BIGINT) AS zero_crossings
-         FROM agg""",
-
-    // x61 — the acoustic fingerprint rebuilt from the text bytes through
-    // exact integer frame energies
-    "x61_audio_fingerprint" ->
-      s"WITH $audioFpCtes SELECT doc_id AS media_id, afp_hi, afp_lo FROM af",
-
-    // x62 — exhaustive all-pairs Hamming search over the same rebuilt
-    // fingerprints (blocked ≡ exhaustive by the pigeonhole guarantee)
-    "x62_audio_neardup" ->
-      s"""WITH $audioFpCtes
-         SELECT a.doc_id AS media_a, b.doc_id AS media_b,
-                CAST(bit_count(xor(a.afp_hi, b.afp_hi)) +
-                     bit_count(xor(a.afp_lo, b.afp_lo)) AS INTEGER) AS dist
-         FROM af a JOIN af b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.afp_hi, b.afp_hi)) +
-               bit_count(xor(a.afp_lo, b.afp_lo)) <= 3""",
-
-    // x63 — both independently rebuilt pair sets (the x4 jaccard edges
-    // at 0.4, the x50 exhaustive aHash pairs) merged with the same
-    // full-outer flags
-    "x63_crossmodal_audit" ->
-      s"""WITH $jaccardEdgeCtes, $imageHashCtes,
-         ipairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM h a JOIN h b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.ahash_hi, b.ahash_hi)) +
-                 bit_count(xor(a.ahash_lo, b.ahash_lo)) <= 3),
-         tpairs AS (SELECT doc_a, doc_b FROM edges)
-         SELECT COALESCE(t.doc_a, i.doc_a) AS doc_a,
-                COALESCE(t.doc_b, i.doc_b) AS doc_b,
-                t.doc_a IS NOT NULL AS text_dup,
-                i.doc_a IS NOT NULL AS image_dup
-         FROM tpairs t FULL OUTER JOIN ipairs i
-           ON t.doc_a = i.doc_a AND t.doc_b = i.doc_b""",
-
-    // x64 — the count-min sketch rebuilt counter-exact: per-occurrence
-    // cells from the replayed probe stream, GROUP BY cell sums ≡ the
-    // engine's counter array, estimate = LEAST over the four rows, and
-    // the same (count DESC, token) top-20 total order. CASTs route
-    // DuckDB's HUGEINT counts back to BIGINT (the sumSql discipline).
-    "x64_cms_heavyhitters" ->
-      s"""WITH $cmsCtes,
-         cnt1 AS (SELECT cell1 AS cell, CAST(COUNT(*) AS BIGINT) AS c
-                  FROM cells GROUP BY cell1),
-         cnt2 AS (SELECT cell2 AS cell, CAST(COUNT(*) AS BIGINT) AS c
-                  FROM cells GROUP BY cell2),
-         cnt3 AS (SELECT cell3 AS cell, CAST(COUNT(*) AS BIGINT) AS c
-                  FROM cells GROUP BY cell3),
-         cnt4 AS (SELECT cell4 AS cell, CAST(COUNT(*) AS BIGINT) AS c
-                  FROM cells GROUP BY cell4),
-         exact AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS exact_count
-                   FROM cells GROUP BY t
-                   ORDER BY exact_count DESC, t LIMIT 20),
-         tc AS (SELECT DISTINCT t, cell1, cell2, cell3, cell4 FROM cells)
-         SELECT e.t AS token, e.exact_count,
-                LEAST(c1.c, c2.c, c3.c, c4.c) AS cms_estimate
-         FROM exact e
-         JOIN tc ON tc.t = e.t
-         JOIN cnt1 c1 ON c1.cell = tc.cell1
-         JOIN cnt2 c2 ON c2.cell = tc.cell2
-         JOIN cnt3 c3 ON c3.cell = tc.cell3
-         JOIN cnt4 c4 ON c4.cell = tc.cell4""",
-
-    // x65 — the PQ quantizer replayed row-exact: per (vector, subspace)
-    // the argmin code over the 16 sliced centroids, pivoted wide. The
-    // squared distances compose the same three sequential dot folds on
-    // both engines, so assignment agrees bitwise, not just to tolerance.
-    "x65_pq_codes" ->
-      s"""WITH $pqCtes
-          SELECT vec_id,
-                 ${(0 until 8).map(s =>
-                   s"MAX(CASE WHEN sub = $s THEN code END) AS code_$s")
-                   .mkString(", ")}
-          FROM pcodes GROUP BY vec_id""",
-
-    // x66 — ADC retrieval replayed: the query-to-centroid table is
-    // recomputed in SQL from the same slices (bit-equal to the literal
-    // table the engine ships), the 8-term approximate distance sums in
-    // the same left-to-right order, the rerank-50 cut is the (adist,
-    // vec_id) total order, and the final 10 re-rank by exact cosine.
-    "x66_pq_ann" -> pqAdcAnnOracleSql,
-
-    // x77 — the stored-codes lifecycle is value-identical to the inline
-    // encode (parquet round-trips binary64/int32 exactly), so the
-    // oracle IS the x66 replay — a hash match here proves the stored
-    // path bit-equal end to end
-    "x77_pq_stored_ann" -> pqAdcAnnOracleSql,
-
-    // x67 — the int8 quantizer replayed: scale = list_max(|x|)/127,
-    // codes via TRUNC (Spark INT cast truncates, so TRUNC matches), the
-    // residual fold as one sequential list_dot_product. All-zero
-    // vectors short-circuit to (0, 0, 0) on both sides.
-    "x67_int8_quant" ->
-      """WITH qv AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                     FROM embeddings),
-          qs AS (SELECT vec_id, v,
-                        list_max(list_transform(v, x -> abs(x))) / 127.0 AS s
-                 FROM qv)
-          SELECT vec_id, round(s, 9) AS q_scale,
-                 CASE WHEN s = 0 THEN 0
-                      ELSE len(list_filter(v, x -> abs(trunc(x/s)) = 127.0))
-                 END AS n_sat,
-                 CASE WHEN s = 0 THEN 0.0
-                      ELSE round(list_dot_product(
-                             list_transform(v, x -> x - trunc(x/s)*s),
-                             list_transform(v, x -> x - trunc(x/s)*s))
-                           / len(v), 9)
-                 END AS mse
-          FROM qs""",
-
-    // x68 — the Gopher rule flags replayed: the same filtered lowercase
-    // tokenization as x9, integer char sums (CAST routes DuckDB's
-    // widened list_sum back to BIGINT), one IEEE division per ratio,
-    // per-stopword list_contains terms summed — every flag bit-equal,
-    // no rounding tolerance anywhere.
-    // x157 — closed-form domain (the urlRegDomainSql branch map) joined
-    // to the quality and gopher CTEs, one grouped rollup with the
-    // decimal-routed mean
-    "x157_domain_quality" ->
-      s"""WITH ${gopherCtesOver("documents", "text")},
-          $qualityCtes,
-          dd AS (SELECT doc_id, $urlRegDomainSql AS domain
-                 FROM documents)
-          SELECT d.domain, COUNT(*) AS n_docs,
-                 ${avgSql("q.quality")} AS mean_quality,
-                 CAST(SUM(CASE WHEN g2.r_word_count AND g2.r_mean_word_len
-                                AND g2.r_symbol_ratio AND g2.r_alpha_words
-                                AND g2.r_stopwords
-                               THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-                 CAST(SUM(CASE WHEN g2.r_word_count AND g2.r_mean_word_len
-                                AND g2.r_symbol_ratio AND g2.r_alpha_words
-                                AND g2.r_stopwords
-                               THEN 1 ELSE 0 END) AS DOUBLE)
-                   / CAST(COUNT(*) AS DOUBLE) AS keep_rate
-          FROM dd d
-          JOIN qual q ON q.doc_id = d.doc_id
-          JOIN g2 ON g2.doc_id = d.doc_id
-          GROUP BY d.domain""",
-
-    "x68_gopher_rules" ->
-      s"""WITH ${gopherCtesOver("documents", "text")}
-          SELECT doc_id, n_words, mean_word_len, hash_ratio, ellipsis_ratio,
-                 alpha_frac, sw_hits, r_word_count, r_mean_word_len,
-                 r_symbol_ratio, r_alpha_words, r_stopwords,
-                 (r_word_count AND r_mean_word_len AND r_symbol_ratio
-                  AND r_alpha_words AND r_stopwords) AS keep
-          FROM g2""",
-
-    // x69 — the recall gate replayed: the x66 candidate pipeline cut to
-    // its exact-cosine top-10, intersected with the x5 brute-force
-    // top-10, one count row
-    "x69_pq_recall" -> {
-      val dsub = 8
-      val qsl = s"list_slice($queryVectorSql, sub*$dsub + 1, sub*$dsub + $dsub)"
-      val csl = s"list_slice(pcent.cv, sub*$dsub + 1, sub*$dsub + $dsub)"
-      s"""WITH $pqCtes,
-          ptab AS (SELECT psub.sub, pcent.cid,
-                          list_dot_product($qsl, $qsl)
-                          - 2*list_dot_product($qsl, $csl)
-                          + list_dot_product($csl, $csl) AS dq
-                   FROM psub, pcent),
-          padist AS (SELECT c.vec_id,
-                     ${(0 until 8).map(s =>
-                       s"MAX(CASE WHEN c.sub = $s THEN t.dq END) AS d_$s")
-                       .mkString(", ")}
-                     FROM pcodes c
-                     JOIN ptab t ON t.sub = c.sub AND t.cid = c.code
-                     GROUP BY c.vec_id),
-          pcand AS (SELECT vec_id,
-                           ${(0 until 8).map(s => s"d_$s").mkString(" + ")} AS adist
-                    FROM padist ORDER BY adist, vec_id LIMIT 50),
-          pq10 AS (SELECT p.vec_id
-                   FROM pcand p JOIN embeddings ON embeddings.vec_id = p.vec_id
-                   ORDER BY $cosSql DESC, p.vec_id LIMIT 10),
-          brute10 AS (SELECT vec_id FROM embeddings
-                      ORDER BY $cosSql DESC, vec_id LIMIT 10)
-          SELECT COUNT(*) AS n_overlap, COUNT(*) / 10.0 AS recall_at_10
-          FROM pq10 JOIN brute10 USING (vec_id)"""
-    },
-
-    // x70 — IVF-PQ replayed: the x17 assignment/probe fragment prunes
-    // the corpus, the x66 ADC pipeline scores only the pruned ids, same
-    // rerank cut and exact re-rank. Every tiebreak and fold matches the
-    // engine bitwise.
-    "x70_ivfpq_ann" -> {
-      val dsub = 8
-      val qsl = s"list_slice($queryVectorSql, sub*$dsub + 1, sub*$dsub + $dsub)"
-      val csl = s"list_slice(pcent.cv, sub*$dsub + 1, sub*$dsub + $dsub)"
-      s"""WITH cent AS (
-            SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
-            FROM embeddings WHERE vec_id < 16),
-          pairs AS (
-            SELECT e.vec_id, c.cid,
-                   list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(c.cvec, c.cvec))) AS cc
-            FROM embeddings e, cent c),
-          assign AS (
-            SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     row_number() OVER (PARTITION BY vec_id
-                                        ORDER BY cc DESC, cid DESC) AS rn
-              FROM pairs) WHERE rn = 1),
-          probes AS (
-            SELECT cid FROM cent
-            ORDER BY list_dot_product(cvec, $queryVectorSql)
-                     / (sqrt(list_dot_product(cvec, cvec))
-                        * sqrt(list_dot_product($queryVectorSql,
-                                                $queryVectorSql))) DESC,
-                     cid
-            LIMIT 2),
-          pruned AS (
-            SELECT a.vec_id FROM assign a JOIN probes p ON p.cid = a.cid),
-          $pqCtes,
-          ptab AS (SELECT psub.sub, pcent.cid,
-                          list_dot_product($qsl, $qsl)
-                          - 2*list_dot_product($qsl, $csl)
-                          + list_dot_product($csl, $csl) AS dq
-                   FROM psub, pcent),
-          padist AS (SELECT c.vec_id,
-                     ${(0 until 8).map(s =>
-                       s"MAX(CASE WHEN c.sub = $s THEN t.dq END) AS d_$s")
-                       .mkString(", ")}
-                     FROM pcodes c
-                     JOIN pruned r ON r.vec_id = c.vec_id
-                     JOIN ptab t ON t.sub = c.sub AND t.cid = c.code
-                     GROUP BY c.vec_id),
-          pcand AS (SELECT vec_id,
-                           ${(0 until 8).map(s => s"d_$s").mkString(" + ")} AS adist
-                    FROM padist ORDER BY adist, vec_id LIMIT 50)
-          SELECT p.vec_id, round(p.adist, 6) AS adist, round($cosSql, 6) AS cos
-          FROM pcand p JOIN embeddings ON embeddings.vec_id = p.vec_id
-          ORDER BY $cosSql DESC, p.vec_id LIMIT 10"""
-    },
-
-    // x71 — the balance report replayed on the x17 assignment fragment:
-    // per-cell counts, single-row total, one exact division
-    "x71_ivf_balance" ->
-      s"""WITH cent AS (
-            SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cvec
-            FROM embeddings WHERE vec_id < 16),
-          pairs AS (
-            SELECT e.vec_id, c.cid,
-                   list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(c.cvec, c.cvec))) AS cc
-            FROM embeddings e, cent c),
-          assign AS (
-            SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     row_number() OVER (PARTITION BY vec_id
-                                        ORDER BY cc DESC, cid DESC) AS rn
-              FROM pairs) WHERE rn = 1),
-          counts AS (
-            SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vectors
-            FROM assign GROUP BY cid)
-          SELECT cid, n_vectors,
-                 CAST(n_vectors AS DOUBLE)
-                   / CAST((SELECT SUM(n_vectors) FROM counts) AS DOUBLE) AS frac
-          FROM counts""",
-
-    // x72 — residual IVFADC replayed end to end: the x17 assignment
-    // fragment yields every vector's residual (list_zip subtraction),
-    // residual codebooks are the seeds' own residuals (ids 16..31),
-    // codes are the argmin of the three-fold distance on residual
-    // slices, the per-probed-list tables rebuild from the query's
-    // residuals, and the rerank/re-rank cuts are the x70 total orders.
-    "x72_ivfadc_ann" -> {
-      val dsub = 8
-      def sl(e: String) = s"list_slice($e, sub*$dsub + 1, sub*$dsub + $dsub)"
-      s"""WITH cent AS (
-            SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS cv
-            FROM embeddings WHERE vec_id < 16),
-          pairs AS (
-            SELECT e.vec_id, c.cid,
-                   list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cv)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(c.cv, c.cv))) AS cc
-            FROM embeddings e, cent c),
-          assign AS (
-            SELECT vec_id, cid FROM (
-              SELECT vec_id, cid,
-                     row_number() OVER (PARTITION BY vec_id
-                                        ORDER BY cc DESC, cid DESC) AS rn
-              FROM pairs) WHERE rn = 1),
-          pe AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                 FROM embeddings),
-          rsub AS (SELECT range AS sub FROM range(8)),
-          rv AS (SELECT pe.vec_id, a.cid,
-                        list_transform(list_zip(pe.v, c.cv),
-                                       p2 -> p2[1] - p2[2]) AS r
-                 FROM pe
-                 JOIN assign a ON a.vec_id = pe.vec_id
-                 JOIN cent c ON c.cid = a.cid),
-          rbook AS (SELECT vec_id - 16 AS bid, r FROM rv
-                    WHERE vec_id >= 16 AND vec_id < 32),
-          rsd AS (SELECT rv.vec_id, s.sub, b.bid,
-                         list_dot_product(${sl("rv.r")}, ${sl("rv.r")})
-                         - 2*list_dot_product(${sl("rv.r")}, ${sl("b.r")})
-                         + list_dot_product(${sl("b.r")}, ${sl("b.r")}) AS d
-                  FROM rv, rsub s, rbook b),
-          rcodes AS (SELECT vec_id, sub, bid AS code FROM (
-                     SELECT vec_id, sub, bid,
-                            row_number() OVER (PARTITION BY vec_id, sub
-                                               ORDER BY d, bid) AS rn
-                     FROM rsd) WHERE rn = 1),
-          probes AS (
-            SELECT cid FROM cent
-            ORDER BY list_dot_product(cv, $queryVectorSql)
-                     / (sqrt(list_dot_product(cv, cv))
-                        * sqrt(list_dot_product($queryVectorSql,
-                                                $queryVectorSql))) DESC,
-                     cid
-            LIMIT 2),
-          qr AS (SELECT c.cid,
-                        list_transform(list_zip($queryVectorSql, c.cv),
-                                       p2 -> p2[1] - p2[2]) AS qr
-                 FROM probes p JOIN cent c ON c.cid = p.cid),
-          rtab AS (SELECT q0.cid AS pcid, s.sub, b.bid,
-                          list_dot_product(${sl("q0.qr")}, ${sl("q0.qr")})
-                          - 2*list_dot_product(${sl("q0.qr")}, ${sl("b.r")})
-                          + list_dot_product(${sl("b.r")}, ${sl("b.r")}) AS dq
-                   FROM qr q0, rsub s, rbook b),
-          radist AS (SELECT c.vec_id,
-                     ${(0 until 8).map(s =>
-                       s"MAX(CASE WHEN c.sub = $s THEN t.dq END) AS d_$s")
-                       .mkString(", ")}
-                     FROM rcodes c
-                     JOIN rv ON rv.vec_id = c.vec_id
-                     JOIN rtab t ON t.pcid = rv.cid AND t.sub = c.sub
-                                AND t.bid = c.code
-                     GROUP BY c.vec_id),
-          rcand AS (SELECT vec_id,
-                           ${(0 until 8).map(s => s"d_$s").mkString(" + ")} AS adist
-                    FROM radist ORDER BY adist, vec_id LIMIT 50)
-          SELECT r.vec_id, round(r.adist, 6) AS adist, round($cosSql, 6) AS cos
-          FROM rcand r JOIN embeddings ON embeddings.vec_id = r.vec_id
-          ORDER BY $cosSql DESC, r.vec_id LIMIT 10"""
-    },
-
-    // x73 — the audit replayed from the same five proven fragments as
-    // x36, flags instead of filters; kept is the identical conjunction
-    "x73_curation_audit" -> auditBodySql,
-
-    // x74 — the per-source rollup of the same audit: exact integer
-    // pass counts per gate (CASTs route DuckDB's HUGEINT sums back)
-    "x74_gate_rates" ->
-      s"""SELECT source,
-                 CAST(COUNT(*) AS BIGINT) AS n_docs,
-                 CAST(SUM(CASE WHEN pass_lang THEN 1 ELSE 0 END) AS BIGINT) AS n_lang,
-                 CAST(SUM(CASE WHEN pass_quality THEN 1 ELSE 0 END) AS BIGINT) AS n_quality,
-                 CAST(SUM(CASE WHEN pass_rep THEN 1 ELSE 0 END) AS BIGINT) AS n_rep,
-                 CAST(SUM(CASE WHEN pass_contam THEN 1 ELSE 0 END) AS BIGINT) AS n_contam,
-                 CAST(SUM(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
-                 CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-          FROM ($auditBodySql) audit GROUP BY source""",
-
-    // x75 — the PQ blocking replayed: wide codes from the x65 fragment,
-    // base-16 positional band keys (2 bands × 4 codes), DISTINCT
-    // collision pairs, exact cosine verify at the x20 threshold
-    "x75_pq_neardup" -> {
-      val cosAb =
-        """(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                             CAST(eb.embedding AS DOUBLE[]))
-            / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]),
-                                     CAST(ea.embedding AS DOUBLE[])))
-               * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]),
-                                       CAST(eb.embedding AS DOUBLE[])))))"""
-      s"""WITH $pqCtes,
-          pw AS (SELECT vec_id,
-                 ${(0 until 8).map(s =>
-                   s"MAX(CASE WHEN sub = $s THEN code END) AS c$s")
-                   .mkString(", ")}
-                 FROM pcodes GROUP BY vec_id),
-          pbk AS ($pqBandKeySql),
-          ppairs AS (SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b
-                     FROM pbk x JOIN pbk y
-                       ON y.band = x.band AND y.key = x.key
-                     WHERE x.vec_id < y.vec_id)
-          SELECT p.id_a, p.id_b, round($cosAb, 6) AS cos
-          FROM ppairs p
-          JOIN embeddings ea ON ea.vec_id = p.id_a
-          JOIN embeddings eb ON eb.vec_id = p.id_b
-          WHERE $cosAb >= 0.3"""
-    },
-
-    // x78 — the occupancy report replayed: same band keys, per-(band,
-    // key) counts, per-band rollup with exact integer pair mass
-    "x78_pq_band_balance" ->
-      s"""WITH $pqCtes,
-          pw AS (SELECT vec_id,
-                 ${(0 until 8).map(s =>
-                   s"MAX(CASE WHEN sub = $s THEN code END) AS c$s")
-                   .mkString(", ")}
-                 FROM pcodes GROUP BY vec_id),
-          pbk AS ($pqBandKeySql),
-          bc AS (SELECT band, key, COUNT(*) AS n
-                 FROM pbk GROUP BY band, key)
-          SELECT band, CAST(COUNT(*) AS BIGINT) AS n_keys,
-                 CAST(MAX(n) AS BIGINT) AS max_bucket,
-                 CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS n_candidate_pairs
-          FROM bc GROUP BY band""",
-
-    // x49 — both perceptual hashes rebuilt bit-by-bit from the text
-    // characters (pixel i = byte i of the doc, zero-padded; PNG gray-8
-    // round-trips losslessly; the 8×8 → 8×8 resample is the identity):
-    // aHash bit i set iff pixel_i·64 > Σ pixels, dHash bit y·7+x set iff
-    // pixel(y,x+1) > pixel(y,x)
-    "x49_image_hash" ->
-      s"WITH $imageHashCtes SELECT doc_id AS media_id, ahash_hi, ahash_lo, dhash FROM h",
-
-    // x50 — exhaustive all-pairs Hamming search over the same rebuilt
-    // aHash: the engine's 4×16-bit banding has an exact pigeonhole
-    // guarantee at maxDist ≤ 3, so blocked and exhaustive coincide
-    "x50_image_neardup" ->
-      s"""WITH $imageHashCtes
-         SELECT a.doc_id AS media_a, b.doc_id AS media_b,
-                CAST(bit_count(xor(a.ahash_hi, b.ahash_hi)) +
-                     bit_count(xor(a.ahash_lo, b.ahash_lo)) AS INTEGER) AS dist
-         FROM h a JOIN h b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.ahash_hi, b.ahash_hi)) +
-               bit_count(xor(a.ahash_lo, b.ahash_lo)) <= 3""",
-
-    // x51 — the bigram model rebuilt from scratch: same tokenization as
-    // x3/x9, add-one smoothing over the corpus vocabulary, and the same
-    // (w1, w2)-sorted sequential fold so the double sum is bit-exact
-    "x51_lm_score" ->
-      s"WITH $lmScoreCtes SELECT doc_id, n_bigrams, lm_score FROM scored",
-
-    // x81 — the x51 scores joined back to lang, then the same exact
-    // rank arithmetic both engines share (rn·3 vs n, ties broken by
-    // doc_id on a bit-identical double score)
-    "x81_ppl_buckets" ->
-      s"""WITH $lmScoreCtes,
-         wl AS (
-           SELECT s.doc_id, d.lang, s.lm_score,
-                  row_number() OVER (PARTITION BY d.lang
-                                     ORDER BY s.lm_score, s.doc_id) AS rn,
-                  COUNT(*) OVER (PARTITION BY d.lang) AS n
-           FROM scored s JOIN documents d USING (doc_id))
-         SELECT doc_id, lang, lm_score,
-                CASE WHEN rn * 3 <= n THEN 'head'
-                     WHEN rn * 3 <= 2 * n THEN 'middle'
-                     ELSE 'tail' END AS ppl_bucket
-         FROM wl""",
-
-    // x52 — the x22 splitmix64 HUGEINT replay, the corpus weight as one
-    // aggregate, and Spark's signed pmod against expected·w
-    "x52_pps_sample" ->
-      s"""WITH m0 AS (SELECT doc_id, lang, source, n_chars,
-                             doc_id::HUGEINT AS u0 FROM documents),
-          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-          sgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                      THEN uh - 18446744073709551616::HUGEINT
-                                      ELSE uh END AS BIGINT) AS sh FROM m3),
-          wt AS (SELECT GREATEST(1, CAST(SUM(n_chars) AS BIGINT)) AS w_total
-                 FROM documents)
-          SELECT doc_id, lang, source, n_chars
-          FROM sgn, wt
-          WHERE ((sh % w_total) + w_total) % w_total
-                  < CAST(n_chars AS BIGINT) * 25""",
-
-    // x53 — the same gap rule over exact epoch microseconds; windowed
-    // SUM routes through CAST AS BIGINT (DuckDB widens to HUGEINT)
-    "x53_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value
-                    FROM events),
-         g AS (SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-                                OR ts_us - lag(ts_us) OVER w > 1800000000
-                              THEN 1 ELSE 0 END AS new_sess
-               FROM e WINDOW w AS (PARTITION BY user_id
-                                   ORDER BY ts_us, event_id)),
-         s AS (SELECT *, CAST(SUM(new_sess) OVER (PARTITION BY user_id
-                              ORDER BY ts_us, event_id
-                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-               FROM g)
-         SELECT user_id, session_id,
-                COUNT(*) AS n_events,
-                MIN(ts_us) AS start_us,
-                MAX(ts_us) AS end_us,
-                MAX(ts_us) - MIN(ts_us) AS duration_us,
-                MAX(value) AS peak_value
-         FROM s GROUP BY user_id, session_id""",
-
-    // x55 — the x22 splitmix replay joined to per-language token totals
-    // (x9's tokenization), Spark's signed pmod against min(total, budget)
-    "x55_token_mix" ->
-      s"""WITH m0 AS (SELECT doc_id, lang, source, n_chars,
-                             doc_id::HUGEINT AS u0 FROM documents),
-          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-          sgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                      THEN uh - 18446744073709551616::HUGEINT
-                                      ELSE uh END AS BIGINT) AS sh FROM m3),
-          tot AS (SELECT lang,
-                         CAST(SUM(len(regexp_split_to_array(lower(text), '\\s+')))
-                              AS BIGINT) AS t_total
-                  FROM documents GROUP BY lang)
-          SELECT doc_id, lang, source, n_chars
-          FROM sgn JOIN tot USING (lang)
-          WHERE ((sh % t_total) + t_total) % t_total
-                  < LEAST(t_total, 8000)""",
-
-    // x59 — the hashing-trick embedding replayed: per-token FNV-1a (the
-    // x3 char fold), the x22 mix64 chain, signed floor-mod dims, exact
-    // integer Σc², one correctly-rounded sqrt per doc
-    "x59_hash_embed" ->
-      s"WITH $hashEmbedCtes SELECT doc_id, dim, w FROM emb",
-
-    // x60 — retrieval over the same rebuilt vectors: the query's weights
-    // are pasted as literals (the x6 hyperplane convention; the kernel is
-    // replayed driver-side by Similarity.queryWeights), the sparse dot
-    // folds in dim order, the cut is the (score DESC, doc_id) total order
-    "x60_hash_ann" -> {
-      val qw = ext.Similarity.queryWeights(HashAnnQuery, 64).toSeq.sortBy(_._1)
-      val whens = qw.map { case (d, w) => s"WHEN $d THEN $w" }.mkString(" ")
-      val dims = qw.map(_._1).mkString(", ")
-      s"""WITH $hashEmbedCtes,
-         prod AS (SELECT doc_id, dim,
-                         w * (CASE dim $whens ELSE 0 END) AS p
-                  FROM emb WHERE dim IN ($dims))
-         SELECT doc_id,
-                list_reduce(list(p ORDER BY dim), (a, b) -> a + b) AS score
-         FROM prod GROUP BY doc_id
-         ORDER BY score DESC, doc_id LIMIT 10"""
-    },
-
-    // x58 — the image dedup product replayed end-to-end: the rebuilt
-    // aHash table, exhaustive pair search (≡ the engine's banding by the
-    // pigeonhole guarantee), the x27-style recursive-closure components,
-    // and the same min-id representative rule
-    "x58_dedup_images" ->
-      s"""WITH RECURSIVE $imageHashCtes,
-         iedges AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM h a JOIN h b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.ahash_hi, b.ahash_hi)) +
-                 bit_count(xor(a.ahash_lo, b.ahash_lo)) <= 3),
-         und AS (SELECT doc_a AS s, doc_b AS t FROM iedges
-                 UNION ALL SELECT doc_b, doc_a FROM iedges),
-         cnodes AS (SELECT DISTINCT s AS id FROM und),
-         walk(id, cur) AS (
-           SELECT id, id FROM cnodes
-           UNION
-           SELECT w.id, u.t FROM walk w JOIN und u ON u.s = w.cur),
-         cc AS (SELECT id, MIN(cur) AS rep FROM walk GROUP BY id)
-         SELECT doc_id AS media_id, 'image' AS kind
-         FROM documents
-         WHERE doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)""",
-
-    // x56 — identical tokenization (x3's non-empty filter), identical
-    // window-start rule (start < n − overlap, at least one window), and
-    // list-slice + single-space re-join
-    "x56_chunk_docs" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                      t -> length(t) > 0) AS ts
-           FROM documents),
-         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
-         st AS (SELECT doc_id, ts, n,
-                       unnest(range(0, greatest(n - 8, 1), 24)) AS start
-                FROM nt)
-         SELECT doc_id,
-                CAST(start // 24 AS INTEGER) AS chunk_idx,
-                CAST(LEAST(32, n - start) AS INTEGER) AS chunk_tokens,
-                array_to_string(ts[CAST(start + 1 AS INTEGER):
-                                   CAST(start + 32 AS INTEGER)], ' ')
-                  AS chunk_text
-         FROM st""",
-
-    // x57 — first signup per user, first purchase at-or-after it, 7-day
-    // conversion flag; LEFT-JOIN null → converted = false
-    "x57_funnel" ->
-      """WITH e AS (SELECT user_id, event_type,
-                           epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
-                    FROM events),
-         s AS (SELECT user_id,
-                      MIN(CASE WHEN event_type = 'signup' THEN ts_us END)
-                        AS from_us
-               FROM e GROUP BY user_id),
-         p AS (SELECT e.user_id, MIN(e.ts_us) AS to_us
-               FROM e JOIN s USING (user_id)
-               WHERE e.event_type = 'purchase' AND e.ts_us >= s.from_us
-               GROUP BY e.user_id)
-         SELECT s.user_id, s.from_us, p.to_us,
-                COALESCE(p.to_us - s.from_us <= 604800000000, FALSE)
-                  AS converted
-         FROM s LEFT JOIN p USING (user_id)
-         WHERE s.from_us IS NOT NULL""",
-
-    // x54 — the AVI frame formula replayed: frames 0 and 2 (everyNth=2
-    // of 4), mean luminance = Σᵢ ((doc_id·11 + k·17 + i·5) mod 241) / 64
-    "x54_avi_frames" ->
-      """WITH frames AS (
-           SELECT doc_id, unnest([0, 2]) AS frame_idx FROM documents),
-         px AS (
-           SELECT doc_id, frame_idx, unnest(range(0, 64)) AS i FROM frames)
-         SELECT doc_id AS media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-                CAST(SUM((doc_id * 11 + frame_idx * 17 + i * 5) % 241)
-                     AS DOUBLE) / 64.0 AS mean_lum
-         FROM px GROUP BY doc_id, frame_idx""",
-
-    // x19 — the GIF frame formula replayed: frames 0 and 2 (everyNth=2 of
-    // 4), mean luminance = Σᵢ ((doc_id·7 + k·13 + i·3) mod 251) / 64
-    "x19_video_frames" ->
-      """WITH frames AS (
-           SELECT doc_id, unnest([0, 2]) AS frame_idx FROM documents),
-         px AS (
-           SELECT doc_id, frame_idx, unnest(range(0, 64)) AS i FROM frames)
-         SELECT doc_id AS media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-                CAST(SUM((doc_id * 7 + frame_idx * 13 + i * 3) % 251)
-                     AS DOUBLE) / 64.0 AS mean_lum
-         FROM px GROUP BY doc_id, frame_idx""",
-
-    // S4 — regenerate the fixture raster from its closed-form definition
-    // (GeoTiffFixture): 48x40 grid, a=0.25/e=-0.25/c=10/f=60 (all exact
-    // binary fractions), value = k%97 as float32 (exact), nodata k%13==0
-    "s4_geotiff_scan" ->
-      """SELECT 's4demo.tif' AS dataset,
-                CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                10.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.25 AS lon,
-                60.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.25) AS lat,
-                CASE WHEN (y.range * 48 + x.range) % 13 = 0 THEN NULL
-                     ELSE CAST((y.range * 48 + x.range) % 97 AS DOUBLE) END AS value
-         FROM range(40) y, range(48) x""",
-
-    // S4 integer — the uint8 fixture is closed-form: pixel k = (k*7)%251,
-    // nodata (255) at k%19==0, exact binary affine
-    "s4c_geotiff_int" ->
-      """SELECT 's4int.tif' AS dataset,
-                CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                70.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.125 AS lon,
-                32.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.125) AS lat,
-                CASE WHEN (y.range * 40 + x.range) % 19 = 0 THEN NULL
-                     ELSE CAST(((y.range * 40 + x.range) * 7) % 251 AS DOUBLE)
-                END AS value
-         FROM range(32) y, range(40) x""",
-
-    // S4 multi-band — the fixture raster is closed-form (sample s of
-    // pixel k is (k*(s+1))%89, per-pixel nodata at k%17==0, exact binary
-    // affine), so the oracle rebuilds the identical sample table
-    "s4b_geotiff_multiband" ->
-      """SELECT 's4rgb.tif' AS dataset, CAST(b.range AS INTEGER) AS band,
-                CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                -4.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.5 AS lon,
-                52.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.5) AS lat,
-                CASE WHEN (y.range * 40 + x.range) % 17 = 0 THEN NULL
-                     ELSE CAST(((y.range * 40 + x.range) * (b.range + 1))
-                               % 89 AS DOUBLE) END AS value
-         FROM range(24) y, range(40) x, range(3) b""",
-
-    // S7 — DuckDB's JSON reader over the same repo fixture; struct access
-    // mirrors the Spark explode+element_at projection
-    "s7_geojson_scan" ->
-      s"""SELECT 'powerplants' AS layer, f['id'] AS id,
-                 f['geometry']['coordinates'][1] AS lon,
-                 f['geometry']['coordinates'][2] AS lat,
-                 f['properties']['name'] AS name,
-                 f['properties']['plant:source'] AS source
-          FROM (SELECT unnest(features) AS f FROM read_json('$geojsonFixture'))""",
-
-    // J1 overlay — regenerate the 80×80 affine grid with range() and join
-    // on the same floored cell keys (CAST ... AS BIGINT: DuckDB FLOOR is
-    // DOUBLE, Spark floor is LONG)
-    "j1_spatial_overlay" ->
-      s"""WITH grid AS (
-            SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                   76.85 + (CAST(x.range AS DOUBLE) + 0.5) * 0.01 AS lon,
-                   29.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.01) AS lat
-            FROM range(80) y, range(80) x),
-          pts AS (
-            SELECT f['id'] AS id, f['properties']['name'] AS name,
-                   f['geometry']['coordinates'][1] AS plon,
-                   f['geometry']['coordinates'][2] AS plat
-            FROM (SELECT unnest(features) AS f FROM read_json('$geojsonFixture')))
-          SELECT g.y, g.x, p.id, p.name
-          FROM grid g JOIN pts p
-            ON CAST(FLOOR(g.lon / 0.01) AS BIGINT) = CAST(FLOOR(p.plon / 0.01) AS BIGINT)
-           AND CAST(FLOOR(g.lat / 0.01) AS BIGINT) = CAST(FLOOR(p.plat / 0.01) AS BIGINT)""",
-
-    // P6 polygon — the ray-cast written out per edge of the literal
-    // triangle, structurally identical arithmetic to GeoFns.pointInPolygon
-    // (edge 2 is horizontal: its crossing test is constant-false, kept for
-    // shape fidelity; DuckDB double division by zero yields inf, not error)
-    "p6_polygon_clip" ->
-      """WITH grid AS (
-           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                  76.0 + (CAST(x.range AS DOUBLE) + 0.5) * 0.1 AS lon,
-                  30.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-0.1) AS lat
-           FROM range(20) y, range(20) x)
-         SELECT y, x, lon, lat FROM grid
-         WHERE (CAST(((28.2 > lat) != (29.8 > lat)) AND
-                     (lon < (77.0 - 76.2) * (lat - 28.2) / (29.8 - 28.2) + 76.2) AS INTEGER)
-              + CAST(((28.2 > lat) != (28.2 > lat)) AND
-                     (lon < (76.2 - 77.8) * (lat - 28.2) / (28.2 - 28.2) + 77.8) AS INTEGER)
-              + CAST(((29.8 > lat) != (28.2 > lat)) AND
-                     (lon < (77.8 - 77.0) * (lat - 29.8) / (28.2 - 29.8) + 77.0) AS INTEGER)) % 2 = 1""",
-
-    // A7 hull — hand-checked fixture: the 5 fixture points minus the one
-    // interior point (77.30, 28.70), in the aggregator's CCW-from-anchor
-    // emit order
-    "a7_hull_dissolve" ->
-      """SELECT * FROM (VALUES
-           (0, CAST(76.95 AS DOUBLE), CAST(28.30 AS DOUBLE)),
-           (1, CAST(78.20 AS DOUBLE), CAST(29.40 AS DOUBLE)),
-           (2, CAST(77.55 AS DOUBLE), CAST(28.90 AS DOUBLE)),
-           (3, CAST(77.10 AS DOUBLE), CAST(28.55 AS DOUBLE))) AS t(i, lon, lat)""",
-
-    // A7/P6 exact clip — closed-form axis-aligned overlap; all grid and
-    // rectangle coordinates are exact binary fractions, so no rounding
-    "a7_clip_area" ->
-      """SELECT y, x, w * h AS area FROM (
-           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25,
-                                    85.8125)
-                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25,
-                                       73.0625)) AS w,
-                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25,
-                                    36.3125)
-                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25,
-                                       24.1875)) AS h
-           FROM range(80) y, range(80) x)
-         WHERE w * h > 0""",
-
-    // A7 concave clip — the L-shape = two disjoint axis-aligned rectangles
-    // ([73.0625,80.3125]×[24.1875,30.6875] ∪ [73.0625,76.6875]×
-    // [30.6875,35.1875]), so cell coverage is the sum of two closed-form
-    // overlaps; 9dp round on both sides absorbs the SH diagonal arithmetic
-    // a7_polygon_dissolve — union area by coordinate compression: distinct
-    // x/y bounds slice the plane into slabs; a slab cell is covered iff
-    // some rectangle contains it; union area = Σ covered-cell areas. All
-    // coordinates are small integers, so the double sums are exact.
-    "a7_polygon_dissolve" ->
-      """WITH rects AS (
-           SELECT (n_nationkey % 5) * 3.0 AS x0,
-                  (n_nationkey // 5) * 3.0 AS y0,
-                  (n_nationkey % 5) * 3.0
-                    + [1.0, 2.0, 4.0][(n_nationkey % 3) + 1] AS x1,
-                  (n_nationkey // 5) * 3.0
-                    + [2.0, 4.0][(n_nationkey % 2) + 1] AS y1
-           FROM nation),
-         xs AS (SELECT DISTINCT x FROM (
-                  SELECT x0 AS x FROM rects UNION ALL SELECT x1 FROM rects)),
-         xsl AS (SELECT x AS xa, lead(x) OVER (ORDER BY x) AS xb FROM xs),
-         ys AS (SELECT DISTINCT y FROM (
-                  SELECT y0 AS y FROM rects UNION ALL SELECT y1 FROM rects)),
-         ysl AS (SELECT y AS ya, lead(y) OVER (ORDER BY y) AS yb FROM ys),
-         cells AS (SELECT xa, xb, ya, yb FROM xsl, ysl
-                   WHERE xb IS NOT NULL AND yb IS NOT NULL),
-         cov AS (SELECT DISTINCT xa, xb, ya, yb
-                 FROM cells c JOIN rects r
-                   ON c.xa >= r.x0 AND c.xb <= r.x1
-                  AND c.ya >= r.y0 AND c.yb <= r.y1)
-         SELECT SUM((xb - xa) * (yb - ya)) AS union_area,
-                (SELECT COUNT(*) FROM nation) AS n_polys
-         FROM cov""",
-
-    "a7_concave_clip" ->
-      """SELECT y, x, round(wa * ha + wb * hb, 9) AS area FROM (
-           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25,
-                                    80.3125)
-                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25,
-                                       73.0625)) AS wa,
-                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25,
-                                    30.6875)
-                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25,
-                                       24.1875)) AS ha,
-                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25,
-                                    76.6875)
-                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25,
-                                       73.0625)) AS wb,
-                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25,
-                                    35.1875)
-                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25,
-                                       30.6875)) AS hb
-           FROM range(80) y, range(80) x)
-         WHERE wa * ha + wb * hb > 0""",
-
-    // A7 holes — inclusion–exclusion over closed-form rectangle overlaps:
-    // the L outer = [72,86]×[23,30] ∪ [72,79]×[30,37] (disjoint), minus
-    // holes [74,78]×[25,29] and [73,76]×[31,35]; holes sit inside the
-    // outer region and are disjoint, so no higher-order terms exist.
-    // 9dp round on both sides absorbs the SH diagonal arithmetic.
-    "a7_holes_clip" ->
-      """SELECT y, x, round(wa * ha + wb * hb - w1 * h1 - w2 * h2, 9) AS area
-         FROM (
-           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 86.0)
-                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 72.0)) AS wa,
-                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 30.0)
-                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 23.0)) AS ha,
-                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 79.0)
-                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 72.0)) AS wb,
-                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 37.0)
-                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 30.0)) AS hb,
-                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 78.0)
-                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 74.0)) AS w1,
-                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 29.0)
-                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 25.0)) AS h1,
-                  GREATEST(0, LEAST(70.0 + CAST(x.range AS DOUBLE) * 0.25 + 0.25, 76.0)
-                            - GREATEST(70.0 + CAST(x.range AS DOUBLE) * 0.25, 73.0)) AS w2,
-                  GREATEST(0, LEAST(20.0 + CAST(y.range AS DOUBLE) * 0.25 + 0.25, 35.0)
-                            - GREATEST(20.0 + CAST(y.range AS DOUBLE) * 0.25, 31.0)) AS h2
-           FROM range(80) y, range(80) x)
-         WHERE wa * ha + wb * hb - w1 * h1 - w2 * h2 > 0""",
-
-    // F7 UTM — full inverse Krüger series mirrored in SQL (see utmOracleSql)
-    "f7_utm_reproject" -> utmOracleSql,
-
-    // F7 parameterized TM — the same series for EPSG:27700 with the
-    // rectified-origin offset (see tmercOracleSql)
-    "f7_tmerc_reproject" -> tmercOracleSql,
-    "f7_osgb_datum" -> helmertOracleSql,
-    "x167_datum_cell_audit" -> datumCellAuditOracleSql,
-
-    // F7 LCC — Lambert-93 closed-form inverse mirrored in SQL
-    "f7_lcc_reproject" -> lccOracleSql,
-
-    // F7 LAEA — ETRS89-LAEA equal-area inverse mirrored in SQL
-    "f7_laea_reproject" -> laeaOracleSql,
-
-    // F7 polar stereographic — EPSG:3413 inverse mirrored in SQL
-    "f7_ps_reproject" -> psOracleSql,
-
-    // F7 sinusoidal — the MODIS-sphere inverse is two divisions and a
-    // cosine; same IEEE ops in both engines, no iteration needed
-    "f7_sinu_reproject" ->
-      s"""WITH grid AS (
-           SELECT CAST(y.range AS INTEGER) AS y, CAST(x.range AS INTEGER) AS x,
-                  1000000.0 + (CAST(x.range AS DOUBLE) + 0.5) * 1000.0 AS px,
-                  5000000.0 + (CAST(y.range AS DOUBLE) + 0.5) * (-1000.0) AS py
-           FROM range(50) y, range(50) x),
-         inv AS (
-           SELECT y, x, py / 6371007.181 AS phi, px FROM grid)
-         SELECT y, x,
-                round(phi * 180.0 / pi(), 9) AS lat,
-                round((px / (6371007.181 * cos(phi))) * 180.0 / pi(), 9)
-                  AS lon
-         FROM inv""",
-
-    "j5_asof" ->
-      """WITH p AS (SELECT event_id, user_id,
-                           CAST(ts AS TIMESTAMP) AS ts, value
-                    FROM events WHERE event_type = 'purchase'),
-              s AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
-                           value AS sig_value
-                    FROM events WHERE event_type = 'signup')
-         SELECT p.event_id, p.value, s.sig_value AS asof_sig_value
-         FROM p ASOF LEFT JOIN s
-           ON p.user_id = s.user_id AND p.ts >= s.ts""",
-
-    // x79 — the archive reassembled character-for-character: the page
-    // wrapper is closed form over (doc_id, source, text), the HTTP head
-    // is the writer's literal, Content-Length is byte length (strlen)
-    // of head + entity body, and the WARC date is integer clock
-    // arithmetic. The engine parses real gzip members; the oracle
-    // never sees a byte of gzip — agreement proves the whole
-    // write→compress→inflate→parse loop.
-    "x79_warc_scan" -> warcScanOracleSql,
-
-    // x87 — identical per-record truth: re-packing the same records
-    // into multi-member segment archives must change NOTHING about
-    // what the reader reports, so the oracle is x79's verbatim
-    "x87_warc_segments" -> warcScanOracleSql,
-
-    // x88 — the x26 cumulative-window pack assignment, rolled up twice
-    // with exact integer arithmetic and one IEEE division
-    "x88_pack_efficiency" ->
-      """WITH toks AS (
-           SELECT doc_id, source,
-                  CAST(len(regexp_split_to_array(lower(text), '\s+'))
-                       AS BIGINT) AS n_tokens
-           FROM documents),
-         c AS (
-           SELECT doc_id, source, n_tokens,
-                  SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                      ROWS UNBOUNDED PRECEDING) AS cum
-           FROM toks),
-         packs AS (
-           SELECT source, CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id,
-                  n_tokens
-           FROM c),
-         per AS (
-           SELECT source, pack_id, CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens
-           FROM packs GROUP BY source, pack_id)
-         SELECT source,
-                CAST(COUNT(*) AS BIGINT) AS n_packs,
-                CAST(SUM(pack_tokens) AS BIGINT) AS total_tokens,
-                CAST(MAX(pack_tokens) AS BIGINT) AS max_pack_tokens,
-                CAST(SUM(CASE WHEN pack_tokens > 2048 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_overflow,
-                CAST(SUM(pack_tokens) AS DOUBLE)
-                  / CAST(COUNT(*) * 2048 AS DOUBLE) AS fill_ratio
-         FROM per GROUP BY source""",
-
-    // x89 — the x28 recursive closure with the keep-longest argmax: the
-    // survivor ranks first in the (n_chars DESC, id ASC) order, exactly
-    // the engine's max(struct(score, −id)) pick
-    "x89_dedup_keep_best" ->
-      s"""WITH RECURSIVE $componentCtes,
-          members AS (SELECT c.id, c.rep, d.n_chars
-                      FROM cc c JOIN documents d ON d.doc_id = c.id),
-          win AS (SELECT id, rep,
-                         row_number() OVER (PARTITION BY rep
-                                            ORDER BY n_chars DESC, id) AS rk
-                  FROM members)
-          SELECT doc_id, lang, source, n_chars FROM documents
-          WHERE doc_id NOT IN (SELECT id FROM win WHERE rk > 1)""",
-
-    // x102 — the flat-frame formula directly: frames 0 and 2 of 4
-    // (everyNth = 2), mean luminance = the frame's single gray value
-    "x102_mjpeg_frames" ->
-      """SELECT doc_id AS media_id, CAST(k AS INTEGER) AS frame_idx,
-                CAST((doc_id * 13 + k * 29) % 256 AS DOUBLE) AS mean_lum
-         FROM documents CROSS JOIN (VALUES (0), (2)) AS ks(k)""",
-
-    // x174 — the MP4 sample-table + JPEG layers cancel (flat frames
-    // are DC-exact): same closed form as x102, different container —
-    // a hash match proves the stsc/stsz/stco demux walk end to end
-    "x174_mp4_jpeg_frames" ->
-      """SELECT doc_id AS media_id, CAST(k AS INTEGER) AS frame_idx,
-                CAST((doc_id * 13 + k * 29) % 256 AS DOUBLE) AS mean_lum
-         FROM documents CROSS JOIN (VALUES (0), (2)) AS ks(k)""",
-
-    // x100 — the HDR census rebuilt with the same integer algebra:
-    // bucket = exponent (via bin-string length) + top mantissa bits,
-    // cumulative walk per lang, integer-ceiled ranks, lower-bound
-    // recovery — every op integer, no tolerance anywhere
-    "x100_quantile_sketch" -> {
-      def lb(b: String): String =
-        s"""CASE WHEN $b < 32 THEN $b
-            ELSE (32 + ($b % 32)) *
-                 CAST(POWER(2, ($b // 32) - 1) AS BIGINT) END"""
-      s"""WITH b AS (
-           SELECT lang,
-             CASE WHEN n_chars < 32 THEN CAST(n_chars AS BIGINT)
-                  ELSE (CAST(length(bin(CAST(n_chars AS BIGINT))) - 1
-                             AS BIGINT) - 4) * 32
-                       + (CAST(n_chars AS BIGINT)
-                          // CAST(POWER(2, length(bin(CAST(n_chars AS BIGINT)))
-                                          - 6) AS BIGINT)) - 32
-             END AS bucket
-           FROM documents),
-         cnt AS (SELECT lang, bucket, COUNT(*) AS c FROM b GROUP BY 1, 2),
-         cum AS (SELECT lang, bucket, c,
-                        SUM(c) OVER (PARTITION BY lang ORDER BY bucket
-                                     ROWS UNBOUNDED PRECEDING) AS cum,
-                        SUM(c) OVER (PARTITION BY lang) AS n
-                 FROM cnt),
-         qs AS (SELECT lang,
-                  CAST(MAX(n) AS BIGINT) AS n,
-                  CAST(COUNT(*) AS INTEGER) AS n_buckets,
-                  MIN(CASE WHEN cum >= (n + 3) // 4 THEN bucket END) AS b25,
-                  MIN(CASE WHEN cum >= (n + 1) // 2 THEN bucket END) AS b50,
-                  MIN(CASE WHEN cum >= (3 * n + 3) // 4 THEN bucket END)
-                    AS b75,
-                  MIN(CASE WHEN cum >= (19 * n + 19) // 20 THEN bucket END)
-                    AS b95
-                FROM cum GROUP BY lang)
-         SELECT lang, n, n_buckets,
-                ${lb("b25")} AS q25, ${lb("b50")} AS q50,
-                ${lb("b75")} AS q75, ${lb("b95")} AS q95
-         FROM qs"""
-    },
-
-    // x99 — the normalizer replayed step for step; the domain by the
-    // same precedence-ordered suffix CASE chain
-    "x99_url_domains" ->
-      s"""WITH $urlNormCtes
-           SELECT doc_id, url, norm_url, host,
-                  ${regDomainSql("host")} AS domain
-           FROM n""",
-
-    // x104 — rollup over the same normalized URLs and domains
-    "x104_domain_rollup" ->
-      s"""WITH $urlNormCtes,
-           dd AS (SELECT norm_url, ${regDomainSql("host")} AS domain FROM n)
-           SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_urls,
-                  CAST(COUNT(DISTINCT norm_url) AS BIGINT) AS n_norm_distinct,
-                  MIN(norm_url) AS sample_url
-           FROM dd GROUP BY domain""",
-
-    // x114 — the three oracle fragments composed: the x111 listing
-    // minus crawled, paths, the extended rule table, the x109 rank
-    "x114_crawl_frontier" -> x114OracleSql,
-
-    // x114b — the stateless shape is row-identical by construction
-    // (the localCheckpoint is a materialization boundary, not a
-    // semantic one), so the oracle is x114's verbatim
-    "x114b_frontier_stateless" -> x114OracleSql,
-
-    // x112 — per-token FNV+mix64 (the hashEmbed chain) with positions,
-    // anchor flags, the chunk-id running count, the x10 rotl fold per
-    // chunk, and the census — all in HUGEINT mod-2^64
-    "x112_cdc_chunks" -> {
-      val M = "18446744073709551616::HUGEINT"
-      s"""WITH ctok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         cpt AS MATERIALIZED (
-           SELECT doc_id, unnest(list_transform(range(1, len(ts) + 1), i ->
-             {'pos': i, 'tok': ts[CAST(i AS INTEGER)]})) AS pt
-           FROM ctok),
-         cth AS MATERIALIZED (
-           SELECT doc_id, pt.pos AS pos,
-             list_reduce(
-               list_prepend(14695981039346656037::HUGEINT,
-                 list_transform(range(1, length(pt.tok) + 1), i ->
-                   unicode(substr(pt.tok, CAST(i AS INTEGER), 1))::HUGEINT)),
-               (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
-                          * 1099511628211::HUGEINT) % $M) AS f
-           FROM cpt),
-         cz1 AS (SELECT doc_id, pos, ${mulmodSql("xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM cth),
-         cz2 AS (SELECT doc_id, pos, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM cz1),
-         czf AS MATERIALIZED (SELECT doc_id, pos,
-                  xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM cz2),
-         cch AS MATERIALIZED (
-           SELECT doc_id, pos, uh,
-                  COALESCE(SUM(CASE WHEN uh % 16 = 0 THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND 1 PRECEDING), 0) AS chunk_id
-           FROM czf),
-         cfp AS MATERIALIZED (
-           SELECT doc_id, chunk_id,
-             list_reduce(
-               list_prepend(0::HUGEINT, list(uh ORDER BY pos)),
-               (a, x) -> xor((a * 32::HUGEINT) % $M
-                             + a // 576460752303423488::HUGEINT, x)) AS fp
-           FROM cch GROUP BY doc_id, chunk_id),
-         cdup AS (SELECT fp FROM (
-             SELECT fp, COUNT(DISTINCT doc_id) AS nd FROM cfp GROUP BY fp)
-           WHERE nd >= 2)
-         SELECT c.doc_id,
-                CAST(COUNT(*) AS BIGINT) AS n_chunks,
-                CAST(SUM(CASE WHEN d.fp IS NOT NULL THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_dup_chunks,
-                CAST(SUM(CASE WHEN d.fp IS NOT NULL THEN 1 ELSE 0 END)
-                     AS DOUBLE) / COUNT(*) AS dup_frac
-         FROM cfp c LEFT JOIN cdup d ON d.fp = c.fp
-         GROUP BY c.doc_id"""
-    },
-
-    // x120 — the x116 chain joined to the closed-form robots metadata;
-    // the sitemap-discovery gate and the delay pricing replay exactly
-    "x120_politeness_schedule" ->
-      s"""WITH $urlNormCtes,
-           nd AS (SELECT doc_id, ${regDomainSql("host")} AS domain,
-                         norm_url AS norm
-                  FROM n),
-           st AS (SELECT doc_id, domain, norm,
-                    DATE '2026-01-01' + CAST(doc_id % 90 AS INTEGER)
-                      AS lastmod,
-                    DATE '2026-01-15' + CAST(doc_id % 30 AS INTEGER)
-                      AS crawled_at
-                  FROM nd),
-           ld0 AS (
-             SELECT domain, norm AS u, MAX(lastmod) AS lastmod
-             FROM st WHERE doc_id % 2 = 0 GROUP BY domain, norm
-             UNION ALL
-             SELECT DISTINCT domain,
-                    'https://' || domain || '/extra/' ||
-                      CAST(t.i AS STRING) AS u,
-                    DATE '2026-03-01' + CAST(t.i AS INTEGER) AS lastmod
-             FROM st, range(0, 3) t(i)),
-           listed AS (
-             SELECT * FROM ld0
-             WHERE NOT (length(domain) % 2 = 0
-                        AND u = 'https://' || domain || '/extra/1')),
-           crawled AS (SELECT domain, norm AS u,
-                              MAX(crawled_at) AS crawled_at
-                       FROM st GROUP BY domain, norm),
-           cl AS (SELECT l.domain, l.u, l.lastmod,
-                    CASE WHEN c.crawled_at IS NULL THEN 'new'
-                         WHEN l.lastmod > c.crawled_at THEN 'stale'
-                    END AS status
-                  FROM listed l LEFT JOIN crawled c
-                    ON c.domain = l.domain AND c.u = l.u),
-           rk AS (SELECT domain, u, lastmod, status,
-                    row_number() OVER (PARTITION BY domain
-                      ORDER BY status, lastmod DESC, u) AS rnk
-                  FROM cl WHERE status IS NOT NULL),
-           meta AS (SELECT DISTINCT domain,
-                      CAST(1 + length(domain) % 5 AS DOUBLE) +
-                        CASE WHEN length(domain) % 2 = 0
-                             THEN 0.5 ELSE 0.0 END AS crawl_delay,
-                      CASE WHEN length(domain) % 4 <> 1
-                           THEN 'https://' || domain || '/sitemap.xml'
-                      END AS sitemap_url
-                    FROM st)
-           SELECT r.domain, r.u AS url, r.lastmod, r.status, r.rnk,
-                  m.crawl_delay,
-                  CAST(r.rnk - 1 AS DOUBLE) * m.crawl_delay
-                    AS fetch_at_sec
-           FROM rk r JOIN meta m ON m.domain = r.domain
-           WHERE m.sitemap_url IS NOT NULL""",
-
-    // x116 — listing and crawl state regenerated closed-form (the XML
-    // index/shard layer cancels), same classification + rank window
-    "x116_recrawl_schedule" ->
-      s"""WITH $recrawlOracleCtes
-           SELECT domain, url, lastmod, status, rnk FROM sched""",
-
-    // x137 — the two oracle chains composed: the recrawl schedule CTEs
-    // joined to the replayed 5-round rank vector, the cut on RAW
-    // priority (round after — the x127 convention)
-    "x137_ranked_frontier" -> rankedFrontierOracleSql,
-
-    // x159 — the same schedule priced by the x157 quality prior
-    "x159_quality_frontier" -> qualityFrontierOracleSql,
-
-    // x143 — the stored-rank twin shares x137's oracle VERBATIM: the
-    // rank parquet round-trips doubles exactly, so the scheduler read
-    // off the authority store must hash-match the inline power run
-    "x143_stored_rank_frontier" -> rankedFrontierOracleSql,
-
-    // x111 — the listing regenerated as the even-id distinct-norm set
-    // plus phantoms; same full-outer set classification
-    "x111_sitemap_audit" ->
-      s"""WITH $urlNormCtes,
-           nd AS (SELECT doc_id, ${regDomainSql("host")} AS domain,
-                         norm_url AS norm
-                  FROM n),
-           listed AS (
-             SELECT DISTINCT domain, norm AS u FROM nd WHERE doc_id % 2 = 0
-             UNION
-             SELECT DISTINCT domain,
-                    'https://' || domain || '/extra/' || CAST(t.i AS STRING)
-             FROM nd, range(0, 3) t(i)),
-           crawled AS (SELECT DISTINCT domain, norm AS u FROM nd),
-           fo AS (
-             SELECT COALESCE(l.domain, c.domain) AS domain,
-                    (l.u IS NOT NULL) AS in_l, (c.u IS NOT NULL) AS in_c
-             FROM listed l FULL OUTER JOIN crawled c
-               ON c.domain = l.domain AND c.u = l.u)
-           SELECT domain,
-                  CAST(SUM(CASE WHEN in_l AND in_c THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_both,
-                  CAST(SUM(CASE WHEN in_l AND NOT in_c THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_listed_only,
-                  CAST(SUM(CASE WHEN in_c AND NOT in_l THEN 1 ELSE 0 END)
-                       AS BIGINT) AS n_crawled_only
-           FROM fo GROUP BY domain""",
-
-    // x110 — the same code-point census in RE2 script classes; the
-    // dominant pick replays greatest-of-structs as row comparisons
-    "x110_script_profile" ->
-      s"""WITH t0 AS (
-           SELECT doc_id,
-                  text || repeat('水', CAST(doc_id % 4 AS INTEGER))
-                       || repeat('д', CAST(doc_id % 3 AS INTEGER)) AS t
-           FROM documents),
-         c AS (
-           SELECT doc_id, CAST(length(t) AS BIGINT) AS n_total,
-             CAST(length(t) - length(regexp_replace(t, '\\p{Latin}', '', 'g'))
-                  AS BIGINT) AS n_latin,
-             CAST(length(t) - length(regexp_replace(t, '\\p{Han}', '', 'g'))
-                  AS BIGINT) AS n_han,
-             CAST(length(t) - length(regexp_replace(t, '\\p{Cyrillic}', '', 'g'))
-                  AS BIGINT) AS n_cyr
-           FROM t0)
-         SELECT doc_id, n_total, n_latin, n_han, n_cyr,
-                CAST(n_latin AS DOUBLE) / GREATEST(n_total, 1) AS latin_frac,
-                CAST(n_han AS DOUBLE) / GREATEST(n_total, 1) AS han_frac,
-                CAST(n_cyr AS DOUBLE) / GREATEST(n_total, 1) AS cyr_frac,
-                CASE WHEN n_latin + n_han + n_cyr = 0 THEN 'und'
-                     WHEN (n_latin, 'latin') >= (n_han, 'han')
-                      AND (n_latin, 'latin') >= (n_cyr, 'cyrillic')
-                       THEN 'latin'
-                     WHEN (n_han, 'han') >= (n_cyr, 'cyrillic') THEN 'han'
-                     ELSE 'cyrillic' END AS dominant
-         FROM c""",
-
-    // x122 — the SELECTED rule table regenerated per domain branch
-    // (graftbot group on len%3==0 domains, the merged */OtherBot group
-    // otherwise; stray and EvilBot rules never appear), the same
-    // precedence rank as x109
-    "x122_robots_groups" ->
-      s"""WITH $urlNormCtes,
-           p0 AS (SELECT u.doc_id, ${regDomainSql("u.host")} AS domain,
-                         CASE WHEN u.praw LIKE '%/'
-                              THEN substr(u.praw, 1,
-                                     CAST(length(u.praw) - 1 AS INTEGER))
-                              ELSE u.praw END AS path
-                  FROM u7 u),
-           doms AS (SELECT DISTINCT domain FROM p0),
-           rl AS (
-             SELECT domain, '/src' || CAST(t.i AS STRING) AS prefix,
-                    0 AS aw
-             FROM doms, range(0, 10) t(i)
-             WHERE length(domain) % 3 = 0
-               AND (t.i + length(domain)) % 3 = 0
-             UNION ALL
-             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page',
-                    1 AS aw
-             FROM doms, range(0, 10) t(i)
-             WHERE length(domain) % 3 = 0
-               AND (t.i + length(domain)) % 2 = 0
-             UNION ALL
-             SELECT domain,
-                    '/src' || CAST(length(domain) % 7 AS STRING), 0 AS aw
-             FROM doms WHERE length(domain) % 3 <> 0
-             UNION ALL
-             SELECT domain,
-                    '/src' || CAST(length(domain) % 7 AS STRING)
-                      || '/Page', 1 AS aw
-             FROM doms WHERE length(domain) % 3 <> 0
-             UNION ALL
-             SELECT domain,
-                    '/src' || CAST((length(domain) + 1) % 7 AS STRING)
-                      || '/Page', 0 AS aw
-             FROM doms WHERE length(domain) % 3 <> 0),
-           mt AS (SELECT p.doc_id, p.domain, p.path, r.prefix, r.aw,
-                         length(r.prefix) AS plen
-                  FROM p0 p LEFT JOIN rl r
-                    ON r.domain = p.domain
-                   AND starts_with(p.path, r.prefix)),
-           rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-                    ORDER BY plen DESC NULLS LAST, aw DESC NULLS LAST,
-                             prefix DESC NULLS LAST) AS rn
-                  FROM mt)
-           SELECT doc_id, domain, path, prefix AS matched_prefix,
-                  (prefix IS NULL OR aw = 1) AS allowed
-           FROM rk WHERE rn = 1""",
-
-    // x123 — resolution regenerated closed-form per variant branch:
-    // root/base-directory string algebra over the shared closed-form
-    // base parts; the engine's fold-based remove_dot_segments cancels
-    // against the KNOWN dot patterns of each href variant
-    "x123_link_graph" ->
-      s"""WITH l0 AS (SELECT doc_id, source,
-                  $urlSchemeSql AS sch, $urlHostSql AS hst,
-                  $urlPortSql AS pp, $urlPathSql AS pth,
-                  $urlRegDomainSql AS sdom
-                FROM documents),
-           l1 AS (SELECT l0.*, CAST(t.i AS INTEGER) AS link_i,
-                  CAST((doc_id + t.i) % 8 AS INTEGER) AS v,
-                  sch || '://' || hst || pp AS root,
-                  regexp_replace(pth, '[^/]*$$', '') AS bdir
-                FROM l0, range(0, 4) t(i)),
-           l2 AS (SELECT doc_id, link_i, $hrefSqlExpr AS href,
-                  CASE v
-                    WHEN 0 THEN 'https://Hub' || CAST(doc_id % 5 AS STRING)
-                                || '.Example.COM/h/'
-                                || CAST(link_i AS STRING)
-                    WHEN 1 THEN sch || '://cdn.Example.net/lib.js'
-                    WHEN 2 THEN root || '/a/c%7ed'
-                    WHEN 3 THEN root || bdir || 'sub/page'
-                                || CAST(link_i AS STRING)
-                    WHEN 4 THEN root
-                                || regexp_replace(bdir, '[^/]*/$$', '')
-                                || 'up?x=' || CAST(doc_id % 3 AS STRING)
-                    WHEN 5 THEN root || pth || '?q='
-                                || CAST(link_i AS STRING)
-                    WHEN 6 THEN root || bdir || 'x#frag'
-                    ELSE 'https://Sink.Example.EDU/void' END AS abs_url,
-                  CASE v
-                    WHEN 0 THEN 'hub' || CAST(doc_id % 5 AS STRING)
-                                || '.example.com'
-                    WHEN 1 THEN 'cdn.example.net'
-                    WHEN 7 THEN 'sink.example.edu'
-                    ELSE lower(hst) END AS dst_host,
-                  sdom AS src_domain,
-                  CASE v
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst_domain
-                FROM l1)
-           SELECT doc_id, link_i, href, abs_url, dst_host, src_domain,
-                  dst_domain
-           FROM l2""",
-
-    // x124 — the rank vector re-learned round by round: edges
-    // regenerate closed-form (the x123 layer cancels), then 5 unrolled
-    // power rounds, each one decimal-routed contribution sum per node
-    // plus the dangling-mass scalar — the engine's expression order
-    // term for term, so the doubles match bit for bit
-    "x124_domain_pagerank" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           nn AS (SELECT COUNT(*) AS n FROM nds),
-           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
-           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
-                 FROM nds CROSS JOIN nn),
-           ${pageRankCtes(5)}
-           SELECT node, round(pr, 10) AS pr FROM pr5""",
-
-    // x158 — warm(stored pr5) + 2 rounds ≡ cold pr7 on the unchanged
-    // graph: the oracle replays the full 7-round chain
-    "x158_warm_rank" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           nn AS (SELECT COUNT(*) AS n FROM nds),
-           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
-           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
-                 FROM nds CROSS JOIN nn),
-           ${pageRankCtes(7)}
-           SELECT node, round(pr, 10) AS pr FROM pr7""",
-
-    // x127 — the same 5-round replay, cut to the top 3 by RAW rank
-    // (the engine orders before rounding — ordering by the rounded
-    // value could flip near-ties), node-ascending tiebreak
-    "x127_top_authorities" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           nn AS (SELECT COUNT(*) AS n FROM nds),
-           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
-           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
-                 FROM nds CROSS JOIN nn),
-           ${pageRankCtes(5)},
-           cut AS (SELECT node, pr FROM pr5
-                   ORDER BY pr DESC, node LIMIT 3)
-           SELECT node, round(pr, 10) AS pr FROM cut""",
-
-    // x130 — weighted rounds re-learned: edges keep COUNT(*)
-    // multiplicity, out-weight sums route through decimals, each round
-    // replays pr·(w/Σw) in the engine's expression order
-    "x130_weighted_pagerank" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst,
-                  CAST(COUNT(*) AS DOUBLE) AS w
-                FROM l0, range(0, 4) t(i)
-                GROUP BY 1, 2),
-           sw AS (SELECT src, ${graft.ops.Stable.sumSql("w", 18)} AS sw
-                FROM ed0 GROUP BY src),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           nn AS (SELECT COUNT(*) AS n FROM nds),
-           dg AS (SELECT DISTINCT src FROM ed0),
-           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
-                 FROM nds CROSS JOIN nn),
-           ${pageRankWCtes(5)}
-           SELECT node, round(pr, 10) AS pr FROM pr5""",
-
-    // x131 — personalized rounds: the teleport vector (1/|S| on the
-    // two seed domains, one of which is the dangling sink) regenerates
-    // closed-form and replaces 1/N in base + dangling terms
-    "x131_personalized_pagerank" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           ns AS (SELECT COUNT(*) AS k FROM nds
-                  WHERE node IN ('example.com', 'example.edu')),
-           ndt AS (SELECT node,
-                  CASE WHEN node IN ('example.com', 'example.edu')
-                       THEN CAST(1 AS DOUBLE) / ns.k
-                       ELSE CAST(0 AS DOUBLE) END AS t
-                FROM nds CROSS JOIN ns),
-           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
-           pr0 AS (SELECT node, t AS pr FROM ndt),
-           ${pprCtes(5)}
-           SELECT node, round(pr, 10) AS pr FROM pr5""",
-
-    // x139 — both power loops replayed in one WITH chain (the uniform
-    // x124 rounds and the q-prefixed personalized x131 rounds share
-    // ed0/dg/nds), then the engine's exact subtraction order: core =
-    // seed-run rank × (|S|/N), mass = pr − core, rel = mass / pr
-    "x139_spam_mass" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           nn AS (SELECT COUNT(*) AS n FROM nds),
-           ns AS (SELECT COUNT(*) AS k FROM nds
-                  WHERE node IN ('example.com', 'example.edu')),
-           ndt AS (SELECT node,
-                  CASE WHEN node IN ('example.com', 'example.edu')
-                       THEN CAST(1 AS DOUBLE) / ns.k
-                       ELSE CAST(0 AS DOUBLE) END AS t
-                FROM nds CROSS JOIN ns),
-           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
-           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
-                 FROM nds CROSS JOIN nn),
-           ${pageRankCtes(5)},
-           qpr0 AS (SELECT node, t AS pr FROM ndt),
-           ${pprCtes(5, "q")},
-           sm AS (SELECT a.node, a.pr,
-                    b.pr * (CAST(ns.k AS DOUBLE) / CAST(nn.n AS DOUBLE))
-                      AS core_pr
-                  FROM pr5 a JOIN qpr5 b USING (node)
-                  CROSS JOIN nn CROSS JOIN ns)
-           SELECT node, round(pr, 10) AS pr,
-                  round(core_pr, 10) AS core_pr,
-                  round(pr - core_pr, 10) AS spam_mass,
-                  round((pr - core_pr) / pr, 10) AS rel_mass
-           FROM sm""",
-
-    // x140 — the ShingleHashesAll hash family rebuilt from scratch
-    // (FNV-1a per token in the two-multiply ASCII form, polynomial
-    // 1000003 combine for bigrams, the x22 three-step mix64 replay),
-    // signed-pmod bucketing, add-one smoothed target/raw models, and
-    // the bucket-ordered DotFold mean — no rounding anywhere
-    "x140_dsir_weights" -> {
-      val M = "18446744073709551616::HUGEINT"
-      s"""WITH tok AS (
-         |  SELECT doc_id, lang,
-         |    list_filter(regexp_split_to_array(lower(text), '\\s+'),
-         |                t -> length(t) > 0) AS ts
-         |  FROM documents),
-         |th AS (
-         |  SELECT doc_id, lang, list_transform(ts, t ->
-         |    list_reduce(
-         |      list_prepend(14695981039346656037::HUGEINT,
-         |        list_transform(range(1, length(t) + 1), i ->
-         |          unicode(substr(t, CAST(i AS INTEGER), 1))::HUGEINT)),
-         |      (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
-         |                 * 1099511628211::HUGEINT) % $M)) AS hs
-         |  FROM tok),
-         |sh0 AS (
-         |  SELECT doc_id, lang, unnest(hs) AS f FROM th
-         |  UNION ALL
-         |  SELECT doc_id, lang,
-         |         unnest(list_transform(range(1, len(hs)), i ->
-         |           (hs[CAST(i AS INTEGER)] * 1000003::HUGEINT
-         |            + hs[CAST(i + 1 AS INTEGER)]) % $M)) AS f
-         |  FROM th),
-         |z1 AS (SELECT doc_id, lang, ${mulmodSql(
-                   "xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1
-         |       FROM sh0),
-         |z2 AS (SELECT doc_id, lang, ${mulmodSql(
-                   "xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2
-         |       FROM z1),
-         |zf AS (SELECT doc_id, lang,
-         |              xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM z2),
-         |sgn AS (SELECT doc_id, lang,
-         |          CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-         |                    THEN uh - 18446744073709551616::HUGEINT
-         |                    ELSE uh END AS BIGINT) AS sh FROM zf),
-         |occ AS (SELECT doc_id, lang,
-         |               ((sh % 1024) + 1024) % 1024 AS b FROM sgn),
-         |mr AS (SELECT b, COUNT(*) AS cr FROM occ GROUP BY b),
-         |mt AS (SELECT b, COUNT(*) AS ct FROM occ
-         |       WHERE lang = 'en' GROUP BY b),
-         |tot AS (SELECT COUNT(*) AS nr,
-         |               COUNT(*) FILTER (WHERE lang = 'en') AS nt
-         |        FROM occ),
-         |pd AS (SELECT doc_id, b, COUNT(*) AS m FROM occ
-         |       GROUP BY doc_id, b),
-         |valued AS (
-         |  SELECT pd.doc_id, pd.b, pd.m,
-         |    CAST(pd.m AS DOUBLE) *
-         |      ((CAST(COALESCE(mt.ct, 0) + 1 AS DOUBLE)
-         |          / CAST(tot.nt + 1024 AS DOUBLE))
-         |       / (CAST(mr.cr + 1 AS DOUBLE)
-         |          / CAST(tot.nr + 1024 AS DOUBLE))) AS val
-         |  FROM pd JOIN mr USING (b) LEFT JOIN mt USING (b)
-         |  CROSS JOIN tot)
-         |SELECT doc_id, CAST(SUM(m) AS BIGINT) AS n_grams,
-         |       list_reduce(list(val ORDER BY b), (a, b) -> a + b)
-         |         / CAST(SUM(m) AS BIGINT) AS dsir_score
-         |FROM valued GROUP BY doc_id""".stripMargin
-    },
-
-    // x141 — anchors joined back against the full scan, the exact
-    // pairwise cosine (list_dot_product ≡ the Spark fold, x5/x20-
-    // verified), the two-sided cut (self out by id, positives out by
-    // threshold on the EXACT value), and the x11 rank window
-    "x141_hard_negatives" ->
-      s"""WITH q AS (
-            SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-            FROM embeddings WHERE vec_id IN (0, 1, 2)),
-          c AS (
-            SELECT q.q_id, e.vec_id AS neg_id,
-                   list_dot_product(CAST(e.embedding AS DOUBLE[]), q.qv)
-                   / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]),
-                                            CAST(e.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(q.qv, q.qv))) AS cos
-            FROM embeddings e CROSS JOIN q
-            WHERE e.vec_id <> q.q_id),
-          f AS (
-            SELECT q_id, neg_id, cos,
-                   CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY cos DESC, neg_id) AS INTEGER) AS rank
-            FROM c WHERE cos < 0.3)
-          SELECT q_id, neg_id, rank, round(cos, 6) AS cos
-          FROM f WHERE rank <= 5""",
-
-    // x142 — the x115 per-doc byte-token stats re-aggregated per lang:
-    // same pre-tokenizer/merge-fold replay, integer sums (HUGEINT cast
-    // back to BIGINT), one IEEE division for the ratio
-    "x142_lang_fertility" ->
-      s"""WITH $byteBpeOracleCtes,
-           bstat AS (SELECT o.doc_id,
-                       CAST(COUNT(*) AS BIGINT) AS np,
-                       CAST(SUM(b.nb) AS BIGINT) AS nb,
-                       CAST(SUM(len(b.syms)) AS BIGINT) AS nt
-                     FROM boc o
-                     JOIN bb${ext.TextOps.byteBpeFixtureMerges.length} b
-                       USING (w)
-                     GROUP BY o.doc_id),
-           ag AS (SELECT d.lang,
-                         CAST(COUNT(*) AS BIGINT) AS n_docs,
-                         CAST(SUM(s.np) AS BIGINT) AS n_pretokens,
-                         CAST(SUM(s.nb) AS BIGINT) AS n_bytes,
-                         CAST(SUM(s.nt) AS BIGINT) AS n_byte_tokens
-                  FROM bstat s JOIN documents d USING (doc_id)
-                  GROUP BY d.lang)
-           SELECT lang, n_docs, n_pretokens, n_bytes, n_byte_tokens,
-                  CAST(n_bytes AS DOUBLE) / CAST(n_byte_tokens AS DOUBLE)
-                    AS bytes_per_token
-           FROM ag""",
-
-    // x144 — the KN model rebuilt from scratch: bigram types once
-    // (c2t), history counts + distinct continuations off the type
-    // table (h1), distinct histories per word (p2), the one-row type
-    // total, then the engine's exact expression tree per occurrence
-    // and the (w1,w2)-ordered fold — the x51 chain with KN algebra
-    "x144_kn_score" ->
-      s"WITH $knBigramOracleCtes SELECT doc_id, n_bigrams, kn_score FROM knsc",
-
-    // x214 — the x144 score chain feeding the per-language tercile
-    // window over the SCORE-GROUP table; the integer 3·cum ≤ n rule
-    // replays exactly and ties never split a boundary
-    "x214_ccnet_buckets" ->
-      s"""WITH $knBigramOracleCtes,
-         sl AS (SELECT k.doc_id, d.lang, k.n_bigrams,
-                       round(k.kn_score, 9) AS ppl
-                FROM knsc k JOIN documents d USING (doc_id)),
-         grp AS (SELECT lang, ppl, CAST(COUNT(*) AS BIGINT) AS c
-                 FROM sl GROUP BY 1, 2),
-         cum AS (SELECT lang, ppl,
-                        SUM(c) OVER (PARTITION BY lang ORDER BY ppl
-                                     ROWS UNBOUNDED PRECEDING) AS cum,
-                        SUM(c) OVER (PARTITION BY lang) AS n
-                 FROM grp),
-         bk AS (SELECT lang, ppl,
-                       CASE WHEN cum * 3 <= n THEN 'head'
-                            WHEN cum * 3 <= 2 * n THEN 'middle'
-                            ELSE 'tail' END AS bucket
-                FROM cum)
-         SELECT s.doc_id, s.lang, s.n_bigrams, s.ppl, b.bucket
-         FROM sl s JOIN bk b ON b.lang = s.lang AND b.ppl = s.ppl""",
-
-    // x217 — HLL replayed end to end on the x82 hash chain: unsigned
-    // bucket/suffix split at 2^54, the integer comparison-fold rho,
-    // max-register group, EXACT HUGEINT harmonic sum, and the same
-    // alpha/branch/round arithmetic with identical double literals
-    "x217_hll_vocab" -> {
-      val alpha = 0.7213 / (1.0 + 1.079 / 1024.0)
-      val two64d = math.pow(2.0, 64)
-      s"""WITH ${hashedTokenCtesOver("documents")},
-         hb AS (
-           SELECT uh,
-                  CAST(uh // 18014398509481984::HUGEINT AS BIGINT) AS b,
-                  CAST(uh % 18014398509481984::HUGEINT AS BIGINT) AS z
-           FROM zf),
-         hr AS (
-           SELECT uh, b,
-                  55 - list_sum(list_transform(range(0, 54), i ->
-                    CASE WHEN z >= CAST(power(2.0, i) AS BIGINT)
-                         THEN 1 ELSE 0 END)) AS rho
-           FROM hb),
-         regs AS (
-           SELECT b, MAX(rho) AS mr, COUNT(DISTINCT uh) AS nd
-           FROM hr GROUP BY b),
-         ag AS (
-           SELECT CAST(COUNT(*) AS BIGINT) AS n_hit,
-                  SUM(CAST(power(2.0, 64 - mr) AS HUGEINT)) AS zs_hit,
-                  CAST(SUM(nd) AS BIGINT) AS exact_distinct
-           FROM regs),
-         fin AS (
-           SELECT 1024 - n_hit AS n_zero, exact_distinct,
-                  zs_hit + (1024 - n_hit)::HUGEINT
-                    * 18446744073709551616::HUGEINT AS zsum
-           FROM ag),
-         es AS (
-           SELECT n_zero, exact_distinct,
-                  (${alpha}::DOUBLE * 1048576.0::DOUBLE) *
-                    ($two64d / CAST(zsum AS DOUBLE)) AS est_raw
-           FROM fin),
-         ev AS (
-           SELECT n_zero, exact_distinct,
-                  CASE WHEN est_raw <= 2560.0 AND n_zero > 0
-                       THEN round(1024.0 *
-                              ln(1024.0 / CAST(n_zero AS DOUBLE)), 6)
-                       ELSE round(est_raw, 6) END AS estimate
-           FROM es)
-         SELECT CAST(1024 AS BIGINT) AS m, CAST(n_zero AS BIGINT) AS n_zero,
-                estimate, exact_distinct,
-                round((estimate - CAST(exact_distinct AS DOUBLE))
-                      / CAST(exact_distinct AS DOUBLE), 6) AS rel_err
-         FROM ev"""
-    },
-
-    // x223 — the two model halves of x222 (bigramArpaModelCtes under
-    // the same prefixes), each occurrence mapped into EACH vocabulary,
-    // both walks joined by position, the λ-blend quantized at 9 dp
-    // (the x220 discipline), and the position-ordered inverse-
-    // probability fold
-    "x223_lm_mixture" -> {
-      def lgSql(l2: String, l1a: String, l1b: String) =
-        s"""(CASE WHEN $l2.lp IS NOT NULL THEN $l2.lp
-                  ELSE COALESCE($l1b.bow, 0.0) +
-                       COALESCE($l1a.lp, -99.0) END)"""
-      val mixExpr = s"""(0.5 * pow(10.0, ${lgSql("a2l", "a1l", "a1b")})
-               + 0.5 * pow(10.0, ${lgSql("b2l", "b1l", "b1b")}))"""
-      s"""WITH tok0 AS MATERIALIZED (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         tokt AS MATERIALIZED (
-           SELECT t0.* FROM tok0 t0
-           JOIN documents d USING (doc_id)
-           WHERE d.source = 'src0'),
-         ${bigramArpaModelCtes("t_", "tokt", 128)},
-         ${bigramArpaModelCtes("g_", "tok0", 128)},
-         mocc AS MATERIALIZED (
-           SELECT doc_id, CAST(u.i AS INTEGER) AS pos,
-                  ts[CAST(u.i + 1 AS INTEGER)] AS w1,
-                  ts[CAST(u.i + 2 AS INTEGER)] AS w2
-           FROM tok0, unnest(range(0, len(ts) - 1)) AS u(i)),
-         mmap AS (
-           SELECT doc_id, pos,
-                  CASE WHEN list_contains(t_vl.vws, w1)
-                       THEN w1 ELSE '<unk>' END AS a1,
-                  CASE WHEN list_contains(t_vl.vws, w2)
-                       THEN w2 ELSE '<unk>' END AS a2,
-                  CASE WHEN list_contains(g_vl.vws, w1)
-                       THEN w1 ELSE '<unk>' END AS b1,
-                  CASE WHEN list_contains(g_vl.vws, w2)
-                       THEN w2 ELSE '<unk>' END AS b2
-           FROM mocc CROSS JOIN t_vl CROSS JOIN g_vl),
-         mwalk AS (
-           SELECT j.doc_id, j.pos,
-                  CASE WHEN round($mixExpr, 9) > 0
-                       THEN round($mixExpr, 9)
-                       ELSE $mixExpr END AS pq
-           FROM mmap j
-           LEFT JOIN t_l2 a2l ON a2l.w1 = j.a1 AND a2l.w2 = j.a2
-           LEFT JOIN t_l1 a1l ON a1l.w = j.a2
-           LEFT JOIN t_l1 a1b ON a1b.w = j.a1
-           LEFT JOIN g_l2 b2l ON b2l.w1 = j.b1 AND b2l.w2 = j.b2
-           LEFT JOIN g_l1 b1l ON b1l.w = j.b2
-           LEFT JOIN g_l1 b1b ON b1b.w = j.b1)
-         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-                list_reduce(list(1.0 / pq ORDER BY pos), (a, b) -> a + b)
-                  / CAST(COUNT(*) AS BIGINT) AS mix_score_q
-         FROM mwalk GROUP BY doc_id"""
-    },
-
-    // x215 — the plants and the two-token reline rebuilt closed-form,
-    // then every C4 rule replayed on the same joined string: terminal
-    // punctuation via ends_with, word count on the empty-filtered
-    // split, the javascript/lorem-ipsum/brace contains checks
-    // verbatim (the phrase check runs on the RELINED text, so a
-    // plant split across a line break correctly does not fire —
-    // engine and oracle agree by construction)
-    "x215_c4_filters" ->
-      """WITH t0 AS (
-           SELECT doc_id, text ||
-             CASE WHEN doc_id % 31 = 0
-                  THEN ' lorem ipsum dolor sit amet' ELSE '' END ||
-             CASE WHEN doc_id % 37 = 0
-                  THEN ' function x { return }' ELSE '' END AS text
-           FROM documents),
-         tok AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\s+'),
-             t -> length(t) > 0) AS l
-           FROM t0),
-         rel AS (
-           SELECT doc_id,
-             list_transform(range(0, greatest((len(l)+1)//2, 1)), i ->
-               array_to_string(l[i*2+1 : i*2+2], ' ') ||
-               CASE WHEN (doc_id + i) % 11 = 0
-                    THEN ' javascript snippet' ELSE '' END ||
-               CASE WHEN (doc_id + i) % 3 <> 0
-                    THEN '.' ELSE '' END) AS lines
-           FROM tok),
-         flt AS (
-           SELECT doc_id, lines,
-             list_filter(lines, ln ->
-               (ends_with(ln, '.') OR ends_with(ln, '!') OR
-                ends_with(ln, '?') OR ends_with(ln, '"')) AND
-               len(list_filter(regexp_split_to_array(lower(ln), '\s+'),
-                               t -> length(t) > 0)) >= 2 AND
-               NOT contains(lower(ln), 'javascript')) AS kept
-           FROM rel)
-         SELECT doc_id,
-                CAST(len(lines) AS BIGINT) AS n_lines,
-                CAST(len(kept) AS BIGINT) AS n_kept,
-                COALESCE(array_to_string(kept, chr(10)), '') AS clean_text,
-                (len(kept) >= 3 AND
-                 NOT contains(lower(array_to_string(lines, chr(10))),
-                              'lorem ipsum') AND
-                 NOT contains(lower(array_to_string(lines, chr(10))),
-                              '{')) AS keep
-         FROM flt""",
-
-    // x149 — the trigram recursion replayed: every count table derives
-    // from the one trigram-type table (t3), continuation type counts
-    // below the top level, the same parenthesization per level
-    "x149_kn3_score" ->
-      """WITH tok AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                             t -> length(t) > 0) AS ts
-        |  FROM documents),
-        |occ AS MATERIALIZED (
-        |  SELECT doc_id, w1, w2, w3, COUNT(*) AS m
-        |  FROM (SELECT doc_id, tg[1] AS w1, tg[2] AS w2, tg[3] AS w3
-        |        FROM (SELECT doc_id,
-        |                     unnest(list_transform(range(1, len(ts) - 1), i ->
-        |                       [ts[CAST(i AS INTEGER)],
-        |                        ts[CAST(i + 1 AS INTEGER)],
-        |                        ts[CAST(i + 2 AS INTEGER)]])) AS tg
-        |              FROM tok))
-        |  GROUP BY doc_id, w1, w2, w3),
-        |t3 AS MATERIALIZED (SELECT w1, w2, w3, CAST(SUM(m) AS BIGINT) AS c3
-        |       FROM occ GROUP BY w1, w2, w3),
-        |h12 AS MATERIALIZED (SELECT w1, w2, CAST(SUM(c3) AS BIGINT) AS c12,
-        |               CAST(COUNT(*) AS BIGINT) AS n3f
-        |        FROM t3 GROUP BY w1, w2),
-        |cont2 AS MATERIALIZED (SELECT w2, w3, CAST(COUNT(*) AS BIGINT) AS ck
-        |          FROM t3 GROUP BY w2, w3),
-        |h2 AS MATERIALIZED (SELECT w2, CAST(SUM(ck) AS BIGINT) AS ctot2,
-        |              CAST(COUNT(*) AS BIGINT) AS n2f
-        |       FROM cont2 GROUP BY w2),
-        |p1 AS MATERIALIZED (SELECT w3, CAST(COUNT(*) AS BIGINT) AS n1p
-        |       FROM cont2 GROUP BY w3),
-        |tt AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS cktot FROM cont2),
-        |valued AS MATERIALIZED (
-        |  SELECT o.doc_id, o.w1, o.w2, o.w3, o.m,
-        |         CAST(o.m AS DOUBLE) /
-        |           (GREATEST(CAST(t.c3 AS DOUBLE) - 0.75, 0.0)
-        |              / CAST(h.c12 AS DOUBLE)
-        |            + ((0.75 * CAST(h.n3f AS DOUBLE))
-        |               / CAST(h.c12 AS DOUBLE))
-        |              * (GREATEST(CAST(c.ck AS DOUBLE) - 0.75, 0.0)
-        |                   / CAST(g.ctot2 AS DOUBLE)
-        |                 + ((0.75 * CAST(g.n2f AS DOUBLE))
-        |                    / CAST(g.ctot2 AS DOUBLE))
-        |                   * (CAST(p.n1p AS DOUBLE)
-        |                      / CAST(tt.cktot AS DOUBLE)))) AS val
-        |  FROM occ o
-        |  JOIN t3 t ON o.w1 = t.w1 AND o.w2 = t.w2 AND o.w3 = t.w3
-        |  JOIN h12 h ON o.w1 = h.w1 AND o.w2 = h.w2
-        |  JOIN cont2 c ON o.w2 = c.w2 AND o.w3 = c.w3
-        |  JOIN h2 g ON o.w2 = g.w2
-        |  JOIN p1 p ON o.w3 = p.w3
-        |  CROSS JOIN tt)
-        |SELECT doc_id,
-        |       CAST(SUM(m) AS BIGINT) AS n_trigrams,
-        |       list_reduce(list(val ORDER BY w1, w2, w3), (a, b) -> a + b)
-        |         / CAST(SUM(m) AS BIGINT) AS kn3_score
-        |FROM valued GROUP BY doc_id""".stripMargin,
-
-    // x166 — the order-5 KN recursion, oracle GENERATED from the order
-    // (knOracleSql): the x149 structure with four continuation levels
-    "x166_kn5_score" -> knOracleSql(5),
-
-    // x210 — the order-5 stored-ARPA lifecycle: the x166 chain plus
-    // the artifact's 9-dp quantization wrapper on the top-level
-    // probability (training corpus → only the present branch fires);
-    // the file layer cancels, so a hash match proves the distributed
-    // level build, the streamed section write, and the reload
-    "x210_kn5_arpa_stored" -> knOracleSql(5, quantized = true),
-
-    // x221 — the x220 capped+pruned stored-score replay (the shared
-    // chain CTEs) feeding the x214 tercile rule verbatim: the CCNet
-    // production composition over a BOUNDED model, both halves
-    // already proven alone
-    "x221_ccnet_stored_pruned" ->
-      s"""WITH ${knPrunedArpaChainCtes(64, 2, 2)},
-         sl AS (SELECT k.doc_id, d.lang, k.n_ngrams,
-                       round(k.kn3_score_q, 9) AS ppl
-                FROM knp k JOIN documents d USING (doc_id)),
-         grp AS (SELECT lang, ppl, CAST(COUNT(*) AS BIGINT) AS c
-                 FROM sl GROUP BY 1, 2),
-         cum AS (SELECT lang, ppl,
-                        SUM(c) OVER (PARTITION BY lang ORDER BY ppl
-                                     ROWS UNBOUNDED PRECEDING) AS cum,
-                        SUM(c) OVER (PARTITION BY lang) AS n
-                 FROM grp),
-         bk AS (SELECT lang, ppl,
-                       CASE WHEN cum * 3 <= n THEN 'head'
-                            WHEN cum * 3 <= 2 * n THEN 'middle'
-                            ELSE 'tail' END AS bucket
-                FROM cum)
-         SELECT s.doc_id, s.lang, s.n_ngrams, s.ppl, b.bucket
-         FROM sl s JOIN bk b ON b.lang = s.lang AND b.ppl = s.ppl""",
-
-    // x224 — CCNet sampled thresholds: the x144 score chain, the x22
-    // splitmix64 sample membership replayed in HUGEINT, per-language
-    // cutoffs from the SAMPLE's score-group rule (max score whose
-    // cumulative group count fits each third), and the ≤-threshold
-    // verdict over every document (NULL cutoffs fall through 'tail')
-    "x224_ccnet_sampled" ->
-      s"""WITH $knBigramOracleCtes,
-         sl AS (SELECT k.doc_id, d.lang, k.n_bigrams,
-                       round(k.kn_score, 9) AS ppl
-                FROM knsc k JOIN documents d USING (doc_id)),
-         m0 AS (SELECT doc_id, doc_id::HUGEINT AS u0 FROM sl),
-         m1 AS (SELECT doc_id, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-         m2 AS (SELECT doc_id, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-         m3 AS (SELECT doc_id, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-         sgn AS (SELECT doc_id,
-                        CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                  THEN uh - 18446744073709551616::HUGEINT
-                                  ELSE uh END AS BIGINT) AS sh FROM m3),
-         smp AS (SELECT s.* FROM sl s JOIN sgn g USING (doc_id)
-                 WHERE ((g.sh % 100) + 100) % 100 < 10),
-         sgrp AS (SELECT lang, ppl, CAST(COUNT(*) AS BIGINT) AS c
-                  FROM smp GROUP BY 1, 2),
-         scum AS (SELECT lang, ppl,
-                         SUM(c) OVER (PARTITION BY lang ORDER BY ppl
-                                      ROWS UNBOUNDED PRECEDING) AS cum,
-                         SUM(c) OVER (PARTITION BY lang) AS n
-                  FROM sgrp),
-         thr AS (SELECT lang,
-                        MAX(CASE WHEN cum * 3 <= n THEN ppl END) AS t_head,
-                        MAX(CASE WHEN cum * 3 <= 2 * n THEN ppl END) AS t_mid
-                 FROM scum GROUP BY lang)
-         SELECT s.doc_id, s.lang, s.n_bigrams, s.ppl,
-                CASE WHEN s.ppl <= t.t_head THEN 'head'
-                     WHEN s.ppl <= t.t_mid THEN 'middle'
-                     ELSE 'tail' END AS bucket
-         FROM sl s LEFT JOIN thr t ON t.lang = s.lang""",
-
-    // x225 — the distributed-read scoring route over the same order-5
-    // artifact: route equivalence means the x210 oracle verbatim
-    "x225_kn5_arpa_dist" -> knOracleSql(5, quantized = true),
-
-    // x228 — the GENERATED order-5 capped+pruned replay: the x220
-    // chain's order-generic form at KenLM's production order
-    "x228_kn5_arpa_pruned" ->
-      s"""WITH ${knPrunedOracleChainCtes(5, 64, Seq(1L, 1L, 2L, 2L, 2L))}
-         SELECT doc_id, n_ngrams, kn5_score_q FROM knp""",
-
-    // x229 — the generated order-5 pruned chain feeding the x214
-    // tercile rule: CCNet replayed at full production fidelity
-    "x229_ccnet_kn5_pruned" ->
-      s"""WITH ${knPrunedOracleChainCtes(5, 64, Seq(1L, 1L, 2L, 2L, 2L))},
-         sl AS (SELECT k.doc_id, d.lang, k.n_ngrams,
-                       round(k.kn5_score_q, 9) AS ppl
-                FROM knp k JOIN documents d USING (doc_id)),
-         grp AS (SELECT lang, ppl, CAST(COUNT(*) AS BIGINT) AS c
-                 FROM sl GROUP BY 1, 2),
-         cum AS (SELECT lang, ppl,
-                        SUM(c) OVER (PARTITION BY lang ORDER BY ppl
-                                     ROWS UNBOUNDED PRECEDING) AS cum,
-                        SUM(c) OVER (PARTITION BY lang) AS n
-                 FROM grp),
-         bk AS (SELECT lang, ppl,
-                       CASE WHEN cum * 3 <= n THEN 'head'
-                            WHEN cum * 3 <= 2 * n THEN 'middle'
-                            ELSE 'tail' END AS bucket
-                FROM cum)
-         SELECT s.doc_id, s.lang, s.n_ngrams, s.ppl, b.bucket
-         FROM sl s JOIN bk b ON b.lang = s.lang AND b.ppl = s.ppl""",
-
-    // x226 — the Bloom filter replayed end to end: 3-gram window
-    // hashes (per-token FNV, ×1000003 polynomial combine, mix64 — the
-    // x168 chain at k = 3), the benchmark slice's distinct keys, the
-    // three seed positions per key (splitmix64(key + GOLDEN·i), the
-    // seedPosCtes chain), the bit_or'd word table, the probe verdict
-    // (all three bits set), and the exact membership join — words,
-    // verdicts, and counts all rebuilt from scratch
-    "x226_bloom_decontam" -> {
-      val M = "18446744073709551616::HUGEINT"
-      val m = 1 << 15
-      s"""WITH tok0 AS MATERIALIZED (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         thl AS MATERIALIZED (
-           SELECT doc_id, list_transform(ts, t ->
-             list_reduce(
-               list_prepend(14695981039346656037::HUGEINT,
-                 list_transform(range(1, length(t) + 1), i ->
-                   unicode(substr(t, CAST(i AS INTEGER), 1))::HUGEINT)),
-               (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
-                          * 1099511628211::HUGEINT) % $M)) AS hs
-           FROM tok0),
-         w3 AS MATERIALIZED (
-           SELECT doc_id, unnest(list_transform(range(1, len(hs) - 1),
-             i -> ((((hs[CAST(i AS INTEGER)] * 1000003::HUGEINT) % $M
-                     + hs[CAST(i + 1 AS INTEGER)]) % $M
-                    * 1000003::HUGEINT) % $M
-                   + hs[CAST(i + 2 AS INTEGER)]) % $M)) AS f
-           FROM thl),
-         z1 AS (SELECT doc_id, ${mulmodSql(
-            "xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM w3),
-         z2 AS (SELECT doc_id, ${mulmodSql(
-            "xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM z1),
-         keys AS MATERIALIZED (
-           SELECT DISTINCT doc_id,
-                  xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM z2),
-         bkeys AS MATERIALIZED (
-           SELECT DISTINCT uh FROM keys WHERE doc_id % 13 = 0),
-         ${seedPosCtes("bkeys", 1, m, "bb", "uh")},
-         ${seedPosCtes("bkeys", 2, m, "bb", "uh")},
-         ${seedPosCtes("bkeys", 3, m, "bb", "uh")},
-         words AS MATERIALIZED (
-           SELECT pos // 32 AS wi,
-                  bit_or(1::BIGINT << CAST(pos % 32 AS INTEGER)) AS w
-           FROM (SELECT pos FROM bbp1 UNION ALL
-                 SELECT pos FROM bbp2 UNION ALL
-                 SELECT pos FROM bbp3)
-           GROUP BY 1),
-         ${seedPosCtes("keys", 1, m, "pp", "doc_id, uh")},
-         ${seedPosCtes("keys", 2, m, "pp", "doc_id, uh")},
-         ${seedPosCtes("keys", 3, m, "pp", "doc_id, uh")},
-         pbit AS (
-           SELECT p.doc_id, p.uh,
-                  (w.w IS NOT NULL AND
-                   (w.w & (1::BIGINT << CAST(p.pos % 32 AS INTEGER)))
-                     = (1::BIGINT << CAST(p.pos % 32 AS INTEGER))) AS bit
-           FROM (SELECT doc_id, uh, pos FROM ppp1 UNION ALL
-                 SELECT doc_id, uh, pos FROM ppp2 UNION ALL
-                 SELECT doc_id, uh, pos FROM ppp3) p
-           LEFT JOIN words w ON w.wi = p.pos // 32),
-         pv AS (SELECT doc_id, uh, bool_and(bit) AS maybe
-                FROM pbit GROUP BY 1, 2),
-         ex AS (SELECT k.doc_id, k.uh,
-                       (b.uh IS NOT NULL) AS ex
-                FROM keys k LEFT JOIN bkeys b ON b.uh = k.uh)
-         SELECT v.doc_id,
-                CAST(COUNT(*) AS BIGINT) AS n_windows,
-                CAST(SUM(CASE WHEN v.maybe THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_bloom_hits,
-                CAST(SUM(CASE WHEN e.ex THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_exact_hits
-         FROM pv v JOIN ex e ON e.doc_id = v.doc_id AND e.uh = v.uh
-         GROUP BY 1"""
-    },
-
-    // x227 — Count-Min replayed end to end: the x82 token-hash chain
-    // per occurrence, three seed buckets per occurrence into the
-    // (j, b) register census, the exact term census with the
-    // deterministic top-20 rank, each top term re-hashed from its own
-    // string, and the min-of-rows estimate — registers and estimates
-    // bit for bit
-    "x227_countmin_heavy" -> {
-      val M = "18446744073709551616::HUGEINT"
-      s"""WITH ${hashedTokenCtesOver("documents")},
-         occ AS MATERIALIZED (SELECT uh FROM zf),
-         ${seedPosCtes("occ", 1, 16, "rr", "uh")},
-         ${seedPosCtes("occ", 2, 16, "rr", "uh")},
-         ${seedPosCtes("occ", 3, 16, "rr", "uh")},
-         reg AS MATERIALIZED (
-           SELECT j, b, CAST(COUNT(*) AS BIGINT) AS c
-           FROM (SELECT 0 AS j, pos AS b FROM rrp1 UNION ALL
-                 SELECT 1, pos FROM rrp2 UNION ALL
-                 SELECT 2, pos FROM rrp3)
-           GROUP BY 1, 2),
-         census AS (
-           SELECT u.t AS term, CAST(COUNT(*) AS BIGINT) AS c_exact
-           FROM tok, unnest(ts) AS u(t) GROUP BY 1),
-         top AS (
-           SELECT term, c_exact FROM (
-             SELECT *, row_number()
-                         OVER (ORDER BY c_exact DESC, term) AS rn
-             FROM census) WHERE rn <= 20),
-         tf AS (
-           SELECT term, c_exact,
-             list_reduce(
-               list_prepend(14695981039346656037::HUGEINT,
-                 list_transform(range(1, length(term) + 1), i ->
-                   unicode(substr(term, CAST(i AS INTEGER), 1))::HUGEINT)),
-               (h, c) -> ((xor(h, c) * 1099511628211::HUGEINT) % $M
-                          * 1099511628211::HUGEINT) % $M) AS f
-           FROM top),
-         tz1 AS (SELECT term, c_exact, ${mulmodSql(
-            "xor(f, f // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM tf),
-         tz2 AS (SELECT term, c_exact, ${mulmodSql(
-            "xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM tz1),
-         tq AS (SELECT term, c_exact,
-                       xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM tz2),
-         ${seedPosCtes("tq", 1, 16, "qq", "term, c_exact, uh")},
-         ${seedPosCtes("tq", 2, 16, "qq", "term, c_exact, uh")},
-         ${seedPosCtes("tq", 3, 16, "qq", "term, c_exact, uh")},
-         est AS (
-           SELECT p.term, p.c_exact,
-                  MIN(COALESCE(r.c, 0)) AS c_est
-           FROM (SELECT term, c_exact, 0 AS j, pos FROM qqp1 UNION ALL
-                 SELECT term, c_exact, 1, pos FROM qqp2 UNION ALL
-                 SELECT term, c_exact, 2, pos FROM qqp3) p
-           LEFT JOIN reg r ON r.j = p.j AND r.b = p.pos
-           GROUP BY 1, 2)
-         SELECT term, c_exact, c_est, c_est - c_exact AS overestimate
-         FROM est"""
-    },
-
-    // x220 — the capped + pruned order-3 lifecycle: cap, census,
-    // null-safe level probabilities, prune + closure, renormalized
-    // bows, and the quantized ARPA backoff walk, all replayed
-    // (knPrunedArpaOracleSql) — a hash match proves both bounds AND
-    // the backoff branch of the stored scorer end to end
-    "x220_kn_arpa_pruned" -> knPrunedArpaOracleSql(64, 2, 2),
-
-    // x222 — two capped bigram-ARPA log chains (target trained on
-    // src0, general on the corpus — bigramArpaLogCtes twice under
-    // distinct prefixes), the cross-entropy difference, and the
-    // deterministic top-100 rank; the log-domain walk has no pow()
-    // so the whole replay is rational over 9-dp decimals
-    "x222_moore_lewis" ->
-      s"""WITH tok0 AS MATERIALIZED (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         tokt AS MATERIALIZED (
-           SELECT t0.* FROM tok0 t0
-           JOIN documents d USING (doc_id)
-           WHERE d.source = 'src0'),
-         ${bigramArpaLogCtes("t_", "tokt", 128)},
-         ${bigramArpaLogCtes("g_", "tok0", 128)},
-         ml AS (SELECT t.doc_id, t.n AS n_grams,
-                       t.h10 AS h_target, g.h10 AS h_general,
-                       g.h10 - t.h10 AS ml_score
-                FROM t_h t JOIN g_h g USING (doc_id)),
-         rk AS (SELECT *, row_number()
-                            OVER (ORDER BY ml_score DESC, doc_id) AS rn
-                FROM ml)
-         SELECT doc_id, n_grams, h_target, h_general, ml_score,
-                rn <= 100 AS selected
-         FROM rk""",
-
-    // x168 — the full DSIR replay: per-token FNV fold (the x82 ASCII
-    // two-byte trick), 2-gram polynomial combine (×1000003 mod 2⁶⁴),
-    // the mix64 finalizer in HUGEINT, signed pmod bucketing, add-one
-    // smoothed LLR with the engine's parenthesization, bucket-ordered
-    // fold
-    "x168_dsir_select" ->
-      s"""WITH doc0 AS (
-           SELECT doc_id, source,
-                  text || CASE WHEN source = 'src0'
-                               OR (source = 'src1' AND doc_id % 3 = 0)
-                          THEN repeat(' quantum flux lattice decoherence' ||
-                                      ' protocol engaged', 30)
-                          ELSE '' END AS text
-           FROM documents),
-         ${dsirCtes("doc0")},
-         rk AS (SELECT *, row_number()
-                            OVER (ORDER BY round(llr / n_grams, 9) DESC,
-                                  doc_id) AS rn
-                FROM agg)
-         SELECT doc_id, n_grams, round(llr, 9) AS llr,
-                rn <= 33 AS selected
-         FROM rk""",
-
-    // x169 — the stored-model DSIR lifecycle (the x96 proof shape):
-    // the engine builds the bucket model to parquet and scores FROM
-    // storage; the oracle replays the INLINE computation — a hash
-    // match proves the persisted path end to end. No plant: the raw
-    // corpus, weights only.
-    "x169_dsir_stored" ->
-      s"""WITH ${dsirCtes("documents")}
-         SELECT doc_id, n_grams, round(llr, 9) AS llr
-         FROM agg""",
-
-    // x170 — the container cancels: per-doc token-id census from the
-    // x82 hashed-vocab chain, shard = doc_id % 8, pos = the doc's rank
-    // within its shard (the writer's sort order)
-    "x170_binidx_scan" ->
-      s"""WITH $hashedTokenCtes,
-         tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
-                 FROM sgn),
-         agg AS (SELECT doc_id,
-                        CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                        CAST(SUM(tid) AS BIGINT) AS id_sum
-                 FROM tid GROUP BY doc_id),
-         rk AS (SELECT doc_id, doc_id % 8 AS shard,
-                       CAST(row_number() OVER (PARTITION BY doc_id % 8
-                                               ORDER BY doc_id) - 1
-                            AS INTEGER) AS pos
-                FROM documents)
-         SELECT r.shard, r.pos,
-                COALESCE(a.n_tokens, 0) AS n_tokens,
-                COALESCE(a.id_sum, 0) AS id_sum
-         FROM rk r LEFT JOIN agg a USING (doc_id)""",
-
-    // x171 — the WHOLE corpus-build chain replayed in one WITH: the
-    // robots rule table closed-form (the x109 shape, plain prefixes),
-    // the x32 scrub chain over the planted text, the x33 reline/censor,
-    // the x68 gopher signals at the tuned cuts, the x2/x27 all-pairs
-    // jaccard + recursive component closure, the x168 DSIR chain + the
-    // rounded-ratio top-180, the x26 pack window at 256, and the x82
-    // hashed-token census in the x170 shard/rank layout — every stage
-    // feeding the next, exactly as the engine composes them
-    "x171_corpus_build" ->
-      s"""WITH RECURSIVE
-         $corpusBuildChainCtes,
-         pk0 AS (SELECT doc_id, source,
-                        CAST(len(regexp_split_to_array(lower(text), '\\s+'))
-                             AS BIGINT) AS n_tokens
-                 FROM s6),
-         pk AS (SELECT doc_id, n_tokens,
-                       CAST((SUM(n_tokens) OVER (PARTITION BY source
-                               ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-                             - n_tokens) // 256 AS BIGINT) AS pack_id
-                FROM pk0),
-         ${hashedTokenCtesOver("s6", "h8")},
-         h8tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
-                   FROM h8sgn),
-         h8agg AS (SELECT doc_id,
-                          CAST(COUNT(*) AS BIGINT) AS n_tokens_idx,
-                          CAST(SUM(tid) AS BIGINT) AS id_sum
-                   FROM h8tid GROUP BY doc_id),
-         rk8 AS (SELECT doc_id, doc_id % 4 AS shard,
-                        CAST(row_number() OVER (PARTITION BY doc_id % 4
-                                                ORDER BY doc_id) - 1
-                             AS INTEGER) AS pos
-                 FROM s6)
-         SELECT s6.doc_id, s6.source, s6.n_lines, s6.n_kept,
-                pk.n_tokens, pk.pack_id, r.shard, r.pos,
-                a.n_tokens_idx, a.id_sum
-         FROM s6
-         JOIN pk USING (doc_id)
-         JOIN rk8 r USING (doc_id)
-         JOIN h8agg a USING (doc_id)""",
-
-    // x211 — the ONE-DAG trained-tokenizer corpus build: the x171
-    // chain through s6, then the tokenizer is TRAINED ON THE SURVIVORS
-    // (the production order: curate, then fit the vocabulary to the
-    // curated corpus), the survivors encode to trained byte-BPE ids,
-    // and the export is MMIDIDX shards + merges.txt/vocab.json
-    // sidecars — the artifact pair a training job actually loads. The
-    // oracle replays the corpus chain into the x172 byte-train CTEs
-    // over s6: per-doc token counts from the trained segmentation, the
-    // shard/rank layout, and roundtrip TRUE — earned in the engine
-    // only when decode(sidecar, .bin) reproduces every surviving doc.
-    "x211_corpus_build_tokenized" ->
-      s"""WITH RECURSIVE
-         $corpusBuildChainCtes,
-         ${byteTrainCtesOver(12, "s6", "text")},
-         tkagg AS (SELECT o.doc_id,
-                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_tokens
-                   FROM boc o JOIN btw12 v USING (w)
-                   GROUP BY o.doc_id),
-         rk11 AS (SELECT doc_id, doc_id % 4 AS shard,
-                         CAST(row_number() OVER (PARTITION BY doc_id % 4
-                                                 ORDER BY doc_id) - 1
-                              AS INTEGER) AS pos
-                  FROM s6)
-         SELECT s6.doc_id, s6.source, s6.n_lines, s6.n_kept,
-                r.shard, r.pos, a.n_tokens, TRUE AS roundtrip
-         FROM s6
-         JOIN rk11 r USING (doc_id)
-         JOIN tkagg a USING (doc_id)""",
-
-    // x172 — the x119 TRAINING chain replayed into the binidx layout:
-    // per-doc trained-tokenizer counts from the 12-round byteTrainCtes
-    // final state, shard = doc_id % 4, pos = rank within shard; the
-    // export/parse/sidecar/decode layers cancel (roundtrip TRUE) —
-    // the engine earns that constant only if decode(sidecar, .bin)
-    // reproduced the text
-    "x172_trained_binidx" ->
-      s"""WITH ${byteTrainCtes(12)},
-         agg AS (SELECT o.doc_id,
-                        CAST(SUM(len(v.syms)) AS BIGINT) AS n_tokens
-                 FROM boc o JOIN btw12 v USING (w)
-                 GROUP BY o.doc_id),
-         rk AS (SELECT doc_id, doc_id % 4 AS shard,
-                       CAST(row_number() OVER (PARTITION BY doc_id % 4
-                                               ORDER BY doc_id) - 1
-                            AS INTEGER) AS pos
-                FROM documents)
-         SELECT r.shard, r.pos, a.n_tokens, TRUE AS roundtrip
-         FROM rk r JOIN agg a USING (doc_id)""",
-
-    // x175 — the x26 pack window + the x82 per-doc census summed
-    // order-free per pack (+ the EOD term per member), the closed-form
-    // puid, and the x170 shard/rank layout — the concatenation itself
-    // cancels because counts and sums are order-invariant
-    "x175_packed_binidx" ->
-      s"""WITH ${hashedTokenCtesOver("documents")},
-         tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
-                 FROM sgn),
-         aggd AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok,
-                         CAST(SUM(tid) AS BIGINT) AS id_s
-                  FROM tid GROUP BY doc_id),
-         pk0 AS (SELECT doc_id, source,
-                   CAST(len(regexp_split_to_array(lower(text), '\\s+'))
-                        AS BIGINT) AS n_tokens
-                 FROM documents),
-         pk AS (SELECT doc_id, source,
-                  CAST((SUM(n_tokens) OVER (PARTITION BY source
-                          ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-                        - n_tokens) // 256 AS BIGINT) AS pack_id
-                FROM pk0),
-         grp AS (SELECT p.source, p.pack_id,
-                   CAST(substr(p.source, 4) AS BIGINT) * 65536
-                     + p.pack_id AS puid,
-                   CAST(COUNT(*) AS BIGINT) AS n_docs,
-                   CAST(SUM(COALESCE(a.n_tok, 0)) + COUNT(*)
-                        AS BIGINT) AS n_tokens_idx,
-                   CAST(SUM(COALESCE(a.id_s, 0)) + 65535 * COUNT(*)
-                        AS BIGINT) AS id_sum
-                 FROM pk p LEFT JOIN aggd a USING (doc_id)
-                 GROUP BY p.source, p.pack_id),
-         rk AS (SELECT puid, puid % 4 AS shard,
-                       CAST(row_number() OVER (PARTITION BY puid % 4
-                                               ORDER BY puid) - 1
-                            AS INTEGER) AS pos
-                FROM grp)
-         SELECT g.source, g.pack_id, r.shard, r.pos, g.n_docs,
-                g.n_tokens_idx, g.id_sum
-         FROM grp g JOIN rk r USING (puid)""",
-
-    // x173 — losslessness: the byte length replays closed-form from
-    // the fixture text (strlen = UTF-8 bytes, Spark's octet_length);
-    // `lossless` TRUE is earned only when decode(encode(text)) == text
-    // in the engine — the id↔token bijection audit
-    "x173_bpe_roundtrip" ->
-      s"""SELECT doc_id,
-                 CAST(strlen($byteTextSqlExpr) AS BIGINT) AS n_bytes,
-                 TRUE AS lossless
-          FROM documents""",
-
-    // x180 — the x56 window replay rebuilt as (uid, text) so the x82
-    // census chain runs verbatim over chunks; layout by uid; the
-    // chunker's token arithmetic and the parsed artifact must agree
-    "x180_chunked_binidx" ->
-      s"""WITH c0 AS (
-           SELECT doc_id, list_filter(
-             regexp_split_to_array(lower(text), '\\s+'),
-             t -> length(t) > 0) AS ts
-           FROM documents),
-         c1 AS (SELECT doc_id, ts, len(ts) AS n FROM c0 WHERE len(ts) > 0),
-         c2 AS (SELECT doc_id, ts, n,
-                       unnest(range(0, greatest(n - 8, 1), 24)) AS start
-                FROM c1),
-         ch AS (SELECT doc_id * 256 + (start // 24) AS doc_id,
-                       doc_id AS orig_id,
-                       CAST(start // 24 AS INTEGER) AS chunk_idx,
-                       CAST(LEAST(32, n - start) AS BIGINT) AS chunk_tokens,
-                       array_to_string(ts[CAST(start + 1 AS INTEGER):
-                                          CAST(start + 32 AS INTEGER)], ' ')
-                         AS text
-                FROM c2),
-         ${hashedTokenCtesOver("ch", "h9")},
-         h9tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
-                   FROM h9sgn),
-         h9agg AS (SELECT doc_id,
-                          CAST(COUNT(*) AS BIGINT) AS n_tokens_idx,
-                          CAST(SUM(tid) AS BIGINT) AS id_sum
-                   FROM h9tid GROUP BY doc_id),
-         rk AS (SELECT doc_id AS uid, orig_id, chunk_idx, chunk_tokens,
-                       doc_id % 4 AS shard,
-                       CAST(row_number() OVER (PARTITION BY doc_id % 4
-                                               ORDER BY doc_id) - 1
-                            AS INTEGER) AS pos
-                FROM ch)
-         SELECT r.orig_id AS doc_id, r.chunk_idx, r.shard, r.pos,
-                r.chunk_tokens, a.n_tokens_idx, a.id_sum
-         FROM rk r JOIN h9agg a ON a.doc_id = r.uid""",
-
-    // x179 — the x170 census + layout rolled to the per-shard
-    // manifest: counts/sums/the pos-mixed XOR digest are all
-    // order-independent, so the replay needs no sequence order
-    "x179_binidx_manifest" ->
-      s"""WITH $hashedTokenCtes,
-         tid AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS tid
-                 FROM sgn),
-         agg AS (SELECT doc_id,
-                        CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                        CAST(SUM(tid) AS BIGINT) AS id_sum
-                 FROM tid GROUP BY doc_id),
-         rk AS (SELECT doc_id, doc_id % 8 AS shard,
-                       CAST(row_number() OVER (PARTITION BY doc_id % 8
-                                               ORDER BY doc_id) - 1
-                            AS BIGINT) AS pos
-                FROM documents),
-         seqs AS (SELECT r.shard, r.pos,
-                         COALESCE(a.n_tokens, 0) AS n_tokens,
-                         COALESCE(a.id_sum, 0) AS id_sum
-                  FROM rk r LEFT JOIN agg a USING (doc_id))
-         SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_seqs,
-                CAST(SUM(n_tokens) AS BIGINT) AS token_sum,
-                CAST(bit_xor(xor(id_sum, pos)) AS BIGINT) AS id_digest
-         FROM seqs GROUP BY shard""",
-
-    // x145 — the x124 rank replay feeding the Hamilton apportionment:
-    // decimal-routed rank sum, the exact quota/floor/frac algebra, the
-    // one-row used-budget aggregate, and the remainder window with the
-    // engine's (frac DESC, node) order
-    "x145_crawl_budget" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           nn AS (SELECT COUNT(*) AS n FROM nds),
-           dg AS (SELECT src, COUNT(*) AS deg FROM ed0 GROUP BY src),
-           pr0 AS (SELECT node, CAST(1 AS DOUBLE) / nn.n AS pr
-                 FROM nds CROSS JOIN nn),
-           ${pageRankCtes(5)},
-           sq AS (SELECT ${graft.ops.Stable.sumSql("pr", 18)} AS spr
-                  FROM pr5),
-           qt AS (SELECT node, CAST(300 AS DOUBLE) * (pr / sq.spr)
-                           AS quota
-                  FROM pr5 CROSS JOIN sq),
-           qb AS (SELECT node, quota,
-                         CAST(floor(quota) AS BIGINT) AS base,
-                         quota - floor(quota) AS frac
-                  FROM qt),
-           us AS (SELECT CAST(SUM(base) AS BIGINT) AS used FROM qb),
-           rk AS (SELECT qb.*, us.used,
-                         row_number() OVER (ORDER BY frac DESC, node)
-                           AS rn
-                  FROM qb CROSS JOIN us)
-           SELECT node, round(quota, 10) AS quota,
-                  base + CASE WHEN rn <= 300 - used
-                              THEN 1 ELSE 0 END AS n_fetch
-           FROM rk""",
-
-    // x146 — all nine signed splitmix64 weights rebuilt, then both
-    // first-match argmax chains (ties to the smaller index, the
-    // engine's CASE order) and the moved flag
-    "x146_rendezvous_shards" -> {
-      def caseChain(n: Int, m: String): String =
-        (0 until n - 1).map(s => s"WHEN sh$s = $m THEN $s")
-          .mkString("CASE ", " ", s" ELSE ${n - 1} END")
-      val g8 = (0 until 8).map(s => s"sh$s").mkString("GREATEST(", ", ", ")")
-      val g9 = (0 until 9).map(s => s"sh$s").mkString("GREATEST(", ", ", ")")
-      s"""WITH ${rdvCtes(9)},
-           mm AS (SELECT doc_id,
-                         ${(0 until 9).map(s => s"sh$s").mkString(", ")},
-                         $g8 AS m8, $g9 AS m9
-                  FROM rd8),
-           sel AS (SELECT doc_id,
-                          ${caseChain(8, "m8")} AS shard_before,
-                          ${caseChain(9, "m9")} AS shard_after
-                   FROM mm)
-           SELECT doc_id, shard_before, shard_after,
-                  shard_before <> shard_after AS moved
-           FROM sel"""
-    },
-
-    // x147 — prefix and full-width cuts replayed (list slice + the
-    // same dot-product folds), overlap counted — the x135 shape with
-    // truncation instead of quantization
-    "x147_matryoshka_recall" ->
-      s"""WITH ap AS (
-            SELECT vec_id FROM embeddings
-            ORDER BY list_dot_product(CAST(embedding[1:32] AS DOUBLE[]),
-                                      $queryVectorPrefix32Sql)
-                     / (sqrt(list_dot_product(
-                          CAST(embedding[1:32] AS DOUBLE[]),
-                          CAST(embedding[1:32] AS DOUBLE[])))
-                        * sqrt(list_dot_product($queryVectorPrefix32Sql,
-                                                $queryVectorPrefix32Sql)))
-                     DESC, vec_id
-            LIMIT 10),
-          ex AS (SELECT vec_id FROM embeddings
-                 ORDER BY $cosSql DESC, vec_id LIMIT 10)
-          SELECT COUNT(*) AS n_overlap,
-                 CAST(COUNT(*) AS DOUBLE) / 10 AS recall_at_10
-          FROM ap JOIN ex USING (vec_id)""",
-
-    // x135 — approx and exact top-10 replayed, overlap counted
-    "x135_binary_recall" ->
-      s"""WITH $binaryAnnCandCtes,
-           approx AS (SELECT vec_id FROM cand
-                      ORDER BY $cosSql DESC, vec_id LIMIT 10),
-           exact AS (SELECT vec_id FROM embeddings
-                     ORDER BY $cosSql DESC, vec_id LIMIT 10)
-           SELECT COUNT(*) AS n_overlap,
-                  CAST(COUNT(*) AS DOUBLE) / 10 AS recall_at_10
-           FROM approx JOIN exact USING (vec_id)""",
-
-    // x136 — the edge families regenerate closed-form; reciprocity via
-    // the reversed-edge equi-join, degrees as grouped counts
-    "x136_degree_report" ->
-      """WITH b AS (SELECT DISTINCT CAST(doc_id % 12 AS INTEGER) AS i
-                  FROM documents),
-           ed AS (SELECT 'site' || CAST(i AS STRING) || '.example.com'
-                           AS src,
-                         'site' || CAST((i + 3) % 12 AS STRING) ||
-                           '.example.com' AS dst
-                  FROM b
-                  UNION
-                  SELECT 'site' || CAST(i AS STRING) || '.example.com',
-                         'site' || CAST((i + 6) % 12 AS STRING) ||
-                           '.example.com'
-                  FROM b WHERE i % 2 = 0),
-           nds AS (SELECT DISTINCT src AS node FROM ed
-                   UNION SELECT DISTINCT dst FROM ed),
-           od AS (SELECT src AS node, COUNT(*) AS o FROM ed GROUP BY 1),
-           idg AS (SELECT dst AS node, COUNT(*) AS ii FROM ed GROUP BY 1),
-           rc AS (SELECT e.src AS node, COUNT(*) AS r
-                  FROM ed e JOIN ed f
-                    ON f.src = e.dst AND f.dst = e.src
-                  GROUP BY 1)
-           SELECT n.node,
-                  CAST(COALESCE(od.o, 0) AS BIGINT) AS out_deg,
-                  CAST(COALESCE(idg.ii, 0) AS BIGINT) AS in_deg,
-                  CAST(COALESCE(rc.r, 0) AS BIGINT) AS n_reciprocal
-           FROM nds n
-           LEFT JOIN od ON od.node = n.node
-           LEFT JOIN idg ON idg.node = n.node
-           LEFT JOIN rc ON rc.node = n.node""",
-
-    // x138 — the ordered-pair self-join on the source key replayed
-    "x138_cocitation" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i))
-           SELECT x.dst AS d1, y.dst AS d2, COUNT(*) AS n_common
-           FROM ed0 x JOIN ed0 y
-             ON y.src = x.src AND x.dst < y.dst
-           GROUP BY 1, 2""",
-
-    // x134 — the two mutually-recursive vectors re-learned: unrolled
-    // auth/hub half-rounds with decimal sums and IEEE sqrt/divide
-    "x134_hits" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           hb0 AS (SELECT node, CAST(1 AS DOUBLE) AS hub FROM nds),
-           ${hitsCtes(5)}
-           SELECT h.node, round(h.hub, 10) AS hub,
-                  round(t.auth, 10) AS auth
-           FROM hb5 h JOIN at5 t ON t.node = h.node""",
-
-    // x133 — the island labels via a RECURSIVE min-label closure over
-    // the undirected edge set (the hash layer is engine-internal and
-    // cancels; 12 nodes make the closure trivial for the oracle while
-    // the engine runs the real log-round contraction)
-    "x133_crawl_islands" ->
-      """WITH RECURSIVE
-           ed AS (SELECT DISTINCT
-                    'site' || CAST(doc_id % 12 AS STRING) ||
-                      '.example.com' AS a,
-                    'site' || CAST((doc_id % 12 + 3) % 12 AS STRING) ||
-                      '.example.com' AS b
-                  FROM documents),
-           ue AS (SELECT a, b FROM ed UNION SELECT b, a FROM ed),
-           nds AS (SELECT DISTINCT a AS node FROM ue),
-           r(n, x) AS (
-             SELECT node, node FROM nds
-             UNION
-             SELECT r.n, ue.b FROM r JOIN ue ON ue.a = r.x),
-           isl AS (SELECT n AS node, MIN(x) AS island FROM r GROUP BY n),
-           sz AS (SELECT island, COUNT(*) AS island_size FROM isl
-                  GROUP BY island)
-           SELECT i.node, i.island, s.island_size
-           FROM isl i JOIN sz s ON s.island = i.island""",
-
-    // x129 — host/path/query regenerate closed-form per variant (the
-    // URL-parse layer is oracle-proven in x99/x109); depth as the '/'
-    // count, skeletons via the same digit-collapse regex, the tuple
-    // distinct as a '?'-joined string (injective here: '' queries,
-    // '?'-free paths)
-    "x129_crawl_traps" ->
-      """WITH u0 AS (SELECT doc_id,
-             CASE CAST(doc_id % 4 AS INTEGER)
-               WHEN 0 THEN 'pages.example.com'
-               WHEN 1 THEN 'deep.example.com'
-               WHEN 2 THEN 'app.example.com'
-               ELSE 'static.example.org' END AS host,
-             CASE CAST(doc_id % 4 AS INTEGER)
-               WHEN 0 THEN '/p/' || CAST(doc_id AS STRING)
-               WHEN 1 THEN '/a/b/c/d/e/f/g/h/i/x' ||
-                           CAST(doc_id % 3 AS STRING)
-               WHEN 2 THEN '/list'
-               ELSE '/' || CASE CAST(doc_id % 3 AS INTEGER)
-                             WHEN 0 THEN 'about' WHEN 1 THEN 'contact'
-                             ELSE 'pricing' END END AS path,
-             CASE WHEN doc_id % 4 = 2
-                  THEN 'session=' || CAST(doc_id AS STRING) ||
-                       '&page=' || CAST(doc_id % 7 AS STRING)
-                  ELSE '' END AS q
-           FROM documents),
-           agg AS (SELECT host,
-             COUNT(*) AS n_urls,
-             MAX(CAST(length(path) - length(replace(path, '/', ''))
-                 AS INTEGER)) AS max_depth,
-             COUNT(DISTINCT path) AS n_paths,
-             COUNT(DISTINCT regexp_replace(path, '[0-9]+', 'N', 'g'))
-               AS n_skeletons,
-             COUNT(DISTINCT path || '?' || q) AS n_path_queries
-           FROM u0 GROUP BY host)
-           SELECT host, n_urls, max_depth, n_paths, n_skeletons,
-                  n_path_queries,
-                  CAST(n_paths AS DOUBLE) / CAST(n_skeletons AS DOUBLE)
-                    AS path_fanout,
-                  CAST(n_path_queries AS DOUBLE) / CAST(n_paths AS DOUBLE)
-                    AS query_fanout,
-                  (max_depth > 8
-                   OR CAST(n_paths AS DOUBLE) /
-                      CAST(n_skeletons AS DOUBLE) > 4.0
-                   OR CAST(n_path_queries AS DOUBLE) /
-                      CAST(n_paths AS DOUBLE) > 4.0) AS is_trap
-           FROM agg""",
-
-    // x128 — edges regenerate closed-form (the x124 convention) and
-    // the anchor text appears DECODED per variant: the expected output
-    // of the engine's entity decoder, not a replay of it — a decoder
-    // bug cannot cancel
-    "x128_anchor_census" ->
-      s"""WITH $anchorCtes
-           SELECT ddom AS dst_domain, term,
-                  COUNT(*) AS n_links,
-                  CAST(SUM(CASE WHEN ii THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n_internal,
-                  COUNT(DISTINCT doc_id) AS n_src_docs
-           FROM tm WHERE length(term) > 0
-           GROUP BY 1, 2""",
-
-    // x132 — BM25 over ANCHOR text: per-domain tf/dl/df aggregate from
-    // the same decoded term layer (tf and dl are order-free sums, so
-    // the engine's concat-then-tokenize equals the per-link census);
-    // the scoring expression replays x34's IEEE order with the same
-    // written-out constants
-    "x132_anchor_bm25" ->
-      s"""WITH $anchorCtes,
-           per AS (SELECT ddom AS doc_id,
-                  CAST(COUNT(*) AS DOUBLE) AS dl,
-                  CAST(SUM(CASE WHEN term = 'jerry' THEN 1 ELSE 0 END)
-                       AS DOUBLE) AS tf_jerry,
-                  CAST(SUM(CASE WHEN term = 'archive' THEN 1 ELSE 0 END)
-                       AS DOUBLE) AS tf_archive,
-                  CAST(SUM(CASE WHEN term = 'home' THEN 1 ELSE 0 END)
-                       AS DOUBLE) AS tf_home
-                FROM tm WHERE length(term) > 0
-                GROUP BY ddom),
-           stats AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n_docs,
-                  SUM(dl) AS sum_dl,
-                  SUM(CASE WHEN tf_jerry > 0 THEN 1.0 ELSE 0.0 END)
-                    AS df_jerry,
-                  SUM(CASE WHEN tf_archive > 0 THEN 1.0 ELSE 0.0 END)
-                    AS df_archive,
-                  SUM(CASE WHEN tf_home > 0 THEN 1.0 ELSE 0.0 END)
-                    AS df_home
-                FROM per),
-           scored AS (SELECT p.doc_id, p.dl,
-                  ((s.n_docs - s.df_jerry + 0.5) / (s.df_jerry + 0.5))
-                    * (p.tf_jerry * (1.2 + 1.0))
-                    / (p.tf_jerry + 1.2 * (1.0 - 0.75 + 0.75 * p.dl
-                                           / (s.sum_dl / s.n_docs)))
-                  + ((s.n_docs - s.df_archive + 0.5) / (s.df_archive + 0.5))
-                    * (p.tf_archive * (1.2 + 1.0))
-                    / (p.tf_archive + 1.2 * (1.0 - 0.75 + 0.75 * p.dl
-                                             / (s.sum_dl / s.n_docs)))
-                  + ((s.n_docs - s.df_home + 0.5) / (s.df_home + 0.5))
-                    * (p.tf_home * (1.2 + 1.0))
-                    / (p.tf_home + 1.2 * (1.0 - 0.75 + 0.75 * p.dl
-                                          / (s.sum_dl / s.n_docs)))
-                  AS score
-                FROM per p CROSS JOIN stats s)
-           SELECT doc_id, dl, score FROM scored WHERE score > 0
-           ORDER BY score DESC, doc_id LIMIT 5""",
-
-    // x125 — the sign words rebuilt from scratch (31-bit-safe shifts),
-    // both ordering cuts replayed with the engine's tiebreaks
-    "x125_binary_ann" -> binaryAnnOracleSql,
-
-    // x126 — the stored-words lifecycle is value-identical to the
-    // inline packing (parquet stores int64 exactly), so the oracle is
-    // the same replay (the x77/x66 convention)
-    "x126_binary_stored_ann" -> binaryAnnOracleSql,
-
-    // x109 — the rule table regenerated from the same closed form, the
-    // same longest-prefix / allow-wins precedence as a window rank
-    "x109_robots_gate" ->
-      s"""WITH $urlNormCtes,
-           p0 AS (SELECT u.doc_id, ${regDomainSql("u.host")} AS domain,
-                         CASE WHEN u.praw LIKE '%/'
-                              THEN substr(u.praw, 1,
-                                     CAST(length(u.praw) - 1 AS INTEGER))
-                              ELSE u.praw END AS path
-                  FROM u7 u),
-           doms AS (SELECT DISTINCT domain FROM p0),
-           rl AS (
-             SELECT domain, '/src' || CAST(t.i AS STRING) AS prefix,
-                    0 AS aw, 0 AS kind,
-                    '/src' || CAST(t.i AS STRING) AS pre, '' AS suf
-             FROM doms, range(0, 10) t(i)
-             WHERE (t.i + length(domain)) % 3 = 0
-             UNION ALL
-             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page',
-                    1 AS aw, 0 AS kind,
-                    '/src' || CAST(t.i AS STRING) || '/Page', ''
-             FROM doms, range(0, 10) t(i)
-             WHERE (t.i + length(domain)) % 2 = 0
-             UNION ALL
-             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page/c:0',
-                    0 AS aw, 0 AS kind,
-                    '/src' || CAST(t.i AS STRING) || '/Page/c:0', ''
-             FROM doms, range(0, 10) t(i)
-             WHERE (t.i + length(domain)) % 5 = 1
-             UNION ALL
-             SELECT domain, '/src' || CAST(t.i AS STRING) || '*/c:0$$',
-                    0 AS aw, 1 AS kind,
-                    '/src' || CAST(t.i AS STRING), '/c:0'
-             FROM doms, range(0, 10) t(i)
-             WHERE (t.i + length(domain)) % 4 = 1
-             UNION ALL
-             SELECT domain, '/src' || CAST(t.i AS STRING) || '/Page/*',
-                    1 AS aw, 0 AS kind,
-                    '/src' || CAST(t.i AS STRING) || '/Page/', ''
-             FROM doms, range(0, 10) t(i)
-             WHERE (t.i + length(domain)) % 7 = 3),
-           mt AS (SELECT p.doc_id, p.domain, p.path, r.prefix, r.aw,
-                         length(r.prefix) AS plen
-                  FROM p0 p LEFT JOIN rl r
-                    ON r.domain = p.domain
-                   AND (CASE WHEN r.kind = 1
-                        THEN starts_with(p.path, r.pre)
-                             AND ends_with(p.path, r.suf)
-                             AND length(p.path) >=
-                                 length(r.pre) + length(r.suf)
-                        ELSE starts_with(p.path, r.pre) END)),
-           rk AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-                    ORDER BY plen DESC NULLS LAST, aw DESC NULLS LAST,
-                             prefix DESC NULLS LAST) AS rn
-                  FROM mt)
-           SELECT doc_id, domain, path, prefix AS matched_prefix,
-                  (prefix IS NULL OR aw = 1) AS allowed
-           FROM rk WHERE rn = 1""",
-
-    // x108 — the merge-loop CTEs' final vocabulary state carries the
-    // subword STRINGS; unnest weighted by word occurrence, same cut
-    "x108_subword_census" ->
-      s"""WITH $bpeOracleCtes,
-           sub AS (SELECT unnest(v.syms) AS subword
-                   FROM wordocc o
-                   JOIN b${ext.TextOps.bpeFixtureMerges.length} v
-                     ON v.w = o.w)
-           SELECT subword, CAST(COUNT(*) AS BIGINT) AS n
-           FROM sub GROUP BY subword
-           ORDER BY n DESC, subword LIMIT 20""",
-
-    // x107 — the x99 domain chain feeding the x35 threshold + splitmix
-    // coin, replayed end to end
-    "x107_domain_mix" ->
-      s"""WITH $urlNormCtes,
-          dom AS MATERIALIZED (
-            SELECT doc_id, ${regDomainSql("host")} AS domain FROM n),
-          cnt AS (SELECT domain, COUNT(*) AS n_d FROM dom GROUP BY 1),
-          thr AS (SELECT domain,
-                    CAST(floor(least(1.0, 8.0 / sqrt(CAST(n_d AS DOUBLE)))
-                               * 1048576) AS BIGINT) AS keep_below
-                  FROM cnt),
-          m0 AS (SELECT d.doc_id, g.domain, d.source, d.n_chars,
-                        t.keep_below, d.doc_id::HUGEINT AS u0
-                 FROM documents d JOIN dom g USING (doc_id)
-                 JOIN thr t ON t.domain = g.domain),
-          m1 AS (SELECT *, ${mulmodSql("xor(u0, u0 // 1073741824::HUGEINT)", Mix64C1)} AS u1 FROM m0),
-          m2 AS (SELECT *, ${mulmodSql("xor(u1, u1 // 134217728::HUGEINT)", Mix64C2)} AS u2 FROM m1),
-          m3 AS (SELECT *, xor(u2, u2 // 2147483648::HUGEINT) AS uh FROM m2),
-          sgn AS (SELECT *, CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                                      THEN uh - 18446744073709551616::HUGEINT
-                                      ELSE uh END AS BIGINT) AS sh FROM m3)
-          SELECT doc_id, domain, source, n_chars FROM sgn
-          WHERE ((sh % 1048576) + 1048576) % 1048576 < keep_below""",
-
-    // x105 — training re-learned round by round; every rule and count
-    // must match the engine's argmax sequence exactly
-    "x105_bpe_train" -> {
-      val union = (1 to 12).map(k =>
-        s"""SELECT CAST($k AS INTEGER) AS rank, p1 AS l_sym,
-                   p2 AS r_sym, cnt AS pair_count FROM tt$k""")
-        .mkString("\n UNION ALL ")
-      s"WITH ${bpeTrainCtes(12)} $union"
-    },
-
-    // x106 — tokenize with the re-learned table: per-word subword
-    // counts come straight from the final training state tw12
-    "x106_bpe_trained_tokens" ->
-      s"""WITH ${bpeTrainCtes(12)},
-           agg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-                          CAST(SUM(len(v.syms)) AS BIGINT) AS n_bpe_tokens
-                   FROM twordocc o JOIN tw12 v USING (w)
-                   GROUP BY o.doc_id)
-           SELECT doc_id, n_words, n_bpe_tokens,
-                  CAST(n_bpe_tokens AS DOUBLE) / CAST(n_words AS DOUBLE)
-                    AS fertility
-           FROM agg""",
-
-    // x121 — the x103 pack window denominated by the replayed BYTE
-    // token counts; docs with no pre-tokens pack at zero
-    "x121_bytebpe_pack" ->
-      s"""WITH $byteBpeOracleCtes,
-           btoks AS (
-             SELECT d.doc_id, d.source,
-                    CAST(COALESCE(a.n, 0) AS BIGINT) AS n_tokens
-             FROM documents d
-             LEFT JOIN (SELECT o.doc_id, SUM(len(v.syms)) AS n
-                        FROM boc o
-                        JOIN bb${ext.TextOps.byteBpeFixtureMerges.length} v
-                          USING (w)
-                        GROUP BY o.doc_id) a USING (doc_id)),
-           bc AS (
-             SELECT doc_id, source, n_tokens,
-                    SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                        ROWS UNBOUNDED PRECEDING) AS cum
-             FROM btoks)
-           SELECT doc_id, source, n_tokens,
-                  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id
-           FROM bc""",
-
-    // x118 — the byte training chain re-learned round by round; each
-    // round's argmax row carries the winning pair as data
-    "x118_bytebpe_train" -> {
-      val union = (1 to 12).map(k =>
-        s"""SELECT CAST($k AS INTEGER) AS rank,
-                   array_to_string(p1, '-') AS l_bytes,
-                   array_to_string(p2, '-') AS r_bytes,
-                   cnt AS pair_count FROM btt$k""")
-        .mkString("\n UNION ALL ")
-      s"WITH ${byteTrainCtes(12)} $union"
-    },
-
-    // x119 — tokenize with the re-learned byte table: counts come
-    // straight from the final training state btw12
-    "x119_bytebpe_trained_tokens" ->
-      s"""WITH ${byteTrainCtes(12)},
-           agg AS (SELECT o.doc_id,
-                     CAST(COUNT(*) AS BIGINT) AS n_pretokens,
-                     CAST(SUM(v.nb) AS BIGINT) AS n_bytes,
-                     CAST(SUM(len(v.syms)) AS BIGINT) AS n_byte_tokens
-                   FROM boc o JOIN btw12 v USING (w)
-                   GROUP BY o.doc_id)
-           SELECT doc_id, n_pretokens, n_bytes, n_byte_tokens,
-                  CAST(n_byte_tokens AS DOUBLE) /
-                    CAST(n_pretokens AS DOUBLE) AS byte_fertility
-           FROM agg""",
-
-    // x115 — the GPT-2 pre-split recombined closed-form from class
-    // runs, UTF-8 bytes from code points, and the byte merge loop
-    // folded rank by rank over the distinct pre-token vocabulary
-    "x115_bytebpe_tokens" ->
-      s"""WITH $byteBpeOracleCtes,
-           bstat AS (SELECT o.doc_id,
-                       CAST(COUNT(*) AS BIGINT) AS n_pretokens,
-                       CAST(SUM(b.nb) AS BIGINT) AS n_bytes,
-                       CAST(SUM(len(b.syms)) AS BIGINT) AS n_byte_tokens
-                     FROM boc o
-                     JOIN bb${ext.TextOps.byteBpeFixtureMerges.length} b
-                       USING (w)
-                     GROUP BY o.doc_id)
-           SELECT doc_id, n_pretokens, n_bytes, n_byte_tokens,
-                  CAST(n_byte_tokens AS DOUBLE) /
-                    CAST(n_pretokens AS DOUBLE) AS byte_fertility
-           FROM bstat""",
-
-    // x98 — the BPE merge loop replayed rule by rule over the distinct
-    // vocabulary; counts join back per word occurrence; fertility is one
-    // IEEE division, bit-equal in both engines
-    "x98_bpe_tokens" ->
-      s"""WITH $bpeOracleCtes,
-           agg AS (SELECT o.doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-                          CAST(SUM(v.k) AS BIGINT) AS n_bpe_tokens
-                   FROM wordocc o JOIN wbpe v USING (w)
-                   GROUP BY o.doc_id)
-           SELECT doc_id, n_words, n_bpe_tokens,
-                  CAST(n_bpe_tokens AS DOUBLE) / CAST(n_words AS DOUBLE)
-                    AS fertility
-           FROM agg""",
-
-    // x103 — the x26 pack window denominated by the replayed BPE counts;
-    // docs with no words pack at zero tokens (LEFT JOIN + COALESCE)
-    "x103_bpe_pack" ->
-      s"""WITH $bpeOracleCtes,
-           toks AS (
-             SELECT d.doc_id, d.source,
-                    CAST(COALESCE(a.n, 0) AS BIGINT) AS n_tokens
-             FROM documents d
-             LEFT JOIN (SELECT o.doc_id, SUM(v.k) AS n
-                        FROM wordocc o JOIN wbpe v USING (w)
-                        GROUP BY o.doc_id) a USING (doc_id)),
-           c AS (
-             SELECT doc_id, source, n_tokens,
-                    SUM(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                        ROWS UNBOUNDED PRECEDING) AS cum
-             FROM toks)
-           SELECT doc_id, source, n_tokens,
-                  CAST((cum - n_tokens) // 2048 AS BIGINT) AS pack_id
-           FROM c""",
-
-    // x90 — the whole spectral path replayed: decimal-routed moment
-    // sums (bit-equal to the engine's), the same covariance algebra,
-    // all 20 power iterations as unrolled CTEs with 0.0-init ascending
-    // folds (the DotFold discipline), and the same literal projection
-    "x90_pca_projection" ->
-      s"""WITH $pcaOracleCtes,
-           muw AS (SELECT ${pcaFold("list(a.mu * v.w ORDER BY a.i)")} AS c0
-                   FROM me a JOIN it20 v ON v.i = a.i),
-           proj AS (SELECT e.vec_id,
-                      ${pcaFold("list(CAST(e.embedding[CAST(v.i + 1 AS INTEGER)] AS DOUBLE) * v.w ORDER BY v.i)")} AS dp
-                    FROM embeddings e CROSS JOIN it20 v GROUP BY e.vec_id)
-           SELECT p.vec_id, round(p.dp - w.c0, 6) AS pc1
-           FROM proj p CROSS JOIN muw w""",
-
-    // x101 — the x90 chain, then per deflation component: Rayleigh λ,
-    // rank-one subtraction, and a fresh unrolled 20-round chain; the
-    // three projections join back per vector
-    "x101_pca_topk" -> pcaTopKOracleSql,
-
-    // x97 — the variance report re-derived: the same materialized
-    // moment/iteration CTEs, then Rayleigh quotient and trace as
-    // 0.0-init ascending folds, identical to the driver's arithmetic
-    "x97_pca_variance" ->
-      s"""WITH $pcaOracleCtes,
-           cw AS MATERIALIZED (
-             SELECT m.i AS i, ${pcaFold("list(m.c * v.w ORDER BY m.j)")} AS u
-             FROM m JOIN it20 v ON v.i = m.j GROUP BY m.i),
-           lam AS (SELECT ${pcaFold("list(v.w * c.u ORDER BY v.i)")} AS lambda
-                   FROM it20 v JOIN cw c ON c.i = v.i),
-           tra AS (SELECT ${pcaFold("list(c ORDER BY i)")} AS trace
-                   FROM m WHERE i = j)
-           SELECT round(lambda, 6) AS lambda, round(trace, 6) AS trace,
-                  round(lambda / trace, 9) AS var_ratio
-           FROM lam, tra""",
-
-        // x95 — the tar/json layers cancel: caption bytes round-trip and
-    // the sidecar was built from the table, so per-sample truth is the
-    // table row itself — agreement proves headers, octal fields,
-    // checksums, padding, pairing and the JSON hop all at once
-    // x177 — flat DC-exact frames: mean = the frame's single value;
-    // caption length replays from the doc text (code-point count,
-    // Spark length() ≡ DuckDB length() on VARCHAR)
-    "x177_webdataset_images" ->
-      """SELECT doc_id AS media_id, 8 AS width, 8 AS height,
-                CAST((doc_id * 7 + 13) % 256 AS DOUBLE) AS mean_lum,
-                CAST(length(text) AS INTEGER) AS caption_chars
-         FROM documents""",
-
-    // x178 — the x58 dedup closure (pixel/aHash replay + recursive
-    // components) gating the closed-form per-survivor stats: the
-    // export/scan/decode layers cancel because the payload moves
-    // verbatim and the pixels are the text bytes (ASCII corpus:
-    // code point = UTF-8 byte, verified at every SF)
-    "x178_media_corpus_build" ->
-      s"""WITH RECURSIVE $imageHashCtes,
-         iedges AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM h a JOIN h b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.ahash_hi, b.ahash_hi)) +
-                 bit_count(xor(a.ahash_lo, b.ahash_lo)) <= 3),
-         und AS (SELECT doc_a AS s, doc_b AS t FROM iedges
-                 UNION ALL SELECT doc_b, doc_a FROM iedges),
-         cnodes AS (SELECT DISTINCT s AS id FROM und),
-         walk(id, cur) AS (
-           SELECT id, id FROM cnodes
-           UNION
-           SELECT w.id, u.t FROM walk w JOIN und u ON u.s = w.cur),
-         cc AS (SELECT id, MIN(cur) AS rep FROM walk GROUP BY id)
-         SELECT d.doc_id AS media_id, 8 AS width, 8 AS height,
-                CAST(p.tot AS DOUBLE) / 64.0 AS mean_lum,
-                CAST(length(d.text) AS INTEGER) AS caption_chars
-         FROM documents d JOIN ps p ON p.doc_id = d.doc_id
-         WHERE d.doc_id NOT IN (SELECT id FROM cc WHERE rep <> id)""",
-
-    "x95_webdataset_scan" ->
-      """SELECT doc_id, text AS caption, source, lang,
-                CAST(length(text) AS INTEGER) AS caption_chars
-         FROM documents""",
-
-    // x113 — zip/json layers cancel exactly like x95's tar/json
-    "x113_zip_scan" ->
-      """SELECT doc_id, text AS caption, source, lang,
-                CAST(length(text) AS INTEGER) AS caption_chars
-         FROM documents""",
-
-    // x93 — the JSON round trip cancels (build → parse is the
-    // identity on these payloads), so the oracle renders straight from
-    // the token groups with the same template fold
-    "x93_chat_render" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                      t -> length(t) > 0) AS ts
-           FROM documents),
-         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
-         r AS (SELECT doc_id, ts, n, (n + 7) // 8 AS k FROM nt),
-         rend AS (
-           SELECT doc_id, k,
-             '<|system|>' || chr(10) || 'You are a helpful assistant.' || chr(10) ||
-             array_to_string(list_transform(range(0, k), i ->
-               '<|' || CASE WHEN i % 2 = 0 THEN 'user' ELSE 'assistant' END ||
-               '|>' || chr(10) ||
-               array_to_string(
-                 ts[CAST(i * 8 + 1 AS INTEGER):CAST(LEAST(n, i * 8 + 8) AS INTEGER)],
-                 ' ') || chr(10)), '') ||
-             '<|end|>' AS rendered
-           FROM r)
-         SELECT doc_id,
-                CAST(k AS INTEGER) AS n_turns,
-                CAST((k + 1) // 2 AS INTEGER) AS n_user_turns,
-                CAST(length(rendered) AS INTEGER) AS rendered_chars,
-                rendered
-         FROM rend""",
-
-    // x92 — the cue algebra replayed: token groups of 5, cue i clocked
-    // at [i·1500, i·1500+1400] ms, inclusive 1-based list slices
-    "x92_vtt_cues" ->
-      """WITH tok AS (
-           SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                      t -> length(t) > 0) AS ts
-           FROM documents),
-         nt AS (SELECT doc_id, ts, len(ts) AS n FROM tok WHERE len(ts) > 0),
-         cues AS (SELECT doc_id, ts, n,
-                         unnest(range(0, (n + 4) // 5)) AS i
-                  FROM nt)
-         SELECT doc_id AS media_id,
-                CAST(i AS INTEGER) AS cue_idx,
-                CAST(i * 1500 AS BIGINT) AS start_ms,
-                CAST(i * 1500 + 1400 AS BIGINT) AS end_ms,
-                CAST(LEAST(5, n - i * 5) AS INTEGER) AS n_words,
-                array_to_string(
-                  ts[CAST(i * 5 + 1 AS INTEGER):CAST(LEAST(n, i * 5 + 5) AS INTEGER)],
-                  ' ') AS cue_text
-         FROM cues""",
-
-    // x91 — deterministic truth: a 30%-truncated single-record gzip can
-    // never yield its record (plaintext tears mid-block), an intact one
-    // always does
-    "x91_warc_health" ->
-      """SELECT doc_id::VARCHAR AS archive,
-                CAST(CASE WHEN doc_id % 9 = 0 THEN 0 ELSE 1 END AS INTEGER)
-                  AS n_records,
-                (doc_id % 9 = 0) AS torn
-         FROM documents""",
-
-    // x80 — the extraction rebuilt WITHOUT the page: escape→decode
-    // cancels, tags become separators, so visible text is h1 + the
-    // original text + the decoded footer + the anchor labels, collapsed
-    // under the same explicit [ \t\n\r\f] class (RE2's \s — pinned on
-    // the Scala side too, where java \s would differ on \x0B). Chars
-    // count as UTF-16 units vs codepoints agree on this corpus (ASCII);
-    // the engine itself is unicode-clean either way.
-    "x80_html_extract" ->
-      s"""WITH $crawlTextCtes
-         SELECT doc_id AS media_id,
-           'Doc ' || doc_id::VARCHAR || ' - ' || source AS title,
-           CAST(1 + doc_id % 5 AS INTEGER) AS n_links,
-           CAST(length(txt) AS INTEGER) AS n_chars_text,
-           txt AS text
-         FROM etxt""",
-
-    // x84 — the crawl-curation composition replayed: the x80 extraction
-    // CTE feeds the x7 langid and x68 Gopher CTE families retargeted at
-    // the extracted text, all joined back on doc_id
-    "x84_crawl_curation" ->
-      s"""WITH $crawlTextCtes,
-         ${langCtesOver("etxt", "txt")},
-         ${gopherCtesOver("etxt", "txt")}
-         SELECT e.doc_id AS media_id, lang.pred_lang, g2.n_words,
-                (g2.r_word_count AND g2.r_mean_word_len AND
-                 g2.r_symbol_ratio AND g2.r_alpha_words AND
-                 g2.r_stopwords) AS keep
-         FROM etxt e
-         JOIN lang ON e.doc_id = lang.doc_id
-         JOIN g2 ON e.doc_id = g2.doc_id""",
-
-    // x85 — the training loop REPLAYED: the oracle runs the same 8
-    // gradient-descent rounds as unrolled CTEs (decimal-routed gradient
-    // sums ⇒ the weights agree bit-for-bit at every round), then scores
-    // with the identical expression tree; round-to-9dp absorbs the
-    // ≤1-ulp cross-engine exp() difference (the F7 convention)
-    "x85_trained_quality" -> logisticOracleSql,
-
-    // x206 — safetensors is LOSSLESS (raw IEEE bytes), so the stored-
-    // weights scoring is BIT-IDENTICAL to the inline x85 run and the
-    // x85 oracle transfers verbatim; the hash match proves the header
-    // layout, offsets, and the F64 byte round trip end to end
-    "x206_safetensors_stored" -> logisticOracleSql,
-
-    // x86 — both snapshots' pages rebuilt closed-form, md5'd as the
-    // engine md5s the real parsed bytes, and the same full-outer
-    // URL-join classification
-    "x86_crawl_diff" ->
-      s"""WITH oldd AS (SELECT doc_id, source, text FROM documents),
-         newd AS (
-           SELECT doc_id, source,
-                  CASE WHEN doc_id % 5 = 0 THEN text || ' updated'
-                       ELSE text END AS text
-           FROM documents WHERE doc_id % 7 <> 0
-           UNION ALL
-           SELECT doc_id + 1000000, source, text
-           FROM documents WHERE doc_id % 3 = 0),
-         oh AS (SELECT 'https://crawl.example/' || source || '/' ||
-                         doc_id::VARCHAR AS target_uri,
-                       md5($pageSqlExpr) AS h
-                FROM oldd),
-         nh AS (SELECT 'https://crawl.example/' || source || '/' ||
-                         doc_id::VARCHAR AS target_uri,
-                       md5($pageSqlExpr) AS h
-                FROM newd)
-         SELECT COALESCE(o.target_uri, n.target_uri) AS target_uri,
-                CASE WHEN o.target_uri IS NULL THEN 'added'
-                     WHEN n.target_uri IS NULL THEN 'removed'
-                     WHEN o.h <> n.h THEN 'changed'
-                     ELSE 'unchanged' END AS status
-         FROM oh o FULL OUTER JOIN nh n ON o.target_uri = n.target_uri""",
-
-    // x82 — the classifier replayed from scratch: per-token FNV-1a +
-    // mix64 (the x59 chain) into 65,536 buckets, the weight table as a
-    // SECOND mix64 replay on (bucket + GOLDEN) mod 2^64, terms folded
-    // in bucket order so the double mean is bit-exact
-    "x82_quality_classifier" -> {
-      val M = "18446744073709551616::HUGEINT"
-      s"""WITH $hashedTokenCtes,
-         cnt AS (SELECT doc_id, ((sh % 65536) + 65536) % 65536 AS b,
-                        COUNT(*) AS c
-                 FROM sgn GROUP BY doc_id, ((sh % 65536) + 65536) % 65536),
-         w0 AS (SELECT doc_id, b, c,
-                       (b::HUGEINT + 11400714819323198485::HUGEINT) % $M AS v0
-                FROM cnt),
-         w1 AS (SELECT *, ${mulmodSql("xor(v0, v0 // 1073741824::HUGEINT)", Mix64C1)} AS v1 FROM w0),
-         w2 AS (SELECT *, ${mulmodSql("xor(v1, v1 // 134217728::HUGEINT)", Mix64C2)} AS v2 FROM w1),
-         wf AS (SELECT doc_id, b, c, xor(v2, v2 // 2147483648::HUGEINT) AS vh FROM w2),
-         wsgn AS (SELECT doc_id, b, c,
-                    CAST(CASE WHEN vh >= 9223372036854775808::HUGEINT
-                              THEN vh - 18446744073709551616::HUGEINT
-                              ELSE vh END AS BIGINT) AS sw FROM wf),
-         terms AS (SELECT doc_id, b,  c,
-                          c::DOUBLE * (sw::DOUBLE / 9223372036854775808.0) AS term
-                   FROM wsgn),
-         agg AS (SELECT doc_id,
-                        CAST(SUM(c) AS BIGINT) AS n_tokens,
-                        list_reduce(list(term ORDER BY b), (a, x) -> a + x)
-                          AS tsum
-                 FROM terms GROUP BY doc_id),
-         sc AS (SELECT doc_id, n_tokens,
-                       tsum / CAST(n_tokens AS DOUBLE) AS q_score
-                FROM agg)
-         SELECT doc_id, n_tokens, q_score,
-                CASE WHEN q_score >= 0.0 THEN 'keep' ELSE 'drop' END AS label
-         FROM sc"""
-    },
-
-    // x160 — SALSA over the x134 edge set: init 1/|authorities| on the
-    // in-degree side, then 5 degree-normalized half-rounds (no
-    // normalization aggregate — mass conservation), decimal-routed
-    // per-edge-divided sums, missing sides coalesced to 0.
-    "x160_salsa" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                FROM l0, range(0, 4) t(i)),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           ${salsaCtes(5)}
-           SELECT n.node,
-                  round(COALESCE(h.hub, CAST(0 AS DOUBLE)), 10) AS hub,
-                  round(COALESCE(a.auth, CAST(0 AS DOUBLE)), 10) AS auth
-           FROM nds n
-           LEFT JOIN hb5 h ON h.node = n.node
-           LEFT JOIN at5 a ON a.node = n.node""",
-
-    // x163 — both iterations on one edge set (the corpus graph + the
-    // planted K6 farm + the coupling edge): the prefixed SALSA chain
-    // (s-names) beside the HITS chain, hits L1-renormalized by the
-    // decimal-routed auth sum, per-node share delta and the 2% flag
-    "x163_rank_divergence" ->
-      s"""WITH l0 AS (SELECT doc_id, $urlRegDomainSql AS sdom
-                FROM documents),
-           ed0 AS (SELECT DISTINCT src, dst FROM (
-                  SELECT sdom AS src,
-                  CASE CAST((doc_id + t.i) % 8 AS INTEGER)
-                    WHEN 0 THEN 'example.com'
-                    WHEN 1 THEN 'example.net'
-                    WHEN 7 THEN 'example.edu'
-                    ELSE sdom END AS dst
-                  FROM l0, range(0, 4) t(i)
-                  UNION ALL
-                  SELECT 'farm' || CAST(a.range + 1 AS VARCHAR)
-                           || '.example',
-                         'farm' || CAST(b.range + 1 AS VARCHAR)
-                           || '.example'
-                  FROM range(6) a, range(6) b WHERE a.range <> b.range
-                  UNION ALL
-                  SELECT 'example.org', 'farm1.example') u),
-           nds AS (SELECT DISTINCT node FROM
-                   (SELECT src AS node FROM ed0
-                    UNION ALL SELECT dst AS node FROM ed0) q),
-           ${salsaCtes(5, "s")},
-           hb0 AS (SELECT node, CAST(1 AS DOUBLE) AS hub FROM nds),
-           ${hitsCtes(5)},
-           sal AS (SELECT n.node,
-                          COALESCE(a.auth, CAST(0 AS DOUBLE)) AS salsa_auth
-                   FROM nds n LEFT JOIN sat5 a ON a.node = n.node),
-           hitj AS (SELECT h.node, t.auth
-                    FROM hb5 h JOIN at5 t ON t.node = h.node),
-           hsm AS (SELECT ${graft.ops.Stable.sumSql("t.auth", 18)} AS hsum
-                   FROM hitj t)
-           SELECT s.node,
-                  round(s.salsa_auth, 10) AS salsa_share,
-                  round(h.auth / q.hsum, 10) AS hits_share,
-                  round(h.auth / q.hsum - s.salsa_auth, 10) AS delta,
-                  (h.auth / q.hsum - s.salsa_auth) > 0.02 AS tkc_suspect
-           FROM sal s JOIN hitj h ON h.node = s.node CROSS JOIN hsm q""",
-
-    // x161 — the x32 plants rebuilt from doc_id arithmetic; counts via
-    // regexp_extract_all on the RAW planted text (Cleanse's ONE pattern
-    // set), the redacted column the same email→IP→phone replace chain
-    // x32 proves
-    "x161_pii_report" ->
-      """WITH p AS (
-           SELECT doc_id,
-                  text || ' ' || 'user' || doc_id || '@example.com' ||
-                  ' ' || '10.0.' || (doc_id % 256) || '.' || (doc_id % 100) ||
-                  ' ' || '+1 (202) 555-0' ||
-                  lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') AS t
-           FROM documents),
-         c AS (
-           SELECT doc_id,
-             CAST(len(regexp_extract_all(t,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-               AS n_email,
-             CAST(len(regexp_extract_all(t,
-               '([0-9]{1,3}\.){3}[0-9]{1,3}')) AS BIGINT) AS n_ipv4,
-             CAST(len(regexp_extract_all(t,
-               '\+[0-9][0-9 ()./-]{5,18}[0-9]')) AS BIGINT) AS n_phone,
-             regexp_replace(regexp_replace(regexp_replace(t,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-               '<EMAIL>', 'g'),
-               '([0-9]{1,3}\.){3}[0-9]{1,3}', '<IP>', 'g'),
-               '\+[0-9][0-9 ()./-]{5,18}[0-9]', '<PHONE>', 'g') AS redacted
-           FROM p)
-         SELECT doc_id, n_email, n_ipv4, n_phone, redacted,
-                n_email + n_ipv4 + n_phone AS n_pii
-         FROM c""",
-
-    // x164 — the x33 re-lining plus the footer block, the per-line
-    // FNV-1a (the x10 HUGEINT replay, over the WHOLE line including
-    // spaces), df over distinct docs on the hash, and the census
-    // aggregate with the pos-mixed XOR digest. ASSUMES AN ASCII CORPUS
-    // (the x10 note): codepoints stand in for UTF-8 bytes.
-    "x164_line_census" ->
-      s"""WITH ${relinedCtes("""
-             || chr(10) || 'SUBSCRIBE NOW' || chr(10) || chr(10)
-             || 'all rights reserved'""")},
-         sp AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM rel),
-         lines AS (
-           SELECT doc_id, CAST(u.i - 1 AS BIGINT) AS pos,
-                  ls[CAST(u.i AS INTEGER)] AS line
-           FROM sp, unnest(range(1, len(ls) + 1)) AS u(i)
-           WHERE length(trim(ls[CAST(u.i AS INTEGER)])) > 0),
-         fh AS (
-           SELECT doc_id, pos, CAST(length(line) AS BIGINT) AS len,
-             list_reduce(
-               list_prepend(14695981039346656037::HUGEINT,
-                 list_transform(range(1, length(line) + 1), i ->
-                   unicode(substr(line, CAST(i AS INTEGER), 1))::HUGEINT)),
-               (h, c) -> (xor(h, c) * 1099511628211::HUGEINT)
-                         % 18446744073709551616::HUGEINT) AS uh
-           FROM lines),
-         hs AS (
-           SELECT doc_id, pos, len,
-                  CAST(CASE WHEN uh >= 9223372036854775808::HUGEINT
-                            THEN uh - 18446744073709551616::HUGEINT
-                            ELSE uh END AS BIGINT) AS h
-           FROM fh),
-         freq AS (SELECT h, COUNT(DISTINCT doc_id) AS line_df
-                  FROM hs GROUP BY h),
-         j AS (SELECT a.doc_id, a.pos, a.len, a.h, f.line_df
-               FROM hs a JOIN freq f ON f.h = a.h)
-         SELECT doc_id,
-                COUNT(*) AS n_lines,
-                CAST(SUM(CASE WHEN line_df < 20 THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_kept,
-                CAST(SUM(CASE WHEN line_df < 20 THEN len ELSE 0 END)
-                     AS BIGINT) AS kept_chars,
-                CAST(SUM(CASE WHEN line_df < 20 THEN 0 ELSE len END)
-                     AS BIGINT) AS boiler_chars,
-                COALESCE(bit_xor(CASE WHEN line_df < 20
-                                      THEN xor(h, pos) END),
-                         CAST(0 AS BIGINT)) AS kept_digest
-         FROM j GROUP BY doc_id""",
-
-    // x165 — the Gopher within-doc repetition recurrence replayed: the
-    // x164 re-lining plus the %3 duplicated-line and %5 looping-gram
-    // plants, dup-line fractions from a per-(doc, line) census, the
-    // dominant 2-gram by count then lexicographically-largest, and the
-    // LEFT join that keeps gram-less docs with null gram columns.
-    "x165_repetition" ->
-      s"""WITH ${relinedCtes("""
-             || CASE WHEN doc_id % 3 = 0
-                     THEN chr(10) || 'la la' || chr(10) || 'la la'
-                     ELSE '' END
-             || CASE WHEN doc_id % 5 = 0
-                     THEN chr(10) || 'click here click here click here'
-                     ELSE '' END""")},
-         sp AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM rel),
-         lines AS (
-           SELECT doc_id, ls[CAST(u.i AS INTEGER)] AS line
-           FROM sp, unnest(range(1, len(ls) + 1)) AS u(i)
-           WHERE length(trim(ls[CAST(u.i AS INTEGER)])) > 0),
-         perline AS (
-           SELECT doc_id, line, COUNT(*) AS cnt,
-                  CAST(length(line) AS BIGINT) AS len
-           FROM lines GROUP BY doc_id, line),
-         linesig AS (
-           SELECT doc_id,
-                  CAST(SUM(cnt) AS BIGINT) AS n_lines,
-                  CAST(COUNT(*) AS BIGINT) AS nd,
-                  CAST(SUM(cnt * len) AS BIGINT) AS line_chars,
-                  CAST(SUM((cnt - 1) * len) AS BIGINT) AS dup_chars
-           FROM perline GROUP BY doc_id),
-         tok2 AS (
-           SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-                  list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                    t -> length(t) > 0) AS l
-           FROM rel),
-         grams AS (
-           SELECT doc_id, n_chars,
-                  l[CAST(t.i AS INTEGER)] || ' ' ||
-                  l[CAST(t.i + 1 AS INTEGER)] AS gram
-           FROM tok2, unnest(range(1, len(l))) AS t(i)),
-         gcnt AS (SELECT doc_id, n_chars, gram, COUNT(*) AS cnt
-                  FROM grams GROUP BY doc_id, n_chars, gram),
-         mxx AS (SELECT doc_id, MAX(cnt) AS mx FROM gcnt GROUP BY doc_id),
-         top AS (
-           SELECT g.doc_id, g.n_chars, m.mx, MAX(g.gram) AS top2_gram
-           FROM gcnt g JOIN mxx m ON m.doc_id = g.doc_id AND g.cnt = m.mx
-           GROUP BY g.doc_id, g.n_chars, m.mx)
-         SELECT s.doc_id,
-                s.n_lines,
-                round(1.0 - CAST(s.nd AS DOUBLE) / CAST(s.n_lines AS DOUBLE),
-                      10) AS dup_line_frac,
-                round(CAST(s.dup_chars AS DOUBLE) /
-                      CAST(s.line_chars AS DOUBLE), 10) AS dup_line_char_frac,
-                t.top2_gram,
-                round(CAST(t.mx AS DOUBLE) *
-                      CAST(length(t.top2_gram) AS DOUBLE) /
-                      CAST(t.n_chars AS DOUBLE), 10) AS top2_frac,
-                (1.0 - CAST(s.nd AS DOUBLE) / CAST(s.n_lines AS DOUBLE))
-                  <= 0.30 AS r_dup_line,
-                COALESCE(CAST(t.mx AS DOUBLE) *
-                         CAST(length(t.top2_gram) AS DOUBLE) /
-                         CAST(t.n_chars AS DOUBLE) <= 0.20,
-                         TRUE) AS r_top2,
-                ((1.0 - CAST(s.nd AS DOUBLE) / CAST(s.n_lines AS DOUBLE))
-                  <= 0.30) AND
-                COALESCE(CAST(t.mx AS DOUBLE) *
-                         CAST(length(t.top2_gram) AS DOUBLE) /
-                         CAST(t.n_chars AS DOUBLE) <= 0.20,
-                         TRUE) AS keep
-         FROM linesig s LEFT JOIN top t ON t.doc_id = s.doc_id"""
-  )
 }

@@ -1,6 +1,7 @@
 package org.apache.spark
 
-/** Test access to the listener bus, which Spark keeps package-private. */
+/** Access to the listener bus, which Spark keeps package-private: Prof
+  * and the plan-shape tests read listener counters only after it. */
 object ListenerBusDrain {
   /** Blocks until every event posted so far has reached every listener. */
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

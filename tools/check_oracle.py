@@ -2,23 +2,69 @@
 """Dev-only emulation of the driver's DuckDB correctness gate.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+       python3 tools/check_oracle.py <sfDir> <verifyOutDir> --against <old oracle_sql.json>
 
 Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching SQL from oracle_sql.json in DuckDB against the sfDir parquet tables,
 sorts columns by name and rows by all columns, and compares cell-by-cell.
+
+With --against, checks an oracle refactor instead: for every key whose SQL
+text differs between <verifyOutDir>/oracle_sql.json and the old file, runs
+both texts over the sfDir tables and compares their results the same way.
+Identical keys are skipped; any mismatch or oracle error exits non-zero.
 """
-import sys, json, glob, os
+import sys, json, os, argparse
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
-def main(sf_dir, out_dir):
+def connect(sf_dir):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+def run_sql(con, sql):
+    """(column -> type name, pandas frame) of one query's result."""
+    rel = con.sql(sql)
+    return dict(zip(rel.columns, [str(t) for t in rel.types])), rel.df()
+
+def check_against(con, new, old):
+    """Compares the results of every key whose SQL differs between the
+    two {name: sql} maps. Returns (number of keys checked, [(name, message)]
+    for each mismatch, oracle error or key present on one side only)."""
+    failures = [(k, "only in one oracle file")
+                for k in sorted(set(new) ^ set(old))]
+    changed = sorted(k for k in set(new) & set(old) if new[k] != old[k])
+    for k in changed:
+        try:
+            new_types, got = run_sql(con, new[k])
+            old_types, exp = run_sql(con, old[k])
+        except Exception as e:
+            failures.append((k, f"oracle error: {e}"))
+            continue
+        ok, msg = compare_types(new_types, old_types)
+        if ok:
+            ok, msg = compare(got, exp)
+        if not ok:
+            failures.append((k, msg))
+    return len(changed), failures
+
+def main_against(sf_dir, out_dir, old_path):
+    new = json.load(open(f"{out_dir}/oracle_sql.json"))
+    old = json.load(open(old_path))
+    n, failures = check_against(connect(sf_dir), new, old)
+    for k, msg in failures:
+        print(f"FAIL  {k}: {msg}")
+    same = sum(1 for k in set(new) & set(old) if new[k] == old[k])
+    print(f"\n{n} changed, {len(failures)} fail, {same} identical skipped")
+    return 1 if failures else 0
+
+def main(sf_dir, out_dir):
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_skip = 0
     for name in sorted(os.listdir(out_dir)):
@@ -26,9 +72,7 @@ def main(sf_dir, out_dir):
         if not os.path.isdir(qdir):
             continue
         try:
-            got_rel = con.sql(f"SELECT * FROM '{qdir}/*.parquet'")
-            got_types = dict(zip(got_rel.columns, [str(t) for t in got_rel.types]))
-            got = got_rel.df()
+            got_types, got = run_sql(con, f"SELECT * FROM '{qdir}/*.parquet'")
         except Exception as e:
             print(f"FAIL (no output) {name}: {e}")
             n_fail += 1
@@ -38,9 +82,7 @@ def main(sf_dir, out_dir):
             n_skip += 1
             continue
         try:
-            exp_rel = con.sql(oracle[name])
-            exp_types = dict(zip(exp_rel.columns, [str(t) for t in exp_rel.types]))
-            exp = exp_rel.df()
+            exp_types, exp = run_sql(con, oracle[name])
         except Exception as e:
             print(f"FAIL (oracle error) {name}: {e}")
             n_fail += 1
@@ -118,4 +160,10 @@ def compare(got, exp):
     return True, ""
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("--against", metavar="OLD_ORACLE_SQL_JSON")
+    a = ap.parse_args()
+    sys.exit(main_against(a.sf_dir, a.out_dir, a.against) if a.against
+             else main(a.sf_dir, a.out_dir))
