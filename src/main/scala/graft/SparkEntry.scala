@@ -997,7 +997,7 @@ object SparkEntry {
     // raster is closed-form (value = k%97, nodata at k%13==0, exact binary
     // affine), so the oracle rebuilds the identical pixel table from range()
     query("s4_geotiff_scan", ((s, _) =>
-      graft.sources.GeoTiff.read(s, "/root/repo/src/test/resources/s4demo.tif")),
+      graft.sources.GeoTiff.read(s, fixture("s4demo.tif"))),
       // S4 — regenerate the fixture raster from its closed-form definition
       // (GeoTiffFixture): 48x40 grid, a=0.25/e=-0.25/c=10/f=60 (all exact
       // binary fractions), value = k%97 as float32 (exact), nodata k%13==0
@@ -1013,8 +1013,7 @@ object SparkEntry {
     // the layout GDAL emits for real multi-band float exports) through
     // the chunky-interleave decode; per-sample closed form in the oracle
     query("s4b_geotiff_multiband", ((s, _) =>
-      graft.sources.GeoTiff.readBands(s,
-        "/root/repo/src/test/resources/s4rgb.tif")),
+      graft.sources.GeoTiff.readBands(s, fixture("s4rgb.tif"))),
       // S4 multi-band — the fixture raster is closed-form (sample s of
       // pixel k is (k*(s+1))%89, per-pixel nodata at k%17==0, exact binary
       // affine), so the oracle rebuilds the identical sample table
@@ -1031,8 +1030,7 @@ object SparkEntry {
     // GDAL emits for byte products) through the integer decode path;
     // nodata byte 255 → null, samples surface as exact doubles
     query("s4c_geotiff_int", ((s, _) =>
-      graft.sources.GeoTiff.read(s,
-        "/root/repo/src/test/resources/s4int.tif")),
+      graft.sources.GeoTiff.read(s, fixture("s4int.tif"))),
       // S4 integer — the uint8 fixture is closed-form: pixel k = (k*7)%251,
       // nodata (255) at k%19==0, exact binary affine
       """SELECT 's4int.tif' AS dataset,
@@ -1047,8 +1045,7 @@ object SparkEntry {
     // ---- §2.1 S7 GeoJSON source + P11 tooltip projection (oracle reads
     // the same fixture file via DuckDB read_json)
     query("s7_geojson_scan", ((s, _) =>
-      graft.sources.GeoJson.read(s,
-        "/root/repo/src/test/resources/powerplants_mini.geojson", "powerplants")
+      graft.sources.GeoJson.read(s, geojsonFixture, "powerplants")
         .select(col("layer"), col("id"), col("lon"), col("lat"),
                 element_at(col("properties"), "name").as("name"),
                 element_at(col("properties"), "plant:source").as("source"))),
@@ -1090,12 +1087,12 @@ object SparkEntry {
     // table parsed back (headerless golden fixture; lowercase nan → null)
     query("s13_csv_pixel_scan", ((s, _) =>
       pipeline.MonthlyPipeline.readCsvPixelTable(s,
-        "/root/repo/src/test/resources/golden_pixels.csv", header = false)),
+        fixture("golden_pixels.csv"), header = false)),
       // s13 — DuckDB parses the same CSV under the same pinned schema;
       // 'nan' reads as NaN and nulls out identically
       s"""SELECT lat, lon,
                 CASE WHEN isnan(mean) THEN NULL ELSE mean END AS mean
-         FROM read_csv('$goldenPixelsCsv',
+         FROM read_csv('${fixture("golden_pixels.csv")}',
                 header = false,
                 columns = {lat: 'DOUBLE', lon: 'DOUBLE', mean: 'DOUBLE'})"""),
 
@@ -1124,8 +1121,7 @@ object SparkEntry {
       val grid = ops.Unpivot.gridToPixels(s, graft.model.GridMeta(
         "demo", 0.01, 0.0, 76.85, 0.0, -0.01, 29.0, "EPSG:4326",
         width = 80, height = 80, nodata = None, scaleM = 1000))
-      val amenities = graft.sources.GeoJson.read(s,
-        "/root/repo/src/test/resources/powerplants_mini.geojson", "powerplants")
+      val amenities = graft.sources.GeoJson.read(s, geojsonFixture, "powerplants")
       ops.GeoFns.cellJoin(grid, amenities, res = 0.01)
         .select(col("y"), col("x"), col("id"),
                 element_at(col("properties"), "name").as("name"))
@@ -1328,8 +1324,7 @@ object SparkEntry {
     // (oracle: hand-computed hull fixture)
     query("a7_hull_dissolve", ((s, _) => {
       import s.implicits._
-      val pts = graft.sources.GeoJson.read(s,
-        "/root/repo/src/test/resources/powerplants_mini.geojson", "powerplants")
+      val pts = graft.sources.GeoJson.read(s, geojsonFixture, "powerplants")
         .select(col("lon"), col("lat")).as[ops.Pt]
       // typed aggregator output flattens its product fields → `points`
       pts.select(ops.HullAggregator.toColumn.name("hull"))
@@ -3659,9 +3654,7 @@ object SparkEntry {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val fSched = Future(recrawlQuery(s, d))
-      val fRanks = Future(ext.Graph.pageRank(linkGraph(s, d)
-        .select(col("src_domain").as("src"),
-          col("dst_domain").as("dst"))))
+      val fRanks = Future(ext.Graph.pageRank(domainEdges(s, d)))
       val sched = Await.result(fSched, Duration.Inf)
       val ranks = Await.result(fRanks, Duration.Inf)
       sched.join(ranks, sched("domain") === ranks("node"))
@@ -3708,9 +3701,7 @@ object SparkEntry {
     // what a scheduler tick actually costs once ranks are stored.
     query("x143_stored_rank_frontier", ((s, d) => {
       val dir = storedDir("pagerank", d)(p =>
-        ext.Graph.pageRankStoredBuild(linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")), p))
+        ext.Graph.pageRankStoredBuild(domainEdges(s, d), p))
       val sched = recrawlQuery(s, d)
       val ranks = ext.Graph.pageRankStoredRead(s, dir)
       sched.join(ranks, sched("domain") === ranks("node"))
@@ -4191,8 +4182,7 @@ object SparkEntry {
     // dangling scalar; the 10 dp round absorbs the cross-engine
     // decimal-cast last-ulp drift (the x5 cosine convention).
     query("x124_domain_pagerank", ((s, d) =>
-      ext.Graph.pageRank(linkGraph(s, d)
-        .select(col("src_domain").as("src"), col("dst_domain").as("dst")))
+      ext.Graph.pageRank(domainEdges(s, d))
         .withColumn("pr", round(col("pr"), 10))),
       // x124 — the rank vector re-learned round by round: edges
       // regenerate closed-form (the x123 layer cancels), then 5 unrolled
@@ -4213,12 +4203,9 @@ object SparkEntry {
     // chain, so a warm-start that drifted by one ulp would
     // hash-mismatch.
     query("x158_warm_rank", ((s, d) => {
-      val edges = linkGraph(s, d)
-        .select(col("src_domain").as("src"), col("dst_domain").as("dst"))
+      val edges = domainEdges(s, d)
       val dir = storedDir("pagerank", d)(p =>
-        ext.Graph.pageRankStoredBuild(linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")), p))
+        ext.Graph.pageRankStoredBuild(domainEdges(s, d), p))
       ext.Graph.pageRankFrom(edges,
           ext.Graph.pageRankStoredRead(s, dir), iters = 2)
         .withColumn("pr", round(col("pr"), 10))
@@ -4237,9 +4224,7 @@ object SparkEntry {
     // equal to the long fixed run in GraphSpec.
     query("x127_top_authorities", ((s, d) =>
       ext.Graph.topAuthorities(
-        ext.Graph.pageRank(linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst"))), 3)
+        ext.Graph.pageRank(domainEdges(s, d)), 3)
         .withColumn("pr", round(col("pr"), 10))),
       // x127 — the same 5-round replay, cut to the top 3 by RAW rank
       // (the engine orders before rounding — ordering by the rounded
@@ -4296,9 +4281,7 @@ object SparkEntry {
     query("x131_personalized_pagerank", ((s, d) => {
       import s.implicits._
       ext.Graph.personalizedPageRank(
-        linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")),
+        domainEdges(s, d),
         Seq("example.com", "example.edu").toDF("node"))
         .withColumn("pr", round(col("pr"), 10))
     }),
@@ -4308,7 +4291,7 @@ object SparkEntry {
       s"""WITH $linkNodeCtes,
            $seedTeleportCtes,
            pr0 AS (SELECT node, t AS pr FROM ndt),
-           ${pprCtes(5)}
+           ${pageRankCtes(5, seeded = true)}
            SELECT node, round(pr, 10) AS pr FROM pr5"""),
 
     // x139 — SPAM MASS (Gyöngyi et al. 2005): how much of each
@@ -4322,9 +4305,7 @@ object SparkEntry {
     query("x139_spam_mass", ((s, d) => {
       import s.implicits._
       ext.Graph.spamMass(
-        linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")),
+        domainEdges(s, d),
         Seq("example.com", "example.edu").toDF("node"))
         .withColumn("pr", round(col("pr"), 10))
         .withColumn("core_pr", round(col("core_pr"), 10))
@@ -4342,7 +4323,7 @@ object SparkEntry {
                  FROM nds CROSS JOIN nn),
            ${pageRankCtes(5)},
            qpr0 AS (SELECT node, t AS pr FROM ndt),
-           ${pprCtes(5, "q")},
+           ${pageRankCtes(5, seeded = true, pfx = "q")},
            sm AS (SELECT a.node, a.pr,
                     b.pr * (CAST(ns.k AS DOUBLE) / CAST(nn.n AS DOUBLE))
                       AS core_pr
@@ -5668,9 +5649,7 @@ object SparkEntry {
     // and the remainder window term for term.
     query("x145_crawl_budget", ((s, d) => {
       val dir = storedDir("pagerank", d)(p =>
-        ext.Graph.pageRankStoredBuild(linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")), p))
+        ext.Graph.pageRankStoredBuild(domainEdges(s, d), p))
       ext.Graph.crawlBudget(ext.Graph.pageRankStoredRead(s, dir), 300L)
         .withColumn("quota", round(col("quota"), 10))
     }),
@@ -5890,9 +5869,7 @@ object SparkEntry {
     // so the capped code path is what the oracle hashes; GraphSpec
     // carries the case where a hub actually drops.
     query("x138_cocitation", ((s, d) =>
-      ext.Graph.coCitation(linkGraph(s, d)
-        .select(col("src_domain").as("src"),
-          col("dst_domain").as("dst")), maxOutDeg = 64L)),
+      ext.Graph.coCitation(domainEdges(s, d), maxOutDeg = 64L)),
       // x138 — the ordered-pair self-join on the source key replayed
       s"""WITH $linkEdgeCtes
            SELECT x.dst AS d1, y.dst AS d2, COUNT(*) AS n_common
@@ -5906,9 +5883,7 @@ object SparkEntry {
     // the crawl domains (all outlinks) score as hubs. 5 rounds, L2
     // normalization per half-round, replayed term for term.
     query("x134_hits", ((s, d) =>
-      ext.Graph.hits(linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")))
+      ext.Graph.hits(domainEdges(s, d))
         .withColumn("hub", round(col("hub"), 10))
         .withColumn("auth", round(col("auth"), 10))),
       // x134 — the two mutually-recursive vectors re-learned: unrolled
@@ -8446,9 +8421,7 @@ object SparkEntry {
     // the TKC-resistant probe run AGAINST x134 (composed in x163).
     // 5 rounds, the oracle unrolls them term for term.
     query("x160_salsa", ((s, d) =>
-      ext.Graph.salsa(linkGraph(s, d)
-          .select(col("src_domain").as("src"),
-            col("dst_domain").as("dst")))
+      ext.Graph.salsa(domainEdges(s, d))
         .withColumn("hub", round(col("hub"), 10))
         .withColumn("auth", round(col("auth"), 10))),
       // x160 — SALSA over the x134 edge set: init 1/|authorities| on the
@@ -8485,8 +8458,7 @@ object SparkEntry {
       // distinct + eager checkpoint ONCE: both iterations consume the
       // same dimension-sized edge table, so the corpus-scanning URL
       // chain runs a single time, not once per algorithm
-      val edges = linkGraph(s, d).select(col("src_domain").as("src"),
-        col("dst_domain").as("dst"))
+      val edges = domainEdges(s, d)
         .unionByName(farm).unionByName(couple)
         .distinct().localCheckpoint(true)
       // the two iterations are INDEPENDENT consumers of the
@@ -9216,6 +9188,13 @@ object SparkEntry {
       .withColumn("dst_domain",
         ext.UrlOps.registeredDomain(col("dst_host")))
 
+  /** [[linkGraph]]'s registered-domain edges `(src, dst)` — the graph
+    * every domain-level link query ranks. */
+  private def domainEdges(s: SparkSession,
+                          d: String): org.apache.spark.sql.DataFrame =
+    linkGraph(s, d)
+      .select(col("src_domain").as("src"), col("dst_domain").as("dst"))
+
   /** [[ext.UrlOps.normalizeUrl]] replayed step for step in DuckDB —
     * chained CTEs ending at `n(doc_id, url, host, norm_url)`. Every
     * step is the exact twin of a Spark function call (split_part ↔
@@ -9405,29 +9384,38 @@ object SparkEntry {
     * DECIMAL(28,18), and the damped combination adds left to right.
     * x130's WEIGHTED rounds pass `share = pr · (w / Σ_out w)` (the IEEE
     * double product of the decimal-routed weight ratio) over the
-    * `sw(src, sw)` out-weight sums instead of `pr / deg` over `dg`. */
+    * `sw(src, sw)` out-weight sums instead of `pr / deg` over `dg`.
+    * x131's `seeded` PERSONALIZED rounds read the teleport `t(v)` of
+    * `ndt` (1/|S| on seeds, 0 elsewhere) in place of the uniform 1/N
+    * in the base term AND the dangling redistribution. The `pfx`
+    * prefixes every generated CTE name so the x139 oracle can run
+    * personalized rounds NEXT TO uniform ones in one WITH chain. */
   private def pageRankCtes(iters: Int,
                            share: String = "p.pr / CAST(d.deg AS DOUBLE)",
-                           outJoin: String = "dg d ON d.src = e.src")
-      : String =
+                           outJoin: String = "dg d ON d.src = e.src",
+                           seeded: Boolean = false, pfx: String = "")
+      : String = {
+    val (frame, tele) =
+      if (seeded) ("ndt nd", "* nd.t") else ("nds nd CROSS JOIN nn", "/ nn.n")
     (1 to iters).map { k =>
-      val p = s"pr${k - 1}"
-      s"""c$k AS (SELECT e.dst AS node,
+      val p = s"${pfx}pr${k - 1}"
+      s"""${pfx}c$k AS (SELECT e.dst AS node,
                   ${graft.ops.Stable.sumSql(share, 18)} AS s
                 FROM ed0 e JOIN $p p ON p.node = e.src
                 JOIN $outJoin
                 GROUP BY e.dst),
-           m$k AS (SELECT COALESCE(${graft.ops.Stable.sumSql("p.pr", 18)},
+           ${pfx}m$k AS (SELECT COALESCE(${graft.ops.Stable.sumSql("p.pr", 18)},
                                    CAST(0 AS DOUBLE)) AS m
                 FROM $p p LEFT JOIN dg d ON d.src = p.node
                 WHERE d.src IS NULL),
-           pr$k AS (SELECT nd.node,
-                  (1 - CAST(0.85 AS DOUBLE)) / nn.n
+           ${pfx}pr$k AS (SELECT nd.node,
+                  (1 - CAST(0.85 AS DOUBLE)) $tele
                   + CAST(0.85 AS DOUBLE) * COALESCE(c.s, CAST(0 AS DOUBLE))
-                  + CAST(0.85 AS DOUBLE) * m$k.m / nn.n AS pr
-                FROM nds nd CROSS JOIN nn CROSS JOIN m$k
-                LEFT JOIN c$k c ON c.node = nd.node)"""
+                  + CAST(0.85 AS DOUBLE) * ${pfx}m$k.m $tele AS pr
+                FROM $frame CROSS JOIN ${pfx}m$k
+                LEFT JOIN ${pfx}c$k c ON c.node = nd.node)"""
     }.mkString(",\n           ")
+  }
 
   /** x128/x132 shared layer: the link-graph edges with DECODED anchor
     * text per fixture variant (the expected output of the engine's
@@ -9556,34 +9544,6 @@ object SparkEntry {
     s"rv0 AS (SELECT doc_id, doc_id::HUGEINT AS h FROM documents),\n" +
       steps.mkString(",\n")
   }
-
-  /** x131's PERSONALIZED rounds: teleport `t(v)` (1/|S| on seeds, 0
-    * elsewhere) replaces the uniform 1/N in the base term AND the
-    * dangling redistribution; contributions are x124's `pr/deg`. The
-    * `pfx` prefixes every generated CTE name so the x139 oracle can
-    * run these rounds NEXT TO [[pageRankCtes]]' uniform ones in one
-    * WITH chain (both builders otherwise emit `c1/m1/pr1…`). */
-  private def pprCtes(iters: Int, pfx: String = ""): String =
-    (1 to iters).map { k =>
-      val p = s"${pfx}pr${k - 1}"
-      s"""${pfx}c$k AS (SELECT e.dst AS node,
-                  ${graft.ops.Stable.sumSql("p.pr / CAST(d.deg AS DOUBLE)",
-                    18)} AS s
-                FROM ed0 e JOIN $p p ON p.node = e.src
-                JOIN dg d ON d.src = e.src
-                GROUP BY e.dst),
-           ${pfx}m$k AS (SELECT COALESCE(${graft.ops.Stable.sumSql("p.pr",
-                    18)},
-                                   CAST(0 AS DOUBLE)) AS m
-                FROM $p p LEFT JOIN dg d ON d.src = p.node
-                WHERE d.src IS NULL),
-           ${pfx}pr$k AS (SELECT nd.node,
-                  (1 - CAST(0.85 AS DOUBLE)) * nd.t
-                  + CAST(0.85 AS DOUBLE) * COALESCE(c.s, CAST(0 AS DOUBLE))
-                  + CAST(0.85 AS DOUBLE) * ${pfx}m$k.m * nd.t AS pr
-                FROM ndt nd CROSS JOIN ${pfx}m$k
-                LEFT JOIN ${pfx}c$k c ON c.node = nd.node)"""
-    }.mkString(",\n           ")
 
   /** x134's HITS rounds: per round an auth half (hub sums over
     * in-edges → L2 normalize) then a hub half (auth sums over
@@ -11641,16 +11601,15 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
        FROM it10"""
   }
 
-  private val geojsonFixture =
-    "/root/repo/src/test/resources/powerplants_mini.geojson"
+  private val geojsonFixture = fixture("powerplants_mini.geojson")
 
-  private val jsonlFixture =
-    "/root/repo/src/test/resources/corpus_mini.jsonl"
+  private val jsonlFixture = fixture("corpus_mini.jsonl")
 
-  /** The s13 golden CSV, checked in next to the GeoJSON fixture. */
-  private def goldenPixelsCsv: String =
-    java.nio.file.Paths.get(geojsonFixture)
-      .resolveSibling("golden_pixels.csv").toString
+  /** The checked-in fixture `src/test/resources/<name>` of the checkout
+    * the process runs from (its working directory). */
+  private def fixture(name: String): String =
+    java.nio.file.Paths.get("src/test/resources", name)
+      .toAbsolutePath.toString
 
   /** Deterministic 64-dim query vector for the ANN queries (shared by Spark
     * and oracle sides). */

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.io.LocalFs
 import graft.ops.Stable
@@ -62,10 +62,11 @@ object Graph {
     * with x124's registered-domain chain — the x107/x116 JIT lesson in
     * pushdown form). */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
-               srcCol: String = "src", dstCol: String = "dst"): DataFrame =
-    run(edges, damping, srcCol, dstCol) { (step, pr0) =>
-      iterate(iters, pr0)(step)
-    }
+               srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+    val g = prepare(edges, srcCol, dstCol)
+    iterate(iters, uniformStart(g))(pageRankRound(g, damping))
+      .select("node", "pr")
+  }
 
   /** [[pageRank]] run to TOLERANCE instead of a fixed round count —
     * how a production crawl scheduler actually runs the power method
@@ -87,20 +88,20 @@ object Graph {
       : DataFrame = {
     require(tol > 0 && maxIters >= 1,
       s"need tol > 0 and maxIters >= 1: tol=$tol maxIters=$maxIters")
-    run(edges, damping, srcCol, dstCol) { (step, pr0) =>
-      var pr = pr0
-      var it = 0
-      var delta = Double.MaxValue
-      while (it < maxIters && delta >= tol) {
-        val next = step(pr)
-        delta = next.join(pr.withColumnRenamed("pr", "pr_old"), "node")
-          .agg(Stable.sumD(abs(col("pr") - col("pr_old")), 18).as("d"))
-          .head().getDouble(0)
-        pr = next
-        it += 1
-      }
-      pr
+    val g = prepare(edges, srcCol, dstCol)
+    val step = pageRankRound(g, damping)
+    var pr = uniformStart(g)
+    var it = 0
+    var delta = Double.MaxValue
+    while (it < maxIters && delta >= tol) {
+      val next = step(pr)
+      delta = next.join(pr.withColumnRenamed("pr", "pr_old"), "node")
+        .agg(Stable.sumD(abs(col("pr") - col("pr_old")), 18).as("d"))
+        .head().getDouble(0)
+      pr = next
+      it += 1
     }
+    pr.select("node", "pr")
   }
 
   /** WARM-START PageRank — the incremental refresh a production
@@ -132,7 +133,7 @@ object Graph {
       .select(col("node"),
         coalesce(col("pr"), lit(0.0)).as("pr"), col("dang"))
       .localCheckpoint(true)
-    runPrepared(g, damping) { (step, _) => iterate(iters, p0)(step) }
+    iterate(iters, p0)(pageRankRound(g, damping)).select("node", "pr")
   }
 
   /** Top-k nodes by rank — the authority report a crawl scheduler or
@@ -151,12 +152,9 @@ object Graph {
     * AGGREGATE into a weight, and each round distributes `pr(u)`
     * proportionally to `w(u→v) / Σ_out w(u)` instead of uniformly.
     * Same plan shape as [[pageRank]] — edges/out-weights/nodes/dangling
-    * checkpointed once, per round one edge equi-join + one dest-key
-    * partial+final agg + the one-row dangling mass, eager
-    * localCheckpoint (the Pregel lineage discipline), decimal-routed
-    * sums ⇒ partitioning-invariant. Deliberately a SEPARATE runner
-    * from [[pageRank]]'s: re-expressing the unweighted recurrence as
-    * weight-1 edges would change its expression tree (`pr/deg` vs
+    * checkpointed once, then the same [[powerRound]] — only the
+    * per-edge share differs. Deliberately NOT weight-1 edges under
+    * [[pageRank]]: that would change its expression tree (`pr/deg` vs
     * `pr·(w/sw)`) and silently shift x124's replayed bits. */
   def pageRankWeighted(edges: DataFrame, iters: Int = 5,
                        damping: Double = 0.85,
@@ -176,21 +174,11 @@ object Graph {
       // branch.
       .filter(col("w") > 0)
       .localCheckpoint(true)
-    val sw = e.groupBy("src").agg(Stable.sumD(col("w"), 18).as("sw"))
-    val ed = e.join(sw, "src").localCheckpoint(true)
-    val nodes = nodeSetD(e)
-    val n = nodes.count()
-    val base = (1.0 - damping) / n
-    val pr = iterate(iters,
-      // projection of the checkpointed node table — no init barrier needed
-      nodes.select(col("node"), lit(1.0 / n).as("pr"), col("dang"))) { p =>
-      teleportRound(nodes,
-        propagate(ed, p, "src", "dst", col("pr") * (col("w") / col("sw"))),
-        danglingMass(p),
-        lit(base) + lit(damping) * coalesce(col("v"), lit(0.0)) +
-          lit(damping) * col("dmass") / lit(n.toDouble))
-    }
-    pr.select("node", "pr")
+    val g = annotate(e,
+      e.join(e.groupBy("src").agg(Stable.sumD(col("w"), 18).as("sw")), "src"))
+    iterate(iters, uniformStart(g))(powerRound(g, g.nodes,
+        _ * (col("w") / col("sw")), "pr" -> uniformBlend(g, damping)))
+      .select("node", "pr")
   }
 
   /** PERSONALIZED PageRank — teleportation restricted to a SEED set
@@ -202,15 +190,20 @@ object Graph {
     * never to the whole graph, so unreachable-from-seeds nodes decay
     * to exactly the damped remainder of 0. Seeds not present in the
     * graph are ignored; at least one seed must survive the
-    * intersection. Same per-round plan shape as [[pageRank]]; the
-    * teleport column rides the checkpointed node table — no extra join
-    * in the loop. */
+    * intersection. Same [[powerRound]] as [[pageRank]] with the
+    * seeded blend; the teleport column rides the checkpointed node
+    * table ([[seedTeleport]]) — no extra join in the loop. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            iters: Int = 5, damping: Double = 0.85,
                            srcCol: String = "src", dstCol: String = "dst")
       : DataFrame = {
     require(iters >= 1, s"need iters >= 1: $iters")
-    pprPrepared(prepare(edges, srcCol, dstCol), seeds, iters, damping)
+    val g = prepare(edges, srcCol, dstCol)
+    val (ndt, _) = seedTeleport(g, seeds)
+    // projection of the checkpointed ndt — no init barrier needed
+    iterate(iters, ndt.select(col("node"), col("t").as("pr"), col("dang")))(
+        powerRound(g, ndt, byDegree, "pr" -> seededBlend(damping)))
+      .select("node", "pr")
   }
 
   /** Persist a [[pageRank]] vector as the AUTHORITY STORE — the x77/
@@ -258,64 +251,29 @@ object Graph {
     * seeds hold a core component of exactly zero ⇒ `rel_mass` exactly
     * 1.0 — the isolated-spam-farm signature, closed-form testable.
     *
-    * Scale shape: ONE shared [[PreparedGraph]] (checkpointed edge/node/
-    * dangling tables built once) and ONE FUSED power loop carrying
-    * BOTH vectors as columns of a single node frame — per round ONE
-    * edge equi-join + one dest-key partial+final agg computing both
-    * contribution sums, one dangling-flag filter computing both one-row
-    * masses, one blend projection, one checkpoint. The historical
-    * shape ran the two recurrences as separate loops: twice the
-    * edge-join shuffle passes and twice the blocking barriers for
-    * algebra that never interacts until the final subtraction (the
-    * r18 measurement: fusing halved the loop cost). Per-column
-    * expressions are verbatim the [[runPrepared]]/[[pprPrepared]]
-    * step images and decimal-routed sums are merge-order-invariant,
-    * so both columns are BIT-IDENTICAL to the standalone runs —
-    * GraphSpec pins `core == ppr·|S|/N` exactly. The `|S|/N` scale
-    * stays a DRIVER literal (both counts are loop-setup scalars);
-    * nothing corpus-sized runs outside the loop. */
+    * Scale shape: ONE [[PreparedGraph]] and ONE power loop carrying
+    * BOTH vectors as columns of a single node frame — [[powerRound]]
+    * with a uniform blend for `pr_u` and a seeded blend for `pr_p`,
+    * so per round ONE edge equi-join + one dest-key partial+final agg
+    * computes both contribution sums and one dangling-flag filter both
+    * masses, behind one checkpoint (separate loops would pay twice the
+    * edge-join shuffles and barriers for algebra that never interacts
+    * until the final subtraction). Each column's expressions are the
+    * standalone runs' and decimal-routed sums are merge-order-
+    * invariant, so both columns are BIT-IDENTICAL to [[pageRank]] and
+    * [[personalizedPageRank]] — GraphSpec pins both. The `|S|/N`
+    * scale stays a DRIVER literal (both counts are loop-setup
+    * scalars); nothing corpus-sized runs outside the loop. */
   def spamMass(edges: DataFrame, goodSeeds: DataFrame, iters: Int = 5,
                damping: Double = 0.85, srcCol: String = "src",
                dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, s"need iters >= 1: $iters")
     val g = prepare(edges, srcCol, dstCol)
-    val seedSet = goodSeeds
-      .select(col(goodSeeds.columns.head).cast("string").as("node"))
-      .distinct()
-    val nSeed = g.nodes.join(seedSet, Seq("node"), "left_semi").count()
-    require(nSeed > 0, "no seed appears in the graph")
-    val ndt = g.nodes
-      .join(seedSet.withColumn("is_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("is_seed"), lit(1.0 / nSeed)).otherwise(lit(0.0)).as("t"),
-        col("dang"))
-      .localCheckpoint(true)
-    val base = (1.0 - damping) / g.n
+    val (ndt, nSeed) = seedTeleport(g, goodSeeds)
     // projection of the checkpointed ndt — no init barrier needed
-    var v = ndt
-      .select(col("node"), lit(1.0 / g.n).as("pr_u"), col("t").as("pr_p"),
-        col("dang"))
-    for (_ <- 1 to iters) {
-      val sums = g.ed.join(v, g.ed("src") === v("node"))
-        .groupBy(g.ed("dst"))
-        .agg(
-          Stable.sumD(col("pr_u") / col("deg").cast("double"), 18).as("vu"),
-          Stable.sumD(col("pr_p") / col("deg").cast("double"), 18).as("vp"))
-      val mass = v.filter(col("dang"))
-        .agg(
-          coalesce(Stable.sumD(col("pr_u"), 18), lit(0.0)).as("du"),
-          coalesce(Stable.sumD(col("pr_p"), 18), lit(0.0)).as("dp"))
-      v = ndt.join(sums, ndt("node") === sums("dst"), "left")
-        .crossJoin(mass)
-        .select(ndt("node"),
-          (lit(base) + lit(damping) * coalesce(col("vu"), lit(0.0)) +
-            lit(damping) * col("du") / lit(g.n.toDouble)).as("pr_u"),
-          (lit(1.0 - damping) * ndt("t") +
-            lit(damping) * coalesce(col("vp"), lit(0.0)) +
-            lit(damping) * col("dp") * ndt("t")).as("pr_p"),
-          ndt("dang"))
-        .localCheckpoint(true)
-    }
+    val v = iterate(iters, ndt.select(col("node"), lit(1.0 / g.n).as("pr_u"),
+        col("t").as("pr_p"), col("dang")))(powerRound(g, ndt, byDegree,
+      "pr_u" -> uniformBlend(g, damping), "pr_p" -> seededBlend(damping)))
     v.select(col("node"), col("pr_u").as("pr_all"),
         (col("pr_p") *
           (lit(nSeed.toDouble) / lit(g.n.toDouble))).as("core_pr"))
@@ -379,12 +337,11 @@ object Graph {
     * half-round is one edge equi-join + one partial+final agg on the
     * receiving key, the L2 norm rides as a ONE-ROW cross-joined
     * aggregate (no driver collect in the loop). ONE eager
-    * localCheckpoint per half-round, on the PROPAGATED SUMS — the only
-    * frame with two consumers (the norm aggregate and the scatter/
-    * divide). The historical shape checkpointed both the scatter AND
-    * the normalized vector: 4 blocking barriers per round for vectors
-    * nothing reads twice (r18 measurement: the barriers, not the
-    * joins, dominated at bench scale). The norm over the sums equals
+    * localCheckpoint per half-round, on the normalized scattered
+    * vector it returns. The propagated sums have two consumers inside
+    * that one plan (the norm row and the scatter join) with identical
+    * exchange subtrees, so ReuseExchange pays their shuffle once and
+    * they need no barrier of their own. The norm over the sums equals
     * the norm over the scattered vector EXACTLY — absent nodes scatter
     * to 0.0 and decimal zeros are additive identities — and the
     * scattered division distributes over the left join unchanged
@@ -398,9 +355,9 @@ object Graph {
     val e = dedupEdges(edges, srcCol, dstCol)
     val nodes = nodeSet(e)
     def halfRound(vec: DataFrame, inKey: String, outKey: String,
-                  term: org.apache.spark.sql.Column, vCol: String)
+                  term: Column, vCol: String)
         : DataFrame = {
-      val sums = propagate(e, vec, inKey, outKey, term)
+      val sums = propagate(e, vec, inKey, outKey, "v" -> term)
       val nrm = sums.agg(
         sqrt(Stable.sumD(col("v") * col("v"), 18)).as("nrm"))
       // sums has two consumers INSIDE this one plan (the norm row and
@@ -486,10 +443,10 @@ object Graph {
     // half-step.
     for (_ <- 1 to iters) {
       hub = propagate(ed, auth, "dst", "src",
-          col("auth") / col("indeg").cast("double"))
+          "v" -> col("auth") / col("indeg").cast("double"))
         .select(col("src").as("node"), col("v").as("hub"))
       auth = propagate(ed, hub, "src", "dst",
-          col("hub") / col("outdeg").cast("double"))
+          "v" -> col("hub") / col("outdeg").cast("double"))
         .select(col("dst").as("node"), col("v").as("auth"))
         .localCheckpoint(true)
     }
@@ -627,80 +584,124 @@ object Graph {
   }
 
   // ------------------------------------------------------------------
-  // The rank-iteration kernel. Every recurrence in this file — five
-  // PageRank variants, HITS, SALSA — iterates the SAME two primitives;
-  // before this factoring each loop carried its own copy (~150
-  // duplicated lines), and a new variant meant re-writing the round.
+  // The rank-iteration kernel. Every recurrence in this file iterates
+  // [[propagate]]; the PageRank family shares one whole round,
+  // [[powerRound]], and differs only in its per-edge share, node frame
+  // and blends.
   // ------------------------------------------------------------------
 
   /** ONE propagation half-round — the kernel image of every rank
     * recurrence: the current vector `(node, …)` equi-joined onto the
-    * (checkpointed) edge table at `inKey`, then a per-`outKey` partial+final
-    * aggregation of `term` through the fixed-scale decimal route
-    * ([[Stable.sumD]]) — shuffle size the edge count, skew bound one
-    * node's degree, result invariant under any partitioning. `term`
-    * is the recurrence's per-edge contribution (`pr/deg`, `pr·w/sw`,
-    * `auth/indeg`, plain `hub`, …). */
+    * (checkpointed) edge table at `inKey`, then a per-`outKey`
+    * partial+final aggregation of each named term through the
+    * fixed-scale decimal route ([[Stable.sumD]]) — shuffle size the
+    * edge count, skew bound one node's degree, result invariant under
+    * any partitioning. A term is the recurrence's per-edge
+    * contribution (`pr/deg`, `pr·w/sw`, `auth/indeg`, plain `hub`, …). */
   private def propagate(edges: DataFrame, vec: DataFrame, inKey: String,
-                        outKey: String, term: org.apache.spark.sql.Column)
-      : DataFrame =
+                        outKey: String, terms: (String, Column)*)
+      : DataFrame = {
+    val sums = terms.map { case (name, t) => Stable.sumD(t, 18).as(name) }
     edges.join(vec, edges(inKey) === vec("node"))
       .groupBy(edges(outKey))
-      .agg(Stable.sumD(term, 18).as("v"))
+      .agg(sums.head, sums.tail: _*)
+  }
 
-  /** The dangling-mass one-row aggregate every PageRank variant adds:
-    * rank held by nodes with no out-edges, as a cross-joinable scalar
-    * frame — never a driver collect inside the loop. The dangling
-    * membership rides the vector itself as a boolean `dang` column
-    * (stamped once at loop setup from the node frame), so each round
-    * pays a FILTER over the already-checkpointed vector instead of a
-    * semi-join against a cached dangling table — one join and one
-    * broadcast exchange fewer per round at any scale (r18 measurement:
-    * the per-round planning/broadcast floor, guide §2.4 "remove
-    * shuffles outright"). Same row set feeds the same decimal-routed
-    * sum, so the scalar is bit-identical to the historical semi-join. */
-  private def danglingMass(pr: DataFrame): DataFrame =
-    pr.filter(col("dang"))
-      .agg(coalesce(Stable.sumD(col("pr"), 18), lit(0.0)).as("dmass"))
-
-  /** The teleport completion every PageRank variant shares: the node
-    * frame (which may carry a per-node teleport column) left-joined
-    * with the round's propagated sums, the one-row dangling mass
-    * cross-joined on, the caller's blend expression (over `v`, `dmass`
-    * and the frame's columns) named `pr`, and the result EAGERLY
-    * localCheckpoint'ed — the Pregel lineage discipline (two consumers
-    * per vector per round would otherwise double lineage every
-    * iteration, a 2^k recompute). The frame's `dang` flag is carried
-    * onto the output vector so the NEXT round's [[danglingMass]] is a
-    * filter, not a join. */
-  private def teleportRound(frame: DataFrame, sums: DataFrame,
-                            massRow: DataFrame,
-                            blend: org.apache.spark.sql.Column): DataFrame =
+  /** ONE PageRank-family power round over the vector columns of `v`
+    * `(node, <cols>…, dang)`: per column, [[propagate]]'s sum of
+    * `share(column)` over the degree- or weight-annotated edges (named
+    * `v_<col>`), and the dangling mass — rank held by nodes with no
+    * out-edges — as a one-row aggregate FILTERING the vector's carried
+    * `dang` flag (named `m_<col>`; cross-joined, never a driver
+    * collect, never a per-round join against a dangling table). The
+    * node `frame` (which may carry a teleport column `t`) is
+    * left-joined with the sums, the mass row cross-joined on, each
+    * column's `blend(sum, mass)` projected under the column's name,
+    * and `dang` carried onto the output so the NEXT round's mass is a
+    * filter again. The result is EAGERLY localCheckpoint'ed — the
+    * Pregel lineage discipline: each vector has two consumers per
+    * round (the edge join and the mass filter), which would otherwise
+    * double lineage every iteration, a 2^k recompute. */
+  private def powerRound(g: PreparedGraph, frame: DataFrame,
+                         share: Column => Column,
+                         blends: (String, (Column, Column) => Column)*)
+      : DataFrame => DataFrame = { v =>
+    val cols = blends.map(_._1)
+    val sums = propagate(g.ed, v, "src", "dst",
+      cols.map(c => s"v_$c" -> share(col(c))): _*)
+    val masses = cols.map(c =>
+      coalesce(Stable.sumD(col(c), 18), lit(0.0)).as(s"m_$c"))
     frame.join(sums, frame("node") === sums("dst"), "left")
-      .crossJoin(massRow)
-      .select(frame("node"), blend.as("pr"), frame("dang"))
+      .crossJoin(v.filter(col("dang")).agg(masses.head, masses.tail: _*))
+      .select(frame("node") +: blends.map { case (c, blend) =>
+        blend(col(s"v_$c"), col(s"m_$c")).as(c) } :+ frame("dang"): _*)
       .localCheckpoint(true)
+  }
+
+  /** The unweighted per-edge share `pr(u)/deg(u)`. */
+  private val byDegree: Column => Column = _ / col("deg").cast("double")
+
+  /** The uniform-teleport blend `(1-d)/N + d·Σ + d·M/N`. */
+  private def uniformBlend(g: PreparedGraph, damping: Double)
+      : (Column, Column) => Column = {
+    val base = (1.0 - damping) / g.n
+    (v, m) => lit(base) + lit(damping) * coalesce(v, lit(0.0)) +
+      lit(damping) * m / lit(g.n.toDouble)
+  }
+
+  /** The seeded-teleport blend `(1-d)·t + d·Σ + d·M·t` over the node
+    * frame's teleport column `t` ([[seedTeleport]]). */
+  private def seededBlend(damping: Double): (Column, Column) => Column =
+    (v, m) => lit(1.0 - damping) * col("t") +
+      lit(damping) * coalesce(v, lit(0.0)) + lit(damping) * m * col("t")
+
+  /** [[pageRank]]'s round — also [[pageRankConverged]]'s and
+    * [[pageRankFrom]]'s, so k rounds of any of them are bit-identical. */
+  private def pageRankRound(g: PreparedGraph, damping: Double)
+      : DataFrame => DataFrame =
+    powerRound(g, g.nodes, byDegree, "pr" -> uniformBlend(g, damping))
+
+  /** The uniform start vector `1/N`: a plain projection of the
+    * CHECKPOINTED node table — both of round 1's consumers re-read its
+    * blocks and round 1's output checkpoints, so lineage stays bounded
+    * without an init barrier. */
+  private def uniformStart(g: PreparedGraph): DataFrame =
+    g.nodes.select(col("node"), lit(1.0 / g.n).as("pr"), col("dang"))
+
+  /** The seed teleport over a prepared graph: the node table with
+    * `t(v) = 1/|S|` on seeds present in the graph and 0 elsewhere,
+    * checkpointed once, plus `|S|`. Requires one seed in the graph. */
+  private def seedTeleport(g: PreparedGraph, seeds: DataFrame)
+      : (DataFrame, Long) = {
+    val seedSet = seeds.select(col(seeds.columns.head).cast("string")
+      .as("node")).distinct()
+    val nS = g.nodes.join(seedSet, Seq("node"), "left_semi").count()
+    require(nS > 0, "no seed appears in the graph")
+    val ndt = g.nodes
+      .join(seedSet.withColumn("is_seed", lit(true)), Seq("node"), "left")
+      .select(col("node"),
+        when(col("is_seed"), lit(1.0 / nS)).otherwise(lit(0.0)).as("t"),
+        col("dang"))
+      .localCheckpoint(true)
+    (ndt, nS)
+  }
 
   /** The checkpointed graph artifacts every power loop needs:
-    * degree-annotated edges, node set carrying the dangling flag, node
-    * count. Built ONCE ([[prepare]]) and threaded through however many
-    * loops run over the same graph — [[spamMass]] runs TWO (uniform +
-    * personalized) plus its scale row, which before this factoring
-    * rebuilt the whole set three times (three scans of whatever chain
-    * derives the edges). Nothing to release: Spark's ContextCleaner
-    * frees the checkpoint blocks once the frames are unreachable. */
+    * degree- (or weight-) annotated edges, node set carrying the
+    * dangling flag, node count. Built ONCE and shared by every column
+    * of the loop. Nothing to release: Spark's ContextCleaner frees the
+    * checkpoint blocks once the frames are unreachable. */
   private final class PreparedGraph(
       val ed: DataFrame, val nodes: DataFrame, val n: Long)
 
-  /** The three graph artifacts EVERY recurrence in this file starts
-    * from, factored so no public operator re-inlines them: dedup'd
-    * string-keyed edges, the node set, the dangling (no out-edge) set.
-    * Each is an eager `localCheckpoint` — a lineage-free leaf, so the
-    * rounds that read it never re-analyse, re-canonicalise or
-    * re-explain the caller's edge-deriving chain (a persisted frame
-    * keeps that chain in every plan that reads it). Expression trees
-    * are IDENTICAL to the historical inline copies — the oracle hashes
-    * guard this refactor. */
+  /** The graph artifacts every recurrence in this file starts from,
+    * factored so no public operator re-inlines them: dedup'd
+    * string-keyed edges and the node set (with [[nodeSetD]], the
+    * `dang` no-out-edge flag as a column). Each is an eager
+    * `localCheckpoint` — a lineage-free leaf, so the rounds that read
+    * it never re-analyse, re-canonicalise or re-explain the caller's
+    * edge-deriving chain (a persisted frame keeps that chain in every
+    * plan that reads it). */
   private def dedupEdges(edges: DataFrame,
                          srcCol: String, dstCol: String): DataFrame =
     edges
@@ -716,11 +717,9 @@ object Graph {
       .localCheckpoint(true)
 
   /** The node set ANNOTATED with the dangling flag (`dang` = no
-    * out-edge) — ONE checkpointed node-sized table replacing the historical
-    * separate nodes + dangling pair: the flag membership is exactly
-    * the old left-anti set (left join on distinct sources, null test),
-    * and carrying it as a column lets every loop's dangling mass be a
-    * filter over the vector instead of a per-round semi-join. */
+    * out-edge): a left join on distinct sources and a null test, in
+    * ONE checkpointed node-sized table, so every loop's dangling mass
+    * is a filter over the vector instead of a per-round semi-join. */
   private def nodeSetD(e: DataFrame): DataFrame = {
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
@@ -742,80 +741,18 @@ object Graph {
     p
   }
 
+  /** [[PreparedGraph]] over dedup'd edges `e` and their annotated form
+    * `ed` (`deg` or `w`/`sw` columns): `ed` and the node set are
+    * checkpointed, then counted once. */
+  private def annotate(e: DataFrame, ed: DataFrame): PreparedGraph = {
+    val edc = ed.localCheckpoint(true)
+    val nodes = nodeSetD(e)
+    new PreparedGraph(edc, nodes, nodes.count())
+  }
+
   private def prepare(edges: DataFrame,
                       srcCol: String, dstCol: String): PreparedGraph = {
     val e = dedupEdges(edges, srcCol, dstCol)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ed = e.join(deg, "src").localCheckpoint(true)
-    val nodes = nodeSetD(e)
-    new PreparedGraph(ed, nodes, nodes.count())
-  }
-
-  /** Shared setup + round step: dedup the edges, checkpoint the
-    * degree-annotated edge table / node set / dangling set for the loop
-    * the caller drives. The step function is the ONE image of the
-    * recurrence — both public entry points iterate it, so their rounds
-    * are expression-identical (bit-identical results for equal round
-    * counts). */
-  private def run(edges: DataFrame, damping: Double,
-                  srcCol: String, dstCol: String)
-                 (loop: (DataFrame => DataFrame, DataFrame) => DataFrame)
-      : DataFrame =
-    runPrepared(prepare(edges, srcCol, dstCol), damping)(loop)
-
-  /** [[run]]'s loop half over an already-[[prepare]]d graph — the
-    * per-round expressions are UNCHANGED (same step image, decimal-
-    * routed sums), so results are bit-identical whether the graph was
-    * prepared privately or shared. */
-  private def runPrepared(g: PreparedGraph, damping: Double)
-                         (loop: (DataFrame => DataFrame, DataFrame)
-                            => DataFrame): DataFrame = {
-    val base = (1.0 - damping) / g.n
-    // pr0 is a plain projection of the CHECKPOINTED node table — both
-    // of round 1's consumers (propagate join + dangling filter) re-read
-    // its blocks, and round 1's output checkpoints, so lineage stays
-    // bounded without an init barrier (one eager action fewer per
-    // query; the r18 planning-floor measurement)
-    val pr0 = g.nodes
-      .select(col("node"), lit(1.0 / g.n).as("pr"), col("dang"))
-    def step(pr: DataFrame): DataFrame =
-      teleportRound(g.nodes,
-        propagate(g.ed, pr, "src", "dst",
-          col("pr") / col("deg").cast("double")),
-        danglingMass(pr),
-        lit(base) + lit(damping) * coalesce(col("v"), lit(0.0)) +
-          lit(damping) * col("dmass") / lit(g.n.toDouble))
-    loop(step, pr0).select("node", "pr")
-  }
-
-  /** [[personalizedPageRank]]'s loop half over a shared
-    * [[PreparedGraph]] — same teleport algebra, same per-round
-    * expressions, so a privately-prepared run and a shared-graph run
-    * agree bit for bit. The teleport column rides a node table
-    * checkpointed once, like the graph's own artifacts. */
-  private def pprPrepared(g: PreparedGraph, seeds: DataFrame,
-                          iters: Int, damping: Double): DataFrame = {
-    require(iters >= 1, s"need iters >= 1: $iters")
-    val seedSet = seeds.select(col(seeds.columns.head).cast("string")
-      .as("node")).distinct()
-    val nS = g.nodes.join(seedSet, Seq("node"), "left_semi").count()
-    require(nS > 0, "no seed appears in the graph")
-    val ndt = g.nodes
-      .join(seedSet.withColumn("is_seed", lit(true)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("is_seed"), lit(1.0 / nS)).otherwise(lit(0.0)).as("t"),
-        col("dang"))
-      .localCheckpoint(true)
-    iterate(iters,
-      // projection of the checkpointed ndt — no init barrier needed
-      ndt.select(col("node"), col("t").as("pr"), col("dang"))) { p =>
-      teleportRound(ndt,
-        propagate(g.ed, p, "src", "dst",
-          col("pr") / col("deg").cast("double")),
-        danglingMass(p),
-        lit(1.0 - damping) * col("t") +
-          lit(damping) * coalesce(col("v"), lit(0.0)) +
-          lit(damping) * col("dmass") * col("t"))
-    }.select("node", "pr")
+    annotate(e, e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
   }
 }

@@ -240,6 +240,9 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     for ((k, (_, core, _, _)) <- sm)
       assert(core == ppr(k) * (1.0 / 5.0), s"node $k")
+    // and the fused uniform column IS the standalone pageRank run
+    val pr = run(edges, iters = 10)
+    for ((k, (p, _, _, _)) <- sm) assert(p == pr(k), s"node $k")
   }
 
   test("stored rank lifecycle: the authority store round-trips the " +
@@ -465,19 +468,31 @@ class GraphSpec extends AnyFunSuite {
       .union(hostEdges(crawl(
         "http://c.org/" -> "http://a.org/",
         "https://d.org:8080/" -> "http://a.org/q")))
-    Graph.pageRank(edges, 3).collect()
-    org.apache.spark.ListenerBusDrain(s.sparkContext)
-    val seen = plans.asScala.toSeq
-    assert(seen.size > 3, s"queries not reported: ${seen.size}")
-    val readsChain = seen.filter(
-      _.collectLeaves().exists(!_.isInstanceOf[LogicalRDD]))
-    assert(readsChain.size == 1,
-      s"${readsChain.size} queries read past a checkpoint:\n" +
-        readsChain.mkString("\n---\n"))
-    assert(readsChain.head.collectLeaves()
-      .forall(_.isInstanceOf[LocalRelation]), readsChain.head)
-    seen.foreach(p => assert(
-      p.find(_.isInstanceOf[InMemoryRelation]).isEmpty, s"cache read:\n$p"))
+    // `setup` queries read past a checkpoint: the edge dedup (the only
+    // one reading the caller's chain) and, with seeds, the seed count
+    // and the teleport table, which read the seeds' local rows
+    def check(setup: Int)(body: => Unit): Unit = {
+      plans.clear()
+      body
+      org.apache.spark.ListenerBusDrain(s.sparkContext)
+      val seen = plans.asScala.toSeq
+      assert(seen.size > 3, s"queries not reported: ${seen.size}")
+      val readsChain = seen.filter(
+        _.collectLeaves().exists(!_.isInstanceOf[LogicalRDD]))
+      assert(readsChain.size == setup,
+        s"${readsChain.size} queries read past a checkpoint:\n" +
+          readsChain.mkString("\n---\n"))
+      assert(readsChain.head.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation]), readsChain.head)
+      readsChain.tail.foreach(p => assert(p.collectLeaves().forall(l =>
+        l.isInstanceOf[LocalRelation] || l.isInstanceOf[LogicalRDD]), p))
+      seen.foreach(p => assert(
+        p.find(_.isInstanceOf[InMemoryRelation]).isEmpty, s"cache read:\n$p"))
+    }
+    check(1)(Graph.pageRank(edges, 3).collect())
+    val seeds = s.createDataFrame(Seq(Tuple1("a.org"))).toDF("node")
+    check(3)(Graph.personalizedPageRank(edges, seeds, 3).collect())
+    check(3)(Graph.spamMass(edges, seeds, 3).collect())
   }
 
   /** Driver-side reference SALSA — the degree-normalized half-round
