@@ -4483,7 +4483,7 @@ object SparkEntry {
     // fold, rational core: every model component is an integer count,
     // d = 0.75 is exact in binary, no ln(), no rounding.
     query("x144_kn_score", ((s, d) =>
-      ext.TextOps.knBigramScore(t(s, d, "documents"))),
+      ext.TextOps.knScore(t(s, d, "documents"), 2)),
       // x144 — the KN model rebuilt from scratch: bigram types once
       // (c2t), history counts + distinct continuations off the type
       // table (h1), distinct histories per word (p2), the one-row type
@@ -4499,70 +4499,20 @@ object SparkEntry {
     // rational core and ordered-fold determinism; the oracle replays
     // all three count tables off the one trigram-type table.
     query("x149_kn3_score", ((s, d) =>
-      ext.TextOps.knTrigramScore(t(s, d, "documents"))),
-      // x149 — the trigram recursion replayed: every count table derives
-      // from the one trigram-type table (t3), continuation type counts
-      // below the top level, the same parenthesization per level
-      """WITH tok AS MATERIALIZED (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |                             t -> length(t) > 0) AS ts
-        |  FROM documents),
-        |occ AS MATERIALIZED (
-        |  SELECT doc_id, w1, w2, w3, COUNT(*) AS m
-        |  FROM (SELECT doc_id, tg[1] AS w1, tg[2] AS w2, tg[3] AS w3
-        |        FROM (SELECT doc_id,
-        |                     unnest(list_transform(range(1, len(ts) - 1), i ->
-        |                       [ts[CAST(i AS INTEGER)],
-        |                        ts[CAST(i + 1 AS INTEGER)],
-        |                        ts[CAST(i + 2 AS INTEGER)]])) AS tg
-        |              FROM tok))
-        |  GROUP BY doc_id, w1, w2, w3),
-        |t3 AS MATERIALIZED (SELECT w1, w2, w3, CAST(SUM(m) AS BIGINT) AS c3
-        |       FROM occ GROUP BY w1, w2, w3),
-        |h12 AS MATERIALIZED (SELECT w1, w2, CAST(SUM(c3) AS BIGINT) AS c12,
-        |               CAST(COUNT(*) AS BIGINT) AS n3f
-        |        FROM t3 GROUP BY w1, w2),
-        |cont2 AS MATERIALIZED (SELECT w2, w3, CAST(COUNT(*) AS BIGINT) AS ck
-        |          FROM t3 GROUP BY w2, w3),
-        |h2 AS MATERIALIZED (SELECT w2, CAST(SUM(ck) AS BIGINT) AS ctot2,
-        |              CAST(COUNT(*) AS BIGINT) AS n2f
-        |       FROM cont2 GROUP BY w2),
-        |p1 AS MATERIALIZED (SELECT w3, CAST(COUNT(*) AS BIGINT) AS n1p
-        |       FROM cont2 GROUP BY w3),
-        |tt AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS cktot FROM cont2),
-        |valued AS MATERIALIZED (
-        |  SELECT o.doc_id, o.w1, o.w2, o.w3, o.m,
-        |         CAST(o.m AS DOUBLE) /
-        |           (GREATEST(CAST(t.c3 AS DOUBLE) - 0.75, 0.0)
-        |              / CAST(h.c12 AS DOUBLE)
-        |            + ((0.75 * CAST(h.n3f AS DOUBLE))
-        |               / CAST(h.c12 AS DOUBLE))
-        |              * (GREATEST(CAST(c.ck AS DOUBLE) - 0.75, 0.0)
-        |                   / CAST(g.ctot2 AS DOUBLE)
-        |                 + ((0.75 * CAST(g.n2f AS DOUBLE))
-        |                    / CAST(g.ctot2 AS DOUBLE))
-        |                   * (CAST(p.n1p AS DOUBLE)
-        |                      / CAST(tt.cktot AS DOUBLE)))) AS val
-        |  FROM occ o
-        |  JOIN t3 t ON o.w1 = t.w1 AND o.w2 = t.w2 AND o.w3 = t.w3
-        |  JOIN h12 h ON o.w1 = h.w1 AND o.w2 = h.w2
-        |  JOIN cont2 c ON o.w2 = c.w2 AND o.w3 = c.w3
-        |  JOIN h2 g ON o.w2 = g.w2
-        |  JOIN p1 p ON o.w3 = p.w3
-        |  CROSS JOIN tt)
-        |SELECT doc_id,
-        |       CAST(SUM(m) AS BIGINT) AS n_trigrams,
-        |       list_reduce(list(val ORDER BY w1, w2, w3), (a, b) -> a + b)
-        |         / CAST(SUM(m) AS BIGINT) AS kn3_score
-        |FROM valued GROUP BY doc_id""".stripMargin),
+      ext.TextOps.knScore(t(s, d, "documents"), 3)
+        .withColumnRenamed("n_ngrams", "n_trigrams")),
+      // x149 — the trigram recursion replayed by the order-n generator:
+      // every count table derives from the one trigram-type table,
+      // continuation type counts below the top level
+      s"SELECT doc_id, n_ngrams AS n_trigrams, kn3_score " +
+        s"FROM (${knOracleSql(3)})"),
 
     // x166 — ORDER-5 interpolated Kneser-Ney, KenLM's production
     // default order, via the general order-n recursion (x144/x149 are
-    // its hand-unrolled order-2/3 instances, asserted bit-equal in
-    // spec): four continuation levels chained off ONE 5-gram type
-    // table, the KN insight applied at every backoff. The oracle is
-    // GENERATED for the order (knOracleSql) — same per-level
-    // parenthesization, same ordered-fold determinism.
+    // its order-2/3 instances): four continuation levels chained off
+    // ONE 5-gram type table, the KN insight applied at every backoff.
+    // The oracle is GENERATED for the order (knOracleSql) — same
+    // per-level parenthesization, same ordered-fold determinism.
     query("x166_kn5_score", ((s, d) =>
       ext.TextOps.knScore(t(s, d, "documents"), order = 5)),
       // x166 — the order-5 KN recursion, oracle GENERATED from the order
@@ -4978,7 +4928,7 @@ object SparkEntry {
     query("x224_ccnet_sampled", ((s, d) => {
       val docs = t(s, d, "documents")
       ext.Curation.ccnetBucketsSampledScored(
-        ext.TextOps.knBigramScore(docs), docs,
+        ext.TextOps.knScore(docs, 2), docs,
         scoreCol = "kn_score", cntCol = "n_bigrams",
         num = 10, den = 100)
     }),
@@ -9837,15 +9787,6 @@ object SparkEntry {
            CASE WHEN list_contains(kl.kws, t) THEN t ELSE '<unk>' END) AS ts
          FROM tok0 CROSS JOIN kl)"""
 
-  /** x166's ORDER-N Kneser-Ney oracle — the x149 trigram structure
-    * GENERATED for any order: one n-gram type table, continuation type
-    * tables chained below it, history normalizers per level, and the
-    * engine's per-level parenthesization reproduced term for term.
-    * `quantized = true` (x210's stored-ARPA lifecycle) wraps the
-    * top-level probability in the artifact contract —
-    * `pq = round(10^round(log10(p), 9), 9)` with the zero-floor guard
-    * — since on the training corpus every n-gram is present and only
-    * that branch of the stored scorer fires. */
   /** ORDER-GENERIC capped + pruned stored-ARPA replay — the
     * [[knPrunedArpaChainCtes]] build generalized the way
     * [[knOracleSql]] generalizes the unpruned recursion: top-V keep
@@ -10079,6 +10020,15 @@ $ctxJoins),
     sb.toString
   }
 
+  /** The ORDER-N Kneser-Ney oracle of x149 (order 3) and x166
+    * (order 5), GENERATED for any order ≥ 3: one n-gram type table,
+    * continuation type tables chained below it, history normalizers
+    * per level, and the engine's per-level parenthesization reproduced
+    * term for term. `quantized = true` (x210's stored-ARPA lifecycle)
+    * wraps the top-level probability in the artifact contract —
+    * `pq = round(10^round(log10(p), 9), 9)` with the zero-floor guard
+    * — since on the training corpus every n-gram is present and only
+    * that branch of the stored scorer fires. */
   private def knOracleSql(n: Int, quantized: Boolean = false): String = {
     require(n >= 3, s"generated form assumes a continuation chain: $n")
     val ws = (1 to n).map(i => s"w$i")

@@ -1325,8 +1325,8 @@ object Curation {
     * document under a language model and split each LANGUAGE into
     * head / middle / tail perplexity terciles; training recipes then
     * sample head-heavy. The LM here is the in-repo KN bigram scorer
-    * ([[TextOps.knBigramScore]] — x144's engine-portable mean inverse
-    * probability); CCNet ships KenLM 5-grams, and the
+    * ([[TextOps.knScore]] at order 2 — x144's engine-portable mean
+    * inverse probability); CCNet ships KenLM 5-grams, and the
     * [[ccnetBucketsScored]] seam runs the SAME tercile operator over
     * the stored order-5 ARPA score (x221 — the production shape).
     *
@@ -1354,7 +1354,7 @@ object Curation {
                    idCol: String = "doc_id",
                    langCol: String = "lang"): DataFrame =
     ccnetBucketsScored(
-      TextOps.knBigramScore(docs, textCol = textCol, idCol = idCol),
+      TextOps.knScore(docs, 2, textCol = textCol, idCol = idCol),
       docs, scoreCol = "kn_score", cntCol = "n_bigrams",
       idCol = idCol, langCol = langCol)
 

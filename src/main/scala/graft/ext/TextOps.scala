@@ -722,13 +722,8 @@ object TextOps {
   def bigramLmScore(docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id"): DataFrame = {
     val toks = filter(tokens(col(textCol)), t => length(t) > 0)
-    val nTok = size(toks)
-    val bigrams = docs.select(col(idCol),
-        explode(arrays_zip(
-          slice(toks, lit(1), greatest(nTok - 1, lit(0))),
-          slice(toks, lit(2), greatest(nTok - 1, lit(0))))).as("bg"))
-      .select(col(idCol), col("bg.0").as("w1"), col("bg.1").as("w2"))
-    val occ = bigrams.groupBy(col(idCol), col("w1"), col("w2"))
+    val occ = ngramWindows(docs, 2, toks, Seq(col(idCol)))
+      .groupBy(col(idCol), col("w1"), col("w2"))
       .agg(count(lit(1)).as("m"))
     val c2 = occ.groupBy("w1", "w2").agg(sum("m").as("c2"))
     val c1 = occ.groupBy("w1").agg(sum("m").as("c1"))
@@ -742,76 +737,8 @@ object TextOps {
       .withColumn("val", col("m").cast("double") *
         ((col("c1") + col("v")).cast("double") /
          (col("c2") + lit(1L)).cast("double")))
-    valued.groupBy(col(idCol)).agg(
-        sum("m").as("n_bigrams"),
-        aggregate(
-          array_sort(collect_list(struct(col("w1"), col("w2"), col("val")))),
-          lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("val_sum") / col("n_bigrams")).as("lm_score"))
-  }
-
-  /** Interpolated KNESER-NEY bigram score — the smoothing that made
-    * n-gram LMs competitive (Kneser & Ney 1995; Chen & Goodman 1999's
-    * empirical winner, the KenLM default), scoring each document under
-    * the corpus model with absolute discounting plus the continuation
-    * back-off:
-    *
-    * `P_KN(w2|w1) = max(c2−d, 0)/c1 + (d·N1+(w1·)/c1) · N1+(·w2)/N1+(··)`
-    *
-    * where `c2/c1` are bigram/history counts, `N1+(w1·)` the distinct
-    * continuations of `w1`, `N1+(·w2)` the distinct histories of `w2`
-    * (the "how many contexts has this word followed" insight that
-    * distinguishes KN from [[bigramLmScore]]'s add-one — 'francisco'
-    * is frequent but follows only 'san'), and `N1+(··)` the distinct
-    * bigram count. Every component is an integer count, the fixed
-    * discount `d` is exact in binary (default 0.75), and the score —
-    * the x51 convention — is the mean INVERSE probability
-    * `mean_i m_i/P_KN(i)` folded in (w1, w2)-sorted order: rational
-    * core throughout, no ln(), bit-exact across engines.
-    *
-    * Shape at 100 TB: identical to [[bigramLmScore]] — occurrences
-    * collapse map-side; the model tables (`c2` per bigram; `c1`+`N1+`
-    * per w1 off the SAME bigram-type table; `N1+` per w2) are bounded
-    * by distinct-bigram cardinality and join back by content key; the
-    * distinct-bigram total is ONE broadcast row. */
-  def knBigramScore(docs: DataFrame, discount: Double = 0.75,
-                    textCol: String = "text",
-                    idCol: String = "doc_id"): DataFrame = {
-    require(discount > 0 && discount < 1, s"need 0 < d < 1: $discount")
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
-    val nTok = size(toks)
-    val bigrams = docs.select(col(idCol),
-        explode(arrays_zip(
-          slice(toks, lit(1), greatest(nTok - 1, lit(0))),
-          slice(toks, lit(2), greatest(nTok - 1, lit(0))))).as("bg"))
-      .select(col(idCol), col("bg.0").as("w1"), col("bg.1").as("w2"))
-    val occ = bigrams.groupBy(col(idCol), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("m"))
-    val c2 = occ.groupBy("w1", "w2").agg(sum("m").as("c2"))
-    val h1 = c2.groupBy("w1")
-      .agg(sum("c2").as("c1"), count(lit(1)).as("n1f"))
-    val p2 = c2.groupBy("w2").agg(count(lit(1)).as("n1p"))
-    val tot = c2.agg(count(lit(1)).as("n1tot"))
-    val d = lit(discount)
-    val valued = occ
-      .join(c2, Seq("w1", "w2"))
-      .join(h1, Seq("w1"))
-      .join(p2, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .withColumn("p",
-        greatest(col("c2").cast("double") - d, lit(0.0)) /
-          col("c1").cast("double") +
-        ((d * col("n1f").cast("double")) / col("c1").cast("double")) *
-          (col("n1p").cast("double") / col("n1tot").cast("double")))
-      .withColumn("val", col("m").cast("double") / col("p"))
-    valued.groupBy(col(idCol)).agg(
-        sum("m").as("n_bigrams"),
-        aggregate(
-          array_sort(collect_list(struct(col("w1"), col("w2"), col("val")))),
-          lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("val_sum") / col("n_bigrams")).as("kn_score"))
+    orderedMean(valued, idCol, Seq(col("w1"), col("w2")), sum("m"),
+      "n_bigrams", "lm_score")
   }
 
   /** HyperLogLog vocabulary-cardinality estimate (Flajolet, Fusy,
@@ -1089,12 +1016,7 @@ object TextOps {
     val n = order
     val ws = (1 to n).map(i => s"w$i")
     val toks = filter(tokens(col(textCol)), t => length(t) > 0)
-    val nTok = size(toks)
-    var grams = docs.select(
-        explode(arrays_zip((1 to n).map(i =>
-          slice(toks, lit(i), greatest(nTok - (n - 1), lit(0)))): _*))
-          .as("g"))
-      .select((0 until n).map(i => col(s"g.$i").as(s"w${i + 1}")): _*)
+    var grams = ngramWindows(docs, n, toks, Nil)
     if (vocabSize > 0) {
       // top-V keep list (deterministic ties) rides a broadcast into
       // n map-side left joins; misses become <unk> before any census
@@ -1114,22 +1036,7 @@ object TextOps {
     // model-table sized, so pin it once
     val tn = grams.groupBy(ws.map(col): _*).agg(count(lit(1)).as("cN"))
       .localCheckpoint()
-    val hTop = tn.groupBy(ws.init.map(col): _*)
-      .agg(sum("cN").as("cHist"), count(lit(1)).as("nTopF"))
-    val conts = scala.collection.mutable.Map[Int, DataFrame]()
-    var cur = tn
-    for (k <- (n - 1) to 1 by -1) {
-      val tk = cur.groupBy(ws.takeRight(k).map(col): _*)
-        .agg(count(lit(1)).as(s"ck$k"))
-      conts(k) = tk
-      cur = tk
-    }
-    val hists = (2 to n - 1).map { k =>
-      k -> conts(k).groupBy(ws.takeRight(k).init.map(col): _*)
-        .agg(sum(s"ck$k").as(s"ctot$k"), count(lit(1)).as(s"nf$k"))
-    }.toMap
-    val lvl2 = if (n == 2) tn else conts(2)
-    val tot = lvl2.agg(count(lit(1)).as("cktot"))
+    val (hTop, conts, hists, tot) = knTables(tn, n)
     val d = lit(discount)
     // null-safe P_k fold over continuation levels 2..k — knScore's
     // expressions verbatim wherever the statistic exists (so quantized
@@ -1341,11 +1248,7 @@ object TextOps {
   private def knScoreTail(occ: DataFrame, n: Int, idCol: String)
   : DataFrame = {
     val ws = (1 to n).map(i => s"w$i")
-    var lg: Column = coalesce(col("lp1"), lit(-99.0))
-    for (k <- 2 to n - 1)
-      lg = when(col(s"lp$k").isNotNull, col(s"lp$k"))
-        .otherwise(coalesce(col(s"cbow${k - 1}"), lit(0.0)) + lg)
-    val backLog = coalesce(col(s"cbow${n - 1}"), lit(0.0)) + lg
+    val backLog = arpaBackoffLog(n)
     // BOTH branches publish through the artifact's 9-dp quantization
     // (with the zero-floor raw fallback): the backoff product is a
     // pow() over summed logs, and an unquantized pow leaks cross-
@@ -1359,17 +1262,46 @@ object TextOps {
         .otherwise(when(bqr > lit(0.0), bqr)
           .otherwise(pow(lit(10.0), backLog))))
       .withColumn("val", col("m").cast("double") / col("pq"))
-    val (cntName, scoreName) =
-      if (n == 2) ("n_bigrams", "kn_score_q")
-      else ("n_ngrams", s"kn${n}_score_q")
-    pq.groupBy(col(idCol)).agg(
-        sum("m").as(cntName),
+    val (cntName, scoreName) = knNames(n, "_q")
+    orderedMean(pq, idCol, ws.map(col), sum("m"), cntName, scoreName)
+  }
+
+  /** Published column names of a KN score of order `n`: order 2 is
+    * `n_bigrams`/`kn_score`, higher orders `n_ngrams`/`kn<n>_score`;
+    * `sfx` marks the stored-model route (`_q`). */
+  private def knNames(n: Int, sfx: String = ""): (String, String) =
+    if (n == 2) ("n_bigrams", s"kn_score$sfx")
+    else ("n_ngrams", s"kn${n}_score$sfx")
+
+  /** The ARPA walk's log for an order-n gram the model does not hold,
+    * over [[occLookupsOver]] columns: the longest stored suffix's `lp`,
+    * plus the backoff weight of every context passed on the way down
+    * (absent bow = 0; an unseen word falls to the −99 zeroprob). */
+  private def arpaBackoffLog(n: Int): Column = {
+    var lg: Column = coalesce(col("lp1"), lit(-99.0))
+    for (k <- 2 to n - 1)
+      lg = when(col(s"lp$k").isNotNull, col(s"lp$k"))
+        .otherwise(coalesce(col(s"cbow${k - 1}"), lit(0.0)) + lg)
+    coalesce(col(s"cbow${n - 1}"), lit(0.0)) + lg
+  }
+
+  /** The per-document mean of `val` under a fixed summation order:
+    * each `idCol` group collects its `val`s, sorts them by `orderCols`
+    * (the gram words, or the in-doc position) and folds them left to
+    * right, so the double sum is sequential and bit-exact across
+    * engines and partitionings (the DotFold discipline). `cnt` is the
+    * mean's denominator, published as `cntName`; the mean is
+    * `scoreName`. */
+  private def orderedMean(valued: DataFrame, idCol: String,
+                          orderCols: Seq[Column], cnt: Column,
+                          cntName: String, scoreName: String): DataFrame =
+    valued.groupBy(col(idCol)).agg(
+        cnt.as(cntName),
         aggregate(
-          array_sort(collect_list(struct(ws.map(col) :+ col("val"): _*))),
+          array_sort(collect_list(struct(orderCols :+ col("val"): _*))),
           lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
       .select(col(idCol), col(cntName),
         (col("val_sum") / col(cntName)).as(scoreName))
-  }
 
   /** Per-gram LOG cross-entropy from a stored ARPA model — the LOG-
     * DOMAIN twin of [[knScoreStoredArpa]] and the statistic data-
@@ -1399,13 +1331,9 @@ object TextOps {
   : DataFrame = {
     val (occ, n) = arpaOccLookups(spark, docs, arpaPath, textCol,
       idCol, collapse, passthrough)
-    var lg: Column = coalesce(col("lp1"), lit(-99.0))
-    for (k <- 2 to n - 1)
-      lg = when(col(s"lp$k").isNotNull, col(s"lp$k"))
-        .otherwise(coalesce(col(s"cbow${k - 1}"), lit(0.0)) + lg)
     val full = when(col(s"lp$n").isNotNull, col(s"lp$n"))
-      .otherwise(coalesce(col(s"cbow${n - 1}"), lit(0.0)) + lg)
-    val cntName = if (n == 2) "n_bigrams" else "n_ngrams"
+      .otherwise(arpaBackoffLog(n))
+    val cntName = knNames(n)._1
     val lgi = round(full * lit(1e9)).cast("long")
     val keyCols = (idCol +: passthrough).map(col)
     occ.withColumn("ti", col("m") * lgi)
@@ -1496,13 +1424,8 @@ object TextOps {
           .otherwise(lit(lambda) * pow(lit(10.0), dualLg("a")) +
             lit(1.0 - lambda) * pow(lit(10.0), dualLg("b"))))
       .withColumn("val", lit(1.0) / col("pq"))
-    pq.groupBy(col(idCol)).agg(
-        count(lit(1)).as("n_bigrams"),
-        aggregate(
-          array_sort(collect_list(struct(col("pos"), col("val")))),
-          lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
-      .select(col(idCol), col("n_bigrams"),
-        (col("val_sum") / col("n_bigrams")).as("mix_score_q"))
+    orderedMean(pq, idCol, Seq(col("pos")), count(lit(1)), "n_bigrams",
+      "mix_score_q")
   }
 
   /** Dual-model Moore-Lewis gate over ONE pass — the per-document
@@ -1709,14 +1632,8 @@ object TextOps {
   : DataFrame = {
     val ws = (1 to n).map(i => s"w$i")
     val keyCols = (idCol +: passthrough).map(col)
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
-    val nTok = size(toks)
-    var occ = docs.select(keyCols :+
-        explode(arrays_zip((1 to n).map(i =>
-          slice(toks, lit(i), greatest(nTok - (n - 1), lit(0)))): _*))
-          .as("g"): _*)
-      .select(keyCols ++
-        (0 until n).map(i => col(s"g.$i").as(s"w${i + 1}")): _*)
+    var occ = ngramWindows(docs, n,
+      filter(tokens(col(textCol)), t => length(t) > 0), keyCols)
     vocab.foreach { vocabDf =>
       // the model vocabulary (unigram section — bounded by the cap
       // that produced it) rides into n map-side left joins;
@@ -1753,79 +1670,6 @@ object TextOps {
         array_join(array(ws.slice(n - 1 - k, n - 1).map(col): _*), " ") ===
           col(s"bkey$k"), "left").drop(s"bkey$k")
     occ
-  }
-
-  /** TRIGRAM interpolated Kneser-Ney (Chen & Goodman 1999 §3 — the
-    * full one-level recursion [[knBigramScore]] truncates):
-    *
-    * `P₃(w3|w1w2) = max(c3−d,0)/c12 + (d·N1+(w1w2·)/c12)·P₂c(w3|w2)`
-    * `P₂c(w3|w2) = max(N1+(·w2w3)−d,0)/N1+(·w2·)
-    *               + (d·N1+(w2·)/N1+(·w2·))·P₁c(w3)`
-    * `P₁c(w3)   = N1+(·w3)/N1+(··)`
-    *
-    * — the middle and bottom levels use CONTINUATION counts (type
-    * counts over the trigram-type table: `N1+(·w2w3)` = distinct
-    * left-contexts of the bigram, `N1+(·w2·)` their sum per middle
-    * word, `N1+(·w3)` distinct middles preceding w3, `N1+(··)` the
-    * continuation-bigram type total), the Kneser-Ney insight applied
-    * at every backoff level rather than once. Every component is an
-    * integer count off ONE trigram-type table, `d = 0.75` exact in
-    * binary; the score is the x51/x144 convention — mean inverse
-    * probability `mean_i m_i/P₃(i)` folded in (w1,w2,w3)-sorted order.
-    * Rational core, no ln(), bit-exact across engines.
-    *
-    * Shape at 100 TB: occurrences collapse map-side; every model table
-    * (`t3`, `h12`, `cont2`, `h2`, `p1`) is bounded by distinct-trigram
-    * cardinality and joins back by content key; the type total is ONE
-    * broadcast row. Same plan family as [[knBigramScore]], one order
-    * higher. */
-  def knTrigramScore(docs: DataFrame, discount: Double = 0.75,
-                     textCol: String = "text",
-                     idCol: String = "doc_id"): DataFrame = {
-    require(discount > 0 && discount < 1, s"need 0 < d < 1: $discount")
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
-    val nTok = size(toks)
-    val trigrams = docs.select(col(idCol),
-        explode(arrays_zip(
-          slice(toks, lit(1), greatest(nTok - 2, lit(0))),
-          slice(toks, lit(2), greatest(nTok - 2, lit(0))),
-          slice(toks, lit(3), greatest(nTok - 2, lit(0))))).as("tg"))
-      .select(col(idCol), col("tg.0").as("w1"), col("tg.1").as("w2"),
-        col("tg.2").as("w3"))
-    val occ = trigrams.groupBy(col(idCol), col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("m"))
-    val t3 = occ.groupBy("w1", "w2", "w3").agg(sum("m").as("c3"))
-    val h12 = t3.groupBy("w1", "w2")
-      .agg(sum("c3").as("c12"), count(lit(1)).as("n3f"))
-    val cont2 = t3.groupBy("w2", "w3").agg(count(lit(1)).as("ck"))
-    val h2 = cont2.groupBy("w2")
-      .agg(sum("ck").as("ctot2"), count(lit(1)).as("n2f"))
-    val p1 = cont2.groupBy("w3").agg(count(lit(1)).as("n1p"))
-    val tot = cont2.agg(count(lit(1)).as("cktot"))
-    val d = lit(discount)
-    val p1v = col("n1p").cast("double") / col("cktot").cast("double")
-    val p2v = greatest(col("ck").cast("double") - d, lit(0.0)) /
-        col("ctot2").cast("double") +
-      ((d * col("n2f").cast("double")) / col("ctot2").cast("double")) * p1v
-    val p3v = greatest(col("c3").cast("double") - d, lit(0.0)) /
-        col("c12").cast("double") +
-      ((d * col("n3f").cast("double")) / col("c12").cast("double")) * p2v
-    val valued = occ
-      .join(t3, Seq("w1", "w2", "w3"))
-      .join(h12, Seq("w1", "w2"))
-      .join(cont2, Seq("w2", "w3"))
-      .join(h2, Seq("w2"))
-      .join(p1, Seq("w3"))
-      .crossJoin(broadcast(tot))
-      .withColumn("val", col("m").cast("double") / p3v)
-    valued.groupBy(col(idCol)).agg(
-        sum("m").as("n_trigrams"),
-        aggregate(
-          array_sort(collect_list(struct(col("w1"), col("w2"), col("w3"),
-            col("val")))),
-          lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
-      .select(col(idCol), col("n_trigrams"),
-        (col("val_sum") / col("n_trigrams")).as("kn3_score"))
   }
 
   /** DSIR importance weight (Xie et al. 2023, "Data Selection for
@@ -2175,8 +2019,9 @@ object TextOps {
         col("ml_score"))
   }
 
-  /** ORDER-N interpolated Kneser-Ney (Chen & Goodman 1999 §3, the full
-    * recursion KenLM ships at its production default order 5):
+  /** ORDER-N interpolated Kneser-Ney (Kneser & Ney 1995; Chen &
+    * Goodman 1999 §3, the full recursion KenLM ships at its production
+    * default order 5), scoring each document under the corpus model:
     *
     * `P_n(w_n|hist) = max(c_n−d,0)/c_hist + (d·N1+(hist·)/c_hist)·P_{n-1}`
     * `P_k(w|ctx)   = max(ck_k−d,0)/ctot_k + (d·nf_k/ctot_k)·P_{k-1}`
@@ -2185,15 +2030,34 @@ object TextOps {
     * — the top level on raw n-gram counts, every lower level on
     * CONTINUATION type counts (level k's table counts the distinct
     * left words of each k-gram in the level-(k+1) TYPE table), the
-    * Kneser-Ney insight applied at every backoff. All counts derive
-    * from ONE n-gram type table; [[knBigramScore]] and
-    * [[knTrigramScore]] are independent hand-unrolled order-2/3
-    * builds of the same recursion, and the spec asserts this general
-    * form reproduces both BIT-FOR-BIT (modulo output column names) —
-    * the cross-implementation proof. Score is the x51/x144
-    * convention: mean inverse probability `mean_i m_i/P_n(i)` folded
-    * in (w1..wn)-sorted order. Rational core, no ln(), bit-exact
-    * across engines.
+    * Kneser-Ney insight applied at every backoff. At order 2 (x144) it
+    * is absolute discounting plus the continuation back-off,
+    *
+    * `P_KN(w2|w1) = max(c2−d, 0)/c1 + (d·N1+(w1·)/c1) · N1+(·w2)/N1+(··)`
+    *
+    * where `c2/c1` are bigram/history counts, `N1+(w1·)` the distinct
+    * continuations of `w1`, `N1+(·w2)` the distinct histories of `w2`
+    * (the "how many contexts has this word followed" insight that
+    * distinguishes KN from [[bigramLmScore]]'s add-one — 'francisco'
+    * is frequent but follows only 'san') and `N1+(··)` the distinct
+    * bigram count. At order 3 (x149):
+    *
+    * `P₃(w3|w1w2) = max(c3−d,0)/c12 + (d·N1+(w1w2·)/c12)·P₂c(w3|w2)`
+    * `P₂c(w3|w2) = max(N1+(·w2w3)−d,0)/N1+(·w2·)
+    *               + (d·N1+(w2·)/N1+(·w2·))·P₁c(w3)`
+    * `P₁c(w3)   = N1+(·w3)/N1+(··)`
+    *
+    * with `N1+(·w2w3)` the distinct left-contexts of the bigram,
+    * `N1+(·w2·)` their sum per middle word, `N1+(·w3)` the distinct
+    * middles preceding w3 and `N1+(··)` the continuation-bigram type
+    * total. Every count derives from ONE n-gram type table
+    * ([[knTables]]) and the fixed discount `d` is exact in binary
+    * (default 0.75); the spec checks orders 2 to 5 against a driver
+    * reference bit-for-bit. Score is the x51/x144 convention: mean
+    * inverse probability `mean_i m_i/P_n(i)` folded in
+    * (w1..wn)-sorted order, published as `n_bigrams`/`kn_score` at
+    * order 2 and `n_ngrams`/`kn<n>_score` above. Rational core, no
+    * ln(), bit-exact across engines.
     *
     * Shape at 100 TB: occurrences collapse map-side; each of the
     * 2(n−1) model tables is bounded by distinct-n-gram cardinality
@@ -2208,37 +2072,12 @@ object TextOps {
     require(discount > 0 && discount < 1, s"need 0 < d < 1: $discount")
     val n = order
     val ws = (1 to n).map(i => s"w$i")
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
-    val nTok = size(toks)
-    val grams = docs.select(col(idCol),
-        explode(arrays_zip((1 to n).map(i =>
-          slice(toks, lit(i), greatest(nTok - (n - 1), lit(0)))): _*))
-          .as("g"))
-      .select(col(idCol) +:
-        (0 until n).map(i => col(s"g.$i").as(s"w${i + 1}")): _*)
-    val occ = grams.groupBy(col(idCol) +: ws.map(col): _*)
+    val occ = ngramWindows(docs, n,
+        filter(tokens(col(textCol)), t => length(t) > 0), Seq(col(idCol)))
+      .groupBy(col(idCol) +: ws.map(col): _*)
       .agg(count(lit(1)).as("m"))
     val tn = occ.groupBy(ws.map(col): _*).agg(sum("m").as("cN"))
-    val hTop = tn.groupBy(ws.init.map(col): _*)
-      .agg(sum("cN").as("cHist"), count(lit(1)).as("nTopF"))
-    // continuation type tables T_{n-1}..T_1, each built from the one
-    // above (a row of T_{k+1} is a distinct (k+1)-gram, so count(*)
-    // per k-suffix = distinct left words)
-    val conts = scala.collection.mutable.Map[Int, DataFrame]()
-    var cur = tn
-    for (k <- (n - 1) to 1 by -1) {
-      val tk = cur.groupBy(ws.takeRight(k).map(col): _*)
-        .agg(count(lit(1)).as(s"ck$k"))
-      conts(k) = tk
-      cur = tk
-    }
-    // history normalizers H_k over T_k, k = n-1..2
-    val hists = (2 to n - 1).map { k =>
-      k -> conts(k).groupBy(ws.takeRight(k).init.map(col): _*)
-        .agg(sum(s"ck$k").as(s"ctot$k"), count(lit(1)).as(s"nf$k"))
-    }.toMap
-    val lvl2 = if (n == 2) tn else conts(2)
-    val tot = lvl2.agg(count(lit(1)).as("cktot"))
+    val (hTop, conts, hists, tot) = knTables(tn, n)
     var valued = occ.join(tn, ws).join(hTop, ws.init)
     for (k <- (n - 1) to 2 by -1)
       valued = valued.join(conts(k), ws.takeRight(k))
@@ -2254,14 +2093,53 @@ object TextOps {
     val pn = greatest(col("cN").cast("double") - d, lit(0.0)) /
           col("cHist").cast("double") +
         ((d * col("nTopF").cast("double")) / col("cHist").cast("double")) * p
-    valued.withColumn("val", col("m").cast("double") / pn)
-      .groupBy(col(idCol)).agg(
-        sum("m").as("n_ngrams"),
-        aggregate(
-          array_sort(collect_list(struct(ws.map(col) :+ col("val"): _*))),
-          lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
-      .select(col(idCol), col("n_ngrams"),
-        (col("val_sum") / col("n_ngrams")).as(s"kn${n}_score"))
+    val (cntName, scoreName) = knNames(n)
+    orderedMean(valued.withColumn("val", col("m").cast("double") / pn),
+      idCol, ws.map(col), sum("m"), cntName, scoreName)
+  }
+
+  /** The n-gram windows of each document's token array `toks`: one row
+    * per window, the `keyCols` then `w1..wn` (n zipped slices of the
+    * array, so a document shorter than n tokens has none). */
+  private def ngramWindows(docs: DataFrame, n: Int, toks: Column,
+                           keyCols: Seq[Column]): DataFrame = {
+    val nTok = size(toks)
+    docs.select(keyCols :+
+        explode(arrays_zip((1 to n).map(i =>
+          slice(toks, lit(i), greatest(nTok - (n - 1), lit(0)))): _*))
+          .as("g"): _*)
+      .select(keyCols ++
+        (0 until n).map(i => col(s"g.$i").as(s"w${i + 1}")): _*)
+  }
+
+  /** The KN model tables over an n-gram type table `tn(w1..wn, cN)`,
+    * shared by [[knScore]] and [[knArpaLevels]]: `hTop` per history
+    * (`cHist` = Σ cN, `nTopF` = distinct continuations), the
+    * continuation type tables `conts(k)` for k = n−1..1 (`ck<k>`),
+    * the history normalizers `hists(k)` for k = n−1..2 (`ctot<k>`,
+    * `nf<k>`) and the one-row level-2 type total `cktot`. */
+  private def knTables(tn: DataFrame, n: Int)
+  : (DataFrame, Map[Int, DataFrame], Map[Int, DataFrame], DataFrame) = {
+    val ws = (1 to n).map(i => s"w$i")
+    val hTop = tn.groupBy(ws.init.map(col): _*)
+      .agg(sum("cN").as("cHist"), count(lit(1)).as("nTopF"))
+    // continuation type tables T_{n-1}..T_1, each built from the one
+    // above (a row of T_{k+1} is a distinct (k+1)-gram, so count(*)
+    // per k-suffix = distinct left words)
+    val conts = scala.collection.mutable.Map[Int, DataFrame]()
+    var cur = tn
+    for (k <- (n - 1) to 1 by -1) {
+      cur = cur.groupBy(ws.takeRight(k).map(col): _*)
+        .agg(count(lit(1)).as(s"ck$k"))
+      conts(k) = cur
+    }
+    // history normalizers H_k over T_k, k = n-1..2
+    val hists = (2 to n - 1).map { k =>
+      k -> conts(k).groupBy(ws.takeRight(k).init.map(col): _*)
+        .agg(sum(s"ck$k").as(s"ctot$k"), count(lit(1)).as(s"nf$k"))
+    }.toMap
+    val tot = (if (n == 2) tn else conts(2)).agg(count(lit(1)).as("cktot"))
+    (hTop, conts.toMap, hists, tot)
   }
 
   /** Gopher/MassiveText quality-rule flags (Rae et al. 2021, "Scaling

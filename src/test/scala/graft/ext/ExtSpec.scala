@@ -1449,7 +1449,7 @@ class ExtSpec extends AnyFunSuite {
       (6L, "en", "a1 b1 c1 d1 e1 f1 g1 h1 i1 j1 k1 l1"),
       (7L, "de", "der hund lief zum haus und der hund lief"))
       .toDF("doc_id", "lang", "text")
-    val scored = TextOps.knBigramScore(cdocs)
+    val scored = TextOps.knScore(cdocs, 2)
     val grouped = Curation.ccnetBucketsScored(scored, cdocs,
         scoreCol = "kn_score", cntCol = "n_bigrams")
       .collect().map(r => r.getLong(0) -> r.getString(4)).toMap
@@ -2511,7 +2511,7 @@ class ExtSpec extends AnyFunSuite {
     val rows = Seq((1L, "san francisco san francisco"),
       (2L, "new york new haven"), (3L, "san haven york francisco"))
     val docs = rows.toDF("doc_id", "text")
-    val got = TextOps.knBigramScore(docs)
+    val got = TextOps.knScore(docs, 2)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
     // driver reference: exact KN algebra in the engine's op order
@@ -2554,7 +2554,7 @@ class ExtSpec extends AnyFunSuite {
       (3L, "mat the on sat cat the"),
       (4L, "too short"))                       // < 3 tokens: no output
     val docs = rows.toDF("doc_id", "text")
-    val got = TextOps.knTrigramScore(docs)
+    val got = TextOps.knScore(docs, 3)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
     assert(!got.contains(4L))
@@ -2654,8 +2654,8 @@ class ExtSpec extends AnyFunSuite {
     }.toMap
   }
 
-  test("knScore order-n: reproduces the hand-unrolled bigram and " +
-    "trigram instances BIT-FOR-BIT (cross-implementation proof)") {
+  test("knScore orders 2 and 3: match the generic driver recursion " +
+    "bit-for-bit under the published x144/x149 column names") {
     val rows = Seq(
       (1L, "the cat sat on the mat the cat sat on the rug"),
       (2L, "the dog sat on the mat"),
@@ -2664,8 +2664,12 @@ class ExtSpec extends AnyFunSuite {
     val docs = rows.toDF("doc_id", "text")
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(m(TextOps.knScore(docs, 2)) == m(TextOps.knBigramScore(docs)))
-    assert(m(TextOps.knScore(docs, 3)) == m(TextOps.knTrigramScore(docs)))
+    val k2 = TextOps.knScore(docs, 2)
+    val k3 = TextOps.knScore(docs, 3)
+    assert(k2.columns.toSeq == Seq("doc_id", "n_bigrams", "kn_score"))
+    assert(k3.columns.toSeq == Seq("doc_id", "n_ngrams", "kn3_score"))
+    assert(m(k2) == knRef(rows, 2))
+    assert(m(k3) == knRef(rows, 3))
   }
 
   test("knScore order 5 (the KenLM production default): matches the " +
@@ -2693,8 +2697,8 @@ class ExtSpec extends AnyFunSuite {
     // every gram is a singleton and ordering is fixture noise
     for ((id, (_, s)) <- got)
       assert(s >= 1.0 - 1e-9 && java.lang.Double.isFinite(s), s"doc $id: $s")
-    // and the generic reference agrees with the unrolled instances too
-    assert(knRef(rows, 3) == TextOps.knTrigramScore(docs).collect()
+    // and the generic reference agrees at order 3 on this corpus too
+    assert(knRef(rows, 3) == TextOps.knScore(docs, 3).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap)
     // order 4 — the untested middle of the recursion (two continuation
     // levels between top and unigram) — against the same reference

@@ -70,7 +70,7 @@ class ArpaSpec extends AnyFunSuite {
       java.nio.charset.StandardCharsets.UTF_8) == Arpa.render(m))
     val stored = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val inline = graft.ext.TextOps.knBigramScore(docs)
+    val inline = graft.ext.TextOps.knScore(docs, 2)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     inline.foreach { case (id, v) =>
       assert(math.abs(stored(id) - v) / v < 1e-6,
