@@ -78,7 +78,7 @@ object ArtifactMemo {
     }
   }
 
-  private def delete(root: Path): Unit =
+  private[graft] def delete(root: Path): Unit =
     if (Files.exists(root)) {
       val paths = Files.walk(root)
       try paths.sorted(Comparator.reverseOrder[Path]())

@@ -2,7 +2,7 @@ package graft.ext
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -66,6 +66,76 @@ object Multimodal {
       StructField("n_frames", IntegerType, nullable = true),
       StructField("mime", StringType, nullable = true))), nullable = true)))
 
+  /** A [[mediaSchema]] table over `in`'s documents: `doc_id` becomes
+    * `media_id`, and each absent meta value is a null int.
+    *
+    * A generator whose payload encode is real per-row codec CPU spreads
+    * its narrow input first ([[spreadNarrowInput]]). Two kinds do NOT:
+    *  - probe inputs, whose consumers are header/metadata walks (~0.1 s
+    *    serial at fixture scale): the spread exchange costs more than the
+    *    CPU it would parallelize (r18 subset A/B: probes regressed ~2x);
+    *  - WAV inputs: AudioSystem encode/decode funnels through the JDK's
+    *    synchronized service-provider registry, so wide stages convoy on
+    *    that lock (r18: 8-wide x46 tasks sat ~2 s blocked per task at
+    *    0.3 s CPU) and measure SLOWER than the serial scan chain. */
+  private def mediaTable(in: DataFrame, payload: Column, kind: String,
+                         mime: String, width: Option[Int] = None,
+                         height: Option[Int] = None,
+                         sampleRate: Option[Int] = None,
+                         nFrames: Option[Int] = None): DataFrame = {
+    def int(v: Option[Int]): Column = v.fold(lit(null).cast("int"))(lit(_))
+    in.select(
+      col("doc_id").as("media_id"),
+      lit(kind).as("kind"),
+      payload.as("payload"),
+      struct(
+        int(width).as("width"), int(height).as("height"),
+        int(sampleRate).as("sample_rate"), int(nFrames).as("n_frames"),
+        lit(mime).as("mime")).as("meta"))
+  }
+
+  /** One narrow pass over `media`'s payloads: `rows(media_id, payload)`
+    * (payload null when absent) yields the output rows, `media_id`
+    * first and then `fields`, all non-null; a payload it cannot read
+    * yields none. mapPartitions, so codec state is set up once per task;
+    * no shuffle, and it runs on a stream as on a batch. */
+  private def payloadPass(media: DataFrame, fields: (String, DataType)*)(
+      rows: (Long, Array[Byte]) => IterableOnce[Row]): DataFrame = {
+    val schema = StructType((("media_id" -> LongType) +: fields).map {
+      case (name, t) => StructField(name, t, nullable = false) })
+    media.select("media_id", "payload").mapPartitions { it =>
+      it.flatMap { r =>
+        rows(r.getLong(0), if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1))
+      }
+    }(org.apache.spark.sql.Encoders.row(schema))
+  }
+
+  /** Mean of a row-major 8-bit gray frame: an exact integer sum over the
+    * pixel count. */
+  private def meanLum(gray: Array[Byte]): Double = {
+    var sum = 0L
+    var i = 0
+    while (i < gray.length) { sum += gray(i) & 0xFF; i += 1 }
+    sum.toDouble / gray.length
+  }
+
+  /** Temporal frame sampling: every `everyNth` frame of each payload →
+    * (media_id, frame_idx, mean_lum). `frames` lists a payload's frames
+    * (none when the container does not read it) and `gray` decodes one
+    * frame to row-major 8-bit luminance. Only the sampled frames are
+    * decoded; one that does not decode drops its row. */
+  private def sampleGrayFrames[F](media: DataFrame, everyNth: Int)(
+      frames: Array[Byte] => Seq[F])(
+      gray: F => Option[Array[Byte]]): DataFrame = {
+    require(everyNth > 0, s"everyNth must be positive, got $everyNth")
+    payloadPass(media, "frame_idx" -> IntegerType,
+        "mean_lum" -> DoubleType) { (id, payload) =>
+      frames(payload).iterator.zipWithIndex
+        .filter { case (_, k) => k % everyNth == 0 }
+        .flatMap { case (f, k) => gray(f).map(g => Row(id, k, meanLum(g))) }
+    }
+  }
+
   /** ImageIO's stream cache defaults to DISK: every read/write spills
     * through a temp file plus synchronized registry work, which
     * serializes concurrent decode tasks on filesystem churn (r18
@@ -122,6 +192,12 @@ object Multimodal {
                 raster.getSample(x, y, 2)) / 3
         math.min(255, v >> shift)
       }
+    }
+
+    /** [[lum8]] of every pixel, row-major. */
+    private[ext] def gray8(img: java.awt.image.BufferedImage): Array[Byte] = {
+      val w = img.getWidth
+      Array.tabulate(w * img.getHeight)(i => lum8(img, i % w, i / w).toByte)
     }
 
     /** 16-bucket luminance histogram over DECODED pixels, L1-normalized.
@@ -402,6 +478,151 @@ object Multimodal {
     }
   }
 
+  /** The RIFF 'AVI ' container of [[AviCodec]] (DIB) and [[MjpegCodec]]
+    * (MJPG): one writer and one chunk walker. The two codecs differ only
+    * in stream handler, bit depth, compression, palette, frame chunk id
+    * and frame bodies. */
+  private object Riff {
+    private def le32(out: ByteArrayOutputStream, v: Int): Unit = {
+      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
+      out.write((v >> 16) & 0xFF); out.write((v >> 24) & 0xFF)
+    }
+    private def le16(out: ByteArrayOutputStream, v: Int): Unit = {
+      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
+    }
+    private def fourcc(out: ByteArrayOutputStream, s: String): Unit =
+      out.write(s.getBytes("US-ASCII"), 0, 4)
+
+    private def chunk(id: String)(body: ByteArrayOutputStream => Unit)
+        : Array[Byte] = {
+      val b = new ByteArrayOutputStream()
+      body(b)
+      val payload = b.toByteArray
+      val out = new ByteArrayOutputStream()
+      fourcc(out, id); le32(out, payload.length)
+      out.write(payload, 0, payload.length)
+      if (payload.length % 2 == 1) out.write(0) // RIFF word alignment
+      out.toByteArray
+    }
+    private def list(kind: String)(parts: Array[Byte]*): Array[Byte] = {
+      val out = new ByteArrayOutputStream()
+      fourcc(out, "LIST")
+      le32(out, 4 + parts.map(_.length).sum)
+      fourcc(out, kind)
+      parts.foreach(p => out.write(p, 0, p.length))
+      out.toByteArray
+    }
+
+    /** RIFF('AVI ') → LIST hdrl (avih, LIST strl (strh 'vids'/`handler`,
+      * strf BITMAPINFOHEADER + `palette`)) → LIST movi (one `chunkId`
+      * chunk per frame body) → idx1, every frame a keyframe. The
+      * suggested buffer size is the largest body. Deterministic bytes. */
+    def writeAvi(handler: String, bitCount: Int, compression: Int,
+                 palette: Array[Byte], chunkId: String, width: Int,
+                 height: Int, fps: Int, bodies: Seq[Array[Byte]])
+        : Array[Byte] = {
+      val bufSize = bodies.map(_.length).max
+      val avih = chunk("avih") { b =>
+        le32(b, 1000000 / fps)        // dwMicroSecPerFrame
+        le32(b, bufSize * fps)        // dwMaxBytesPerSec
+        le32(b, 0)                    // dwPaddingGranularity
+        le32(b, 0x10)                 // dwFlags: AVIF_HASINDEX
+        le32(b, bodies.length)        // dwTotalFrames
+        le32(b, 0)                    // dwInitialFrames
+        le32(b, 1)                    // dwStreams
+        le32(b, bufSize)              // dwSuggestedBufferSize
+        le32(b, width); le32(b, height)
+        (0 until 4).foreach(_ => le32(b, 0)) // dwReserved
+      }
+      val strh = chunk("strh") { b =>
+        fourcc(b, "vids"); fourcc(b, handler)
+        le32(b, 0)                    // dwFlags
+        le16(b, 0); le16(b, 0)        // wPriority, wLanguage
+        le32(b, 0)                    // dwInitialFrames
+        le32(b, 1); le32(b, fps)      // dwScale / dwRate = frame rate
+        le32(b, 0)                    // dwStart
+        le32(b, bodies.length)        // dwLength
+        le32(b, bufSize)              // dwSuggestedBufferSize
+        le32(b, -1)                   // dwQuality (default)
+        le32(b, 0)                    // dwSampleSize
+        le16(b, 0); le16(b, 0); le16(b, width); le16(b, height) // rcFrame
+      }
+      val strf = chunk("strf") { b =>
+        le32(b, 40)                   // biSize
+        le32(b, width); le32(b, height)
+        le16(b, 1); le16(b, bitCount) // biPlanes, biBitCount
+        le32(b, compression)          // biCompression
+        le32(b, bufSize)              // biSizeImage
+        le32(b, 0); le32(b, 0)        // ppm
+        le32(b, palette.length / 4); le32(b, 0) // biClrUsed, biClrImportant
+        b.write(palette, 0, palette.length)
+      }
+      val frameChunks = bodies.map(f => chunk(chunkId)(_.write(f, 0, f.length)))
+      val movi = list("movi")(frameChunks: _*)
+      val idx1 = chunk("idx1") { b =>
+        var off = 4                   // offsets relative to 'movi' fourcc
+        frameChunks.foreach { fc =>
+          fourcc(b, chunkId); le32(b, 0x10) // AVIIF_KEYFRAME
+          le32(b, off); le32(b, fc.length - 8)
+          off += fc.length
+        }
+      }
+      val hdrl = list("hdrl")(avih, list("strl")(strh, strf))
+      val out = new ByteArrayOutputStream()
+      fourcc(out, "RIFF")
+      le32(out, 4 + hdrl.length + movi.length + idx1.length)
+      fourcc(out, "AVI ")
+      out.write(hdrl, 0, hdrl.length)
+      out.write(movi, 0, movi.length)
+      out.write(idx1, 0, idx1.length)
+      out.toByteArray
+    }
+
+    /** The avih frame rate and strf BITMAPINFOHEADER fields a decoder
+      * reads; -1 until the walk meets them. */
+    final class Header {
+      var fps = -1; var width = -1; var height = -1
+      var bits = -1; var compression = -1
+    }
+
+    /** Walk a RIFF 'AVI ' payload: LIST chunks recurse into their body,
+      * avih and strf fill the [[Header]], each `frameId` chunk goes to
+      * `frame(header, bodyStart, size)`, and other chunks are skipped
+      * (word-aligned). A malformed size ends the walk. None when the
+      * payload is not RIFF 'AVI ' or the walk throws — a probe, never a
+      * crash. */
+    def readAvi(payload: Array[Byte], frameId: String)(
+        frame: (Header, Int, Int) => Unit): Option[Header] = {
+      if (payload == null || payload.length < 24) return None
+      val bb = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
+      def cc(pos: Int): String = new String(payload, pos, 4, "US-ASCII")
+      if (cc(0) != "RIFF" || cc(8) != "AVI ") return None
+      val h = new Header
+      def walk(from: Int, to: Int): Unit = {
+        var pos = from
+        while (pos + 8 <= to) {
+          val id = cc(pos)
+          val size = bb.getInt(pos + 4)
+          if (size < 0 || pos + 8 + size > to) return // malformed: stop
+          if (id == "LIST") walk(pos + 12, pos + 8 + size)
+          else if (id == "avih" && size >= 32) {
+            val usPerFrame = bb.getInt(pos + 8)
+            if (usPerFrame > 0) h.fps = 1000000 / usPerFrame
+          } else if (id == "strf" && size >= 40) {
+            h.width = bb.getInt(pos + 12)
+            h.height = bb.getInt(pos + 16)
+            h.bits = bb.getShort(pos + 22).toInt
+            h.compression = bb.getInt(pos + 24)
+          } else if (id == frameId) frame(h, pos + 8, size)
+          pos += 8 + size + (size & 1)
+        }
+      }
+      try walk(12, math.min(payload.length, 8 + bb.getInt(4)))
+      catch { case scala.util.control.NonFatal(_) => return None }
+      Some(h)
+    }
+  }
+
   /** Pure-JVM AVI (RIFF) container codec for uncompressed 8-bit DIB
     * video — full FRAME decode, not just a metadata probe: the third
     * real video path next to animated GIF (decode) and mp4/webm
@@ -421,16 +642,6 @@ object Multimodal {
     final case class Avi(width: Int, height: Int, fps: Int,
                          frames: Seq[Array[Byte]])
 
-    private def le32(out: ByteArrayOutputStream, v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >> 24) & 0xFF)
-    }
-    private def le16(out: ByteArrayOutputStream, v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-    }
-    private def fourcc(out: ByteArrayOutputStream, s: String): Unit =
-      out.write(s.getBytes("US-ASCII"), 0, 4)
-
     private def stride(width: Int): Int = (width + 3) / 4 * 4
 
     /** Encode row-major gray frames as an uncompressed 8-bit DIB AVI. */
@@ -441,67 +652,12 @@ object Multimodal {
       frames.foreach(f => require(f.length == width * height,
         "frame size != w*h"))
       val pad = stride(width)
-      val frameBytes = pad * height
-
-      def chunk(id: String)(body: ByteArrayOutputStream => Unit): Array[Byte] = {
-        val b = new ByteArrayOutputStream()
-        body(b)
-        val payload = b.toByteArray
-        val out = new ByteArrayOutputStream()
-        fourcc(out, id); le32(out, payload.length)
-        out.write(payload, 0, payload.length)
-        if (payload.length % 2 == 1) out.write(0) // RIFF word alignment
-        out.toByteArray
-      }
-      def list(kind: String)(parts: Array[Byte]*): Array[Byte] = {
-        val out = new ByteArrayOutputStream()
-        fourcc(out, "LIST")
-        le32(out, 4 + parts.map(_.length).sum)
-        fourcc(out, kind)
-        parts.foreach(p => out.write(p, 0, p.length))
-        out.toByteArray
-      }
-
-      val avih = chunk("avih") { b =>
-        le32(b, 1000000 / fps)        // dwMicroSecPerFrame
-        le32(b, frameBytes * fps)     // dwMaxBytesPerSec
-        le32(b, 0)                    // dwPaddingGranularity
-        le32(b, 0x10)                 // dwFlags: AVIF_HASINDEX
-        le32(b, frames.length)        // dwTotalFrames
-        le32(b, 0)                    // dwInitialFrames
-        le32(b, 1)                    // dwStreams
-        le32(b, frameBytes)           // dwSuggestedBufferSize
-        le32(b, width); le32(b, height)
-        (0 until 4).foreach(_ => le32(b, 0)) // dwReserved
-      }
-      val strh = chunk("strh") { b =>
-        fourcc(b, "vids"); fourcc(b, "DIB ")
-        le32(b, 0)                    // dwFlags
-        le16(b, 0); le16(b, 0)        // wPriority, wLanguage
-        le32(b, 0)                    // dwInitialFrames
-        le32(b, 1); le32(b, fps)      // dwScale / dwRate = frame rate
-        le32(b, 0)                    // dwStart
-        le32(b, frames.length)        // dwLength
-        le32(b, frameBytes)           // dwSuggestedBufferSize
-        le32(b, -1)                   // dwQuality (default)
-        le32(b, 0)                    // dwSampleSize
-        le16(b, 0); le16(b, 0); le16(b, width); le16(b, height) // rcFrame
-      }
-      val strf = chunk("strf") { b =>
-        le32(b, 40)                   // biSize
-        le32(b, width); le32(b, height)
-        le16(b, 1); le16(b, 8)        // biPlanes, biBitCount
-        le32(b, 0)                    // biCompression = BI_RGB
-        le32(b, frameBytes)           // biSizeImage
-        le32(b, 0); le32(b, 0)        // ppm
-        le32(b, 256); le32(b, 0)      // biClrUsed, biClrImportant
-        var i = 0
-        while (i < 256) {             // gray RGBQUAD palette (b, g, r, 0)
-          b.write(i); b.write(i); b.write(i); b.write(0); i += 1
-        }
-      }
-      val frameChunks = frames.map { f =>
-        chunk("00db") { b =>
+      // gray RGBQUAD palette (b, g, r, 0)
+      val palette = Array.tabulate[Byte](1024)(i =>
+        if (i % 4 == 3) 0 else (i / 4).toByte)
+      Riff.writeAvi("DIB ", bitCount = 8, compression = 0, palette, "00db",
+        width, height, fps, frames.map { f =>
+          val b = new ByteArrayOutputStream(pad * height)
           var y = height - 1          // DIB rows are bottom-up
           while (y >= 0) {
             b.write(f, y * width, width)
@@ -509,78 +665,30 @@ object Multimodal {
             while (p < pad) { b.write(0); p += 1 }
             y -= 1
           }
-        }
-      }
-      val movi = list("movi")(frameChunks: _*)
-      val idx1 = chunk("idx1") { b =>
-        var off = 4                   // offsets relative to 'movi' fourcc
-        frameChunks.foreach { fc =>
-          fourcc(b, "00db"); le32(b, 0x10) // AVIIF_KEYFRAME
-          le32(b, off); le32(b, fc.length - 8)
-          off += fc.length
-        }
-      }
-      val hdrl = list("hdrl")(avih, list("strl")(strh, strf))
-      val out = new ByteArrayOutputStream()
-      fourcc(out, "RIFF")
-      le32(out, 4 + hdrl.length + movi.length + idx1.length)
-      fourcc(out, "AVI ")
-      out.write(hdrl, 0, hdrl.length)
-      out.write(movi, 0, movi.length)
-      out.write(idx1, 0, idx1.length)
-      out.toByteArray
+          b.toByteArray
+        })
     }
 
     /** Decode an uncompressed 8-bit DIB AVI to row-major gray frames.
       * None when the payload is not such an AVI (other containers, other
       * bit depths, compressed streams — a probe, never a crash). */
     def decodeAviGray(payload: Array[Byte]): Option[Avi] = {
-      if (payload == null || payload.length < 24) return None
-      val bb = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-      def cc(pos: Int): String =
-        new String(payload, pos, 4, "US-ASCII")
-      if (cc(0) != "RIFF" || cc(8) != "AVI ") return None
-      var width = -1; var height = -1; var fps = -1; var bits = -1
-      var compression = -1
       val frames = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-      // flat chunk walk: LIST headers recurse into their body, plain
-      // chunks skip their payload (word-aligned)
-      def walk(from: Int, to: Int): Unit = {
-        var pos = from
-        while (pos + 8 <= to) {
-          val id = cc(pos)
-          val size = bb.getInt(pos + 4)
-          if (size < 0 || pos + 8 + size > to) return // malformed: stop
-          if (id == "LIST") walk(pos + 12, pos + 8 + size)
-          else if (id == "avih" && size >= 32) {
-            val usPerFrame = bb.getInt(pos + 8)
-            if (usPerFrame > 0) fps = 1000000 / usPerFrame
-          } else if (id == "strf" && size >= 40) {
-            width = bb.getInt(pos + 12)
-            height = bb.getInt(pos + 16)
-            bits = bb.getShort(pos + 22).toInt
-            compression = bb.getInt(pos + 24)
-          } else if (id == "00db" && width > 0 && height > 0) {
-            val pad = stride(width)
-            if (size >= pad * height) {
-              val f = new Array[Byte](width * height)
-              var y = 0
-              while (y < height) {
-                System.arraycopy(payload,
-                  pos + 8 + (height - 1 - y) * pad, f, y * width, width)
-                y += 1
-              }
-              frames += f
-            }
+      Riff.readAvi(payload, "00db") { (h, at, size) =>
+        val (w, pad) = (h.width, stride(h.width))
+        if (w > 0 && h.height > 0 && size >= pad * h.height) {
+          val f = new Array[Byte](w * h.height)
+          var y = 0
+          while (y < h.height) {
+            System.arraycopy(payload, at + (h.height - 1 - y) * pad,
+              f, y * w, w)
+            y += 1
           }
-          pos += 8 + size + (size & 1)
+          frames += f
         }
-      }
-      try walk(12, math.min(payload.length, 8 + bb.getInt(4)))
-      catch { case scala.util.control.NonFatal(_) => return None }
-      if (width <= 0 || height <= 0 || bits != 8 || compression != 0 ||
-          fps <= 0 || frames.isEmpty) None
-      else Some(Avi(width, height, fps, frames.toSeq))
+      }.filter(h => h.width > 0 && h.height > 0 && h.bits == 8 &&
+          h.compression == 0 && h.fps > 0 && frames.nonEmpty)
+        .map(h => Avi(h.width, h.height, h.fps, frames.toSeq))
     }
   }
 
@@ -608,16 +716,6 @@ object Multimodal {
 
     /** 'MJPG' as the little-endian biCompression dword. */
     val MJPG: Int = 0x47504A4D
-
-    private def le32(out: ByteArrayOutputStream, v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >> 24) & 0xFF)
-    }
-    private def le16(out: ByteArrayOutputStream, v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-    }
-    private def fourcc(out: ByteArrayOutputStream, s: String): Unit =
-      out.write(s.getBytes("US-ASCII"), 0, 4)
 
     /** One gray frame → baseline JPEG bytes at quality 1.0. */
     def jpegEncodeGray(gray: Array[Byte], w: Int, h: Int): Array[Byte] = {
@@ -678,109 +776,28 @@ object Multimodal {
                        fps: Int = 10): Array[Byte] = {
       require(frames.nonEmpty, "need at least one frame")
       require(fps > 0, s"fps must be positive: $fps")
-      val jpegs = frames.map(jpegEncodeGray(_, width, height))
-      val bufSize = jpegs.map(_.length).max
-
-      def chunk(id: String)(body: ByteArrayOutputStream => Unit): Array[Byte] = {
-        val b = new ByteArrayOutputStream()
-        body(b)
-        val payload = b.toByteArray
-        val out = new ByteArrayOutputStream()
-        fourcc(out, id); le32(out, payload.length)
-        out.write(payload, 0, payload.length)
-        if (payload.length % 2 == 1) out.write(0)
-        out.toByteArray
-      }
-      def list(kind: String)(parts: Array[Byte]*): Array[Byte] = {
-        val out = new ByteArrayOutputStream()
-        fourcc(out, "LIST")
-        le32(out, 4 + parts.map(_.length).sum)
-        fourcc(out, kind)
-        parts.foreach(p => out.write(p, 0, p.length))
-        out.toByteArray
-      }
-
-      val avih = chunk("avih") { b =>
-        le32(b, 1000000 / fps); le32(b, bufSize * fps)
-        le32(b, 0); le32(b, 0x10)
-        le32(b, frames.length); le32(b, 0); le32(b, 1)
-        le32(b, bufSize); le32(b, width); le32(b, height)
-        (0 until 4).foreach(_ => le32(b, 0))
-      }
-      val strh = chunk("strh") { b =>
-        fourcc(b, "vids"); fourcc(b, "MJPG")
-        le32(b, 0); le16(b, 0); le16(b, 0); le32(b, 0)
-        le32(b, 1); le32(b, fps); le32(b, 0)
-        le32(b, frames.length); le32(b, bufSize); le32(b, -1); le32(b, 0)
-        le16(b, 0); le16(b, 0); le16(b, width); le16(b, height)
-      }
-      val strf = chunk("strf") { b =>
-        le32(b, 40); le32(b, width); le32(b, height)
-        le16(b, 1); le16(b, 24)       // MJPEG decodes to 24-bit
-        le32(b, MJPG)                 // biCompression = 'MJPG'
-        le32(b, bufSize)
-        le32(b, 0); le32(b, 0); le32(b, 0); le32(b, 0)
-      }
-      val frameChunks = jpegs.map(j => chunk("00dc")(_.write(j, 0, j.length)))
-      val movi = list("movi")(frameChunks: _*)
-      val idx1 = chunk("idx1") { b =>
-        var off = 4
-        frameChunks.foreach { fc =>
-          fourcc(b, "00dc"); le32(b, 0x10)
-          le32(b, off); le32(b, fc.length - 8)
-          off += fc.length
-        }
-      }
-      val hdrl = list("hdrl")(avih, list("strl")(strh, strf))
-      val out = new ByteArrayOutputStream()
-      fourcc(out, "RIFF")
-      le32(out, 4 + hdrl.length + movi.length + idx1.length)
-      fourcc(out, "AVI ")
-      out.write(hdrl, 0, hdrl.length)
-      out.write(movi, 0, movi.length)
-      out.write(idx1, 0, idx1.length)
-      out.toByteArray
+      // MJPEG decodes to 24-bit
+      Riff.writeAvi("MJPG", bitCount = 24, compression = MJPG,
+        palette = Array.emptyByteArray, "00dc", width, height, fps,
+        frames.map(jpegEncodeGray(_, width, height)))
     }
 
     /** Decode an MJPEG AVI to row-major gray frames; None for other
       * containers/codecs (the [[AviCodec.decodeAviGray]] probe
       * contract — never a crash). */
     def decodeAviMjpeg(payload: Array[Byte]): Option[AviCodec.Avi] = {
-      if (payload == null || payload.length < 24) return None
-      val bb = java.nio.ByteBuffer.wrap(payload)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      def cc(pos: Int): String = new String(payload, pos, 4, "US-ASCII")
-      if (cc(0) != "RIFF" || cc(8) != "AVI ") return None
-      var width = -1; var height = -1; var fps = -1; var compression = -1
+      var width = -1; var height = -1
       val frames = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-      def walk(from: Int, to: Int): Unit = {
-        var pos = from
-        while (pos + 8 <= to) {
-          val id = cc(pos)
-          val size = bb.getInt(pos + 4)
-          if (size < 0 || pos + 8 + size > to) return
-          if (id == "LIST") walk(pos + 12, pos + 8 + size)
-          else if (id == "avih" && size >= 32) {
-            val usPerFrame = bb.getInt(pos + 8)
-            if (usPerFrame > 0) fps = 1000000 / usPerFrame
-          } else if (id == "strf" && size >= 40) {
-            compression = bb.getInt(pos + 24)
-          } else if (id == "00dc" && size > 0) {
-            jpegDecodeGray(java.util.Arrays.copyOfRange(
-                payload, pos + 8, pos + 8 + size)).foreach {
-              case (f, w, h) =>
-                if (width < 0) { width = w; height = h }
-                if (w == width && h == height) frames += f
+      Riff.readAvi(payload, "00dc") { (_, at, size) =>
+        if (size > 0)
+          jpegDecodeGray(java.util.Arrays.copyOfRange(payload, at, at + size))
+            .foreach { case (f, w, h) =>
+              if (width < 0) { width = w; height = h }
+              if (w == width && h == height) frames += f
             }
-          }
-          pos += 8 + size + (size & 1)
-        }
-      }
-      try walk(12, math.min(payload.length, 8 + bb.getInt(4)))
-      catch { case scala.util.control.NonFatal(_) => return None }
-      if (compression != MJPG || width <= 0 || fps <= 0 || frames.isEmpty)
-        None
-      else Some(AviCodec.Avi(width, height, fps, frames.toSeq))
+      }.filter(h => h.compression == MJPG && width > 0 && h.fps > 0 &&
+          frames.nonEmpty)
+        .map(h => AviCodec.Avi(width, height, h.fps, frames.toSeq))
     }
   }
 
@@ -797,42 +814,17 @@ object Multimodal {
       }
       MjpegCodec.encodeAviMjpeg(frames, 8, 8, fps = 10)
     })
-    spreadNarrowInput(docs.select(col("doc_id"))).select(
-      col("doc_id").as("media_id"),
-      lit("video").as("kind"),
-      aviUdf(col("doc_id")).as("payload"),
-      struct(
-        lit(8).as("width"), lit(8).as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(nFrames).as("n_frames"),
-        lit("video/x-msvideo").as("mime")).as("meta"))
+    mediaTable(spreadNarrowInput(docs.select(col("doc_id"))),
+      aviUdf(col("doc_id")), "video", "video/x-msvideo",
+      width = Some(8), height = Some(8), nFrames = Some(nFrames))
   }
 
   /** [[sampleAviFrames]] with the MJPEG decoder: every `everyNth`
     * decoded frame → (media_id, frame_idx, mean_lum); mapPartitions,
     * no shuffle, non-MJPEG payloads drop. */
-  def sampleMjpegFrames(media: DataFrame, everyNth: Int): DataFrame = {
-    require(everyNth > 0, s"everyNth must be positive, got $everyNth")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("mean_lum", DoubleType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        MjpegCodec.decodeAviMjpeg(payload).toSeq.flatMap { avi =>
-          avi.frames.zipWithIndex
-            .collect { case (f, k) if k % everyNth == 0 =>
-              var sum = 0L
-              var i = 0
-              while (i < f.length) { sum += f(i) & 0xFF; i += 1 }
-              Row(r.getLong(0), k, sum.toDouble / f.length)
-            }
-        }
-      }
-    }(encoder)
-  }
+  def sampleMjpegFrames(media: DataFrame, everyNth: Int): DataFrame =
+    sampleGrayFrames(media, everyNth)(p =>
+      MjpegCodec.decodeAviMjpeg(p).toSeq.flatMap(_.frames))(Some(_))
 
   /** Motion-JPEG-in-MP4 table from documents — the ISO-BMFF twin of
     * [[mjpegFromDocs]]: each doc gets a REAL MP4 whose 'jpeg' sample
@@ -851,15 +843,9 @@ object Multimodal {
       }
       Mp4Probe.encodeMp4Jpeg(jpegs, 8, 8)
     })
-    spreadNarrowInput(docs.select(col("doc_id"))).select(
-      col("doc_id").as("media_id"),
-      lit("video").as("kind"),
-      mp4Udf(col("doc_id")).as("payload"),
-      struct(
-        lit(8).as("width"), lit(8).as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(nFrames).as("n_frames"),
-        lit("video/mp4").as("mime")).as("meta"))
+    mediaTable(spreadNarrowInput(docs.select(col("doc_id"))),
+      mp4Udf(col("doc_id")), "video", "video/mp4",
+      width = Some(8), height = Some(8), nFrames = Some(nFrames))
   }
 
   /** [[sampleMjpegFrames]] for the MP4 container: demux the 'jpeg'
@@ -867,29 +853,9 @@ object Multimodal {
     * walk), decode every `everyNth` sample, emit (media_id, frame_idx,
     * mean_lum). mapPartitions, no shuffle; non-MP4 / non-jpeg-track
     * payloads drop. */
-  def sampleMp4JpegFrames(media: DataFrame, everyNth: Int): DataFrame = {
-    require(everyNth > 0, s"everyNth must be positive, got $everyNth")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("mean_lum", DoubleType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        Mp4Probe.jpegSamples(payload).zipWithIndex
-          .collect { case (j, k) if k % everyNth == 0 => (j, k) }
-          .flatMap { case (j, k) =>
-            MjpegCodec.jpegDecodeGray(j).map { case (f, _, _) =>
-              var sum = 0L
-              var i = 0
-              while (i < f.length) { sum += f(i) & 0xFF; i += 1 }
-              Row(r.getLong(0), k, sum.toDouble / f.length)
-            }
-          }
-      }
-    }(encoder)
-  }
+  def sampleMp4JpegFrames(media: DataFrame, everyNth: Int): DataFrame =
+    sampleGrayFrames(media, everyNth)(Mp4Probe.jpegSamples)(
+      MjpegCodec.jpegDecodeGray(_).map(_._1))
 
   /** IMAGE-TEXT WebDataset shards — the LAION-style sample triple a
     * contrastive-training job consumes: per document, `{key}.jpg` (a
@@ -974,13 +940,8 @@ object Multimodal {
           img <- parts.get(imgExt)
           txt <- parts.get("txt")
           (f, w, h) <- MjpegCodec.jpegDecodeGray(img)
-        } yield {
-          var sum = 0L
-          var i = 0
-          while (i < f.length) { sum += f(i) & 0xFF; i += 1 }
-          Row(id, w, h, sum.toDouble / f.length,
-            new String(txt, java.nio.charset.StandardCharsets.UTF_8).length)
-        }
+        } yield Row(id, w, h, meanLum(f),
+          new String(txt, java.nio.charset.StandardCharsets.UTF_8).length)
       }
     }(enc)
   }
@@ -998,46 +959,18 @@ object Multimodal {
       }
       AviCodec.encodeAviGray(frames, 8, 8, fps = 10)
     })
-    // NOT spread: consumers are header/metadata walks (~0.1 s serial
-    // at fixture scale) — the spread exchange costs more than the CPU
-    // it would parallelize (r18 subset A/B: probes regressed ~2x).
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("video").as("kind"),
-      aviUdf(col("doc_id")).as("payload"),
-      struct(
-        lit(8).as("width"), lit(8).as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(nFrames).as("n_frames"),
-        lit("video/x-msvideo").as("mime")).as("meta"))
+    // NOT spread: a probe input (see mediaTable)
+    mediaTable(docs, aviUdf(col("doc_id")), "video", "video/x-msvideo",
+      width = Some(8), height = Some(8), nFrames = Some(nFrames))
   }
 
   /** Temporal frame sampling over REAL decoded AVI frames: every
     * `everyNth` frame → (media_id, frame_idx, mean_lum). The exact
     * shape of [[sampleVideoFrames]] with the RIFF walk as the decoder;
     * mapPartitions, no shuffle, non-AVI payloads drop. */
-  def sampleAviFrames(media: DataFrame, everyNth: Int): DataFrame = {
-    require(everyNth > 0, s"everyNth must be positive, got $everyNth")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("mean_lum", DoubleType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        AviCodec.decodeAviGray(payload).toSeq.flatMap { avi =>
-          avi.frames.zipWithIndex
-            .collect { case (f, k) if k % everyNth == 0 =>
-              var sum = 0L
-              var i = 0
-              while (i < f.length) { sum += f(i) & 0xFF; i += 1 }
-              Row(r.getLong(0), k, sum.toDouble / f.length)
-            }
-        }
-      }
-    }(encoder)
-  }
+  def sampleAviFrames(media: DataFrame, everyNth: Int): DataFrame =
+    sampleGrayFrames(media, everyNth)(p =>
+      AviCodec.decodeAviGray(p).toSeq.flatMap(_.frames))(Some(_))
 
   /** STUB codec for media the JVM cannot decode (non-GIF video
     * containers; arbitrary bytes). Deterministic and clearly declared —
@@ -1078,15 +1011,9 @@ object Multimodal {
       val px = Array.tabulate(64)(i => if (i < bs.length) bs(i) else 0: Byte)
       ImageCodec.encodeGrayPng(px, 8, 8)
     })
-    spreadNarrowInput(docs.select(col("doc_id"), col("text"))).select(
-      col("doc_id").as("media_id"),
-      lit("image").as("kind"),
-      pngUdf(col("text")).as("payload"),
-      struct(
-        lit(8).as("width"), lit(8).as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("image/png").as("mime")).as("meta"))
+    mediaTable(spreadNarrowInput(docs.select(col("doc_id"), col("text"))),
+      pngUdf(col("text")), "image", "image/png",
+      width = Some(8), height = Some(8))
   }
 
   /** Build an audio table from documents: each doc gets a REAL WAV payload
@@ -1102,19 +1029,9 @@ object Multimodal {
         ((docId * 31 + i.toLong * 7) % 2048).toInt - 1024)
       AudioCodec.encodeWavPcm16(samples, 8000)
     })
-    // NOT spread: AudioSystem encode/decode funnels through the JDK's
-    // synchronized service-provider registry — wide stages convoy on
-    // that lock (r18: 8-wide x46 tasks sat ~2 s blocked per task at
-    // 0.3 s CPU) and measure SLOWER than the serial scan chain.
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("audio").as("kind"),
-      wavUdf(col("doc_id")).as("payload"),
-      struct(
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(8000).as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("audio/wav").as("mime")).as("meta"))
+    // NOT spread: a WAV input (see mediaTable)
+    mediaTable(docs, wavUdf(col("doc_id")), "audio", "audio/wav",
+      sampleRate = Some(8000))
   }
 
   /** Build a telephone-band audio table from documents: each doc gets a
@@ -1130,46 +1047,25 @@ object Multimodal {
         ((docId * 31 + i.toLong * 17) % 256).toByte)
       AudioCodec.encodeWavG711(codes, 8000, aLaw = docId % 2 == 1)
     })
-    // NOT spread: AudioSystem encode/decode funnels through the JDK's
-    // synchronized service-provider registry — wide stages convoy on
-    // that lock (r18: 8-wide x46 tasks sat ~2 s blocked per task at
-    // 0.3 s CPU) and measure SLOWER than the serial scan chain.
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("audio").as("kind"),
-      wavUdf(col("doc_id")).as("payload"),
-      struct(
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(8000).as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("audio/wav").as("mime")).as("meta"))
+    // NOT spread: a WAV input (see mediaTable)
+    mediaTable(docs, wavUdf(col("doc_id")), "audio", "audio/wav",
+      sampleRate = Some(8000))
   }
 
   /** Audio feature extraction over payload batches — decodes REAL WAV via
     * the JDK sampled API inside mapPartitions (per-task codec init, no
     * shuffle). Rows whose payload is not decodable WAV are dropped —
     * their features would be meaningless. */
-  def extractAudioFeatures(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("sample_rate", IntegerType, nullable = false),
-      StructField("n_samples", LongType, nullable = false),
-      StructField("duration_sec", DoubleType, nullable = false),
-      StructField("rms", DoubleType, nullable = false),
-      StructField("peak", LongType, nullable = false),
-      StructField("zero_crossings", LongType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        AudioCodec.decodeWav(payload).map { pcm =>
-          val f = AudioCodec.features(pcm)
-          Row(r.getLong(0), f.sampleRate, f.nSamples, f.durationSec,
-            f.rms, f.peak, f.zeroCrossings)
-        }
+  def extractAudioFeatures(media: DataFrame): DataFrame =
+    payloadPass(media, "sample_rate" -> IntegerType, "n_samples" -> LongType,
+        "duration_sec" -> DoubleType, "rms" -> DoubleType,
+        "peak" -> LongType, "zero_crossings" -> LongType) { (id, payload) =>
+      AudioCodec.decodeWav(payload).map { pcm =>
+        val f = AudioCodec.features(pcm)
+        Row(id, f.sampleRate, f.nSamples, f.durationSec, f.rms, f.peak,
+          f.zeroCrossings)
       }
-    }(encoder)
-  }
+    }
 
   /** Build a video table from documents: each doc gets a REAL 4-frame
     * animated GIF whose 8×8 gray frames follow a closed integer formula —
@@ -1184,64 +1080,24 @@ object Multimodal {
       }
       VideoCodec.encodeAnimatedGifGray(frames, 8, 8)
     })
-    spreadNarrowInput(docs.select(col("doc_id"))).select(
-      col("doc_id").as("media_id"),
-      lit("video").as("kind"),
-      gifUdf(col("doc_id")).as("payload"),
-      struct(
-        lit(8).as("width"), lit(8).as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(nFrames).as("n_frames"),
-        lit("image/gif").as("mime")).as("meta"))
+    mediaTable(spreadNarrowInput(docs.select(col("doc_id"))),
+      gifUdf(col("doc_id")), "video", "image/gif",
+      width = Some(8), height = Some(8), nFrames = Some(nFrames))
   }
 
   /** Temporal frame sampling + per-frame features over REAL decoded
     * frames: every `everyNth` frame → (media_id, frame_idx, mean_lum).
     * mapPartitions (per-task codec init); undecodable payloads drop. */
-  def sampleVideoFrames(media: DataFrame, everyNth: Int): DataFrame = {
-    require(everyNth > 0, s"everyNth must be positive, got $everyNth")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("mean_lum", DoubleType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        VideoCodec.decodeFrames(payload).zipWithIndex
-          .collect { case (img, k) if k % everyNth == 0 =>
-            var sum = 0L
-            var y = 0
-            while (y < img.getHeight) {
-              var x = 0
-              while (x < img.getWidth) {
-                sum += ImageCodec.lum8(img, x, y); x += 1
-              }
-              y += 1
-            }
-            Row(r.getLong(0), k,
-              sum.toDouble / (img.getWidth * img.getHeight))
-          }
-      }
-    }(encoder)
-  }
+  def sampleVideoFrames(media: DataFrame, everyNth: Int): DataFrame =
+    sampleGrayFrames(media, everyNth)(VideoCodec.decodeFrames)(img =>
+      Some(ImageCodec.gray8(img)))
 
   /** Feature extraction over payload batches — mapPartitions so per-task
     * codec init happens once. Output: (media_id, features array<float>). */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("features", ArrayType(FloatType), nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      // per-task codec init would go here
-      it.map { r =>
-        val id = r.getLong(0)
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        Row(id, ImageCodec.decodeFeatures(payload).toSeq)
-      }
-    }(encoder)
-  }
+  def extractFeatures(media: DataFrame): DataFrame =
+    payloadPass(media, "features" -> ArrayType(FloatType)) { (id, payload) =>
+      Some(Row(id, ImageCodec.decodeFeatures(payload).toSeq))
+    }
 
   /** Perceptual image hashes over REAL decoded pixels — the image-dedup
     * primitive (a training corpus carries the same photo re-encoded,
@@ -1262,46 +1118,37 @@ object Multimodal {
     * payloads drop. At 100 TB this is a narrow pass over the payload
     * column chunk — the expensive part is the decode, and it runs exactly
     * once per image with both hashes extracted from one pixel pass. */
-  def imageHashes(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("ahash_hi", LongType, nullable = false),
-      StructField("ahash_lo", LongType, nullable = false),
-      StructField("dhash", LongType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        ImageCodec.decode(payload).map { img =>
-          val pix = Array.tabulate(64) { i =>
-            ImageCodec.lum8(img, (i % 8) * img.getWidth / 8,
-                                 (i / 8) * img.getHeight / 8)
-          }
-          val sum = pix.sum
-          var hi = 0L
-          var lo = 0L
-          var i = 0
-          while (i < 64) {
-            if (pix(i) * 64 > sum) {
-              if (i >= 32) hi |= 1L << (i - 32) else lo |= 1L << i
-            }
-            i += 1
-          }
-          var dh = 0L
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 7) {
-              if (pix(y * 8 + x + 1) > pix(y * 8 + x)) dh |= 1L << (y * 7 + x)
-              x += 1
-            }
-            y += 1
-          }
-          Row(r.getLong(0), hi, lo, dh)
+  def imageHashes(media: DataFrame): DataFrame =
+    payloadPass(media, "ahash_hi" -> LongType, "ahash_lo" -> LongType,
+        "dhash" -> LongType) { (id, payload) =>
+      ImageCodec.decode(payload).map { img =>
+        val pix = Array.tabulate(64) { i =>
+          ImageCodec.lum8(img, (i % 8) * img.getWidth / 8,
+                               (i / 8) * img.getHeight / 8)
         }
+        val sum = pix.sum
+        var hi = 0L
+        var lo = 0L
+        var i = 0
+        while (i < 64) {
+          if (pix(i) * 64 > sum) {
+            if (i >= 32) hi |= 1L << (i - 32) else lo |= 1L << i
+          }
+          i += 1
+        }
+        var dh = 0L
+        var y = 0
+        while (y < 8) {
+          var x = 0
+          while (x < 7) {
+            if (pix(y * 8 + x + 1) > pix(y * 8 + x)) dh |= 1L << (y * 7 + x)
+            x += 1
+          }
+          y += 1
+        }
+        Row(id, hi, lo, dh)
       }
-    }(encoder)
-  }
+    }
 
   /** Near-duplicate image pairs by Hamming distance over the aHash.
     * Reuses the proven simhash machinery ([[graft.ext.Dedup
@@ -1338,19 +1185,9 @@ object Multimodal {
         if (i < bs.length) bs(i) & 0xFF else 0)
       AudioCodec.encodeWavPcm16(samples, 8000)
     })
-    // NOT spread: AudioSystem encode/decode funnels through the JDK's
-    // synchronized service-provider registry — wide stages convoy on
-    // that lock (r18: 8-wide x46 tasks sat ~2 s blocked per task at
-    // 0.3 s CPU) and measure SLOWER than the serial scan chain.
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("audio").as("kind"),
-      wavUdf(col("text")).as("payload"),
-      struct(
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(8000).as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("audio/wav").as("mime")).as("meta"))
+    // NOT spread: a WAV input (see mediaTable)
+    mediaTable(docs, wavUdf(col("text")), "audio", "audio/wav",
+      sampleRate = Some(8000))
   }
 
   /** Acoustic fingerprints over REAL decoded PCM — the audio-dedup
@@ -1365,15 +1202,9 @@ object Multimodal {
     *
     * mapPartitions, no shuffle, non-WAV payloads drop; clips shorter
     * than 65 samples yield well-defined (mostly-empty-frame) bits. */
-  def audioFingerprints(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("afp_hi", LongType, nullable = false),
-      StructField("afp_lo", LongType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
+  def audioFingerprints(media: DataFrame): DataFrame =
+    payloadPass(media, "afp_hi" -> LongType, "afp_lo" -> LongType) {
+      (id, payload) =>
         AudioCodec.decodeWav(payload).map { pcm =>
           val s = pcm.samples
           val n = s.length
@@ -1393,11 +1224,9 @@ object Multimodal {
             }
             k += 1
           }
-          Row(r.getLong(0), hi, lo)
+          Row(id, hi, lo)
         }
-      }
-    }(encoder)
-  }
+    }
 
   /** VOICED-segment report over REAL decoded PCM — the
     * silence-structure profile a speech-data pipeline reads before
@@ -1413,38 +1242,29 @@ object Multimodal {
   def voicedSegments(media: DataFrame, frameLen: Int = 20,
                      threshold: Long = 20L * 64 * 64): DataFrame = {
     require(frameLen >= 1, s"need frameLen >= 1: $frameLen")
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("n_voiced", LongType, nullable = false),
-      StructField("n_segments", LongType, nullable = false),
-      StructField("longest_run", LongType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        AudioCodec.decodeWav(payload).map { pcm =>
-          val sm = pcm.samples
-          val nf = sm.length / frameLen
-          var voiced = 0L; var segs = 0L; var longest = 0L; var run = 0L
-          var f = 0
-          while (f < nf) {
-            var e = 0L
-            var i = f * frameLen
-            val end = i + frameLen
-            while (i < end) { e += sm(i).toLong * sm(i); i += 1 }
-            if (e > threshold) {
-              voiced += 1
-              if (run == 0L) segs += 1
-              run += 1
-              if (run > longest) longest = run
-            } else run = 0L
-            f += 1
-          }
-          Row(r.getLong(0), nf.toLong, voiced, segs, longest)
+    payloadPass(media, "n_frames" -> LongType, "n_voiced" -> LongType,
+        "n_segments" -> LongType, "longest_run" -> LongType) { (id, payload) =>
+      AudioCodec.decodeWav(payload).map { pcm =>
+        val sm = pcm.samples
+        val nf = sm.length / frameLen
+        var voiced = 0L; var segs = 0L; var longest = 0L; var run = 0L
+        var f = 0
+        while (f < nf) {
+          var e = 0L
+          var i = f * frameLen
+          val end = i + frameLen
+          while (i < end) { e += sm(i).toLong * sm(i); i += 1 }
+          if (e > threshold) {
+            voiced += 1
+            if (run == 0L) segs += 1
+            run += 1
+            if (run > longest) longest = run
+          } else run = 0L
+          f += 1
         }
+        Row(id, nf.toLong, voiced, segs, longest)
       }
-    }(encoder)
+    }
   }
 
   /** Near-duplicate audio pairs by Hamming distance over the acoustic
@@ -1547,15 +1367,8 @@ object Multimodal {
         val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
         ImageCodec.decode(payload) match {
           case Some(img) =>
-            val (w, h) = (img.getWidth, img.getHeight)
-            var sum = 0L
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) { sum += ImageCodec.lum8(img, x, y); x += 1 }
-              y += 1
-            }
-            Row(kind, w, h, sum.toDouble / (w * h))
+            Row(kind, img.getWidth, img.getHeight,
+              meanLum(ImageCodec.gray8(img)))
           case None => Row(kind, null, null, null)
         }
       }
@@ -2078,41 +1891,20 @@ object Multimodal {
         height = 144 + (docId % 4).toInt * 96,
         videoCodec = if (docId % 2 == 0) "V_VP9" else "V_VP8",
         audioCodec = "A_OPUS"))
-    // NOT spread: consumers are header/metadata walks (~0.1 s serial
-    // at fixture scale) — the spread exchange costs more than the CPU
-    // it would parallelize (r18 subset A/B: probes regressed ~2x).
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("video").as("kind"),
-      webmUdf(col("doc_id")).as("payload"),
-      struct(
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("video/webm").as("mime")).as("meta"))
+    // NOT spread: a probe input (see mediaTable)
+    mediaTable(docs, webmUdf(col("doc_id")), "video", "video/webm")
   }
 
   /** WebM metadata extraction over payload batches — EBML walk only, no
     * shuffle; non-EBML rows are dropped. */
-  def probeWebm(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("duration_sec", DoubleType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("video_codec", StringType, nullable = false),
-      StructField("audio_codec", StringType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        EbmlProbe.probe(payload).map { m =>
-          Row(r.getLong(0), m.durationSec, m.width, m.height,
-            m.videoCodec, m.audioCodec)
-        }
+  def probeWebm(media: DataFrame): DataFrame =
+    payloadPass(media, "duration_sec" -> DoubleType, "width" -> IntegerType,
+        "height" -> IntegerType, "video_codec" -> StringType,
+        "audio_codec" -> StringType) { (id, payload) =>
+      EbmlProbe.probe(payload).map { m =>
+        Row(id, m.durationSec, m.width, m.height, m.videoCodec, m.audioCodec)
       }
-    }(encoder)
-  }
+    }
 
   /** Build an mp4 table from documents: each doc gets a REAL ISO-BMFF
     * skeleton whose structure follows closed formulas of doc_id — so the
@@ -2128,45 +1920,23 @@ object Multimodal {
         videoCodec = if (docId % 2 == 0) "avc1" else "hev1",
         audioCodec = "mp4a",
         nFrames = 24L + (docId % 10) * 6L))
-    // NOT spread: consumers are header/metadata walks (~0.1 s serial
-    // at fixture scale) — the spread exchange costs more than the CPU
-    // it would parallelize (r18 subset A/B: probes regressed ~2x).
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("video").as("kind"),
-      mp4Udf(col("doc_id")).as("payload"),
-      struct(
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("video/mp4").as("mime")).as("meta"))
+    // NOT spread: a probe input (see mediaTable)
+    mediaTable(docs, mp4Udf(col("doc_id")), "video", "video/mp4")
   }
 
   /** MP4 metadata extraction over payload batches — box walk only, never
     * pixel bytes; per-task prober, no shuffle (the x14/x18 shape). Rows
     * that are not ISO-BMFF are dropped. */
-  def probeMp4(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("brand", StringType, nullable = false),
-      StructField("duration_sec", DoubleType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("video_codec", StringType, nullable = false),
-      StructField("audio_codec", StringType, nullable = false),
-      StructField("n_frames", LongType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
-        Mp4Probe.probe(payload).map { m =>
-          Row(r.getLong(0), m.brand,
-            m.duration.toDouble / m.timescale, m.width, m.height,
-            m.videoCodec, m.audioCodec, m.nFrames)
-        }
+  def probeMp4(media: DataFrame): DataFrame =
+    payloadPass(media, "brand" -> StringType, "duration_sec" -> DoubleType,
+        "width" -> IntegerType, "height" -> IntegerType,
+        "video_codec" -> StringType, "audio_codec" -> StringType,
+        "n_frames" -> LongType) { (id, payload) =>
+      Mp4Probe.probe(payload).map { m =>
+        Row(id, m.brand, m.duration.toDouble / m.timescale, m.width,
+          m.height, m.videoCodec, m.audioCodec, m.nFrames)
       }
-    }(encoder)
-  }
+    }
 
   /** Compressed-audio FRAME-HEADER prober — the metadata half of AAC/MP3
     * support (the [[Mp4Probe]] convention: profile the stream, never
@@ -2337,23 +2107,10 @@ object Multimodal {
           srIdx = ((docId / 2) % 3).toInt,            // 44100/48000/32000
           mono = (docId / 2) % 2 == 0,
           nFrames = 8 + (docId % 16).toInt))
-    // NOT spread: consumers are header/metadata walks (~0.1 s serial
-    // at fixture scale) — the spread exchange costs more than the CPU
-    // it would parallelize (r18 subset A/B: probes regressed ~2x).
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("audio").as("kind"),
-      enc(col("doc_id")).as("payload"),
-      struct(
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("audio/aac-or-mpeg").as("mime")).as("meta"))
+    // NOT spread: a probe input (see mediaTable)
+    mediaTable(docs, enc(col("doc_id")), "audio", "audio/aac-or-mpeg")
   }
 
-  /** Frame-header metadata extraction over payload batches — header walk
-    * only, payload bits never read; per-task prober, no shuffle (the
-    * x47/x48 shape). Rows that are not ADTS or MPEG-1 Layer III drop. */
   /** JPEG JFIF/EXIF SEGMENT prober — the corpus-profiling metadata
     * half of the single most common real image format (the [[Mp4Probe]]
     * convention: walk the structure, never the entropy-coded bits;
@@ -2406,8 +2163,8 @@ object Multimodal {
                           orientation: Int, datetime: String,
                           gps: Option[GpsFix] = None)
         : Array[Byte] = {
-      val makeB = (make + " ").getBytes("ISO-8859-1")
-      val dtB = (datetime + " ").getBytes("ISO-8859-1")
+      val makeB = (make + "\u0000").getBytes("ISO-8859-1")
+      val dtB = (datetime + "\u0000").getBytes("ISO-8859-1")
       require(dtB.length == 20, "EXIF DateTime must be 19 chars + NUL")
       val nEntries = if (gps.isDefined) 4 else 3
       val ifdStart = 8
@@ -2520,7 +2277,7 @@ object Multimodal {
       val end = p + count
       if (end > b.length) return ""
       val s = new String(b, p, count, "ISO-8859-1")
-      if (s.nonEmpty && s.last == ' ') s.dropRight(1) else s
+      if (s.nonEmpty && s.last == '\u0000') s.dropRight(1) else s
     }
 
     /** Parse the TIFF IFD0 inside an APP1 EXIF payload (after the
@@ -2626,12 +2383,12 @@ object Multimodal {
               val hi = math.min(p + 2 + len, b.length)
               nSeg += 1
               if (m == 0xE0 && hi - lo >= 14 &&
-                new String(b, lo, 5, "ISO-8859-1") == "JFIF ") {
+                new String(b, lo, 5, "ISO-8859-1") == "JFIF\u0000") {
                 hasJfif = true
                 xd = u16(b, lo + 8, le = false)
                 yd = u16(b, lo + 10, le = false)
               } else if (m == 0xE1 && hi - lo >= 8 &&
-                new String(b, lo, 6, "ISO-8859-1") == "Exif  ") {
+                new String(b, lo, 6, "ISO-8859-1") == "Exif\u0000\u0000") {
                 val t = parseTiff(b, lo + 6, hi)
                 make = t._1; orient = t._2; dt = t._3
                 gpsLat = t._4; gpsLon = t._5
@@ -2682,89 +2439,50 @@ object Multimodal {
           lonRef = if (docId % 8 == 5) "W" else "E",
           lonDeg = 77, lonMin = ((docId * 3) % 60).toInt,
           lonSecNum = ((docId * 91) % 6000).toInt))))
-    // NOT spread: consumers are header/metadata walks (~0.1 s serial
-    // at fixture scale) — the spread exchange costs more than the CPU
-    // it would parallelize (r18 subset A/B: probes regressed ~2x).
-    docs.select(
-      col("doc_id").as("media_id"),
-      lit("image").as("kind"),
-      jpegUdf(col("doc_id")).as("payload"),
-      struct(
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(null).cast("int").as("sample_rate"),
-        lit(null).cast("int").as("n_frames"),
-        lit("image/jpeg").as("mime")).as("meta"))
+    // NOT spread: a probe input (see mediaTable)
+    mediaTable(docs, jpegUdf(col("doc_id")), "image", "image/jpeg")
   }
 
   /** JPEG metadata extraction over payload batches — segment walk only,
     * never entropy bytes; per-task prober, no shuffle (the x47 shape).
     * Non-JPEG rows drop. */
-  def probeJpegExif(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("has_jfif", BooleanType, nullable = false),
-      StructField("x_density", IntegerType, nullable = false),
-      StructField("y_density", IntegerType, nullable = false),
-      StructField("make", StringType, nullable = false),
-      StructField("orientation", IntegerType, nullable = false),
-      StructField("exif_datetime", StringType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      StructField("progressive", BooleanType, nullable = false),
-      StructField("n_segments", IntegerType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
+  def probeJpegExif(media: DataFrame): DataFrame =
+    payloadPass(media, "has_jfif" -> BooleanType, "x_density" -> IntegerType,
+        "y_density" -> IntegerType, "make" -> StringType,
+        "orientation" -> IntegerType, "exif_datetime" -> StringType,
+        "width" -> IntegerType, "height" -> IntegerType,
+        "progressive" -> BooleanType, "n_segments" -> IntegerType) {
+      (id, payload) =>
         JpegExif.probe(payload).map { m =>
-          Row(r.getLong(0), m.hasJfif, m.xDensity, m.yDensity, m.make,
-            m.orientation, m.datetime, m.width, m.height, m.progressive,
-            m.nSegments)
+          Row(id, m.hasJfif, m.xDensity, m.yDensity, m.make, m.orientation,
+            m.datetime, m.width, m.height, m.progressive, m.nSegments)
         }
-      }
-    }(encoder)
-  }
+    }
 
   /** GPS fixes off JPEG payload batches — the geotag layer of
     * [[probeJpegExif]] as the narrow (media_id, lon, lat) table a
     * spatial join wants: rows without a complete GPS sub-IFD drop.
     * Same per-task prober, no shuffle; decimal degrees signed by
     * hemisphere ref. */
-  def probeJpegGps(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("lon", DoubleType, nullable = false),
-      StructField("lat", DoubleType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
+  def probeJpegGps(media: DataFrame): DataFrame =
+    payloadPass(media, "lon" -> DoubleType, "lat" -> DoubleType) {
+      (id, payload) =>
         JpegExif.probe(payload).flatMap { m =>
-          for (la <- m.gpsLat; lo <- m.gpsLon)
-            yield Row(r.getLong(0), lo, la)
+          for (la <- m.gpsLat; lo <- m.gpsLon) yield Row(id, lo, la)
         }
-      }
-    }(encoder)
-  }
+    }
 
-  def probeFrameAudio(media: DataFrame): DataFrame = {
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("format", StringType, nullable = false),
-      StructField("sample_rate", IntegerType, nullable = false),
-      StructField("n_channels", IntegerType, nullable = false),
-      StructField("n_frames", LongType, nullable = false),
-      StructField("duration_sec", DoubleType, nullable = false),
-      StructField("bitrate_bps", DoubleType, nullable = false)))
-    val encoder = org.apache.spark.sql.Encoders.row(outSchema)
-    media.select("media_id", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val payload = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
+  /** Frame-header metadata extraction over payload batches — header walk
+    * only, payload bits never read; per-task prober, no shuffle (the
+    * x47/x48 shape). Rows that are not ADTS or MPEG-1 Layer III drop. */
+  def probeFrameAudio(media: DataFrame): DataFrame =
+    payloadPass(media, "format" -> StringType, "sample_rate" -> IntegerType,
+        "n_channels" -> IntegerType, "n_frames" -> LongType,
+        "duration_sec" -> DoubleType, "bitrate_bps" -> DoubleType) {
+      (id, payload) =>
         FrameAudioProbe.probe(payload).map { m =>
-          Row(r.getLong(0), m.format, m.sampleRate, m.nChannels,
-            m.nFrames, m.durationSec, m.bitrateBps)
+          Row(id, m.format, m.sampleRate, m.nChannels, m.nFrames,
+            m.durationSec, m.bitrateBps)
         }
-      }
-    }(encoder)
-  }
+    }
 }

@@ -13,20 +13,35 @@ import org.scalatest.funsuite.AnyFunSuite
 class FixturePathSpec extends AnyFunSuite {
   private val absFixture = "\"/[^\"]*/src/test/resources/".r
 
-  test("no absolute fixture path in src/main/scala") {
+  /** `file:line` of every main-source line that `bad` matches. */
+  private def offendingLines(bad: String => Boolean): List[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root))
     val files = Files.walk(root)
-    val offenders = try files.iterator.asScala
+    try files.iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if absFixture.findFirstIn(line).isDefined =>
-            s"${root.relativize(p)}:${i + 1}"
+          case (line, i) if bad(line) => s"${root.relativize(p)}:${i + 1}"
         }
       }.toList
     finally files.close()
+  }
+
+  test("no absolute fixture path in src/main/scala") {
+    val offenders = offendingLines(absFixture.findFirstIn(_).isDefined)
     assert(offenders.isEmpty,
       s"resolve fixtures against the working directory: ${offenders.mkString(", ")}")
+  }
+
+  // A raw control character (a NUL inside a string literal, say) makes
+  // grep treat the whole file as binary, so text search over it silently
+  // finds nothing; write such characters as escapes. Lines are split on
+  // LF and CR already, so only tab is allowed here.
+  test("no control character other than tab in src/main/scala") {
+    val offenders =
+      offendingLines(_.exists(c => Character.isISOControl(c) && c != '\t'))
+    assert(offenders.isEmpty,
+      s"write control characters as escapes: ${offenders.mkString(", ")}")
   }
 }

@@ -1,8 +1,10 @@
 package graft.ext
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SharedSpark
+import graft.{ArtifactMemo, SharedSpark}
 
 class GraphSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -253,10 +255,12 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val dir = java.nio.file.Files
       .createTempDirectory("graft_rank_store_spec").toString
-    Graph.pageRankStoredBuild(edges, dir)
-    val stored = Graph.pageRankStoredRead(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(stored == inline) // doubles round-trip parquet exactly
+    try {
+      Graph.pageRankStoredBuild(edges, dir)
+      val stored = Graph.pageRankStoredRead(spark, dir)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(stored == inline) // doubles round-trip parquet exactly
+    } finally ArtifactMemo.delete(Paths.get(dir))
   }
 
   test("hits: hubs and authorities match the reference recurrence; " +

@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -128,6 +129,61 @@ class MjpegSpec extends AnyFunSuite {
     val got = Mp4Probe.jpegSamples(file)
     assert(got.length == 4)
     got.zip(samples).foreach { case (g, w) => assert(g.sameElements(w)) }
+  }
+
+  /** SHA-256 of a payload as lower-case hex. */
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map("%02x".format(_)).mkString
+
+  test("container bytes are pinned: DIB AVI, MJPEG AVI and MP4-JPEG") {
+    // 6×5 textured frames: the DIB rows pad to an 8-byte stride
+    val frames = (0 until 3).map(k => Array.tabulate[Byte](30)(i =>
+      ((k * 37 + i * 11) % 256).toByte))
+    assert(sha256(AviCodec.encodeAviGray(frames, 6, 5, fps = 25)) ==
+      "c5e563e88e8b7841ed921f1846ca91c7b17392704f5d7dcbff8179ff0021bb6e")
+    assert(sha256(MjpegCodec.encodeAviMjpeg(frames, 6, 5, fps = 15)) ==
+      "874e2ee1cbfac4919115ce1c4ba8442c6b176677be456bb65ef83b74c71fd7c7")
+    val s = spark
+    import s.implicits._
+    val mp4 = Multimodal.mp4JpegFromDocs(Seq(7L).toDF("doc_id"), nFrames = 3)
+      .select("payload").head.getAs[Array[Byte]](0)
+    assert(sha256(mp4) ==
+      "4a975e4ebe2729fee5ef884bad6090d1d3bc2f3d6c16199a369b25f67201eefc")
+  }
+
+  /** (doc_id, frame_idx) -> mean_lum of a sampler's output. */
+  private def lums(df: DataFrame): Map[(Long, Int), Double] =
+    df.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
+
+  test("MJPEG and MP4-JPEG samplers: closed-form mean_lum of every n-th " +
+    "frame, and no rows on another container's media") {
+    val s = spark
+    import s.implicits._
+    val docs = Seq(1L, 2L, 9L, 20L).toDF("doc_id")
+    // frame k of doc d is flat (d·13 + k·29) mod 256, DC-exact in JPEG
+    def want(nFrames: Int, everyNth: Int) = (for {
+      d <- Seq(1L, 2L, 9L, 20L); k <- 0 until nFrames by everyNth
+    } yield (d, k) -> ((d * 13 + k * 29) % 256).toDouble).toMap
+    val mjpeg = Multimodal.mjpegFromDocs(docs, nFrames = 5)
+    val mp4 = Multimodal.mp4JpegFromDocs(docs, nFrames = 5)
+    assert(lums(Multimodal.sampleMjpegFrames(mjpeg, 2)) == want(5, 2))
+    assert(lums(Multimodal.sampleMjpegFrames(mjpeg, 1)) == want(5, 1))
+    assert(lums(Multimodal.sampleMp4JpegFrames(mp4, 2)) == want(5, 2))
+    assert(lums(Multimodal.sampleMp4JpegFrames(mp4, 3)) == want(5, 3))
+    intercept[IllegalArgumentException](Multimodal.sampleMjpegFrames(mjpeg, 0))
+    intercept[IllegalArgumentException](Multimodal.sampleMp4JpegFrames(mp4, 0))
+    // each sampler drops every other container's payloads
+    val avi = Multimodal.aviFromDocs(docs)
+    val gif = Multimodal.videoFromDocs(docs)
+    assert(Multimodal.sampleAviFrames(mjpeg, 1).count() == 0)
+    assert(Multimodal.sampleAviFrames(mp4, 1).count() == 0)
+    assert(Multimodal.sampleMjpegFrames(avi, 1).count() == 0)
+    assert(Multimodal.sampleMjpegFrames(mp4, 1).count() == 0)
+    assert(Multimodal.sampleMp4JpegFrames(avi, 1).count() == 0)
+    assert(Multimodal.sampleMp4JpegFrames(mjpeg, 1).count() == 0)
+    assert(Multimodal.sampleMp4JpegFrames(gif, 1).count() == 0)
+    assert(Multimodal.sampleVideoFrames(mjpeg, 1).count() == 0)
   }
 
   test("MjpegCodec alone turns off ImageIO's disk stream cache") {

@@ -1,10 +1,12 @@
 package graft.streaming
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SharedSpark
+import graft.{ArtifactMemo, SharedSpark}
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -357,41 +359,43 @@ class StreamingSpec extends AnyFunSuite {
     val modelDir = new java.io.File(
       System.getProperty("java.io.tmpdir"),
       s"graft_dsir_stream_test_${ProcessHandle.current().pid()}").toString
-    graft.ext.TextOps.dsirBuildModel(docsBatch,
-      docsBatch.filter(col("source") === "src0"), modelDir, dim = 1024)
-    val docStream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingDsirGate(spark, docStream, modelDir, dim = 1024),
-      "dsir_gate_test",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
-    // bit-exact twin: the SAME gate shape on the batch DataFrame
-    val batch = StreamingOps.streamingDsirGate(spark, docsBatch,
-      modelDir, dim = 1024)
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batch.collect().map(_.toSeq).toSet
-    assert(s == b && s.nonEmpty)
-    // and the gate agrees with the stored batch scorer up to fp
-    // association of repeated addends (the gate folds per-occurrence
-    // terms; the scorer folds m-weighted per-bucket terms), while the
-    // stored scorer is BIT-equal to the inline operator (the x96
-    // proof shape)
-    val stored = graft.ext.TextOps.dsirScoreStored(spark, docsBatch,
-      modelDir, dim = 1024).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val gate = batch.collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(gate.keySet == stored.keySet)
-    for ((id, (n, l)) <- stored) {
-      assert(gate(id)._1 == n, s"doc $id gram count")
-      assert(math.abs(gate(id)._2 - l) < 1e-9, s"doc $id llr")
-    }
-    val inline = graft.ext.TextOps.dsirLlr(docsBatch,
-      docsBatch.filter(col("source") === "src0"), dim = 1024)
-      .collect().map(_.toSeq).toSet
-    assert(graft.ext.TextOps.dsirScoreStored(spark, docsBatch,
-      modelDir, dim = 1024).collect().map(_.toSeq).toSet == inline)
+    try {
+      graft.ext.TextOps.dsirBuildModel(docsBatch,
+        docsBatch.filter(col("source") === "src0"), modelDir, dim = 1024)
+      val docStream = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(dir)
+      val streamed = StreamingOps.runBounded(spark,
+        StreamingOps.streamingDsirGate(spark, docStream, modelDir, dim = 1024),
+        "dsir_gate_test",
+        org.apache.spark.sql.streaming.OutputMode.Complete())
+      // bit-exact twin: the SAME gate shape on the batch DataFrame
+      val batch = StreamingOps.streamingDsirGate(spark, docsBatch,
+        modelDir, dim = 1024)
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batch.collect().map(_.toSeq).toSet
+      assert(s == b && s.nonEmpty)
+      // and the gate agrees with the stored batch scorer up to fp
+      // association of repeated addends (the gate folds per-occurrence
+      // terms; the scorer folds m-weighted per-bucket terms), while the
+      // stored scorer is BIT-equal to the inline operator (the x96
+      // proof shape)
+      val stored = graft.ext.TextOps.dsirScoreStored(spark, docsBatch,
+        modelDir, dim = 1024).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      val gate = batch.collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      assert(gate.keySet == stored.keySet)
+      for ((id, (n, l)) <- stored) {
+        assert(gate(id)._1 == n, s"doc $id gram count")
+        assert(math.abs(gate(id)._2 - l) < 1e-9, s"doc $id llr")
+      }
+      val inline = graft.ext.TextOps.dsirLlr(docsBatch,
+        docsBatch.filter(col("source") === "src0"), dim = 1024)
+        .collect().map(_.toSeq).toSet
+      assert(graft.ext.TextOps.dsirScoreStored(spark, docsBatch,
+        modelDir, dim = 1024).collect().map(_.toSeq).toSet == inline)
+    } finally ArtifactMemo.delete(Paths.get(modelDir))
   }
 
   test("streaming contamination gate equals the batch audit") {
@@ -528,63 +532,65 @@ class StreamingSpec extends AnyFunSuite {
     val modelDir = new java.io.File(
       System.getProperty("java.io.tmpdir"),
       s"graft_ingest_gate_test_${ProcessHandle.current().pid()}").toString
-    graft.ext.TextOps.dsirBuildModel(corpus,
-      corpus.filter(col("source") === "src0"), modelDir, dim = 1024)
-    // the increment arrives as a stream, RAW — the gate scrubs it
-    val incBatch = graft.SparkEntry.x171Docs(raw)
-      .filter(col("doc_id") >= 400)
-    val incStream = graft.SparkEntry.x171Docs(
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir))
-      .filter(col("doc_id") >= 400)
+    try {
+      graft.ext.TextOps.dsirBuildModel(corpus,
+        corpus.filter(col("source") === "src0"), modelDir, dim = 1024)
+      // the increment arrives as a stream, RAW — the gate scrubs it
+      val incBatch = graft.SparkEntry.x171Docs(raw)
+        .filter(col("doc_id") >= 400)
+      val incStream = graft.SparkEntry.x171Docs(
+          spark.readStream.schema(schema)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet(dir))
+        .filter(col("doc_id") >= 400)
 
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingIngestGate(spark, incStream, modelDir, index,
-        dim = 1024, minJaccard = 0.35),
-      "ingest_gate_test",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
-    val batch = graft.ext.TextOps.ingestGate(spark, incBatch, modelDir,
-      index, dim = 1024, minJaccard = 0.35)
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batch.collect().map(_.toSeq).toSet
-    assert(s == b && s.nonEmpty, "streaming != batch composition")
+      val streamed = StreamingOps.runBounded(spark,
+        StreamingOps.streamingIngestGate(spark, incStream, modelDir, index,
+          dim = 1024, minJaccard = 0.35),
+        "ingest_gate_test",
+        org.apache.spark.sql.streaming.OutputMode.Complete())
+      val batch = graft.ext.TextOps.ingestGate(spark, incBatch, modelDir,
+        index, dim = 1024, minJaccard = 0.35)
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batch.collect().map(_.toSeq).toSet
+      assert(s == b && s.nonEmpty, "streaming != batch composition")
 
-    val rows = batch.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
-    assert(rows.size == 100)
-    // (1) PII columns == the piecewise census (plants: every doc >0)
-    val pii = graft.ext.TextOps.piiReport(incBatch).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_pii")).toMap
-    rows.foreach { case (id, r) =>
-      assert(r.getAs[Long]("n_pii") == pii(id) && pii(id) > 0) }
-    // (2) DSIR == the piecewise streaming-shape scorer, BIT-exact
-    // (same per-occurrence b-ordered fold over the redacted text)
-    val redacted = graft.ext.TextOps.piiReport(incBatch)
-      .select(col("doc_id"), col("redacted"))
-    val dsir = graft.ext.TextOps.dsirScoreStream(spark, redacted,
-        modelDir, dim = 1024, textCol = "redacted").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    rows.foreach { case (id, r) =>
-      assert(r.getAs[Long]("n_grams") == dsir(id)._1, s"doc $id grams")
-      assert(r.getAs[Double]("llr") == dsir(id)._2, s"doc $id llr bits") }
-    // (3) near-dup == per-doc max of the piecewise pairwise gate
-    val pairMax = StreamingOps.streamingNearDupGate(
-        redacted.select(col("doc_id"), col("redacted").as("text")),
-        index, minJaccard = 0.35).collect()
-      .groupBy(_.getAs[Long]("doc_b"))
-      .map { case (id, g) => id -> g.map(_.getAs[Double]("jaccard")).max }
-    rows.foreach { case (id, r) =>
-      pairMax.get(id) match {
-        case Some(j) =>
-          assert(r.getAs[Boolean]("dup_hit") &&
-            r.getAs[Double]("max_jaccard") == j, s"doc $id jaccard")
-        case None => assert(!r.getAs[Boolean]("dup_hit"), s"doc $id hit")
+      val rows = batch.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+      assert(rows.size == 100)
+      // (1) PII columns == the piecewise census (plants: every doc >0)
+      val pii = graft.ext.TextOps.piiReport(incBatch).collect()
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_pii")).toMap
+      rows.foreach { case (id, r) =>
+        assert(r.getAs[Long]("n_pii") == pii(id) && pii(id) > 0) }
+      // (2) DSIR == the piecewise streaming-shape scorer, BIT-exact
+      // (same per-occurrence b-ordered fold over the redacted text)
+      val redacted = graft.ext.TextOps.piiReport(incBatch)
+        .select(col("doc_id"), col("redacted"))
+      val dsir = graft.ext.TextOps.dsirScoreStream(spark, redacted,
+          modelDir, dim = 1024, textCol = "redacted").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      rows.foreach { case (id, r) =>
+        assert(r.getAs[Long]("n_grams") == dsir(id)._1, s"doc $id grams")
+        assert(r.getAs[Double]("llr") == dsir(id)._2, s"doc $id llr bits") }
+      // (3) near-dup == per-doc max of the piecewise pairwise gate
+      val pairMax = StreamingOps.streamingNearDupGate(
+          redacted.select(col("doc_id"), col("redacted").as("text")),
+          index, minJaccard = 0.35).collect()
+        .groupBy(_.getAs[Long]("doc_b"))
+        .map { case (id, g) => id -> g.map(_.getAs[Double]("jaccard")).max }
+      rows.foreach { case (id, r) =>
+        pairMax.get(id) match {
+          case Some(j) =>
+            assert(r.getAs[Boolean]("dup_hit") &&
+              r.getAs[Double]("max_jaccard") == j, s"doc $id jaccard")
+          case None => assert(!r.getAs[Boolean]("dup_hit"), s"doc $id hit")
+        }
       }
-    }
-    // non-vacuity: the fixture produces BOTH verdicts
-    assert(rows.values.exists(_.getAs[Boolean]("dup_hit")),
-      "no near-dup fired — index fixture broken")
-    assert(rows.values.exists(r => !r.getAs[Boolean]("dup_hit")))
+      // non-vacuity: the fixture produces BOTH verdicts
+      assert(rows.values.exists(_.getAs[Boolean]("dup_hit")),
+        "no near-dup fired — index fixture broken")
+      assert(rows.values.exists(r => !r.getAs[Boolean]("dup_hit")))
+    } finally ArtifactMemo.delete(Paths.get(modelDir))
   }
 
   test("streaming image-dup gate equals the batch banded search against " +
