@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Formatted physical plans of registered queries, at sf0.001: plan
@@ -25,9 +27,9 @@ object Plans {
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.001"
-    def plan(name: String): String =
+    def plan(name: String): String = masked(
       SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))(
-        spark, sf).queryExecution.explainString(ExplainMode.fromString("formatted"))
+        spark, sf).queryExecution.explainString(ExplainMode.fromString("formatted")))
     args match {
       case Array(outDir, tag, names) =>
         Files.createDirectories(Paths.get(outDir))
@@ -38,6 +40,28 @@ object Plans {
       case _ => writePlansMd(plan)
     }
     spark.stop()
+  }
+
+  /** A plan with its run-dependent text masked, so two runs of the same
+    * code print the same bytes: the random suffix of a stored artifact's
+    * temp dir (`graft_pq_store_<…>`), the source line of an RDD's call
+    * site (`Similarity.scala:<n>`, it moves with any edit above it), and
+    * lambda class names and identity hashes (`Lambda@<…>`). Expression,
+    * exchange-plan and RDD ids are session-wide counters whose values
+    * depend on what ran before, so each is renumbered by first use in
+    * this plan (`#1`, `plan_id=1`, `RDD[1]`), keeping which operator
+    * reads which attribute. */
+  private def masked(plan: String): String = {
+    val fixed = plan
+      .replaceAll("(graft_[A-Za-z0-9_]+?_store_)[^/\\]\\s]+", "$1<…>")
+      .replaceAll("(\\w+\\.scala):\\d+", "$1:<n>")
+      .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
+      .replaceAll("(?<=[\\w$])@[0-9a-f]{4,8}\\b", "@<…>")
+    Seq("#", "plan_id=", "RDD\\[").foldLeft(fixed) { (text, prefix) =>
+      val ids = scala.collection.mutable.Map[String, Int]()
+      s"($prefix)(\\d+)".r.replaceAllIn(text, m => Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
   }
 
   private def writePlansMd(plan: String => String): Unit = {

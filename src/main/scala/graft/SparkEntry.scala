@@ -5680,11 +5680,7 @@ object SparkEntry {
                                                 $queryVectorPrefix32Sql)))
                      DESC, vec_id
             LIMIT 10),
-          ex AS (SELECT vec_id FROM embeddings
-                 ORDER BY $cosSql DESC, vec_id LIMIT 10)
-          SELECT COUNT(*) AS n_overlap,
-                 CAST(COUNT(*) AS DOUBLE) / 10 AS recall_at_10
-          FROM ap JOIN ex USING (vec_id)"""),
+          ${recallAt10Sql("ap")}"""),
 
     // x132 — BM25 over ANCHOR text (what OTHER pages call a domain —
     // the classic retrieval signal anchor indexing exists for,
@@ -5757,11 +5753,7 @@ object SparkEntry {
       s"""WITH $binaryAnnCandCtes,
            approx AS (SELECT vec_id FROM cand
                       ORDER BY $cosSql DESC, vec_id LIMIT 10),
-           exact AS (SELECT vec_id FROM embeddings
-                     ORDER BY $cosSql DESC, vec_id LIMIT 10)
-           SELECT COUNT(*) AS n_overlap,
-                  CAST(COUNT(*) AS DOUBLE) / 10 AS recall_at_10
-           FROM approx JOIN exact USING (vec_id)"""),
+           ${recallAt10Sql("approx")}"""),
 
     // x136 — the per-node DEGREE/reciprocity census over a closed-form
     // two-family site graph (a stride-3 ring: never reciprocal; a
@@ -7564,10 +7556,7 @@ object SparkEntry {
           pq10 AS (SELECT p.vec_id
                    FROM pcand p JOIN embeddings ON embeddings.vec_id = p.vec_id
                    ORDER BY $cosSql DESC, p.vec_id LIMIT 10),
-          brute10 AS (SELECT vec_id FROM embeddings
-                      ORDER BY $cosSql DESC, vec_id LIMIT 10)
-          SELECT COUNT(*) AS n_overlap, COUNT(*) / 10.0 AS recall_at_10
-          FROM pq10 JOIN brute10 USING (vec_id)"""
+          ${recallAt10Sql("pq10")}"""
     }),
 
     // x70 — IVF-PQ composed (faiss-style): coarse 2-probe prune, ADC
@@ -11734,6 +11723,17 @@ s6 AS (SELECT s5.* FROM s5 JOIN rk6 USING (doc_id)
                          ${(0 until 8).map(s => s"d_$s").mkString(" + ")} AS adist
                   FROM padist ORDER BY adist, vec_id LIMIT 50)"""
   }
+
+  /** The recall@10 tail of the x69/x135/x147 gates: the x5
+    * brute-force top-10 `exact10`, then one overlap-count row of the
+    * gate's approximate cut `approx(vec_id)` against it. It opens with
+    * a CTE, so it follows the caller's own CTEs after a comma. */
+  private def recallAt10Sql(approx: String): String =
+    s"""exact10 AS (SELECT vec_id FROM embeddings
+                   ORDER BY $cosSql DESC, vec_id LIMIT 10)
+        SELECT COUNT(*) AS n_overlap,
+               CAST(COUNT(*) AS DOUBLE) / 10 AS recall_at_10
+        FROM $approx JOIN exact10 USING (vec_id)"""
 
   /** The PQ blocking key replayed (x75/x78): per band, codes packed
     * positionally in base 16 — 2 bands × 4 codes over the `pw` wide-code

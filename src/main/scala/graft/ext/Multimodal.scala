@@ -154,9 +154,15 @@ object Multimodal {
   object ImageCodec {
     ImageIoStreams.init()
 
+    /** The decoded image, or None for a null payload, a format ImageIO
+      * has no reader for, or bytes its reader rejects (a malformed or
+      * unsupported JPEG raises `IIOException`, an `IOException`): every
+      * image pass then takes its documented undecodable branch instead
+      * of failing the job. */
     def decode(payload: Array[Byte]): Option[java.awt.image.BufferedImage] =
       if (payload == null) None
-      else Option(javax.imageio.ImageIO.read(new ByteArrayInputStream(payload)))
+      else try Option(javax.imageio.ImageIO.read(new ByteArrayInputStream(payload)))
+      catch { case _: java.io.IOException => None }
 
     /** Encode 8-bit grayscale samples (row-major) as PNG bytes. */
     def encodeGrayPng(samples: Array[Byte], width: Int, height: Int): Array[Byte] = {

@@ -21,6 +21,15 @@ import graft.io.LocalFs
   *    text embeddings ([[hashEmbed]]) for corpora without vectors;
   *  - SemDeDup and embedding near-dup for semantic corpus dedup.
   *
+  * The tiers share one kernel set, each step written once:
+  * [[rerankCut]] (bounded candidate cut, id equi-join back to the
+  * vectors, exact-cosine top-k), [[recallAtK]] (overlap with the exact
+  * cut), [[pqEncode]] + [[adcSum]] (the code table and its ADC lookup
+  * sum), [[cellArgmax]] (the literal-centroid struct argmax),
+  * [[assignJoin]] (the broadcast-join max(struct) assignment),
+  * [[lloyd]] (the Lloyd re-mean loop), [[lshPlanes]], [[widen]], and the
+  * driver-side [[dotD]]/[[matVec]] folds of the spectral tier.
+  *
   * Numeric discipline throughout: every dot product is an in-order fold
   * ([[graft.functions.DotFold]] ≡ DuckDB's sequential list_dot_product),
   * every argmin/argmax tiebreak is total-ordered, so each index replays
@@ -88,21 +97,24 @@ object Similarity {
     * exchange). */
   def binaryAnnTopK(embeddings: DataFrame, q: Array[Double], k: Int,
                     rerank: Int = 20, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val q0 = signWordOf(q, 0, 31)
-    val q1 = signWordOf(q, 32, 63)
-    val ham = (call_function("bit_count", col("w0").bitwiseXOR(lit(q0))) +
-      call_function("bit_count", col("w1").bitwiseXOR(lit(q1)))).cast("int")
+                    vecCol: String = "embedding"): DataFrame =
     embeddings
-      .select(col(idCol), col(vecCol),
-        signWord(col(vecCol), 0, 31).as("w0"),
-        signWord(col(vecCol), 32, 63).as("w1"))
-      .withColumn("ham", ham)
+      .select(col(idCol) +: col(vecCol) +: signWords(col(vecCol)): _*)
+      .withColumn("ham", hamming(q))
       .orderBy(col("ham"), col(idCol)).limit(rerank)
       .withColumn("cos", cosineLiteral(col(vecCol), q))
       .orderBy(desc("cos"), col(idCol)).limit(k)
       .select(col(idCol), col("ham"), col("cos"))
-  }
+
+  /** The two sign words `(w0, w1)` of a 64-dim vector column. */
+  private def signWords(vec: Column): Seq[Column] =
+    Seq(signWord(vec, 0, 31).as("w0"), signWord(vec, 32, 63).as("w1"))
+
+  /** Hamming distance of the `(w0, w1)` columns to the query's words. */
+  private def hamming(q: Array[Double]): Column =
+    (call_function("bit_count", col("w0").bitwiseXOR(lit(signWordOf(q, 0, 31)))) +
+      call_function("bit_count",
+        col("w1").bitwiseXOR(lit(signWordOf(q, 32, 63))))).cast("int")
 
   /** Write-once half of the STORED 1-bit index — the x77/x96 lifecycle
     * applied to the sign-word tier: pack every vector's sign bits once
@@ -113,10 +125,7 @@ object Similarity {
   def binaryAnnStoredBuild(embeddings: DataFrame, storageDir: String,
                            idCol: String = "vec_id",
                            vecCol: String = "embedding"): Unit =
-    LocalFs.write(embeddings
-      .select(col(idCol),
-        signWord(col(vecCol), 0, 31).as("w0"),
-        signWord(col(vecCol), 32, 63).as("w1")))
+    LocalFs.write(embeddings.select(col(idCol) +: signWords(col(vecCol)): _*))
       .mode("overwrite").parquet(s"$storageDir/signwords")
 
   /** Query half: answer from the persisted words table alone. The
@@ -130,19 +139,26 @@ object Similarity {
   def binaryAnnStoredQuery(embeddings: DataFrame, storageDir: String,
                            q: Array[Double], k: Int, rerank: Int = 20,
                            idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame = {
+                           vecCol: String = "embedding"): DataFrame =
+    rerankCut(embeddings.sparkSession.read.parquet(s"$storageDir/signwords")
+        .select(col(idCol), hamming(q).as("ham")),
+      "ham", embeddings, q, k, rerank, idCol, vecCol)
+
+  /** The stored tiers' shared tail: the best `rerank` rows of `scored`
+    * `(id, scoreCol)` by (score, id) — a TakeOrderedAndProject — join
+    * back to the vectors by id, and the exact-cosine top `k` of those
+    * is `(id, scoreCol, cos)`. `scored` is by-name, so a bad `k` or
+    * `rerank` fails before the candidate side runs any job. */
+  private def rerankCut(scored: => DataFrame, scoreCol: String,
+                        embeddings: DataFrame, q: Array[Double], k: Int,
+                        rerank: Int, idCol: String,
+                        vecCol: String): DataFrame = {
     require(k > 0 && rerank >= k,
       s"need rerank >= k > 0, got k=$k rerank=$rerank")
-    val spark = embeddings.sparkSession
-    val q0 = signWordOf(q, 0, 31)
-    val q1 = signWordOf(q, 32, 63)
-    val ham = (call_function("bit_count", col("w0").bitwiseXOR(lit(q0))) +
-      call_function("bit_count", col("w1").bitwiseXOR(lit(q1)))).cast("int")
-    spark.read.parquet(s"$storageDir/signwords")
-      .select(col(idCol), ham.as("ham"))
-      .orderBy(col("ham"), col(idCol)).limit(rerank)
+    scored
+      .orderBy(col(scoreCol), col(idCol)).limit(rerank)
       .join(embeddings.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), col("ham"),
+      .select(col(idCol), col(scoreCol),
         cosineLiteral(col(vecCol), q).as("cos"))
       .orderBy(desc("cos"), col(idCol)).limit(k)
   }
@@ -154,11 +170,19 @@ object Similarity {
     * join is k×k rows. */
   def binaryAnnRecall(embeddings: DataFrame, q: Array[Double], k: Int,
                       rerank: Int = 20, idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    val approx = binaryAnnTopK(embeddings, q, k, rerank, idCol, vecCol)
-      .select(col(idCol))
+                      vecCol: String = "embedding"): DataFrame =
+    recallAtK(binaryAnnTopK(embeddings, q, k, rerank, idCol, vecCol),
+      embeddings, q, k, idCol, vecCol)
+
+  /** The recall gate every tier shares: one row `(n_overlap,
+    * recall_at_<k>)` counting the ids of `approx` that are also in the
+    * exact [[topKCosine]] cut. Both cuts are TakeOrderedAndProject; the
+    * overlap join is k×k rows. */
+  private def recallAtK(approx: DataFrame, embeddings: DataFrame,
+                        q: Array[Double], k: Int, idCol: String,
+                        vecCol: String): DataFrame = {
     val exact = topKCosine(embeddings, q, k, idCol, vecCol).select(col(idCol))
-    approx.join(exact, Seq(idCol)).agg(
+    approx.select(col(idCol)).join(exact, Seq(idCol)).agg(
       count(lit(1)).as("n_overlap"),
       (count(lit(1)).cast("double") / k).as(s"recall_at_$k"))
   }
@@ -182,12 +206,7 @@ object Similarity {
       .select(col(idCol),
         cosineLiteral(slice(col(vecCol), 1, prefixDim), qp).as("cosp"))
       .orderBy(desc("cosp"), col(idCol)).limit(k)
-      .select(col(idCol))
-    val exact = topKCosine(embeddings, q, k, idCol, vecCol)
-      .select(col(idCol))
-    approx.join(exact, Seq(idCol)).agg(
-      count(lit(1)).as("n_overlap"),
-      (count(lit(1)).cast("double") / k).as(s"recall_at_$k"))
+    recallAtK(approx, embeddings, q, k, idCol, vecCol)
   }
 
   /** Brute-force top-k by cosine against a literal query. Deterministic
@@ -206,12 +225,18 @@ object Similarity {
     * across runs and cluster sizes). */
   def lshBucket(vec: Column, dim: Int, nPlanes: Int = 8,
                 seed: Long = 42L): Column = {
-    val rnd = new scala.util.Random(seed)
-    val planes = Array.fill(nPlanes, dim)(rnd.nextGaussian())
-    val bits = planes.zipWithIndex.map { case (p, i) =>
+    val bits = lshPlanes(dim, nPlanes, seed).zipWithIndex.map { case (p, i) =>
       when(dotLiteral(vec, p) > 0, lit(1L << i)).otherwise(lit(0L))
     }
     bits.reduce(_ + _)
+  }
+
+  /** The `nPlanes` seeded Gaussian hyperplanes behind [[lshBucket]] —
+    * one draw order, so the query bucket and the column bucket agree. */
+  private def lshPlanes(dim: Int, nPlanes: Int,
+                        seed: Long): Array[Array[Double]] = {
+    val rnd = new scala.util.Random(seed)
+    Array.fill(nPlanes, dim)(rnd.nextGaussian())
   }
 
   /** ANN via LSH: assign each vector a bucket; answer a query by scanning
@@ -220,9 +245,7 @@ object Similarity {
   def annLsh(embeddings: DataFrame, q: Array[Double], k: Int, dim: Int,
              nPlanes: Int = 8, probes: Int = 0,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val rnd = new scala.util.Random(42L)
-    val planes = Array.fill(nPlanes, dim)(rnd.nextGaussian())
-    val qBucket = planes.zipWithIndex.map { case (p, i) =>
+    val qBucket = lshPlanes(dim, nPlanes, 42L).zipWithIndex.map { case (p, i) =>
       val d = p.zip(q).map { case (a, b) => a * b }.sum
       if (d > 0) 1L << i else 0L
     }.sum
@@ -252,11 +275,29 @@ object Similarity {
     * nProbe/nCentroids of the data. */
   def annIvf(embeddings: DataFrame, q: Array[Double], k: Int,
              nCentroids: Int = 16, nProbe: Int = 2,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cent = embeddings.filter(col(idCol) < nCentroids)
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    ivfQuery(embeddings, firstKCent(embeddings, nCentroids, idCol, vecCol),
+      q, k, nProbe, idCol, vecCol)
+
+  /** The deterministic first-k centroid table `(cid, cvec)`: the
+    * vectors with id below `n`, as [[annIvf]] and [[semDeDup]] seed it. */
+  private def firstKCent(embeddings: DataFrame, n: Int, idCol: String,
+                         vecCol: String): DataFrame =
+    embeddings.filter(col(idCol) < n)
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-    ivfQuery(embeddings, cent, q, k, nProbe, idCol, vecCol)
-  }
+
+  /** Broadcast-join cell assignment: each vector's argmax-cosine
+    * centroid of `cent`. Struct max = (cos, cid) lexicographic, so ties
+    * break to the higher cid. Returns `(id, cid, vec)`. */
+  private def assignJoin(embeddings: DataFrame, cent: DataFrame,
+                         idCol: String, vecCol: String): DataFrame =
+    embeddings
+      .join(broadcast(cent))
+      .withColumn("cc", cosine(col(vecCol), col("cvec")))
+      .groupBy(col(idCol))
+      .agg(max(struct(col("cc"), col("cid"))).as("best"),
+           first(col(vecCol)).as(vecCol))
+      .select(col(idCol), col("best.cid").as("cid"), col(vecCol))
 
   /** IVF query against an explicit centroid table `(cid, cvec)` — shared
     * by the deterministic first-k index (oracle-checked) and the k-means-
@@ -264,15 +305,7 @@ object Similarity {
   def ivfQuery(embeddings: DataFrame, cent: DataFrame, q: Array[Double],
                k: Int, nProbe: Int,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // assignment: argmax cosine over the broadcast centroid set; struct
-    // max = (cos, cid) lexicographic, so ties break to the higher cid
-    val assigned = embeddings
-      .join(broadcast(cent))
-      .withColumn("cc", cosine(col(vecCol), col("cvec")))
-      .groupBy(col(idCol))
-      .agg(max(struct(col("cc"), col("cid"))).as("best"),
-           first(col(vecCol)).as(vecCol))
-      .select(col(idCol), col("best.cid").as("cid"), col(vecCol))
+    val assigned = assignJoin(embeddings, cent, idCol, vecCol)
     val probes = cent
       .withColumn("qc", cosineLiteral(col("cvec"), q))
       .orderBy(desc("qc"), col("cid")).limit(nProbe)
@@ -304,29 +337,41 @@ object Similarity {
                         iters: Int = 3,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): Array[Array[Double]] = {
-    var cents: Array[Array[Double]] = embeddings
+    val seed = embeddings
       .filter(col(idCol) < nCentroids).orderBy(idCol).select(vecCol)
-      .collect()
-      .map(_.getSeq[Any](0).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-      }.toArray)
-    val dim = cents.headOption.map(_.length).getOrElse(0)
-    for (_ <- 0 until iters) {
-      // decimal-routed sum: component means independent of partition order
-      val parts = lloydAssignAgg(embeddings, cents, vecCol).collect()
-      val next = cents.map(_.clone())
-      parts.groupBy(_.getLong(0)).foreach { case (cid, rows) =>
-        val mean = new Array[Double](dim)
-        rows.foreach { r =>
-          mean(r.getInt(1)) = r.getDouble(2) / r.getLong(3)
-        }
-        next(cid.toInt) = mean
-      }
-      cents = next
-    }
-    cents
+      .collect().map(widen)
+    // decimal-routed sum: component means independent of partition order
+    lloyd(seed, iters)(cents => lloydAssignAgg(embeddings, cents, vecCol)
+      .collect().map(r =>
+        (r.getLong(0).toInt, r.getInt(1), r.getDouble(2), r.getLong(3))))
   }
+
+  /** `iters` Lloyd rounds over a list of centroids: `sums(cents)` is
+    * one round's `(cell, pos, sum, count)` rows, a cell's new centroid
+    * is `sum / count` per position, and a cell with no rows keeps its
+    * centroid. Shared by [[trainIvfCentroids]] and
+    * [[trainPqCodebooks]]. */
+  private def lloyd(seed: Array[Array[Double]], iters: Int)(
+      sums: Array[Array[Double]] => Array[(Int, Int, Double, Long)])
+      : Array[Array[Double]] =
+    (0 until iters).foldLeft(seed) { (cents, _) =>
+      val next = cents.map(_.clone())
+      sums(cents).groupBy(_._1).foreach { case (cell, rows) =>
+        val mean = new Array[Double](cents(cell).length)
+        rows.foreach { case (_, pos, s, n) => mean(pos) = s / n }
+        next(cell) = mean
+      }
+      next
+    }
+
+  /** A collected `array<float>` or `array<double>` vector, floats
+    * widened exactly to double — the one widening every seed and
+    * centroid collect uses. */
+  private def widen(row: org.apache.spark.sql.Row): Array[Double] =
+    row.getSeq[Any](0).map {
+      case f: Float => f.toDouble
+      case d: Double => d
+    }.toArray
 
   /** One Lloyd iteration's dataframe — assignment + per-(cid, pos)
     * partial sums — exposed so PlanSpec can pin the plan shape: no Join
@@ -341,21 +386,6 @@ object Similarity {
       .groupBy("cid", "pos")
       .agg(graft.ops.Stable.sumD(col("v").cast("double")).as("s"),
            count(lit(1)).as("n"))
-
-  /** IVF with k-means-trained centroids: train, then query — the
-    * production path; the deterministic first-k variant stays for the
-    * oracle. */
-  def annIvfTrained(embeddings: DataFrame, q: Array[Double], k: Int,
-                    nCentroids: Int = 16, nProbe: Int = 2, iters: Int = 3,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val cents = trainIvfCentroids(embeddings, nCentroids, iters, idCol, vecCol)
-    val centDf = cents.zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toSeq.toDF("cid", "cvec")
-    ivfQuery(embeddings, centDf, q, k, nProbe, idCol, vecCol)
-  }
 
   /** The decimal-routed corpus mean vector: posexplode to (pos,
     * component), ONE pos-keyed aggregate whose exchange carries dim ×
@@ -408,37 +438,23 @@ object Similarity {
     * (the [[coarseCellCol]] struct-greatest convention). */
   def kmeansAssign(embeddings: DataFrame, cents: Array[Array[Double]],
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    require(cents.forall(_.exists(_ != 0.0)),
-      "zero-norm centroid: cosine cluster assignment is undefined")
-    val b = greatest(cents.zipWithIndex.map { case (c, j) =>
-      struct(cosineLiteral(col(vecCol), c).as("cc"),
-             lit(j.toLong).as("cid")) }: _*)
-    embeddings.select(col(idCol), b.as("b"))
+                   vecCol: String = "embedding"): DataFrame =
+    embeddings.select(col(idCol), cellArgmax(col(vecCol), cents).as("b"))
       .select(col(idCol), col("b.cid").as("cid"), col("b.cc").as("cc"))
-  }
 
   /** Semantic cluster census over the corpus embedding space — the
     * curation report cluster-aware selection reads first (Tirumala et
     * al. 2023, "D4": k-means clusters of document embeddings drive
-    * both dedup and diversification): Lloyd-trained centroids
-    * ([[trainIvfCentroids]] — ONE aggregation per iteration, only the
-    * k × dim matrix reaches the driver), then per cluster the member
-    * count, the decimal-routed mean assignment cosine (cohesion), and
-    * the exemplar — the member nearest its centroid (ties → lower id),
-    * which is what a labeling pass reads instead of the whole cluster.
-    * Assignment is the literal-centroid argmax fused into the scan, so
-    * the census is scan → one cid-keyed aggregate at any corpus size. */
-  def kmeansCensus(embeddings: DataFrame, nCentroids: Int = 8,
-                   iters: Int = 2, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame =
-    kmeansCensusOf(embeddings,
-      trainIvfCentroids(embeddings, nCentroids, iters, idCol, vecCol),
-      idCol, vecCol)
-
-  /** [[kmeansCensus]] under an ALREADY-trained centroid table — the
-    * memoized-trainer entry point (training runs once per JVM, every
-    * consumer reads the learned matrix). */
+    * both dedup and diversification) — under an ALREADY-trained
+    * centroid table ([[trainIvfCentroids]]: ONE aggregation per
+    * iteration, only the k × dim matrix reaches the driver; training
+    * runs once per JVM and every consumer reads the learned matrix).
+    * Per cluster: the member count, the decimal-routed mean assignment
+    * cosine (cohesion), and the exemplar — the member nearest its
+    * centroid (ties → lower id), which is what a labeling pass reads
+    * instead of the whole cluster. Assignment is the literal-centroid
+    * argmax fused into the scan, so the census is scan → one cid-keyed
+    * aggregate at any corpus size. */
   def kmeansCensusOf(embeddings: DataFrame, cents: Array[Array[Double]],
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
@@ -451,21 +467,13 @@ object Similarity {
         (-col("b.ni")).as("exemplar_id"))
   }
 
-  /** Cluster-balanced sample: `perCluster` members from every trained
-    * cluster by splitmix64 rank — the diversification cut (D4's
-    * counter to semantic over-concentration: a corpus 90% one topic
-    * contributes at most `perCluster` from that topic's clusters).
-    * Composes [[kmeansAssign]] with [[Curation.stratifiedSample]]'s
-    * rank rule, stratified on the CLUSTER id. */
-  def kmeansBalancedSample(embeddings: DataFrame, nCentroids: Int = 8,
-                           iters: Int = 2, perCluster: Int = 10,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame =
-    kmeansBalancedSampleOf(embeddings,
-      trainIvfCentroids(embeddings, nCentroids, iters, idCol, vecCol),
-      perCluster, idCol, vecCol)
-
-  /** [[kmeansBalancedSample]] under already-trained centroids. */
+  /** Cluster-balanced sample under already-trained centroids:
+    * `perCluster` members from every cluster by splitmix64 rank — the
+    * diversification cut (D4's counter to semantic over-concentration:
+    * a corpus 90% one topic contributes at most `perCluster` from that
+    * topic's clusters). Composes [[kmeansAssign]] with
+    * [[Curation.stratifiedSample]]'s rank rule, stratified on the
+    * CLUSTER id. */
   def kmeansBalancedSampleOf(embeddings: DataFrame,
                              cents: Array[Array[Double]],
                              perCluster: Int = 10,
@@ -526,7 +534,7 @@ object Similarity {
     * the scan project, and the per-anchor cut is the x11 window shape
     * (one shuffle on q_id, partition count = |Q|). At 100 TB the exact
     * scan swaps for the stored-index ANN cut ([[binaryAnnStoredQuery]] /
-    * [[annPqStored]]) feeding the SAME window — the mining logic is
+    * [[annPqStoredQuery]]) feeding the SAME window — the mining logic is
     * index-agnostic; the exact variant is the oracle-checkable one. */
   def hardNegatives(embeddings: DataFrame, queryIds: Seq[Long], k: Int,
                     posThreshold: Double,
@@ -581,15 +589,8 @@ object Similarity {
                minCos: Double = 0.3,
                idCol: String = "vec_id",
                vecCol: String = "embedding"): DataFrame = {
-    val cent = embeddings.filter(col(idCol) < nClusters)
-      .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
-    val assigned = embeddings
-      .join(broadcast(cent))
-      .withColumn("cc", cosine(col(vecCol), col("cvec")))
-      .groupBy(col(idCol))
-      .agg(max(struct(col("cc"), col("cid"))).as("best"),
-           first(col(vecCol)).as(vecCol))
-      .select(col(idCol), col("best.cid").as("cid"), col(vecCol))
+    val assigned = assignJoin(embeddings,
+      firstKCent(embeddings, nClusters, idCol, vecCol), idCol, vecCol)
     val a = assigned.select(col("cid"), col(idCol).as("id_a"),
                             col(vecCol).as("vec_a"))
     val b = assigned.select(col("cid"), col(idCol).as("id_b"),
@@ -737,9 +738,8 @@ object Similarity {
     val sub = slice(vec, s * dsub + 1, dsub)
     val xx = graft.functions.VectorExprs.dot_fold(sub, sub)
     val cands = books(s).zipWithIndex.map { case (c, j) =>
-      val cc = c.foldLeft(0.0)((a, v) => a + v * v)
-      val xc = graft.functions.VectorExprs.dot_fold(sub, array(c.map(lit): _*))
-      struct((xx - lit(2.0) * xc + lit(cc)).as("d"), lit(j).as("cid"))
+      val xc = graft.functions.VectorExprs.dot_fold(sub, literalArray(c))
+      struct((xx - lit(2.0) * xc + lit(dotD(c, c))).as("d"), lit(j).as("cid"))
     }
     least(cands: _*)
   }
@@ -749,11 +749,23 @@ object Similarity {
     * floats. */
   def pqEncode(embeddings: DataFrame, books: Array[Array[Array[Double]]],
                idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-    val codes = pqCodeCols(col(vecCol), books).zipWithIndex
-      .map { case (c, s) => c.as(s"code_$s") }
-    embeddings.select(col(idCol) +: codes: _*)
-  }
+               vecCol: String = "embedding"): DataFrame =
+    embeddings.select(col(idCol) +: codeColsNamed(col(vecCol), books): _*)
+
+  /** [[pqCodeCols]] named `code_0 … code_{m-1}` — the code-table columns
+    * [[adcSum]] reads. */
+  private def codeColsNamed(vec: Column,
+                            books: Array[Array[Array[Double]]]): Seq[Column] =
+    pqCodeCols(vec, books).zipWithIndex.map { case (c, s) => c.as(s"code_$s") }
+
+  /** ADC distance of a code table row: the per-subspace `tables` looked
+    * up by `code_<s>` and summed left to right (a fixed-order chain —
+    * Catalyst only re-associates integral Adds, so the double sum stays
+    * sequential and oracle-exact). */
+  private def adcSum(tables: Seq[Seq[Double]]): Column =
+    tables.indices.map { s =>
+      element_at(typedLit(tables(s)), col(s"code_$s") + 1)
+    }.reduce(_ + _)
 
   /** ADC top-k: the query's m×k distance table is computed driver-side
     * (in-order folds over the same doubles the encoder used) and rides
@@ -780,91 +792,55 @@ object Similarity {
   def annPqWithBooks(embeddings: DataFrame, books: Array[Array[Array[Double]]],
                      q: Array[Double], k: Int, rerank: Int = 50,
                      idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
-    require(k > 0 && rerank >= k, s"need rerank >= k > 0, got k=$k rerank=$rerank")
-    val dsub = books(0)(0).length
-    require(books.forall(_.forall(_.length == dsub)),
-      "ragged codebooks: every centroid must have the same subspace width")
-    require(q.length == books.length * dsub,
-      s"query dim ${q.length} != m*dsub = ${books.length * dsub}")
-    val tables = adcTables(books, q)
-    // The code table materializes ONCE (id + m small ints — exactly
-    // the artifact [[annPqStored]] persists) before the ADC sum: fused
-    // with its consumers the m unrolled argmins exceeded Janino's
-    // 64 KB method limit, so whole-stage codegen FAILED and every
-    // execution re-paid the doomed compile and ran the scan
-    // interpreted (r18 measurement; the x107/x116 JIT lesson). Raw
-    // vectors re-enter only through the rerank-row equi-join — the
-    // [[annPqStoredQuery]] discipline, so the checkpoint never holds
-    // the vector payload. Same folds, tiebreaks, and lookups — every
-    // score bit-identical.
-    val coded = embeddings
-      .select(col(idCol) +: pqCodeCols(col(vecCol), books).zipWithIndex
-        .map { case (c, s) => c.as(s"code_$s") }: _*)
-      .localCheckpoint(true)
-    val adist = books.indices.map { s =>
-      element_at(typedLit(tables(s)), col(s"code_$s") + 1)
-    }.reduce(_ + _)
-    coded
-      .select(col(idCol), adist.as("adist"))
-      .orderBy(col("adist"), col(idCol)).limit(rerank)
-      .join(embeddings.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), col("adist"),
-        cosineLiteral(col(vecCol), q).as("cos"))
-      .orderBy(desc("cos"), col(idCol)).limit(k)
-  }
+                     vecCol: String = "embedding"): DataFrame =
+    rerankCut({
+      val dsub = books(0)(0).length
+      require(books.forall(_.forall(_.length == dsub)),
+        "ragged codebooks: every centroid must have the same subspace width")
+      require(q.length == books.length * dsub,
+        s"query dim ${q.length} != m*dsub = ${books.length * dsub}")
+      // The code table materializes ONCE (id + m small ints — exactly
+      // the artifact [[annPqStoredBuild]] persists) before the ADC sum:
+      // fused with its consumers the m unrolled argmins exceeded
+      // Janino's 64 KB method limit, so whole-stage codegen FAILED and
+      // every execution re-paid the doomed compile and ran the scan
+      // interpreted (r18 measurement; the x107/x116 JIT lesson). Raw
+      // vectors re-enter only through the rerank-row equi-join — the
+      // [[annPqStoredQuery]] discipline, so the checkpoint never holds
+      // the vector payload. Same folds, tiebreaks, and lookups — every
+      // score bit-identical.
+      pqEncode(embeddings, books, idCol, vecCol).localCheckpoint(true)
+        .select(col(idCol), adcSum(adcTables(books, q)).as("adist"))
+    }, "adist", embeddings, q, k, rerank, idCol, vecCol)
 
   /** The query's per-subspace ADC distance table: in-order folds over
     * the same doubles the encoder used — shared by the inline
-    * ([[annPqWithBooks]]) and stored-codes ([[annPqStored]]) paths so
-    * the two are bit-equal by construction. */
+    * ([[annPqWithBooks]]), stored-codes ([[annPqStoredQuery]]) and
+    * per-list residual ([[annIvfPqResidual]]) paths so they are
+    * bit-equal by construction. */
   private def adcTables(books: Array[Array[Array[Double]]],
                         q: Array[Double]): Seq[Seq[Double]] = {
     val dsub = books(0)(0).length
     books.indices.map { s =>
       val qs = q.slice(s * dsub, (s + 1) * dsub)
-      val qq = qs.foldLeft(0.0)((a, v) => a + v * v)
-      books(s).toSeq.map { c =>
-        val qc = qs.indices.foldLeft(0.0)((a, i) => a + qs(i) * c(i))
-        val cc = c.foldLeft(0.0)((a, v) => a + v * v)
-        qq - 2.0 * qc + cc
-      }
+      val qq = dotD(qs, qs)
+      books(s).toSeq.map(c => qq - 2.0 * dotD(qs, c) + dotD(c, c))
     }
   }
 
-  /** The stored-index LIFECYCLE as one first-class operation — the
-    * "32× compression at rest" claim proven end to end:
-    *
-    *   1. TRAIN the deterministic seed codebooks and PERSIST the index:
-    *      the [[pqEncode]] code table (m small ints per vector — the
-    *      artifact that replaces D floats at rest) and the codebooks
-    *      themselves, both as parquet under `storageDir`;
-    *   2. QUERY FROM STORAGE ONLY: codebooks reload from parquet into
-    *      the literal ADC tables, the code scan pays m `element_at`
-    *      lookups + a fixed-order sum, and raw vectors are touched
-    *      only by the `rerank`-row re-rank equi-join.
-    *
-    * Parquet stores binary64 and int32 exactly, so the stored path is
-    * bit-equal to the inline [[annPqWithBooks]] encode (spec-asserted,
-    * and the x77 oracle hash-matches the same replay as x66). At
-    * 100 TB the codes table is what lives hot (3 TB per 100 TB of raw
-    * float32 vectors at m=8); the vector table is cold storage the
-    * rerank join reads ~50 rows of. */
-  def annPqStored(embeddings: DataFrame, storageDir: String,
-                  q: Array[Double], k: Int,
-                  m: Int = 8, nCent: Int = 16, rerank: Int = 50,
-                  idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    annPqStoredBuild(embeddings, storageDir, m, nCent, idCol, vecCol)
-    annPqStoredQuery(embeddings, storageDir, q, k, m, nCent, rerank,
-      idCol, vecCol)
-  }
+  /** `Σ a(i)·b(i)` over `a`'s indices, one 0.0-init ascending fold —
+    * the driver-side twin of [[graft.functions.DotFold]] that every
+    * literal table, probe rank and spectral product uses. */
+  private def dotD(a: Array[Double], b: Array[Double]): Double =
+    a.indices.foldLeft(0.0)((s, i) => s + a(i) * b(i))
 
-  /** Write-once half of [[annPqStored]]: train the seed codebooks and
-    * persist codes + books as parquet under `storageDir`. Exposed so a
-    * session builds the store ONCE and then pays only the query half —
-    * the benchmark of the stored path should time retrieval, not
-    * re-training. */
+  /** Write-once half of the stored PQ index — the "32× compression at
+    * rest" lifecycle: train the deterministic seed codebooks and
+    * persist the [[pqEncode]] code table (m small ints per vector — the
+    * artifact that replaces D floats at rest) and the codebooks
+    * themselves as parquet under `storageDir`. A session builds the
+    * store ONCE and then pays only [[annPqStoredQuery]] — the benchmark
+    * of the stored path times retrieval, not re-training. */
   def annPqStoredBuild(embeddings: DataFrame, storageDir: String,
                        m: Int = 8, nCent: Int = 16,
                        idCol: String = "vec_id",
@@ -880,39 +856,38 @@ object Similarity {
       .mode("overwrite").parquet(s"$storageDir/books")
   }
 
-  /** Query half of [[annPqStored]] — answers from the persisted store
-    * alone; nothing below reads `embeddings` except the bounded
-    * re-rank join. */
+  /** Query half of the stored PQ index — answers from the persisted
+    * store alone: codebooks reload from parquet into the literal ADC
+    * tables, the code scan pays m `element_at` lookups + a fixed-order
+    * sum, and nothing reads `embeddings` except the bounded `rerank`-row
+    * re-rank join. Parquet stores binary64 and int32 exactly, so the
+    * stored path is bit-equal to the inline [[annPqWithBooks]] encode
+    * (spec-asserted, and the x77 oracle hash-matches the same replay as
+    * x66). At 100 TB the codes table is what lives hot (3 TB per
+    * 100 TB of raw float32 vectors at m=8); the vector table is cold
+    * storage the rerank join reads ~50 rows of. */
   def annPqStoredQuery(embeddings: DataFrame, storageDir: String,
                        q: Array[Double], k: Int,
                        m: Int = 8, nCent: Int = 16, rerank: Int = 50,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    require(k > 0 && rerank >= k, s"need rerank >= k > 0, got k=$k rerank=$rerank")
     val spark = embeddings.sparkSession
-    val books = spark.read.parquet(s"$storageDir/books")
-      .collect()
-      .groupBy(_.getInt(0)).toArray.sortBy(_._1)
-      .map { case (_, rows) =>
-        rows.sortBy(_.getInt(1))
-          .map(_.getSeq[Double](2).toArray)
-      }
-    require(books.length == m && books.forall(_.length == nCent),
-      s"stored books are ${books.length}x${books.headOption.map(_.length)}, " +
-        s"expected ${m}x$nCent")
-    require(q.length == books.length * books(0)(0).length,
-      s"query dim ${q.length} != stored index dim")
-    val tables = adcTables(books, q)
-    val adist = books.indices.map { s =>
-      element_at(typedLit(tables(s)), col(s"code_$s") + 1)
-    }.reduce(_ + _)
-    spark.read.parquet(s"$storageDir/codes")
-      .select(col(idCol), adist.as("adist"))
-      .orderBy(col("adist"), col(idCol)).limit(rerank)
-      .join(embeddings.select(col(idCol), col(vecCol)), Seq(idCol))
-      .select(col(idCol), col("adist"),
-        cosineLiteral(col(vecCol), q).as("cos"))
-      .orderBy(desc("cos"), col(idCol)).limit(k)
+    rerankCut({
+      val books = spark.read.parquet(s"$storageDir/books")
+        .collect()
+        .groupBy(_.getInt(0)).toArray.sortBy(_._1)
+        .map { case (_, rows) =>
+          rows.sortBy(_.getInt(1))
+            .map(_.getSeq[Double](2).toArray)
+        }
+      require(books.length == m && books.forall(_.length == nCent),
+        s"stored books are ${books.length}x${books.headOption.map(_.length)}, " +
+          s"expected ${m}x$nCent")
+      require(q.length == books.length * books(0)(0).length,
+        s"query dim ${q.length} != stored index dim")
+      spark.read.parquet(s"$storageDir/codes")
+        .select(col(idCol), adcSum(adcTables(books, q)).as("adist"))
+    }, "adist", embeddings, q, k, rerank, idCol, vecCol)
   }
 
   /** Literal coarse centroids: the first `n` vectors by id, widened
@@ -940,10 +915,7 @@ object Similarity {
       .orderBy(col(idCol)).select(col(vecCol)).collect()
     require(rows.length == hi - lo,
       s"need ids [$lo, $hi) as seed vectors, got ${rows.length}")
-    rows.map(_.getSeq[Any](0).map {
-      case f: Float => f.toDouble
-      case d: Double => d
-    }.toArray)
+    rows.map(widen)
   }
 
   /** Driver-side probe ranking shared by the IVF-PQ variants: cosine of
@@ -952,11 +924,9 @@ object Similarity {
     * ties to the LOWER cid (the [[annIvf]] orderBy convention). */
   private def rankProbes(cents: Array[Array[Double]], q: Array[Double],
                          nProbe: Int): Seq[Long] = {
-    val qn = math.sqrt(q.foldLeft(0.0)((a, v) => a + v * v))
+    val qn = math.sqrt(dotD(q, q))
     cents.zipWithIndex.map { case (c, j) =>
-      val dot = c.indices.foldLeft(0.0)((a, i) => a + c(i) * q(i))
-      val cn = math.sqrt(c.foldLeft(0.0)((a, v) => a + v * v))
-      (dot / (cn * qn), j.toLong)
+      (dotD(c, q) / (math.sqrt(dotD(c, c)) * qn), j.toLong)
     }.sortBy { case (cc, j) => (-cc, j) }.take(nProbe).map(_._2).toSeq
   }
 
@@ -966,15 +936,22 @@ object Similarity {
     * assignment, so the two encodings agree row-for-row). Zero shuffle,
     * zero join: cell assignment fuses into the scan the way [[pqCodeCols]]
     * does. */
-  def coarseCellCol(vec: Column, cents: Array[Array[Double]]): Column = {
+  def coarseCellCol(vec: Column, cents: Array[Array[Double]]): Column =
+    cellArgmax(vec, cents).getField("cid")
+
+  /** The literal-centroid argmax struct `(cc, cid)` behind
+    * [[coarseCellCol]] and [[kmeansAssign]]: `greatest` over one
+    * `(cosine, cid)` struct per centroid, lexicographic, so ties go to
+    * the higher cid. */
+  private def cellArgmax(vec: Column, cents: Array[Array[Double]]): Column = {
     // a zero-norm centroid makes every cosine against it NaN, which Spark's
     // ordering ranks ABOVE all finite values — silently stealing the whole
     // corpus into one never-probed cell. Fail fast driver-side instead.
     require(cents.forall(_.exists(_ != 0.0)),
-      "zero-norm coarse centroid: cosine cell assignment is undefined")
+      "zero-norm centroid: cosine cell assignment is undefined")
     greatest(cents.zipWithIndex.map { case (c, j) =>
       struct(cosineLiteral(vec, c).as("cc"), lit(j.toLong).as("cid"))
-    }: _*).getField("cid")
+    }: _*)
   }
 
   /** IVF-PQ — the two tiers composed the way a billion-vector (faiss
@@ -1044,16 +1021,13 @@ object Similarity {
     val cents = coarseCentroids(embeddings, nCoarse, idCol, vecCol)
     val dim = cents(0).length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val dsub = dim / m
     // driver-side replica of coarseCellCol's fold math (ties → higher cid)
     def assignOf(v: Array[Double]): Int = {
-      val vv = math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x))
+      val vv = math.sqrt(dotD(v, v))
       var bestCc = Double.NegativeInfinity
       var bestJ = -1
       cents.zipWithIndex.foreach { case (c, j) =>
-        val dot = c.indices.foldLeft(0.0)((a, i) => a + v(i) * c(i))
-        val cn = math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x))
-        val cc = dot / (vv * cn)
+        val cc = dotD(c, v) / (vv * math.sqrt(dotD(c, c)))
         // match Spark's ordering exactly: NaN ranks above every finite
         // value, and equal keys (incl. NaN == NaN) tie to the higher cid
         // — so a zero-norm SEED vector (all cosines NaN) lands in the
@@ -1073,22 +1047,12 @@ object Similarity {
         val c = cents(assignOf(v))
         Array.tabulate(dim)(i => v(i) - c(i))
       }
-    val books = Array.tabulate(m, kCent)((s, j) =>
-      residSeeds(j).slice(s * dsub, (s + 1) * dsub))
+    val books = sliceBooks(residSeeds, m)
     val probeCids = rankProbes(cents, q, nProbe)
     // one ADC table per probed list, from that list's query residual
     val tables: Map[Long, Seq[Seq[Double]]] = probeCids.map { l =>
       val cl = cents(l.toInt)
-      val qres = Array.tabulate(dim)(i => q(i) - cl(i))
-      l -> books.indices.map { s =>
-        val qs = qres.slice(s * dsub, (s + 1) * dsub)
-        val qq = qs.foldLeft(0.0)((a, v) => a + v * v)
-        books(s).toSeq.map { c =>
-          val qc = qs.indices.foldLeft(0.0)((a, i) => a + qs(i) * c(i))
-          val cc = c.foldLeft(0.0)((a, v) => a + v * v)
-          qq - 2.0 * qc + cc
-        }
-      }
+      l -> adcTables(books, Array.tabulate(dim)(i => q(i) - cl(i)))
     }.toMap
     val centsLit = typedLit(cents.map(_.toSeq).toSeq)
     // STAGE SPLITS (the x107/x116 Janino lesson): fused, the coarse
@@ -1111,16 +1075,10 @@ object Similarity {
       .localCheckpoint(true)
     val coded = pruned
       .select(Seq(col(idCol), col(vecCol), col("cid")) ++
-        pqCodeCols(col("resid"), books).zipWithIndex
-          .map { case (c, s) => c.as(s"code_$s") }: _*)
+        codeColsNamed(col("resid"), books): _*)
       .localCheckpoint(true)
-    val adist = probeCids.map { l =>
-      val sumL = books.indices.map { s =>
-        element_at(typedLit(tables(l)(s)), col(s"code_$s") + 1)
-      }.reduce(_ + _)
-      (l, sumL)
-    }.foldRight(lit(Double.NaN): Column) { case ((l, sumL), acc) =>
-      when(col("cid") === l, sumL).otherwise(acc)
+    val adist = probeCids.foldRight(lit(Double.NaN): Column) { (l, acc) =>
+      when(col("cid") === l, adcSum(tables(l))).otherwise(acc)
     }
     coded
       .select(col(idCol), col(vecCol), adist.as("adist"))
@@ -1241,9 +1199,7 @@ object Similarity {
     // measurement; same fix as [[annPqWithBooks]]). The one-pass
     // aggregation consumer ([[pqBandBalance]]) compiles WITHOUT the
     // split and measured faster un-materialized — it opts out.
-    val codeTbl = embeddings
-      .select(col(idCol) +: pqCodeCols(col(vecCol), books).zipWithIndex
-        .map { case (c, s) => c.as(s"code_$s") }: _*)
+    val codeTbl = pqEncode(embeddings, books, idCol, vecCol)
     val coded = if (materializeCodes) codeTbl.localCheckpoint(true)
       else codeTbl
     val bandStructs = (0 until bands).map { b =>
@@ -1291,14 +1247,9 @@ object Similarity {
   def annRecall(embeddings: DataFrame, q: Array[Double], k: Int,
                 m: Int = 8, nCent: Int = 16, rerank: Int = 50,
                 idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
-    val approx = annPq(embeddings, q, k, m, nCent, rerank, idCol, vecCol)
-      .select(col(idCol))
-    val exact = topKCosine(embeddings, q, k, idCol, vecCol).select(col(idCol))
-    approx.join(exact, Seq(idCol)).agg(
-      count(lit(1)).as("n_overlap"),
-      (count(lit(1)).cast("double") / k).as(s"recall_at_$k"))
-  }
+                vecCol: String = "embedding"): DataFrame =
+    recallAtK(annPq(embeddings, q, k, m, nCent, rerank, idCol, vecCol),
+      embeddings, q, k, idCol, vecCol)
 
   /** Mean total quantization distortion of a codebook set over the
     * corpus — Σ over subspaces of the distance to the chosen centroid,
@@ -1361,9 +1312,11 @@ object Similarity {
   def trainPqCodebooks(embeddings: DataFrame, m: Int = 8, k: Int = 16,
                        iters: Int = 3, idCol: String = "vec_id",
                        vecCol: String = "embedding"): Array[Array[Array[Double]]] = {
-    var books = pqCodebooks(embeddings, m, k, idCol, vecCol)
-    val dsub = books(0)(0).length
-    for (_ <- 0 until iters) {
+    val seed = pqCodebooks(embeddings, m, k, idCol, vecCol)
+    val dsub = seed(0)(0).length
+    // the Lloyd cells are the m×k centroids, flattened sub-major
+    lloyd(seed.flatten, iters) { flat =>
+      val books = flat.grouped(k).toArray
       // assignment is the SAME literal-codebook argmin the encoder uses
       // (pqBestStruct via pqCodeCols) fused into the scan — zero shuffle;
       // the one exchange per iteration is the (sub, cid, pos) partial+
@@ -1374,23 +1327,15 @@ object Similarity {
           slice(col(vecCol), s * dsub + 1, dsub).cast("array<double>")
             .as("svec"))
       }
-      val parts = embeddings
+      embeddings
         .select(explode(array(perSub: _*)).as("e"))
         .select(col("e.sub").as("sub"), col("e.cid").as("cid"),
           posexplode(col("e.svec")).as(Seq("pos", "v")))
         .groupBy("sub", "cid", "pos")
         .agg(graft.ops.Stable.sumD(col("v")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = books.map(_.map(_.clone()))
-      parts.groupBy(r => (r.getInt(0), r.getLong(1))).foreach {
-        case ((s, cid), rs) =>
-          val mean = new Array[Double](dsub)
-          rs.foreach(r => mean(r.getInt(2)) = r.getDouble(3) / r.getLong(4))
-          next(s)(cid.toInt) = mean
-      }
-      books = next
-    }
-    books
+        .collect().map(r => (r.getInt(0) * k + r.getLong(1).toInt,
+          r.getInt(2), r.getDouble(3), r.getLong(4)))
+    }.grouped(k).toArray
   }
 
   /** Top principal component trained IN the engine — the spectral core
@@ -1414,14 +1359,8 @@ object Similarity {
                       idCol: String = "vec_id",
                       vecCol: String = "embedding",
                       moments: Option[(Array[Array[Double]], Array[Double])] = None)
-      : DataFrame = {
-    val (cm, mu) = moments.getOrElse(pcaMoments(embeddings, dim, vecCol))
-    val w = powerIterate(cm, dim, iters)
-    val muw = (0 until dim).foldLeft(0.0)((a, i) => a + mu(i) * w(i))
-    embeddings.select(col(idCol),
-      round(graft.functions.VectorExprs.dot_fold(col(vecCol),
-        array(w.toIndexedSeq.map(lit): _*)) - lit(muw), 6).as("pc1"))
-  }
+      : DataFrame =
+    pcaProjectTopK(embeddings, 1, dim, iters, idCol, vecCol, moments)
 
   /** All-but-the-top corrected retrieval (Mu & Viswanath 2018 §3):
     * subtract the common mean, remove the top principal direction,
@@ -1444,20 +1383,17 @@ object Similarity {
                  None): DataFrame = {
     val (cm, mu) = moments.getOrElse(pcaMoments(embeddings, dim, vecCol))
     val w = powerIterate(cm, dim, iters)
-    val muw = (0 until dim).foldLeft(0.0)((a, i) => a + mu(i) * w(i))
     // the query under the same correction, same fold orders
-    val dpq = (0 until dim).foldLeft(0.0)((a, i) => a + q(i) * w(i)) - muw
+    val dpq = dotD(w, q) - dotD(mu, w)
     val qp = Array.tabulate(dim)(i => (q(i) - mu(i)) - dpq * w(i))
-    val qn = math.sqrt(qp.foldLeft(0.0)((a, x) => a + x * x))
-    val wArr = array(w.toIndexedSeq.map(lit): _*)
-    val muArr = array(mu.toIndexedSeq.map(lit): _*)
-    val qpArr = array(qp.toIndexedSeq.map(lit): _*)
+    val qn = math.sqrt(dotD(qp, qp))
+    val muArr = literalArray(mu)
+    val qpArr = literalArray(qp)
     val withDp = embeddings.select(col(idCol), col(vecCol),
-      (graft.functions.VectorExprs.dot_fold(col(vecCol), wArr) - lit(muw))
-        .as("dp"))
+      projection(col(vecCol), mu, w).as("dp"))
     val xp = transform(col(vecCol), (x, i) =>
       (x.cast("double") - element_at(muArr, i + 1)) -
-        col("dp") * element_at(wArr, i + 1))
+        col("dp") * element_at(literalArray(w), i + 1))
     withDp
       .select(col(idCol),
         (graft.functions.VectorExprs.dot_fold(xp, qpArr) /
@@ -1465,15 +1401,6 @@ object Similarity {
           .as("cos"))
       .orderBy(desc("cos"), col(idCol))
       .limit(k)
-  }
-
-  /** Shared training half of the PCA tier: exact moments → covariance →
-    * `iters` power-iteration rounds. Returns (covariance, mean, axis). */
-  private def pcaTrain(embeddings: DataFrame, dim: Int, iters: Int,
-                       vecCol: String)
-      : (Array[Array[Double]], Array[Double], Array[Double]) = {
-    val (cm, mu) = pcaMoments(embeddings, dim, vecCol)
-    (cm, mu, powerIterate(cm, dim, iters))
   }
 
   /** The ONE exact moment pass behind the whole spectral family
@@ -1558,14 +1485,28 @@ object Similarity {
     // overlap with any principal axis orthogonal to it and stalls
     var w = Array.fill(dim)(1.0 / math.sqrt(dim.toDouble))
     for (_ <- 0 until iters) {
-      val u = Array.tabulate(dim)(i =>
-        (0 until dim).foldLeft(0.0)((a, j) => a + cm(i)(j) * w(j)))
-      val nrm = math.sqrt((0 until dim).foldLeft(0.0)((a, i) => a + u(i) * u(i)))
+      val u = matVec(cm, w)
+      val nrm = math.sqrt(dotD(u, u))
       require(nrm > 0.0, "covariance is identically zero — no principal axis")
       w = u.map(_ / nrm)
     }
     w
   }
+
+  /** The driver-side `C·w` product: one [[dotD]] fold per row. */
+  private def matVec(cm: Array[Array[Double]], w: Array[Double]): Array[Double] =
+    cm.map(dotD(_, w))
+
+  /** A vector column's projection `v·w − μ·w` on a literal axis `w`:
+    * the codegen'd in-order fold, minus the driver-side [[dotD]]. */
+  private def projection(vec: Column, mu: Array[Double],
+                         w: Array[Double]): Column =
+    graft.functions.VectorExprs.dot_fold(vec, literalArray(w)) -
+      lit(dotD(mu, w))
+
+  /** A literal `array<double>` column. */
+  private def literalArray(xs: Array[Double]): Column =
+    array(xs.toIndexedSeq.map(lit): _*)
 
   /** Top-`nComp` principal axes by DEFLATION: pay the exact moment pass
     * ONCE, then per component run the power iteration and subtract the
@@ -1593,9 +1534,7 @@ object Similarity {
     val lambdas = new Array[Double](nComp)
     for (c <- 0 until nComp) {
       val w = powerIterate(cm, dim, iters)
-      val cw = Array.tabulate(dim)(i =>
-        (0 until dim).foldLeft(0.0)((a, j) => a + cm(i)(j) * w(j)))
-      val lambda = (0 until dim).foldLeft(0.0)((a, i) => a + w(i) * cw(i))
+      val lambda = dotD(w, matVec(cm, w))
       axes(c) = w
       lambdas(c) = lambda
       if (c + 1 < nComp)
@@ -1606,7 +1545,8 @@ object Similarity {
 
   /** Per-vector projections onto the top `nComp` deflated axes —
     * (id, pc1..pcK), each a zero-shuffle literal fold `v·w_c − μ·w_c`
-    * (the [[pcaTopComponent]] shape per component), rounded to 6 dp. */
+    * ([[projection]]), rounded to 6 dp. [[pcaTopComponent]] is its
+    * `nComp = 1` case. */
   def pcaProjectTopK(embeddings: DataFrame, nComp: Int = 3, dim: Int = 64,
                      iters: Int = 20, idCol: String = "vec_id",
                      vecCol: String = "embedding",
@@ -1615,10 +1555,7 @@ object Similarity {
     val (mu, axes, _) =
       pcaTopAxes(embeddings, nComp, dim, iters, vecCol, moments)
     val cols = (0 until nComp).map { c =>
-      val w = axes(c)
-      val muw = (0 until dim).foldLeft(0.0)((a, i) => a + mu(i) * w(i))
-      round(graft.functions.VectorExprs.dot_fold(col(vecCol),
-        array(w.toIndexedSeq.map(lit): _*)) - lit(muw), 6).as(s"pc${c + 1}")
+      round(projection(col(vecCol), mu, axes(c)), 6).as(s"pc${c + 1}")
     }
     embeddings.select((col(idCol) +: cols): _*)
   }
@@ -1634,11 +1571,9 @@ object Similarity {
                         vecCol: String = "embedding",
                         moments: Option[(Array[Array[Double]], Array[Double])] = None)
       : DataFrame = {
-    val (cm, _) = moments.getOrElse(pcaMoments(embeddings, dim, vecCol))
-    val w = powerIterate(cm, dim, iters)
-    val cw = Array.tabulate(dim)(i =>
-      (0 until dim).foldLeft(0.0)((a, j) => a + cm(i)(j) * w(j)))
-    val lambda = (0 until dim).foldLeft(0.0)((a, i) => a + w(i) * cw(i))
+    val mom = moments.getOrElse(pcaMoments(embeddings, dim, vecCol))
+    val lambda = pcaTopAxes(embeddings, 1, dim, iters, vecCol, Some(mom))._3(0)
+    val cm = mom._1
     val trace = (0 until dim).foldLeft(0.0)((a, i) => a + cm(i)(i))
     embeddings.sparkSession.range(1).select(
       round(lit(lambda), 6).as("lambda"),

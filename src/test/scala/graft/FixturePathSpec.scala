@@ -13,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class FixturePathSpec extends AnyFunSuite {
   private val absFixture = "\"/[^\"]*/src/test/resources/".r
 
-  /** `file:line` of every main-source line that `bad` matches. */
-  private def offendingLines(bad: String => Boolean): List[String] = {
-    val root = Paths.get("src/main/scala")
+  /** `file:line` of every line under `dir` that `bad` matches. */
+  private def offendingLines(bad: String => Boolean,
+                             dir: String = "src/main/scala"): List[String] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root))
     val files = Files.walk(root)
     try files.iterator.asScala
@@ -38,9 +39,17 @@ class FixturePathSpec extends AnyFunSuite {
   // grep treat the whole file as binary, so text search over it silently
   // finds nothing; write such characters as escapes. Lines are split on
   // LF and CR already, so only tab is allowed here.
+  private def isControl(line: String): Boolean =
+    line.exists(c => Character.isISOControl(c) && c != '\t')
+
   test("no control character other than tab in src/main/scala") {
-    val offenders =
-      offendingLines(_.exists(c => Character.isISOControl(c) && c != '\t'))
+    val offenders = offendingLines(isControl)
+    assert(offenders.isEmpty,
+      s"write control characters as escapes: ${offenders.mkString(", ")}")
+  }
+
+  test("no control character other than tab in src/test/scala") {
+    val offenders = offendingLines(isControl, "src/test/scala")
     assert(offenders.isEmpty,
       s"write control characters as escapes: ${offenders.mkString(", ")}")
   }

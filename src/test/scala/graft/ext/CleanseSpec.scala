@@ -17,7 +17,7 @@ class CleanseSpec extends AnyFunSuite {
     // already-NFC text passes through untouched
     assert(norm("café") == "café")
     // tab, CR, LF, vertical tab, NBSP, DEL → spaces, runs collapsed, trimmed
-    assert(norm(" a\t\tb\r\ncd ef  g ") == "a b c d e f g")
+    assert(norm(" a\t\tb\r\nc\u000bd e\u007ff  g ") == "a b c d e f g")
     assert(norm("") == "")
     assert(norm("   \t  ") == "")
   }

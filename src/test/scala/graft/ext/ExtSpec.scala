@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
+import graft.TempDirs.withTempDir
 
 class ExtSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -185,8 +186,10 @@ class ExtSpec extends AnyFunSuite {
       ids.intersect(brute).size.toDouble / brute.size
     val firstK = Similarity.annIvf(df, q, 10, nCentroids = 4, nProbe = 1)
       .collect().map(_.getLong(0)).toSet
-    val trained = Similarity.annIvfTrained(df, q, 10, nCentroids = 4,
-      nProbe = 1, iters = 3).collect().map(_.getLong(0)).toSet
+    val centDf = Similarity.trainIvfCentroids(df, 4, 3).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }.toSeq.toDF("cid", "cvec")
+    val trained = Similarity.ivfQuery(df, centDf, q, 10, nProbe = 1)
+      .collect().map(_.getLong(0)).toSet
     assert(recall(trained) >= recall(firstK),
       s"trained ${recall(trained)} < first-k ${recall(firstK)}")
     assert(recall(trained) == 1.0,
@@ -385,34 +388,36 @@ class ExtSpec extends AnyFunSuite {
     val df = (0L until 40L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val books = Similarity.pqCodebooks(df, m = 4, k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("pq_codes").toString
-    Similarity.pqEncode(df, books).write.mode("overwrite").parquet(dir)
-    val stored = spark.read.parquet(dir)
-    val q = Array.fill(8)(rnd.nextGaussian())
-    val dsub = 2
-    val tables = books.indices.map { s =>
-      val qs = q.slice(s * dsub, (s + 1) * dsub)
-      val qq = qs.foldLeft(0.0)((a, v) => a + v * v)
-      books(s).toSeq.map { c =>
-        val qc = qs.indices.foldLeft(0.0)((a, i) => a + qs(i) * c(i))
-        val cc = c.foldLeft(0.0)((a, v) => a + v * v)
-        qq - 2.0 * qc + cc
+    withTempDir("pq_codes") { tmp =>
+      val dir = tmp.toString
+      Similarity.pqEncode(df, books).write.mode("overwrite").parquet(dir)
+      val stored = spark.read.parquet(dir)
+      val q = Array.fill(8)(rnd.nextGaussian())
+      val dsub = 2
+      val tables = books.indices.map { s =>
+        val qs = q.slice(s * dsub, (s + 1) * dsub)
+        val qq = qs.foldLeft(0.0)((a, v) => a + v * v)
+        books(s).toSeq.map { c =>
+          val qc = qs.indices.foldLeft(0.0)((a, i) => a + qs(i) * c(i))
+          val cc = c.foldLeft(0.0)((a, v) => a + v * v)
+          qq - 2.0 * qc + cc
+        }
       }
+      val adistStored = books.indices.map { s =>
+        element_at(typedLit(tables(s)), col(s"code_$s") + 1)
+      }.reduce(_ + _)
+      val candStored = stored.select(col("vec_id"), adistStored.as("adist"))
+        .orderBy(col("adist"), col("vec_id")).limit(10)
+        .join(df, "vec_id")
+        .select(col("vec_id"),
+          Similarity.cosineLiteral(col("embedding"), q).as("cos"))
+        .orderBy(desc("cos"), col("vec_id")).limit(5)
+        .collect().map(_.getLong(0)).toSeq
+      val inline = Similarity.annPqWithBooks(df, books, q, 5, rerank = 10)
+        .collect().map(_.getLong(0)).toSeq
+      assert(candStored == inline,
+        "stored-code retrieval must equal the inline encode path")
     }
-    val adistStored = books.indices.map { s =>
-      element_at(typedLit(tables(s)), col(s"code_$s") + 1)
-    }.reduce(_ + _)
-    val candStored = stored.select(col("vec_id"), adistStored.as("adist"))
-      .orderBy(col("adist"), col("vec_id")).limit(10)
-      .join(df, "vec_id")
-      .select(col("vec_id"),
-        Similarity.cosineLiteral(col("embedding"), q).as("cos"))
-      .orderBy(desc("cos"), col("vec_id")).limit(5)
-      .collect().map(_.getLong(0)).toSeq
-    val inline = Similarity.annPqWithBooks(df, books, q, 5, rerank = 10)
-      .collect().map(_.getLong(0)).toSeq
-    assert(candStored == inline,
-      "stored-code retrieval must equal the inline encode path")
   }
 
   test("annPqStored: lifecycle query from persisted codes is bit-equal " +
@@ -422,23 +427,61 @@ class ExtSpec extends AnyFunSuite {
       (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val q = Array.fill(8)(rnd.nextGaussian())
-    val dir = java.nio.file.Files.createTempDirectory("pq_lifecycle").toString
-    val stored = Similarity.annPqStored(df, dir, q, 5, m = 4, nCent = 4,
-      rerank = 10).collect()
-    val inline = Similarity.annPq(df, q, 5, m = 4, nCent = 4, rerank = 10)
-      .collect()
-    assert(stored.length == inline.length)
+    withTempDir("pq_lifecycle") { tmp =>
+      val dir = tmp.toString
+      Similarity.annPqStoredBuild(df, dir, m = 4, nCent = 4)
+      val stored = Similarity.annPqStoredQuery(df, dir, q, 5, m = 4,
+        nCent = 4, rerank = 10).collect()
+      val inline = Similarity.annPq(df, q, 5, m = 4, nCent = 4, rerank = 10)
+        .collect()
+      assert(stored.length == inline.length)
+      stored.zip(inline).foreach { case (s, i) =>
+        assert(s.getLong(0) == i.getLong(0), "rank order diverged")
+        assert(s.getDouble(1) == i.getDouble(1), "adist not bit-equal")
+        assert(s.getDouble(2) == i.getDouble(2), "cos not bit-equal")
+      }
+      // the at-rest artifacts are really there, in the compressed shape
+      val codes = spark.read.parquet(s"$dir/codes")
+      assert(codes.columns.toSeq ==
+        Seq("vec_id", "code_0", "code_1", "code_2", "code_3"))
+      assert(codes.count() == 40)
+      assert(spark.read.parquet(s"$dir/books").count() == 16) // m=4 × k=4
+    }
+  }
+
+  test("stored binary ANN equals the inline cut row for row; stored " +
+    "binary and stored PQ answers do not move under repartition(7)") {
+    val rnd = new scala.util.Random(43)
+    val df = (0L until 60L).map(i =>
+      (i, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val q = Array.fill(64)(rnd.nextGaussian())
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // build each store from `emb` and answer the query from it
+    def binary(emb: org.apache.spark.sql.DataFrame) =
+      withTempDir("binary_store") { dir =>
+        Similarity.binaryAnnStoredBuild(emb, dir.toString)
+        Similarity.binaryAnnStoredQuery(emb, dir.toString, q, 5).collect()
+      }
+    def pq(emb: org.apache.spark.sql.DataFrame) =
+      withTempDir("pq_store") { dir =>
+        Similarity.annPqStoredBuild(emb, dir.toString, m = 8, nCent = 4)
+        Similarity.annPqStoredQuery(emb, dir.toString, q, 5, m = 8,
+          nCent = 4, rerank = 10).collect()
+      }
+    val stored = binary(df)
+    val inline = Similarity.binaryAnnTopK(df, q, 5).collect()
+    assert(stored.length == 5 && inline.length == 5)
     stored.zip(inline).foreach { case (s, i) =>
       assert(s.getLong(0) == i.getLong(0), "rank order diverged")
-      assert(s.getDouble(1) == i.getDouble(1), "adist not bit-equal")
-      assert(s.getDouble(2) == i.getDouble(2), "cos not bit-equal")
+      assert(s.getInt(1) == i.getInt(1), "ham differs")
+      assert(bits(s.getDouble(2)) == bits(i.getDouble(2)), "cos not bit-equal")
     }
-    // the at-rest artifacts are really there, in the compressed shape
-    val codes = spark.read.parquet(s"$dir/codes")
-    assert(codes.columns.toSeq ==
-      Seq("vec_id", "code_0", "code_1", "code_2", "code_3"))
-    assert(codes.count() == 40)
-    assert(spark.read.parquet(s"$dir/books").count() == 16) // m=4 × k=4
+    val re = df.repartition(7)
+    assert(binary(re).toSeq == stored.toSeq)
+    val pqStored = pq(df)
+    assert(pqStored.length == 5)
+    assert(pq(re).toSeq == pqStored.toSeq)
   }
 
   test("IVF list balance: counts partition the corpus, fractions sum to 1") {
@@ -2633,7 +2676,7 @@ class ExtSpec extends AnyFunSuite {
     val cktot = (if (n == 2) tn.size else conts(2).size).toLong
     rows.flatMap { case (id, _) =>
       val per = occ.collect { case ((i, g), m) if i == id => (g, m) }
-        .toSeq.sortBy(_._1.mkString(" "))
+        .toSeq.sortBy(_._1.mkString("\u0000"))
       if (per.isEmpty) None
       else {
         var acc = 0.0; var cnt = 0L
@@ -3013,30 +3056,31 @@ class ExtSpec extends AnyFunSuite {
     val vecs = (0L until 12L).map(i => (i, jit(a, i.toInt))) ++
                (12L until 40L).map(i => (i, jit(b, i.toInt)))
     val df = vecs.toDF("vec_id", "embedding")
-    val cen = Similarity.kmeansCensus(df, nCentroids = 4, iters = 2)
-      .collect()
+    val cents = Similarity.trainIvfCentroids(df, 4, 2)
+    val cen = Similarity.kmeansCensusOf(df, cents).collect()
     assert(cen.map(_.getAs[Long]("n_vecs")).sum == 40L)
     assert(cen.forall(r => r.getAs[Double]("mean_cos") <= 1.0 &&
       r.getAs[Double]("mean_cos") > 0.9)) // tight jitter -> high cohesion
     // the exemplar belongs to its own cluster
-    val cents = Similarity.trainIvfCentroids(df, 4, 2)
     val assign = Similarity.kmeansAssign(df, cents).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("cid")).toMap
     cen.foreach(r => assert(
       assign(r.getAs[Long]("exemplar_id")) == r.getAs[Long]("cid")))
     // balanced sample: every cluster contributes min(perCluster, size)
-    val samp = Similarity.kmeansBalancedSample(df, nCentroids = 4,
-      iters = 2, perCluster = 5).collect()
+    val samp = Similarity.kmeansBalancedSampleOf(df, cents, perCluster = 5)
+      .collect()
       .groupBy(_.getAs[Long]("cid")).map { case (c, rs) => c -> rs.length }
     val sizes = cen.map(r => r.getAs[Long]("cid") ->
       r.getAs[Long]("n_vecs")).toMap
     samp.foreach { case (c, n) => assert(n == math.min(5L, sizes(c))) }
     assert(samp.keySet == sizes.keySet)
     // partitioning-invariant
-    val samp2 = Similarity.kmeansBalancedSample(df.repartition(7),
-      nCentroids = 4, iters = 2, perCluster = 5)
+    val re = df.repartition(7)
+    val samp2 = Similarity.kmeansBalancedSampleOf(re,
+      Similarity.trainIvfCentroids(re, 4, 2), perCluster = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(samp2 == Similarity.kmeansBalancedSample(df, 4, 2, 5)
+    assert(samp2 == Similarity.kmeansBalancedSampleOf(df,
+      Similarity.trainIvfCentroids(df, 4, 2), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
   }
 

@@ -81,8 +81,8 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("whitespace collapse uses the RE2 class: vertical tab is NOT whitespace") {
-    val e = Html.extract("<body>a  b   \t\n c</body>")
-    assert(e.text == "a  b c")
+    val e = Html.extract("<body>a \u000b b   \t\n c</body>")
+    assert(e.text == "a \u000b b c")
   }
 
   test("decodeEntitiesCol: named core set, one pass, numeric passes through") {

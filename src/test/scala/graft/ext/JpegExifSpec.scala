@@ -81,4 +81,31 @@ class JpegExifSpec extends AnyFunSuite {
     val torn = ok.take(ok.length / 2)
     assert(JpegExif.probe(torn).isDefined)
   }
+
+  test("image passes over jpegFromDocs payloads: an undecodable JPEG " +
+    "falls back to the stub, drops or is counted, never fails the job") {
+    val s = spark
+    import s.implicits._
+    val media = Multimodal.jpegFromDocs((1L to 12L).toDF("doc_id"))
+    val payloads = media.select("media_id", "payload").collect()
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+    val bad = payloads.collect {
+      case (id, p) if Multimodal.ImageCodec.decode(p).isEmpty => id
+    }.toSet
+    // the progressive structural JPEGs are what ImageIO rejects
+    assert(bad.nonEmpty && bad.size < payloads.size)
+    // extractFeatures: one row per payload, the byte histogram on a miss
+    val feats = Multimodal.extractFeatures(media).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    assert(feats.keySet == payloads.keySet)
+    bad.foreach(id => assert(
+      feats(id) == Multimodal.FakeCodec.decodeFeatures(payloads(id)).toSeq))
+    // imageHashes: the undecodable rows drop
+    assert(Multimodal.imageHashes(media).collect().map(_.getLong(0)).toSet ==
+      payloads.keySet -- bad)
+    // contentProfile: every row counted, the undecodable ones undecoded
+    val prof = Multimodal.contentProfile(media).collect()
+    assert(prof.map(_.getAs[Long]("n")).sum == payloads.size)
+    assert(prof.map(_.getAs[Long]("n_decoded")).sum == payloads.size - bad.size)
+  }
 }

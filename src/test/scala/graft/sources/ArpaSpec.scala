@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
+import graft.TempDirs.withTempDir
 
 class ArpaSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -60,21 +61,22 @@ class ArpaSpec extends AnyFunSuite {
       (1L, "the cat sat on the mat the cat ran"),
       (2L, "a dog sat on a log"),
       (3L, "the cat sat on the log")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("arpa_spec")
-      .resolve("m.arpa").toString
-    Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(docs, order = 2))
-    val m = Arpa.read(path)
-    // the streamed write and the driver render agree byte for byte
-    assert(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8) == Arpa.render(m))
-    val stored = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val inline = graft.ext.TextOps.knScore(docs, 2)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    inline.foreach { case (id, v) =>
-      assert(math.abs(stored(id) - v) / v < 1e-6,
-        s"doc $id stored ${stored(id)} vs inline $v")
+    withTempDir("arpa_spec") { tmp =>
+      val path = tmp.resolve("m.arpa").toString
+      Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(docs, order = 2))
+      val m = Arpa.read(path)
+      // the streamed write and the driver render agree byte for byte
+      assert(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(path)),
+        java.nio.charset.StandardCharsets.UTF_8) == Arpa.render(m))
+      val stored = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val inline = graft.ext.TextOps.knScore(docs, 2)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      inline.foreach { case (id, v) =>
+        assert(math.abs(stored(id) - v) / v < 1e-6,
+          s"doc $id stored ${stored(id)} vs inline $v")
+      }
     }
   }
 
@@ -84,21 +86,22 @@ class ArpaSpec extends AnyFunSuite {
     val train = Seq(
       (1L, "the cat sat"), (2L, "the dog sat"), (3L, "a cat ran"))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("arpa_spec2")
-      .resolve("m.arpa").toString
-    Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(train, order = 2))
-    val m = Arpa.read(path)
-    // "dog ran": both words in vocab, bigram unseen -> backoff branch
-    val held = Seq((9L, "dog ran"), (10L, "dog zzz"))
-      .toDF("doc_id", "text")
-    val got = graft.ext.TextOps.knScoreStoredArpa(spark, held, path)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val expected = 1.0 / Arpa.q9(
-      math.pow(10.0, m.unigrams("dog")._2 + m.unigrams("ran")._1))
-    assert(math.abs(got(9L) - expected) < 1e-9,
-      s"backoff score ${got(9L)} vs $expected")
-    // unseen w2 falls to the -99 zeroprob -> enormous inverse
-    assert(got(10L) > 1e9)
+    withTempDir("arpa_spec2") { tmp =>
+      val path = tmp.resolve("m.arpa").toString
+      Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(train, order = 2))
+      val m = Arpa.read(path)
+      // "dog ran": both words in vocab, bigram unseen -> backoff branch
+      val held = Seq((9L, "dog ran"), (10L, "dog zzz"))
+        .toDF("doc_id", "text")
+      val got = graft.ext.TextOps.knScoreStoredArpa(spark, held, path)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val expected = 1.0 / Arpa.q9(
+        math.pow(10.0, m.unigrams("dog")._2 + m.unigrams("ran")._1))
+      assert(math.abs(got(9L) - expected) < 1e-9,
+        s"backoff score ${got(9L)} vs $expected")
+      // unseen w2 falls to the -99 zeroprob -> enormous inverse
+      assert(got(10L) > 1e9)
+    }
   }
 
   test("order-5 lifecycle: distributed write round-trips byte-" +
@@ -110,36 +113,37 @@ class ArpaSpec extends AnyFunSuite {
       (2L, "a dog sat on a log and a dog ran off a log"),
       (3L, "the cat sat on the log and the dog sat on the mat"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("arpa_spec5")
-    val path = dir.resolve("m.arpa").toString
-    Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(docs, order = 5))
-    val m = Arpa.read(path)
-    assert(m.order == 5)
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path))
-    assert(new String(bytes,
-      java.nio.charset.StandardCharsets.UTF_8) == Arpa.render(m))
-    // write the parsed model back through the driver path: identical
-    val path2 = dir.resolve("m2.arpa").toString
-    Arpa.write(path2, m)
-    assert(java.util.Arrays.equals(bytes,
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path2))))
-    // stored score vs the inline order-5 recursion: equal within the
-    // 9-dp artifact quantization
-    val stored = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val inline = graft.ext.TextOps.knScore(docs, order = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    inline.foreach { case (id, v) =>
-      assert(math.abs(stored(id) - v) / v < 1e-6,
-        s"doc $id stored ${stored(id)} vs inline $v")
-    }
-    // every level-5 entry covers an observed 5-gram (no zeroprob rows
-    // at the top), and every context of a 5-gram has a level-4 entry
-    // carrying its backoff weight
-    assert(m.grams(4).values.forall(_._1 > -99.0))
-    m.grams(4).keys.foreach { g =>
-      assert(m.grams(3).contains(g.take(4)), s"missing context ${g.take(4)}")
+    withTempDir("arpa_spec5") { dir =>
+      val path = dir.resolve("m.arpa").toString
+      Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(docs, order = 5))
+      val m = Arpa.read(path)
+      assert(m.order == 5)
+      val bytes = java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(path))
+      assert(new String(bytes,
+        java.nio.charset.StandardCharsets.UTF_8) == Arpa.render(m))
+      // write the parsed model back through the driver path: identical
+      val path2 = dir.resolve("m2.arpa").toString
+      Arpa.write(path2, m)
+      assert(java.util.Arrays.equals(bytes,
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path2))))
+      // stored score vs the inline order-5 recursion: equal within the
+      // 9-dp artifact quantization
+      val stored = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val inline = graft.ext.TextOps.knScore(docs, order = 5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      inline.foreach { case (id, v) =>
+        assert(math.abs(stored(id) - v) / v < 1e-6,
+          s"doc $id stored ${stored(id)} vs inline $v")
+      }
+      // every level-5 entry covers an observed 5-gram (no zeroprob rows
+      // at the top), and every context of a 5-gram has a level-4 entry
+      // carrying its backoff weight
+      assert(m.grams(4).values.forall(_._1 > -99.0))
+      m.grams(4).keys.foreach { g =>
+        assert(m.grams(3).contains(g.take(4)), s"missing context ${g.take(4)}")
+      }
     }
   }
 
@@ -157,23 +161,24 @@ class ArpaSpec extends AnyFunSuite {
     val train = Seq(
       (1L, "q r s t u"), (2L, "z x r y w"), (3L, "m n q p o"))
       .toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("arpa_ctx")
-      .resolve("m.arpa").toString
-    Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(train, order = 3))
-    val m = Arpa.read(path)
-    val lpQR = m.grams(1)(Vector("q", "r"))._1
-    assert(lpQR > -99.0 && lpQR < 0.0,
-      s"context-only bigram (q,r) should carry a genuine lp, got $lpQR")
-    // held-out "x q r": the trigram (x,q,r) is unseen, the context
-    // (x,q) is unstored (bow 1), so the walk must terminate exactly at
-    // the stored (q,r) entry -> score = 1 / 10^lp(q,r)
-    val held = Seq((9L, "x q r")).toDF("doc_id", "text")
-    val got = graft.ext.TextOps.knScoreStoredArpa(spark, held, path)
-      .collect().head.getDouble(2)
-    val expected = 1.0 / Arpa.q9(math.pow(10.0, lpQR))
-    assert(math.abs(got - expected) / expected < 1e-9,
-      s"held-out walk scored $got, expected $expected")
-    assert(got < 1e9, "a -99 placeholder would blow the inverse up")
+    withTempDir("arpa_ctx") { tmp =>
+      val path = tmp.resolve("m.arpa").toString
+      Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(train, order = 3))
+      val m = Arpa.read(path)
+      val lpQR = m.grams(1)(Vector("q", "r"))._1
+      assert(lpQR > -99.0 && lpQR < 0.0,
+        s"context-only bigram (q,r) should carry a genuine lp, got $lpQR")
+      // held-out "x q r": the trigram (x,q,r) is unseen, the context
+      // (x,q) is unstored (bow 1), so the walk must terminate exactly at
+      // the stored (q,r) entry -> score = 1 / 10^lp(q,r)
+      val held = Seq((9L, "x q r")).toDF("doc_id", "text")
+      val got = graft.ext.TextOps.knScoreStoredArpa(spark, held, path)
+        .collect().head.getDouble(2)
+      val expected = 1.0 / Arpa.q9(math.pow(10.0, lpQR))
+      assert(math.abs(got - expected) / expected < 1e-9,
+        s"held-out walk scored $got, expected $expected")
+      assert(got < 1e9, "a -99 placeholder would blow the inverse up")
+    }
   }
 
   test("count pruning: order-5 fixture round-trips, closure holds, " +
@@ -188,56 +193,57 @@ class ArpaSpec extends AnyFunSuite {
     val full = graft.ext.TextOps.knArpaLevels(docs, order = 5)
     val pruned = graft.ext.TextOps.knArpaLevels(docs, order = 5,
       prune = Seq(1, 1, 2, 2, 2))
-    val dir = java.nio.file.Files.createTempDirectory("arpa_prune")
-    val path = dir.resolve("m.arpa").toString
-    Arpa.writeLevels(path, pruned)
-    val m = Arpa.read(path)
-    assert(m.order == 5)
-    // round trip: streamed write == driver render of the parsed model
-    assert(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8) == Arpa.render(m))
-    // pruning bit: the top level shrank (singleton 5-grams dropped)
-    assert(m.grams(4).size < full(4).count(),
-      "prune=2 at the top level should drop singleton 5-grams")
-    assert(m.grams(4).nonEmpty, "repeated 5-grams must survive")
-    // ARPA validity closure: every level-k entry's context and suffix
-    // are stored one level down (context carries the bow, the walk
-    // lands on the suffix)
-    for (k <- 2 to 5; g <- m.grams(k - 1).keys) {
-      assert(m.grams(k - 2).contains(g.init),
-        s"missing context ${g.init} of level-$k $g")
-      assert(m.grams(k - 2).contains(g.tail),
-        s"missing suffix ${g.tail} of level-$k $g")
-    }
-    // renormalization: for every context of kept level-(k+1) grams,
-    // bow == (1 - sum kept quantized p) / (1 - sum kept lower p),
-    // both sums over exact decimals (the engine's decimal route)
-    def q9(x: Double) = Arpa.q9(x)
-    for (k <- 1 to 4) {
-      val up = m.grams(k).toSeq
-      val byCtx = up.groupBy(_._1.init)
-      byCtx.foreach { case (ctx, entries) =>
-        val shi = entries.map { case (_, (lp, _)) =>
-          BigDecimal(q9(math.pow(10.0, lp))) }.sum
-        val slo = entries.map { case (g, _) =>
-          BigDecimal(q9(math.pow(10.0, m.grams(k - 1)(g.tail)._1))) }.sum
-        val stored = m.grams(k - 1)(ctx)._2
-        if (shi < 1 && slo < 1) {
-          val want = q9(math.log10(
-            ((BigDecimal(1) - shi) / (BigDecimal(1) - slo)).toDouble))
-          assert(math.abs(stored - want) < 2e-9,
-            s"level-$k ctx $ctx bow $stored, want $want")
-        } else assert(stored == 0.0,
-          s"degenerate ctx $ctx must clamp to bow 0")
+    withTempDir("arpa_prune") { dir =>
+      val path = dir.resolve("m.arpa").toString
+      Arpa.writeLevels(path, pruned)
+      val m = Arpa.read(path)
+      assert(m.order == 5)
+      // round trip: streamed write == driver render of the parsed model
+      assert(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(path)),
+        java.nio.charset.StandardCharsets.UTF_8) == Arpa.render(m))
+      // pruning bit: the top level shrank (singleton 5-grams dropped)
+      assert(m.grams(4).size < full(4).count(),
+        "prune=2 at the top level should drop singleton 5-grams")
+      assert(m.grams(4).nonEmpty, "repeated 5-grams must survive")
+      // ARPA validity closure: every level-k entry's context and suffix
+      // are stored one level down (context carries the bow, the walk
+      // lands on the suffix)
+      for (k <- 2 to 5; g <- m.grams(k - 1).keys) {
+        assert(m.grams(k - 2).contains(g.init),
+          s"missing context ${g.init} of level-$k $g")
+        assert(m.grams(k - 2).contains(g.tail),
+          s"missing suffix ${g.tail} of level-$k $g")
       }
+      // renormalization: for every context of kept level-(k+1) grams,
+      // bow == (1 - sum kept quantized p) / (1 - sum kept lower p),
+      // both sums over exact decimals (the engine's decimal route)
+      def q9(x: Double) = Arpa.q9(x)
+      for (k <- 1 to 4) {
+        val up = m.grams(k).toSeq
+        val byCtx = up.groupBy(_._1.init)
+        byCtx.foreach { case (ctx, entries) =>
+          val shi = entries.map { case (_, (lp, _)) =>
+            BigDecimal(q9(math.pow(10.0, lp))) }.sum
+          val slo = entries.map { case (g, _) =>
+            BigDecimal(q9(math.pow(10.0, m.grams(k - 1)(g.tail)._1))) }.sum
+          val stored = m.grams(k - 1)(ctx)._2
+          if (shi < 1 && slo < 1) {
+            val want = q9(math.log10(
+              ((BigDecimal(1) - shi) / (BigDecimal(1) - slo)).toDouble))
+            assert(math.abs(stored - want) < 2e-9,
+              s"level-$k ctx $ctx bow $stored, want $want")
+          } else assert(stored == 0.0,
+            s"degenerate ctx $ctx must clamp to bow 0")
+        }
+      }
+      // the pruned model still scores its training corpus: backoff walks
+      // through pruned grams land on genuine entries, never a blowup
+      val got = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(got.size == 4)
+      got.values.foreach(v => assert(v > 0 && v < 1e9, s"score $v"))
     }
-    // the pruned model still scores its training corpus: backoff walks
-    // through pruned grams land on genuine entries, never a blowup
-    val got = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(got.size == 4)
-    got.values.foreach(v => assert(v > 0 && v < 1e9, s"score $v"))
   }
 
   test("capped + pruned model: <unk> mapping at score time routes " +
@@ -248,21 +254,22 @@ class ArpaSpec extends AnyFunSuite {
       (2L, "beta gamma delta beta gamma delta beta gamma"),
       (3L, "one two three four five six seven eight nine"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("arpa_capprune")
-    val path = dir.resolve("m.arpa").toString
-    Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(docs, order = 3,
-      vocabSize = 4, prune = Seq(1, 1, 2)))
-    val m = Arpa.read(path)
-    assert(m.grams(0).contains(Vector("<unk>")))
-    // every stored word is either kept vocabulary or <unk>
-    assert(m.grams(2).keys.flatten.toSet.subsetOf(
-      m.grams(0).keys.map(_.head).toSet))
-    val got = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(got.size == 3)
-    // doc 3 is pure Zipf tail -> all <unk>; with mapping its grams hit
-    // stored entries, so the inverse-probability mean stays bounded
-    got.values.foreach(v => assert(v > 0 && v < 1e9, s"score $v"))
+    withTempDir("arpa_capprune") { dir =>
+      val path = dir.resolve("m.arpa").toString
+      Arpa.writeLevels(path, graft.ext.TextOps.knArpaLevels(docs, order = 3,
+        vocabSize = 4, prune = Seq(1, 1, 2)))
+      val m = Arpa.read(path)
+      assert(m.grams(0).contains(Vector("<unk>")))
+      // every stored word is either kept vocabulary or <unk>
+      assert(m.grams(2).keys.flatten.toSet.subsetOf(
+        m.grams(0).keys.map(_.head).toSet))
+      val got = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(got.size == 3)
+      // doc 3 is pure Zipf tail -> all <unk>; with mapping its grams hit
+      // stored entries, so the inverse-probability mean stays bounded
+      got.values.foreach(v => assert(v > 0 && v < 1e9, s"score $v"))
+    }
   }
 
   test("log-domain stored scorer: h10 equals the hand-walked mean of " +
@@ -278,50 +285,51 @@ class ArpaSpec extends AnyFunSuite {
       (3L, "one two three four five six seven eight nine"),
       (4L, "red green blue red green blue red green blue"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("arpa_ml")
-    val tPath = dir.resolve("t.arpa").toString
-    val gPath = dir.resolve("g.arpa").toString
-    Arpa.writeLevels(tPath,
-      graft.ext.TextOps.knArpaLevels(target, order = 2, vocabSize = 8))
-    Arpa.writeLevels(gPath,
-      graft.ext.TextOps.knArpaLevels(general, order = 2, vocabSize = 8))
-    val m = Arpa.read(tPath)
-    // hand-walk doc 1 under the target model: per-bigram log is the
-    // stored lp on a hit, bow(w1) + lp(w2) on a miss; OOV words map
-    // to <unk> first — the scaled-integer mean must match exactly
-    val got = graft.ext.TextOps.knCrossEntropyStoredArpa(
-        spark, general, tPath)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    def vocabMap(w: String) =
-      if (m.grams(0).contains(Vector(w))) w else "<unk>"
-    def walk(text: String): Double = {
-      val ws = text.split(" ").map(vocabMap).toVector
-      val ts = ws.sliding(2).toSeq
-      val s = ts.map { bg =>
-        val lg = m.grams(1).get(bg) match {
-          case Some((lp, _)) => lp
-          case None =>
-            m.grams(0).get(Vector(bg(0))).map(_._2).getOrElse(0.0) +
-              m.grams(0).get(Vector(bg(1))).map(_._1).getOrElse(-99.0)
-        }
-        math.round(lg * 1e9)
-      }.sum
-      -s.toDouble / ts.size / 1e9
+    withTempDir("arpa_ml") { dir =>
+      val tPath = dir.resolve("t.arpa").toString
+      val gPath = dir.resolve("g.arpa").toString
+      Arpa.writeLevels(tPath,
+        graft.ext.TextOps.knArpaLevels(target, order = 2, vocabSize = 8))
+      Arpa.writeLevels(gPath,
+        graft.ext.TextOps.knArpaLevels(general, order = 2, vocabSize = 8))
+      val m = Arpa.read(tPath)
+      // hand-walk doc 1 under the target model: per-bigram log is the
+      // stored lp on a hit, bow(w1) + lp(w2) on a miss; OOV words map
+      // to <unk> first — the scaled-integer mean must match exactly
+      val got = graft.ext.TextOps.knCrossEntropyStoredArpa(
+          spark, general, tPath)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      def vocabMap(w: String) =
+        if (m.grams(0).contains(Vector(w))) w else "<unk>"
+      def walk(text: String): Double = {
+        val ws = text.split(" ").map(vocabMap).toVector
+        val ts = ws.sliding(2).toSeq
+        val s = ts.map { bg =>
+          val lg = m.grams(1).get(bg) match {
+            case Some((lp, _)) => lp
+            case None =>
+              m.grams(0).get(Vector(bg(0))).map(_._2).getOrElse(0.0) +
+                m.grams(0).get(Vector(bg(1))).map(_._1).getOrElse(-99.0)
+          }
+          math.round(lg * 1e9)
+        }.sum
+        -s.toDouble / ts.size / 1e9
+      }
+      Seq(1L, 3L).foreach { id =>
+        val text = general.filter(col("doc_id") === id)
+          .head().getString(1)
+        assert(got(id) == walk(text), s"doc $id: ${got(id)} vs hand walk")
+      }
+      // in-domain docs carry LOWER target cross-entropy
+      assert(got(1L) < got(3L) && got(2L) < got(4L))
+      val sel = graft.ext.TextOps.mooreLewisSelect(
+          spark, general, tPath, gPath, selectK = 2)
+        .collect().map(r => r.getLong(0) ->
+          ((r.getDouble(4), r.getBoolean(5)))).toMap
+      assert(sel(1L)._2 && sel(2L)._2, s"expected 1,2 selected: $sel")
+      assert(!sel(3L)._2 && !sel(4L)._2)
+      assert(sel(1L)._1 > sel(3L)._1)
     }
-    Seq(1L, 3L).foreach { id =>
-      val text = general.filter(col("doc_id") === id)
-        .head().getString(1)
-      assert(got(id) == walk(text), s"doc $id: ${got(id)} vs hand walk")
-    }
-    // in-domain docs carry LOWER target cross-entropy
-    assert(got(1L) < got(3L) && got(2L) < got(4L))
-    val sel = graft.ext.TextOps.mooreLewisSelect(
-        spark, general, tPath, gPath, selectK = 2)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getDouble(4), r.getBoolean(5)))).toMap
-    assert(sel(1L)._2 && sel(2L)._2, s"expected 1,2 selected: $sel")
-    assert(!sel(3L)._2 && !sel(4L)._2)
-    assert(sel(1L)._1 > sel(3L)._1)
   }
 
   test("mixture scorer: self-mixture equals the single-model score, " +
@@ -336,39 +344,40 @@ class ArpaSpec extends AnyFunSuite {
       (2L, "beta gamma alpha beta gamma alpha beta gamma"),
       (3L, "one two three four five six seven eight nine"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("arpa_mix")
-    val tPath = dir.resolve("t.arpa").toString
-    val gPath = dir.resolve("g.arpa").toString
-    Arpa.writeLevels(tPath,
-      graft.ext.TextOps.knArpaLevels(target, order = 2, vocabSize = 8))
-    Arpa.writeLevels(gPath,
-      graft.ext.TextOps.knArpaLevels(general, order = 2, vocabSize = 8))
-    // λ·p + (1−λ)·p = p: the self-mixture reproduces the single-model
-    // inverse-probability score (fold order differs, so 1e-9 rel)
-    val self = graft.ext.TextOps.knMixtureScoreStoredArpa(
-        spark, general, tPath, tPath, lambda = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val single = graft.ext.TextOps.knScoreStoredArpa(
-        spark, general, tPath)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    single.foreach { case (id, v) =>
-      assert(math.abs(self(id) - v) / v < 1e-9,
-        s"doc $id self-mix ${self(id)} vs single $v")
+    withTempDir("arpa_mix") { dir =>
+      val tPath = dir.resolve("t.arpa").toString
+      val gPath = dir.resolve("g.arpa").toString
+      Arpa.writeLevels(tPath,
+        graft.ext.TextOps.knArpaLevels(target, order = 2, vocabSize = 8))
+      Arpa.writeLevels(gPath,
+        graft.ext.TextOps.knArpaLevels(general, order = 2, vocabSize = 8))
+      // λ·p + (1−λ)·p = p: the self-mixture reproduces the single-model
+      // inverse-probability score (fold order differs, so 1e-9 rel)
+      val self = graft.ext.TextOps.knMixtureScoreStoredArpa(
+          spark, general, tPath, tPath, lambda = 0.5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val single = graft.ext.TextOps.knScoreStoredArpa(
+          spark, general, tPath)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      single.foreach { case (id, v) =>
+        assert(math.abs(self(id) - v) / v < 1e-9,
+          s"doc $id self-mix ${self(id)} vs single $v")
+      }
+      // convexity: 1/(λpA+(1−λ)pB) ≤ λ/pA + (1−λ)/pB per gram, so the
+      // mixture score is bounded by the blend of component scores
+      val mix = graft.ext.TextOps.knMixtureScoreStoredArpa(
+          spark, general, tPath, gPath, lambda = 0.5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      val sg = graft.ext.TextOps.knScoreStoredArpa(spark, general, gPath)
+        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      mix.foreach { case (id, v) =>
+        assert(v <= 0.5 * single(id) + 0.5 * sg(id) + 1e-6,
+          s"doc $id mixture $v above the convexity bound")
+      }
+      // the general-only doc 3 is rescued by the general component:
+      // strictly better than under the target model alone
+      assert(mix(3L) < single(3L))
     }
-    // convexity: 1/(λpA+(1−λ)pB) ≤ λ/pA + (1−λ)/pB per gram, so the
-    // mixture score is bounded by the blend of component scores
-    val mix = graft.ext.TextOps.knMixtureScoreStoredArpa(
-        spark, general, tPath, gPath, lambda = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val sg = graft.ext.TextOps.knScoreStoredArpa(spark, general, gPath)
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    mix.foreach { case (id, v) =>
-      assert(v <= 0.5 * single(id) + 0.5 * sg(id) + 1e-6,
-        s"doc $id mixture $v above the convexity bound")
-    }
-    // the general-only doc 3 is rescued by the general component:
-    // strictly better than under the target model alone
-    assert(mix(3L) < single(3L))
   }
 
   test("vocab cap: <unk> absorbs the Zipf tail ahead of the census " +
@@ -391,28 +400,30 @@ class ArpaSpec extends AnyFunSuite {
       .map(_.getSeq[String](0).head).toSet
     assert(words.contains("<unk>"))
     // the capped model still scores (backoff-safe end to end)
-    val dir = java.nio.file.Files.createTempDirectory("arpa_cap")
-    val path = dir.resolve("m.arpa").toString
-    Arpa.writeLevels(path, capped)
-    val got = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
-    assert(got.count() == 3)
+    withTempDir("arpa_cap") { dir =>
+      val path = dir.resolve("m.arpa").toString
+      Arpa.writeLevels(path, capped)
+      val got = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
+      assert(got.count() == 3)
+    }
   }
 
   test("read size guard: an artifact past MaxReadBytes fails loud " +
     "and names the distributed route") {
-    val dir = java.nio.file.Files.createTempDirectory("arpa_guard")
-    val path = dir.resolve("big.arpa")
-    // a sparse file trips Files.size without writing 256 MB
-    val ch = java.nio.channels.FileChannel.open(path,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    try {
-      ch.position(Arpa.MaxReadBytes)
-      ch.write(java.nio.ByteBuffer.wrap(Array[Byte]('x')))
-    } finally ch.close()
-    val e = intercept[IllegalArgumentException](Arpa.read(path.toString))
-    assert(e.getMessage.contains("readLevels"),
-      s"guard should point at the distributed route: ${e.getMessage}")
+    withTempDir("arpa_guard") { dir =>
+      val path = dir.resolve("big.arpa")
+      // a sparse file trips Files.size without writing 256 MB
+      val ch = java.nio.channels.FileChannel.open(path,
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.WRITE)
+      try {
+        ch.position(Arpa.MaxReadBytes)
+        ch.write(java.nio.ByteBuffer.wrap(Array[Byte]('x')))
+      } finally ch.close()
+      val e = intercept[IllegalArgumentException](Arpa.read(path.toString))
+      assert(e.getMessage.contains("readLevels"),
+        s"guard should point at the distributed route: ${e.getMessage}")
+    }
   }
 
   test("readLevels: the parquet sidecar holds exactly the parsed " +
@@ -424,51 +435,52 @@ class ArpaSpec extends AnyFunSuite {
       (2L, "a dog sat on a log and a dog ran off a log"),
       (3L, "the cat sat on the log and the dog sat on the mat"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("arpa_lvl")
-    val path = dir.resolve("m.arpa").toString
-    Arpa.writeLevels(path,
-      graft.ext.TextOps.knArpaLevels(docs, order = 3, vocabSize = 8))
-    val m = Arpa.read(path)
-    val lv = Arpa.readLevels(spark, path)
-    // sidecar rows == model rows, level by level, value for value
-    // (bow 0.0 = the format's omitted-field convention on both sides)
-    (1 to 3).foreach { k =>
-      val got = lv.filter(org.apache.spark.sql.functions.col("k") === k)
-        .collect()
-        .map(r => r.getAs[String]("key") ->
+    withTempDir("arpa_lvl") { dir =>
+      val path = dir.resolve("m.arpa").toString
+      Arpa.writeLevels(path,
+        graft.ext.TextOps.knArpaLevels(docs, order = 3, vocabSize = 8))
+      val m = Arpa.read(path)
+      val lv = Arpa.readLevels(spark, path)
+      // sidecar rows == model rows, level by level, value for value
+      // (bow 0.0 = the format's omitted-field convention on both sides)
+      (1 to 3).foreach { k =>
+        val got = lv.filter(org.apache.spark.sql.functions.col("k") === k)
+          .collect()
+          .map(r => r.getAs[String]("key") ->
+            ((r.getAs[Double]("lp"), r.getAs[Double]("bow")))).toMap
+        val want = m.grams(k - 1).map { case (g, v) => g.mkString(" ") -> v }
+        assert(got == want, s"level $k sidecar mismatch")
+      }
+      // sidecar is built once: a second call reads, never rewrites
+      val marker = java.nio.file.Paths.get(path + ".levels", "_SUCCESS")
+      val t0 = java.nio.file.Files.getLastModifiedTime(marker)
+      Arpa.readLevels(spark, path).count()
+      assert(java.nio.file.Files.getLastModifiedTime(marker) == t0)
+      // ... but a RETRAINED artifact (newer mtime) invalidates it: the
+      // sidecar is derived state and must track its source
+      Arpa.writeLevels(path,
+        graft.ext.TextOps.knArpaLevels(docs, order = 2, vocabSize = 4))
+      java.nio.file.Files.setLastModifiedTime(
+        java.nio.file.Paths.get(path),
+        java.nio.file.attribute.FileTime.fromMillis(
+          t0.toMillis + 5000))
+      val m2 = Arpa.read(path)
+      val lv2 = Arpa.readLevels(spark, path)
+      assert(lv2.agg(org.apache.spark.sql.functions.max(
+        org.apache.spark.sql.functions.col("k"))).head().getInt(0) == 2)
+      val got2 = lv2.filter(org.apache.spark.sql.functions.col("k") === 1)
+        .collect().map(r => r.getAs[String]("key") ->
           ((r.getAs[Double]("lp"), r.getAs[Double]("bow")))).toMap
-      val want = m.grams(k - 1).map { case (g, v) => g.mkString(" ") -> v }
-      assert(got == want, s"level $k sidecar mismatch")
+      assert(got2 == m2.grams(0).map { case (g, v) => g.mkString(" ") -> v },
+        "stale sidecar survived a retrain")
+      // route equivalence on a capped model (exercises the <unk> joins)
+      val a = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
+        .toMap
+      val b = graft.ext.TextOps.knScoreStoredArpaLevels(spark, docs, path)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
+        .toMap
+      assert(a == b, s"broadcast route $a vs distributed route $b")
     }
-    // sidecar is built once: a second call reads, never rewrites
-    val marker = java.nio.file.Paths.get(path + ".levels", "_SUCCESS")
-    val t0 = java.nio.file.Files.getLastModifiedTime(marker)
-    Arpa.readLevels(spark, path).count()
-    assert(java.nio.file.Files.getLastModifiedTime(marker) == t0)
-    // ... but a RETRAINED artifact (newer mtime) invalidates it: the
-    // sidecar is derived state and must track its source
-    Arpa.writeLevels(path,
-      graft.ext.TextOps.knArpaLevels(docs, order = 2, vocabSize = 4))
-    java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(path),
-      java.nio.file.attribute.FileTime.fromMillis(
-        t0.toMillis + 5000))
-    val m2 = Arpa.read(path)
-    val lv2 = Arpa.readLevels(spark, path)
-    assert(lv2.agg(org.apache.spark.sql.functions.max(
-      org.apache.spark.sql.functions.col("k"))).head().getInt(0) == 2)
-    val got2 = lv2.filter(org.apache.spark.sql.functions.col("k") === 1)
-      .collect().map(r => r.getAs[String]("key") ->
-        ((r.getAs[Double]("lp"), r.getAs[Double]("bow")))).toMap
-    assert(got2 == m2.grams(0).map { case (g, v) => g.mkString(" ") -> v },
-      "stale sidecar survived a retrain")
-    // route equivalence on a capped model (exercises the <unk> joins)
-    val a = graft.ext.TextOps.knScoreStoredArpa(spark, docs, path)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
-      .toMap
-    val b = graft.ext.TextOps.knScoreStoredArpaLevels(spark, docs, path)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
-      .toMap
-    assert(a == b, s"broadcast route $a vs distributed route $b")
   }
 }
