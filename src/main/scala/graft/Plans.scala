@@ -43,9 +43,11 @@ object Plans {
   }
 
   /** A plan with its run-dependent text masked, so two runs of the same
-    * code print the same bytes: the random suffix of a stored artifact's
-    * temp dir (`graft_pq_store_<…>`), the source line of an RDD's call
-    * site (`Similarity.scala:<n>`, it moves with any edit above it), and
+    * code print the same bytes, from any checkout: the checkout root in
+    * a checked-in fixture's path (`<checkout>/src/test/resources/…`), the
+    * random suffix of a stored artifact's temp dir
+    * (`graft_pq_store_<…>`), the source line of an RDD's call site
+    * (`Similarity.scala:<n>`, it moves with any edit above it), and
     * lambda class names and identity hashes (`Lambda@<…>`). Expression,
     * exchange-plan and RDD ids are session-wide counters whose values
     * depend on what ran before, so each is renumbered by first use in
@@ -53,6 +55,7 @@ object Plans {
     * reads which attribute. */
   private def masked(plan: String): String = {
     val fixed = plan
+      .replace(Paths.get("").toAbsolutePath.toString + "/", "<checkout>/")
       .replaceAll("(graft_[A-Za-z0-9_]+?_store_)[^/\\]\\s]+", "$1<…>")
       .replaceAll("(\\w+\\.scala):\\d+", "$1:<n>")
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")

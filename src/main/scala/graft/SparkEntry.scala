@@ -9110,18 +9110,21 @@ object SparkEntry {
     * messy base URL, with source/destination hosts and registered
     * domains. The explode sits BELOW the resolution project, so `url`
     * reaches [[ext.UrlOps.resolveRef]] as a bound attribute, not an
-    * inlined expression tree, and `dst_host` uses the one-reference
-    * [[ext.UrlOps.hostOfResolved]] chain — both keep whole-stage
-    * codegen linear in the expression size (the x107/x116 JIT lesson). */
-  private def linkGraph(s: SparkSession,
-                        d: String): org.apache.spark.sql.DataFrame =
+    * inlined expression tree (the x107/x116 JIT lesson). `dst_host` is
+    * [[ext.UrlOps.resolveHost]], not the host of `abs_url`: it never
+    * builds the path, so a consumer that keys on host or domain and
+    * prunes `abs_url` keeps its edge projection in whole-stage codegen
+    * (the path's dot-segment fold is a higher-order function, which
+    * takes the projection it sits in out of codegen). */
+  private[graft] def linkGraph(s: SparkSession,
+                               d: String): org.apache.spark.sql.DataFrame =
     t(s, d, "documents")
       .withColumn("url", expr(urlSqlExpr))
       .select(col("doc_id"), col("url"),
         explode(sequence(lit(0), lit(3))).as("link_i"))
       .withColumn("href", expr(hrefSqlExpr))
       .withColumn("abs_url", ext.UrlOps.resolveRef(col("url"), col("href")))
-      .withColumn("dst_host", ext.UrlOps.hostOfResolved(col("abs_url")))
+      .withColumn("dst_host", ext.UrlOps.resolveHost(col("url"), col("href")))
       .withColumn("src_domain",
         ext.UrlOps.registeredDomain(ext.UrlOps.hostOf(col("url"))))
       .withColumn("dst_domain",

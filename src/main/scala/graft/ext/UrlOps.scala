@@ -185,8 +185,12 @@ object UrlOps {
     * leading root), everything else — including the empty segments a
     * `//` run produces — appends verbatim; a trailing `.`/`..` leaves
     * a trailing slash, exactly the browser/`java.net.URI` behavior.
-    * One higher-order `aggregate` per row — no UDF, no serialization;
-    * HOFs evaluate outside codegen but keep the project narrow. */
+    * One higher-order `aggregate` per row — no UDF, no serialization,
+    * but a HOF cannot generate code: Spark evaluates it interpreted, and
+    * it takes the WHOLE fused projection it sits in (every column
+    * Catalyst inlines beside it) out of whole-stage codegen. Callers
+    * that key on host or domain never need the path: use
+    * [[resolveHost]], which parses no path. */
   private def removeDotSegments(p: Column): Column = {
     val segs = split(p, "/")
     val folded = aggregate(segs, array().cast("array<string>"),
@@ -219,50 +223,88 @@ object UrlOps {
     * path) — zero shuffle at any corpus size; the reference's serving
     * layer never resolves links (it emits absolute asset ids,
     * `index.html:241-250`), but a crawl frontier is BUILT from resolved
-    * hrefs, so this is the edge extractor for the link-graph tier. */
+    * hrefs, so this is the edge extractor for the link-graph tier. A
+    * caller that keys only on the host uses [[resolveHost]]. */
   def resolveRef(base: Column, ref: Column): Column = {
-    // Component extraction is deliberately FLAT — each part is one
-    // regexp_extract over the raw input, not a chain of substrings
-    // over previous parts. A nested parse cascade doubles the
-    // expression tree at every level (bTail embeds bRest twice, bPath
-    // embeds bTail twice, …), and composed into a downstream consumer
-    // it blew whole-stage codegen past Janino's 64 KB method limit
-    // (the x107/x116 JIT lesson, hit again here). One anchored regex
-    // per component keeps the tree linear; the patterns compile once
-    // per task.
-    val bScheme = regexp_extract(base, "^([^:/?#]+)://", 1)
-    val bAuth = regexp_extract(base, "^[^:/?#]+://([^/?#]*)", 1)
-    val bPath0 = regexp_extract(base, "^[^:/?#]+://[^/?#]*([^?#]*)", 1)
+    val bPath0 = pathOfUrl(base)
     val bPath = when(bPath0 === "", lit("/")).otherwise(bPath0)
-    val bQuery = regexp_extract(base, "^[^?#]*(\\?[^#]*)", 1)
-    val root = concat(bScheme, lit("://"), bAuth)
     val bDir = regexp_replace(bPath, "[^/]*$", "")
     // ref split: fragment carries through, query splits off the path
     val rFrag = regexp_extract(ref, "(#.*)", 1)
-    val rNoFrag = substring_index(ref, "#", 1)
     val rPath = regexp_extract(ref, "^([^?#]*)", 1)
-    val rQuery = regexp_extract(ref, "^[^?#]*(\\?[^#]*)", 1)
-    val refHasScheme = ref.rlike("^[^:/?#]+://")
-    // absolute + network-path forms share one parse of the full URL
-    val aFull = when(refHasScheme, rNoFrag)
-      .otherwise(concat(bScheme, lit(":"), rNoFrag))
-    val aScheme = regexp_extract(aFull, "^([^:/?#]+)://", 1)
-    val aAuth = regexp_extract(aFull, "^[^:/?#]+://([^/?#]*)", 1)
-    val aPath = regexp_extract(aFull, "^[^:/?#]+://[^/?#]*([^?#]*)", 1)
-    val aQuery = regexp_extract(aFull, "^[^?#]*(\\?[^#]*)", 1)
-    val absResolved = concat(aScheme, lit("://"), aAuth,
+    val rQuery = queryOfUrl(ref)
+    val (hasAuth, aFull) = absoluteForm(base, ref)
+    val aPath = pathOfUrl(aFull)
+    val absResolved = concat(originOf(aFull),
       when(aPath === "", lit("")).otherwise(removeDotSegments(aPath)),
-      aQuery)
+      queryOfUrl(aFull))
+    val root = originOf(base)
     val resolved =
-      when(refHasScheme || rNoFrag.startsWith("//"), absResolved)
+      when(hasAuth, absResolved)
         .when(rPath.startsWith("/"),
           concat(root, removeDotSegments(rPath), rQuery))
         .when(rPath === "",
           concat(root, bPath,
-            when(rQuery =!= "", rQuery).otherwise(bQuery)))
+            when(rQuery =!= "", rQuery).otherwise(queryOfUrl(base))))
         .otherwise(
           concat(root, removeDotSegments(concat(bDir, rPath)), rQuery))
     when(instr(base, "://") > 0, concat(resolved, rFrag)).otherwise(ref)
+  }
+
+  /** Host of the URL [[resolveRef]] resolves `ref` to — exactly
+    * `hostOfResolved(resolveRef(base, ref))`, nulls included — without
+    * resolving it. A resolved URL's host depends only on the origin
+    * (`scheme://authority`) it starts with: the ref's own when it has a
+    * scheme or is a `//` network path, the base's otherwise; a non-URL
+    * base fails open to the ref, as in [[resolveRef]]. Every path
+    * after the origin starts with `/`, `?` or `#`, where
+    * [[hostOfResolved]] stops reading, so it is never built — no
+    * [[removeDotSegments]] fold, and the projection stays in
+    * whole-stage codegen. */
+  def resolveHost(base: Column, ref: Column): Column = {
+    val (hasAuth, aFull) = absoluteForm(base, ref)
+    hostOfResolved(
+      when(instr(base, "://") > 0 && ref.isNotNull,
+        when(hasAuth, originOf(aFull)).otherwise(originOf(base)))
+        .otherwise(ref))
+  }
+
+  // Component extraction is deliberately FLAT — each part is one
+  // regexp_extract over the raw input, not a chain of substrings over
+  // previous parts. A nested parse cascade doubles the expression tree
+  // at every level (a tail embeds the rest twice, a path embeds the
+  // tail twice, …), and composed into a downstream consumer it blew
+  // whole-stage codegen past Janino's 64 KB method limit (the x107/x116
+  // JIT lesson, hit again in [[resolveRef]]). One anchored regex per
+  // component keeps the tree linear; the patterns compile once per
+  // task. The same four parse the base and the ref's absolute form.
+
+  /** Scheme of a URL (empty when it has none). */
+  private def schemeOf(u: Column): Column =
+    regexp_extract(u, "^([^:/?#]+)://", 1)
+
+  /** `scheme://authority` of a URL; `://` alone when it has none. */
+  private def originOf(u: Column): Column =
+    concat(schemeOf(u), lit("://"),
+      regexp_extract(u, "^[^:/?#]+://([^/?#]*)", 1))
+
+  /** Raw path of a URL (empty when it has none or is not a URL). */
+  private def pathOfUrl(u: Column): Column =
+    regexp_extract(u, "^[^:/?#]+://[^/?#]*([^?#]*)", 1)
+
+  /** `?query` of a URL or ref (empty when it has none). */
+  private def queryOfUrl(u: Column): Column =
+    regexp_extract(u, "^[^?#]*(\\?[^#]*)", 1)
+
+  /** Whether `ref` names its own authority (a scheme, or a `//`
+    * network path), and its absolute form without the fragment: the
+    * ref itself, or the base's scheme put before a network path. */
+  private def absoluteForm(base: Column, ref: Column): (Column, Column) = {
+    val rNoFrag = substring_index(ref, "#", 1)
+    val hasScheme = ref.rlike("^[^:/?#]+://")
+    (hasScheme || rNoFrag.startsWith("//"),
+      when(hasScheme, rNoFrag)
+        .otherwise(concat(schemeOf(base), lit(":"), rNoFrag)))
   }
 
   /** Host of a RESOLVED URL (a [[resolveRef]] output — `://` is

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -138,17 +140,35 @@ class PlanSpec extends AnyFunSuite {
 
   test("partitioned layout: date filter prunes partitions") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("prune").toString
-    Seq(("2025-01-01", "a", 1.0), ("2025-02-01", "b", 2.0))
-      .toDF("month", "band", "v")
-      .write.partitionBy("month", "band").parquet(s"$tmp/t")
-    val read = spark.read.parquet(s"$tmp/t").filter($"month" === "2025-01-01")
-    val scan = read.queryExecution.executedPlan.toString
-    // partition filters present on the scan node (directory-level pruning —
-    // inputFiles lists the unpruned relation, so assert via the plan + rows)
-    assert(scan.contains("PartitionFilters") &&
-           scan.contains("isnotnull(month"), s"no partition pruning:\n$scan")
-    assert(read.count() == 1)
+    TempDirs.withTempDir("prune") { tmp =>
+      Seq(("2025-01-01", "a", 1.0), ("2025-02-01", "b", 2.0))
+        .toDF("month", "band", "v")
+        .write.partitionBy("month", "band").parquet(s"$tmp/t")
+      val read = spark.read.parquet(s"$tmp/t").filter($"month" === "2025-01-01")
+      val scan = read.queryExecution.executedPlan.toString
+      // partition filters present on the scan node (directory-level pruning —
+      // inputFiles lists the unpruned relation, so assert via the plan + rows)
+      assert(scan.contains("PartitionFilters") &&
+             scan.contains("isnotnull(month"), s"no partition pruning:\n$scan")
+      assert(read.count() == 1)
+    }
+  }
+
+  test("x124 edge input: no interpreted expression, every projection " +
+      "inside whole-stage codegen") {
+    val df = SparkEntry.linkGraph(spark, sf).select("src_domain", "dst_domain")
+    val plan = df.queryExecution.executedPlan
+    val interpreted = PlanWalk.collect(plan) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect {
+        case e: HigherOrderFunction => e
+        case e: CodegenFallback => e
+      }))
+    assert(interpreted.isEmpty, s"interpreted: ${interpreted.map(_.prettyName)}\n$plan")
+    val projects = PlanWalk.collect(plan) { case p: ProjectExec => p }
+    val fused = PlanWalk.collect(plan) { case w: WholeStageCodegenExec => w }
+      .flatMap(_.child.collect { case p: ProjectExec => p })
+    assert(projects.nonEmpty && projects.forall(p => fused.exists(_ eq p)),
+      s"a projection runs outside whole-stage codegen:\n$plan")
   }
 
   test("j8: three chained broadcast joins, fact side shuffles only for the agg") {

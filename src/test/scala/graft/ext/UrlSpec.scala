@@ -2,6 +2,7 @@ package graft.ext
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SharedSpark
@@ -337,6 +338,41 @@ class UrlSpec extends AnyFunSuite {
     assert(Seq(("http://h?q=1", "g")).toDF("b", "r")
       .select(UrlOps.resolveRef(col("b"), col("r"))).head().getString(0)
       == "http://h/g")
+  }
+
+  test("resolveHost is hostOfResolved(resolveRef) on every adversarial pair") {
+    import spark.implicits._
+    val bases = Seq(null, "", "not a url", "http://a/b/c/d;p?q", "http://h",
+      "http://h?q=1", "http://h#f", "HTTPS://User:pw@Host.COM:8443/p?x#f",
+      "http://[::1]:8080/a/b", "https://a.com/r?next=https://b.com/x",
+      "https://a.com/fetch/https://b.com/x", "://x/y", "ftp:///x", "//h/p",
+      "a/b://c", "mailto:x@y.com", "http://h:/..")
+    val refs = Seq(null, "", "g", "./g", ".", "..", "../..", "/g", "//g",
+      "///x", "//u:p@H:1/p", "//[::1]/x", "?y", "#s", "?q#f", "g?y#s",
+      "g/./h/../k", "https://X.com:80/p", "HTTP://Y.org",
+      "http://h/x?next=https://b.com/x", "/fetch/https://b.com/x",
+      "?next=https://b.com", "#https://b.com/x", "not a url", "mailto:a@b")
+    val pairs = (for (b <- bases; r <- refs) yield (b, r)).toDF("b", "r")
+    assert(pairs.count() == 425)
+    val bad = mismatches(pairs, col("b"), col("r"))
+    assert(bad.isEmpty, s"resolveHost differs on ${bad.take(5).mkString("; ")}")
+  }
+
+  test("resolveHost is hostOfResolved(resolveRef) on every fixture link") {
+    val links = graft.SparkEntry.linkGraph(spark, "/root/testdata/sf0.001")
+      .select("url", "href")
+    assert(links.count() > 0)
+    val bad = mismatches(links, col("url"), col("href"))
+    assert(bad.isEmpty, s"resolveHost differs on ${bad.take(5).mkString("; ")}")
+  }
+
+  /** `(base, ref, resolveHost, hostOfResolved(resolveRef))` of every row
+    * whose two hosts differ, nulls compared null-safely. */
+  private def mismatches(df: DataFrame, base: Column, ref: Column): Seq[String] = {
+    val fast = UrlOps.resolveHost(base, ref)
+    val slow = UrlOps.hostOfResolved(UrlOps.resolveRef(base, ref))
+    df.filter(!(fast <=> slow)).select(base, ref, fast, slow).collect()
+      .map(_.toSeq.mkString("(", ", ", ")")).toSeq
   }
 
   test("parseRobotsMeta: crawl-delay and sitemap discovery") {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SharedSpark
+import graft.{SharedSpark, TempDirs}
 import graft.model.Schemas.BBox
 import graft.pipeline.MonthlyPipeline
 
@@ -60,43 +60,46 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("a gold write starts no process") {
     val c = composite
-    val out = Files.createTempDirectory("gold-forks").resolve("gold").toString
-    // the first write in a JVM loads classes whose set-up may fork once
-    // (Hadoop's Shell probes for setsid); count a later write
-    MonthlyPipeline.writePartitioned(c, out)
-    // the executor heartbeat's first metrics poll forks one page-size
-    // probe per JVM, whenever it lands; take it before recording
-    org.apache.spark.ProcfsMetricsInit()
-    val forks = processStarts(MonthlyPipeline.writePartitioned(c, out))
-    assert(forks.size == 0, s"process starts, e.g. ${forks.take(3)}")
+    TempDirs.withTempDir("gold-forks") { tmp =>
+      val out = tmp.resolve("gold").toString
+      // the first write in a JVM loads classes whose set-up may fork once
+      // (Hadoop's Shell probes for setsid); count a later write
+      MonthlyPipeline.writePartitioned(c, out)
+      // the executor heartbeat's first metrics poll forks one page-size
+      // probe per JVM, whenever it lands; take it before recording
+      org.apache.spark.ProcfsMetricsInit()
+      val forks = processStarts(MonthlyPipeline.writePartitioned(c, out))
+      assert(forks.size == 0, s"process starts, e.g. ${forks.take(3)}")
+    }
   }
 
   test("the sink leaves the same modes as the stock local file system") {
     val c = composite
-    val tmp = Files.createTempDirectory("gold-modes")
-    c.write.partitionBy("month", "band").parquet(tmp.resolve("stock").toString)
-    LocalFs.write(c).partitionBy("month", "band").parquet(tmp.resolve("nio").toString)
-    val stock = modes(tmp.resolve("stock"))
-    val nio = modes(tmp.resolve("nio"))
-    assert(nio == stock)
-    val names = stock.keySet.map(_.split('/').last)
-    assert(Set("_SUCCESS", "._SUCCESS.crc").subsetOf(names))
-    assert(names.exists(_.endsWith(".parquet.crc")))
-    assert(stock.keySet.count(_.contains("band=")) > 6) // dirs and their files
+    TempDirs.withTempDir("gold-modes") { tmp =>
+      c.write.partitionBy("month", "band").parquet(tmp.resolve("stock").toString)
+      LocalFs.write(c).partitionBy("month", "band").parquet(tmp.resolve("nio").toString)
+      val stock = modes(tmp.resolve("stock"))
+      val nio = modes(tmp.resolve("nio"))
+      assert(nio == stock)
+      val names = stock.keySet.map(_.split('/').last)
+      assert(Set("_SUCCESS", "._SUCCESS.crc").subsetOf(names))
+      assert(names.exists(_.endsWith(".parquet.crc")))
+      assert(stock.keySet.count(_.contains("band=")) > 6) // dirs and their files
+    }
   }
 
   test("a sticky-bit permission goes to Hadoop's own setPermission") {
     val fs = new NioRawLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"), new Configuration)
-    val dir = Files.createTempDirectory("sticky")
-    def setAndRead(octal: String): Int = {
-      fs.setPermission(new Path(dir.toUri), new FsPermission(Integer.parseInt(octal, 8).toShort))
-      Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & 0x0fff
+    TempDirs.withTempDir("sticky") { dir =>
+      def setAndRead(octal: String): Int = {
+        fs.setPermission(new Path(dir.toUri), new FsPermission(Integer.parseInt(octal, 8).toShort))
+        Files.getAttribute(dir, "unix:mode").asInstanceOf[Int] & 0x0fff
+      }
+      assert(setAndRead("750") == Integer.parseInt("750", 8))
+      // java.nio cannot express the sticky bit: finding it set on disk
+      // means Hadoop's own chmod ran
+      assert(setAndRead("1755") == Integer.parseInt("1755", 8))
     }
-    assert(setAndRead("750") == Integer.parseInt("750", 8))
-    // java.nio cannot express the sticky bit: finding it set on disk
-    // means Hadoop's own chmod ran
-    assert(setAndRead("1755") == Integer.parseInt("1755", 8))
-    Files.delete(dir)
   }
 }

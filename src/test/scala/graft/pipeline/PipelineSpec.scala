@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SharedSpark
+import graft.{SharedSpark, TempDirs}
 import graft.model.Schemas.BBox
 
 class PipelineSpec extends AnyFunSuite {
@@ -61,37 +61,39 @@ class PipelineSpec extends AnyFunSuite {
   test("S5 CSV write -> read round trip recovers the pixel table") {
     val c = MonthlyPipeline.monthlyComposite(
       pixels, BBox(76.0, 28.0, 78.0, 30.0), "2025-08-01", "2025-09-01")
-    val tmp = java.nio.file.Files.createTempDirectory("csvrt").toString
-    MonthlyPipeline.writeCsv(c, s"$tmp/pixels")
-    val back = MonthlyPipeline.readCsvPixelTable(spark, s"$tmp/pixels")
-    assert(back.count() == 16)
-    val want = c.select(col("lat"), col("lon"), col("mean"))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1),
+    TempDirs.withTempDir("csvrt") { tmp =>
+      MonthlyPipeline.writeCsv(c, s"$tmp/pixels")
+      val back = MonthlyPipeline.readCsvPixelTable(spark, s"$tmp/pixels")
+      assert(back.count() == 16)
+      val want = c.select(col("lat"), col("lon"), col("mean"))
+        .collect().map(r => (r.getDouble(0), r.getDouble(1),
+          if (r.isNullAt(2)) null else r.getDouble(2))).toSet
+      val got = back.collect().map(r => (r.getDouble(0), r.getDouble(1),
         if (r.isNullAt(2)) null else r.getDouble(2))).toSet
-    val got = back.collect().map(r => (r.getDouble(0), r.getDouble(1),
-      if (r.isNullAt(2)) null else r.getDouble(2))).toSet
-    assert(got == want) // values survive the 6dp format (grid is 6dp-exact)
-    assert(back.filter(col("mean").isNull).count() == 1) // the nan cell
+      assert(got == want) // values survive the 6dp format (grid is 6dp-exact)
+      assert(back.filter(col("mean").isNull).count() == 1) // the nan cell
+    }
   }
 
   test("partitioned write + manifest round trip") {
     val c = MonthlyPipeline.monthlyComposite(
       pixels, BBox(76.0, 28.0, 78.0, 30.0), "2025-08-01", "2025-09-01")
-    val tmp = java.nio.file.Files.createTempDirectory("gold").toString
-    MonthlyPipeline.writePartitioned(c, s"$tmp/composite")
-    // partition directories exist → pruning layout in place
-    val dirs = new java.io.File(s"$tmp/composite").listFiles().map(_.getName)
-    assert(dirs.exists(_.startsWith("month=2025-08-01")))
-    // one parquet file per (month, band) directory
-    val leaves = new java.io.File(s"$tmp/composite").listFiles()
-      .filter(_.isDirectory).flatMap(_.listFiles().filter(_.isDirectory))
-    assert(leaves.nonEmpty)
-    leaves.foreach { d =>
-      assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d.toString)
+    TempDirs.withTempDir("gold") { tmp =>
+      MonthlyPipeline.writePartitioned(c, s"$tmp/composite")
+      // partition directories exist → pruning layout in place
+      val dirs = new java.io.File(s"$tmp/composite").listFiles().map(_.getName)
+      assert(dirs.exists(_.startsWith("month=2025-08-01")))
+      // one parquet file per (month, band) directory
+      val leaves = new java.io.File(s"$tmp/composite").listFiles()
+        .filter(_.isDirectory).flatMap(_.listFiles().filter(_.isDirectory))
+      assert(leaves.nonEmpty)
+      leaves.foreach { d =>
+        assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d.toString)
+      }
+      val back = spark.read.parquet(s"$tmp/composite")
+      assert(back.count() == 16)
+      val m = MonthlyPipeline.manifest(back).collect()
+      assert(m.length == 1 && m.head.getAs[String]("band") == "no2")
     }
-    val back = spark.read.parquet(s"$tmp/composite")
-    assert(back.count() == 16)
-    val m = MonthlyPipeline.manifest(back).collect()
-    assert(m.length == 1 && m.head.getAs[String]("band") == "no2")
   }
 }

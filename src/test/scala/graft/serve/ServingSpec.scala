@@ -2,7 +2,7 @@ package graft.serve
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SharedSpark
+import graft.{SharedSpark, TempDirs}
 
 class ServingSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -13,6 +13,16 @@ class ServingSpec extends AnyFunSuite {
     ("2025-09-01", "no2", 3.0))
     .toDF("month", "band", "mean")
     .withColumn("month", to_date(col("month")))
+
+  /** The page [[Serving.writeViewer]] writes for `gold`'s manifest,
+    * read back from a scoped temp dir. */
+  private def viewerHtml(geojson: Option[String] = None): String =
+    TempDirs.withTempDir("viewer") { tmp =>
+      val page = tmp.resolve("index.html")
+      Serving.writeViewer(gold.select("month", "band"), "assets",
+        page.toString, geojson = geojson)
+      java.nio.file.Files.readString(page)
+    }
 
   test("P7/P8 lookup prunes to one month × selected layers") {
     val r = Serving.lookup(gold, "2025-08-01", Seq("no2"))
@@ -29,9 +39,7 @@ class ServingSpec extends AnyFunSuite {
   }
 
   test("S8 viewer writes months and layers into the page") {
-    val tmp = java.nio.file.Files.createTempDirectory("viewer").toString
-    Serving.writeViewer(gold.select("month", "band"), "assets", s"$tmp/index.html")
-    val html = scala.io.Source.fromFile(s"$tmp/index.html").mkString
+    val html = viewerHtml()
     assert(html.contains("'2025-08-01'") && html.contains("'2025-09-01'"))
     assert(html.contains(""">no2</label>""") && html.contains(""">so2</label>"""))
     assert(html.contains("on('error'")) // P10 at the browser edge
@@ -43,12 +51,9 @@ class ServingSpec extends AnyFunSuite {
   }
 
   test("S8 viewer inlines a GeoJSON layer with property tooltips") {
-    val tmp = java.nio.file.Files.createTempDirectory("viewer").toString
     val gj = scala.io.Source.fromFile(
       getClass.getResource("/powerplants_mini.geojson").getPath).mkString
-    Serving.writeViewer(gold.select("month", "band"), "assets",
-      s"$tmp/index.html", geojson = Some(gj))
-    val html = scala.io.Source.fromFile(s"$tmp/index.html").mkString
+    val html = viewerHtml(Some(gj))
     assert(html.contains("L.geoJSON") && html.contains("bindTooltip"))
     assert(html.contains("FeatureCollection")) // features actually inlined
     // the layer is reachable: it has its own checkbox and is selected by
@@ -59,15 +64,12 @@ class ServingSpec extends AnyFunSuite {
   }
 
   test("S8 viewer escapes untrusted GeoJSON: no raw markup reaches the page") {
-    val tmp = java.nio.file.Files.createTempDirectory("viewer").toString
     // hostile feature properties: a script-block breakout and an HTML tag
     val gj = """{"type":"FeatureCollection","features":[{"type":"Feature",
       |"geometry":{"type":"Point","coordinates":[77.1,28.6]},
       |"properties":{"name":"</script><script>alert(1)</script>",
       |"<b>k</b>":"v"}}]}""".stripMargin
-    Serving.writeViewer(gold.select("month", "band"), "assets",
-      s"$tmp/index.html", geojson = Some(gj))
-    val html = scala.io.Source.fromFile(s"$tmp/index.html").mkString
+    val html = viewerHtml(Some(gj))
     // the document is inlined as an escaped JS string fed to JSON.parse —
     // every '<' from the payload is \u003c, so '</script>' cannot break out
     assert(html.contains("JSON.parse("))
