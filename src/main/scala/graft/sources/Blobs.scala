@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Shared guard for whole-file blob sources (WARC, TAR, GeoTIFF): the
+/** Shared hand-off for whole-file blob sources (WARC, ZIP, GeoTIFF): the
   * `binaryFile` format materializes each file as ONE row, so a file is
   * hard-capped at 2 GiB − 1 bytes (`Int.MaxValue` — a Java array
   * bound, not a tunable). Spark's own failure surfaces mid-job as an
@@ -41,8 +42,8 @@ object Blobs {
     * one-level listing would let an oversize file below a subdirectory
     * bypass the plan-time check and resurface as the opaque mid-job
     * task failure this guard exists to prevent. */
-  def requireReadable(spark: SparkSession, pathGlob: String,
-                      source: String): Unit = {
+  private def requireReadable(spark: SparkSession, pathGlob: String,
+                              source: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(pathGlob)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
@@ -57,5 +58,14 @@ object Blobs {
     }
     requireUnderCap(
       files.map(st => st.getPath.toString -> st.getLen), source)
+  }
+
+  /** The hand-off of every whole-file source: fail closed on files over
+    * the cap ([[requireReadable]]), then load `path` through `binaryFile`
+    * as one (path, content) row per file. */
+  def read(spark: SparkSession, path: String, source: String): DataFrame = {
+    requireReadable(spark, path, source)
+    spark.read.format("binaryFile").load(path)
+      .select(col("path"), col("content"))
   }
 }

@@ -1,8 +1,8 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import graft.model.GridMeta
 
 /** SURVEY §2.1 S4 — GeoTIFF ingest, pure JVM (no GDAL/rasterio).
@@ -45,17 +45,22 @@ object GeoTiff {
   private val TypeSizes =
     Map(1 -> 1, 2 -> 1, 3 -> 2, 4 -> 4, 11 -> 4, 12 -> 8, 16 -> 8)
 
+  /** The TIFF inline rule, for reader and writer alike: a value of at
+    * most 4 bytes (8 in BigTIFF) lives in the entry's value field, a
+    * longer one at the offset that field holds (the spec's
+    * if-and-only-if rule). */
+  private def inline(typ: Int, count: Int, big: Boolean): Boolean =
+    TypeSizes(typ).toLong * count <= (if (big) 8 else 4)
+
   /** One IFD entry. `big` switches the BigTIFF conventions: the value
-    * field is 8 bytes (values of ≤ 8 bytes live inline — the spec's
-    * if-and-only-if rule), and external offsets are 64-bit. In-memory
+    * field is 8 bytes and external offsets are 64-bit. In-memory
     * payloads are capped at Array[Byte] size, so resolved offsets fit an
     * Int; a >2 GiB offset in a crafted small file fails loudly below. */
   private final case class Entry(tag: Int, typ: Int, count: Int, at: Int,
                                  buf: ByteBuffer, big: Boolean = false) {
     private def dataAt: Int = {
-      val size = TypeSizes.getOrElse(typ,
-        throw new IllegalArgumentException(s"TIFF tag $tag: unsupported type $typ"))
-      if (size * count <= (if (big) 8 else 4)) at
+      require(TypeSizes.contains(typ), s"TIFF tag $tag: unsupported type $typ")
+      if (inline(typ, count, big)) at
       else if (big) {
         val off = buf.getLong(at)
         require(off >= 0 && off <= Int.MaxValue,
@@ -96,6 +101,18 @@ object GeoTiff {
                                   sampleBits: Int = 32,
                                   sampleFmt: Int = 3) {
     def bytesPer: Int = sampleBits / 8
+
+    /** Sample `k` of a decoded chunk; integer samples surface as exact
+      * floats (|v| ≤ 65535 < 2^24). */
+    def sample(bb: ByteBuffer, k: Int): Float = {
+      val (pos, signed) = (k * bytesPer, sampleFmt == 2)
+      sampleBits match {
+        case 32 => bb.getFloat(pos)
+        case 16 => if (signed) bb.getShort(pos).toFloat
+                   else (bb.getShort(pos) & 0xFFFF).toFloat
+        case _ => if (signed) bb.get(pos).toFloat else (bb.get(pos) & 0xFF).toFloat
+      }
+    }
   }
 
   /** Parse metadata only — never touches pixel data (S11 metadata
@@ -157,8 +174,8 @@ object GeoTiff {
     val fmt = entries.get(339).map(_.ints).getOrElse(IndexedSeq(1L))
     val planar = intOr(284, 1).toInt
     val predictor = intOr(317, 1).toInt
-    require(Set(1, 5, 8, 32946, 32773)(compression),
-      s"GeoTIFF $dataset: unsupported Compression=$compression (1/5/8/32946/32773)")
+    require(Codecs.contains(compression),
+      s"GeoTIFF $dataset: unsupported Compression=$compression (${Codecs.keys.mkString("/")})")
     // sample formats: float32 (SampleFormat=3, BitsPerSample=32 — the
     // reference's export format) plus the integer rasters GDAL emits for
     // byte/int16 products (quality flags, scaled indices): uint8/uint16
@@ -234,48 +251,64 @@ object GeoTiff {
     (meta, layout, buf, compression)
   }
 
-  /** Decompress one pixel chunk (strip or tile) to a float-readable view. */
-  private def decodeChunk(dataset: String, buf: ByteBuffer, compression: Int,
-                          off: Long, count: Long): ByteBuffer =
-    compression match {
-      case 1 =>
-        val fb = buf.duplicate().order(buf.order())
-        fb.position(off.toInt).limit((off + count).toInt)
-        fb
-      case 5 =>
-        val src = new Array[Byte](count.toInt)
-        buf.duplicate().position(off.toInt).get(src)
-        ByteBuffer.wrap(Lzw.decode(src)).order(buf.order())
-      case 32773 =>
-        val src = new Array[Byte](count.toInt)
-        buf.duplicate().position(off.toInt).get(src)
-        ByteBuffer.wrap(PackBits.decode(src)).order(buf.order())
-      case 8 | 32946 =>
-        val src = new Array[Byte](count.toInt)
-        buf.duplicate().position(off.toInt).get(src)
-        val inf = new java.util.zip.Inflater()
-        inf.setInput(src)
-        val out = new java.io.ByteArrayOutputStream(src.length * 4)
-        val chunk = new Array[Byte](8192)
-        while (!inf.finished() && !inf.needsInput()) {
-          val n = inf.inflate(chunk)
-          if (n > 0) out.write(chunk, 0, n)
-          else if (!inf.finished()) throw new IllegalArgumentException(
-            s"GeoTIFF $dataset: truncated deflate chunk")
-        }
-        inf.end()
-        ByteBuffer.wrap(out.toByteArray).order(buf.order())
+  /** A Compression tag's codec; `encode` is None for a tag that is read
+    * but never written. */
+  private final case class Codec(decode: Array[Byte] => Array[Byte],
+                                 encode: Option[Array[Byte] => Array[Byte]])
+
+  private def inflate(src: Array[Byte]): Array[Byte] = {
+    val inf = new java.util.zip.Inflater()
+    inf.setInput(src)
+    val out = new java.io.ByteArrayOutputStream(src.length * 4)
+    val chunk = new Array[Byte](8192)
+    while (!inf.finished() && !inf.needsInput()) {
+      val n = inf.inflate(chunk)
+      if (n > 0) out.write(chunk, 0, n)
+      else if (!inf.finished())
+        throw new IllegalArgumentException("truncated deflate chunk")
     }
+    inf.end()
+    out.toByteArray
+  }
+
+  private def deflate(arr: Array[Byte]): Array[Byte] = {
+    // fixed level so fixture bytes stay deterministic across JDKs
+    val d = new java.util.zip.Deflater(6)
+    d.setInput(arr); d.finish()
+    val out = new java.io.ByteArrayOutputStream(arr.length / 2 + 16)
+    val chunk = new Array[Byte](8192)
+    while (!d.finished()) out.write(chunk, 0, d.deflate(chunk))
+    d.end()
+    out.toByteArray
+  }
+
+  /** Compression tag → codec, in the order messages list them. 32946 is
+    * the pre-TIFF-6 Deflate tag: read, never written. */
+  private val Codecs = scala.collection.immutable.ListMap(
+    1 -> Codec(identity, Some(identity)),
+    5 -> Codec(Lzw.decode, Some(Lzw.encode)),
+    8 -> Codec(inflate, Some(deflate)),
+    32946 -> Codec(inflate, None),
+    32773 -> Codec(PackBits.decode, Some(PackBits.encode)))
+
+  /** Decompress one pixel chunk (strip or tile) into a fresh array. */
+  private def decodeChunk(dataset: String, buf: ByteBuffer, compression: Int,
+                          off: Long, count: Long): Array[Byte] = {
+    val src = new Array[Byte](count.toInt)
+    buf.duplicate().position(off.toInt).get(src)
+    try Codecs(compression).decode(src)
+    catch { case e: IllegalArgumentException =>
+      throw new IllegalArgumentException(s"GeoTIFF $dataset: ${e.getMessage}", e)
+    }
+  }
 
   /** Undo the TIFF TechNote 3 floating-point predictor over one chunk:
-    * per `rowBytes`-wide row, cumulative-sum the horizontal byte deltas,
-    * then reassemble each float from its four byte planes (most
-    * significant first — the predictor's layout is defined big-endian
-    * independent of the file's byte order). Returns a BIG_ENDIAN buffer
-    * of plain float32 rows. */
-  private def undoFpPredictor(raw: ByteBuffer, rowBytes: Int): ByteBuffer = {
-    val data = new Array[Byte](raw.remaining())
-    raw.duplicate().get(data)
+    * per `rowBytes`-wide row, cumulative-sum the horizontal byte deltas
+    * (in place), then reassemble each float from its four byte planes
+    * (most significant first — the predictor's layout is defined
+    * big-endian independent of the file's byte order). Returns plain
+    * big-endian float32 rows. */
+  private def undoFpPredictor(data: Array[Byte], rowBytes: Int): Array[Byte] = {
     require(data.length % rowBytes == 0,
       s"fp-predictor chunk of ${data.length} bytes is not whole $rowBytes-byte rows")
     val w = rowBytes / 4
@@ -298,55 +331,33 @@ object GeoTiff {
       }
       r += 1
     }
-    ByteBuffer.wrap(out).order(ByteOrder.BIG_ENDIAN)
+    out
   }
 
-  /** Undo TIFF Predictor=2 (horizontal integer differencing) over one
-    * chunk: per `rowBytes`-wide row, each sample accumulates the previous
-    * SAME-BAND sample (stride = spp), in the sample's own width with
-    * wrapping two's-complement arithmetic — correct for signed and
-    * unsigned alike. Returns a buffer in the chunk's own byte order. */
-  private def undoIntPredictor(raw: ByteBuffer, rowBytes: Int, spp: Int,
-                               bytesPer: Int): ByteBuffer = {
-    val data = new Array[Byte](raw.remaining())
-    raw.duplicate().get(data)
-    val bb = ByteBuffer.wrap(data).order(raw.order())
-    val samplesPerRow = rowBytes / bytesPer
-    var rowStart = 0
-    while (rowStart + rowBytes <= data.length) {
-      var s = spp
-      while (s < samplesPerRow) {
-        val pos = rowStart + s * bytesPer
-        val prev = rowStart + (s - spp) * bytesPer
-        if (bytesPer == 1)
-          data(pos) = (data(pos) + data(prev)).toByte
-        else
-          bb.putShort(pos, (bb.getShort(pos) + bb.getShort(prev)).toShort)
-        s += 1
-      }
-      rowStart += rowBytes
-    }
-    bb
-  }
-
-  /** Apply Predictor=2 in place (inverse of [[undoIntPredictor]]): right
-    * to left, each sample becomes the delta from the previous same-band
-    * sample. */
-  private def applyIntPredictor(data: Array[Byte], rowBytes: Int, spp: Int,
-                                bytesPer: Int, order: ByteOrder): Unit = {
+  /** TIFF Predictor=2 (horizontal integer differencing) in place over
+    * one chunk: per `rowBytes`-wide row, each sample is taken relative to
+    * the previous SAME-BAND sample (stride = spp), in the sample's own
+    * width with wrapping two's-complement arithmetic — correct for signed
+    * and unsigned alike. `apply` differences right to left (the writer);
+    * otherwise left to right accumulates (the reader). */
+  private def intPredictor(data: Array[Byte], rowBytes: Int, spp: Int,
+                           bytesPer: Int, order: ByteOrder,
+                           apply: Boolean): Unit = {
     val bb = ByteBuffer.wrap(data).order(order)
     val samplesPerRow = rowBytes / bytesPer
+    val sign = if (apply) -1 else 1
     var rowStart = 0
-    while (rowStart + rowBytes <= data.length) {
-      var s = samplesPerRow - 1
-      while (s >= spp) {
+    while (rowBytes > 0 && rowStart + rowBytes <= data.length) { // width 0: no rows
+      var i = 0
+      while (i < samplesPerRow - spp) {
+        val s = if (apply) samplesPerRow - 1 - i else spp + i
         val pos = rowStart + s * bytesPer
-        val prev = rowStart + (s - spp) * bytesPer
+        val prev = pos - spp * bytesPer
         if (bytesPer == 1)
-          data(pos) = (data(pos) - data(prev)).toByte
+          data(pos) = (data(pos) + sign * data(prev)).toByte
         else
-          bb.putShort(pos, (bb.getShort(pos) - bb.getShort(prev)).toShort)
-        s -= 1
+          bb.putShort(pos, (bb.getShort(pos) + sign * bb.getShort(prev)).toShort)
+        i += 1
       }
       rowStart += rowBytes
     }
@@ -396,31 +407,14 @@ object GeoTiff {
     val (meta, layout, buf, compression) = parseMeta(dataset, bytes)
     val spp = layout.spp
     val bp = layout.bytesPer
-    val signed = layout.sampleFmt == 2
     val values = new Array[Float](meta.width * meta.height * spp)
-    // sequential + positional sample reads, closed over the sample type —
-    // integer samples surface as exact floats (|v| ≤ 65535 < 2^24)
-    def nextSample(bb: ByteBuffer): Float = layout.sampleBits match {
-      case 32 => bb.getFloat
-      case 16 => if (signed) bb.getShort.toFloat
-                 else (bb.getShort & 0xFFFF).toFloat
-      case _ => if (signed) bb.get.toFloat else (bb.get & 0xFF).toFloat
-    }
-    def sampleAt(bb: ByteBuffer, k: Int): Float = {
-      val pos = k * bp + bb.position()
-      layout.sampleBits match {
-        case 32 => bb.getFloat(pos)
-        case 16 => if (signed) bb.getShort(pos).toFloat
-                   else (bb.getShort(pos) & 0xFFFF).toFloat
-        case _ => if (signed) bb.get(pos).toFloat else (bb.get(pos) & 0xFF).toFloat
-      }
-    }
     def chunk(off: Long, count: Long, rowBytes: Int): ByteBuffer = {
       val raw = decodeChunk(dataset, buf, compression, off, count)
       layout.predictor match {
-        case 3 => undoFpPredictor(raw, rowBytes)
-        case 2 => undoIntPredictor(raw, rowBytes, spp, bp)
-        case _ => raw
+        case 3 => ByteBuffer.wrap(undoFpPredictor(raw, rowBytes))
+        case p =>
+          if (p == 2) intPredictor(raw, rowBytes, spp, bp, buf.order(), apply = false)
+          ByteBuffer.wrap(raw).order(buf.order())
       }
     }
     layout match {
@@ -428,9 +422,10 @@ object GeoTiff {
         var k = 0
         strips.foreach { case (off, count) =>
           val raw = chunk(off, count, meta.width * spp * bp)
-          while (raw.remaining() >= bp && k < values.length) {
-            values(k) = nextSample(raw); k += 1
-          }
+          val n = math.min(raw.capacity / bp, values.length - k)
+          var i = 0
+          while (i < n) { values(k + i) = layout.sample(raw, i); i += 1 }
+          k += n
         }
         require(k == values.length,
           s"GeoTIFF $dataset: strip data holds $k samples, header promises ${values.length}")
@@ -440,8 +435,8 @@ object GeoTiff {
         val tilesAcross = (meta.width + tw - 1) / tw
         tiles.zipWithIndex.foreach { case ((off, count), idx) =>
           val raw = chunk(off, count, tw * spp * bp)
-          require(raw.remaining() >= tw * th * spp * bp,
-            s"GeoTIFF $dataset: tile $idx holds ${raw.remaining() / bp} samples, expected ${tw * th * spp}")
+          require(raw.capacity >= tw * th * spp * bp,
+            s"GeoTIFF $dataset: tile $idx holds ${raw.capacity / bp} samples, expected ${tw * th * spp}")
           val x0 = (idx % tilesAcross) * tw
           val y0 = (idx / tilesAcross) * th
           var ty = 0
@@ -454,7 +449,7 @@ object GeoTiff {
                 var s = 0
                 while (s < spp) {
                   values((y * meta.width + x) * spp + s) =
-                    sampleAt(raw, (ty * tw + tx) * spp + s)
+                    layout.sample(raw, (ty * tw + tx) * spp + s)
                   s += 1
                 }
               }
@@ -467,51 +462,71 @@ object GeoTiff {
     MultiRaster(meta, spp, values)
   }
 
+  /** A blob's dataset name: the last segment of its path. */
+  private def datasetOf(path: String): String =
+    path.substring(path.lastIndexOf('/') + 1)
+
   /** Grid metadata of the raster(s) at `pathGlob` — S11 inspection; strip
     * data is never read. */
   def grids(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    Blobs.requireReadable(spark, pathGlob, "GeoTiff.grids")
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .map { case (path, bytes) =>
-        parseMeta(path.substring(path.lastIndexOf('/') + 1), bytes)._1
-      }
+    Blobs.read(spark, pathGlob, "GeoTiff.grids").as[(String, Array[Byte])]
+      .map { case (path, bytes) => parseMeta(datasetOf(path), bytes)._1 }
       .toDF("dataset", "a", "b", "c", "d", "e", "f", "crs",
             "width", "height", "nodata", "scale_m")
   }
 
-  /** Shared pixel-scan core: per-file parse → per-pixel rows, with a
-    * per-file coordinate projection chosen from the grid metadata. The
-    * affine model coordinates use the same center-offset expression as
-    * Unpivot.gridToPixels, evaluated in the same operand order, so
-    * coordinates are bit-identical across the ingest paths. */
-  private def scanPixels(spark: SparkSession, pathGlob: String,
-                         projectionOf: GridMeta => (Double, Double) => (Double, Double))
+  /** The file → pixel core of every scan: each file is parsed in its own
+    * task ([[parse]]'s single-band check when `oneBand`), then `rowOf`,
+    * chosen per file from its grid, maps every sample — (y, x, band) in
+    * file order, the pixel-centre model coordinates and the value with
+    * nodata/NaN as None — to one output row `R`. The model coordinates
+    * use the same center-offset expression as Unpivot.gridToPixels,
+    * evaluated in the same operand order, so coordinates are
+    * bit-identical across the ingest paths. */
+  private def scan[R <: Product : TypeTag](spark: SparkSession,
+      pathGlob: String, source: String, oneBand: Boolean, columns: String*)(
+      rowOf: GridMeta => (Int, Int, Int, Double, Double, Option[Double]) => R)
       : DataFrame = {
     import spark.implicits._
-    Blobs.requireReadable(spark, pathGlob, "GeoTiff.read")
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
+    Blobs.read(spark, pathGlob, source).as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        val r = parse(path.substring(path.lastIndexOf('/') + 1), bytes)
+        val r =
+          if (oneBand) {
+            val one = parse(datasetOf(path), bytes)
+            MultiRaster(one.meta, 1, one.values)
+          } else parseBands(datasetOf(path), bytes)
         val m = r.meta
-        val project = projectionOf(m)
+        val row = rowOf(m)
         val ndF = m.nodata.map(_.toFloat)
         Iterator.range(0, m.height).flatMap { y =>
-          Iterator.range(0, m.width).map { x =>
-            val v = r.values(y * m.width + x)
-            val value: Option[Double] =
-              if (v.isNaN || ndF.exists(_ == v)) None else Some(v.toDouble)
+          Iterator.range(0, m.width).flatMap { x =>
             val mx = m.c + (x + 0.5) * m.a + (y + 0.5) * m.b
             val my = m.f + (x + 0.5) * m.d + (y + 0.5) * m.e
-            val (lon, lat) = project(mx, my)
-            (m.dataset, y, x, lon, lat, value)
+            Iterator.range(0, r.nBands).map { s =>
+              val v = r.values((y * m.width + x) * r.nBands + s)
+              row(y, x, s, mx, my,
+                if (v.isNaN || ndF.exists(_ == v)) None else Some(v.toDouble))
+            }
           }
         }
       }
-      .toDF("dataset", "y", "x", "lon", "lat", "value")
+      .toDF(columns: _*)
   }
+
+  /** Single-band scan with a per-file coordinate projection chosen from
+    * the grid metadata. */
+  private def scanPixels(spark: SparkSession, pathGlob: String,
+                         projectionOf: GridMeta => (Double, Double) => (Double, Double))
+      : DataFrame =
+    scan(spark, pathGlob, "GeoTiff.read", oneBand = true,
+        "dataset", "y", "x", "lon", "lat", "value") { m =>
+      val project = projectionOf(m)
+      (y, x, _, mx, my, value) => {
+        val (lon, lat) = project(mx, my)
+        (m.dataset, y, x, lon, lat, value)
+      }
+    }
 
   /** S4 — scan raster file(s) into the long pixel-coordinate table
     * (dataset, y, x, lon, lat, value); nodata/NaN → null value. Emits RAW
@@ -542,32 +557,18 @@ object GeoTiff {
     * pixel table (dataset, band, y, x, lon, lat, value), one row per
     * sample; band is 0-based in file order. Same per-file-task shape as
     * [[read]]; nodata applies per sample (GDAL_NODATA is per-file). */
-  def readBands(spark: SparkSession, pathGlob: String): DataFrame = {
-    import spark.implicits._
-    Blobs.requireReadable(spark, pathGlob, "GeoTiff.readBands")
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val r = parseBands(path.substring(path.lastIndexOf('/') + 1), bytes)
-        val m = r.meta
-        val ndF = m.nodata.map(_.toFloat)
-        Iterator.range(0, m.height).flatMap { y =>
-          Iterator.range(0, m.width).flatMap { x =>
-            val mx = m.c + (x + 0.5) * m.a + (y + 0.5) * m.b
-            val my = m.f + (x + 0.5) * m.d + (y + 0.5) * m.e
-            Iterator.range(0, r.nBands).map { s =>
-              val v = r.values((y * m.width + x) * r.nBands + s)
-              val value: Option[Double] =
-                if (v.isNaN || ndF.exists(_ == v)) None else Some(v.toDouble)
-              (m.dataset, s, y, x, mx, my, value)
-            }
-          }
-        }
-      }
-      .toDF("dataset", "band", "y", "x", "lon", "lat", "value")
-  }
+  def readBands(spark: SparkSession, pathGlob: String): DataFrame =
+    scan(spark, pathGlob, "GeoTiff.readBands", oneBand = false,
+        "dataset", "band", "y", "x", "lon", "lat", "value") { m =>
+      (y, x, s, mx, my, value) => (m.dataset, s, y, x, mx, my, value)
+    }
 
   // ------------------------------------------------------------------ write
+
+  /** One IFD entry to write: `values` of TIFF type `typ`, each stored at
+    * the type's width (ASCII as its bytes; every value is exact in a
+    * Double). */
+  private final case class Field(tag: Int, typ: Int, values: IndexedSeq[Double])
 
   /** Encode a GeoTIFF for `meta` — float32 (default) or single-band
     * uint8/uint16/int16 via `sampleBits`/`sampleFormat` (north-up affine only:
@@ -583,8 +584,15 @@ object GeoTiff {
     * ExtraSamples tags; the single-band byte stream is unchanged.
     * `bigTiff` writes the BigTIFF container (version 43, 8-byte
     * offsets/counts, 20-byte IFD entries, LONG8 chunk offset arrays —
-    * what GDAL emits past 4 GiB); single-band only, and values of ≤ 8
-    * bytes go inline per the BigTIFF if-and-only-if rule. */
+    * what GDAL emits past 4 GiB); single-band only.
+    *
+    * Layout: header, one IFD sorted by tag, the out-of-line values, then
+    * the chunks. A value lives in its entry when it fits the value field
+    * (4 bytes, 8 in BigTIFF — [[inline]], the rule the reader applies);
+    * longer ones follow the IFD in a fixed order: chunk offsets, chunk
+    * byte counts, pixel scale, tiepoint, GeoKeys, BitsPerSample,
+    * SampleFormat, ExtraSamples, nodata. Image, strip and tile
+    * dimensions are SHORT up to 65535 and LONG beyond. */
   def write(meta: GridMeta, values: Array[Float], rowsPerStrip: Int = 64,
             bigEndian: Boolean = false, compression: Int = 1,
             tileSize: Int = 0, predictor: Int = 1,
@@ -598,8 +606,9 @@ object GeoTiff {
       s"GeoTIFF writer: bands must be 1..4, got $bands")
     require(values.length == meta.width * meta.height * bands,
       s"GeoTIFF writer: ${values.length} values for ${meta.width}x${meta.height}x$bands")
-    require(Set(1, 5, 8, 32773)(compression),
-      s"GeoTIFF writer: unsupported compression $compression (1/5/8/32773)")
+    val writable = Codecs.collect { case (tag, Codec(_, Some(_))) => tag }
+    require(writable.exists(_ == compression),
+      s"GeoTIFF writer: unsupported compression $compression (${writable.mkString("/")})")
     require(tileSize == 0 || (tileSize > 0 && tileSize % 16 == 0),
       s"GeoTIFF writer: tileSize must be 0 (striped) or a positive multiple of 16, got $tileSize")
     require((sampleBits == 32 && sampleFormat == 3) ||
@@ -634,241 +643,124 @@ object GeoTiff {
     val epsg = meta.crs.stripPrefix("EPSG:").toInt
     val geographic = epsg == 4326
     val tiled = tileSize > 0
-    def pack(arr: Array[Byte]): Array[Byte] = compression match {
-      case 1 => arr
-      case 5 => Lzw.encode(arr)
-      case 32773 => PackBits.encode(arr)
-      case 8 =>
-        // fixed level so fixture bytes stay deterministic across JDKs
-        val d = new java.util.zip.Deflater(6)
-        d.setInput(arr); d.finish()
-        val out = new java.io.ByteArrayOutputStream(arr.length / 2 + 16)
-        val chunk = new Array[Byte](8192)
-        while (!d.finished()) out.write(chunk, 0, d.deflate(chunk))
-        d.end()
-        out.toByteArray
-    }
-    def newBuf(n: Int): ByteBuffer = ByteBuffer.allocate(n)
-      .order(if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-    val tilesAcross = if (tiled) (meta.width + tileSize - 1) / tileSize else 0
-    val tilesDown = if (tiled) (meta.height + tileSize - 1) / tileSize else 0
-    val nStrips =
-      if (tiled) tilesAcross * tilesDown
-      else (meta.height + rowsPerStrip - 1) / rowsPerStrip
-    val rowSamples = meta.width * bands       // samples per raster row
-    val tileRowSamples = tileSize * bands     // samples per tile row
-    val stripData: IndexedSeq[Array[Byte]] =
-      if (tiled) (0 until nStrips).map { idx =>
-        val x0 = (idx % tilesAcross) * tileSize
-        val y0 = (idx / tilesAcross) * tileSize
-        def at(k: Int): Float = {
-          val y = y0 + k / tileRowSamples
-          val rem = k % tileRowSamples
-          val x = x0 + rem / bands
-          val s = rem % bands
-          if (x < meta.width && y < meta.height)
-            values((y * meta.width + x) * bands + s)
-          else 0.0f
+    val order = if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN
+    val encode = Codecs(compression).encode.get
+    // one chunk of `rows` rows of `rowSamples` samples, sample k = at(k):
+    // predictor, then codec
+    def chunk(rows: Int, rowSamples: Int, at: Int => Float): Array[Byte] =
+      encode(
+        if (predictor == 3) applyFpPredictor(rows, rowSamples, at)
+        else {
+          val bb = ByteBuffer.allocate(rows * rowSamples * bytesPer).order(order)
+          var k = 0
+          while (k < rows * rowSamples) { putSample(bb, at(k)); k += 1 }
+          if (predictor == 2)
+            intPredictor(bb.array(), rowSamples * bytesPer, bands, bytesPer,
+              order, apply = true)
+          bb.array()
+        })
+    val chunks: IndexedSeq[Array[Byte]] =
+      if (tiled) {
+        val tilesAcross = (meta.width + tileSize - 1) / tileSize
+        val tilesDown = (meta.height + tileSize - 1) / tileSize
+        val tileRowSamples = tileSize * bands
+        (0 until tilesAcross * tilesDown).map { idx =>
+          val x0 = (idx % tilesAcross) * tileSize
+          val y0 = (idx / tilesAcross) * tileSize
+          chunk(tileSize, tileRowSamples, { k =>
+            val y = y0 + k / tileRowSamples
+            val rem = k % tileRowSamples
+            val x = x0 + rem / bands
+            if (x < meta.width && y < meta.height)
+              values((y * meta.width + x) * bands + rem % bands)
+            else 0.0f
+          })
         }
-        pack(
-          if (predictor == 3) applyFpPredictor(tileSize, tileRowSamples, at)
-          else {
-            val bb = newBuf(tileSize * tileRowSamples * bytesPer)
-            var k = 0
-            while (k < tileSize * tileRowSamples) { putSample(bb, at(k)); k += 1 }
-            if (predictor == 2)
-              applyIntPredictor(bb.array(), tileRowSamples * bytesPer,
-                bands, bytesPer, bb.order())
-            bb.array()
-          })
+      } else {
+        val rowSamples = meta.width * bands
+        (0 until (meta.height + rowsPerStrip - 1) / rowsPerStrip).map { s =>
+          val base = s * rowsPerStrip * rowSamples
+          chunk(math.min(rowsPerStrip, meta.height - s * rowsPerStrip),
+            rowSamples, k => values(base + k))
+        }
       }
-      else (0 until nStrips).map { s =>
-        val rows = math.min(rowsPerStrip, meta.height - s * rowsPerStrip)
-        val base = s * rowsPerStrip * rowSamples
-        pack(
-          if (predictor == 3)
-            applyFpPredictor(rows, rowSamples, k => values(base + k))
-          else {
-            val bb = newBuf(rows * rowSamples * bytesPer)
-            var i = 0
-            while (i < rows * rowSamples) { putSample(bb, values(base + i)); i += 1 }
-            if (predictor == 2)
-              applyIntPredictor(bb.array(), rowSamples * bytesPer,
-                bands, bytesPer, bb.order())
-            bb.array()
-          })
-      }
-    val stripBytes = stripData.map(_.length)
-    val nodataAscii = meta.nodata.map(nd =>
-      (if (nd == nd.toLong.toDouble) nd.toLong.toString else nd.toString) + "\u0000")
+    require(chunks.nonEmpty, s"GeoTIFF writer: no pixel chunks for a " +
+      s"${meta.width}x${meta.height} grid (rowsPerStrip=$rowsPerStrip)")
+    val chunkBytes = chunks.map(_.length.toDouble)
 
-    // tags in ascending order, as the spec requires: 13 fixed striped tags
-    // (256,257,258,259,262,273,277,278,279,339,33550,33922,34735) or 14
-    // tiled ones (277 then 322,323,324,325 replacing 273/278/279),
-    // + Predictor (317) when used, + nodata, + PlanarConfiguration (284)
-    // and ExtraSamples (338) for multi-band
-    val nTags = (if (tiled) 14 else 13) +
-      (if (predictor != 1) 1 else 0) + nodataAscii.size +
-      (if (bands > 1) 2 else 0)
-    val ifdAt = if (bigTiff) 16 else 8
-    val ifdSize =
-      if (bigTiff) 8 + nTags * 20 + 8 else 2 + nTags * 12 + 4
-    var extAt = ifdAt + ifdSize // external value area cursor
-    def reserve(n: Int): Int = { val at = extAt; extAt += n; at }
-    val offBytes = if (bigTiff) 8 else 4 // LONG8 vs LONG chunk arrays
-    val stripOffsetsAt = if (nStrips > 1) reserve(offBytes * nStrips) else -1
-    val stripCountsAt = if (nStrips > 1) reserve(offBytes * nStrips) else -1
-    val scaleAt = reserve(24)
-    val tieAt = reserve(48)
-    val geoKeysAt = reserve(2 * 16) // 4 header + 3 keys of 4 shorts
-    // short arrays of count >= 3 exceed the 4-byte inline field
-    val bitsAt = if (bands >= 3) reserve(2 * bands) else -1
-    val fmtAt = if (bands >= 3) reserve(2 * bands) else -1
-    val extraAt = if (bands - 1 >= 3) reserve(2 * (bands - 1)) else -1
-    // values of size*count <= 4 live inline in the tag's value field (TIFF
-    // spec; parseMeta's Entry.dataAt applies the same rule) — only reserve
-    // external space for longer nodata strings
-    val nodataAt = nodataAscii.filter(_.length > (if (bigTiff) 8 else 4))
-      .map(s => reserve(s.length)).getOrElse(-1)
-    val dataAt = extAt
-    val stripOffsets = stripBytes.scanLeft(dataAt)(_ + _).init
+    // the entry table; chunk offsets depend on where the data starts
+    def fields(dataAt: Int): Seq[Field] = {
+      def field(tag: Int, typ: Int, vs: Double*) = Field(tag, typ, vs.toIndexedSeq)
+      def dim(tag: Int, v: Int) = field(tag, if (v > 65535) 4 else 3, v)
+      def perBand(tag: Int, v: Int) = Field(tag, 3, IndexedSeq.fill(bands)(v.toDouble))
+      val offTyp = if (bigTiff) 16 else 4 // LONG8 chunk arrays in BigTIFF
+      val (offTag, countTag) = if (tiled) (324, 325) else (273, 279)
+      // out-of-line payloads are laid out in this declaration order
+      Seq(Field(offTag, offTyp, chunkBytes.scanLeft(dataAt.toDouble)(_ + _).init),
+        Field(countTag, offTyp, chunkBytes),
+        field(33550, 12, meta.a, -meta.e, 0.0),
+        field(33922, 12, 0.0, 0.0, 0.0, meta.c, meta.f, 0.0), // (0,0,0) -> (c,f,0)
+        field(34735, 3,
+          1, 1, 0, 3, // version, revision, minor, numKeys
+          1024, 0, 1, if (geographic) 2 else 1, // GTModelType
+          1025, 0, 1, 1, // GTRasterType = PixelIsArea
+          if (geographic) 2048 else 3072, 0, 1, epsg),
+        perBand(258, sampleBits),
+        perBand(339, sampleFormat)) ++
+      (if (bands > 1) // unspecified extras, explicit chunky interleave
+        Seq(Field(338, 3, IndexedSeq.fill(bands - 1)(0.0)), field(284, 3, 1))
+      else Nil) ++
+      meta.nodata.map { nd =>
+        val s = if (nd == nd.toLong.toDouble) nd.toLong.toString else nd.toString
+        Field(42113, 2, (s + "\u0000").getBytes("US-ASCII").map(_.toDouble).toIndexedSeq)
+      } ++
+      Seq(dim(256, meta.width), dim(257, meta.height), field(259, 3, compression),
+        field(262, 3, 1), field(277, 3, bands)) ++
+      (if (predictor != 1) Seq(field(317, 3, predictor)) else Nil) ++
+      (if (tiled) Seq(dim(322, tileSize), dim(323, tileSize))
+      else Seq(dim(278, rowsPerStrip)))
+    }
+    def size(f: Field): Int = TypeSizes(f.typ) * f.values.size
+    def outOfLine(fs: Seq[Field]) =
+      fs.filterNot(f => inline(f.typ, f.values.size, bigTiff))
+    val (ifdAt, word, countBytes, entryBytes) =
+      if (bigTiff) (16, 8, 8, 20) else (8, 4, 2, 12)
+    val sized = fields(0)
+    val extAt = ifdAt + countBytes + sized.size * entryBytes + word // + next IFD
+    val dataAt = extAt + outOfLine(sized).map(size).sum
+    val fs = fields(dataAt)
+    val ext = outOfLine(fs)
+    val placed = ext.map(_.tag).zip(ext.scanLeft(extAt)(_ + size(_))).toMap
 
-    val total = dataAt + stripBytes.sum
-    val buf = ByteBuffer.allocate(total)
-      .order(if (bigEndian) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
+    val buf = ByteBuffer.allocate(dataAt + chunks.map(_.length).sum).order(order)
+    def putWord(at: Int, v: Int): Unit =
+      if (bigTiff) buf.putLong(at, v.toLong) else buf.putInt(at, v)
     buf.put(0, (if (bigEndian) 'M' else 'I').toByte)
     buf.put(1, (if (bigEndian) 'M' else 'I').toByte)
     if (bigTiff) {
-      buf.putShort(2, 43)
-      buf.putShort(4, 8) // offset byte size
-      buf.putShort(6, 0)
-      buf.putLong(8, ifdAt.toLong)
-    } else {
-      buf.putShort(2, 42)
-      buf.putInt(4, ifdAt)
-    }
-
-    var tagCursor = ifdAt + (if (bigTiff) 8 else 2)
-    if (bigTiff) buf.putLong(ifdAt, nTags.toLong)
-    else buf.putShort(ifdAt, nTags.toShort)
-    def tag(id: Int, typ: Int, count: Int, value: Int): Unit = {
-      buf.putShort(tagCursor, id.toShort)
-      buf.putShort(tagCursor + 2, typ.toShort)
-      if (bigTiff) buf.putLong(tagCursor + 4, count.toLong)
-      else buf.putInt(tagCursor + 4, count)
-      val vAt = tagCursor + (if (bigTiff) 12 else 8)
-      // inline iff the payload fits the value field (4 / 8 bytes): the
-      // TIFF/BigTIFF if-and-only-if rule Entry.dataAt applies on read
-      val inline = TypeSizes(typ) * count <= (if (bigTiff) 8 else 4)
-      (typ, inline) match {
-        case (3, true) => buf.putShort(vAt, value.toShort) // count == 1
-        case (4, true) => buf.putInt(vAt, value)
-        case (16, true) => buf.putLong(vAt, value.toLong)
-        case _ =>
-          if (bigTiff) buf.putLong(vAt, value.toLong)
-          else buf.putInt(vAt, value)
-      }
-      tagCursor += (if (bigTiff) 20 else 12)
-    }
-    // two SHORT values fit the 4-byte inline field (written explicitly —
-    // an int-packed write would depend on byte order)
-    def tag2Shorts(id: Int, a: Int, b: Int): Unit = {
-      buf.putShort(tagCursor, id.toShort)
-      buf.putShort(tagCursor + 2, 3.toShort)
-      buf.putInt(tagCursor + 4, 2)
-      buf.putShort(tagCursor + 8, a.toShort)
-      buf.putShort(tagCursor + 10, b.toShort)
-      tagCursor += 12
-    }
-    tag(256, 3, 1, meta.width)
-    tag(257, 3, 1, meta.height)
-    if (bands == 1) tag(258, 3, 1, sampleBits)
-    else if (bands == 2) tag2Shorts(258, 32, 32)
-    else tag(258, 3, bands, bitsAt)
-    tag(259, 3, 1, compression)
-    tag(262, 3, 1, 1)
-    val offTyp = if (bigTiff) 16 else 4 // LONG8 chunk arrays in BigTIFF
-    if (!tiled) {
-      if (nStrips > 1) tag(273, offTyp, nStrips, stripOffsetsAt)
-      else tag(273, offTyp, 1, stripOffsets.head)
-    }
-    tag(277, 3, 1, bands)
-    if (!tiled) {
-      tag(278, 3, 1, rowsPerStrip)
-      if (nStrips > 1) tag(279, offTyp, nStrips, stripCountsAt)
-      else tag(279, offTyp, 1, stripBytes.head)
-    }
-    if (bands > 1) tag(284, 3, 1, 1) // chunky interleave, explicit
-    if (predictor != 1) tag(317, 3, 1, predictor)
-    if (tiled) {
-      tag(322, 3, 1, tileSize)
-      tag(323, 3, 1, tileSize)
-      if (nStrips > 1) tag(324, offTyp, nStrips, stripOffsetsAt)
-      else tag(324, offTyp, 1, stripOffsets.head)
-      if (nStrips > 1) tag(325, offTyp, nStrips, stripCountsAt)
-      else tag(325, offTyp, 1, stripBytes.head)
-    }
-    if (bands == 2) tag(338, 3, 1, 0)            // 1 unspecified extra
-    else if (bands == 3) tag2Shorts(338, 0, 0)   // 2 unspecified extras
-    else if (bands == 4) tag(338, 3, 3, extraAt) // 3 unspecified extras
-    if (bands == 1) tag(339, 3, 1, sampleFormat)
-    else if (bands == 2) tag2Shorts(339, 3, 3)
-    else tag(339, 3, bands, fmtAt)
-    tag(33550, 12, 3, scaleAt)
-    tag(33922, 12, 6, tieAt)
-    tag(34735, 3, 16, geoKeysAt)
-    nodataAscii.foreach { s =>
-      if (s.length <= (if (bigTiff) 8 else 4)) {
-        // short NUL-terminated string: bytes go inline in the value field
-        buf.putShort(tagCursor, 42113.toShort)
-        buf.putShort(tagCursor + 2, 2.toShort)
-        if (bigTiff) buf.putLong(tagCursor + 4, s.length.toLong)
-        else buf.putInt(tagCursor + 4, s.length)
-        val vAt = tagCursor + (if (bigTiff) 12 else 8)
-        s.getBytes("US-ASCII").zipWithIndex
-          .foreach { case (b, i) => buf.put(vAt + i, b) }
-        tagCursor += (if (bigTiff) 20 else 12)
-      } else tag(42113, 2, s.length, nodataAt)
-    }
-    if (bigTiff) buf.putLong(tagCursor, 0L) // next IFD
-    else buf.putInt(tagCursor, 0)
-
-    if (nStrips > 1) (0 until nStrips).foreach { s =>
-      if (bigTiff) {
-        buf.putLong(stripOffsetsAt + 8 * s, stripOffsets(s).toLong)
-        buf.putLong(stripCountsAt + 8 * s, stripBytes(s).toLong)
-      } else {
-        buf.putInt(stripOffsetsAt + 4 * s, stripOffsets(s))
-        buf.putInt(stripCountsAt + 4 * s, stripBytes(s))
+      buf.putShort(2, 43).putShort(4, 8) // offset byte size, then 0
+      buf.putLong(8, ifdAt.toLong).putLong(ifdAt, fs.size.toLong)
+    } else buf.putShort(2, 42).putInt(4, ifdAt).putShort(ifdAt, fs.size.toShort)
+    fs.sortBy(_.tag).zipWithIndex.foreach { case (f, i) =>
+      val e = ifdAt + countBytes + i * entryBytes
+      buf.putShort(e, f.tag.toShort).putShort(e + 2, f.typ.toShort)
+      putWord(e + 4, f.values.size)
+      val at = placed.getOrElse(f.tag, e + 4 + word)
+      if (placed.contains(f.tag)) putWord(e + 4 + word, at)
+      f.values.zipWithIndex.foreach { case (v, k) =>
+        val p = at + k * TypeSizes(f.typ)
+        f.typ match {
+          case 2 => buf.put(p, v.toByte)
+          case 3 => buf.putShort(p, v.toInt.toShort)
+          case 4 => buf.putInt(p, v.toLong.toInt)
+          case 12 => buf.putDouble(p, v)
+          case _ => buf.putLong(p, v.toLong)
+        }
       }
     }
-    buf.putDouble(scaleAt, meta.a)
-    buf.putDouble(scaleAt + 8, -meta.e)
-    buf.putDouble(scaleAt + 16, 0.0)
-    // tiepoint (0,0,0) -> (c, f, 0)
-    Seq(0.0, 0.0, 0.0, meta.c, meta.f, 0.0).zipWithIndex
-      .foreach { case (v, i) => buf.putDouble(tieAt + 8 * i, v) }
-    val geoKeys: Seq[Int] = Seq(
-      1, 1, 0, 3, // version, revision, minor, numKeys
-      1024, 0, 1, if (geographic) 2 else 1, // GTModelType
-      1025, 0, 1, 1, // GTRasterType = PixelIsArea
-      (if (geographic) 2048 else 3072), 0, 1, epsg)
-    geoKeys.zipWithIndex.foreach { case (v, i) =>
-      buf.putShort(geoKeysAt + 2 * i, v.toShort)
-    }
-    nodataAscii.filter(_.length > 4).foreach { s =>
-      s.getBytes("US-ASCII").zipWithIndex
-        .foreach { case (b, i) => buf.put(nodataAt + i, b) }
-    }
-    if (bands >= 3) (0 until bands).foreach { i =>
-      buf.putShort(bitsAt + 2 * i, 32)
-      buf.putShort(fmtAt + 2 * i, 3)
-    }
-    if (extraAt >= 0) (0 until bands - 1).foreach { i =>
-      buf.putShort(extraAt + 2 * i, 0)
-    }
-    stripData.zip(stripOffsets).foreach { case (data, off) =>
+    chunks.foldLeft(dataAt) { (off, data) =>
       System.arraycopy(data, 0, buf.array(), off, data.length)
+      off + data.length
     }
     buf.array()
   }

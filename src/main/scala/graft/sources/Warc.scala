@@ -287,13 +287,9 @@ object Warc {
   /** Read `.warc`/`.warc.gz` files under `path` into records — one blob
     * per file via `binaryFile`, per-task member inflation, no shuffle.
     * Files over the 2 GiB blob cap fail closed at plan time
-    * ([[Blobs.requireReadable]]). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    Blobs.requireReadable(spark, path, "Warc.read")
-    parseArchives(
-      spark.read.format("binaryFile").load(path)
-        .select(col("path").as("archive"), col("content")))
-  }
+    * ([[Blobs.read]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    parseArchives(Blobs.read(spark, path, "Warc.read"))
 
   val healthSchema: StructType = StructType(Seq(
     StructField("archive", StringType, nullable = true),

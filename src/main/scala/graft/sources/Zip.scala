@@ -84,12 +84,8 @@ object Zip {
   /** Read `.zip` files under `path` into entry rows — one blob per
     * file via `binaryFile`, per-task walk, no shuffle; files over the
     * 2 GiB blob cap fail closed at plan time. */
-  def read(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    Blobs.requireReadable(spark, path, "Zip.read")
-    parseArchives(
-      spark.read.format("binaryFile").load(path)
-        .select(col("path").as("archive"), col("content")))
-  }
+  def read(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    parseArchives(Blobs.read(spark, path, "Zip.read"))
 
   /** (archive, content) blobs → one row per entry; narrow. */
   def parseArchives(archives: DataFrame): DataFrame = {

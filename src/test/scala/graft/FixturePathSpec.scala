@@ -35,6 +35,13 @@ class FixturePathSpec extends AnyFunSuite {
       s"resolve fixtures against the working directory: ${offenders.mkString(", ")}")
   }
 
+  test("no absolute fixture path in src/test/scala") {
+    val offenders =
+      offendingLines(absFixture.findFirstIn(_).isDefined, "src/test/scala")
+    assert(offenders.isEmpty,
+      s"resolve fixtures against the working directory: ${offenders.mkString(", ")}")
+  }
+
   // A raw control character (a NUL inside a string literal, say) makes
   // grep treat the whole file as binary, so text search over it silently
   // finds nothing; write such characters as escapes. Lines are split on

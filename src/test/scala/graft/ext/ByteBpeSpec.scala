@@ -293,8 +293,7 @@ class ByteBpeSpec extends AnyFunSuite {
     // visible-alphabet pair per line in rank order, space byte as Ġ),
     // carrying the table's widely-documented head rules
     val file = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/repo/src/test/resources/gpt2_merges_head.txt")),
+      java.nio.file.Paths.get("src/test/resources/gpt2_merges_head.txt")),
       java.nio.charset.StandardCharsets.UTF_8)
     val parsed = ByteBpe.parseGpt2Merges(file)
     assert(parsed.size == 10)

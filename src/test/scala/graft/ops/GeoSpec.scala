@@ -115,19 +115,20 @@ class GeoSpec extends AnyFunSuite {
     assert(Render.jetLut.length == 256 && Render.redsLut.length == 256)
     assert(Render.jetLut.forall { case (r, g, b, a) =>
       Seq(r, g, b, a).forall(c => c >= 0 && c <= 255) })
-    val tmp = java.nio.file.Files.createTempDirectory("render").toString
-    val rows = Array((0, 0, 255, 0, 0, 255), (1, 1, 0, 255, 0, 255))
-    Render.writePng(rows, 2, 2, s"$tmp/test.png")
-    val img = javax.imageio.ImageIO.read(new java.io.File(s"$tmp/test.png"))
-    assert(img.getWidth == 2 && img.getHeight == 2)
-    assert((img.getRGB(0, 0) >> 16 & 0xFF) == 255) // red pixel
+    graft.TempDirs.withTempDir("render") { tmp =>
+      val rows = Array((0, 0, 255, 0, 0, 255), (1, 1, 0, 255, 0, 255))
+      Render.writePng(rows, 2, 2, s"$tmp/test.png")
+      val img = javax.imageio.ImageIO.read(new java.io.File(s"$tmp/test.png"))
+      assert(img.getWidth == 2 && img.getHeight == 2)
+      assert((img.getRGB(0, 0) >> 16 & 0xFF) == 255) // red pixel
+    }
   }
 
   test("S6 golden PNG: jet-rendered gradient byte-matches the fixture") {
-    val tmp = java.nio.file.Files.createTempDirectory("render").toString
-    Render.writePng(GoldenPng.rows, 16, 16, s"$tmp/jet.png")
-    val got = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$tmp/jet.png"))
+    val got = graft.TempDirs.withTempDir("render") { tmp =>
+      Render.writePng(GoldenPng.rows, 16, 16, s"$tmp/jet.png")
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$tmp/jet.png"))
+    }
     val want = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(GoldenPng.path))
     assert(got.sameElements(want),
@@ -139,7 +140,8 @@ class GeoSpec extends AnyFunSuite {
 /** 16×16 jet gradient, one pixel per LUT entry. Regenerate the golden:
   * `sbt "Test/runMain graft.ops.GenGoldenPng"`. */
 object GoldenPng {
-  val path = "/root/repo/src/test/resources/golden_jet_16.png"
+  val path: String = java.nio.file.Paths
+    .get("src/test/resources/golden_jet_16.png").toAbsolutePath.toString
   def rows: Array[(Int, Int, Int, Int, Int, Int)] =
     Array.tabulate(256) { k =>
       val (r, g, b, a) = Render.jetLut(k)

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SharedSpark
+import graft.{SharedSpark, TempDirs}
 import graft.model.GridMeta
 
 /** S4 write→parse round trips. The s4demo fixture is the canonical raster
@@ -10,6 +10,10 @@ import graft.model.GridMeta
   * checked-in fixture can never drift from the in-code definition.
   */
 object GeoTiffFixture {
+  /** A checked-in fixture of the checkout the specs run in. */
+  private def resource(name: String): String =
+    java.nio.file.Paths.get("src/test/resources", name).toAbsolutePath.toString
+
   // UTM CRS + inline (<=4 byte) nodata + 3 strips: the three paths the
   // round-2 writer bug corrupted (lost GeoKeyDirectory / GDAL_NODATA).
   val meta: GridMeta = GridMeta("s4demo.tif",
@@ -20,7 +24,7 @@ object GeoTiffFixture {
   val values: Array[Float] = Array.tabulate(meta.width * meta.height)(k =>
     if (k % 13 == 0) -1.0f else (k % 97).toFloat)
   def bytes: Array[Byte] = GeoTiff.write(meta, values, rowsPerStrip = 16)
-  val path = "/root/repo/src/test/resources/s4demo.tif"
+  val path = resource("s4demo.tif")
 
   // RGB sibling (s4b): tiled + deflate + fp-predictor — the layout GDAL
   // emits for a real multi-band float export. Sample s of pixel k is
@@ -37,7 +41,7 @@ object GeoTiffFixture {
     }
   def rgbBytes: Array[Byte] = GeoTiff.write(rgbMeta, rgbValues,
     compression = 8, tileSize = 16, predictor = 3, bands = 3)
-  val rgbPath = "/root/repo/src/test/resources/s4rgb.tif"
+  val rgbPath = resource("s4rgb.tif")
 
   // uint8 sibling (s4c): deflate + predictor 2 — the layout GDAL emits
   // for byte products (quality flags, scaled indices). Pixel k = (k*7)%251
@@ -52,7 +56,7 @@ object GeoTiffFixture {
   def intBytes: Array[Byte] = GeoTiff.write(intMeta, intValues,
     compression = 8, predictor = 2, sampleBits = 8, sampleFormat = 1,
     rowsPerStrip = 16)
-  val intPath = "/root/repo/src/test/resources/s4int.tif"
+  val intPath = resource("s4int.tif")
 }
 
 class GeoTiffSpec extends AnyFunSuite {
@@ -63,6 +67,20 @@ class GeoTiffSpec extends AnyFunSuite {
       : GeoTiff.Raster =
     GeoTiff.parse(meta.dataset,
       GeoTiff.write(meta, values, rowsPerStrip, bigEndian))
+
+  /** Writes `meta` (pixel k = k) to a scoped temp dir and reads it back
+    * through readLonLat: (y, x) → (lon, lat). */
+  private def lonLats(meta: GridMeta, compression: Int = 1)
+      : Map[(Int, Int), (Double, Double)] =
+    TempDirs.withTempDir("lonlat") { dir =>
+      val file = dir.resolve(meta.dataset)
+      java.nio.file.Files.write(file, GeoTiff.write(meta,
+        Array.tabulate(meta.width * meta.height)(_.toFloat),
+        compression = compression))
+      GeoTiff.readLonLat(spark, file.toString)
+        .collect().map(r => ((r.getInt(1), r.getInt(2)),
+          (r.getDouble(3), r.getDouble(4)))).toMap
+    }
 
   test("S4 write→parse round trip: UTM CRS and nodata survive") {
     val r = roundTrip(GeoTiffFixture.meta, GeoTiffFixture.values,
@@ -355,13 +373,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val meta = GridMeta("south.tif", a = 100.0, b = 0.0, c = 499000.0,
       d = 0.0, e = -100.0, f = 8087000.0, crs = "EPSG:32743",
       width = 8, height = 6, nodata = None, scaleM = 100)
-    val values = Array.tabulate(48)(_.toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("utms").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/south.tif"),
-      GeoTiff.write(meta, values, compression = 8))
-    val rows = GeoTiff.readLonLat(spark, s"$dir/south.tif")
-      .collect().map(r => ((r.getInt(1), r.getInt(2)),
-        (r.getDouble(3), r.getDouble(4)))).toMap
+    val rows = lonLats(meta, compression = 8)
     // pixel (0,0) center = model (499050, 8086950) → Krüger inverse
     val (expLat, expLon) = graft.ops.Utm.toLatLon(499050.0, 8086950.0, 43,
       north = false)
@@ -370,11 +382,7 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(gotLat < -17.0 && gotLat > -17.6, s"latitude $gotLat not southern")
     // an unregistered CRS fails loudly, never mislabels meters as degrees
     val bad = meta.copy(dataset = "bad.tif", crs = "EPSG:23700")
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/bad.tif"),
-      GeoTiff.write(bad, values))
-    val e2 = intercept[org.apache.spark.SparkException] {
-      GeoTiff.readLonLat(spark, s"$dir/bad.tif").collect()
-    }
+    val e2 = intercept[org.apache.spark.SparkException](lonLats(bad))
     assert(e2.getMessage.contains("no reprojection") ||
       Option(e2.getCause).exists(_.getMessage.contains("no reprojection")))
   }
@@ -488,13 +496,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val meta = GridMeta("lcc.tif", a = 100.0, b = 0.0, c = 651000.0,
       d = 0.0, e = -100.0, f = 6862000.0, crs = "EPSG:2154",
       width = 8, height = 6, nodata = None, scaleM = 100)
-    val values = Array.tabulate(48)(_.toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("lccs").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/lcc.tif"),
-      GeoTiff.write(meta, values, compression = 5))
-    val rows = GeoTiff.readLonLat(spark, s"$dir/lcc.tif")
-      .collect().map(r => ((r.getInt(1), r.getInt(2)),
-        (r.getDouble(3), r.getDouble(4)))).toMap
+    val rows = lonLats(meta, compression = 5)
     // pixel (0,0) center = model (651050, 6861950) → LCC inverse
     val (expLon, expLat) = graft.ops.Crs.toLonLat(
       graft.ops.Crs.fromEpsg(2154).get, 651050.0, 6861950.0)
@@ -545,19 +547,90 @@ class GeoTiffSpec extends AnyFunSuite {
     }
   }
 
+  test("BigTIFF round-trips a 5-8 byte nodata string inline, striped and tiled") {
+    // "-9999\0" (GDAL's usual nodata) and "1.0E20\0" fit the 8-byte
+    // BigTIFF value field, so they live in the entry, not out of line
+    val values = GeoTiffFixture.values
+    for (nd <- Seq(-9999.0, 1.0e20); tile <- Seq(0, 16)) {
+      val meta = GeoTiffFixture.meta.copy(dataset = "bignd.tif", nodata = Some(nd))
+      val r = GeoTiff.parse("bignd.tif", GeoTiff.write(meta, values,
+        rowsPerStrip = 16, tileSize = tile, bigTiff = true))
+      assert(r.meta.nodata.contains(nd), s"nodata=$nd tile=$tile")
+      assert(r.values.sameElements(values), s"nodata=$nd tile=$tile")
+    }
+  }
+
+  test("a raster wider than 65535 pixels round-trips, striped and tiled") {
+    // an ImageWidth past the SHORT range is written as LONG
+    val meta = GridMeta("wide.tif", 0.01, 0.0, 0.0, 0.0, -0.01, 1.0,
+      "EPSG:4326", width = 65537, height = 2, nodata = None, scaleM = 1113)
+    val values = Array.tabulate(meta.width * meta.height)(k => (k % 251).toFloat)
+    for (tile <- Seq(0, 16)) {
+      val r = GeoTiff.parse("wide.tif",
+        GeoTiff.write(meta, values, tileSize = tile))
+      assert(r.meta.width == 65537 && r.meta.height == 2, s"tile=$tile")
+      assert(r.values.sameElements(values), s"tile=$tile")
+    }
+  }
+
+  test("a zero-width predictor-2 raster writes and parses instead of spinning") {
+    // a 0-byte row must not stall the predictor's row loop; run on a
+    // daemon thread so a regression fails here instead of hanging the suite
+    val meta = GeoTiffFixture.meta.copy(dataset = "empty.tif", width = 0,
+      nodata = None)
+    var got: Option[Array[Float]] = None
+    val t = new Thread(() => got = Some(GeoTiff.parse("empty.tif",
+      GeoTiff.write(meta, Array.empty[Float], predictor = 2, sampleBits = 8,
+        sampleFormat = 1)).values))
+    t.setDaemon(true)
+    t.start()
+    t.join(30000)
+    assert(!t.isAlive, "predictor loop still running after 30 s")
+    assert(got.exists(_.isEmpty))
+  }
+
+  test("writer bytes are pinned over codecs, predictors, bands, sample " +
+    "types, byte orders, containers, layouts and nodata placements") {
+    // every configuration below is one the writer accepts; the digest is
+    // over each output's length and bytes, in this fixed order
+    val base = GridMeta("pin.tif", 0.5, 0.0, 10.0, 0.0, -0.5, 60.0,
+      "EPSG:32643", width = 20, height = 18, nodata = None, scaleM = 1)
+    val n = base.width * base.height
+    // (bands, sampleBits, sampleFormat, predictors)
+    val samples = Seq(1, 2, 3, 4).map(b => (b, 32, 3, Seq(1, 3))) ++
+      Seq((1, 8, 1, Seq(1, 2)), (1, 16, 1, Seq(1, 2)), (1, 16, 2, Seq(1, 2)))
+    // (rowsPerStrip, tileSize): strips, one strip, tiles, one tile
+    val layouts = Seq((4, 0), (64, 0), (64, 16), (64, 32))
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    var count = 0
+    for ((bands, bits, fmt, preds) <- samples; pred <- preds;
+         big <- Seq(false, true) if !big || bands == 1;
+         comp <- Seq(1, 5, 8, 32773); be <- Seq(false, true);
+         (rps, tile) <- layouts;
+         nd <- Seq(None, Some(-1.0), Some(-9999.25));
+         crs <- Seq("EPSG:32643", "EPSG:4326")) {
+      val values = Array.tabulate(n * bands)(k =>
+        if (bits == 32) ((k * 7) % 101) * 0.5f - 3.0f else ((k * 7) % 120).toFloat)
+      val out = GeoTiff.write(base.copy(nodata = nd, crs = crs), values,
+        rowsPerStrip = rps, bigEndian = be, compression = comp,
+        tileSize = tile, predictor = pred, bands = bands, sampleBits = bits,
+        sampleFormat = fmt, bigTiff = big)
+      sha.update(java.nio.ByteBuffer.allocate(4).putInt(out.length).array())
+      sha.update(out)
+      count += 1
+    }
+    assert(count == 4224)
+    assert(sha.digest().map("%02x".format(_)).mkString ==
+      "e03e9290cded00238c20c96837018942769f7de480a9616c0e5d8e908d970867")
+  }
+
   test("readLonLat reprojects a polar-stereographic (EPSG:3413) raster") {
     // 100 m pixels ~400 km from the north pole on the NSIDC sea-ice grid
     // — exercises the polar branch of the CRS registry
     val meta = GridMeta("ps.tif", a = 100.0, b = 0.0, c = -300000.0,
       d = 0.0, e = -100.0, f = 300000.0, crs = "EPSG:3413",
       width = 8, height = 6, nodata = None, scaleM = 100)
-    val values = Array.tabulate(48)(_.toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("pss").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/ps.tif"),
-      GeoTiff.write(meta, values, compression = 5))
-    val rows = GeoTiff.readLonLat(spark, s"$dir/ps.tif")
-      .collect().map(r => ((r.getInt(1), r.getInt(2)),
-        (r.getDouble(3), r.getDouble(4)))).toMap
+    val rows = lonLats(meta, compression = 5)
     // pixel (0,0) center = model (-299950, 299950) → PS inverse
     val (expLon, expLat) = graft.ops.Crs.toLonLat(
       graft.ops.Crs.fromEpsg(3413).get, -299950.0, 299950.0)
@@ -573,13 +646,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val meta = GridMeta("nztm.tif", a = 1000.0, b = 0.0, c = 1740000.0,
       d = 0.0, e = -1000.0, f = 5440000.0, crs = "EPSG:2193",
       width = 8, height = 6, nodata = None, scaleM = 1000)
-    val values = Array.tabulate(48)(_.toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("nztm").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/nztm.tif"),
-      GeoTiff.write(meta, values, compression = 5))
-    val rows = GeoTiff.readLonLat(spark, s"$dir/nztm.tif")
-      .collect().map(r => ((r.getInt(1), r.getInt(2)),
-        (r.getDouble(3), r.getDouble(4)))).toMap
+    val rows = lonLats(meta, compression = 5)
     val (expLon, expLat) = graft.ops.Crs.toLonLat(
       graft.ops.Crs.fromEpsg(2193).get, 1740500.0, 5439500.0)
     val (gotLon, gotLat) = rows((0, 0))
@@ -594,13 +661,7 @@ class GeoTiffSpec extends AnyFunSuite {
     val meta = GridMeta("sinu.tif", a = 1000.0, b = 0.0, c = 1000000.0,
       d = 0.0, e = -1000.0, f = 5000000.0, crs = "EPSG:53008",
       width = 8, height = 6, nodata = None, scaleM = 1000)
-    val values = Array.tabulate(48)(_.toFloat)
-    val dir = java.nio.file.Files.createTempDirectory("sinus").toString
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/sinu.tif"),
-      GeoTiff.write(meta, values, compression = 8))
-    val rows = GeoTiff.readLonLat(spark, s"$dir/sinu.tif")
-      .collect().map(r => ((r.getInt(1), r.getInt(2)),
-        (r.getDouble(3), r.getDouble(4)))).toMap
+    val rows = lonLats(meta, compression = 8)
     val (expLon, expLat) = graft.ops.Crs.toLonLat(
       graft.ops.Crs.fromEpsg(53008).get, 1000500.0, 4999500.0)
     val (gotLon, gotLat) = rows((0, 0))
