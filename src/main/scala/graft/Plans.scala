@@ -50,9 +50,11 @@ object Plans {
     * (`Similarity.scala:<n>`, it moves with any edit above it), and
     * lambda class names and identity hashes (`Lambda@<…>`). Expression,
     * exchange-plan and RDD ids are session-wide counters whose values
-    * depend on what ran before, so each is renumbered by first use in
-    * this plan (`#1`, `plan_id=1`, `RDD[1]`), keeping which operator
-    * reads which attribute. */
+    * depend on what ran before, and a higher-order function's lambda
+    * variable takes its `_<n>` suffix from a JVM-wide counter that every
+    * lambda built anywhere advances; so each is renumbered by first use
+    * in this plan (`#1`, `plan_id=1`, `RDD[1]`, `lambda x_1`), keeping
+    * which operator reads which attribute. */
   private def masked(plan: String): String = {
     val fixed = plan
       .replace(Paths.get("").toAbsolutePath.toString + "/", "<checkout>/")
@@ -60,10 +62,11 @@ object Plans {
       .replaceAll("(\\w+\\.scala):\\d+", "$1:<n>")
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
       .replaceAll("(?<=[\\w$])@[0-9a-f]{4,8}\\b", "@<…>")
-    Seq("#", "plan_id=", "RDD\\[").foldLeft(fixed) { (text, prefix) =>
-      val ids = scala.collection.mutable.Map[String, Int]()
-      s"($prefix)(\\d+)".r.replaceAllIn(text, m => Regex.quoteReplacement(
-        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    Seq("#", "plan_id=", "RDD\\[", "lambda [xyz]_").foldLeft(fixed) {
+      (text, prefix) =>
+        val ids = scala.collection.mutable.Map[String, Int]()
+        s"($prefix)(\\d+)".r.replaceAllIn(text, m => Regex.quoteReplacement(
+          m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
     }
   }
 
@@ -184,7 +187,7 @@ object Plans {
       "x210_kn5_arpa_stored" -> "Stored order-5 ARPA scoring: the reloaded model rides as 9 BROADCAST level frames (5 gram lookups + 4 backoff contexts) into the occurrence stream — the artifact is the bounded side, the corpus shuffles once into the doc-keyed occurrence agg and once into the score fold; no model-sized exchange anywhere.",
       "x212_stored_censor" -> "Stored-set line censor: the persisted boilerplate table (df >= minDf survivors — tiny) anti-joins the line explode on the 64-bit hash, then ONE doc-keyed order-preserving reassembly — the streaming gate's exact batch shape.",
       "x213_exactsubstr_strip" -> "ExactSubstr owner election: the min-(doc,pos) owner rides the SAME window-census aggregate (no extra exchange over x37), non-owner positions island-merge in one doc-keyed window, spans strip as a bounded per-doc list.",
-      "x214_ccnet_buckets" -> "CCNet terciles: the x144 scoring plan, then the bucket window over the (lang, score) GROUP table — bounded by distinct rounded scores, never a per-document sort; the verdict joins back by equi-key.",
+      "x214_ccnet_buckets" -> "CCNet terciles: the x144 scoring plan, then the bucket window over the (lang, score) GROUP table — bounded by distinct rounded scores, never a per-document sort; the per-language cutoffs broadcast back into one verdict join.",
       "x216_luhn_cc_scrub" -> "Luhn card scrub: candidate extraction, the checksum fold, and the replace fold are ALL codegen'd column algebra fused into the scan — zero exchange; checksum-gated PII costs one pass.",
       "x217_hll_vocab" -> "Relational HyperLogLog: rho via an integer comparison fold in the scan stage, ONE m-key exchange whose max/count-distinct partials collapse map-side, an m-row final fold — cardinality at scan speed, no census.",
       "x226_bloom_decontam" -> "Relational Bloom filter: the word table is ONE bit_or aggregation bounded at m/32 rows and BROADCASTS into the probe join; probing is scan-stage seed-hash algebra + one doc-keyed verdict agg — membership at scan speed, state independent of the benchmark size.",

@@ -1543,8 +1543,7 @@ object SparkEntry {
     query("x151_zipf_fit", ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val counts = t(s, d, "documents")
-        .select(explode(filter(split(lower(col("text")), "\\s+"),
-          t => length(t) > 0)).as("term"))
+        .select(explode(ext.TextOps.words(col("text"))).as("term"))
         .groupBy("term").agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), col("term")).limit(1000)
       val w = Window.orderBy(desc("n"), col("term"))
@@ -5000,8 +4999,7 @@ object SparkEntry {
             lit(" lorem ipsum dolor sit amet")).otherwise(lit("")),
           when(pmod(col("doc_id"), lit(37L)) === 0L,
             lit(" function x { return }")).otherwise(lit(""))))
-      val toks = filter(split(lower(col("text")), "\\s+"),
-        t2 => length(t2) > 0)
+      val toks = ext.TextOps.words(col("text"))
       val nL = greatest(((size(toks) + lit(1)) / lit(2)).cast("int"),
         lit(1))
       val relined = array_join(transform(sequence(lit(0), nL - 1), i =>
@@ -5124,7 +5122,7 @@ object SparkEntry {
     // the oracle replays the inline computation, so the hash match
     // proves build → store → load → score end to end. This is the
     // production shape: train the selector once, price every later
-    // batch (or stream — streamingDsirGate) against it.
+    // batch (or stream — TextOps.dsirScoreStream) against it.
     query("x169_dsir_stored", ((s, d) => {
       val docs = t(s, d, "documents")
       val dir = storedDir("dsir", d)(p =>
@@ -6494,9 +6492,7 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val edges = ext.Dedup.jaccardPairs(docs, shingleK = 3,
         minJaccard = 0.4).select("doc_a", "doc_b")
-      val drop = ext.Dedup.connectedComponents(edges)
-        .where(col("rep_id") =!= col("doc_id")).select("doc_id")
-      ext.Bloom.antiJoinWithBloom(docs, drop)
+      ext.Bloom.antiJoinWithBloom(docs, ext.Dedup.duplicateMembers(edges))
         .select("doc_id", "lang", "source", "n_chars")
     }),
       // x39 — the Bloom pre-filter is semantics-transparent, so the oracle

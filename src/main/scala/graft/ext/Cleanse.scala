@@ -283,7 +283,7 @@ object Cleanse {
                      textCol: String = "text",
                      unk: String = "<unk>"): DataFrame = {
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     val positioned = docs
       .select(col("doc_id"), posexplode(toks).as(Seq("pos", "term")))
     val dfq = positioned.select("term", "doc_id").distinct()

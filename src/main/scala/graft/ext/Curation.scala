@@ -34,17 +34,17 @@ object Curation {
     * 100 TB posture: the benchmark shingle set is DISTINCT'd then
     * broadcast — a left join against a broadcast hash table plus one
     * hash-partitioned re-aggregation on doc_id. The corpus side never
-    * shuffles its text, only (doc_id, shingle-long) pairs. */
+    * shuffles its text, only (doc_id, shingle-long) pairs. The same call
+    * gates a STREAM: the benchmark side is static and bounded (a
+    * stream-static join, no watermark), and the per-doc re-aggregation
+    * is the plan's one stateful operator. */
   def contamination(docs: DataFrame, benchmark: DataFrame,
                     shingleK: Int = 3): DataFrame = {
     val benchShingles = benchmark
       .select(explode(Dedup.tokenHashes(col("text"), shingleK)).as("shingle"))
       .distinct()
       .withColumn("hit", lit(1L))
-    docs
-      .select(col("doc_id"), Dedup.tokenHashes(col("text"), shingleK).as("hs"))
-      .select(col("doc_id"), size(col("hs")).cast("long").as("n_sh"),
-              explode(col("hs")).as("shingle"))
+    shinglePairs(docs, shingleK, "text", "doc_id")
       .join(broadcast(benchShingles), Seq("shingle"), "left")
       .groupBy("doc_id")
       .agg(first("n_sh").as("n_sh"),
@@ -70,10 +70,7 @@ object Curation {
   def ngramNovelty(docs: DataFrame, shingleK: Int = 5,
                    textCol: String = "text",
                    idCol: String = "doc_id"): DataFrame = {
-    val pairs = docs
-      .select(col(idCol), Dedup.tokenHashes(col(textCol), shingleK).as("hs"))
-      .select(col(idCol), size(col("hs")).cast("long").as("n_sh"),
-              explode(col("hs")).as("shingle"))
+    val pairs = shinglePairs(docs, shingleK, textCol, idCol)
     // per-doc shingle sets are distinct, so count(*) = distinct docs
     val dfq = pairs.groupBy("shingle").agg(count(lit(1)).as("df"))
     pairs.join(dfq, "shingle")
@@ -82,6 +79,15 @@ object Curation {
            sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_novel"))
       .withColumn("novelty", col("n_novel").cast("double") / col("n_sh"))
   }
+
+  /** One `(idCol, n_sh, shingle)` row per distinct k-gram shingle of
+    * each document, `n_sh` its distinct-shingle count — the corpus side
+    * of [[contamination]] and [[ngramNovelty]]. */
+  private def shinglePairs(docs: DataFrame, k: Int, textCol: String,
+                           idCol: String): DataFrame =
+    docs.select(col(idCol), Dedup.tokenHashes(col(textCol), k).as("hs"))
+      .select(col(idCol), size(col("hs")).cast("long").as("n_sh"),
+        explode(col("hs")).as("shingle"))
 
   /** Token-distribution drift between two corpus snapshots — the
     * monitoring report a recurring-ingest pipeline alerts on (a crawl
@@ -100,8 +106,7 @@ object Curation {
   def tokenDrift(oldDocs: DataFrame, newDocs: DataFrame, topK: Int = 20,
                  textCol: String = "text"): DataFrame = {
     def terms(df: DataFrame, snap: Int) = df.select(
-      explode(filter(TextOps.tokens(col(textCol)),
-        t => length(t) > 0)).as("term"), lit(snap).as("snap"))
+      explode(TextOps.words(col(textCol))).as("term"), lit(snap).as("snap"))
     val census = terms(oldDocs, 0).unionByName(terms(newDocs, 1))
       .groupBy("term")
       .agg(sum(when(col("snap") === 0, 1L).otherwise(0L)).as("c_old"),
@@ -132,10 +137,14 @@ object Curation {
     * zero shuffles. */
   def hashSample(docs: DataFrame, num: Int, den: Int): DataFrame = {
     require(num > 0 && den > 0 && num <= den, s"bad sample rate $num/$den")
-    docs.filter(
-      pmod(graft.functions.HashExprs.mix64_col(col("doc_id")), lit(den.toLong))
-        < num.toLong)
+    docs.filter(coin(col("doc_id"), lit(den.toLong)) < num.toLong)
   }
+
+  /** The splitmix64 coin every deterministic sampler here draws:
+    * `mix64(id)` folded into [0, modulus) by signed pmod; a sampler
+    * keeps a row iff its coin falls below the row's threshold. */
+  private def coin(id: Column, modulus: Column): Column =
+    pmod(graft.functions.HashExprs.mix64_col(id), modulus)
 
   /** Deterministic stratified sample: the `perStratum` documents of each
     * stratum (source/domain/language) that rank first by splitmix64 of
@@ -300,8 +309,7 @@ object Curation {
     val keep = TextOps.gopherRules(docs, textCol)
       .select(col("doc_id"), col("keep"))
     val base = docs.select(col("source"), col("lang"), col("doc_id"),
-        size(filter(TextOps.tokens(col(textCol)),
-          t => length(t) > 0)).cast("long").as("nt"),
+        size(TextOps.words(col(textCol))).cast("long").as("nt"),
         length(col(textCol)).cast("long").as("nc"))
       .join(keep, "doc_id")
     val perLang = base.groupBy("source", "lang")
@@ -421,7 +429,7 @@ object Curation {
     require(overlap >= 0 && overlap < chunkTokens,
       s"overlap must be in [0, chunkTokens): $overlap")
     val step = chunkTokens - overlap
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     docs
       .select(col(idCol), toks.as("toks"))
       .withColumn("n", size(col("toks")))
@@ -466,8 +474,7 @@ object Curation {
           * denom).cast("long"))
       .select(col(strataCol), col("keep_below"))
     docs.join(broadcast(counts), strataCol)
-      .filter(pmod(graft.functions.HashExprs.mix64_col(col("doc_id")),
-        lit(denom)) < col("keep_below"))
+      .filter(coin(col("doc_id"), lit(denom)) < col("keep_below"))
       .drop("keep_below")
   }
 
@@ -491,10 +498,8 @@ object Curation {
     val total = docs.agg(
       greatest(lit(1L), sum(col(weightCol).cast("long"))).as("pps_w_total"))
     docs.crossJoin(broadcast(total))
-      .filter(
-        pmod(graft.functions.HashExprs.mix64_col(col(idCol)),
-             col("pps_w_total"))
-          < col(weightCol).cast("long") * expected)
+      .filter(coin(col(idCol), col("pps_w_total"))
+        < col(weightCol).cast("long") * expected)
       .drop("pps_w_total")
   }
 
@@ -520,9 +525,7 @@ object Curation {
       .agg(sum(TextOps.tokenCount(col(textCol)).cast("long")).as("t_total"))
       .withColumn("keep_below", least(col("t_total"), lit(budget)))
     docs.join(broadcast(totals), strataCol)
-      .filter(
-        pmod(graft.functions.HashExprs.mix64_col(col(idCol)), col("t_total"))
-          < col("keep_below"))
+      .filter(coin(col(idCol), col("t_total")) < col("keep_below"))
       .drop("t_total", "keep_below")
   }
 
@@ -552,8 +555,7 @@ object Curation {
     * inline by composite pipelines without a join. */
   private def repGramCounts(k: Int): (org.apache.spark.sql.Column,
                                       org.apache.spark.sql.Column) = {
-    val toks = filter(split(lower(col("text")), "\\s+"),
-      t => length(t) > 0)
+    val toks = TextOps.words(col("text"))
     (greatest(size(toks) - (k - 1), lit(0)).cast("long"),
      size(Dedup.tokenHashes(col("text"), k)).cast("long"))
   }
@@ -588,10 +590,9 @@ object Curation {
     val cont = contamination(docs, benchmark)
       .select(col("doc_id"),
         (col("contamination") < maxContam).as("pass_contam"))
-    val dup = Dedup.connectedComponents(
+    val dup = Dedup.duplicateMembers(
         Dedup.jaccardPairs(docs, shingleK = 3, minJaccard = minJaccard)
           .select("doc_a", "doc_b"))
-      .where(col("rep_id") =!= col("doc_id"))
       .select(col("doc_id"), lit(true).as("dup_hit"))
     sig.join(cont, "doc_id")
       .join(dup, Seq("doc_id"), "left")
@@ -651,11 +652,9 @@ object Curation {
       repetitionKeep(k = 2, maxRatio = maxRep).as("rep_keep"))
     val cont = contamination(docsW, benchmark)
       .select(col("doc_id"), col("contamination"))
-    val drop = Dedup.connectedComponents(
-        Dedup.jaccardPairs(docsW, shingleK = 3, minJaccard = minJaccard)
-          .select("doc_a", "doc_b"))
-      .where(col("rep_id") =!= col("doc_id"))
-      .select("doc_id")
+    val drop = Dedup.duplicateMembers(
+      Dedup.jaccardPairs(docsW, shingleK = 3, minJaccard = minJaccard)
+        .select("doc_a", "doc_b"))
     sig.join(cont, "doc_id")
       .filter(col("pred_lang") === keepLang &&
         col("quality") >= minQuality && col("rep_keep") &&
@@ -664,6 +663,13 @@ object Curation {
       .select("doc_id", "lang", "source", "n_chars", "quality",
         "contamination")
   }
+
+  /** The [[chatRender]] template: the system header, and a role's tag
+    * `<|role|>` (each turn renders as tag, newline, content, newline). */
+  private val chatHeader = "<|system|>\nYou are a helpful assistant.\n"
+  private val tagOpen = "<|"
+  private val tagClose = "|>"
+  private def roleTag(role: String): String = tagOpen + role + tagClose
 
   /** Conversation rendering — the SFT/chat-data prep step: corpora ship
     * conversations as JSON turn arrays (the interchange reality), and
@@ -683,7 +689,7 @@ object Curation {
                  textCol: String = "text",
                  idCol: String = "doc_id"): DataFrame = {
     require(turnTokens > 0, s"turnTokens must be positive: $turnTokens")
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     val k = ceil(size(toks).cast("double") / lit(turnTokens.toDouble))
       .cast("int")
     val turnsOut = transform(
@@ -699,11 +705,11 @@ object Curation {
       .select(col(idCol), to_json(turnsOut).as("conv_json"))
     val turns = from_json(col("conv_json"), convSchema)
     val rendered = concat(
-      lit("<|system|>\nYou are a helpful assistant.\n"),
+      lit(chatHeader),
       aggregate(turns, lit(""), (acc, t) => concat(acc,
-        lit("<|"), t.getField("role"), lit("|>\n"),
+        lit(tagOpen), t.getField("role"), lit(tagClose + "\n"),
         t.getField("content"), lit("\n"))),
-      lit("<|end|>"))
+      lit(roleTag("end")))
     conv.select(col(idCol),
       size(turns).as("n_turns"),
       size(filter(turns, t => t.getField("role") === "user")).as("n_user_turns"),
@@ -785,7 +791,7 @@ object Curation {
                   spanTokens: Int = 3,
                   textCol: String = "text",
                   idCol: String = "doc_id"): DataFrame = {
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     val staged = docs.select(col(idCol), toks.as("ts"))
       .withColumn("n", size(col("ts")))
     val (nb, inputs, targets) =
@@ -845,7 +851,7 @@ object Curation {
     * shuffle at any corpus size. */
   def ul2Denoisers(docs: DataFrame, textCol: String = "text",
                    idCol: String = "doc_id"): DataFrame = {
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     val staged = docs.select(col(idCol), toks.as("ts"))
       .withColumn("n", size(col("ts")))
     val mode = pmod(
@@ -889,8 +895,7 @@ object Curation {
                       idCol: String = "doc_id"): DataFrame = {
     require(terms.nonEmpty, "empty blocklist")
     docs.select(col(idCol),
-        explode(filter(TextOps.tokens(col(textCol)),
-          t => length(t) > 0)).as("term"))
+        explode(TextOps.words(col(textCol))).as("term"))
       .filter(col("term").isin(terms.map(_.toLowerCase): _*))
       .groupBy("term")
       .agg(countDistinct(col(idCol)).as("n_docs"),
@@ -948,8 +953,7 @@ object Curation {
                    textCol: String = "text",
                    idCol: String = "doc_id"): DataFrame = {
     require(turnTokens > 0, s"turnTokens must be positive: $turnTokens")
-    val header = "<|system|>\nYou are a helpful assistant.\n"
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     val staged = docs
       .select(col(idCol), toks.as("ts"))
       .withColumn("ntok", size(col("ts")))
@@ -966,14 +970,15 @@ object Curation {
       slice(col("ts"), lit(1), i * turnTokens), ""))
     // prior turn strings: role sentinel + '\n' + content + '\n', where
     // content adds (T−1) separators per full turn. i is odd, so the i
-    // prior turns are ⌈i/2⌉ user (8 chars) + ⌊i/2⌋ assistant (13):
-    // Σ = ⌊i/2⌋·21 + 8
-    val priorLen = floor(i / 2).cast("int") * (8 + 13) + lit(8) + i * 2 +
-      priorChars + i * (turnTokens - 1)
+    // prior turns are ⌈i/2⌉ user + ⌊i/2⌋ assistant tags:
+    // Σ = ⌊i/2⌋·(user + assistant) + user
+    val (user, asst) = (roleTag("user").length, roleTag("assistant").length)
+    val priorLen = floor(i / 2).cast("int") * (user + asst) + lit(user) +
+      i * 2 + priorChars + i * (turnTokens - 1)
     val content = array_join(slice(col("ts"), i * turnTokens + 1,
       lit(turnTokens)), " ")
-    val start = lit(header.length).cast("long") + priorLen.cast("long") +
-      lit(13L + 1L) // "<|assistant|>" + '\n'
+    val start = lit(chatHeader.length).cast("long") +
+      priorLen.cast("long") + lit(asst + 1L) // assistant tag + '\n'
     staged.select(col(idCol), i.cast("int").as("turn_idx"),
       start.as("span_start"),
       (start + length(content)).as("span_end"),
@@ -1029,7 +1034,11 @@ object Curation {
     * flipped byte flips its row's digest and therefore the shard's.
     * One partial+final aggregation over [[manifestRows]]; partials
     * collapse map-side at any corpus size and XOR is partitioning-
-    * invariant by construction. */
+    * invariant by construction. On a stream the same call keeps the
+    * manifest current as ONE update-mode aggregation whose state is
+    * three words per shard: XOR's self-inverse associativity keeps the
+    * digest O(1) per key, where a sequence hash would need the whole
+    * history. */
   def shardManifest(docs: DataFrame, nShards: Int = 16,
                     textCol: String = "text",
                     idCol: String = "doc_id"): DataFrame =
@@ -1179,7 +1188,7 @@ object Curation {
                   budget: Int = 256,
                   textCol: String = "text"): DataFrame = {
     require(nEvals >= 1 && budget >= 4, s"bad params: $nEvals, $budget")
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     val h = graft.functions.HashExprs.mix64_col(col("doc_id"))
     val w = Window.partitionBy(col("ev")).orderBy(col("h"), col("doc_id"))
     val assigned = docs.select(col("doc_id"), toks.as("ts"),
@@ -1340,10 +1349,10 @@ object Curation {
     *
     * Shape at 100 TB: scoring is the x144 plan; the tercile window
     * runs over the (lang, score) GROUP table — bounded by distinct
-    * rounded scores per language, never a per-document sort — and the
-    * verdict joins back by (lang, score) equi-key. For corpora where
-    * distinct scores approach corpus size, CCNet's own production
-    * answer is thresholds from a hash-sample —
+    * rounded scores per language, never a per-document sort — and its
+    * per-language cutoffs broadcast back through one left join on the
+    * language. For corpora where distinct scores approach corpus size,
+    * CCNet's own production answer is thresholds from a hash-sample —
     * [[ccnetBucketsSampledScored]], proven by x224.
     *
     * LAZINESS NOTE: construction EAGERLY executes the scoring cascade
@@ -1363,37 +1372,41 @@ object Curation {
     * score with a stored KenLM 5-gram, so the x221 composition feeds
     * this exact operator with [[TextOps.knScoreStoredArpa]] over the
     * x210 artifact instead of the inline bigram chain. `scored` must
-    * carry (idCol, cntCol, scoreCol); the group-table window, the
-    * integer `3·cum ≤ n` rule and the (lang, ppl) equi-join back are
-    * the x214 plan unchanged — swapping the language model swaps ONE
-    * input, not the operator shape. */
+    * carry (idCol, cntCol, scoreCol). The verdict is the group rule
+    * in its value form: [[ccnetThresholds]] over the full corpus, then
+    * [[ccnetApplyThresholds]] — exact, because cumulative counts rise
+    * with the score, so the groups that pass `3·cum ≤ n` are a prefix
+    * of the score order and `ppl ≤ t_head` selects exactly that prefix.
+    * Swapping the language model swaps ONE input, not the operator
+    * shape. */
   def ccnetBucketsScored(scored: DataFrame, docs: DataFrame,
                          scoreCol: String, cntCol: String,
                          idCol: String = "doc_id",
-                         langCol: String = "lang"): DataFrame = {
-    // TWO consumers read the scored frame (the group census and the
-    // verdict join) — materialize the narrow (id, lang, cnt, ppl)
-    // projection ONCE so the upstream scoring cascade (for x221 a
-    // 9-broadcast-join stored-ARPA walk over the corpus) never runs
-    // twice; a four-column row is far cheaper to pin than to rescore
+                         langCol: String = "lang"): DataFrame =
+    ccnetTerciles(scored, docs, scoreCol, cntCol, idCol, langCol)(identity)
+
+  /** The tercile kernel of [[ccnetBucketsScored]] and
+    * [[ccnetBucketsSampledScored]]: per-language cutoffs from the
+    * `census` of the pinned (id, lang, cnt, ppl) projection, applied to
+    * every document. The projection is materialized ONCE because two
+    * consumers read it (the census and the verdict), so the upstream
+    * scoring cascade (for x221 a 9-broadcast-join stored-ARPA walk
+    * over the corpus) never runs twice; a four-column row is far
+    * cheaper to pin than to rescore. No score or language reaching it
+    * is NULL (each scorer emits a score only for a doc with at least
+    * one gram, and every document carries its language); a NULL would
+    * fall through to `tail`. */
+  private def ccnetTerciles(scored: DataFrame, docs: DataFrame,
+                            scoreCol: String, cntCol: String,
+                            idCol: String, langCol: String)
+                           (census: DataFrame => DataFrame): DataFrame = {
     val withLang = scored
       .withColumn("ppl", round(col(scoreCol), 9))
       .join(docs.select(col(idCol), col(langCol)), Seq(idCol))
       .select(col(idCol), col(langCol), col(cntCol), col("ppl"))
       .localCheckpoint(true)
-    val groups = withLang.groupBy(col(langCol), col("ppl"))
-      .agg(count(lit(1)).as("c"))
-    val wcum = Window.partitionBy(langCol).orderBy(col("ppl").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bucketed = groups
-      .withColumn("cum", sum("c").over(wcum))
-      .withColumn("n", sum("c").over(Window.partitionBy(langCol)))
-      .withColumn("bucket",
-        when(col("cum") * 3 <= col("n"), lit("head"))
-          .when(col("cum") * 3 <= col("n") * 2, lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col(langCol), col("ppl"), col("bucket"))
-    withLang.join(bucketed, Seq(langCol, "ppl"))
+    ccnetApplyThresholds(withLang,
+        ccnetThresholds(census(withLang), "ppl", langCol), "ppl", langCol)
       .select(col(idCol), col(langCol), col(cntCol), col("ppl"),
         col("bucket"))
   }
@@ -1465,20 +1478,8 @@ object Curation {
                                 idCol: String = "doc_id",
                                 langCol: String = "lang"): DataFrame = {
     require(num > 0 && den > 0 && num <= den, s"bad sample rate $num/$den")
-    // same narrow pinned projection as ccnetBucketsScored: the scored
-    // cascade feeds two consumers (the sampled census, the verdict)
-    val withLang = scored
-      .withColumn("ppl", round(col(scoreCol), 9))
-      .join(docs.select(col(idCol), col(langCol)), Seq(idCol))
-      .select(col(idCol), col(langCol), col(cntCol), col("ppl"))
-      .localCheckpoint(true)
-    val sample = withLang.filter(
-      pmod(graft.functions.HashExprs.mix64_col(col(idCol)),
-        lit(den.toLong)) < num.toLong)
-    ccnetApplyThresholds(withLang,
-        ccnetThresholds(sample, "ppl", langCol), "ppl", langCol)
-      .select(col(idCol), col(langCol), col(cntCol), col("ppl"),
-        col("bucket"))
+    ccnetTerciles(scored, docs, scoreCol, cntCol, idCol, langCol)(
+      _.filter(coin(col(idCol), lit(den.toLong)) < num.toLong))
   }
 
   /** Cross-source DUPLICATION MATRIX — the data-card table a corpus
@@ -1562,12 +1563,10 @@ object Curation {
                     idCol: String = "doc_id",
                     passthrough: Seq[String] = Nil): DataFrame = {
     val lines = split(col(textCol), "\n")
-    def words(l: Column) =
-      size(filter(split(lower(l), "\\s+"), x => length(x) > 0))
     val keptArr = filter(lines, l =>
       (l.endsWith(".") || l.endsWith("!") || l.endsWith("?") ||
         l.endsWith("\"")) &&
-      words(l) >= minWordsPerLine &&
+      size(TextOps.words(l)) >= minWordsPerLine &&
       !lower(l).contains("javascript"))
     docs.select(col(idCol) +: passthrough.map(col) :+
         size(lines).cast("long").as("n_lines") :+

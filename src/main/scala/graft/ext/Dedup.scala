@@ -410,12 +410,15 @@ object Dedup {
     * the non-representative members of each near-dup cluster. Docs in no
     * cluster pass through untouched (the anti-join's left side is the
     * full corpus; the right side is only the bounded drop-list). */
-  def dedupCorpus(docs: DataFrame, edges: DataFrame): DataFrame = {
-    val drop = connectedComponents(edges)
-      .where(col("rep_id") =!= col("doc_id"))
+  def dedupCorpus(docs: DataFrame, edges: DataFrame): DataFrame =
+    docs.join(duplicateMembers(edges), Seq("doc_id"), "left_anti")
+
+  /** The drop-list of a near-dup edge set `(doc_a, doc_b)`: every
+    * member of a connected component except its representative, as
+    * one `doc_id` column. */
+  private[graft] def duplicateMembers(edges: DataFrame): DataFrame =
+    connectedComponents(edges).where(col("rep_id") =!= col("doc_id"))
       .select("doc_id")
-    docs.join(drop, Seq("doc_id"), "left_anti")
-  }
 
   /** Policy-based survivor selection — [[dedupCorpus]] keeps the min-id
     * member of each duplicate cluster; real pipelines keep the BEST copy
@@ -798,7 +801,7 @@ object Dedup {
     * (doc_id, txt, k1, k2) under [[editNearDups]]' block keys. */
   def editIndex(docs: DataFrame, lenBucket: Int = 16,
                 textCol: String = "text"): DataFrame = {
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     docs.select(col("doc_id"), col(textCol).as("txt"),
       element_at(toks, 1).as("k1"),
       expr(s"length($textCol) div $lenBucket").as("k2"))
@@ -807,7 +810,7 @@ object Dedup {
   def editNearDups(docs: DataFrame, lenBucket: Int = 16,
                    maxGroup: Int = 256,
                    textCol: String = "text"): DataFrame = {
-    val toks = filter(TextOps.tokens(col(textCol)), t => length(t) > 0)
+    val toks = TextOps.words(col(textCol))
     val keyed = docs.select(col("doc_id"), col(textCol).as("txt"),
       element_at(toks, 1).as("k1"),
       expr(s"length($textCol) div $lenBucket").as("k2"))

@@ -1298,8 +1298,7 @@ object Multimodal {
   def dedupImages(media: DataFrame, maxDist: Int = 3): DataFrame = {
     val pairs = imageNearDups(imageHashes(media), maxDist)
       .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
-    val drop = Dedup.connectedComponents(pairs)
-      .where(col("rep_id") =!= col("doc_id"))
+    val drop = Dedup.duplicateMembers(pairs)
       .select(col("doc_id").as("media_id"))
     media.join(drop, Seq("media_id"), "left_anti")
   }

@@ -599,9 +599,7 @@ object Similarity {
       .filter(col("id_a") < col("id_b"))
       .filter(cosine(col("vec_a"), col("vec_b")) >= minCos)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val drop = Dedup.connectedComponents(edges)
-      .where(col("rep_id") =!= col("doc_id"))
-      .select(col("doc_id").as(idCol))
+    val drop = Dedup.duplicateMembers(edges).select(col("doc_id").as(idCol))
     assigned.select(col(idCol), col("cid"))
       .join(drop, Seq(idCol), "left_anti")
   }

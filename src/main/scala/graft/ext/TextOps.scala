@@ -17,6 +17,10 @@ object TextOps {
   /** Token count (whitespace tokenization). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
+  /** The word rule: the non-empty [[tokens]] (a leading or repeated
+    * whitespace run splits off empty strings, which are not words). */
+  def words(text: Column): Column = filter(tokens(text), t => length(t) > 0)
+
   /** BPE-ish subword count: word-piece regex — runs of letters, runs of
     * digits, or single non-space symbols — a cheap proxy for tokenizer
     * budget accounting. */
@@ -89,8 +93,7 @@ object TextOps {
       : DataFrame = {
     val subs = bpeSubwords(col(textCol), merges)
     docs.select(col(idCol),
-        size(filter(tokens(col(textCol)), t => length(t) > 0))
-          .cast("long").as("n_words"),
+        size(words(col(textCol))).cast("long").as("n_words"),
         size(subs).cast("long").as("n_bpe_tokens"))
       .filter(col("n_words") > 0L)
       .withColumn("fertility",
@@ -220,8 +223,7 @@ object TextOps {
       : Seq[(String, String, Long)] = {
     require(nMerges >= 1, s"need nMerges >= 1: $nMerges")
     val census = docs
-      .select(explode(filter(tokens(col(textCol)), t => length(t) > 0))
-        .as("w"))
+      .select(explode(words(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("m"))
       .filter(col("m") >= minCount)
       .collect()
@@ -517,7 +519,7 @@ object TextOps {
   def salientTerms(docs: DataFrame, topN: Int = 3,
                    textCol: String = "text"): DataFrame = {
     val toks = docs.select(col("doc_id"),
-      explode(filter(tokens(col(textCol)), t => length(t) > 0)).as("term"))
+      explode(words(col(textCol))).as("term"))
     val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
@@ -548,7 +550,7 @@ object TextOps {
   def vocabCoverage(docs: DataFrame, vocabSize: Int = 1000,
                     textCol: String = "text"): DataFrame = {
     val toks = docs.select(col("doc_id"),
-      explode(filter(tokens(col(textCol)), t => length(t) > 0)).as("tok"))
+      explode(words(col(textCol))).as("tok"))
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("tok"))
       .limit(vocabSize)
@@ -606,7 +608,7 @@ object TextOps {
                  k1: Double = 1.2, b: Double = 0.75,
                  textCol: String = "text"): DataFrame = {
     require(terms.nonEmpty, "bm25Search needs at least one query term")
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
+    val toks = words(col(textCol))
     def tfOf(term: String): Column =
       size(filter(toks, t => t === term)).cast("double")
     val perDoc = docs.select(
@@ -644,7 +646,7 @@ object TextOps {
     * stored path replays [[bm25Search]] bit-for-bit. */
   def bm25BuildIndex(docs: DataFrame, dir: String,
                      textCol: String = "text"): Unit = {
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
+    val toks = words(col(textCol))
     val base = docs.select(col("doc_id"), toks.as("ts"))
     LocalFs.write(base.select(col("doc_id"), explode(col("ts")).as("term"))
       .groupBy("term", "doc_id")
@@ -721,7 +723,7 @@ object TextOps {
     * broadcast. */
   def bigramLmScore(docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id"): DataFrame = {
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
+    val toks = words(col(textCol))
     val occ = ngramWindows(docs, 2, toks, Seq(col(idCol)))
       .groupBy(col(idCol), col("w1"), col("w2"))
       .agg(count(lit(1)).as("m"))
@@ -838,8 +840,7 @@ object TextOps {
     require(topK >= 3, s"need topK >= 3: $topK")
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val census = docs
-      .select(explode(filter(tokens(col(textCol)),
-        t => length(t) > 0)).as("term"))
+      .select(explode(words(col(textCol))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("freq"))
       .orderBy(desc("freq"), asc("term")).limit(topK)
     val w = org.apache.spark.sql.expressions.Window
@@ -894,7 +895,7 @@ object TextOps {
     val fracs = Seq(0.05, 0.10, 0.20, 0.40, 0.80)
     val ks = fracs.map(f => math.ceil(f * nDocs.toDouble).toLong)
     val toks = docs.select(col(idCol),
-      explode(filter(tokens(col(textCol)), t => length(t) > 0)).as("term"))
+      explode(words(col(textCol))).as("term"))
     val firsts = toks.groupBy("term").agg(min(col(idCol)).as("fid"))
     val vCols = ks.map(k =>
       sum(when(col("fid") < k, 1L).otherwise(0L)).as(s"v$k"))
@@ -1015,7 +1016,7 @@ object TextOps {
     val pruning = thr.exists(_ > 1L)
     val n = order
     val ws = (1 to n).map(i => s"w$i")
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
+    val toks = words(col(textCol))
     var grams = ngramWindows(docs, n, toks, Nil)
     if (vocabSize > 0) {
       // top-V keep list (deterministic ties) rides a broadcast into
@@ -1433,10 +1434,10 @@ object TextOps {
     * BOTH stored bigram models walked on the same occurrence rows: the
     * x223 positional dual-lookup cascade feeds one doc-keyed integer
     * aggregation carrying both scaled log sums, so the whole gate has
-    * exactly ONE stateful operator — the stream-legal shape
-    * ([[graft.streaming.StreamingOps.streamingDomainGate]] is this
-    * call verbatim; two chained [[knCrossEntropyStoredArpa]] scorers
-    * would be two stateful aggregations). The scaled-integer sums make
+    * exactly ONE stateful operator — the stream-legal shape (the same
+    * call gates a stream at the ingest door; two chained
+    * [[knCrossEntropyStoredArpa]] scorers would be two stateful
+    * aggregations). The scaled-integer sums make
     * this form bit-identical to the two-scorer batch composition.
     * Emits `(doc_id, n_bigrams, h_target, h_general, ml_score, pass)`
     * with `pass = ml_score ≥ minMl`. */
@@ -1477,7 +1478,7 @@ object TextOps {
     val mb = graft.sources.Arpa.read(pathB)
     require(ma.order == 2 && mb.order == 2,
       s"the dual walk needs two order-2 models: ${ma.order}/${mb.order}")
-    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
+    val toks = words(col(textCol))
     val nTok = size(toks)
     var occ = docs.select(col(idCol),
         posexplode(arrays_zip(
@@ -1632,8 +1633,7 @@ object TextOps {
   : DataFrame = {
     val ws = (1 to n).map(i => s"w$i")
     val keyCols = (idCol +: passthrough).map(col)
-    var occ = ngramWindows(docs, n,
-      filter(tokens(col(textCol)), t => length(t) > 0), keyCols)
+    var occ = ngramWindows(docs, n, words(col(textCol)), keyCols)
     vocab.foreach { vocabDf =>
       // the model vocabulary (unigram section — bounded by the cap
       // that produced it) rides into n map-side left joins;
@@ -2072,8 +2072,7 @@ object TextOps {
     require(discount > 0 && discount < 1, s"need 0 < d < 1: $discount")
     val n = order
     val ws = (1 to n).map(i => s"w$i")
-    val occ = ngramWindows(docs, n,
-        filter(tokens(col(textCol)), t => length(t) > 0), Seq(col(idCol)))
+    val occ = ngramWindows(docs, n, words(col(textCol)), Seq(col(idCol)))
       .groupBy(col(idCol) +: ws.map(col): _*)
       .agg(count(lit(1)).as("m"))
     val tn = occ.groupBy(ws.map(col): _*).agg(sum("m").as("cN"))
@@ -2167,7 +2166,7 @@ object TextOps {
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
   def gopherSignals(text: Column): Seq[(String, Column)] = {
-    val toks = filter(tokens(text), t => length(t) > 0)
+    val toks = words(text)
     val nWords = size(toks).cast("long")
     val totLen = aggregate(transform(toks, t => length(t).cast("long")),
       lit(0L), (a, x) => a + x)
@@ -2556,7 +2555,7 @@ object TextOps {
     // the runtime of this zip on the same corpus.)
     val pre = docs.select(id,
       length(col(textCol)).cast("long").as("n_chars"),
-      filter(tokens(col(textCol)), t => length(t) > 0).as("toks"))
+      words(col(textCol)).as("toks"))
     val nTok = size(col("toks"))
     val grams = pre.select(id, col("n_chars"),
         explode(arrays_zip(

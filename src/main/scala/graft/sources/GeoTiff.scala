@@ -168,6 +168,8 @@ object GeoTiff {
 
     val width = req(256, "ImageWidth").ints.head.toInt
     val height = req(257, "ImageLength").ints.head.toInt
+    require(width >= 1 && height >= 1,
+      s"GeoTIFF $dataset: empty ${width}x$height grid")
     val bits = entries.get(258).map(_.ints).getOrElse(IndexedSeq(1L))
     val compression = intOr(259, 1).toInt
     val spp = intOr(277, 1).toInt
@@ -347,7 +349,7 @@ object GeoTiff {
     val samplesPerRow = rowBytes / bytesPer
     val sign = if (apply) -1 else 1
     var rowStart = 0
-    while (rowBytes > 0 && rowStart + rowBytes <= data.length) { // width 0: no rows
+    while (rowBytes > 0 && rowStart + rowBytes <= data.length) { // never a 0-byte row
       var i = 0
       while (i < samplesPerRow - spp) {
         val s = if (apply) samplesPerRow - 1 - i else spp + i
@@ -592,7 +594,9 @@ object GeoTiff {
     * longer ones follow the IFD in a fixed order: chunk offsets, chunk
     * byte counts, pixel scale, tiepoint, GeoKeys, BitsPerSample,
     * SampleFormat, ExtraSamples, nodata. Image, strip and tile
-    * dimensions are SHORT up to 65535 and LONG beyond. */
+    * dimensions are SHORT up to 65535 and LONG beyond. An empty grid or
+    * a striped `rowsPerStrip` below 1 is refused before any byte is
+    * written, as [[parse]] refuses an empty grid. */
   def write(meta: GridMeta, values: Array[Float], rowsPerStrip: Int = 64,
             bigEndian: Boolean = false, compression: Int = 1,
             tileSize: Int = 0, predictor: Int = 1,
@@ -604,6 +608,8 @@ object GeoTiff {
       "GeoTIFF writer: only north-up affine grids")
     require(bands >= 1 && bands <= 4,
       s"GeoTIFF writer: bands must be 1..4, got $bands")
+    require(meta.width >= 1 && meta.height >= 1,
+      s"GeoTIFF writer: empty ${meta.width}x${meta.height} grid")
     require(values.length == meta.width * meta.height * bands,
       s"GeoTIFF writer: ${values.length} values for ${meta.width}x${meta.height}x$bands")
     val writable = Codecs.collect { case (tag, Codec(_, Some(_))) => tag }
@@ -611,6 +617,8 @@ object GeoTiff {
       s"GeoTIFF writer: unsupported compression $compression (${writable.mkString("/")})")
     require(tileSize == 0 || (tileSize > 0 && tileSize % 16 == 0),
       s"GeoTIFF writer: tileSize must be 0 (striped) or a positive multiple of 16, got $tileSize")
+    require(tileSize > 0 || rowsPerStrip >= 1,
+      s"GeoTIFF writer: rowsPerStrip must be positive, got $rowsPerStrip")
     require((sampleBits == 32 && sampleFormat == 3) ||
             (Set(8, 16)(sampleBits) && Set(1, 2)(sampleFormat)),
       s"GeoTIFF writer: unsupported sample type ($sampleBits-bit, SampleFormat=$sampleFormat)")
@@ -684,8 +692,6 @@ object GeoTiff {
             rowSamples, k => values(base + k))
         }
       }
-    require(chunks.nonEmpty, s"GeoTIFF writer: no pixel chunks for a " +
-      s"${meta.width}x${meta.height} grid (rowsPerStrip=$rowsPerStrip)")
     val chunkBytes = chunks.map(_.length.toDouble)
 
     // the entry table; chunk offsets depend on where the data starts

@@ -12,6 +12,16 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * DataDownloader_SNPP_VIIRS_V1.py:137-141, 220-238). Streaming-native
   * restatement: file source → event-time watermark → per-day window +
   * running max composite. All builtin stateful aggs — no custom StateStore.
+  *
+  * A stream is a DataFrame, so a batch operator whose plan is stream-
+  * legal (stateless column algebra, stream-static joins, at most one
+  * stateful aggregation) is called directly on a stream — e.g.
+  * [[graft.ext.Curation.contamination]], [[graft.ext.TextOps.piiReport]],
+  * [[graft.ext.TextOps.dsirScoreStream]] — and StreamingSpec pins each
+  * streamed ≡ batch. This object holds only the stream-specific shapes:
+  * the watermarked and sessionized feeds, the gates whose batch form
+  * needs a second stateful operator or a window, and the compositions
+  * that add a stage to what they call.
   */
 object StreamingOps {
 
@@ -131,22 +141,6 @@ object StreamingOps {
     }
   }
 
-  /** Streaming benchmark-contamination gate: score each arriving document
-    * against a STATIC benchmark shingle set (stream-static join — the
-    * standard shape for enrich-against-reference-data; no state, no
-    * watermark needed because the static side is bounded). Emits the same
-    * columns as the batch `ext.Curation.contamination`, so the ingest
-    * pipeline can drop contaminated docs before they ever land. The
-    * benchmark side is distinct'd and broadcast once per micro-batch
-    * plan — at 100 TB/day the stream side stays a narrow explode +
-    * per-doc re-aggregation within the micro-batch. */
-  def streamingContamination(docStream: DataFrame, benchmark: DataFrame,
-                             shingleK: Int = 3): DataFrame =
-    // the batch audit is pure column algebra, so the identical plan works
-    // over a streaming DataFrame — one implementation, one set of fixes
-    // (StreamingSpec pins streaming ≡ batch)
-    graft.ext.Curation.contamination(docStream, benchmark, shingleK)
-
   /** Streaming near-dup ingest gate: every incoming document is checked
     * against the STORED corpus fingerprint index
     * ([[graft.ext.Dedup.minhashIndex]] — (doc_id, hs, minhash)) as it
@@ -190,73 +184,6 @@ object StreamingOps {
       .groupBy("doc_a", "doc_b").agg(max("jaccard").as("jaccard"))
   }
 
-  /** Streaming image near-dup ingest gate — the perceptual-hash twin of
-    * [[streamingNearDupGate]]: incoming image payloads decode to aHashes
-    * (narrow mapPartitions, valid on a stream), band into the 4×16-bit
-    * pigeonhole keys, and probe the STORED hash index through a
-    * stateless stream-static equi-join; the exact popcount verify runs
-    * only on bucket collisions. State is bounded by emitted matches.
-    *
-    * `hashIndex` is an [[graft.ext.Multimodal.imageHashes]] table the
-    * batch job persists once per corpus snapshot. Scope: gates against
-    * the index only (increment-internal dups are the batch job's
-    * business). */
-  /** Streaming robots.txt compliance gate: incoming (doc_id, domain,
-    * path) rows stream-static join the BROADCAST per-domain rule table
-    * and get the RFC 9309 longest-prefix / allow-wins verdict as a
-    * stateless per-row enrich — [[graft.ext.UrlOps.robotsGateStateless]]
-    * verbatim (the sorted rule array rides on the static side, the
-    * argmax is `element_at(filter(...), -1)`, no streaming aggregation
-    * state at all). The gate a polite crawler runs on URLs BEFORE
-    * fetching, at the ingest edge. StreamingSpec pins stream ≡ batch
-    * [[graft.ext.UrlOps.robotsGate]]. */
-  def streamingRobotsGate(urlStream: DataFrame,
-                          rules: DataFrame): DataFrame =
-    graft.ext.UrlOps.robotsGateStateless(urlStream, rules)
-
-  /** Streaming RECRAWL tick: a stream of sitemap `<urlset>` entries
-    * (domain, u, lastmod — what [[graft.ext.UrlOps.parseUrlset]] emits
-    * over a sitemap-fetch stream) stream-static left-joins the STORED
-    * crawl state and emits new/stale classification rows incrementally
-    * — [[graft.ext.UrlOps.recrawlTick]] verbatim: the x116 scheduler's
-    * classification core with the per-domain rank window left to the
-    * downstream batch consumer, so the tick holds ZERO streaming state
-    * (the robots-gate discipline applied to the scheduler).
-    * StreamingSpec pins stream ≡ batch. */
-  def streamingRecrawlTick(listedStream: DataFrame,
-                           crawled: DataFrame): DataFrame =
-    graft.ext.UrlOps.recrawlTick(listedStream, crawled)
-
-  /** Streaming PII gate: the per-arrival twin of the x161 census+scrub
-    * — [[graft.ext.TextOps.piiReport]] is pure chained column algebra
-    * on [[graft.ext.Cleanse]]'s ONE pattern set, so the identical plan
-    * runs over a streaming DataFrame with ZERO state (append mode, no
-    * watermark): every document is redacted and censused BEFORE it
-    * lands — the scrub-at-the-door posture a privacy pipeline needs,
-    * rather than scrubbing a corpus that already persisted raw PII.
-    * StreamingSpec pins streaming ≡ batch. */
-  def streamingPiiGate(docStream: DataFrame, textCol: String = "text",
-                       idCol: String = "doc_id"): DataFrame =
-    graft.ext.TextOps.piiReport(docStream, textCol, idCol)
-
-  /** Streaming DSIR gate: incoming documents score against the STORED
-    * importance-resampling bucket model
-    * ([[graft.ext.TextOps.dsirBuildModel]]) as they arrive — domain
-    * relevance priced at the ingest door, before anything persists.
-    * The model broadcasts (≤ dim rows, static side); the stream pays
-    * its shingle explode, a stateless model join, and EXACTLY ONE
-    * stateful per-doc aggregation — the batch scorer's (doc, bucket)
-    * pre-aggregation would chain two stateful aggs, which streaming
-    * correctly rejects, so the gate folds per-OCCURRENCE ln-ratio
-    * terms instead (equal values sum adjacently in the b-ordered fold;
-    * agrees with [[graft.ext.TextOps.dsirScoreStored]] up to fp
-    * association of the m-times-repeated addends, ≪ 1e-9). The same
-    * call on a batch DataFrame is the spec's bit-exact twin. */
-  def streamingDsirGate(spark: org.apache.spark.sql.SparkSession,
-                        docStream: DataFrame, dir: String,
-                        dim: Int = 16384): DataFrame =
-    graft.ext.TextOps.dsirScoreStream(spark, docStream, dir, dim)
-
   /** Streaming MOJIBAKE gate: [[graft.functions.FixMojibake]] per
     * arriving document — encoding damage is repaired BEFORE any
     * downstream signal reads the text (regex patterns, shingles and
@@ -273,75 +200,6 @@ object StreamingOps {
       .withColumn("repaired", col("__f.repaired"))
       .drop("__f")
   }
-
-  /** Streaming FIM transform: [[graft.ext.Curation.fimTransform]] per
-    * arriving document — the infilling prep runs at the ingest door
-    * because its splitmix cut/gate streams depend only on the doc id,
-    * never on corpus state. Pure column algebra, ZERO state, append
-    * mode; the same call on a batch DataFrame is the bit-exact twin
-    * (StreamingSpec pins it). */
-  def streamingFimGate(docStream: DataFrame,
-                       fimPct: Int = 50): DataFrame =
-    graft.ext.Curation.fimTransform(docStream, fimPct)
-
-  /** Streaming span corruption: [[graft.ext.Curation.spanCorrupt]] per
-    * arriving document — like the FIM gate, the blocked offsets depend
-    * only on (doc id, block index), so denoising prep is stateless
-    * column algebra at the ingest door. */
-  def streamingSpanCorrupt(docStream: DataFrame,
-                           blockTokens: Int = 20,
-                           spanTokens: Int = 3): DataFrame =
-    graft.ext.Curation.spanCorrupt(docStream, blockTokens, spanTokens)
-
-  /** Streaming UL2 prep: [[graft.ext.Curation.ul2Denoisers]] per
-    * arriving document — mode routing and every denoiser branch are
-    * id-keyed column algebra, so the mixture assignment is stable
-    * however the stream is micro-batched. */
-  def streamingUl2Gate(docStream: DataFrame): DataFrame =
-    graft.ext.Curation.ul2Denoisers(docStream)
-
-  /** Streaming C4 cleaning gate: the full Raffel et al. 2020 §2.2
-    * rule set ([[graft.ext.Curation.c4LineFilters]]) per arriving
-    * document — every check is string/array algebra on the document
-    * itself (no corpus state, unlike the x33 censor), so the gate is
-    * stateless column math at the ingest door. */
-  def streamingC4Gate(docStream: DataFrame,
-                      minWordsPerLine: Int = 5): DataFrame =
-    graft.ext.Curation.c4LineFilters(docStream, minWordsPerLine)
-
-  /** Streaming word-blocklist gate: the C4 rule enforced per arrival —
-    * `arrays_overlap` against the literal term list, stateless, append
-    * mode. A document either passes whole or is dropped at the door. */
-  def streamingBlocklistGate(docStream: DataFrame,
-                             terms: Seq[String]): DataFrame =
-    graft.ext.Curation.blocklistGate(docStream, terms)
-
-  /** Streaming entropy gate: the compressibility quality verdict per
-    * arrival ([[graft.ext.Curation.entropyGate]]) — the CharEntropy
-    * kernel is per-row, so the gate is stateless column algebra. */
-  def streamingEntropyGate(docStream: DataFrame, minBits: Double = 2.0,
-                           maxBits: Double = 6.0): DataFrame =
-    graft.ext.Curation.entropyGate(docStream, minBits, maxBits)
-
-  /** The COMPOSED streaming ingest gate — the streaming twin of the
-    * x171 batch corpus build's per-document stages, in ONE query:
-    * PII scrub at the door, DSIR pricing against the stored bucket
-    * model, near-dup probe against the stored minhash index — one
-    * verdict row per arriving document,
-    * [[graft.ext.TextOps.ingestGate]] verbatim. The composition is
-    * stateless column algebra + stream-static broadcast joins ending
-    * in EXACTLY ONE stateful aggregation (the three signal families
-    * ride one unioned row set) — chaining the three gates' own
-    * aggregations would be multiple stateful operators, which
-    * streaming rejects. StreamingSpec pins streaming ≡ batch AND the
-    * composition ≡ each piecewise gate (DSIR bit-exact, near-dup as
-    * the per-doc max, PII columns verbatim). */
-  def streamingIngestGate(spark: SparkSession, docStream: DataFrame,
-                          dsirDir: String, index: DataFrame,
-                          dim: Int = 16384, minJaccard: Double = 0.5)
-      : DataFrame =
-    graft.ext.TextOps.ingestGate(spark, docStream, dsirDir, index,
-      dim = dim, minJaccard = minJaccard)
 
   /** The streaming twin of [[graft.ext.CorpusBuild.run]]'s s1-s4
     * PREFIX — every per-document curation stage of the batch corpus
@@ -365,7 +223,7 @@ object StreamingOps {
     * Input must carry (doc_id, source, text, domain, path). Emits
     * CorpusBuild's s4 schema (doc_id, source, text, n_lines, n_kept);
     * the stages 5+ (near-dup, DSIR, pack, export) are corpus-level by
-    * nature and stay with the batch job — [[streamingIngestGate]]
+    * nature and stay with the batch job — [[graft.ext.TextOps.ingestGate]]
     * covers their per-arrival probes. StreamingSpec pins the streamed
     * prefix ≡ batch s4 on the same documents.
     *
@@ -467,19 +325,17 @@ object StreamingOps {
         array_join(col("kept"), " ").as("text"))
   }
 
-  /** Streaming SHARD MANIFEST: the dataset-versioning digests
-    * ([[graft.ext.Curation.shardManifest]]) kept incrementally over a
-    * document stream — ONE update-mode shard aggregation whose state
-    * is three words per shard (count, char sum, XOR digest): XOR's
-    * self-inverse associativity is exactly what keeps digest state
-    * O(1) per key, where a sequence hash would need the whole history.
-    * After any stream prefix the emitted rows equal the batch manifest
-    * of the documents seen so far (StreamingSpec), so an ingest job
-    * always has a current corpus fingerprint without a batch pass. */
-  def streamingManifest(docStream: DataFrame,
-                        nShards: Int = 16): DataFrame =
-    graft.ext.Curation.shardManifest(docStream, nShards)
-
+  /** Streaming image near-dup ingest gate — the perceptual-hash twin of
+    * [[streamingNearDupGate]]: incoming image payloads decode to aHashes
+    * (narrow mapPartitions, valid on a stream), band into the 4×16-bit
+    * pigeonhole keys, and probe the STORED hash index through a
+    * stateless stream-static equi-join; the exact popcount verify runs
+    * only on bucket collisions. State is bounded by emitted matches.
+    *
+    * `hashIndex` is an [[graft.ext.Multimodal.imageHashes]] table the
+    * batch job persists once per corpus snapshot. Scope: gates against
+    * the index only (increment-internal dups are the batch job's
+    * business). */
   def streamingImageDupGate(mediaStream: DataFrame, hashIndex: DataFrame,
                             maxDist: Int = 3): DataFrame = {
     require(maxDist >= 0 && maxDist <= 3,
@@ -502,9 +358,6 @@ object StreamingOps {
       .groupBy("media_a", "media_b").agg(min("dist").as("dist"))
   }
 
-  /** Run a streaming aggregation over existing parquet as a bounded stream
-    * (memory sink), for batch-equivalence testing. Returns the final table.
-    */
   /** Streaming EDIT-DISTANCE ingest gate — the short-string
     * (instruction/title) twin of [[streamingNearDupGate]]: each arriving
     * string takes its [[graft.ext.Dedup.editNearDups]] block key (first
@@ -516,8 +369,7 @@ object StreamingOps {
     * recall trade as the batch operator, documented there. */
   def streamingEditGate(docStream: DataFrame, index: DataFrame,
                         maxDist: Long = 3, lenBucket: Int = 16): DataFrame = {
-    val toks = filter(graft.ext.TextOps.tokens(col("text")),
-      t => length(t) > 0)
+    val toks = graft.ext.TextOps.words(col("text"))
     val inc = docStream.select(col("doc_id").as("doc_b"),
       col("text").as("txt_b"), element_at(toks, 1).as("k1"),
       expr(s"length(text) div $lenBucket").as("k2"))
@@ -553,23 +405,6 @@ object StreamingOps {
         arpaPath, collapse = false)
       .withColumn("pass", col("h10") <= maxH10)
 
-  /** Streaming DOMAIN gate — Moore-Lewis cross-entropy difference at
-    * the ingest door ([[graft.ext.TextOps.mooreLewisGate]] verbatim):
-    * each arriving document walks BOTH stored bigram models (in-domain
-    * + general) on the same occurrence rows through the positional
-    * dual-lookup cascade, and the two scaled-integer log sums ride ONE
-    * doc-keyed aggregation — the stream-legal shape (two chained
-    * scorers would be two stateful operators). `pass = ml ≥ minMl`
-    * marks arrivals that look like the target domain; the models are
-    * static broadcast data, trained once per corpus snapshot by the
-    * batch job (x222's artifacts). StreamingSpec pins streamed ≡ the
-    * two-scorer batch composition bit for bit. */
-  def streamingDomainGate(spark: SparkSession, docStream: DataFrame,
-                          targetArpa: String, generalArpa: String,
-                          minMl: Double): DataFrame =
-    graft.ext.TextOps.mooreLewisGate(spark, docStream, targetArpa,
-      generalArpa, minMl)
-
   /** Streaming CCNet BUCKET gate — the ingest-door form of the x221/
     * x224 composition: arriving documents score under the stored
     * (capped+pruned) ARPA model through the one-aggregation
@@ -594,27 +429,6 @@ object StreamingOps {
       graft.ext.TextOps.knCrossEntropyStoredArpa(spark, docStream,
         arpaPath, collapse = false, passthrough = Seq("lang")),
       thresholds, scoreCol = "h10")
-
-  /** The corpus gate COMPOSED with the stored-LM gates
-    * ([[graft.ext.TextOps.corpusLmGate]] verbatim): robots, PII
-    * scrub, stored-set censor, Gopher, the dual-model Moore-Lewis /
-    * perplexity verdicts, and optionally the C4 stage — in ONE query
-    * with ONE stateful aggregation (the censor's line rows and the LM
-    * walk's gram rows union into a single doc-keyed agg, the
-    * [[streamingIngestGate]] row-family shape). The LM scores the
-    * scrubbed pre-censor text — the door-side contract documented on
-    * the operator. StreamingSpec pins ≡ the piecewise batch
-    * composition bit for bit. */
-  def streamingCorpusLmGate(spark: SparkSession, docStream: DataFrame,
-                            rules: DataFrame, boiler: DataFrame,
-                            targetArpa: String, generalArpa: String,
-                            maxH10: Double, minMl: Double,
-                            minWords: Long = 50L,
-                            reline: Column => Column = identity,
-                            c4MinWordsPerLine: Int = 0): DataFrame =
-    graft.ext.TextOps.corpusLmGate(spark, docStream, rules, boiler,
-      targetArpa, generalArpa, maxH10, minMl, minWords, reline,
-      c4MinWordsPerLine)
 
   /** Streaming BLOOM membership gate — x226 at the ingest door: each
     * arriving document's k-gram windows probe the STORED Bloom word
@@ -659,25 +473,9 @@ object StreamingOps {
           .cast("long").as("n_maybe_hits"))
   }
 
-  /** Streaming QUALITY gate from the STORED model: arriving documents
-    * score under safetensors-persisted logistic weights (the x206
-    * artifact) — weights ride in as literals, features project in the
-    * scan stage, zero state. Batch ≡ stream because raw-F64 weights
-    * round-trip bit-exactly and the scorer never checkpoints. */
-  def streamingQualityGate(docStream: DataFrame,
-                           weights: Array[Double]): DataFrame =
-    graft.ext.TextOps.scoreLogisticQuality(docStream, weights)
-
-  /** Streaming CLUSTER assignment — the x199 argmax on a stream:
-    * arriving embeddings take their trained-centroid cluster via the
-    * literal-centroid cosine argmax, a pure scan-stage projection with
-    * zero state (the centroids were trained ONCE by the batch
-    * [[graft.ext.Similarity.trainIvfCentroids]] job and ride in as
-    * literals). Feeds routing/drift monitoring without a batch pass. */
-  def streamingClusterAssign(vecStream: DataFrame,
-                             cents: Array[Array[Double]]): DataFrame =
-    graft.ext.Similarity.kmeansAssign(vecStream, cents)
-
+  /** Run a streaming aggregation over existing parquet as a bounded stream
+    * (memory sink), for batch-equivalence testing. Returns the final table.
+    */
   def runBounded(spark: SparkSession, agg: DataFrame, name: String,
                  mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val q: StreamingQuery = agg.writeStream

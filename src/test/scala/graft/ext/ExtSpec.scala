@@ -1490,34 +1490,49 @@ class ExtSpec extends AnyFunSuite {
       (4L, "en", base + " zig2 zag2 zog2 zug2"),
       (5L, "en", "zip3 zap3 zop3 zup3 zep3 " + base),
       (6L, "en", "a1 b1 c1 d1 e1 f1 g1 h1 i1 j1 k1 l1"),
-      (7L, "de", "der hund lief zum haus und der hund lief"))
+      (7L, "de", "der hund lief zum haus und der hund lief"),
+      (8L, "en", base))                     // ties doc 2's score
       .toDF("doc_id", "lang", "text")
     val scored = TextOps.knScore(cdocs, 2)
     val grouped = Curation.ccnetBucketsScored(scored, cdocs,
         scoreCol = "kn_score", cntCol = "n_bigrams")
       .collect().map(r => r.getLong(0) -> r.getString(4)).toMap
-    // value-form thresholds from the FULL corpus = the group rule's
-    // verdicts exactly (t_head IS the head groups' max score)
+    // the group rule replayed on the driver over the collected
+    // (lang, ppl) rows: per language, a score group is head iff its
+    // inclusive cumulative count has 3·cum ≤ n, middle iff 3·cum ≤ 2n
     val sl = scored.withColumn("ppl", round(col("kn_score"), 9))
       .join(cdocs.select("doc_id", "lang"), Seq("doc_id"))
-    val thr = Curation.ccnetThresholds(sl)
-    val applied = Curation.ccnetApplyThresholds(sl, thr)
-      .collect().map(r => r.getAs[Long]("doc_id") ->
-        r.getAs[String]("bucket")).toMap
-    assert(applied == grouped, s"applied $applied vs grouped $grouped")
+    val rows = sl.select("doc_id", "lang", "ppl").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
+    val replay = rows.groupBy(_._2).values.flatMap { lang =>
+      val n = lang.length
+      val cum = lang.groupBy(_._3).toSeq.sortBy(_._1)
+        .scanLeft(0.0 -> 0) { case ((_, c), (ppl, g)) => ppl -> (c + g.length) }
+        .toMap
+      lang.map { case (id, _, ppl) =>
+        id -> (if (3 * cum(ppl) <= n) "head"
+               else if (3 * cum(ppl) <= 2 * n) "middle" else "tail")
+      }
+    }.toMap
+    assert(grouped == replay, s"kernel $grouped vs replay $replay")
+    assert(replay.values.toSet == Set("head", "middle", "tail"))
+    // the tie: one score group, one bucket
+    val ppl = rows.map(r => r._1 -> r._3).toMap
+    assert(ppl(2L) == ppl(8L) && grouped(2L) == grouped(8L))
     // the lone-doc language: no group fits a third -> NULL cutoffs ->
-    // the apply rule lands it in tail (same as the group rule)
+    // the apply rule lands it in tail, as the group rule does
+    val thr = Curation.ccnetThresholds(sl)
     val thrDe = thr.filter(col("lang") === "de").collect()
     assert(thrDe.length == 1 && thrDe.head.isNullAt(1) &&
       thrDe.head.isNullAt(2), "de cutoffs should be NULL")
-    assert(applied(7L) == "tail")
+    assert(grouped(7L) == "tail")
     // sampling at num = den keeps every document in the census: the
     // sampled composition degenerates to the full threshold form
     val all = Curation.ccnetBucketsSampledScored(scored, cdocs,
         scoreCol = "kn_score", cntCol = "n_bigrams",
         num = 100, den = 100)
       .collect().map(r => r.getLong(0) -> r.getString(4)).toMap
-    assert(all == grouped, s"num=den $all vs grouped $grouped")
+    assert(all == replay, s"num=den $all vs replay $replay")
     // an empty threshold table (language never sampled) -> all tail
     val noThr = Seq.empty[(String, Double, Double)]
       .toDF("lang", "t_head", "t_mid")

@@ -573,20 +573,39 @@ class GeoTiffSpec extends AnyFunSuite {
     }
   }
 
-  test("a zero-width predictor-2 raster writes and parses instead of spinning") {
-    // a 0-byte row must not stall the predictor's row loop; run on a
-    // daemon thread so a regression fails here instead of hanging the suite
+  test("a zero-width raster is refused by the writer and by the reader") {
     val meta = GeoTiffFixture.meta.copy(dataset = "empty.tif", width = 0,
       nodata = None)
-    var got: Option[Array[Float]] = None
-    val t = new Thread(() => got = Some(GeoTiff.parse("empty.tif",
-      GeoTiff.write(meta, Array.empty[Float], predictor = 2, sampleBits = 8,
-        sampleFormat = 1)).values))
-    t.setDaemon(true)
-    t.start()
-    t.join(30000)
-    assert(!t.isAlive, "predictor loop still running after 30 s")
-    assert(got.exists(_.isEmpty))
+    // (predictor, sampleBits, sampleFormat): the integer and fp paths
+    for ((pred, bits, fmt) <- Seq((2, 8, 1), (3, 32, 3))) {
+      for (tile <- Seq(0, 16))
+        intercept[IllegalArgumentException](GeoTiff.write(meta,
+          Array.empty[Float], tileSize = tile, predictor = pred,
+          sampleBits = bits, sampleFormat = fmt))
+      // a zero-width file: a one-column file with ImageWidth patched to 0
+      val one = meta.copy(width = 1)
+      val bytes = GeoTiff.write(one, Array.fill(one.height)(1.0f),
+        predictor = pred, sampleBits = bits, sampleFormat = fmt)
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val ifd = bb.getInt(4)
+      val width = (0 until bb.getShort(ifd).toInt)
+        .map(i => ifd + 2 + 12 * i).find(bb.getShort(_) == 256).get
+      bb.putInt(width + 8, 0)
+      val e = intercept[IllegalArgumentException](
+        GeoTiff.parse("empty.tif", bytes))
+      assert(e.getMessage.contains("GeoTIFF empty.tif: empty 0x"), e.getMessage)
+    }
+  }
+
+  test("a striped write with rowsPerStrip = 0 is refused, a tiled one " +
+    "ignores it") {
+    import GeoTiffFixture.{meta, values}
+    intercept[IllegalArgumentException](
+      GeoTiff.write(meta, values, rowsPerStrip = 0))
+    val r = GeoTiff.parse(meta.dataset,
+      GeoTiff.write(meta, values, rowsPerStrip = 0, tileSize = 16))
+    assert(r.values.sameElements(values))
   }
 
   test("writer bytes are pinned over codecs, predictors, bands, sample " +

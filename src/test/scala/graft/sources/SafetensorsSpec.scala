@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SharedSpark
+import graft.{SharedSpark, TempDirs}
 
 class SafetensorsSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -87,12 +87,13 @@ class SafetensorsSpec extends AnyFunSuite {
       (i.toLong, ("tok " * (i + 2)).trim + " the and of",
         (20L + 15L * i))).toDF("doc_id", "text", "n_chars")
     val w = graft.ext.TextOps.trainLogisticWeights(docs)
-    val path = java.nio.file.Files.createTempDirectory("st_spec")
-      .resolve("m.safetensors").toString
-    Safetensors.write(path,
-      Map("w" -> Safetensors.F64(Seq(3L), w)))
-    val (ts, _) = Safetensors.read(path)
-    val w2 = ts("w").asInstanceOf[Safetensors.F64].data
+    val w2 = TempDirs.withTempDir("st_spec") { dir =>
+      val path = dir.resolve("m.safetensors").toString
+      Safetensors.write(path,
+        Map("w" -> Safetensors.F64(Seq(3L), w)))
+      val (ts, _) = Safetensors.read(path)
+      ts("w").asInstanceOf[Safetensors.F64].data
+    }
     assert(w.toSeq == w2.toSeq) // bit-exact through the file
     val inline = graft.ext.TextOps.trainLogisticQuality(docs)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

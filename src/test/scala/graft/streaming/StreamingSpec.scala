@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{ArtifactMemo, SharedSpark}
+import graft.{ArtifactMemo, SharedSpark, TempDirs}
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -160,7 +160,7 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("domain", "robots_txt")
     val rules = graft.ext.UrlOps.parseRobots(robots)
     val streamed = graft.streaming.StreamingOps.runBounded(spark,
-      graft.streaming.StreamingOps.streamingRobotsGate(
+      graft.ext.UrlOps.robotsGateStateless(
         urlsOf(docsStream), rules),
       "robots_stream_test", OutputMode.Append())
     val batch = graft.ext.UrlOps.robotsGate(urlsOf(docsBatch), rules)
@@ -221,7 +221,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("crawled_at", date_add(to_date(lit("2026-01-15")),
         (length(col("u")) % 30).cast("int")))
     val streamed = graft.streaming.StreamingOps.runBounded(spark,
-      graft.streaming.StreamingOps.streamingRecrawlTick(
+      graft.ext.UrlOps.recrawlTick(
         listedOf(docsStream), crawled),
       "recrawl_tick_test", OutputMode.Append())
     val batch = graft.ext.UrlOps
@@ -242,7 +242,7 @@ class StreamingSpec extends AnyFunSuite {
     val docsStream = spark.readStream.schema(docsBatch.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val streamed = graft.streaming.StreamingOps.runBounded(spark,
-      graft.streaming.StreamingOps.streamingManifest(docsStream),
+      graft.ext.Curation.shardManifest(docsStream),
       "manifest_test", OutputMode.Update())
     val batch = graft.ext.Curation.shardManifest(docsBatch)
     // update mode re-emits a shard's row per batch; the LAST emission
@@ -330,7 +330,7 @@ class StreamingSpec extends AnyFunSuite {
     val docsBatch = plant(spark.read.parquet(s"$dir/documents.parquet"))
 
     val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingPiiGate(docStream),
+      graft.ext.TextOps.piiReport(docStream),
       "pii_gate_test",
       org.apache.spark.sql.streaming.OutputMode.Append())
     val batch = graft.ext.TextOps.piiReport(docsBatch)
@@ -366,11 +366,12 @@ class StreamingSpec extends AnyFunSuite {
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
       val streamed = StreamingOps.runBounded(spark,
-        StreamingOps.streamingDsirGate(spark, docStream, modelDir, dim = 1024),
+        graft.ext.TextOps.dsirScoreStream(spark, docStream, modelDir,
+          dim = 1024),
         "dsir_gate_test",
         org.apache.spark.sql.streaming.OutputMode.Complete())
       // bit-exact twin: the SAME gate shape on the batch DataFrame
-      val batch = StreamingOps.streamingDsirGate(spark, docsBatch,
+      val batch = graft.ext.TextOps.dsirScoreStream(spark, docsBatch,
         modelDir, dim = 1024)
       val s = streamed.collect().map(_.toSeq).toSet
       val b = batch.collect().map(_.toSeq).toSet
@@ -411,7 +412,7 @@ class StreamingSpec extends AnyFunSuite {
     val bench = docsBatch.filter(col("source") === "src0")
 
     val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingContamination(docStream, bench),
+      graft.ext.Curation.contamination(docStream, bench),
       "contamination_gate_test",
       org.apache.spark.sql.streaming.OutputMode.Complete())
     val batch = graft.ext.Curation.contamination(docsBatch, bench)
@@ -493,15 +494,15 @@ class StreamingSpec extends AnyFunSuite {
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val terms = Seq("hash", "vector")
     val pairs = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
-      ("fim_gate_test", df => StreamingOps.streamingFimGate(df)),
+      ("fim_gate_test", df => graft.ext.Curation.fimTransform(df)),
       ("blocklist_gate_test",
-        df => StreamingOps.streamingBlocklistGate(df, terms)),
+        df => graft.ext.Curation.blocklistGate(df, terms)),
       ("entropy_gate_test",
-        df => StreamingOps.streamingEntropyGate(df, 3.5, 5.0)),
+        df => graft.ext.Curation.entropyGate(df, 3.5, 5.0)),
       ("span_corrupt_test",
-        df => StreamingOps.streamingSpanCorrupt(df)),
+        df => graft.ext.Curation.spanCorrupt(df)),
       ("ul2_gate_test",
-        df => StreamingOps.streamingUl2Gate(df)))
+        df => graft.ext.Curation.ul2Denoisers(df)))
     pairs.foreach { case (name, gate) =>
       val streamed = StreamingOps.runBounded(spark, gate(docStream), name,
         org.apache.spark.sql.streaming.OutputMode.Append())
@@ -545,7 +546,7 @@ class StreamingSpec extends AnyFunSuite {
         .filter(col("doc_id") >= 400)
 
       val streamed = StreamingOps.runBounded(spark,
-        StreamingOps.streamingIngestGate(spark, incStream, modelDir, index,
+        graft.ext.TextOps.ingestGate(spark, incStream, modelDir, index,
           dim = 1024, minJaccard = 0.35),
         "ingest_gate_test",
         org.apache.spark.sql.streaming.OutputMode.Complete())
@@ -669,21 +670,22 @@ class StreamingSpec extends AnyFunSuite {
       StructField("n_chars", LongType)))
     val docsBatch = spark.read.parquet(s"$dir/documents.parquet")
     val w = graft.ext.TextOps.trainLogisticWeights(docsBatch)
-    val path = java.nio.file.Files.createTempDirectory("st_gate")
-      .resolve("m.safetensors").toString
-    graft.sources.Safetensors.write(path,
-      Map("w" -> graft.sources.Safetensors.F64(Seq(3L), w)))
-    val (ts, _) = graft.sources.Safetensors.read(path)
-    val w2 = ts("w").asInstanceOf[graft.sources.Safetensors.F64].data
-    val docStream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingQualityGate(docStream, w2),
-      "quality_gate_test", OutputMode.Append())
-    val batch = graft.ext.TextOps.scoreLogisticQuality(docsBatch, w)
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batch.collect().map(_.toSeq).toSet
-    assert(s == b && s.size == 500)
+    TempDirs.withTempDir("st_gate") { tmp =>
+      val path = tmp.resolve("m.safetensors").toString
+      graft.sources.Safetensors.write(path,
+        Map("w" -> graft.sources.Safetensors.F64(Seq(3L), w)))
+      val (ts, _) = graft.sources.Safetensors.read(path)
+      val w2 = ts("w").asInstanceOf[graft.sources.Safetensors.F64].data
+      val docStream = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val streamed = StreamingOps.runBounded(spark,
+        graft.ext.TextOps.scoreLogisticQuality(docStream, w2),
+        "quality_gate_test", OutputMode.Append())
+      val batch = graft.ext.TextOps.scoreLogisticQuality(docsBatch, w)
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batch.collect().map(_.toSeq).toSet
+      assert(s == b && s.size == 500)
+    }
   }
 
   test("streaming cluster assignment: trained centroids as literals, " +
@@ -698,7 +700,7 @@ class StreamingSpec extends AnyFunSuite {
     val vecStream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
     val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingClusterAssign(vecStream, cents),
+      graft.ext.Similarity.kmeansAssign(vecStream, cents),
       "cluster_assign_test", OutputMode.Append())
     val batch = graft.ext.Similarity.kmeansAssign(vecsBatch, cents)
     val s = streamed.collect().map(_.toSeq).toSet
@@ -816,21 +818,22 @@ class StreamingSpec extends AnyFunSuite {
       .filter(col("keep"))
       .select(col("doc_id"), col("source"),
         col("clean_text").as("text"), col("n_lines"), col("n_kept"))
-    val dir = java.nio.file.Files.createTempDirectory("c4gate")
-    docs.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
-    val docsStream = spark.readStream.schema(docs.schema)
-      .parquet(s"$dir/documents.parquet")
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingCorpusGate(docsStream, rules, boiler,
-        minWords = 5L, c4MinWordsPerLine = 2),
-      "c4_fold_test", OutputMode.Complete())
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batchC4.collect().map(_.toSeq).toSet
-    assert(s == b, s"stream $s vs batch $b")
-    // exactly doc 1 survives: 2 fails the sentence rule, 3/4 the page
-    // tells, 5 the minKeptLines floor
-    assert(s.map(_.head) == Set(1L), s"survivors $s")
+    TempDirs.withTempDir("c4gate") { dir =>
+      docs.coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/documents.parquet")
+      val docsStream = spark.readStream.schema(docs.schema)
+        .parquet(s"$dir/documents.parquet")
+      val streamed = StreamingOps.runBounded(spark,
+        StreamingOps.streamingCorpusGate(docsStream, rules, boiler,
+          minWords = 5L, c4MinWordsPerLine = 2),
+        "c4_fold_test", OutputMode.Complete())
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batchC4.collect().map(_.toSeq).toSet
+      assert(s == b, s"stream $s vs batch $b")
+      // exactly doc 1 survives: 2 fails the sentence rule, 3/4 the page
+      // tells, 5 the minKeptLines floor
+      assert(s.map(_.head) == Set(1L), s"survivors $s")
+    }
   }
 
   test("streaming C4 gate equals the batch c4LineFilters — stateless, " +
@@ -847,97 +850,100 @@ class StreamingSpec extends AnyFunSuite {
       (5L, Seq(good, good, good, "the brace token { appears here.")
         .mkString("\n")))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("c4stream")
-    docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val stream = spark.readStream.schema(docs.schema)
-      .parquet(s"$dir/documents.parquet")
-    val s = StreamingOps.runBounded(spark,
-        StreamingOps.streamingC4Gate(stream), "c4_gate_test",
-        OutputMode.Append())
-      .collect().map(_.toSeq).toSet
-    val b = graft.ext.Curation.c4LineFilters(docs)
-      .collect().map(_.toSeq).toSet
-    assert(s == b, s"stream $s vs batch $b")
-    // docs 1 and 3 keep their three sentences; 2 has no terminal
-    // punctuation, 4 and 5 fail the page tells
-    assert(s.collect { case r if r(4) == true => r.head } == Set(1L, 3L))
+    TempDirs.withTempDir("c4stream") { dir =>
+      docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
+      val stream = spark.readStream.schema(docs.schema)
+        .parquet(s"$dir/documents.parquet")
+      val s = StreamingOps.runBounded(spark,
+          graft.ext.Curation.c4LineFilters(stream), "c4_gate_test",
+          OutputMode.Append())
+        .collect().map(_.toSeq).toSet
+      val b = graft.ext.Curation.c4LineFilters(docs)
+        .collect().map(_.toSeq).toSet
+      assert(s == b, s"stream $s vs batch $b")
+      // docs 1 and 3 keep their three sentences; 2 has no terminal
+      // punctuation, 4 and 5 fail the page tells
+      assert(s.collect { case r if r(4) == true => r.head } == Set(1L, 3L))
+    }
   }
 
   test("streaming perplexity gate: the uncollapsed stored-ARPA walk " +
     "equals the batch log-domain scorer bit for bit") {
     val dir = "/root/testdata/sf0.001"
     val docsBatch = graft.Tables.documents(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("st_ppl")
-      .resolve("m.arpa").toString
-    graft.sources.Arpa.writeLevels(path,
-      graft.ext.TextOps.knArpaLevels(docsBatch, order = 2,
-        vocabSize = 256))
-    val scoredBatch = graft.ext.TextOps.knCrossEntropyStoredArpa(
-      spark, docsBatch, path)
-    // gate at the corpus median so the threshold demonstrably splits
-    val thr = scoredBatch.select("h10").collect().map(_.getDouble(0))
-      .sorted.apply(250)
-    val batch = scoredBatch.withColumn("pass", col("h10") <= thr)
-    val docsStream = spark.readStream.schema(docsBatch.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingPerplexityGate(spark, docsStream, path,
-        maxH10 = thr),
-      "ppl_gate_test", OutputMode.Complete())
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batch.collect().map(_.toSeq).toSet
-    assert(s == b && s.size == 500, s"stream ${s.size} vs batch ${b.size}")
-    // the threshold splits the corpus (gate is non-trivial)
-    val nPass = streamed.filter(col("pass")).count()
-    assert(nPass > 0 && nPass < 500, s"pass count $nPass")
+    TempDirs.withTempDir("st_ppl") { tmp =>
+      val path = tmp.resolve("m.arpa").toString
+      graft.sources.Arpa.writeLevels(path,
+        graft.ext.TextOps.knArpaLevels(docsBatch, order = 2,
+          vocabSize = 256))
+      val scoredBatch = graft.ext.TextOps.knCrossEntropyStoredArpa(
+        spark, docsBatch, path)
+      // gate at the corpus median so the threshold demonstrably splits
+      val thr = scoredBatch.select("h10").collect().map(_.getDouble(0))
+        .sorted.apply(250)
+      val batch = scoredBatch.withColumn("pass", col("h10") <= thr)
+      val docsStream = spark.readStream.schema(docsBatch.schema)
+        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val streamed = StreamingOps.runBounded(spark,
+        StreamingOps.streamingPerplexityGate(spark, docsStream, path,
+          maxH10 = thr),
+        "ppl_gate_test", OutputMode.Complete())
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batch.collect().map(_.toSeq).toSet
+      assert(s == b && s.size == 500, s"stream ${s.size} vs batch ${b.size}")
+      // the threshold splits the corpus (gate is non-trivial)
+      val nPass = streamed.filter(col("pass")).count()
+      assert(nPass > 0 && nPass < 500, s"pass count $nPass")
+    }
   }
 
   test("streaming domain gate: the one-aggregation dual-model walk " +
     "equals the two-scorer Moore-Lewis composition bit for bit") {
     val dir = "/root/testdata/sf0.001"
     val docsBatch = graft.Tables.documents(spark, dir)
-    val tmp = java.nio.file.Files.createTempDirectory("st_ml")
-    val tPath = tmp.resolve("t.arpa").toString
-    val gPath = tmp.resolve("g.arpa").toString
-    graft.sources.Arpa.writeLevels(tPath,
-      graft.ext.TextOps.knArpaLevels(
-        docsBatch.filter(col("source") === "src0"), order = 2,
-        vocabSize = 128))
-    graft.sources.Arpa.writeLevels(gPath,
-      graft.ext.TextOps.knArpaLevels(docsBatch, order = 2,
-        vocabSize = 128))
-    // batch twin: the TWO-scorer composition (collapsed occurrences,
-    // separate walks) — the integer sums make the one-pass dual walk
-    // provably equal
-    val ht = graft.ext.TextOps.knCrossEntropyStoredArpa(
-      spark, docsBatch, tPath).toDF("doc_id", "n_bigrams", "h_target")
-    val hg = graft.ext.TextOps.knCrossEntropyStoredArpa(
-      spark, docsBatch, gPath).toDF("doc_id", "ng", "h_general")
-    val batch = ht.join(hg.select(col("doc_id"), col("h_general")),
-        Seq("doc_id"))
-      .withColumn("ml_score", col("h_general") - col("h_target"))
-      .withColumn("pass", col("ml_score") >= 0.0)
-    val docsStream = spark.readStream.schema(docsBatch.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingDomainGate(spark, docsStream, tPath, gPath,
-        minMl = 0.0),
-      "domain_gate_test", OutputMode.Complete())
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batch.collect().map(_.toSeq).toSet
-    assert(s == b && s.size == 500, s"stream ${s.size} vs batch ${b.size}")
-    val nPass = streamed.filter(col("pass")).count()
-    assert(nPass > 0 && nPass < 500, s"pass count $nPass")
-    // src0 (the in-domain slice the target model trained on) passes at
-    // a higher rate than the rest
-    val src0Ids = docsBatch.filter(col("source") === "src0")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val passIds = streamed.filter(col("pass"))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val r0 = src0Ids.count(passIds).toDouble / src0Ids.size
-    val rRest = (passIds.size - src0Ids.count(passIds)).toDouble /
-      (500 - src0Ids.size)
-    assert(r0 > rRest, s"src0 pass rate $r0 vs rest $rRest")
+    TempDirs.withTempDir("st_ml") { tmp =>
+      val tPath = tmp.resolve("t.arpa").toString
+      val gPath = tmp.resolve("g.arpa").toString
+      graft.sources.Arpa.writeLevels(tPath,
+        graft.ext.TextOps.knArpaLevels(
+          docsBatch.filter(col("source") === "src0"), order = 2,
+          vocabSize = 128))
+      graft.sources.Arpa.writeLevels(gPath,
+        graft.ext.TextOps.knArpaLevels(docsBatch, order = 2,
+          vocabSize = 128))
+      // batch twin: the TWO-scorer composition (collapsed occurrences,
+      // separate walks) — the integer sums make the one-pass dual walk
+      // provably equal
+      val ht = graft.ext.TextOps.knCrossEntropyStoredArpa(
+        spark, docsBatch, tPath).toDF("doc_id", "n_bigrams", "h_target")
+      val hg = graft.ext.TextOps.knCrossEntropyStoredArpa(
+        spark, docsBatch, gPath).toDF("doc_id", "ng", "h_general")
+      val batch = ht.join(hg.select(col("doc_id"), col("h_general")),
+          Seq("doc_id"))
+        .withColumn("ml_score", col("h_general") - col("h_target"))
+        .withColumn("pass", col("ml_score") >= 0.0)
+      val docsStream = spark.readStream.schema(docsBatch.schema)
+        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val streamed = StreamingOps.runBounded(spark,
+        graft.ext.TextOps.mooreLewisGate(spark, docsStream, tPath, gPath,
+          minMl = 0.0),
+        "domain_gate_test", OutputMode.Complete())
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batch.collect().map(_.toSeq).toSet
+      assert(s == b && s.size == 500, s"stream ${s.size} vs batch ${b.size}")
+      val nPass = streamed.filter(col("pass")).count()
+      assert(nPass > 0 && nPass < 500, s"pass count $nPass")
+      // src0 (the in-domain slice the target model trained on) passes at
+      // a higher rate than the rest
+      val src0Ids = docsBatch.filter(col("source") === "src0")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      val passIds = streamed.filter(col("pass"))
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      val r0 = src0Ids.count(passIds).toDouble / src0Ids.size
+      val rRest = (passIds.size - src0Ids.count(passIds)).toDouble /
+        (500 - src0Ids.size)
+      assert(r0 > rRest, s"src0 pass rate $r0 vs rest $rRest")
+    }
   }
 
   test("streaming ccnet bucket gate: arrivals verdict against the " +
@@ -945,31 +951,32 @@ class StreamingSpec extends AnyFunSuite {
     "application") {
     val dir = "/root/testdata/sf0.001"
     val docsBatch = graft.Tables.documents(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("st_ccnet")
-      .resolve("m.arpa").toString
-    graft.sources.Arpa.writeLevels(path,
-      graft.ext.TextOps.knArpaLevels(docsBatch, order = 2,
-        vocabSize = 256))
-    // the batch job's stored artifact: per-language h10 terciles
-    val scoredBatch = graft.ext.TextOps.knCrossEntropyStoredArpa(
-      spark, docsBatch, path, passthrough = Seq("lang"))
-    val thr = graft.ext.Curation.ccnetThresholds(scoredBatch,
-      scoreCol = "h10").localCheckpoint(true)
-    val batch = graft.ext.Curation.ccnetApplyThresholds(scoredBatch,
-      thr, scoreCol = "h10")
-    val docsStream = spark.readStream.schema(docsBatch.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingCcnetBucketGate(spark, docsStream, path,
-        thr),
-      "ccnet_bucket_gate_test", OutputMode.Complete())
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batch.collect().map(_.toSeq).toSet
-    assert(s == b && s.size == 500, s"stream ${s.size} vs batch ${b.size}")
-    // the verdict is non-trivial: all three buckets occur
-    val buckets = streamed.select("bucket").distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(buckets == Set("head", "middle", "tail"), s"got $buckets")
+    TempDirs.withTempDir("st_ccnet") { tmp =>
+      val path = tmp.resolve("m.arpa").toString
+      graft.sources.Arpa.writeLevels(path,
+        graft.ext.TextOps.knArpaLevels(docsBatch, order = 2,
+          vocabSize = 256))
+      // the batch job's stored artifact: per-language h10 terciles
+      val scoredBatch = graft.ext.TextOps.knCrossEntropyStoredArpa(
+        spark, docsBatch, path, passthrough = Seq("lang"))
+      val thr = graft.ext.Curation.ccnetThresholds(scoredBatch,
+        scoreCol = "h10").localCheckpoint(true)
+      val batch = graft.ext.Curation.ccnetApplyThresholds(scoredBatch,
+        thr, scoreCol = "h10")
+      val docsStream = spark.readStream.schema(docsBatch.schema)
+        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val streamed = StreamingOps.runBounded(spark,
+        StreamingOps.streamingCcnetBucketGate(spark, docsStream, path,
+          thr),
+        "ccnet_bucket_gate_test", OutputMode.Complete())
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batch.collect().map(_.toSeq).toSet
+      assert(s == b && s.size == 500, s"stream ${s.size} vs batch ${b.size}")
+      // the verdict is non-trivial: all three buckets occur
+      val buckets = streamed.select("bucket").distinct()
+        .collect().map(_.getString(0)).toSet
+      assert(buckets == Set("head", "middle", "tail"), s"got $buckets")
+    }
   }
 
   test("composed corpus+LM gate: ONE aggregation carries the censor " +
@@ -992,51 +999,52 @@ class StreamingSpec extends AnyFunSuite {
       Seq(("d.com", "User-agent: *\nAllow: /"))
         .toDF("domain", "robots_txt")).localCheckpoint(true)
     val boiler = Seq.empty[Long].toDF("h")
-    val tmp = java.nio.file.Files.createTempDirectory("st_clm")
-    val tPath = tmp.resolve("t.arpa").toString
-    val gPath = tmp.resolve("g.arpa").toString
-    // target model: the fox dialect; general: everything
-    graft.sources.Arpa.writeLevels(tPath,
-      graft.ext.TextOps.knArpaLevels(
-        docs.filter(col("doc_id").isin(1L, 4L)), order = 2,
-        vocabSize = 64))
-    graft.sources.Arpa.writeLevels(gPath,
-      graft.ext.TextOps.knArpaLevels(docs, order = 2, vocabSize = 64))
-    // piecewise batch twin: the s1-s4 corpus prefix joined with the
-    // dual-model scorer over the SAME scrubbed pre-censor text, both
-    // verdicts applied — what the fused one-agg form must reproduce
-    val s4 = StreamingOps.streamingCorpusGate(docs, rules, boiler,
-      minWords = 10L)
-    val s2batch = graft.ext.UrlOps.robotsAllowedOnlyByPath(docs, rules)
-      .select(col("doc_id"), col("source"),
-        graft.ext.Cleanse.redactPii(col("text")).as("text"))
-    val ml = graft.ext.TextOps.mooreLewisGate(spark, s2batch, tPath,
-      gPath, minMl = 0.0)
-    val maxH10 = 10.0
-    val batch = s4.join(ml.select("doc_id", "n_bigrams", "h_target",
-        "h_general", "ml_score"), Seq("doc_id"))
-      .filter(col("h_general") <= maxH10 && col("ml_score") >= 0.0)
-      .select("doc_id", "source", "text", "n_lines", "n_kept",
-        "n_bigrams", "h_target", "h_general", "ml_score")
-    val fdir = java.nio.file.Files.createTempDirectory("st_clm_docs")
-    docs.coalesce(1).write.mode("overwrite")
-      .parquet(s"$fdir/documents.parquet")
-    val docsStream = spark.readStream.schema(docs.schema)
-      .parquet(s"$fdir/documents.parquet")
-    val streamed = StreamingOps.runBounded(spark,
-      StreamingOps.streamingCorpusLmGate(spark, docsStream, rules,
-        boiler, tPath, gPath, maxH10 = maxH10, minMl = 0.0,
-        minWords = 10L),
-      "corpus_lm_gate_test", OutputMode.Complete())
-    val s = streamed.collect().map(_.toSeq).toSet
-    val b = batch.collect().map(_.toSeq).toSet
-    assert(s == b, s"stream ${s.size} rows vs batch ${b.size}")
-    // both gate families bite: doc 5 falls to gopher, the greek docs
-    // to the domain gate; at least one fox doc survives everything
-    val ids = streamed.select("doc_id").collect()
-      .map(_.getLong(0)).toSet
-    assert(ids.nonEmpty && ids.subsetOf(Set(1L, 3L, 4L)), s"got $ids")
-    assert(!ids.contains(2L) && !ids.contains(5L) && !ids.contains(6L))
+    TempDirs.withTempDir("st_clm") { tmp =>
+      val tPath = tmp.resolve("t.arpa").toString
+      val gPath = tmp.resolve("g.arpa").toString
+      // target model: the fox dialect; general: everything
+      graft.sources.Arpa.writeLevels(tPath,
+        graft.ext.TextOps.knArpaLevels(
+          docs.filter(col("doc_id").isin(1L, 4L)), order = 2,
+          vocabSize = 64))
+      graft.sources.Arpa.writeLevels(gPath,
+        graft.ext.TextOps.knArpaLevels(docs, order = 2, vocabSize = 64))
+      // piecewise batch twin: the s1-s4 corpus prefix joined with the
+      // dual-model scorer over the SAME scrubbed pre-censor text, both
+      // verdicts applied — what the fused one-agg form must reproduce
+      val s4 = StreamingOps.streamingCorpusGate(docs, rules, boiler,
+        minWords = 10L)
+      val s2batch = graft.ext.UrlOps.robotsAllowedOnlyByPath(docs, rules)
+        .select(col("doc_id"), col("source"),
+          graft.ext.Cleanse.redactPii(col("text")).as("text"))
+      val ml = graft.ext.TextOps.mooreLewisGate(spark, s2batch, tPath,
+        gPath, minMl = 0.0)
+      val maxH10 = 10.0
+      val batch = s4.join(ml.select("doc_id", "n_bigrams", "h_target",
+          "h_general", "ml_score"), Seq("doc_id"))
+        .filter(col("h_general") <= maxH10 && col("ml_score") >= 0.0)
+        .select("doc_id", "source", "text", "n_lines", "n_kept",
+          "n_bigrams", "h_target", "h_general", "ml_score")
+      val fdir = tmp.resolve("docs")
+      docs.coalesce(1).write.mode("overwrite")
+        .parquet(s"$fdir/documents.parquet")
+      val docsStream = spark.readStream.schema(docs.schema)
+        .parquet(s"$fdir/documents.parquet")
+      val streamed = StreamingOps.runBounded(spark,
+        graft.ext.TextOps.corpusLmGate(spark, docsStream, rules,
+          boiler, tPath, gPath, maxH10 = maxH10, minMl = 0.0,
+          minWords = 10L),
+        "corpus_lm_gate_test", OutputMode.Complete())
+      val s = streamed.collect().map(_.toSeq).toSet
+      val b = batch.collect().map(_.toSeq).toSet
+      assert(s == b, s"stream ${s.size} rows vs batch ${b.size}")
+      // both gate families bite: doc 5 falls to gopher, the greek docs
+      // to the domain gate; at least one fox doc survives everything
+      val ids = streamed.select("doc_id").collect()
+        .map(_.getLong(0)).toSet
+      assert(ids.nonEmpty && ids.subsetOf(Set(1L, 3L, 4L)), s"got $ids")
+      assert(!ids.contains(2L) && !ids.contains(5L) && !ids.contains(6L))
+    }
   }
 
   test("streaming bloom gate: arrivals probe the stored word table " +
