@@ -1160,9 +1160,8 @@ object Curation {
           (col("nr") + nb).cast("double"))))
     valued.groupBy(col(idCol)).agg(
         sum("m").as("n_grams"),
-        aggregate(
-          array_sort(collect_list(struct(col("b"), col("val")))),
-          lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
+        graft.ops.Stable.orderedSum(struct(col("b"), col("val")), "val")
+          .as("val_sum"))
       .select(col(idCol), col("n_grams"),
         (col("val_sum") / col("n_grams")).as("dsir_score"))
   }

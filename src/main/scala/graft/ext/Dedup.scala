@@ -42,6 +42,34 @@ object Dedup {
       graft.functions.HashExprs.min_hash(
         tokenHashes(col(textCol), shingleK), numHashes))
 
+  /** The band rule's rows per band: `numHashes` must split into
+    * `bands` whole bands of at least one hash each — zero rows would key
+    * every band on the empty string (an all-pairs join), and a remainder
+    * would drop the trailing hashes silently. */
+  private[graft] def bandRows(numHashes: Int, bands: Int): Int = {
+    require(bands >= 1 && numHashes >= bands && numHashes % bands == 0,
+      s"numHashes=$numHashes must split into whole bands, got bands=$bands")
+    numHashes / bands
+  }
+
+  /** LSH band keys of a signature column: one
+    * `xxhash64(concat_ws(",", band's hashes), band)` per band, in band
+    * order — every MinHash banding join keys on these (the caller
+    * posexplodes them into `(band, bucket)`). */
+  private[graft] def bandKeys(mh: Column, numHashes: Int,
+                              bands: Int): Column = {
+    val rows = bandRows(numHashes, bands)
+    array((0 until bands).map { b =>
+      xxhash64(concat_ws(",",
+        (0 until rows).map(r => element_at(mh, b * rows + r + 1)): _*),
+        lit(b))
+    }: _*)
+  }
+
+  /** Exact Jaccard of two hash-set columns. */
+  private[graft] def exactJaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+
   /** LSH band key: split the signature into `bands` bands of `rowsPerBand`
     * and hash each band. Docs sharing ANY band bucket are candidates.
     * A pair colliding in several bands is deduplicated by grouping on the
@@ -51,11 +79,8 @@ object Dedup {
                     rowsPerBand: Int = 4): DataFrame = {
     val banded = withSig.select(
       col("doc_id"), col("minhash"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(concat_ws(",",
-          (0 until rowsPerBand).map(r =>
-            element_at(col("minhash"), b * rowsPerBand + r + 1)): _*), lit(b))
-      }: _*)).as(Seq("band", "bucket")))
+      posexplode(bandKeys(col("minhash"), bands * rowsPerBand, bands))
+        .as(Seq("band", "bucket")))
     val a = banded.select(col("doc_id").as("doc_a"), col("band"), col("bucket"),
                           col("minhash").as("sig_a"))
     val b = banded.select(col("doc_id").as("doc_b"), col("band"), col("bucket"),
@@ -78,11 +103,8 @@ object Dedup {
                         rowsPerBand: Int): DataFrame = {
     val banded = withSig.select(
       col("doc_id"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(concat_ws(",",
-          (0 until rowsPerBand).map(r =>
-            element_at(col("minhash"), b * rowsPerBand + r + 1)): _*), lit(b))
-      }: _*)).as(Seq("band", "bucket")))
+      posexplode(bandKeys(col("minhash"), bands * rowsPerBand, bands))
+        .as(Seq("band", "bucket")))
       .select("doc_id", "band", "bucket")
     val a = banded.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
     val b = banded.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
@@ -103,7 +125,7 @@ object Dedup {
                       numHashes: Int = 16, bands: Int = 4,
                       shingleK: Int = 3): DataFrame = {
     val sig = minhashSignature(docs, "text", numHashes, shingleK)
-    lshCandidates(sig, bands, numHashes / bands)
+    lshCandidates(sig, bands, bandRows(numHashes, bands))
       .filter(col("est_jaccard") >= threshold)
       .select("doc_a", "doc_b", "est_jaccard")
   }
@@ -133,13 +155,11 @@ object Dedup {
       .repartition(col("doc_id"))
     val sig = sh.select(col("doc_id"),
       graft.functions.HashExprs.min_hash(col("hs"), numHashes).as("minhash"))
-    val cand = lshCandidatePairs(sig, bands, numHashes / bands)
+    val cand = lshCandidatePairs(sig, bands, bandRows(numHashes, bands))
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))))
+      .withColumn("jaccard", exactJaccard(col("hs_a"), col("hs_b")))
       .filter(col("jaccard") >= minJaccard)
       .select("doc_a", "doc_b", "jaccard")
   }
@@ -173,18 +193,14 @@ object Dedup {
                               minJaccard: Double = 0.5,
                               numHashes: Int = 128, bands: Int = 32,
                               shingleK: Int = 3): DataFrame = {
-    val rows = numHashes / bands
     val inc = minhashIndex(incoming, numHashes, shingleK)
     val all = index.select("doc_id", "hs", "minhash")
       .withColumn("is_new", lit(false))
       .unionByName(inc.withColumn("is_new", lit(true)))
       .repartition(col("doc_id")) // one shared exchange for all consumers
     def banded(df: DataFrame) = df.select(col("doc_id"), col("is_new"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(concat_ws(",",
-          (0 until rows).map(r =>
-            element_at(col("minhash"), b * rows + r + 1)): _*), lit(b))
-      }: _*)).as(Seq("band", "bucket")))
+      posexplode(bandKeys(col("minhash"), numHashes, bands))
+        .as(Seq("band", "bucket")))
       .select("doc_id", "is_new", "band", "bucket")
     val a = banded(all).select(col("doc_id").as("doc_a"),
       col("is_new").as("new_a"), col("band"), col("bucket"))
@@ -199,11 +215,36 @@ object Dedup {
     cand
       .join(all.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
       .join(all.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))))
+      .withColumn("jaccard", exactJaccard(col("hs_a"), col("hs_b")))
       .filter(col("jaccard") >= minJaccard)
       .select("doc_a", "doc_b", "jaccard")
+  }
+
+  /** The stored-index probe — stateless, so a stream can run it: each
+    * `inc` row `(idCol, hs_b)` bands its minhash against the band keys
+    * of the stored [[minhashIndex]] (one equi-join), each candidate
+    * fetches the index doc's hash set `hs_a` (a second equi-join), and
+    * the pairs with an exact Jaccard ≥ `minJaccard` emit as
+    * `(doc_a, idCol, hs_b, hs_a, jaccard)`. A pair colliding in several
+    * bands repeats; the caller's aggregation absorbs the repeats. */
+  private[graft] def indexProbe(inc: DataFrame, idCol: String,
+                                index: DataFrame, minJaccard: Double,
+                                numHashes: Int, bands: Int): DataFrame = {
+    val bInc = inc
+      .withColumn("mh",
+        graft.functions.HashExprs.min_hash(col("hs_b"), numHashes))
+      .select(col(idCol), col("hs_b"),
+        posexplode(bandKeys(col("mh"), numHashes, bands))
+          .as(Seq("band", "bucket")))
+    val aKeys = index.select(col("doc_id").as("doc_a"),
+      posexplode(bandKeys(col("minhash"), numHashes, bands))
+        .as(Seq("band", "bucket")))
+    val aSets = index.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
+    bInc.join(aKeys, Seq("band", "bucket"))
+      .select(col("doc_a"), col(idCol), col("hs_b"))
+      .join(aSets, "doc_a")
+      .withColumn("jaccard", exactJaccard(col("hs_a"), col("hs_b")))
+      .filter(col("jaccard") >= minJaccard)
   }
 
   /** 3. SimHash: 64-bit fingerprint — per bit, sum +1/-1 votes of each

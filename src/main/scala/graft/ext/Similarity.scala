@@ -659,9 +659,8 @@ object Similarity {
       .withColumn("p", col("w") * qCol)
       .filter(col("p") =!= 0.0) // dims the query does not touch
       .groupBy(col(idCol))
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("dim"), col("p")))),
-        lit(0.0), (acc, x) => acc + x.getField("p")).as("score"))
+      .agg(graft.ops.Stable.orderedSum(struct(col("dim"), col("p")), "p")
+        .as("score"))
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
   }

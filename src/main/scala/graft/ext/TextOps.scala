@@ -220,23 +220,11 @@ object TextOps {
     * production trainer makes). */
   def trainBpeMergesFast(docs: DataFrame, nMerges: Int,
                          textCol: String = "text", minCount: Long = 1L)
-      : Seq[(String, String, Long)] = {
-    require(nMerges >= 1, s"need nMerges >= 1: $nMerges")
-    val census = docs
-      .select(explode(words(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("m"))
-      .filter(col("m") >= minCount)
-      .collect()
-      .map { r =>
-        val w = r.getString(0)
-        // code-point symbols — the local image of the engine census'
-        // substring(w, i, 1) over sequence(1, length(w))
-        val syms = w.codePoints().toArray
-          .map(cp => new String(Character.toChars(cp)))
-        (r.getLong(1), syms)
-      }
-    trainMergesLocal(census, nMerges)
-  }
+      : Seq[(String, String, Long)] =
+    // code-point symbols — the local image of the engine census'
+    // substring(w, i, 1) over sequence(1, length(w))
+    trainFromCensus(docs, nMerges, words(col(textCol)), minCount)(
+      _.codePoints().toArray.map(cp => new String(Character.toChars(cp))))
 
   /** BYTE-level sibling of [[trainBpeMergesFast]] — the one-pass form
     * of the sequential byte trainer: GPT-2 pre-token census in ONE job,
@@ -244,18 +232,25 @@ object TextOps {
     * sequential trainer (ByteBpeSpec, 200-merge fixture). */
   def trainByteBpeMergesFast(docs: DataFrame, nMerges: Int,
                              textCol: String = "text", minCount: Long = 1L)
+      : Seq[(String, String, Long)] =
+    trainFromCensus(docs, nMerges,
+      graft.functions.Gpt2Pretokens(col(textCol)), minCount)(
+      graft.functions.ByteBpe.byteSyms(_).toCharArray.map(String.valueOf))
+
+  /** The one-pass trainers' body: the occurrence-weighted census of the
+    * `pieces` pre-tokens (pieces below `minCount` pruned) in ONE job,
+    * each piece split into `syms`, then the driver merge loop. */
+  private def trainFromCensus(docs: DataFrame, nMerges: Int,
+                              pieces: Column, minCount: Long)(
+                              syms: String => Array[String])
       : Seq[(String, String, Long)] = {
     require(nMerges >= 1, s"need nMerges >= 1: $nMerges")
     val census = docs
-      .select(explode(graft.functions.Gpt2Pretokens(col(textCol))).as("w"))
+      .select(explode(pieces).as("w"))
       .groupBy("w").agg(count(lit(1)).as("m"))
       .filter(col("m") >= minCount)
       .collect()
-      .map { r =>
-        val syms = graft.functions.ByteBpe.byteSyms(r.getString(0))
-          .toCharArray.map(String.valueOf)
-        (r.getLong(1), syms)
-      }
+      .map(r => (r.getLong(1), syms(r.getString(0))))
     trainMergesLocal(census, nMerges)
   }
 
@@ -622,14 +617,24 @@ object TextOps {
     val stats = perDoc.agg(statCols.head, statCols.tail: _*)
     val scored = perDoc.crossJoin(broadcast(stats))
       .withColumn("avgdl", col("sum_dl") / col("n_docs"))
+    bm25Top(scored, terms, col("n_docs"), t => col(s"df_${t}"),
+      col("avgdl"), topN, k1, b)
+  }
+
+  /** The BM25 term score summed over `terms` (per-doc `tf_<t>` and `dl`
+    * columns; corpus size, per-term df and avgdl as the caller's
+    * columns or literals) and the top-N cut on (score desc, doc_id) —
+    * the ONE scoring tree of [[bm25Search]] and [[bm25SearchStored]]. */
+  private def bm25Top(perDoc: DataFrame, terms: Seq[String], nDocs: Column,
+                      df: String => Column, avgdl: Column, topN: Int,
+                      k1: Double, b: Double): DataFrame = {
     val termScores = terms.map { t =>
-      val tf = col(s"tf_${t}")
-      val idf = (col("n_docs") - col(s"df_${t}") + lit(0.5)) /
-        (col(s"df_${t}") + lit(0.5))
+      val tf = col(s"tf_$t")
+      val idf = (nDocs - df(t) + lit(0.5)) / (df(t) + lit(0.5))
       idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
+        (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl))
     }
-    scored
+    perDoc
       .withColumn("score", termScores.reduceLeft(_ + _))
       .filter(col("score") > 0)
       .orderBy(col("score").desc, col("doc_id"))
@@ -684,20 +689,8 @@ object TextOps {
       .groupBy("doc_id")
       .agg(tfAggs.head, tfAggs.tail: _*)
       .join(doclens, Seq("doc_id"))
-    val avgdl = lit(sumDl) / lit(nDocs)
-    val termScores = terms.map { t =>
-      val tf = col(s"tf_$t")
-      val df = lit(dfs.getOrElse(t, 0.0))
-      val idf = (lit(nDocs) - df + lit(0.5)) / (df + lit(0.5))
-      idf * (tf * lit(k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl))
-    }
-    perDoc
-      .withColumn("score", termScores.reduceLeft(_ + _))
-      .filter(col("score") > 0)
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(topN)
-      .select("doc_id", "dl", "score")
+    bm25Top(perDoc, terms, lit(nDocs), t => lit(dfs.getOrElse(t, 0.0)),
+      lit(sumDl) / lit(nDocs), topN, k1, b)
   }
 
   /** Bigram language-model quality score — the perplexity-style fluency
@@ -908,10 +901,7 @@ object TextOps {
     val maxId = docs.agg(max(col(idCol))).head().getLong(0)
     require(maxId == nDocs - 1,
       s"heapsFit needs contiguous-from-zero $idCol: max=$maxId, n=$nDocs")
-    def lnS(v: Long): Long = {
-      val x = math.log(v.toDouble) * 1e9
-      (if (x >= 0) math.floor(x + 0.5) else math.ceil(x - 0.5)).toLong
-    }
+    def lnS(v: Long): Long = Unigram.halfAway(math.log(v.toDouble) * 1e9)
     ks.indices.foreach { i =>
       require(nRow.getLong(i) > 0 && vRow.getLong(i) > 0,
         s"heapsFit checkpoint ${fracs(i)} is empty (N=${nRow.getLong(i)}, " +
@@ -1025,13 +1015,9 @@ object TextOps {
         .groupBy("kw").agg(count(lit(1)).as("kc"))
         .orderBy(col("kc").desc, col("kw").asc).limit(vocabSize)
         .select("kw")
-      for (i <- 1 to n) {
-        val ki = broadcast(keep.select(col("kw").as(s"kw$i")))
-        grams = grams
-          .join(ki, col(s"w$i") === col(s"kw$i"), "left")
-          .withColumn(s"w$i", coalesce(col(s"kw$i"), lit("<unk>")))
-          .drop(s"kw$i")
-      }
+      for (i <- 1 to n)
+        grams = unkMap(grams, s"w$i", s"w$i",
+          broadcast(keep.select(col("kw").as(s"kw$i"))))
     }
     // the census — the one corpus-sized job; everything below is
     // model-table sized, so pin it once
@@ -1298,9 +1284,8 @@ object TextOps {
                           cntName: String, scoreName: String): DataFrame =
     valued.groupBy(col(idCol)).agg(
         cnt.as(cntName),
-        aggregate(
-          array_sort(collect_list(struct(orderCols :+ col("val"): _*))),
-          lit(0.0), (acc, x) => acc + x.getField("val")).as("val_sum"))
+        graft.ops.Stable.orderedSum(struct(orderCols :+ col("val"): _*),
+          "val").as("val_sum"))
       .select(col(idCol), col(cntName),
         (col("val_sum") / col(cntName)).as(scoreName))
 
@@ -1335,16 +1320,26 @@ object TextOps {
     val full = when(col(s"lp$n").isNotNull, col(s"lp$n"))
       .otherwise(arpaBackoffLog(n))
     val cntName = knNames(n)._1
-    val lgi = round(full * lit(1e9)).cast("long")
     val keyCols = (idCol +: passthrough).map(col)
-    occ.withColumn("ti", col("m") * lgi)
+    occ.withColumn("ti", col("m") * walkLogI(full))
       .groupBy(keyCols: _*).agg(
         sum("m").as(cntName),
         sum("ti").as("tsum"))
       .select(keyCols ++ Seq(col(cntName),
-        (-col("tsum").cast("double") / col(cntName) / lit(1e9))
-          .as("h10")): _*)
+        walkH("tsum", cntName).as("h10")): _*)
   }
+
+  /** The scaled-integer walk log: `round(lg·10⁹)` as an exact long (a
+    * walk log is a 9-dp decimal or a short sum of them, so the product
+    * sits within 1e-5 of its integer). Per-doc sums of these are exact
+    * 64-bit arithmetic; [[walkH]] turns one back into a cross-entropy. */
+  private def walkLogI(lg: Column): Column =
+    round(lg * lit(1e9)).cast("long")
+
+  /** Per-gram log10 cross-entropy from a [[walkLogI]] sum: `−sum / cnt /
+    * 10⁹` — the only floating-point steps of the walk-log route. */
+  private def walkH(total: String, cnt: String): Column =
+    -col(total).cast("double") / col(cnt) / lit(1e9)
 
   /** Moore-Lewis cross-entropy difference selection (Moore & Lewis
     * 2010, "Intelligent selection of language model training data") —
@@ -1448,18 +1443,30 @@ object TextOps {
                      idCol: String = "doc_id"): DataFrame = {
     val occ = bigramDualLookups(spark, docs, targetArpa, generalArpa,
       textCol, idCol)
-    def lgi(sfx: String) = round(dualLg(sfx) * lit(1e9)).cast("long")
     val agg = occ
-      .withColumn("ta", lgi("a")).withColumn("tb", lgi("b"))
+      .withColumn("ta", walkLogI(dualLg("a")))
+      .withColumn("tb", walkLogI(dualLg("b")))
       .groupBy(col(idCol)).agg(
         count(lit(1)).as("n_bigrams"),
         sum("ta").as("sa"), sum("tb").as("sb"))
-    def h(c: String) =
-      -col(c).cast("double") / col("n_bigrams") / lit(1e9)
     agg.select(col(idCol), col("n_bigrams"),
-        h("sa").as("h_target"), h("sb").as("h_general"))
+        walkH("sa", "n_bigrams").as("h_target"),
+        walkH("sb", "n_bigrams").as("h_general"))
       .withColumn("ml_score", col("h_general") - col("h_target"))
       .withColumn("pass", col("ml_score") >= minMl)
+  }
+
+  /** The `<unk>` vocabulary map: left-joins the one-column key table
+    * `vocab` on `word`, writes the matched key — `<unk>` on a miss — to
+    * `out` and drops the key column. Every model-vocabulary cap (the
+    * builder's top-V keep list, the stored models' unigram sections)
+    * maps words through it. */
+  private def unkMap(df: DataFrame, word: String, out: String,
+                     vocab: DataFrame): DataFrame = {
+    val key = vocab.columns.head
+    df.join(vocab, col(word) === col(key), "left")
+      .withColumn(out, coalesce(col(key), lit("<unk>")))
+      .drop(key)
   }
 
   /** The POSITIONAL dual-model lookup cascade shared by
@@ -1490,19 +1497,11 @@ object TextOps {
     // per-model vocabulary mapping + level lookups, suffixed columns
     def attach(m: graft.sources.Arpa.Model, sfx: String): Unit = {
       val hasUnk = m.grams(0).contains(Vector("<unk>"))
-      for (i <- 1 to 2) {
-        val base = col(s"w$i")
-        val mapped =
-          if (!hasUnk) base
-          else {
-            val vocabDf = broadcast(m.grams(0).keys.map(_.head).toSeq
-              .toDF(s"kw$sfx$i"))
-            occ = occ.join(vocabDf, base === col(s"kw$sfx$i"), "left")
-            coalesce(col(s"kw$sfx$i"), lit("<unk>"))
-          }
-        occ = occ.withColumn(s"$sfx$i", mapped)
-        if (hasUnk) occ = occ.drop(s"kw$sfx$i")
-      }
+      for (i <- 1 to 2)
+        occ =
+          if (!hasUnk) occ.withColumn(s"$sfx$i", col(s"w$i"))
+          else unkMap(occ, s"w$i", s"$sfx$i", broadcast(
+            m.grams(0).keys.map(_.head).toSeq.toDF(s"kw$sfx$i")))
       val l2 = broadcast(m.grams(1).toSeq
         .map { case (g, (lp, _)) => (g(0), g(1), lp) }
         .toDF(s"k2a$sfx", s"k2b$sfx", s"lp2$sfx"))
@@ -1639,13 +1638,9 @@ object TextOps {
       // that produced it) rides into n map-side left joins;
       // out-of-vocabulary words become <unk> BEFORE lookups,
       // mirroring the builder's pre-census cap joins
-      for (i <- 1 to n) {
-        val ki = vocabDf.select(col("kw").as(s"kw$i"))
-        occ = occ
-          .join(ki, col(s"w$i") === col(s"kw$i"), "left")
-          .withColumn(s"w$i", coalesce(col(s"kw$i"), lit("<unk>")))
-          .drop(s"kw$i")
-      }
+      for (i <- 1 to n)
+        occ = unkMap(occ, s"w$i", s"w$i",
+          vocabDf.select(col("kw").as(s"kw$i")))
     }
     // collapse = the batch shape (distinct grams join once, m carries
     // the multiplicity); collapse = false keeps one row per occurrence
@@ -1709,12 +1704,12 @@ object TextOps {
     val q = occ.groupBy("b").agg(sum("m").as("cq"))
     val np = p.agg(sum("cp").as("np"))
     val nq = q.agg(sum("cq").as("nq"))
-    dsirFold(
-      occ.join(broadcast(q), Seq("b"))
-        .join(broadcast(p), Seq("b"), "left")
-        .crossJoin(broadcast(np)).crossJoin(broadcast(nq))
-        .withColumn("term", col("m").cast("double") * dsirLnRatio(dim)),
-      idCol, sum("m"))
+    occ.join(broadcast(q), Seq("b"))
+      .join(broadcast(p), Seq("b"), "left")
+      .crossJoin(broadcast(np)).crossJoin(broadcast(nq))
+      .withColumn("term", col("m").cast("double") * dsirLnRatio(dim))
+      .groupBy(col(idCol))
+      .agg(sum("m").as("n_grams"), dsirLlrSum(struct(col("b"), col("term"))))
   }
 
   /** THE DSIR feature kernel — shingle(k=2) explode → pmod bucket —
@@ -1740,15 +1735,24 @@ object TextOps {
     lnp - lnq
   }
 
-  /** Shared DSIR per-doc reduction: the b-ordered fold of `term` plus
-    * the caller's gram-count aggregate. */
-  private def dsirFold(terms: DataFrame, idCol: String,
-                       nGrams: Column): DataFrame =
-    terms.groupBy(col(idCol))
-      .agg(nGrams.as("n_grams"),
-        aggregate(array_sort(collect_list(struct(col("b"), col("term")))),
-          lit(0.0), (a, x) => a + x.getField("term")).as("llr"))
-      .select(col(idCol), col("n_grams"), col("llr"))
+  /** The DSIR per-doc `llr`: the b-ordered [[graft.ops.Stable.orderedSum]]
+    * of the `(b, term)` entries (a null entry stays out of the sum). */
+  private def dsirLlrSum(entries: Column): Column =
+    graft.ops.Stable.orderedSum(entries, "term").as("llr")
+
+  /** The stored-DSIR term table: `occ` rows (carrying `b`) joined to
+    * the stored model `dir/buckets` (a broadcast left join — a bucket
+    * absent from the model smooths to cp = cq = 0) and to its totals
+    * Np, Nq (two one-row broadcast cross joins), so each row carries
+    * every column [[dsirLnRatio]] reads. */
+  private def dsirStoredTerms(spark: org.apache.spark.sql.SparkSession,
+                              occ: DataFrame, dir: String): DataFrame = {
+    val model = spark.read.parquet(s"$dir/buckets")
+    val np = model.agg(sum("cp").as("np"))
+    val nq = model.agg(sum("cq").as("nq"))
+    occ.join(broadcast(model), Seq("b"), "left")
+      .crossJoin(broadcast(np)).crossJoin(broadcast(nq))
+  }
 
   /** Persist the DSIR bucket models (the x77/x96 stored-index
     * discipline applied to data selection): ONE parquet table
@@ -1786,17 +1790,13 @@ object TextOps {
                       docs: DataFrame, dir: String, dim: Int = 16384,
                       textCol: String = "text", idCol: String = "doc_id")
   : DataFrame = {
-    val model = spark.read.parquet(s"$dir/buckets")
-    val np = model.agg(sum("cp").as("np"))
-    val nq = model.agg(sum("cq").as("nq"))
     val occ = dsirBuckets(docs, dim, textCol, Seq(idCol))
       .groupBy(col(idCol), col("b"))
       .agg(count(lit(1)).as("m"))
-    dsirFold(
-      occ.join(broadcast(model), Seq("b"), "left")
-        .crossJoin(broadcast(np)).crossJoin(broadcast(nq))
-        .withColumn("term", col("m").cast("double") * dsirLnRatio(dim)),
-      idCol, sum("m"))
+    dsirStoredTerms(spark, occ, dir)
+      .withColumn("term", col("m").cast("double") * dsirLnRatio(dim))
+      .groupBy(col(idCol))
+      .agg(sum("m").as("n_grams"), dsirLlrSum(struct(col("b"), col("term"))))
   }
 
   /** STREAM-legal stored-model scoring — [[dsirScoreStored]]'s shape
@@ -1811,17 +1811,12 @@ object TextOps {
   def dsirScoreStream(spark: org.apache.spark.sql.SparkSession,
                       docs: DataFrame, dir: String, dim: Int = 16384,
                       textCol: String = "text", idCol: String = "doc_id")
-  : DataFrame = {
-    val model = spark.read.parquet(s"$dir/buckets")
-    val np = model.agg(sum("cp").as("np"))
-    val nq = model.agg(sum("cq").as("nq"))
-    dsirFold(
-      dsirBuckets(docs, dim, textCol, Seq(idCol))
-        .join(broadcast(model), Seq("b"), "left")
-        .crossJoin(broadcast(np)).crossJoin(broadcast(nq))
-        .withColumn("term", dsirLnRatio(dim)),
-      idCol, count(lit(1)))
-  }
+  : DataFrame =
+    dsirStoredTerms(spark, dsirBuckets(docs, dim, textCol, Seq(idCol)), dir)
+      .withColumn("term", dsirLnRatio(dim))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_grams"),
+        dsirLlrSum(struct(col("b"), col("term"))))
 
   /** The COMPOSED ingest gate — the streaming twin of the x171 batch
     * corpus build's per-document stages: every arriving document is
@@ -1861,59 +1856,33 @@ object TextOps {
     val nullD = lit(null).cast("double")
     val self = pii.select(col(idCol), col("n_email"), col("n_ipv4"),
       col("n_phone"), col("n_pii"), nullL.as("b"), nullD.as("term"),
-      nullD.as("jac"))
+      nullD.as("jaccard"))
     // DSIR rows: the shared bucket kernel over the REDACTED text, the
     // stored model + totals broadcast (model ≤ dim rows)
-    val model = spark.read.parquet(s"$dsirDir/buckets")
-    val np = model.agg(sum("cp").as("np"))
-    val nq = model.agg(sum("cq").as("nq"))
-    val dsirRows = dsirBuckets(
+    val dsirRows = dsirStoredTerms(spark, dsirBuckets(
         pii.select(col(idCol), col("redacted")), dim, "redacted",
-        Seq(idCol))
-      .join(broadcast(model), Seq("b"), "left")
-      .crossJoin(broadcast(np)).crossJoin(broadcast(nq))
+        Seq(idCol)), dsirDir)
       .select(col(idCol), nullL.as("n_email"), nullL.as("n_ipv4"),
         nullL.as("n_phone"), nullL.as("n_pii"), col("b"),
-        dsirLnRatio(dim).as("term"), nullD.as("jac"))
-    // near-dup rows: banded minhash of the redacted text probing the
-    // stored index (two stream-static equi-joins, both stateless);
+        dsirLnRatio(dim).as("term"), nullD.as("jaccard"))
+    // near-dup rows: the stored-index probe over the redacted text's
+    // minhash (two stream-static equi-joins, both stateless);
     // multi-band collisions need no pre-dedup — the per-doc max below
     // is idempotent over repeats
-    val rows = numHashes / bands
-    def bandCols(mh: Column): Column = array((0 until bands).map { bd =>
-      xxhash64(concat_ws(",",
-        (0 until rows).map(r => element_at(mh, bd * rows + r + 1)): _*),
-        lit(bd))
-    }: _*)
-    val bInc = pii
-      .select(col(idCol),
-        Dedup.tokenHashes(col("redacted"), shingleK).as("hs_b"))
-      .withColumn("mh",
-        graft.functions.HashExprs.min_hash(col("hs_b"), numHashes))
-      .select(col(idCol), col("hs_b"),
-        posexplode(bandCols(col("mh"))).as(Seq("band", "bucket")))
-    val aKeys = index.select(col("doc_id").as("doc_a"),
-      posexplode(bandCols(col("minhash"))).as(Seq("band", "bucket")))
-    val aSets = index.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-    val dupRows = bInc.join(aKeys, Seq("band", "bucket"))
-      .select(col(idCol), col("doc_a"), col("hs_b"))
-      .join(aSets, "doc_a")
-      .withColumn("jac",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))))
-      .filter(col("jac") >= minJaccard)
+    val dupRows = Dedup.indexProbe(
+        pii.select(col(idCol),
+          Dedup.tokenHashes(col("redacted"), shingleK).as("hs_b")),
+        idCol, index, minJaccard, numHashes, bands)
       .select(col(idCol), nullL.as("n_email"), nullL.as("n_ipv4"),
         nullL.as("n_phone"), nullL.as("n_pii"), nullL.as("b"),
-        nullD.as("term"), col("jac"))
+        nullD.as("term"), col("jaccard"))
     self.unionByName(dsirRows).unionByName(dupRows)
       .groupBy(col(idCol))
       .agg(max("n_email").as("n_email"), max("n_ipv4").as("n_ipv4"),
         max("n_phone").as("n_phone"), max("n_pii").as("n_pii"),
         count(col("term")).as("n_grams"),
-        aggregate(array_sort(collect_list(
-            when(col("b").isNotNull, struct(col("b"), col("term"))))),
-          lit(0.0), (a, x) => a + x.getField("term")).as("llr"),
-        max("jac").as("max_jaccard"))
+        dsirLlrSum(when(col("b").isNotNull, struct(col("b"), col("term")))),
+        max("jaccard").as("max_jaccard"))
       .withColumn("dup_hit", col("max_jaccard").isNotNull)
   }
 
@@ -1974,11 +1943,10 @@ object TextOps {
     // (stateless broadcast lookups), one row per bigram occurrence
     val occ = bigramDualLookups(spark, s2, targetArpa, generalArpa,
       "text", "doc_id")
-    def lgi(sfx: String) = round(dualLg(sfx) * lit(1e9)).cast("long")
     val gramRows = occ
       .select(col("doc_id"), nullS.as("source"), nullL.as("n_lines"),
         nullI.as("pos"), nullS.as("line"), lit(1L).as("m"),
-        lgi("a").as("ta"), lgi("b").as("tb"))
+        walkLogI(dualLg("a")).as("ta"), walkLogI(dualLg("b")).as("tb"))
     // THE one stateful aggregation: kept-line reassembly + LM sums
     val agg = lineRows.unionByName(gramRows)
       .groupBy(col("doc_id"))
@@ -1993,15 +1961,13 @@ object TextOps {
         sum("ta").as("sa"), sum("tb").as("sb"))
       .filter(col("n_kept") > 0)
     val sig = gopherSignals(col("text")).toMap
-    def h(c: String) =
-      -col(c).cast("double") / col("n_bigrams") / lit(1e9)
     val gated = agg
       .filter(sig("n_words") >= minWords &&
         sig("n_words") <= 100000L &&
         sig("r_mean_word_len") && sig("r_symbol_ratio") &&
         sig("r_alpha_words") && sig("r_stopwords"))
-      .withColumn("h_target", h("sa"))
-      .withColumn("h_general", h("sb"))
+      .withColumn("h_target", walkH("sa", "n_bigrams"))
+      .withColumn("h_general", walkH("sb", "n_bigrams"))
       .withColumn("ml_score", col("h_general") - col("h_target"))
       .filter(col("h_general") <= maxH10 && col("ml_score") >= minMl)
       .select(col("doc_id"), col("source"), col("text"), col("n_lines"),
@@ -2294,8 +2260,8 @@ object TextOps {
       .withColumn("term", col("c").cast("double") * weight)
       .groupBy(col(idCol))
       .agg(sum("c").as("n_tokens"),
-        aggregate(array_sort(collect_list(struct(col("b"), col("term")))),
-          lit(0.0), (a, x) => a + x.getField("term")).as("tsum"))
+        graft.ops.Stable.orderedSum(struct(col("b"), col("term")), "term")
+          .as("tsum"))
       .select(col(idCol), col("n_tokens"),
         (col("tsum") / col("n_tokens").cast("double")).as("q_score"))
       .withColumn("label",

@@ -56,8 +56,9 @@ object Unigram {
 
   /** Half-away-from-zero to integer — DuckDB's round() semantics, which
     * plain `math.round` (half-up, toward +inf) gets WRONG for the
-    * negative log-probs this trainer emits. */
-  private def halfAway(x: Double): Long =
+    * negative log-probs this trainer emits. The one driver-side rounding
+    * of scaled logs (also [[TextOps.heapsFit]]'s log-log points). */
+  private[ext] def halfAway(x: Double): Long =
     (if (x >= 0) math.floor(x + 0.5) else math.ceil(x - 0.5)).toLong
 
   /** `halfAway(ln(c/t) * 1e9)` — the scaled-integer log-prob. ONE

@@ -13,6 +13,11 @@ import org.apache.spark.sql.types.DecimalType
   * cast back to double is deterministic. This is also the right call at
   * 100 TB: decimal partial aggregates stay in whole-stage codegen and are
   * reproducible across cluster sizes.
+  *
+  * Where a sum must stay a double (a per-document score over its terms),
+  * [[orderedSum]] is the one ordered-sum rule: the terms are collected,
+  * sorted by a caller-chosen key and folded left to right, so the sum is
+  * sequential and bit-exact across engines and partitionings.
   */
 object Stable {
   /** Exact sum via decimal(precision,scale), returned as double. */
@@ -22,6 +27,14 @@ object Stable {
   /** Order-independent mean: exact decimal sum / non-null count. */
   def avgD(c: Column, scale: Int = 6): Column =
     sumD(c, scale) / count(c)
+
+  /** Ordered double sum (an aggregate): collects `entries` — structs whose
+    * leading fields are the summation order — sorts them and folds
+    * `field` left to right from 0.0. Null entries are skipped by the
+    * collect, so a `when(…, struct(…))` guard keeps rows out of the sum. */
+  def orderedSum(entries: Column, field: String): Column =
+    aggregate(array_sort(collect_list(entries)), lit(0.0),
+      (acc, x) => acc + x.getField(field))
 
   /** DuckDB-side SQL for the same expressions (oracle strings).
     *

@@ -145,11 +145,12 @@ object StreamingOps {
     * against the STORED corpus fingerprint index
     * ([[graft.ext.Dedup.minhashIndex]] — (doc_id, hs, minhash)) as it
     * arrives, so near-dups of the existing corpus are flagged before
-    * they land. Two stream-static equi-joins, both stateless: the
-    * stream's banded keys probe the index's banded keys, then verified
-    * candidates fetch the index doc's hash set for the EXACT jaccard —
-    * the same arithmetic as the batch [[graft.ext.Dedup
-    * .incrementalVerifiedDups]] (StreamingSpec pins stream ≡ batch).
+    * they land. The probe is [[graft.ext.Dedup.indexProbe]]: two
+    * stream-static equi-joins, both stateless — the stream's banded keys
+    * probe the index's banded keys, then verified candidates fetch the
+    * index doc's hash set for the EXACT jaccard — the same arithmetic
+    * as the batch [[graft.ext.Dedup.incrementalVerifiedDups]]
+    * (StreamingSpec pins stream ≡ batch).
     * The final per-pair aggregation only dedups multi-band collisions
     * (state is bounded by emitted matches, not the stream).
     *
@@ -157,32 +158,12 @@ object StreamingOps {
     * the batch job's business (they need cross-batch state). */
   def streamingNearDupGate(docStream: DataFrame, index: DataFrame,
                            minJaccard: Double = 0.5, numHashes: Int = 128,
-                           bands: Int = 32, shingleK: Int = 3): DataFrame = {
-    val rows = numHashes / bands
-    def bandCols(mh: Column): Column = array((0 until bands).map { b =>
-      xxhash64(concat_ws(",",
-        (0 until rows).map(r => element_at(mh, b * rows + r + 1)): _*),
-        lit(b))
-    }: _*)
-    val bInc = docStream
-      .select(col("doc_id").as("doc_b"),
-        graft.ext.Dedup.tokenHashes(col("text"), shingleK).as("hs_b"))
-      .withColumn("mh",
-        graft.functions.HashExprs.min_hash(col("hs_b"), numHashes))
-      .select(col("doc_b"), col("hs_b"),
-        posexplode(bandCols(col("mh"))).as(Seq("band", "bucket")))
-    val aKeys = index.select(col("doc_id").as("doc_a"),
-      posexplode(bandCols(col("minhash"))).as(Seq("band", "bucket")))
-    val aSets = index.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"))
-    bInc.join(aKeys, Seq("band", "bucket"))
-      .select("doc_a", "doc_b", "hs_b")
-      .join(aSets, "doc_a")
-      .withColumn("jaccard",
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast("double") /
-          size(array_union(col("hs_a"), col("hs_b"))))
-      .filter(col("jaccard") >= minJaccard)
+                           bands: Int = 32, shingleK: Int = 3): DataFrame =
+    graft.ext.Dedup.indexProbe(
+        docStream.select(col("doc_id").as("doc_b"),
+          graft.ext.Dedup.tokenHashes(col("text"), shingleK).as("hs_b")),
+        "doc_b", index, minJaccard, numHashes, bands)
       .groupBy("doc_a", "doc_b").agg(max("jaccard").as("jaccard"))
-  }
 
   /** Streaming MOJIBAKE gate: [[graft.functions.FixMojibake]] per
     * arriving document — encoding damage is repaired BEFORE any

@@ -42,6 +42,20 @@ class FixturePathSpec extends AnyFunSuite {
       s"resolve fixtures against the working directory: ${offenders.mkString(", ")}")
   }
 
+  // A spec's temp file or directory goes through TempDirs.withTempDir,
+  // which deletes it whether the spec passes or fails; only the helper
+  // itself and the shared session's warehouse (one per JVM) create one.
+  private val tempCreate = """createTemp(Directory|File)\(""".r
+  private val tempOwners = Set("graft/TempDirs.scala", "graft/SharedSpark.scala")
+
+  test("no temp file or directory created in src/test/scala outside TempDirs") {
+    val offenders =
+      offendingLines(tempCreate.findFirstIn(_).isDefined, "src/test/scala")
+        .filterNot(o => tempOwners(o.takeWhile(_ != ':')))
+    assert(offenders.isEmpty,
+      s"create temp dirs through TempDirs.withTempDir: ${offenders.mkString(", ")}")
+  }
+
   // A raw control character (a NUL inside a string literal, say) makes
   // grep treat the whole file as binary, so text search over it silently
   // finds nothing; write such characters as escapes. Lines are split on

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SharedSpark, SparkEntry}
+import graft.TempDirs.withTempDir
 
 /** Stage-count and boundary invariants of the end-to-end corpus build
   * (x171). The oracle proves the VALUES; these assertions pin the
@@ -106,39 +107,40 @@ class CorpusBuildSpec extends AnyFunSuite {
   test("tokenized export (x211): decode(sidecar, .bin) round-trips " +
     "every surviving doc, the artifact set is complete, and token " +
     "counts match the trained encoder") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("corpus_tok_spec").toString
-    CorpusBuild.tokenizedExport(stages.s6Selected, dir,
-      nShards = 4, nMerges = 12)
-    // the complete loadable artifact set a training job consumes
-    Seq("merges.txt", "vocab.json").foreach { f =>
-      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, f)),
-        s"missing sidecar $f")
+    withTempDir("corpus_tok_spec") { d =>
+      val dir = d.toString
+      CorpusBuild.tokenizedExport(stages.s6Selected, dir,
+        nShards = 4, nMerges = 12)
+      // the complete loadable artifact set a training job consumes
+      Seq("merges.txt", "vocab.json").foreach { f =>
+        assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, f)),
+          s"missing sidecar $f")
+      }
+      val report = CorpusBuild.tokenizedReport(spark, dir, nShards = 4)
+        .collect()
+      val n6 = ids(stages.s6Selected).size
+      assert(report.length == n6, "report lost or duplicated a sequence")
+      assert(report.forall(_.getAs[Boolean]("roundtrip")),
+        "a sequence failed decode(sidecar, .bin) == curated text")
+      // exported counts equal a fresh encode under the parsed sidecar
+      val sidecar = graft.functions.ByteBpe.parseGpt2Merges(
+        java.nio.file.Files.readString(
+          java.nio.file.Paths.get(dir, "merges.txt")))
+      val fresh = stages.s6Selected
+        .select(col("doc_id"), size(graft.functions.ByteBpeIds(
+          col("text"), sidecar)).cast("long").as("k"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      report.foreach { r =>
+        assert(r.getAs[Long]("n_tokens") == fresh(r.getAs[Long]("doc_id")),
+          s"token count diverged on doc ${r.getAs[Long]("doc_id")}")
+      }
+      // vocab.json is the dual of merges.txt: one id per base byte plus
+      // one per merge rule, all distinct
+      val vocab = graft.functions.ByteBpe.parseGpt2Vocab(
+        java.nio.file.Files.readString(
+          java.nio.file.Paths.get(dir, "vocab.json")))
+      assert(vocab.size == 256 + sidecar.length,
+        s"vocab size ${vocab.size} != 256 + ${sidecar.length} merges")
     }
-    val report = CorpusBuild.tokenizedReport(spark, dir, nShards = 4)
-      .collect()
-    val n6 = ids(stages.s6Selected).size
-    assert(report.length == n6, "report lost or duplicated a sequence")
-    assert(report.forall(_.getAs[Boolean]("roundtrip")),
-      "a sequence failed decode(sidecar, .bin) == curated text")
-    // exported counts equal a fresh encode under the parsed sidecar
-    val sidecar = graft.functions.ByteBpe.parseGpt2Merges(
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, "merges.txt")))
-    val fresh = stages.s6Selected
-      .select(col("doc_id"), size(graft.functions.ByteBpeIds(
-        col("text"), sidecar)).cast("long").as("k"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    report.foreach { r =>
-      assert(r.getAs[Long]("n_tokens") == fresh(r.getAs[Long]("doc_id")),
-        s"token count diverged on doc ${r.getAs[Long]("doc_id")}")
-    }
-    // vocab.json is the dual of merges.txt: one id per base byte plus
-    // one per merge rule, all distinct
-    val vocab = graft.functions.ByteBpe.parseGpt2Vocab(
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, "vocab.json")))
-    assert(vocab.size == 256 + sidecar.length,
-      s"vocab size ${vocab.size} != 256 + ${sidecar.length} merges")
   }
 }

@@ -50,6 +50,33 @@ class ExtSpec extends AnyFunSuite {
       s"minhashVerifiedDups must not pin executor storage (round-3 leak): $pinned")
   }
 
+  test("the band rule refuses a signature that does not split into " +
+       "whole bands, before any job runs") {
+    // bands > numHashes made 0 rows per band: every band keyed on the
+    // empty string, so the banding equi-join silently became all-pairs;
+    // bands = 0 threw `/ by zero`; a remainder dropped trailing hashes
+    val sc = spark.sparkContext
+    val group = "band-rule-refusal"
+    sc.setJobGroup(group, "band rule input check")
+    try {
+      for ((numHashes, bands) <- Seq((16, 32), (16, 0), (16, 5), (0, 4))) {
+        intercept[IllegalArgumentException](Dedup.minhashVerifiedDups(
+          docs, numHashes = numHashes, bands = bands))
+        intercept[IllegalArgumentException](Dedup.minhashNearDups(
+          docs, numHashes = numHashes, bands = bands))
+      }
+      val index = Dedup.minhashIndex(docs, numHashes = 16)
+      intercept[IllegalArgumentException](Dedup.incrementalVerifiedDups(
+        index, docs, numHashes = 16, bands = 32))
+      intercept[IllegalArgumentException](
+        graft.streaming.StreamingOps.streamingNearDupGate(
+          docs, index, numHashes = 16, bands = 32))
+      intercept[IllegalArgumentException](Dedup.lshCandidates(
+        Dedup.minhashSignature(docs), bands = 4, rowsPerBand = 0))
+      assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+    } finally sc.clearJobGroup()
+  }
+
   test("incrementalVerifiedDups checks new docs against index AND " +
        "each other, never index-vs-index") {
     // docs 1-3 are the stored corpus (1 and 4 identical, but 4 is NEW);
@@ -2228,15 +2255,17 @@ class ExtSpec extends AnyFunSuite {
       (2L, "table table table spark"),
       (3L, "nothing relevant here"),
       (4L, "query query spark")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm25spec").toString
-    TextOps.bm25BuildIndex(corpus, dir)
-    val terms = Seq("spark", "table", "query")
-    val inline = TextOps.bm25Search(corpus, terms, topN = 10).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val stored = TextOps.bm25SearchStored(spark, dir, terms, topN = 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    assert(stored.toSeq == inline.toSeq) // same docs, same order, same bits
-    assert(inline.map(_._1).toSet == Set(1L, 2L, 4L)) // doc 3 never scores
+    withTempDir("bm25spec") { d =>
+      val dir = d.toString
+      TextOps.bm25BuildIndex(corpus, dir)
+      val terms = Seq("spark", "table", "query")
+      val inline = TextOps.bm25Search(corpus, terms, topN = 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+      val stored = TextOps.bm25SearchStored(spark, dir, terms, topN = 10)
+        .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+      assert(stored.toSeq == inline.toSeq) // same docs, same order, same bits
+      assert(inline.map(_._1).toSet == Set(1L, 2L, 4L)) // doc 3 never scores
+    }
   }
 
   test("chat render: JSON round trip, alternating roles, exact template") {

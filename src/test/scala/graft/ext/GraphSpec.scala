@@ -1,10 +1,9 @@
 package graft.ext
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{ArtifactMemo, SharedSpark}
+import graft.SharedSpark
+import graft.TempDirs.withTempDir
 
 class GraphSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -253,14 +252,13 @@ class GraphSpec extends AnyFunSuite {
       "d" -> "a", "a" -> "c").toDF("src", "dst")
     val inline = Graph.pageRank(edges)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rank_store_spec").toString
-    try {
+    withTempDir("graft_rank_store_spec") { d =>
+      val dir = d.toString
       Graph.pageRankStoredBuild(edges, dir)
       val stored = Graph.pageRankStoredRead(spark, dir)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(stored == inline) // doubles round-trip parquet exactly
-    } finally ArtifactMemo.delete(Paths.get(dir))
+    }
   }
 
   test("hits: hubs and authorities match the reference recurrence; " +

@@ -38,13 +38,13 @@ class LocalFsSpec extends AnyFunSuite {
     rec.enable("jdk.ProcessStart")
     rec.start()
     try body finally rec.stop()
-    val f = Files.createTempFile("graft-forks", ".jfr")
-    try {
+    try TempDirs.withTempDir("graft-forks") { d =>
+      val f = d.resolve("forks.jfr")
       rec.dump(f)
       jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
         .filter(_.getEventType.getName == "jdk.ProcessStart")
         .map(_.getString("command"))
-    } finally { rec.close(); Files.delete(f) }
+    } finally rec.close()
   }
 
   /** Full mode bits (sticky included) of every file and directory under

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.withTempDir
 
 class TarSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -27,49 +28,51 @@ class TarSpec extends AnyFunSuite {
   }
 
   test("GNU tar reads our archives; we read GNU tar's") {
-    val dir = Files.createTempDirectory("tarspec")
-    // our writer → system tar
-    Files.write(dir.resolve("ours.tar"), Tar.write(entries))
-    val extract = dir.resolve("out")
-    Files.createDirectory(extract)
-    val p1 = new ProcessBuilder("tar", "-xf", dir.resolve("ours.tar").toString,
-      "-C", extract.toString).start()
-    assert(p1.waitFor() == 0, "system tar rejected our archive")
-    entries.foreach { case (name, bytes) =>
-      assert(Files.readAllBytes(extract.resolve(name)).sameElements(bytes),
-        s"$name corrupted through system tar")
+    withTempDir("tarspec") { dir =>
+      // our writer → system tar
+      Files.write(dir.resolve("ours.tar"), Tar.write(entries))
+      val extract = dir.resolve("out")
+      Files.createDirectory(extract)
+      val p1 = new ProcessBuilder("tar", "-xf", dir.resolve("ours.tar").toString,
+        "-C", extract.toString).start()
+      assert(p1.waitFor() == 0, "system tar rejected our archive")
+      entries.foreach { case (name, bytes) =>
+        assert(Files.readAllBytes(extract.resolve(name)).sameElements(bytes),
+          s"$name corrupted through system tar")
+      }
+      // system tar → our reader (includes a directory entry we must skip)
+      val src = dir.resolve("src")
+      Files.createDirectory(src)
+      Files.createDirectory(src.resolve("sub"))
+      Files.write(src.resolve("a.txt"), "alpha".getBytes(UTF_8))
+      Files.write(src.resolve("sub/b.txt"), "beta".getBytes(UTF_8))
+      val theirs = dir.resolve("theirs.tar")
+      val p2 = new ProcessBuilder("tar", "-cf", theirs.toString,
+        "-C", src.toString, "a.txt", "sub").start()
+      assert(p2.waitFor() == 0)
+      val got = Tar.readAll(Files.readAllBytes(theirs))
+        .map(e => e.name -> new String(e.bytes, UTF_8)).toMap
+      assert(got == Map("a.txt" -> "alpha", "sub/b.txt" -> "beta"))
     }
-    // system tar → our reader (includes a directory entry we must skip)
-    val src = dir.resolve("src")
-    Files.createDirectory(src)
-    Files.createDirectory(src.resolve("sub"))
-    Files.write(src.resolve("a.txt"), "alpha".getBytes(UTF_8))
-    Files.write(src.resolve("sub/b.txt"), "beta".getBytes(UTF_8))
-    val theirs = dir.resolve("theirs.tar")
-    val p2 = new ProcessBuilder("tar", "-cf", theirs.toString,
-      "-C", src.toString, "a.txt", "sub").start()
-    assert(p2.waitFor() == 0)
-    val got = Tar.readAll(Files.readAllBytes(theirs))
-      .map(e => e.name -> new String(e.bytes, UTF_8)).toMap
-    assert(got == Map("a.txt" -> "alpha", "sub/b.txt" -> "beta"))
   }
 
   test("long entry names: ustar prefix field and GNU 'L' entries") {
-    val dir = Files.createTempDirectory("tarspec2")
-    val deep = "d" * 80 + "/" + "e" * 40 // 121 chars: overflows the name field
-    val src = dir.resolve("src")
-    Files.createDirectories(src.resolve("d" * 80))
-    Files.write(src.resolve(deep), "deep".getBytes(UTF_8))
-    // ustar splits prefix/name at offset 345; gnu emits an 'L'
-    // pseudo-entry; pax (the modern default) an 'x' path= record
-    for (fmt <- Seq("ustar", "gnu", "pax")) {
-      val out = dir.resolve(s"$fmt.tar")
-      val p = new ProcessBuilder("tar", s"--format=$fmt", "-cf",
-        out.toString, "-C", src.toString, deep).start()
-      assert(p.waitFor() == 0, s"system tar --format=$fmt failed")
-      val got = Tar.readAll(Files.readAllBytes(out))
-        .map(e => e.name -> new String(e.bytes, UTF_8)).toMap
-      assert(got == Map(deep -> "deep"), s"format $fmt mangled the long name")
+    withTempDir("tarspec2") { dir =>
+      val deep = "d" * 80 + "/" + "e" * 40 // 121 chars: overflows the name field
+      val src = dir.resolve("src")
+      Files.createDirectories(src.resolve("d" * 80))
+      Files.write(src.resolve(deep), "deep".getBytes(UTF_8))
+      // ustar splits prefix/name at offset 345; gnu emits an 'L'
+      // pseudo-entry; pax (the modern default) an 'x' path= record
+      for (fmt <- Seq("ustar", "gnu", "pax")) {
+        val out = dir.resolve(s"$fmt.tar")
+        val p = new ProcessBuilder("tar", s"--format=$fmt", "-cf",
+          out.toString, "-C", src.toString, deep).start()
+        assert(p.waitFor() == 0, s"system tar --format=$fmt failed")
+        val got = Tar.readAll(Files.readAllBytes(out))
+          .map(e => e.name -> new String(e.bytes, UTF_8)).toMap
+        assert(got == Map(deep -> "deep"), s"format $fmt mangled the long name")
+      }
     }
   }
 

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.withTempDir
 import graft.ext.Html
 
 class WarcSpec extends AnyFunSuite {
@@ -160,16 +161,17 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("file scan: binaryFile archives → records, per-file parallel") {
-    val dir = java.nio.file.Files.createTempDirectory("warcspec").toFile
-    dir.deleteOnExit()
-    val a = Warc.gzipMembers((0L until 3L).map(i => rec(i, s"file A doc $i")))
-    val b = Warc.gzipMembers((10L until 14L).map(i => rec(i, s"file B doc $i")))
-    java.nio.file.Files.write(new java.io.File(dir, "a.warc.gz").toPath, a)
-    java.nio.file.Files.write(new java.io.File(dir, "b.warc.gz").toPath, b)
-    val df = Warc.read(spark, dir.getAbsolutePath)
-    val rows = df.collect()
-    assert(rows.length == 7)
-    assert(rows.map(_.getAs[String]("archive")).forall(_.endsWith(".warc.gz")))
-    assert(rows.map(_.getAs[Int]("http_status")).forall(_ == 200))
+    withTempDir("warcspec") { d =>
+      val dir = d.toFile
+      val a = Warc.gzipMembers((0L until 3L).map(i => rec(i, s"file A doc $i")))
+      val b = Warc.gzipMembers((10L until 14L).map(i => rec(i, s"file B doc $i")))
+      java.nio.file.Files.write(new java.io.File(dir, "a.warc.gz").toPath, a)
+      java.nio.file.Files.write(new java.io.File(dir, "b.warc.gz").toPath, b)
+      val df = Warc.read(spark, dir.getAbsolutePath)
+      val rows = df.collect()
+      assert(rows.length == 7)
+      assert(rows.map(_.getAs[String]("archive")).forall(_.endsWith(".warc.gz")))
+      assert(rows.map(_.getAs[Int]("http_status")).forall(_ == 200))
+    }
   }
 }

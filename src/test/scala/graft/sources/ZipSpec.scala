@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
+import graft.TempDirs.withTempDir
 
 class ZipSpec extends AnyFunSuite {
   lazy val spark = SharedSpark.spark
@@ -28,29 +29,30 @@ class ZipSpec extends AnyFunSuite {
   }
 
   test("JDK jar tool reads our zips; we read jar's (incl. dir skip)") {
-    val dir = Files.createTempDirectory("zipspec")
-    Files.write(dir.resolve("ours.zip"), Zip.write(entries))
-    // jar -t lists entries of a zip — validates central directory too
-    val jar = System.getProperty("java.home") + "/bin/jar"
-    val p1 = new ProcessBuilder(jar, "-tf",
-      dir.resolve("ours.zip").toString).redirectErrorStream(true).start()
-    val listing = new String(p1.getInputStream.readAllBytes(), UTF_8)
-    assert(p1.waitFor() == 0, s"jar rejected our zip:\n$listing")
-    entries.foreach { case (n, _) => assert(listing.contains(n)) }
-    // jar-created archive (includes a directory entry we must skip)
-    val src = dir.resolve("src")
-    Files.createDirectories(src.resolve("sub"))
-    Files.write(src.resolve("a.txt"), "alpha".getBytes(UTF_8))
-    Files.write(src.resolve("sub/b.txt"), "beta".getBytes(UTF_8))
-    val theirs = dir.resolve("theirs.zip")
-    val p2 = new ProcessBuilder(jar, "-cMf", theirs.toString,
-      "-C", src.toString, ".").start()
-    assert(p2.waitFor() == 0)
-    val got = Zip.readAll(Files.readAllBytes(theirs))
-      .map { case (n, b) =>
-        n.stripPrefix("./") -> new String(b, UTF_8)
-      }.filter(_._2.nonEmpty).toMap
-    assert(got == Map("a.txt" -> "alpha", "sub/b.txt" -> "beta"))
+    withTempDir("zipspec") { dir =>
+      Files.write(dir.resolve("ours.zip"), Zip.write(entries))
+      // jar -t lists entries of a zip — validates central directory too
+      val jar = System.getProperty("java.home") + "/bin/jar"
+      val p1 = new ProcessBuilder(jar, "-tf",
+        dir.resolve("ours.zip").toString).redirectErrorStream(true).start()
+      val listing = new String(p1.getInputStream.readAllBytes(), UTF_8)
+      assert(p1.waitFor() == 0, s"jar rejected our zip:\n$listing")
+      entries.foreach { case (n, _) => assert(listing.contains(n)) }
+      // jar-created archive (includes a directory entry we must skip)
+      val src = dir.resolve("src")
+      Files.createDirectories(src.resolve("sub"))
+      Files.write(src.resolve("a.txt"), "alpha".getBytes(UTF_8))
+      Files.write(src.resolve("sub/b.txt"), "beta".getBytes(UTF_8))
+      val theirs = dir.resolve("theirs.zip")
+      val p2 = new ProcessBuilder(jar, "-cMf", theirs.toString,
+        "-C", src.toString, ".").start()
+      assert(p2.waitFor() == 0)
+      val got = Zip.readAll(Files.readAllBytes(theirs))
+        .map { case (n, b) =>
+          n.stripPrefix("./") -> new String(b, UTF_8)
+        }.filter(_._2.nonEmpty).toMap
+      assert(got == Map("a.txt" -> "alpha", "sub/b.txt" -> "beta"))
+    }
   }
 
   test("torn tails keep prior entries; junk parses empty") {
